@@ -29,10 +29,7 @@ import org.apache.spark.sql.functions._
   * not a cross-machine quotient — is what gets graded.
   */
 object ScaleBench {
-
-  private def time[A](f: => A): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
+  import Bench.time
 
   private val facts = Map("orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
 
@@ -134,15 +131,11 @@ object ScaleBench {
     try {
       val tStage = time(stage(spark, src, out, factor))
       def run(q: String): Unit = {
-        // same off-the-clock hygiene as graft.Bench: persisted blocks
-        // (localCheckpoints) from PRIOR queries are suite pressure, not
-        // this query's cost — the r13 factor-100 run timed tpch_q18 at
-        // 77.9 s under 32 queries' accumulated state vs 10.4 s clean
-        spark.catalog.clearCache()
-        // blocking=true (r16 verdict #2): async removal bled into the next
-        // timed window — same fix as Bench.onePass
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        // persisted blocks (localCheckpoints) from PRIOR queries are
+        // suite pressure, not this query's cost — the r13 factor-100 run
+        // timed tpch_q18 at 77.9 s under 32 queries' accumulated state
+        // vs 10.4 s clean
+        Bench.release(spark)
         SparkEntry.queries(q)(spark, out)
           .write.mode("overwrite").format("noop").save()
       }

@@ -17,10 +17,7 @@ import org.apache.spark.sql.functions._
   * the 100 TB question the plans are designed around.
   */
 object ScaleProbe {
-
-  private def time[A](f: => A): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
+  import Bench.time
 
   private def run(docs: DataFrame): Seq[(String, Double)] = Seq(
     "dedup_exact" -> time(llm.Dedup.exact(docs).write.mode("overwrite")
@@ -92,13 +89,8 @@ object ScaleProbe {
     * is re-checked every round.
     */
   private def ccProbe(docs: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions._
     val spark = docs.sparkSession
-    val survivors = docs.join(
-      llm.Dedup.exact(docs).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-    val pairs = llm.Dedup.jaccard(survivors, llm.Dedup.lshCandidates(survivors))
-      .where(col("jaccard") >= 0.6)
-      .select("doc_a", "doc_b")
+    val pairs = llm.Dedup.nearDupPairs(llm.Dedup.exactSurvivors(docs))
       .localCheckpoint() // materialize: jobs below are the CC loop only
     // warm the whole CC-loop pipeline off the clock — otherwise the
     // first measured setting alone carries codegen/JIT cost and the

@@ -44,20 +44,11 @@ object TwsProbe {
         P + "writeBufferSizeMB" -> "256",
         P + "maxWriteBufferNumber" -> "4")))
     try {
-      val tStage = {
-        val t0 = System.nanoTime()
-        ScaleBench.stage(spark, src, out, factor)
-        (System.nanoTime() - t0) / 1e9
-      }
+      val tStage = Bench.time(ScaleBench.stage(spark, src, out, factor))
       def run(q: String): Double = {
-        // the Bench/ScaleBench off-the-clock hygiene
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, out)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
+        Bench.release(spark)
+        Bench.time(SparkEntry.queries(q)(spark, out)
+          .write.mode("overwrite").format("noop").save())
       }
       queries.foreach(run) // warm codegen/JIT + page cache off the clock
       val items = for ((vn, confs) <- variants; q <- queries) yield {

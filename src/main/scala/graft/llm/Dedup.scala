@@ -182,9 +182,11 @@ object Dedup {
     * banding point for the full corpus (more bands = higher recall and
     * more candidates to verify; this report prices that trade).
     * MinHash signatures are computed ONCE and re-banded per config; each
-    * config's candidate set is (band, sig)-equi-joined and verified only
-    * on its own candidates — never all-pairs. All counts are exact
-    * integers; precision is the one ROUND(…,6) edge.
+    * config's candidate set is (band, sig)-equi-joined — never
+    * all-pairs. The configs' candidates are tagged with their `bands`
+    * and verified in ONE pass, so the per-document shingle sets are built
+    * once per call, not once per config.
+    * All counts are exact integers; precision is the one ROUND(…,6) edge.
     *
     * Output: (bands, rows_per_band, n_candidates, n_verified, precision).
     */
@@ -192,108 +194,108 @@ object Dedup {
                 configs: Seq[(Int, Int)] = Seq((2, 4), (4, 2), (8, 1)),
                 threshold: Double = 0.6, numHashes: Int = 8): DataFrame = {
     require(configs.nonEmpty, "need at least one banding config")
-    // Shared-base form (r16 opt): ONE checkpointed minhash table feeds
-    // every config's banding, and each config's candidate set is
-    // materialized once for its two consumers (count + verify) — the
-    // per-config lazy derivation re-ran the scan→shingle→minhash chain
-    // for each of the 3 configs × 2 consumers (26 parquet scans / 97
-    // Exchanges executed). The SHINGLE table deliberately stays lazy:
-    // checkpointing it was A/B'd and lost (3.16 → 3.69 s) — the
-    // corpus-scale string materialization costs more than the re-derive.
+    // ONE checkpointed minhash table feeds every config's banding, and
+    // the tagged candidate union is materialized once for its two
+    // consumers (count + verify) — the lazy derivation re-ran the
+    // scan→shingle→minhash chain per config and consumer (26 parquet
+    // scans / 97 Exchanges executed). The doc-set table deliberately
+    // stays lazy: checkpointing the shingle table was A/B'd and lost
+    // (3.16 → 3.69 s) — the corpus-scale string materialization costs
+    // more than the re-derive.
     val mh = minhash(docs, numHashes).localCheckpoint()
-    val sh = shingles(docs)
-    configs.map { case (bands, rows) =>
+    val cands = configs.map { case (bands, rows) =>
       require(bands * rows == numHashes, s"($bands x $rows) != $numHashes")
-      val cands = candidatesFromBandSigs(
-          bandSignaturesFromMinhash(mh, numHashes, bands))
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-      val verified = jaccardFromShingles(sh, cands)
-        .where(col("jaccard") >= threshold)
-      cands.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(verified.agg(count(lit(1)).as("n_verified")))
-        .select(lit(bands).as("bands"), lit(rows).as("rows_per_band"),
-          col("n_candidates"), col("n_verified"),
-          expr("CAST(ROUND(CAST(n_verified AS DOUBLE) / NULLIF(n_candidates, 0), 6) AS DOUBLE)")
-            .as("precision"))
-    }.reduce(_.unionAll(_))
+      candidatesFromBandSigs(bandSignaturesFromMinhash(mh, numHashes, bands))
+        .select(lit(bands).as("bands"), col("doc_a"), col("doc_b"))
+    }.reduce(_.unionAll(_)).localCheckpoint()
+    val verified = verify(docs, cands, keepZeros = false)
+      .where(col("jaccard") >= threshold)
+      .groupBy("bands").agg(count(lit(1)).as("n_verified"))
+    // left joins from the config table: a config with no candidate still
+    // reports its row (0 candidates, NULL precision)
+    docs.sparkSession.createDataFrame(configs).toDF("bands", "rows_per_band")
+      .join(cands.groupBy("bands").agg(count(lit(1)).as("n_candidates")),
+        Seq("bands"), "left")
+      .join(verified, Seq("bands"), "left")
+      .select(col("bands"), col("rows_per_band"),
+        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+        coalesce(col("n_verified"), lit(0L)).as("n_verified"))
+      .withColumn("precision", expr(
+        "CAST(ROUND(CAST(n_verified AS DOUBLE) / NULLIF(n_candidates, 0), 6) AS DOUBLE)"))
   }
 
   /** Exact n-gram Jaccard similarity, computed only for the given candidate
-    * pairs (columns doc_a, doc_b) — the verify stage after LSH.
+    * pairs (columns doc_a, doc_b) — the verify stage after LSH. Pairs
+    * sharing no shingle emit no row. Output: (doc_a, doc_b, jaccard).
     */
-  def jaccard(docs: DataFrame, candidates: DataFrame, n: Int = 3): DataFrame =
-    jaccardFromShingles(shingles(docs, n), candidates)
+  def jaccard(docs: DataFrame, candidates: DataFrame): DataFrame =
+    verify(docs, candidates.select("doc_a", "doc_b"), keepZeros = false)
 
-  /** [[jaccard]] over an already-computed [[shingles]] table — the
-    * shared-base entry point for callers that verify several candidate
-    * sets against one corpus ([[lshTuning]]); identical expressions.
+  /** [[jaccard]] with ZERO-overlap candidate pairs retained (jaccard = 0
+    * when no shingle is shared) and every extra candidate column carried
+    * through — the form downstream rankers need when the ABSENCE of
+    * lexical overlap is the signal (paraphrase mining pairs semantic
+    * similarity with lexical distance). Pairs whose docs have no
+    * shingles at all (under 3 tokens) drop at the set join — no 0/0
+    * reaches the division. Output: (doc_a, doc_b, extra candidate
+    * columns…, jaccard).
     */
-  private[llm] def jaccardFromShingles(sh: DataFrame,
-                                       candidates: DataFrame): DataFrame = {
-    // Per-doc shingle SETS + in-place array_intersect replace the exploded
-    // candidate×shingle equi-join (r17 opt, guide §2.3/§2.4 — shuffle
-    // fewer bytes, remove shuffles): the old shape joined every candidate
-    // pair against BOTH docs' exploded shingle rows — pairs × shingles-
-    // per-doc intermediate rows through two exchanges plus a (doc_a,
-    // doc_b) re-aggregation. Measured at sf0.1 on llm_simhash_pr_curve's
-    // candidate set: 271k pairs × ~52 shingles/doc ≈ 14M shuffled shingle
-    // strings, 7.9 s of the entry's 10.3 s. Collecting each doc's
-    // (already-distinct) shingles ONCE and intersecting per pair moves
-    // each doc's set once per partner instead of once per partner per
-    // shingle row, with no post-join aggregation. array_intersect is a
-    // codegen'd expression (not a lambda HOF), |A∩B| over distinct
-    // elements equals the old join-match count exactly, and the size
-    // arithmetic is the same BIGINT expression — jaccard values are
-    // bit-identical, the DuckDB oracle untouched. Zero-overlap pairs
-    // emitted NO row in the join form; the filter preserves that contract
-    // ([[jaccardWithZeros]] is the keep-zeros variant).
-    val docSets = sh.groupBy("doc_id")
-      .agg(collect_list(col("shingle")).as("__sh_set"),
-        count(lit(1)).as("__n_sh"))
-    candidates.select("doc_a", "doc_b")
-      .join(docSets.select(col("doc_id").as("doc_a"),
-        col("__sh_set").as("__sa"), col("__n_sh").as("__na")), Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"),
-        col("__sh_set").as("__sb"), col("__n_sh").as("__nb")), Seq("doc_b"))
-      .withColumn("__n_both",
-        expr("CAST(size(array_intersect(__sa, __sb)) AS BIGINT)"))
-      .where(col("__n_both") > 0)
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(ROUND(CAST(__n_both AS DOUBLE) / (__na + __nb - __n_both), 6) AS DOUBLE)")
-          .as("jaccard"))
-  }
+  def jaccardWithZeros(docs: DataFrame, candidates: DataFrame): DataFrame =
+    verify(docs, candidates, keepZeros = true)
 
-  /** [[jaccard]] with ZERO-overlap candidate pairs retained (LEFT join
-    * onto the intersection counts; jaccard = 0 when no shingle is
-    * shared) and every extra candidate column carried through — the form
-    * downstream rankers need when the ABSENCE of lexical overlap is the
-    * signal (paraphrase mining pairs semantic similarity with lexical
-    * distance; the llm_simhash_pr_curve LEFT-join precedent). Pairs
-    * whose docs have no shingles at all (under n tokens) drop at the
-    * size join — no 0/0 reaches the division.
+  /** Verified near-duplicate pairs: [[lshCandidates]] verified by exact
+    * shingle [[jaccard]], kept at or above `threshold`. Output: (doc_a,
+    * doc_b) with doc_a < doc_b. Lazy — callers decide what to checkpoint.
     */
-  def jaccardWithZeros(docs: DataFrame, candidates: DataFrame,
-                       n: Int = 3): DataFrame = {
-    // same array_intersect form as [[jaccardFromShingles]] (r17 opt —
-    // see the rationale there); zero-overlap pairs fall out naturally
-    // (intersect size 0) instead of via the LEFT-join + COALESCE the
-    // exploded join needed, and extra candidate columns pass through
-    val sh = shingles(docs, n)
-    val docSets = sh.groupBy("doc_id")
-      .agg(collect_list(col("shingle")).as("__sh_set"),
-        count(lit(1)).as("__n_sh"))
-    candidates
-      .join(docSets.select(col("doc_id").as("doc_a"),
-        col("__sh_set").as("__sa"), col("__n_sh").as("__na")), Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"),
-        col("__sh_set").as("__sb"), col("__n_sh").as("__nb")), Seq("doc_b"))
-      .withColumn("__n_both",
-        expr("CAST(size(array_intersect(__sa, __sb)) AS BIGINT)"))
-      .withColumn("jaccard", expr(
-        "CAST(ROUND(CAST(__n_both AS DOUBLE) " +
-          "/ (__na + __nb - __n_both), 6) AS DOUBLE)"))
-      .drop("__sa", "__sb", "__n_both", "__na", "__nb")
+  def nearDupPairs(docs: DataFrame, threshold: Double = 0.6,
+                   numHashes: Int = 8, bands: Int = 4): DataFrame =
+    jaccard(docs, lshCandidates(docs, numHashes, bands))
+      .where(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b")
+
+  /** The exact-collapse survivors: the rows of `docs` whose doc_id is the
+    * minimum of its normalized-content class ([[exact]]'s keep_id).
+    * Lazy — callers decide what to checkpoint.
+    */
+  def exactSurvivors(docs: DataFrame): DataFrame =
+    docs.join(exact(docs).select(col("keep_id").as("doc_id")), Seq("doc_id"))
+
+  /** The one Jaccard verify body: each document's [[shingles]] are
+    * collected into one set row, and each candidate pair (doc_a, doc_b,
+    * any extra columns) joins both docs' sets and scores
+    * |A∩B| / (|A| + |B| − |A∩B|) with an in-place `array_intersect`,
+    * ROUND(…,6)'d. `keepZeros = false` drops pairs that share no shingle.
+    * Output: (doc_a, doc_b, extra candidate columns…, jaccard).
+    *
+    * Two conditions hold the result exact and bounded:
+    *   - the shingles in a set must be DISTINCT per document
+    *     ([[shingles]] ends in a `distinct()`): `array_intersect` counts
+    *     distinct elements, so a repeated shingle would count once in
+    *     |A∩B| but twice in |A|;
+    *   - each document's full shingle set is ONE row, so executor row
+    *     memory bounds the size of a document.
+    *
+    * Why sets and not an exploded join: joining every candidate pair
+    * against both docs' exploded shingle rows moves pairs × shingles-per-
+    * doc rows through two exchanges plus a (doc_a, doc_b) re-aggregation
+    * (at sf0.1 on llm_simhash_pr_curve's 271k candidates: ≈ 14M shuffled
+    * shingle strings, 7.9 s of the entry's 10.3 s). The set form moves
+    * each doc's set once per partner, with no post-join aggregation;
+    * `array_intersect` is a codegen'd expression, not a lambda HOF.
+    */
+  private def verify(docs: DataFrame, candidates: DataFrame,
+                     keepZeros: Boolean): DataFrame = {
+    val sets = shingles(docs).groupBy("doc_id")
+      .agg(collect_list(col("shingle")).as("__sh_set"), count(lit(1)).as("__n_sh"))
+    def side(s: String) = sets.select(col("doc_id").as(s"doc_$s"),
+      col("__sh_set").as(s"__s$s"), col("__n_sh").as(s"__n$s"))
+    val scored = candidates.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b"))
+      .withColumn("__n_both", expr("CAST(size(array_intersect(__sa, __sb)) AS BIGINT)"))
+    val extra = candidates.columns.filterNot(Set("doc_a", "doc_b")).map(col)
+    (if (keepZeros) scored else scored.where(col("__n_both") > 0))
+      .select(Seq(col("doc_a"), col("doc_b")) ++ extra :+ expr(
+        "CAST(ROUND(CAST(__n_both AS DOUBLE) / (__na + __nb - __n_both), 6) AS DOUBLE)")
+        .as("jaccard"): _*)
   }
 
   /** Shingle containment (Broder): |shingles(doc) ∩ shingles(probe)| /
@@ -629,13 +631,8 @@ object Dedup {
     // executed). Materializing the survivor stage is what a real
     // pipeline's stage boundary does anyway (the llm_pipeline_e2e
     // precedent).
-    val survivors = docs.join(
-      exact(docs).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-      .localCheckpoint()
-    val pairs = jaccard(survivors, lshCandidates(survivors, numHashes, bands))
-      .where(col("jaccard") >= jaccardThreshold)
-      .select("doc_a", "doc_b")
-    (survivors, pairs)
+    val survivors = exactSurvivors(docs).localCheckpoint()
+    (survivors, nearDupPairs(survivors, jaccardThreshold, numHashes, bands))
   }
 
   /** Duplicate-cluster connected components over verified near-dup pairs

@@ -423,12 +423,8 @@ object Llm {
     // connected components over verified near-dup pairs (min-label
     // propagation + pointer jumping): every doc in at least one >=0.6
     // Jaccard pair, labeled with its component's minimum doc_id
-    "llm_dup_clusters" -> ((s, d) => {
-      val dd = docs(s, d)
-      val pairs = Dedup.jaccard(dd, Dedup.lshCandidates(dd))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
-      Dedup.dupClusters(pairs).orderBy("doc_id")
-    }),
+    "llm_dup_clusters" -> ((s, d) =>
+      Dedup.dupClusters(Dedup.nearDupPairs(docs(s, d))).orderBy("doc_id")),
 
     // greedy maximal-coverage selection: the 4 docs that together cover
     // the most distinct trigram shingles (submodular curation pick,
@@ -461,8 +457,7 @@ object Llm {
         .localCheckpoint()
       val survivors = dd.join(counts.select("doc_id"), Seq("doc_id"))
         .localCheckpoint()
-      val pairs = Dedup.jaccard(survivors, Dedup.lshCandidates(survivors))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val pairs = Dedup.nearDupPairs(survivors)
       val clustered = Dedup.dupClusters(pairs)
       val near = clustered.join(counts, Seq("doc_id"))
         .groupBy("cluster_rep").agg(sum("n_copies").as("sz"))
@@ -485,16 +480,11 @@ object Llm {
     // filtering leave the genuinely dense near-dup cores (template
     // farms); incidental one-off matches dissolve in round 1
     "llm_kcore" -> ((s, d) => {
-      val dd = docs(s, d)
       // localCheckpoint (r16 opt): survivors feed the candidate AND the
       // verify chain — the lazy form re-derived the exact collapse per
       // consumer (same shape as llm_dedup_venn)
-      val survivors = dd.join(
-        Dedup.exact(dd).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
-      val pairs = Dedup.jaccard(survivors, Dedup.lshCandidates(survivors))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
-      Dedup.kCore(pairs, k = 2, rounds = 3).orderBy("doc_id")
+      val survivors = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
+      Dedup.kCore(Dedup.nearDupPairs(survivors), k = 2, rounds = 3).orderBy("doc_id")
     }),
 
     // link prediction by common-neighbor count: non-adjacent pairs two
@@ -830,11 +820,8 @@ object Llm {
       // chains (MinHash pairs, simhash banding, the flag frame) — the
       // lazy form re-derived the scan+md5+collapse per consumer (17
       // parquet scans / 60 Exchanges executed)
-      val survivors = dd.join(
-        Dedup.exact(dd).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
-      val mhPairs = Dedup.jaccard(survivors, Dedup.lshCandidates(survivors))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val survivors = Dedup.exactSurvivors(dd).localCheckpoint()
+      val mhPairs = Dedup.nearDupPairs(survivors)
       val mhDropped = Dedup.dupClusters(mhPairs)
         .where(col("doc_id") =!= col("cluster_rep")).select("doc_id")
       val shDropped = Dedup.simhashCandidates(survivors)
@@ -865,15 +852,12 @@ object Llm {
     // would silently overstate precision). Radii expand via a broadcast
     // 4-row theta join — never a per-radius rescan
     "llm_simhash_pr_curve" -> ((s, d) => {
-      val dd0 = docs(s, d)
       // localCheckpoint (r16 opt): the exact-survivor corpus feeds BOTH
       // the simhash fingerprint chain and the jaccard verify chain, and
       // the candidate-pair set feeds BOTH the radius census and the
       // verify join — the lazy form re-derived each per consumer (31
       // parquet scans / 119 Exchanges in the executed plan)
-      val dd = dd0.join(
-        Dedup.exact(dd0).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
+      val dd = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
       val sp = Dedup.simhashCandidates(dd).localCheckpoint()
       val jac = Dedup.jaccard(dd, sp.select("doc_a", "doc_b"))
       val pairs = sp.join(jac, Seq("doc_a", "doc_b"), "left")
@@ -900,15 +884,13 @@ object Llm {
     // measured 6× super-linear at the 10× staging), so the entry IS the
     // estimator-vs-truth audit; integer bit matches, one ROUND division
     "llm_bbit_minhash" -> ((s, d) => {
-      val dd0 = docs(s, d)
       // localCheckpoint (r16 opt): candidates feed the estimator join and
       // the exact verify, the bit table joins twice (a/b sides) — both
       // are pair/signature-sized. The survivor corpus itself stays lazy:
       // checkpointing it was A/B'd and lost (2.29 → 2.58 s) — this entry
       // derives the corpus only thrice and the text materialization costs
       // more than the re-derives.
-      val dd = dd0.join(
-        Dedup.exact(dd0).select(col("keep_id").as("doc_id")), Seq("doc_id"))
+      val dd = Dedup.exactSurvivors(docs(s, d))
       val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
         .localCheckpoint()
       val bits = Dedup.minhash(dd).select(
@@ -1542,14 +1524,12 @@ object Llm {
     // quadratically per exact class; never all-pairs; counts exact
     // integers, two ROUND divisions at the edge
     "llm_rouge_verify" -> ((s, d) => {
-      val dd0 = docs(s, d)
       // localCheckpoint (r16 opt): only the pair-sized candidate set is
       // materialized (two consumers). Checkpointing the survivor corpus
       // and the bigram multiset was A/B'd and LOST (1.76 → 2.14 s) —
       // corpus-scale string materialization costs more than the lazy
       // re-derives here.
-      val dd = dd0.join(
-        Dedup.exact(dd0).select(col("keep_id").as("doc_id")), Seq("doc_id"))
+      val dd = Dedup.exactSurvivors(docs(s, d))
       val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
         .localCheckpoint()
       val bg = dd.select(col("doc_id"),
@@ -1782,8 +1762,7 @@ object Llm {
       val survivors = dd.join(
         cls.select(col("keep_id").as("doc_id")), Seq("doc_id"))
         .localCheckpoint()
-      val pairs = Dedup.jaccard(survivors, Dedup.lshCandidates(survivors))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val pairs = Dedup.nearDupPairs(survivors)
       val crossM = pairs
         .join(cls.select(col("keep_id").as("doc_a"), col("fp").as("fp_a")), Seq("doc_a"))
         .join(cls.select(col("keep_id").as("doc_b"), col("fp").as("fp_b")), Seq("doc_b"))
@@ -1990,14 +1969,8 @@ object Llm {
     // survivor pairs as llm_dup_source_matrix — never all-pairs; the
     // modularity terms are three bounded per-source rollups
     "llm_dup_modularity" -> ((s, d) => {
-      val dd = docs(s, d)
-      val fps = dd.select(col("doc_id"), col("source"),
-        expr(s"md5(${graft.llm.Dedup.normalizeExpr})").as("fp"))
-      val cls = fps.groupBy("fp").agg(min("doc_id").as("keep_id"))
-      val survivors = dd.join(
-        cls.select(col("keep_id").as("doc_id")), Seq("doc_id"))
-      val pairs = Dedup.jaccard(survivors, Dedup.lshCandidates(survivors))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val survivors = Dedup.exactSurvivors(docs(s, d))
+      val pairs = Dedup.nearDupPairs(survivors)
       val src = survivors.select(col("doc_id"), col("source"))
       // localCheckpoint: edges feed THREE rollups (m, degrees, intra) —
       // without it the whole exact-collapse + LSH + jaccard pair
@@ -2774,13 +2747,9 @@ object Llm {
     // triangle census of the LSH candidate graph over DISTINCT content
     // (copy cliques would contribute n-choose-3 degenerate triangles):
     // near-clique duplicate communities vs chains of borderline pairs
-    "llm_dup_triangles" -> ((s, d) => {
-      val dd = docs(s, d)
-      val survivors = dd.join(
-        Dedup.exact(dd).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-      Dedup.dupTriangles(Dedup.lshCandidates(survivors))
-        .orderBy("a", "b", "c")
-    }),
+    "llm_dup_triangles" -> ((s, d) =>
+      Dedup.dupTriangles(Dedup.lshCandidates(Dedup.exactSurvivors(docs(s, d))))
+        .orderBy("a", "b", "c")),
 
     // content-policy blocklist: per-category term-occurrence counts with
     // the block verdict at >2 hits; the policy table broadcasts
@@ -2887,12 +2856,8 @@ object Llm {
     // PageRank (2 damped power steps) over the jaccard>=0.6 candidate
     // graph — which docs sit at the CORE of a near-dup neighborhood;
     // per-node incoming sums fold in fixed neighbor order
-    "llm_pagerank" -> ((s, d) => {
-      val dd = docs(s, d)
-      val pairs = Dedup.jaccard(dd, Dedup.lshCandidates(dd))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
-      Dedup.pageRank(pairs, iters = 2).orderBy("doc_id")
-    }),
+    "llm_pagerank" -> ((s, d) =>
+      Dedup.pageRank(Dedup.nearDupPairs(docs(s, d)), iters = 2).orderBy("doc_id")),
 
     // semi-supervised label propagation over the same candidate graph:
     // every 5th doc seeds its language, two synchronous plurality rounds
@@ -2900,8 +2865,7 @@ object Llm {
     // as chained CTEs with row_number argmax
     "llm_label_propagation" -> ((s, d) => {
       val dd = docs(s, d)
-      val pairs = Dedup.jaccard(dd, Dedup.lshCandidates(dd))
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val pairs = Dedup.nearDupPairs(dd)
       val seeds = dd.where("doc_id % 5 = 0")
         .select(col("doc_id"), col("lang").as("label"))
       Dedup.labelPropagation(pairs, seeds, iters = 2).orderBy("doc_id")

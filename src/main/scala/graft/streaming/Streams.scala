@@ -764,18 +764,14 @@ object Streams {
     * scaladoc): every stateful operator runs one state store
     * (open/commit) per shuffle partition per micro-batch, so partitions
     * are sized to state VOLUME, not to the session's scan parallelism.
-    * Default 2 after the r16 sweep over a 10-entry replay subset at
-    * sf0.1 (min-of-2, back-to-back runs): 8 partitions 43.9 s total,
+    * 2 after the r16 sweep over a 10-entry replay subset at sf0.1
+    * (min-of-2, back-to-back runs): 8 partitions 43.9 s total,
     * 4 → 36.9 s, 2 → 34.2 s — the bounded replays hold KB of state, so
     * per-partition store open/commit per micro-batch dominates and
-    * fewer stores win (the same sizing call as r12's 32→8 clamp, one
-    * step further now that the per-batch breakdown is measured: addBatch
-    * ~300-450 ms even for sub-1k-row batches at 8 partitions).
-    * Env-overridable because the right value is per-job state-volume
-    * sizing — a production stream with GBs of state raises it.
+    * fewer stores win. A production stream with GBs of state sizes this
+    * per job.
     */
-  private def streamShufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "2")
+  private val streamShufflePartitions = "2"
 
   /** Drive any of the above to an in-memory table and block until the
     * source drains — the test/demo harness path.
@@ -790,10 +786,10 @@ object Streams {
     // Size state partitions to state volume: every stateful operator runs
     // one state store (open/commit/fsync) per shuffle partition per
     // micro-batch, so the session's scan-sized default (32) pays 32×
-    // store overhead for kilobytes of replay state. 8 is plenty for the
-    // bounded replays and is the same sizing call a real deployment makes
-    // per streaming job; a fresh query starts from a fresh temp
-    // checkpoint each run, so rescaling between invocations is safe.
+    // store overhead for kilobytes of replay state. 2 suits the bounded
+    // replays and is the same sizing call a real deployment makes per
+    // streaming job; a fresh query starts from a fresh temp checkpoint
+    // each run, so rescaling between invocations is safe.
     val conf = df.sparkSession.conf
     val prevShuffle = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)

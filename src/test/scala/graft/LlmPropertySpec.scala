@@ -254,6 +254,45 @@ class LlmPropertySpec extends SparkSpec {
       s"candidate counts not monotone in bands: $rows")
   }
 
+  test("lshTuning counts equal per-config lshCandidates and jaccard >= 0.6 counts") {
+    // the tuning report verifies every config in one tagged pass; each
+    // config's counts must match its own candidate set verified alone
+    samples(corpus, 3).foreach { texts =>
+      val d = docsDF(texts ++ texts.take(texts.length / 2)) // force dups
+      val got = Dedup.lshTuning(d).collect()
+        .map(r => r.getInt(0) -> (r.getLong(2), r.getLong(3))).toMap
+      val want = Seq(2, 4, 8).map { bands =>
+        val cands = Dedup.lshCandidates(d, 8, bands)
+        bands -> (cands.count(),
+          Dedup.jaccard(d, cands).where("jaccard >= 0.6").count())
+      }.toMap
+      assert(got == want, s"texts=$texts")
+    }
+  }
+
+  test("jaccardWithZeros is jaccard plus exactly the no-shared-shingle pairs") {
+    import spark.implicits._
+    // reference shingle sets: normalized word 3-grams, distinct per doc
+    def sh(t: String): Set[String] =
+      t.trim.toLowerCase.split("\\s+").sliding(3).map(_.mkString(" ")).toSet
+    samples(corpus, 5).foreach { texts =>
+      val d = docsDF(texts)
+      val pairs = for (a <- texts.indices; b <- texts.indices if a < b)
+        yield (a.toLong, b.toLong, a * 100L + b)
+      val c = pairs.toDF("doc_a", "doc_b", "tag")
+      val z = Dedup.jaccardWithZeros(d, c)
+        .select("doc_a", "doc_b", "tag", "jaccard").as[(Long, Long, Long, Double)]
+        .collect().toSet
+      assert(z.forall { case (a, b, t, _) => t == a * 100 + b }, "tag not carried")
+      val j = Dedup.jaccard(d, c).as[(Long, Long, Double)].collect().toSet
+      assert(z.filter(_._4 > 0).map(r => (r._1, r._2, r._4)) == j, s"texts=$texts")
+      val disjoint = pairs.collect {
+        case (a, b, _) if (sh(texts(a.toInt)) & sh(texts(b.toInt))).isEmpty => (a, b)
+      }.toSet
+      assert(z.filter(_._4 == 0.0).map(r => (r._1, r._2)) == disjoint, s"texts=$texts")
+    }
+  }
+
   test("distinctSketch registers are bounded and consistent") {
     import spark.implicits._
     val d = Seq.tabulate(60)(i =>
