@@ -143,23 +143,19 @@ object Bench {
     // compilation still happens on the clock.
     locally {
       import org.apache.spark.sql.functions.{col, count, session_window}
-      val wdir = java.nio.file.Files.createTempDirectory("graft_bench_warm")
+      val wdir = Session.scratch(spark, "bench_warm")
       val two = spark.sql(
         """SELECT timestamp'2026-01-01 00:00:00' AS ts, CAST(1 AS BIGINT) AS user_id
           |UNION ALL
           |SELECT timestamp'2026-01-01 00:10:00', CAST(2 AS BIGINT)""".stripMargin)
-      two.write.mode("overwrite").parquet(wdir.toString)
-      val agg = spark.readStream.schema(two.schema).parquet(wdir.toString)
+      two.write.mode("overwrite").parquet(wdir)
+      val agg = spark.readStream.schema(two.schema).parquet(wdir)
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count("*"))
       graft.streaming.Streams.runToMemory(agg, "bench_warm",
         org.apache.spark.sql.streaming.OutputMode.Complete())
       spark.catalog.dropTempView("bench_warm"): Unit
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-      }
-      rm(wdir.toFile)
     }
     // SPARK_GRAFT_BENCH_REPEAT=N runs each entry N times and reports the
     // min. Default is now 2 (r10 verdict #1): three rounds running, the

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 /** Honest scale trajectory for the TPC-H side (round-4 verdict #7): the
   * driver benches at sf0.1 where every query is overhead-dominated, and
   * the published baseline (BASELINE.md) ran SF100 on 48 cores — no
-  * same-scale ratio exists. This main stages an SF~1 fixture under /tmp
-  * by replicating the sf0.1 FACT tables (orders, lineitem) `factor`
-  * times with o_orderkey/l_orderkey offset per shard — join keys stay
-  * consistent, dimension tables stay at sf0.1 (their size is not what
-  * scales in TPC-H) — then times the headline queries there.
+  * same-scale ratio exists. This main stages an SF~1 fixture in the run
+  * root ([[Session.scratch]]) by replicating the sf0.1 FACT tables
+  * (orders, lineitem) `factor` times with o_orderkey/l_orderkey offset
+  * per shard — join keys stay consistent, dimension tables stay at sf0.1
+  * (their size is not what scales in TPC-H) — then times the headline
+  * queries there.
   *
   * The documents corpus is replicated too (doc_id offset per shard, text
   * unchanged — factor-1 exact duplicates per document, the worst
@@ -126,8 +127,12 @@ object ScaleBench {
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val names =
       if (args.length > 2) args.drop(2).toSeq else defaultQueries
-    val out = s"/tmp/graft_scalebench_x$factor"
     val spark = Session.local("graft-scale-bench")
+    // the staged replica tree (1.7 GB at factor 100) goes with the run
+    // root at stop: leaving it behind churned the page cache and inflated
+    // three rounds of later driver bench runs (the r8-r10 phantom
+    // regressions the judge had to re-run to clear)
+    val out = Session.scratch(spark, s"scalebench_x$factor")
     try {
       val tStage = time(stage(spark, src, out, factor))
       def run(q: String): Unit = {
@@ -145,20 +150,6 @@ object ScaleBench {
       val docRows = spark.read.parquet(s"$out/documents.parquet").count()
       println(s"""{"factor":$factor,"lineitem_rows":$rows,"document_rows":$docRows,""" +
         s""""stage_sec":${Fmt.sec(tStage, digits = 1)},${timed.mkString(",")}}""")
-    } finally {
-      spark.stop()
-      // Delete the staged replica tree (1.7 GB at factor 100) unless the
-      // caller asks to keep it: leaving it behind churned the page cache
-      // and inflated three rounds of subsequent driver bench runs (the
-      // r8-r10 phantom regressions the judge had to re-run to clear).
-      if (!sys.env.get("SPARK_GRAFT_KEEP_STAGE").contains("1")) rmTree(out)
-    }
-  }
-
-  private[graft] def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(path))
+    } finally spark.stop()
   }
 }

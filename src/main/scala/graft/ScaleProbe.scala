@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Empirical scaling probe for the heavy corpus operators:
   * `runMain graft.ScaleProbe [factor] [sfDir]` stages a factor-X replica
-  * of the documents table as a MULTI-FILE parquet directory under /tmp
+  * of the documents table as a MULTI-FILE parquet directory in the run
+  * root ([[Session.scratch]], deleted at stop)
   * (doc_ids offset per shard, text unchanged — so every document gains
   * factor-1 exact duplicates, the worst realistic dedup load), then runs
   * the shuffle-heavy operators at 1x and at factor-X and prints per-op
@@ -167,7 +168,7 @@ object ScaleProbe {
       hot.as("key"),
       expr("timestamp_micros(id * 5000000)").as("ts"),
       (col("id") % 997).as("quote"))
-    val dir = "/tmp/graft_scale/asof_skew"
+    val dir = Session.scratch(spark, "asof_skew")
     left.repartition(32).write.mode("overwrite").parquet(s"$dir/left")
     right.repartition(32).write.mode("overwrite").parquet(s"$dir/right")
     val l = spark.read.parquet(s"$dir/left")
@@ -206,7 +207,7 @@ object ScaleProbe {
     * entirely; the manual salt is the only treatment that moves this.
     */
   private def erSkewProbe(spark: SparkSession): Seq[String] = {
-    val dir = "/tmp/graft_scale/er_skew"
+    val dir = Session.scratch(spark, "er_skew")
     spark.range(2000000).selectExpr(
         "CASE WHEN id % 5 < 4 THEN 'HOT' ELSE concat('B', id % 997) END AS blk",
         "id AS lid", "id % 9973 AS lv", "concat('n', id % 4999) AS lname")
@@ -260,7 +261,7 @@ object ScaleProbe {
       // comparison — and, measured here, costs more than the 8x corpus
       // read 8-way)
       def stage(f: Int): DataFrame = {
-        val path = s"/tmp/graft_scale/documents_x$f"
+        val path = Session.scratch(spark, s"documents_x$f")
         base.selectExpr(s"explode(sequence(0, ${f - 1})) AS shard", "*")
           .withColumn("doc_id", col("doc_id") + col("shard") * n)
           .drop("shard")
@@ -292,12 +293,6 @@ object ScaleProbe {
       val cc = ccProbe(big)
       val ms = mapStageProbe(spark, dir)
       println(s"""{"factor":$factor,"rows_x1":$n,${(items ++ shItems ++ asof ++ er ++ cc ++ ms).mkString(",")}}""")
-    } finally {
-      spark.stop()
-      // Same hygiene as ScaleBench: drop the /tmp replicas so a later
-      // driver bench doesn't inherit page-cache/IO churn.
-      if (!sys.env.get("SPARK_GRAFT_KEEP_STAGE").contains("1"))
-        ScaleBench.rmTree("/tmp/graft_scale")
-    }
+    } finally spark.stop()
   }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared SparkSession builder for Verify, Bench and tests, so the
@@ -13,11 +18,23 @@ import org.apache.spark.sql.SparkSession
   * (`skewJoin.enabled`). `shuffle.partitions` defaults to the local
   * core count here; on a cluster it should be ~2-3x total cores —
   * it is env-overridable for that reason.
+  *
+  * Files: every file graft writes outside a caller-named output lives
+  * under one run root, a fresh `graft_run*` directory in `java.io.tmpdir`
+  * made per SparkContext — the warehouse, the Io entries' files
+  * ([[root]]), entry staging and the scale mains' replicas
+  * ([[scratch]]). The root is deleted when the SparkContext stops, on an
+  * explicit `stop()` and on Spark's own shutdown hook alike (both post
+  * the application-end event), so two runs never share a file and
+  * nothing a run writes outlives it.
   */
 object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  private val roots = new java.util.concurrent.ConcurrentHashMap[SparkContext, File]()
+
   def local(appName: String = "graft"): SparkSession = {
+    val root = Files.createTempDirectory("graft_run").toFile
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -29,12 +46,30 @@ object Session {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // events.ts is TIMESTAMP(NANOS) parquet; see Tables.load.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed saveAsTable target (in-memory catalog, files under /tmp —
-      // never the repo's cwd default spark-warehouse/)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // bucketed saveAsTable target (in-memory catalog): inside the run
+      // root, never the cwd's default spark-warehouse/
+      .config("spark.sql.warehouse.dir", new File(root, "warehouse").getPath)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    if (roots.putIfAbsent(sc, root) == null)
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          roots.remove(sc)
+          Tables.deleteRecursively(root)
+        }
+      })
+    else root.delete(): Unit // an existing context keeps its own root
+    sc.setLogLevel("WARN")
     spark
   }
+
+  /** The run root of `spark`'s SparkContext. */
+  def root(spark: SparkSession): File =
+    Option(roots.get(spark.sparkContext)).getOrElse(throw new IllegalStateException(
+      "no graft run root: session not built by graft.Session.local, or stopped"))
+
+  /** A fresh directory `<root>/<name><random>` under the run root. */
+  def scratch(spark: SparkSession, name: String): String =
+    Files.createTempDirectory(root(spark).toPath, name).toString
 }

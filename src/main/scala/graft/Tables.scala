@@ -52,7 +52,9 @@ object Tables {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Recursive local delete (shared by dropManaged and the Arrow sink). */
+  /** Recursive local delete: graft's one implementation (run root,
+    * entry staging, managed tables, the Arrow sink).
+    */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete()

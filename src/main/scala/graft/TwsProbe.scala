@@ -30,8 +30,8 @@ object TwsProbe {
     val queries =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("ts_stream_topk", "ts_stream_hll", "ts_stream_bitmap_distinct")
-    val out = s"/tmp/graft_twsprobe_x$factor"
     val spark = Session.local("graft-tws-probe")
+    val out = Session.scratch(spark, s"twsprobe_x$factor")
     val P = "spark.sql.streaming.stateStore.rocksdb."
     val variants: Seq[(String, Map[String, String])] = Seq(
       ("baseline", Map.empty),
@@ -60,10 +60,6 @@ object TwsProbe {
       }
       println(s"""{"factor":$factor,"stage_sec":${Fmt.sec(tStage, digits = 1)},""" +
         items.mkString(",") + "}")
-    } finally {
-      spark.stop()
-      if (!sys.env.get("SPARK_GRAFT_KEEP_STAGE").contains("1"))
-        ScaleBench.rmTree(out)
-    }
+    } finally spark.stop()
   }
 }

@@ -22,7 +22,8 @@ import graft.Tables
   *   - events time-series coverage: hourly windows + session gaps + JSON
   *     props extraction.
   *
-  * Each entry round-trips through real files under /tmp/graft_io/<sf>/ and
+  * Each entry round-trips through real files under `<run root>/io/<sf>/`
+  * (`graft.Session.root`; deleted when the session stops) and
   * is verified against a DuckDB oracle computed from the ORIGINAL parquet
   * tables — so a lossy write or a misread split shows up as a hash
   * mismatch, not just a row count.
@@ -35,26 +36,6 @@ import graft.Tables
   */
 object Io {
 
-  /** Best-effort recursive delete for entry-local staging dirs (the
-    * streaming entries stage a landing-directory copy of events that
-    * nothing references once the memory sink holds the result).
-    */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Stage the events fixture as the FOUR mtime-ordered landing files the
-    * late-data streaming entries replay one micro-batch each (see the
-    * ts_stream_late_drop scaladoc for the watermark design): f1a = the
-    * on-time history up to H12 minus a held-back 10% md5 slice, f1b = the
-    * rest of the on-time history (H12, H6], f2 = the held-back slice
-    * arriving two batches late, f3 = the fresh tail (> H6). One parquet
-    * FILE per batch — the file source's unit of admission is a file, and
-    * mtime order (60 s apart) fixes the replay order. Returns the landing
-    * dir (caller deletes once the stream drains) and the staged schema.
-    */
   /** Run `body` with the RocksDB state store provider set (the only
     * provider implementing the transformWithState v2 state layer),
     * restoring the previous session setting afterwards.
@@ -91,16 +72,16 @@ object Io {
   private[graft] def stageOrderedFile(landing: String,
                                df: org.apache.spark.sql.DataFrame,
                                name: String, mtimeMs: Long): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stage_one")
-    df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = tmp.toFile.listFiles()
+    val tmp = new java.io.File(graft.Session.scratch(df.sparkSession, "stage_one"))
+    df.repartition(1).write.mode("overwrite").parquet(tmp.getPath)
+    val part = tmp.listFiles()
       .find(f => f.getName.startsWith("part-")
         && f.getName.endsWith(".parquet")).get
     val dest = java.nio.file.Paths.get(landing, name)
     java.nio.file.Files.move(part.toPath, dest)
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    deleteRecursively(tmp.toFile)
+    Tables.deleteRecursively(tmp)
   }
 
   /** Stage several independent landing files CONCURRENTLY (r16 opt,
@@ -127,6 +108,16 @@ object Io {
     finally pool.shutdown()
   }
 
+  /** Stage the events fixture as the FOUR mtime-ordered landing files the
+    * late-data streaming entries replay one micro-batch each (see the
+    * ts_stream_late_drop scaladoc for the watermark design): f1a = the
+    * on-time history up to H12 minus a held-back 10% md5 slice, f1b = the
+    * rest of the on-time history (H12, H6], f2 = the held-back slice
+    * arriving two batches late, f3 = the fresh tail (> H6). One parquet
+    * FILE per batch — the file source's unit of admission is a file, and
+    * mtime order (60 s apart) fixes the replay order. Returns the landing
+    * dir (caller deletes once the stream drains) and the staged schema.
+    */
   private def stageLateLanding(s: SparkSession, d: String)
       : (String, org.apache.spark.sql.types.StructType) = {
     import org.apache.spark.sql.functions.{col, expr, lit}
@@ -139,8 +130,7 @@ object Io {
       .head.toSeq.map(_.asInstanceOf[java.sql.Timestamp]).toArray
     val held =
       expr("conv(substr(md5(cast(event_id AS STRING)),1,15),16,10) % 10 = 0")
-    val landing =
-      java.nio.file.Files.createTempDirectory("graft_stream_late").toString
+    val landing = graft.Session.scratch(s, "stream_late")
     val t0 = System.currentTimeMillis() - 600000
     stageOrderedFiles(landing, Seq(
       (evs.where(col("ts") <= lit(h12) && !held), "f1a_ontime.parquet", t0),
@@ -167,8 +157,7 @@ object Io {
     Tables.register(s, d)
     val evs = s.table("events").select("ts", "user_id", "event_type")
     def side(t: String): String = {
-      val dir =
-        java.nio.file.Files.createTempDirectory(s"graft_stream_ij_$t").toString
+      val dir = graft.Session.scratch(s, s"stream_ij_$t")
       evs.where(col("event_type") === t).write.mode("overwrite").parquet(dir)
       dir
     }
@@ -180,13 +169,14 @@ object Io {
       joinType = joinType)
     graft.streaming.Streams.runToMemory(joined, sink,
       org.apache.spark.sql.streaming.OutputMode.Append())
-    deleteRecursively(new java.io.File(pd))
-    deleteRecursively(new java.io.File(vd))
+    Tables.deleteRecursively(new java.io.File(pd))
+    Tables.deleteRecursively(new java.io.File(vd))
     s.table(sink).orderBy("user_id", "left_ts", "right_ts")
   }
 
-  private def base(dir: String): String =
-    s"/tmp/graft_io/${new java.io.File(dir).getName}"
+  /** The Io entries' file area for fixture dir `dir`: `<run root>/io/<sf>`. */
+  private def base(s: SparkSession, dir: String): String =
+    s"${graft.Session.root(s)}/io/${new java.io.File(dir).getName}"
 
   /** Shared IVF oracle CTEs: the 4-centroid table, corpus-wide raw-cosine
     * argmax assignment (min-cid ties — the Ivf.assign contract), the
@@ -276,7 +266,7 @@ object Io {
         "concat(CASE WHEN c_custkey % 50 = 0 THEN 'garbage' " +
           "ELSE CAST(c_custkey AS STRING) END, '|', c_mktsegment, '|', " +
           "CAST(c_acctbal AS STRING))").as("value"))
-      val p = s"${base(d)}/customer_dirty_csv"
+      val p = s"${base(s, d)}/customer_dirty_csv"
       lines.repartition(2).write.mode("overwrite").text(p)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _bad STRING")
@@ -299,7 +289,7 @@ object Io {
 
     "src_csv_roundtrip" -> ((s, d) => {
       val orders = t(s, d, "orders")
-      val p = s"${base(d)}/orders_csv"
+      val p = s"${base(s, d)}/orders_csv"
       orders.repartition(4).write.mode("overwrite").option("header", "true").csv(p)
       s.read.schema(orders.schema).option("header", "true").csv(p)
         .groupBy("o_orderstatus")
@@ -338,7 +328,7 @@ object Io {
 
     "src_ndjson_roundtrip" -> ((s, d) => {
       val customer = t(s, d, "customer")
-      val p = s"${base(d)}/customer_json"
+      val p = s"${base(s, d)}/customer_json"
       customer.repartition(3).write.mode("overwrite").json(p)
       s.read.schema(customer.schema).json(p)
         .groupBy("c_mktsegment")
@@ -356,7 +346,7 @@ object Io {
         "CAST(s_suppkey AS BIGINT) AS s_suppkey", "s_name",
         "CAST(s_nationkey AS BIGINT) AS s_nationkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
-      val p = s"${base(d)}/supplier_arrow"
+      val p = s"${base(s, d)}/supplier_arrow"
       sup.repartition(3).write.format("graft.sources.ArrowIpcSource")
         .mode("overwrite").save(p)
       s.read.format("graft.sources.ArrowIpcSource").load(p)
@@ -380,7 +370,7 @@ object Io {
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
-      val p = s"${base(d)}/ivf_shards"
+      val p = s"${base(s, d)}/ivf_shards"
       Ivf.assign(e, cents).write.mode("overwrite")
         .partitionBy("centroid_id").parquet(p)
       val probe = e.where("vec_id = 7")
@@ -416,7 +406,7 @@ object Io {
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
-      val p = s"${base(d)}/ivfpq_shards"
+      val p = s"${base(s, d)}/ivfpq_shards"
       Similarity.pqCodes(Ivf.assign(e, cents))
         .select("vec_id", "pq_codes", "centroid_id")
         .write.mode("overwrite").partitionBy("centroid_id").parquet(p)
@@ -453,7 +443,7 @@ object Io {
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
-      val p = s"${base(d)}/ivfpq_shards_r"
+      val p = s"${base(s, d)}/ivfpq_shards_r"
       Similarity.pqCodes(Ivf.assign(e, cents))
         .select("vec_id", "pq_codes", "centroid_id")
         .write.mode("overwrite").partitionBy("centroid_id").parquet(p)
@@ -488,7 +478,7 @@ object Io {
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
-      val p = s"${base(d)}/ivf_nprobe_shards"
+      val p = s"${base(s, d)}/ivf_nprobe_shards"
       Ivf.assign(e, cents).write.mode("overwrite")
         .partitionBy("centroid_id").parquet(p)
       val probe = e.where("vec_id = 7")
@@ -522,8 +512,8 @@ object Io {
     // whole point of the source abstraction: a 100 TB lake is never one
     // format, and the engine must not care
     "src_federated_join" -> ((s, d) => {
-      val pArrow = s"${base(d)}/fed_supplier_arrow"
-      val pAvro = s"${base(d)}/fed_nation_avro"
+      val pArrow = s"${base(s, d)}/fed_supplier_arrow"
+      val pAvro = s"${base(s, d)}/fed_nation_avro"
       t(s, d, "supplier").selectExpr(
           "CAST(s_suppkey AS BIGINT) AS s_suppkey",
           "CAST(s_nationkey AS BIGINT) AS s_nationkey")
@@ -555,7 +545,7 @@ object Io {
       val sup = t(s, d, "supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
-      val p = s"${base(d)}/supplier_arrow_tt"
+      val p = s"${base(s, d)}/supplier_arrow_tt"
       graft.Tables.deleteRecursively(new java.io.File(p))
       sup.where("s_suppkey % 2 = 0").repartition(2)
         .write.format("graft.sources.ArrowIpcSource")
@@ -584,7 +574,7 @@ object Io {
     // hash-match
     "src_arrow_vectors" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val p = s"${base(d)}/embeddings_arrow"
+      val p = s"${base(s, d)}/embeddings_arrow"
       e.repartition(3).write.format("graft.sources.ArrowIpcSource")
         .mode("overwrite").save(p)
       s.read.format("graft.sources.ArrowIpcSource").load(p)
@@ -604,7 +594,7 @@ object Io {
       val ord = t(s, d, "orders").selectExpr(
         "CAST(o_orderkey AS BIGINT) AS o_orderkey", "o_orderstatus",
         "CAST(o_totalprice AS DOUBLE) AS o_totalprice")
-      val p = s"${base(d)}/orders_avro"
+      val p = s"${base(s, d)}/orders_avro"
       ord.repartition(3).write.format("graft.sources.AvroSource")
         .mode("overwrite").save(p)
       s.read.format("graft.sources.AvroSource").load(p)
@@ -625,7 +615,7 @@ object Io {
       val lines = t(s, d, "documents")
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("n_chars"))
           .as("value"))
-      val p = s"${base(d)}/docs_txt_gz"
+      val p = s"${base(s, d)}/docs_txt_gz"
       lines.repartition(2).write.mode("overwrite")
         .option("compression", "gzip").text(p)
       s.read.text(p)
@@ -644,7 +634,7 @@ object Io {
     // mis-read row hash-mismatches
     "src_orc_roundtrip" -> ((s, d) => {
       val part = t(s, d, "part")
-      val p = s"${base(d)}/part_orc"
+      val p = s"${base(s, d)}/part_orc"
       part.repartition(3).write.mode("overwrite").orc(p)
       s.read.orc(p)
         .where(col("p_size") <= 25)
@@ -663,7 +653,7 @@ object Io {
     // both engines read it back through the same coalesce.
     "src_xml_roundtrip" -> ((s, d) => {
       val docsDf = t(s, d, "documents")
-      val p = s"${base(d)}/documents_xml"
+      val p = s"${base(s, d)}/documents_xml"
       docsDf.repartition(3).write.mode("overwrite")
         .option("rowTag", "doc").format("xml").save(p)
       s.read.format("xml").option("rowTag", "doc")
@@ -717,7 +707,7 @@ object Io {
     "src_listing_dir" -> ((s, d) => {
       val li = t(s, d, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
-      val p = s"${base(d)}/lineitem_dir"
+      val p = s"${base(s, d)}/lineitem_dir"
       li.repartition(6).write.mode("overwrite").parquet(p)
       // directory-as-table: 6-file listing scan with the filter pushed down
       s.read.parquet(p)
@@ -735,7 +725,7 @@ object Io {
     // from the flat source columns, so a shredding/reassembly bug in
     // either direction cannot hash-match
     "src_nested_struct" -> ((s, d) => {
-      val p = s"${base(d)}/docs_nested"
+      val p = s"${base(s, d)}/docs_nested"
       t(s, d, "documents")
         .selectExpr("doc_id",
           "named_struct('lang', lang, 'n_chars', n_chars, 'src', source) AS meta",
@@ -750,7 +740,7 @@ object Io {
 
     "sink_parquet_partitioned" -> ((s, d) => {
       val orders = t(s, d, "orders")
-      val p = s"${base(d)}/orders_by_status"
+      val p = s"${base(s, d)}/orders_by_status"
       orders.where("o_orderstatus = 'F'")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
       orders.where("o_orderstatus = 'O'")
@@ -798,7 +788,7 @@ object Io {
     // column, or default-filled-instead-of-NULL all hash-mismatch.
     "src_merge_schema" -> ((s, d) => {
       val orders = t(s, d, "orders")
-      val dir = s"${base(d)}/orders_evolved"
+      val dir = s"${base(s, d)}/orders_evolved"
       orders.where("o_orderkey % 2 = 0")
         .select("o_orderkey", "o_totalprice")
         .write.mode("overwrite").parquet(s"$dir/gen1")
@@ -829,7 +819,7 @@ object Io {
     // membership answers) — here the differential check proves the
     // filtered read returns exactly the base table's rows
     "sink_parquet_bloom" -> ((s, d) => {
-      val p = s"${base(d)}/lineitem_bloom"
+      val p = s"${base(s, d)}/lineitem_bloom"
       t(s, d, "lineitem")
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
         .write.mode("overwrite")
@@ -846,8 +836,8 @@ object Io {
     }),
 
     "sink_compact_small_files" -> ((s, d) => {
-      val staged = s"${base(d)}/compact_in"
-      val compacted = s"${base(d)}/compact_out"
+      val staged = s"${base(s, d)}/compact_in"
+      val compacted = s"${base(s, d)}/compact_out"
       t(s, d, "events").repartition(64)
         .write.mode("overwrite").parquet(staged)
       graft.operators.Compact.parquetDir(s, staged, compacted,
@@ -1174,7 +1164,7 @@ object Io {
       import org.apache.spark.sql.functions.{col, count, expr, window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_entry").toString
+      val dir = graft.Session.scratch(s, "stream_entry")
       events.write.mode("overwrite").parquet(dir)
       val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
         .withWatermark("ts", "2 hours")
@@ -1190,7 +1180,7 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Complete())
       // the memory table holds the result rows; the staging copy of
       // events is no longer referenced — don't leak it per invocation
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("hour_ts", "event_type")
     }),
 
@@ -1203,7 +1193,7 @@ object Io {
       import org.apache.spark.sql.functions.{col, count, window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_entry").toString
+      val dir = graft.Session.scratch(s, "stream_entry")
       events.write.mode("overwrite").parquet(dir)
       val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
         .withWatermark("ts", "2 hours")
@@ -1215,7 +1205,7 @@ object Io {
       val sink = "ts_stream_sliding_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("win_start", "event_type")
     }),
 
@@ -1228,7 +1218,7 @@ object Io {
       import org.apache.spark.sql.functions.{col, count, session_window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_entry").toString
+      val dir = graft.Session.scratch(s, "stream_entry")
       events.write.mode("overwrite").parquet(dir)
       val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
         .withWatermark("ts", "2 hours")
@@ -1239,7 +1229,7 @@ object Io {
       val sink = "ts_stream_sess_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id", "session_start")
     }),
 
@@ -1256,8 +1246,7 @@ object Io {
       val userStats = events.groupBy("user_id")
         .agg(count(lit(1)).as("u_events"),
           expr("SUM(CAST(value AS DECIMAL(18,2)))").as("u_value"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stream_entry").toString
+      val dir = graft.Session.scratch(s, "stream_entry")
       events.write.mode("overwrite").parquet(dir)
       val enriched = graft.streaming.Streams.fromParquet(s, dir, events.schema)
         .join(userStats, Seq("user_id"))
@@ -1268,7 +1257,7 @@ object Io {
       val sink = "ts_stream_enrich_sink"
       graft.streaming.Streams.runToMemory(enriched, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("event_type")
     }),
 
@@ -1281,10 +1270,9 @@ object Io {
       import org.apache.spark.sql.functions.{count, expr, lit}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
-      val root = s"${base(d)}/stream_file_sink"
-      deleteRecursively(new java.io.File(root))
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft_stream_entry").toString
+      val root = s"${base(s, d)}/stream_file_sink"
+      Tables.deleteRecursively(new java.io.File(root))
+      val inDir = graft.Session.scratch(s, "stream_entry")
       events.write.mode("overwrite").parquet(inDir)
       val purchases = graft.streaming.Streams
         .fromParquet(s, inDir, events.schema)
@@ -1292,7 +1280,7 @@ object Io {
         .select("ts", "user_id", "value")
       graft.streaming.Streams.runToParquet(purchases,
         s"$root/out", s"$root/ck")
-      deleteRecursively(new java.io.File(inDir))
+      Tables.deleteRecursively(new java.io.File(inDir))
       // out/ lives until the NEXT invocation's cleanup: the returned
       // frame reads it lazily at the caller's action
       s.read.parquet(s"$root/out")
@@ -1320,8 +1308,8 @@ object Io {
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val root = s"${base(d)}/stream_resume"
-      deleteRecursively(new java.io.File(root))
+      val root = s"${base(s, d)}/stream_resume"
+      Tables.deleteRecursively(new java.io.File(root))
       val landing = s"$root/landing"
       new java.io.File(landing).mkdirs()
       val t0 = System.currentTimeMillis() - 600000
@@ -1366,7 +1354,7 @@ object Io {
           "concat(p_name, ',', p_type) AS f_comma",
           "concat('\"', p_brand, '\"', ' quoted') AS f_quote",
           "concat(p_name, chr(10), p_type) AS f_newline")
-      val p = s"${base(d)}/csv_quoted"
+      val p = s"${base(s, d)}/csv_quoted"
       tricky.write.mode("overwrite")
         .option("header", "true").option("escape", "\"").csv(p)
       s.read.option("header", "true").option("multiLine", "true")
@@ -1412,15 +1400,15 @@ object Io {
       val sup = t(s, d, "supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
-      val p = s"${base(d)}/supplier_arrow_log"
-      deleteRecursively(new java.io.File(p))
+      val p = s"${base(s, d)}/supplier_arrow_log"
+      Tables.deleteRecursively(new java.io.File(p))
       (0 to 2).foreach { g =>
         sup.where(s"s_suppkey % 3 = $g").repartition(2)
           .write.format("graft.sources.ArrowIpcSource")
           .mode("append").save(p)
       }
-      val root = s"${base(d)}/stream_commit_log"
-      deleteRecursively(new java.io.File(root))
+      val root = s"${base(s, d)}/stream_commit_log"
+      Tables.deleteRecursively(new java.io.File(root))
       val stream = s.readStream.format("graft.sources.ArrowIpcSource")
         .option("maxVersionsPerTrigger", 1).load(p)
       val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
@@ -1440,10 +1428,9 @@ object Io {
       import org.apache.spark.sql.functions.expr
       val events = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "value")
-      val root = s"${base(d)}/stream_upsert"
-      deleteRecursively(new java.io.File(root))
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft_upsert_in").toString
+      val root = s"${base(s, d)}/stream_upsert"
+      Tables.deleteRecursively(new java.io.File(root))
+      val inDir = graft.Session.scratch(s, "upsert_in")
       events.repartition(3).write.mode("overwrite").parquet(inDir)
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -1461,7 +1448,7 @@ object Io {
           merged.write.mode("overwrite").parquet(next)
           last = Some(next)
       }
-      deleteRecursively(new java.io.File(inDir))
+      Tables.deleteRecursively(new java.io.File(inDir))
       s.read.parquet(last.getOrElse(
           sys.error("upsert stream produced no batches")))
         .where("op <> 'D'")
@@ -1489,8 +1476,7 @@ object Io {
       Tables.register(s, d)
       val evs = s.table("events")
         .select("ts", "event_id", "user_id", "event_type")
-      val landing = java.nio.file.Files
-        .createTempDirectory("graft_pattern_in").toString
+      val landing = graft.Session.scratch(s, "pattern_in")
       val mm = evs
         .selectExpr("unix_micros(min(ts)) AS mn", "unix_micros(max(ts)) AS mx")
         .head
@@ -1518,7 +1504,7 @@ object Io {
           "ts_stream_pattern_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table("ts_stream_pattern_sink")
         .groupBy("user_id")
         .agg(max("n_conversion").as("n_conversion"))
@@ -1536,8 +1522,7 @@ object Io {
       Tables.register(s, d)
       val evs = s.table("events")
         .select("ts", "event_id", "event_type", "value")
-      val landing = java.nio.file.Files
-        .createTempDirectory("graft_cusum_in").toString
+      val landing = graft.Session.scratch(s, "cusum_in")
       val mm = evs
         .selectExpr("unix_micros(min(ts)) AS mn", "unix_micros(max(ts)) AS mx")
         .head
@@ -1566,7 +1551,7 @@ object Io {
           "ts_stream_cusum_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table("ts_stream_cusum_sink")
         .groupBy("event_type")
         .agg(max("n_points").as("n_points"),
@@ -1578,10 +1563,9 @@ object Io {
     "ts_stream_scd2" -> ((s, d) => {
       val events = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "value")
-      val root = s"${base(d)}/stream_scd2"
-      deleteRecursively(new java.io.File(root))
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft_scd2_in").toString
+      val root = s"${base(s, d)}/stream_scd2"
+      Tables.deleteRecursively(new java.io.File(root))
+      val inDir = graft.Session.scratch(s, "scd2_in")
       events.repartition(3).write.mode("overwrite").parquet(inDir)
       val stream = s.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -1601,7 +1585,7 @@ object Io {
           merged.write.mode("overwrite").parquet(next)
           last = Some(next)
       }
-      deleteRecursively(new java.io.File(inDir))
+      Tables.deleteRecursively(new java.io.File(inDir))
       s.read.parquet(last.getOrElse(
           sys.error("scd2 stream produced no batches")))
         .where("op <> 'D'")
@@ -1654,7 +1638,7 @@ object Io {
       val sink = "ts_stream_late_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Append())
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("hour_ts", "event_type")
     }),
 
@@ -1682,7 +1666,7 @@ object Io {
       val sink = "ts_stream_update_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Update())
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("hour_ts", "event_type", "n_events")
     }),
 
@@ -1708,22 +1692,14 @@ object Io {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events").select("ts", "event_id", "event_type", "value")
-      val landing =
-        java.nio.file.Files.createTempDirectory("graft_stream_dd").toString
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dd_stage")
-      evs.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet")).get
+      val landing = graft.Session.scratch(s, "stream_dd")
       val t0 = System.currentTimeMillis() - 600000
-      Seq("f1_first.parquet" -> t0, "f2_redelivery.parquet" -> (t0 + 60000))
-        .foreach { case (name, mtime) =>
-          val dest = java.nio.file.Paths.get(landing, name)
-          java.nio.file.Files.copy(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-      deleteRecursively(tmp.toFile)
+      stageOrderedFile(landing, evs, "f1_first.parquet", t0)
+      val redelivery = java.nio.file.Files.copy(
+        java.nio.file.Paths.get(landing, "f1_first.parquet"),
+        java.nio.file.Paths.get(landing, "f2_redelivery.parquet"))
+      java.nio.file.Files.setLastModifiedTime(redelivery,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + 60000))
       val stream = s.readStream.schema(evs.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
       val deduped = graft.streaming.Streams.dedupStream(
@@ -1731,7 +1707,7 @@ object Io {
       val sink = "ts_stream_dd_sink"
       graft.streaming.Streams.runToMemory(deduped, sink,
         org.apache.spark.sql.streaming.OutputMode.Append())
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("event_id").select(
         col("event_id"), col("event_type"), col("value"))
     }),
@@ -1755,23 +1731,11 @@ object Io {
         """SELECT date_trunc('HOUR', max(ts)) - INTERVAL 12 HOUR
           |FROM events""".stripMargin)
         .head.toSeq.map(_.asInstanceOf[java.sql.Timestamp]).toArray
-      val landing =
-        java.nio.file.Files.createTempDirectory("graft_stream_al").toString
+      val landing = graft.Session.scratch(s, "stream_al")
       val t0 = System.currentTimeMillis() - 600000
-      Seq(("f1_history.parquet", col("ts") <= lit(h12), t0),
-        ("f2_tail.parquet", col("ts") > lit(h12), t0 + 60000))
-        .foreach { case (name, pred, mtime) =>
-          val tmp = java.nio.file.Files.createTempDirectory("graft_stream_al_s")
-          evs.where(pred).repartition(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-")
-              && f.getName.endsWith(".parquet")).get
-          val dest = java.nio.file.Paths.get(landing, name)
-          java.nio.file.Files.move(part.toPath, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-          deleteRecursively(tmp.toFile)
-        }
+      stageOrderedFiles(landing, Seq(
+        (evs.where(col("ts") <= lit(h12)), "f1_history.parquet", t0),
+        (evs.where(col("ts") > lit(h12)), "f2_tail.parquet", t0 + 60000)))
       val stream = s.readStream.schema(evs.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
       import s.implicits._
@@ -1780,7 +1744,7 @@ object Io {
       val sink = "ts_stream_al_sink"
       graft.streaming.Streams.runToMemory(alerts.toDF(), sink,
         org.apache.spark.sql.streaming.OutputMode.Append())
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("user_id", "n_events")
     }),
 
@@ -1796,8 +1760,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_mgs").toString
+      val dir = graft.Session.scratch(s, "stream_mgs")
       evs.write.mode("overwrite").parquet(dir)
       val stream = s.readStream.schema(evs.schema).parquet(dir)
       import s.implicits._
@@ -1806,7 +1769,7 @@ object Io {
       val sink = "ts_stream_mgs_sink"
       graft.streaming.Streams.runToMemory(updates.toDF(), sink,
         org.apache.spark.sql.streaming.OutputMode.Update())
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id")
     }),
 
@@ -1822,8 +1785,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_tws").toString
+      val dir = graft.Session.scratch(s, "stream_tws")
       evs.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(evs.schema)
@@ -1835,7 +1797,7 @@ object Io {
           "ts_stream_tws_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_tws_sink")
         .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
@@ -1854,8 +1816,7 @@ object Io {
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), expr("CAST(value AS DOUBLE)").as("value"))
-      val landing =
-        java.nio.file.Files.createTempDirectory("graft_stream_twsl").toString
+      val landing = graft.Session.scratch(s, "stream_twsl")
       val t0 = System.currentTimeMillis() - 600000
       stageOrderedFiles(landing, (0 until 3).map(i =>
         (evs.where(s"event_id % 3 = $i").drop("event_id"),
@@ -1871,7 +1832,7 @@ object Io {
           "ts_stream_twsl_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table("ts_stream_twsl_sink")
         .groupBy("user_id")
         .agg(max("n_batches").as("n_batches"),
@@ -1899,8 +1860,7 @@ object Io {
         .agg(count(lit(1)).as("n_events"),
           expr("CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)")
             .as("sum_micros"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_twsi").toString
+      val dir = graft.Session.scratch(s, "stream_twsi")
       live.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(live.schema)
@@ -1914,7 +1874,7 @@ object Io {
           "ts_stream_twsi_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_twsi_sink")
         .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
@@ -1932,8 +1892,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_twsm").toString
+      val dir = graft.Session.scratch(s, "stream_twsm")
       evs.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(evs.schema)
@@ -1945,7 +1904,7 @@ object Io {
           "ts_stream_twsm_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_twsm_sink")
         .groupBy("user_id", "event_type")
         .agg(max("n").as("n_events"))
@@ -1963,8 +1922,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_hll").toString
+      val dir = graft.Session.scratch(s, "stream_hll")
       evs.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(evs.schema)
@@ -1976,7 +1934,7 @@ object Io {
           "ts_stream_hll_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
       s.table("ts_stream_hll_sink")
         .groupBy("event_type")
@@ -1997,8 +1955,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stream_bmd").toString
+      val dir = graft.Session.scratch(s, "stream_bmd")
       evs.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(evs.schema)
@@ -2010,7 +1967,7 @@ object Io {
           "ts_stream_bmd_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_bmd_sink")
         .groupBy("event_type")
         .agg(max("n_chunks").as("n_chunks"),
@@ -2031,8 +1988,7 @@ object Io {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_topk").toString
+      val dir = graft.Session.scratch(s, "stream_topk")
       evs.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(evs.schema)
@@ -2044,7 +2000,7 @@ object Io {
           "ts_stream_topk_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_topk_sink")
         .groupBy("event_type", "rank")
         .agg(expr("max_by(struct(user_id, cnt), n_total)").as("m"))
@@ -2063,8 +2019,7 @@ object Io {
       Tables.register(s, d)
       val rows = s.table("orders").selectExpr("o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents")
-      val dir =
-        java.nio.file.Files.createTempDirectory("graft_stream_qsk").toString
+      val dir = graft.Session.scratch(s, "stream_qsk")
       rows.repartition(3).write.mode("overwrite").parquet(dir)
       withRocksDbProvider(s) {
         val stream = s.readStream.schema(rows.schema)
@@ -2076,7 +2031,7 @@ object Io {
           "ts_stream_qsk_sink",
           org.apache.spark.sql.streaming.OutputMode.Update())
       }
-      deleteRecursively(new java.io.File(dir))
+      Tables.deleteRecursively(new java.io.File(dir))
       s.table("ts_stream_qsk_sink")
         .groupBy("o_orderstatus", "pct")
         .agg(expr("max_by(est_cents, n_total)").as("est_cents"))
@@ -2109,8 +2064,7 @@ object Io {
       val evs = s.table("events")
         .select(col("user_id"), col("ts"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val landing =
-        java.nio.file.Files.createTempDirectory("graft_stream_twst").toString
+      val landing = graft.Session.scratch(s, "stream_twst")
       val t0 = System.currentTimeMillis() - 600000
       val cut = evs.agg(expr("max(ts) - INTERVAL 12 HOURS").as("c"))
         .collect()(0).getTimestamp(0)
@@ -2128,7 +2082,7 @@ object Io {
           "ts_stream_twst_sink",
           org.apache.spark.sql.streaming.OutputMode.Append())
       }
-      deleteRecursively(new java.io.File(landing))
+      Tables.deleteRecursively(new java.io.File(landing))
       s.table("ts_stream_twst_sink")
         .select(col("user_id"), col("n_events"),
           expr("timestamp_millis(expired_at_ms)").as("expired_at"))
@@ -2426,7 +2380,7 @@ object Io {
     // lossless (the per-file locality it buys is LayoutOperatorSpec's
     // footer-stat assertion)
     "sink_zorder_clustered" -> ((s, d) => {
-      val out = s"${base(d)}/zorder_out"
+      val out = s"${base(s, d)}/zorder_out"
       graft.operators.ZOrder.writeClustered(
         t(s, d, "lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
         "l_partkey", "l_suppkey", out, numFiles = 8)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.FileOutputStream
-import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
@@ -47,7 +46,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_arrow").toString
+    val d = Session.scratch(spark, "arrow")
     Tables.register(spark, sfSmoke)
     val rows = spark.table("nation")
       .selectExpr("CAST(n_nationkey AS BIGINT)", "n_name",
@@ -91,7 +90,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
   private def expr(s: String) = org.apache.spark.sql.functions.expr(s)
 
   test("DSv2 write path: two-phase commit round-trip with overwrite") {
-    val out = Files.createTempDirectory("graft_arrow_w").toString
+    val out = Session.scratch(spark, "arrow_w")
     val src = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     src.repartition(3).write.format("graft.sources.ArrowIpcSource")
       .mode("overwrite").save(out)
@@ -121,7 +120,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
   }
 
   test("append mode adds a generation without clobbering the previous one") {
-    val out = Files.createTempDirectory("graft_arrow_a").toString
+    val out = Session.scratch(spark, "arrow_a")
     val src = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     src.write.format("graft.sources.ArrowIpcSource").mode("overwrite").save(out)
     src.write.format("graft.sources.ArrowIpcSource").mode("append").save(out)
@@ -130,7 +129,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
   }
 
   test("time travel: version-pinned reads are immune to later appends") {
-    val out = Files.createTempDirectory("graft_arrow_tt").toString
+    val out = Session.scratch(spark, "arrow_tt")
     val src = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     val n0 = src.count()
     src.write.format("graft.sources.ArrowIpcSource").mode("overwrite").save(out)
@@ -161,8 +160,8 @@ class ArrowIpcSourceSpec extends SparkSpec {
   }
 
   test("commit-log stream resumes exactly-once from its checkpoint") {
-    val tbl = Files.createTempDirectory("graft_arrow_cl").toString
-    val ck = Files.createTempDirectory("graft_arrow_cl_ck").toString
+    val tbl = Session.scratch(spark, "arrow_cl")
+    val ck = Session.scratch(spark, "arrow_cl_ck")
     val src = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     val n0 = src.count()
     src.write.format("graft.sources.ArrowIpcSource").mode("append").save(tbl)
@@ -203,7 +202,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
       (3L, Option.empty[Seq[Option[Float]]]),
       (4L, Option(Seq(Option(7.125f)))))
     val df = rows.toDF("id", "xs")
-    val out = Files.createTempDirectory("graft_arrow_l").toString
+    val out = Session.scratch(spark, "arrow_l")
     df.write.format("graft.sources.ArrowIpcSource").mode("overwrite").save(out)
     val back = spark.read.format("graft.sources.ArrowIpcSource").load(out)
     assert(back.schema("xs").dataType ==

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -36,7 +35,7 @@ class AvroSourceSpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_avro").toString
+    val d = Session.scratch(spark, "avro")
     writeForeignFile(s"$d/part0.avro",
       Seq((1L, "alpha", Some(1.5)), (2L, "beta", None)))
     writeForeignFile(s"$d/part1.avro", Seq((3L, "gamma", Some(-2.25))))
@@ -61,7 +60,7 @@ class AvroSourceSpec extends SparkSpec {
   }
 
   test("DSv2 write path: two-phase commit round-trip with overwrite") {
-    val out = Files.createTempDirectory("graft_avro_w").toString
+    val out = Session.scratch(spark, "avro_w")
     avroDF.repartition(3).write.format("graft.sources.AvroSource")
       .mode("overwrite").save(out)
     avroDF.repartition(2).write.format("graft.sources.AvroSource")
@@ -79,7 +78,7 @@ class AvroSourceSpec extends SparkSpec {
   }
 
   test("append mode adds a generation without clobbering the previous one") {
-    val out = Files.createTempDirectory("graft_avro_a").toString
+    val out = Session.scratch(spark, "avro_a")
     avroDF.write.format("graft.sources.AvroSource").mode("overwrite").save(out)
     avroDF.write.format("graft.sources.AvroSource").mode("append").save(out)
     val n = spark.read.format("graft.sources.AvroSource").load(out).count()
@@ -87,8 +86,8 @@ class AvroSourceSpec extends SparkSpec {
   }
 
   test("time travel and commit-log streaming work on the avro sink too") {
-    val out = Files.createTempDirectory("graft_avro_tt").toString
-    val ck = Files.createTempDirectory("graft_avro_tt_ck").toString
+    val out = Session.scratch(spark, "avro_tt")
+    val ck = Session.scratch(spark, "avro_tt_ck")
     val src = spark.read.format("graft.sources.AvroSource").load(dir)
     val n0 = src.count()
     src.write.format("graft.sources.AvroSource").mode("append").save(out)
@@ -122,7 +121,7 @@ class AvroSourceSpec extends SparkSpec {
   }
 
   test("projecting a column absent from one file names file and column") {
-    val d = Files.createTempDirectory("graft_avro_d").toString
+    val d = Session.scratch(spark, "avro_d")
     // sorts FIRST so schema inference sees the full schema and the drift
     // surfaces in the reader, not at analysis
     writeForeignFile(s"$d/a_ok.avro", Seq((1L, "x", None)))

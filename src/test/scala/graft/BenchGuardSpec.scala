@@ -1,14 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
 
-/** The bench churn guard (r13 verdict #2) — injected-churn unit test, no
-  * Spark session needed: a >3×-band first reading must trigger exactly
-  * one re-measure, keep the best value, and surface the original
-  * reading; in-band, band-less and failed readings pass through with no
-  * re-measure at all.
+/** The bench churn guard (r13 verdict #2) — injected-churn unit test: a
+  * >3×-band first reading must trigger exactly one re-measure, keep the
+  * best value, and surface the original reading; in-band, band-less and
+  * failed readings pass through with no re-measure at all. The session
+  * only lends the band-file tests a scratch dir in its run root.
   */
-class BenchGuardSpec extends AnyFunSuite {
+class BenchGuardSpec extends SparkSpec {
 
   test("injected churn: a 10x-band reading re-measures once and keeps the best") {
     var calls = 0
@@ -84,25 +84,22 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("band file round-trip: tab-separated lines, comments skipped, junk tolerated") {
-    val p = java.nio.file.Files.createTempFile("bands", ".tsv")
-    java.nio.file.Files.writeString(p,
+    val p = Paths.get(Session.scratch(spark, "bands"), "bands.tsv")
+    Files.writeString(p,
       "# sf0.1 clean run\nagg_rollup\t0.97\nagg_trimmed_mean\t1.38\nbroken line\n")
-    try {
-      val bands = Bench.loadBands(p.toString)
-      assert(bands == Map("agg_rollup" -> 0.97, "agg_trimmed_mean" -> 1.38))
-      assert(Bench.loadBands("/nonexistent/bands.tsv").isEmpty)
-    } finally java.nio.file.Files.delete(p): Unit
+    val bands = Bench.loadBands(p.toString)
+    assert(bands == Map("agg_rollup" -> 0.97, "agg_trimmed_mean" -> 1.38))
+    assert(Bench.loadBands("/nonexistent/bands.tsv").isEmpty)
   }
 
   test("band file with non-ASCII header comments still parses (UTF-8 pinned)") {
     // r16 regression: an em-dash in the regenerated header made
     // Source.fromFile throw under a non-UTF-8 default charset and the
     // catch silently disabled the whole guard (bands=∅, canary ratio -1)
-    val p = java.nio.file.Files.createTempFile("bands_utf8", ".tsv")
-    java.nio.file.Files.write(p,
+    val p = Paths.get(Session.scratch(spark, "bands_utf8"), "bands.tsv")
+    Files.write(p,
       "# canary — end_over_start 0.978 ±churn\ntpch_q6\t0.12\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try assert(Bench.loadBands(p.toString) == Map("tpch_q6" -> 0.12))
-    finally java.nio.file.Files.delete(p): Unit
+    assert(Bench.loadBands(p.toString) == Map("tpch_q6" -> 0.12))
   }
 }

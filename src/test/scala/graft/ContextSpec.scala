@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** The Context/GraftDataFrame façade: registration surface, multi-statement
   * SQL, config get/set, plan introspection, and stage cutting (reference
   * parity for `DFRayContext`/`DFRayDataFrame`).
@@ -9,7 +7,7 @@ import java.nio.file.Files
 class ContextSpec extends SparkSpec {
 
   private lazy val ctx = new Context(spark)
-  private val tmp = Files.createTempDirectory("graft_ctx").toString
+  private lazy val tmp = Session.scratch(spark, "ctx")
 
   test("registerParquet + sql round-trips a table") {
     ctx.registerParquet("ctx_nation", s"$sfSmoke/nation.parquet")
@@ -263,7 +261,7 @@ class ContextSpec extends SparkSpec {
     // create/commit runs the real non-file-scheme FileSystem paths.
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[MockObjectStoreFs].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mock_store")
+    val dir = Session.scratch(spark, "mock_store")
     try {
       // resolvePath passes the configured scheme through untouched
       val url = s"mock://bucket$dir/nation"
@@ -280,13 +278,7 @@ class ContextSpec extends SparkSpec {
       assert(ctx.sql(
         "SELECT n_name FROM ctx_mock_scheme WHERE n_nationkey = 3")
         .collect()(0).getString(0).nonEmpty)
-    } finally {
-      conf.unset("fs.mock.impl")
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
+    } finally conf.unset("fs.mock.impl")
   }
 
   test("object-store schemes: local, file: and glob paths pass through") {

@@ -108,76 +108,68 @@ class LayoutOperatorSpec extends SparkSpec {
   }
 
   test("writeClustered bounds both keys per file; random layout bounds neither") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zwrite").toString
-    try {
-      val grid = spark.range(0, 4096).select(
-        (col("id") % 64).as("a"), (col("id") / 64).cast("long").as("b"))
-      ZOrder.writeClustered(grid, "a", "b", s"$dir/z", numFiles = 16)
-      // a deliberately scattered layout: round-robin by id
-      grid.repartition(16).write.mode("overwrite").parquet(s"$dir/rand")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def filesTouching(sub: String, lo: Long, hi: Long): Int =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .count { f =>
-            val r = spark.read.parquet(f.getPath.toString)
-              .agg(min("a"), max("a")).collect()(0)
-            r.getLong(1) >= lo && r.getLong(0) <= hi
-          }
-      // file-footer min/max is what a scan prunes on: a predicate over
-      // ONE eighth of `a`'s range must skip most z-clustered files but
-      // can skip nothing in the scattered layout
-      assert(filesTouching("z", 0, 7) <= 6,
-        "z files do not bound the a dimension")
-      assert(filesTouching("rand", 0, 7) == 16,
-        "baseline unexpectedly clustered — test fixture broken")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = Session.scratch(spark, "zwrite")
+    val grid = spark.range(0, 4096).select(
+      (col("id") % 64).as("a"), (col("id") / 64).cast("long").as("b"))
+    ZOrder.writeClustered(grid, "a", "b", s"$dir/z", numFiles = 16)
+    // a deliberately scattered layout: round-robin by id
+    grid.repartition(16).write.mode("overwrite").parquet(s"$dir/rand")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def filesTouching(sub: String, lo: Long, hi: Long): Int =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .count { f =>
+          val r = spark.read.parquet(f.getPath.toString)
+            .agg(min("a"), max("a")).collect()(0)
+          r.getLong(1) >= lo && r.getLong(0) <= hi
+        }
+    // file-footer min/max is what a scan prunes on: a predicate over
+    // ONE eighth of `a`'s range must skip most z-clustered files but
+    // can skip nothing in the scattered layout
+    assert(filesTouching("z", 0, 7) <= 6,
+      "z files do not bound the a dimension")
+    assert(filesTouching("rand", 0, 7) == 16,
+      "baseline unexpectedly clustered — test fixture broken")
   }
 
   test("compact bin-packs small files to the byte target without a shuffle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    try {
-      val df = spark.range(0, 20000).select(
-        col("id"), md5(col("id").cast("string")).as("payload"))
-      df.repartition(32).write.mode("overwrite").parquet(s"$dir/in")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def files(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      assert(files(s"$dir/in").length == 32)
-      val totalIn = files(s"$dir/in").map(_.getLen).sum
+    val dir = Session.scratch(spark, "compact")
+    val df = spark.range(0, 20000).select(
+      col("id"), md5(col("id").cast("string")).as("payload"))
+    df.repartition(32).write.mode("overwrite").parquet(s"$dir/in")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def files(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    assert(files(s"$dir/in").length == 32)
+    val totalIn = files(s"$dir/in").map(_.getLen).sum
 
-      // generous target -> everything fits one file
-      val nOne = Compact.parquetDir(spark, s"$dir/in", s"$dir/one",
-        targetBytes = 256L * 1024 * 1024)
-      assert(nOne == 1 && files(s"$dir/one").length == 1)
+    // generous target -> everything fits one file
+    val nOne = Compact.parquetDir(spark, s"$dir/in", s"$dir/one",
+      targetBytes = 256L * 1024 * 1024)
+    assert(nOne == 1 && files(s"$dir/one").length == 1)
 
-      // target ~ quarter of the corpus -> a handful of files, each below
-      // target + one input file of slack (greedy packing closes a bin
-      // only after it overflows)
-      val target = totalIn / 4
-      val nFew = Compact.parquetDir(spark, s"$dir/in", s"$dir/few", target)
-      assert(nFew == files(s"$dir/few").length)
-      assert(nFew > 1 && nFew < 32, s"packed 32 -> $nFew")
-      val maxIn = files(s"$dir/in").map(_.getLen).max
-      files(s"$dir/few").foreach(f =>
-        assert(f.getLen <= target + maxIn + (totalIn / 10),
-          s"${f.getPath.getName} overshoots the byte target"))
+    // target ~ quarter of the corpus -> a handful of files, each below
+    // target + one input file of slack (greedy packing closes a bin
+    // only after it overflows)
+    val target = totalIn / 4
+    val nFew = Compact.parquetDir(spark, s"$dir/in", s"$dir/few", target)
+    assert(nFew == files(s"$dir/few").length)
+    assert(nFew > 1 && nFew < 32, s"packed 32 -> $nFew")
+    val maxIn = files(s"$dir/in").map(_.getLen).max
+    files(s"$dir/few").foreach(f =>
+      assert(f.getLen <= target + maxIn + (totalIn / 10),
+        s"${f.getPath.getName} overshoots the byte target"))
 
-      // lossless: same rows back, and conf restored after the rewrite
-      assert(spark.read.parquet(s"$dir/few").except(df).isEmpty &&
-        df.except(spark.read.parquet(s"$dir/few")).isEmpty)
-      assert(spark.conf.get("spark.sql.files.openCostInBytes") != "0")
+    // lossless: same rows back, and conf restored after the rewrite
+    assert(spark.read.parquet(s"$dir/few").except(df).isEmpty &&
+      df.except(spark.read.parquet(s"$dir/few")).isEmpty)
+    assert(spark.conf.get("spark.sql.files.openCostInBytes") != "0")
 
-      // no exchange anywhere in the rewrite's read side
-      val plan = staticPlan(spark.read.parquet(s"$dir/few"))
-      assert(!plan.contains("Exchange"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    // no exchange anywhere in the rewrite's read side
+    val plan = staticPlan(spark.read.parquet(s"$dir/few"))
+    assert(!plan.contains("Exchange"))
   }
 
   test("hilbert clustered write: footer min/max stats prune files a box predicate never reads") {
@@ -190,93 +182,85 @@ class LayoutOperatorSpec extends SparkSpec {
     // footers is exactly what any min/max pruner (Spark's row-group
     // filter, a lakehouse file index) consumes.
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hilbert_skip").toString
-    try {
-      val nFiles = 16
-      val df = spark.range(0, 65536).select(
-        (col("id") % 256).as("x"),
-        (expr("(id * 2654435761) % 256")).as("y"),
-        col("id").as("payload"))
-      Hilbert.writeClustered(df, "x", "y", bits = 8, s"$dir/clustered", nFiles)
-      df.repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$dir/roundrobin")
-      // per-file [min, max] of both keys straight from the footers
-      def boxes(p: String): Seq[((Long, Long), (Long, Long))] =
-        new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f.toString),
-                spark.sparkContext.hadoopConfiguration))
-            try {
-              def mm(name: String): (Long, Long) = {
-                val stats = reader.getFooter.getBlocks.asScala.map(
-                  _.getColumns.asScala.find(_.getPath.toDotString == name)
-                    .get.getStatistics)
-                (stats.map(_.genericGetMin.asInstanceOf[Long]).min,
-                  stats.map(_.genericGetMax.asInstanceOf[Long]).max)
-              }
-              (mm("x"), mm("y"))
-            } finally reader.close()
-          }
-      // corner box x<=31 AND y<=31: 1/64 of the grid area
-      def intersecting(p: String): Int = boxes(p).count {
-        case ((xmin, _), (ymin, _)) => xmin <= 31 && ymin <= 31
-      }
-      val clustered = intersecting(s"$dir/clustered")
-      val rr = intersecting(s"$dir/roundrobin")
-      assert(boxes(s"$dir/clustered").size == nFiles)
-      assert(rr == nFiles,
-        s"round-robin control should have zero skipping, got $rr/$nFiles")
-      // the corner box is a contiguous stretch of the curve: at most a
-      // couple of the 16 h-range files may touch it
-      assert(clustered <= 3,
-        s"clustered layout prunes too little: $clustered/$nFiles files intersect")
-      // lossless: the clustered copy holds the same rows
-      assert(spark.read.parquet(s"$dir/clustered").except(df).isEmpty &&
-        df.except(spark.read.parquet(s"$dir/clustered")).isEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val dir = Session.scratch(spark, "hilbert_skip")
+    val nFiles = 16
+    val df = spark.range(0, 65536).select(
+      (col("id") % 256).as("x"),
+      (expr("(id * 2654435761) % 256")).as("y"),
+      col("id").as("payload"))
+    Hilbert.writeClustered(df, "x", "y", bits = 8, s"$dir/clustered", nFiles)
+    df.repartition(nFiles)
+      .write.mode("overwrite").parquet(s"$dir/roundrobin")
+    // per-file [min, max] of both keys straight from the footers
+    def boxes(p: String): Seq[((Long, Long), (Long, Long))] =
+      new java.io.File(p).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.toString),
+              spark.sparkContext.hadoopConfiguration))
+          try {
+            def mm(name: String): (Long, Long) = {
+              val stats = reader.getFooter.getBlocks.asScala.map(
+                _.getColumns.asScala.find(_.getPath.toDotString == name)
+                  .get.getStatistics)
+              (stats.map(_.genericGetMin.asInstanceOf[Long]).min,
+                stats.map(_.genericGetMax.asInstanceOf[Long]).max)
+            }
+            (mm("x"), mm("y"))
+          } finally reader.close()
+        }
+    // corner box x<=31 AND y<=31: 1/64 of the grid area
+    def intersecting(p: String): Int = boxes(p).count {
+      case ((xmin, _), (ymin, _)) => xmin <= 31 && ymin <= 31
     }
+    val clustered = intersecting(s"$dir/clustered")
+    val rr = intersecting(s"$dir/roundrobin")
+    assert(boxes(s"$dir/clustered").size == nFiles)
+    assert(rr == nFiles,
+      s"round-robin control should have zero skipping, got $rr/$nFiles")
+    // the corner box is a contiguous stretch of the curve: at most a
+    // couple of the 16 h-range files may touch it
+    assert(clustered <= 3,
+      s"clustered layout prunes too little: $clustered/$nFiles files intersect")
+    // lossless: the clustered copy holds the same rows
+    assert(spark.read.parquet(s"$dir/clustered").except(df).isEmpty &&
+      df.except(spark.read.parquet(s"$dir/clustered")).isEmpty)
   }
 
   test("parquet bloom write: footer carries the bloom, membership answers") {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+    val dir = Session.scratch(spark, "bloom")
+    Seq.tabulate(5000)(i => (i.toLong * 17, s"v$i"))
+      .toDF("k", "v")
+      .coalesce(1).write.mode("overwrite")
+      .option("parquet.bloom.filter.enabled#k", "true")
+      .option("parquet.bloom.filter.expected.ndv#k", "5000")
+      .parquet(dir)
+    val file = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString),
+        spark.sparkContext.hadoopConfiguration))
     try {
-      Seq.tabulate(5000)(i => (i.toLong * 17, s"v$i"))
-        .toDF("k", "v")
-        .coalesce(1).write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#k", "true")
-        .option("parquet.bloom.filter.expected.ndv#k", "5000")
-        .parquet(dir)
-      val file = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file.toString),
-          spark.sparkContext.hadoopConfiguration))
-      try {
-        val cols = reader.getFooter.getBlocks.get(0).getColumns.asScala
-        val kChunk = cols.find(_.getPath.toDotString == "k").get
-        // the bloom rides in the footer for the enabled column only
-        assert(kChunk.getBloomFilterOffset > 0,
-          "no bloom filter written for the enabled column")
-        assert(cols.find(_.getPath.toDotString == "v").get
-          .getBloomFilterOffset <= 0,
-          "bloom written for a column it was not enabled on")
-        val bf = reader.readBloomFilter(kChunk)
-        // every present key answers yes (blooms have no false negatives)
-        Seq(0L, 17L, 4999L * 17).foreach(k =>
-          assert(bf.findHash(bf.hash(k.asInstanceOf[Object])),
-            s"present key $k missing from the bloom"))
-        // absent keys mostly answer no — that miss IS the row-group skip
-        val misses = (1 to 1000)
-          .count(i => !bf.findHash(bf.hash((i.toLong * 17 + 1).asInstanceOf[Object])))
-        assert(misses > 950, s"bloom rejects only $misses/1000 absent keys")
-      } finally reader.close()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+      val cols = reader.getFooter.getBlocks.get(0).getColumns.asScala
+      val kChunk = cols.find(_.getPath.toDotString == "k").get
+      // the bloom rides in the footer for the enabled column only
+      assert(kChunk.getBloomFilterOffset > 0,
+        "no bloom filter written for the enabled column")
+      assert(cols.find(_.getPath.toDotString == "v").get
+        .getBloomFilterOffset <= 0,
+        "bloom written for a column it was not enabled on")
+      val bf = reader.readBloomFilter(kChunk)
+      // every present key answers yes (blooms have no false negatives)
+      Seq(0L, 17L, 4999L * 17).foreach(k =>
+        assert(bf.findHash(bf.hash(k.asInstanceOf[Object])),
+          s"present key $k missing from the bloom"))
+      // absent keys mostly answer no — that miss IS the row-group skip
+      val misses = (1 to 1000)
+        .count(i => !bf.findHash(bf.hash((i.toLong * 17 + 1).asInstanceOf[Object])))
+      assert(misses > 950, s"bloom rejects only $misses/1000 absent keys")
+    } finally reader.close()
   }
 }

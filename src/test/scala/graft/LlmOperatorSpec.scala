@@ -269,7 +269,7 @@ class LlmOperatorSpec extends SparkSpec {
     val pairs = Seq((2L, 1L), (2L, 3L), (9L, 7L),
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L))
       .toDF("doc_a", "doc_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = Session.scratch(spark, "cc_ckpt")
     val clustered = Dedup.dupClusters(pairs, checkpointDir = Some(dir))
     val out = clustered.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L,

@@ -255,28 +255,21 @@ class PlanShapeSpec extends SparkSpec {
     // must prune fact PARTITIONS at runtime (skip whole directories, not
     // just rows) — at 100 TB the difference between listing 3 partitions
     // and scanning them all
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    try {
-      Tables.load(spark, sfBench, "orders")
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
-      val fact = spark.read.parquet(dir)
-      // the dim filter sits on a NON-key column, so static constraint
-      // propagation cannot pre-prune the fact side — only the runtime
-      // subquery over the filtered dim can supply the partition list
-      val dim = Tables.load(spark, sfBench, "orders")
-        .select("o_orderstatus", "o_orderpriority").distinct()
-        .where("o_orderpriority = '1-URGENT'")
-      val q = fact.join(dim, Seq("o_orderstatus"))
-        .groupBy("o_orderstatus").count()
-      val plan = staticPlan(q)
-      assert(plan.toLowerCase.contains("dynamicpruning"),
-        s"no dynamic partition pruning on the partitioned fact scan:\n$plan")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = Session.scratch(spark, "dpp")
+    Tables.load(spark, sfBench, "orders")
+      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
+    val fact = spark.read.parquet(dir)
+    // the dim filter sits on a NON-key column, so static constraint
+    // propagation cannot pre-prune the fact side — only the runtime
+    // subquery over the filtered dim can supply the partition list
+    val dim = Tables.load(spark, sfBench, "orders")
+      .select("o_orderstatus", "o_orderpriority").distinct()
+      .where("o_orderpriority = '1-URGENT'")
+    val q = fact.join(dim, Seq("o_orderstatus"))
+      .groupBy("o_orderstatus").count()
+    val plan = staticPlan(q)
+    assert(plan.toLowerCase.contains("dynamicpruning"),
+      s"no dynamic partition pruning on the partitioned fact scan:\n$plan")
   }
 
   test("cached relation is reused by later consumers (InMemoryTableScan)") {

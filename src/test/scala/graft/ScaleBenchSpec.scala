@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** ScaleBench.stage produces the fixture the SF1 trajectory numbers rest
   * on — it must actually be a consistent scaled TPC-H world, or the
@@ -9,7 +8,7 @@ import java.nio.file.Files
 class ScaleBenchSpec extends SparkSpec {
 
   private lazy val out: String = {
-    val d = Files.createTempDirectory("graft_scalebench_t").toString
+    val d = Session.scratch(spark, "scalebench_t")
     ScaleBench.stage(spark, sfSmoke, d, factor = 3)
     d
   }

@@ -73,23 +73,16 @@ class StreamingSpec extends SparkSpec {
     val batchEvents = spark.table("events")
       .select("ts", "user_id", "event_type", "value")
     // stage the fixture as a "landing directory" the stream tails
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    try {
-      batchEvents.write.mode("overwrite").parquet(dir)
-      val stream = Streams.fromParquet(spark, dir, batchEvents.schema)
-      Streams.runToMemory(
-        Streams.windowedCounts(stream), "evt_stream_agg", OutputMode.Complete())
-      val streamed = spark.table("evt_stream_agg")
-        .orderBy("window_start", "event_type").collect().toSeq
-      val batch = Streams.windowedCounts(batchEvents)
-        .orderBy("window_start", "event_type").collect().toSeq
-      assert(streamed.nonEmpty && streamed == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = Session.scratch(spark, "stream")
+    batchEvents.write.mode("overwrite").parquet(dir)
+    val stream = Streams.fromParquet(spark, dir, batchEvents.schema)
+    Streams.runToMemory(
+      Streams.windowedCounts(stream), "evt_stream_agg", OutputMode.Complete())
+    val streamed = spark.table("evt_stream_agg")
+      .orderBy("window_start", "event_type").collect().toSeq
+    val batch = Streams.windowedCounts(batchEvents)
+      .orderBy("window_start", "event_type").collect().toSeq
+    assert(streamed.nonEmpty && streamed == batch)
   }
 
   test("flatMapGroupsWithState emits only when the running max changes") {
@@ -238,31 +231,26 @@ class StreamingSpec extends SparkSpec {
 
   test("file sink's manifest makes the batch read ignore orphan files") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_filesink").toString
-    try {
-      val rows = spark.range(0, 100)
-        .select(expr("timestamp_micros(id * 1000000)").as("ts"),
-          col("id").as("user_id"))
-      rows.write.mode("overwrite").parquet(s"$root/in")
-      val stream = Streams.fromParquet(spark, s"$root/in", rows.schema)
-      Streams.runToParquet(stream, s"$root/out", s"$root/ck")
-      assert(new java.io.File(s"$root/out/_spark_metadata").exists(),
-        "sink commit log missing")
-      assert(spark.read.parquet(s"$root/out").count() == 100)
-      // simulate a crashed batch's orphan: a valid parquet file in the
-      // directory but absent from the manifest — exactly-once means the
-      // batch reader must NOT see its rows
-      rows.limit(7).coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/orphan")
-      val part = new java.io.File(s"$root/orphan").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$root/out/part-orphan.parquet"))
-      assert(spark.read.parquet(s"$root/out").count() == 100,
-        "batch read leaked uncommitted orphan rows")
-    } finally {
-      graft.Tables.deleteRecursively(new java.io.File(root))
-    }
+    val root = Session.scratch(spark, "filesink")
+    val rows = spark.range(0, 100)
+      .select(expr("timestamp_micros(id * 1000000)").as("ts"),
+        col("id").as("user_id"))
+    rows.write.mode("overwrite").parquet(s"$root/in")
+    val stream = Streams.fromParquet(spark, s"$root/in", rows.schema)
+    Streams.runToParquet(stream, s"$root/out", s"$root/ck")
+    assert(new java.io.File(s"$root/out/_spark_metadata").exists(),
+      "sink commit log missing")
+    assert(spark.read.parquet(s"$root/out").count() == 100)
+    // simulate a crashed batch's orphan: a valid parquet file in the
+    // directory but absent from the manifest — exactly-once means the
+    // batch reader must NOT see its rows
+    rows.limit(7).coalesce(1).write.mode("overwrite")
+      .parquet(s"$root/orphan")
+    val part = new java.io.File(s"$root/orphan").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$root/out/part-orphan.parquet"))
+    assert(spark.read.parquet(s"$root/out").count() == 100,
+      "batch read leaked uncommitted orphan rows")
   }
 }

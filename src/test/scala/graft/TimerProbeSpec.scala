@@ -28,7 +28,7 @@ class TimerProbeSpec extends SparkSpec {
       "t", 1.0)).toDF("ts", "user_id", "event_type", "value")
 
   test("watermark chain: arm at wm+1 fires every key, incl. the no-data batch") {
-    val dir = java.nio.file.Files.createTempDirectory("timer_probe_wm").toString
+    val dir = Session.scratch(spark, "timer_probe_wm")
     val t0 = System.currentTimeMillis() - 600000
     graft.queries.Io.stageOrderedFile(dir, ev(1, 0), "f0.parquet", t0)
     graft.queries.Io.stageOrderedFile(dir, ev(2, 6), "f1.parquet", t0 + 1000)
@@ -56,7 +56,7 @@ class TimerProbeSpec extends SparkSpec {
   }
 
   test("an already-expired arm fires at the end of its own batch") {
-    val dir = java.nio.file.Files.createTempDirectory("timer_probe_sf").toString
+    val dir = Session.scratch(spark, "timer_probe_sf")
     val t0 = System.currentTimeMillis() - 600000
     // f0 moves the watermark to 18:00; f1's key 2 (ts 06:00, expiry
     // 07:00 << wm 18:00) arms an ALREADY-EXPIRED timer during b1 — and
@@ -83,7 +83,7 @@ class TimerProbeSpec extends SparkSpec {
   }
 
   test("late filter: key-split deep history is dropped before the processor") {
-    val dir = java.nio.file.Files.createTempDirectory("timer_probe_lf").toString
+    val dir = Session.scratch(spark, "timer_probe_lf")
     val t0 = System.currentTimeMillis() - 600000
     // f0 moves the watermark to 18:00 (0s delay); f1 carries key 2's
     // whole history at 00:00/01:00 — older than the late-events

@@ -50,8 +50,8 @@ class CommitLogGenerationSpec extends SparkSpec {
   }
 
   test("resume across truncate+rewrite fails loudly, never drops commits") {
-    val tbl = Files.createTempDirectory("graft_gen_tr").toString
-    val ck = Files.createTempDirectory("graft_gen_tr_ck").toString
+    val tbl = graft.Session.scratch(spark, "gen_tr")
+    val ck = graft.Session.scratch(spark, "gen_tr_ck")
     val n0 = writeOnce(tbl, "append")
     writeOnce(tbl, "append")
     assert(drain(tbl, ck) == Seq((0L, n0), (1L, n0)))
@@ -81,8 +81,8 @@ class CommitLogGenerationSpec extends SparkSpec {
   }
 
   test("admission-capped offsets on legacy manifests stay check-skipped") {
-    val tbl = Files.createTempDirectory("graft_gen_lg").toString
-    val ck = Files.createTempDirectory("graft_gen_lg_ck").toString
+    val tbl = graft.Session.scratch(spark, "gen_lg")
+    val ck = graft.Session.scratch(spark, "gen_lg_ck")
     val n0 = writeOnce(tbl, "append")
     writeOnce(tbl, "append")
     stripGeneration(tbl, 1); stripGeneration(tbl, 2)
