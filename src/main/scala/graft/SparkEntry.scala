@@ -3,45 +3,33 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` maps every implemented operator from SURVEY.md §2 to a function
-  * (spark, sfDir) => DataFrame; `oracleSql` carries the DuckDB-equivalent SQL
-  * for the driver's differential check (the role the reference's
-  * `LocalValidator` plays, reference `src/util.rs:413-484`).
+  * `entries` is every declared [[graft.queries.Entry]]: the operators from
+  * SURVEY.md §2, the LLM-pipeline extension operators (graft.llm) and the
+  * source/sink/session surface (Io). `queries` maps each name to its
+  * (spark, sfDir) => DataFrame; `oracleSql` maps it to the DuckDB SQL of the
+  * driver's differential check.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Tpch.queries("tpch_q1")(spark, "/root/testdata/sf0.001")
+    queries("tpch_q1")(spark, "/root/testdata/sf0.001")
 
-  private def fromSql(m: Map[String, String]): Map[String, (SparkSession, String) => DataFrame] =
-    m.map { case (name, text) =>
-      name -> ((spark: SparkSession, dir: String) => {
-        Tables.register(spark, dir); spark.sql(text)
-      })
-    }
+  /** `entries`, after checking that no name is declared twice. */
+  def registry(entries: Seq[Entry]): Seq[Entry] = {
+    val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"entry names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    entries
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2 + the LLM-pipeline
-    * extension operators (graft.llm) + source/sink/session surface (Io).
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Tpch.queries ++
-      fromSql(Windows.sql) ++
-      fromSql(Relational.sql) ++ fromSql(Relational.sparkSql) ++
-      Llm.queries ++
-      Io.queries ++
-      Ops.queries
+  val entries: Seq[Entry] = registry(
+    Tpch.entries ++ Windows.entries ++ Relational.entries ++
+      Llm.entries ++ Io.entries ++ Ops.entries)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
-    */
-  def oracleSql: Map[String, String] =
-    Tpch.oracles ++
-      Windows.sql ++
-      Relational.sql ++ Relational.oracleOnlySql ++
-      Llm.oracles ++
-      Io.oracles ++
-      Ops.oracles
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
+
+  val oracleSql: Map[String, String] = entries.map(e => e.name -> e.oracle).toMap
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference `src/context.rs:57-67`) and its TPC-H harness table loop
   * (reference `tpch/tpcbench.py:46-55`).
   *
-  * Scale note: views are lazy — registering reads only parquet footers.
-  * Filters/projections in queries reach the scan via Catalyst pushdown,
-  * so the same registration works unchanged at 100 TB (directory paths
+  * Scale note: the views are lazy, but registering infers each table's
+  * schema, one Spark job per table. Filters/projections in queries reach
+  * the scan via Catalyst pushdown, so the same registration works
+  * unchanged at 100 TB (directory paths
   * instead of single files; Spark's FileSourceScanExec handles splits,
   * partition pruning and predicate pushdown).
   */

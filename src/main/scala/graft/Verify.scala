@@ -1,9 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.Entry
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The two phases of the dump: (run on a 4-thread pool, then run one at a
+    * time). r16 verdict #1: the serial full dump was ~35 min, too close to
+    * the driver's budget. Spark schedules concurrent jobs fine (guide §2.6);
+    * what may not overlap is an entry that mutates session state
+    * ([[Entry.mutatesSession]]). Each entry writes its own output
+    * directory, so the dump does not depend on completion order.
+    */
+  def phases(entries: Seq[Entry]): (Seq[Entry], Seq[Entry]) =
+    entries.partition(!_.mutatesSession)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args: run a SUBSET of queries (r16: the full dump
@@ -14,48 +25,32 @@ object Verify {
     val missing = names.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
     val selected =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(names.contains).toMap
+      if (names.isEmpty) SparkEntry.entries
+      else SparkEntry.entries.filter(e => names.contains(e.name))
     val spark = Session.local("graft-verify")
     Tables.register(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    def dump(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val ok = new java.util.concurrent.atomic.AtomicInteger
+    def dump(e: Entry): Unit =
+      try {
+        e.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${e.name}")
+        ok.incrementAndGet()
+      } catch { case t: Throwable =>
+        System.err.println(s"[verify] ${e.name} failed: ${t.getMessage}")
       }
-    // Two-phase execution (r16 verdict #1: the serial full dump was ~35
-    // min — too close to the driver's budget; the oracle replay never ran
-    // that round). Spark schedules concurrent jobs fine (guide §2.6); what
-    // is NOT safe to overlap is anything that mutates SESSION state, so:
-    //   phase A — every non-Io entry through a small thread pool. These
-    //     paths only read the session (audited: no conf.set, no catalog
-    //     DDL, per-entry-unique temp view names; Tables.register is
-    //     idempotent and SessionCatalog temp-view ops are synchronized).
-    //   phase B — the Io-wired entries SERIALLY: streaming replays set
-    //     spark.sql.shuffle.partitions + the RocksDB provider around each
-    //     run, compaction tunes scan-split confs, bucketed_join does
-    //     saveAsTable DDL — all session-global, so they never overlap
-    //     with anything.
-    // Each entry writes its own output directory, so results are byte-
-    // identical to the serial dump regardless of completion order.
-    val ioNames = graft.queries.Io.queries.keySet
-    val (ioEntries, poolEntries) =
-      selected.toSeq.partition { case (n, _) => ioNames.contains(n) }
-    if (poolEntries.nonEmpty) {
+    val (pooled, serial) = phases(selected)
+    val poolS = Bench.time {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.sequence(poolEntries.map { case (name, fn) =>
-          Future(dump(name, fn))
-        }), Duration.Inf): Unit
+      try Await.result(Future.traverse(pooled)(e => Future(dump(e))), Duration.Inf)
       finally pool.shutdown()
     }
-    ioEntries.foreach { case (name, fn) => dump(name, fn) }
+    val serialS = Bench.time(serial.foreach(dump))
+    System.err.println(f"[verify] ${ok.get} ok, ${selected.size - ok.get} failed; " +
+      f"pool $poolS%.1f s (${pooled.size}), serial $serialS%.1f s (${serial.size})")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,0 +1,36 @@
+package graft.queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
+
+/** One declared query: how Spark runs it over a fixture dir, and the DuckDB
+  * SQL that checks its rows (the role the reference's `LocalValidator`
+  * plays, reference `src/util.rs:413-484`). Alias output columns
+  * identically on both sides and end both with a total ORDER BY.
+  *
+  * @param mutatesSession set when `run` reaches state shared by every query
+  *   of the session or its context, directly or through a helper: a SQL
+  *   conf (the `Streams.run*` helpers set `spark.sql.shuffle.partitions`,
+  *   `Io.withRocksDbProvider` the state store, `Compact` the scan-split
+  *   confs), or a catalog table or function. `graft.Verify` runs such
+  *   entries one at a time after the concurrent pool. Temp views with
+  *   entry-unique names and files under the entry's own directory do not
+  *   count.
+  */
+final case class Entry(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: String,
+    mutatesSession: Boolean = false)
+
+object Entry {
+
+  /** An entry that runs `text` in Spark and the same text in DuckDB. */
+  def sql(name: String, text: String): Entry = sql(name, text, text)
+
+  /** An entry whose Spark and DuckDB spellings differ. */
+  def sql(name: String, text: String, oracle: String): Entry =
+    Entry(name, (spark, dir) => {
+      Tables.register(spark, dir); spark.sql(text)
+    }, oracle)
+}

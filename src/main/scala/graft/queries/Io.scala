@@ -252,7 +252,7 @@ object Io {
     Tables.register(s, d); s.table(name)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // ---- sources / sinks -------------------------------------------------
     // dirty-ingest semantics: every c_custkey % 50 == 0 row lands with a
     // non-numeric key field; PERMISSIVE mode must null the typed columns
@@ -260,7 +260,7 @@ object Io {
     // clean rows exact — the landing-zone contract a 100 TB ingest needs
     // before it can quarantine bad shards. The oracle recomputes both
     // populations from the fixture
-    "src_csv_malformed" -> ((s, d) => {
+    Entry("src_csv_malformed", (s, d) => {
       val cust = t(s, d, "customer")
       val lines = cust.select(expr(
         "concat(CASE WHEN c_custkey % 50 = 0 THEN 'garbage' " +
@@ -285,9 +285,17 @@ object Io {
           expr("CAST(SUM(CASE WHEN _bad IS NULL THEN CAST(c_acctbal AS DECIMAL(12,2)) END) AS DOUBLE)")
             .as("sum_clean_bal"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      """SELECT c_mktsegment,
+        |       count(*) AS n_rows,
+        |       COUNT(CASE WHEN c_custkey % 50 <> 0 THEN 1 END) AS n_keys_parsed,
+        |       COUNT(CASE WHEN c_custkey % 50 = 0 THEN 1 END) AS n_corrupt,
+        |       CAST(SUM(CASE WHEN c_custkey % 50 <> 0
+        |                     THEN CAST(c_acctbal AS DECIMAL(12,2)) END) AS DOUBLE)
+        |         AS sum_clean_bal
+        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
-    "src_csv_roundtrip" -> ((s, d) => {
+    Entry("src_csv_roundtrip", (s, d) => {
       val orders = t(s, d, "orders")
       val p = s"${base(s, d)}/orders_csv"
       orders.repartition(4).write.mode("overwrite").option("header", "true").csv(p)
@@ -297,7 +305,11 @@ object Io {
           expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_tp"),
           expr("CAST(MIN(o_orderdate) AS DATE)").as("first_date"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp,
+        |       CAST(MIN(o_orderdate) AS DATE) AS first_date
+        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
 
     // hidden file-metadata columns: Spark's _metadata struct exposes the
     // scan's own file name and PHYSICAL row index — the lineage /
@@ -305,7 +317,7 @@ object Io {
     // oracle predicts the physical index independently: the fixture
     // writer emits documents in doc_id order (invariant checked across
     // all three SFs with DuckDB file_row_number), so row_index == doc_id
-    "src_metadata_cols" -> ((s, d) => {
+    Entry("src_metadata_cols", (s, d) => {
       val md = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"),
           col("_metadata.file_name").as("file_name"),
@@ -324,9 +336,15 @@ object Io {
           "file - row_index invariant broken') IS NULL"))
         .drop("n_files")
         .orderBy("doc_id")
-    }),
+    },
+      // the physical index predicted from the fixture writer's doc_id
+      // order (invariant verified with DuckDB file_row_number at every SF)
+      """
+      SELECT doc_id, 'documents.parquet' AS file_name,
+             CAST(doc_id AS BIGINT) AS row_index
+      FROM documents WHERE doc_id < 100 ORDER BY doc_id"""),
 
-    "src_ndjson_roundtrip" -> ((s, d) => {
+    Entry("src_ndjson_roundtrip", (s, d) => {
       val customer = t(s, d, "customer")
       val p = s"${base(s, d)}/customer_json"
       customer.repartition(3).write.mode("overwrite").json(p)
@@ -336,12 +354,16 @@ object Io {
           expr("CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)").as("sum_bal"),
           min("c_name").as("first_name"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      """SELECT c_mktsegment, count(*) AS n_cust,
+        |       CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal,
+        |       min(c_name) AS first_name
+        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
     // Arrow IPC round-trip through the custom DataSource V2 (read+write):
     // two-phase-commit distributed write, multi-file scan, pruned read —
     // oracle over the original parquet proves value fidelity end to end
-    "src_arrow_roundtrip" -> ((s, d) => {
+    Entry("src_arrow_roundtrip", (s, d) => {
       val sup = t(s, d, "supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey", "s_name",
         "CAST(s_nationkey AS BIGINT) AS s_nationkey",
@@ -355,7 +377,11 @@ object Io {
           expr("CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)").as("sum_bal"),
           min("s_name").as("first_name"))
         .orderBy("s_nationkey")
-    }),
+    },
+      """SELECT CAST(s_nationkey AS BIGINT) AS s_nationkey, count(*) AS n_supp,
+        |       CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal,
+        |       min(s_name) AS first_name
+        |FROM supplier GROUP BY 1 ORDER BY s_nationkey""".stripMargin),
 
     // ANN INDEX AS TABLE LAYOUT: the IVF assignment becomes a
     // partitionBy(centroid_id) parquet layout, and a query probes ONE
@@ -364,7 +390,7 @@ object Io {
     // serving-side half of the IVF design the in-memory llm_ivf_topk
     // entry computes inline. The oracle replays assignment for the
     // whole corpus and ranks within the probe's cluster
-    "sink_ivf_partitioned" -> ((s, d) => {
+    Entry("sink_ivf_partitioned", (s, d) => {
       import graft.llm.Ivf
       val e = Tables.load(s, d, "embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
@@ -390,7 +416,31 @@ object Io {
         .select(col("rank"), col("vec_id"), lit(pc).as("centroid_id"),
           col("cos"))
         .orderBy("rank")
-    }),
+    },
+      // assignment replayed corpus-wide (raw-cosine argmax, min-cid ties
+      // — the Ivf.assign contract), then ranked within the probe's cluster
+      s"""WITH c AS (SELECT CAST(vec_id AS INT) AS cid, embedding AS ce
+         |           FROM embeddings WHERE vec_id IN (3, 17, 31, 59)),
+         |a AS (SELECT v.vec_id, c.cid,
+         |             ${Llm.duckCosineRaw("v.embedding", "c.ce")} AS cos
+         |      FROM embeddings v CROSS JOIN c),
+         |mx AS (SELECT vec_id, MAX(cos) AS m FROM a GROUP BY vec_id),
+         |asg AS (SELECT a.vec_id, MIN(a.cid) AS cid
+         |        FROM a JOIN mx ON a.vec_id = mx.vec_id AND a.cos = mx.m
+         |        GROUP BY a.vec_id),
+         |pc AS (SELECT cid FROM asg WHERE vec_id = 7),
+         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 7),
+         |scored AS (SELECT e.vec_id,
+         |                  ${Llm.duckCosine("e.embedding", "qe")} AS cos
+         |           FROM asg JOIN embeddings e ON e.vec_id = asg.vec_id,
+         |                pc, q
+         |           WHERE asg.cid = pc.cid AND asg.vec_id <> 7),
+         |r AS (SELECT vec_id, cos,
+         |             row_number() OVER (ORDER BY cos DESC, vec_id) AS rank
+         |      FROM scored)
+         |SELECT CAST(rank AS INT) AS rank, vec_id,
+         |       (SELECT CAST(cid AS INT) FROM pc) AS centroid_id, cos
+         |FROM r WHERE rank <= 3 ORDER BY rank""".stripMargin),
 
     // IVF-PQ SERVING: the full composition a 100 TB ANN serving tier
     // runs — PQ codes stored INSIDE the partitionBy(centroid_id) layout
@@ -400,7 +450,7 @@ object Io {
     // driver-side from the probe vector (serving-request-sized state by
     // definition), so the shard scan is pure map work: no join carries
     // the probe, no NLJ anywhere — plan-gated in PlanShapeSpec
-    "llm_ivfpq_serving" -> ((s, d) => {
+    Entry("llm_ivfpq_serving", (s, d) => {
       import graft.llm.{Ivf, Similarity}
       val e = t(s, d, "embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
@@ -432,12 +482,34 @@ object Io {
         .select(col("rank"), col("cand_id"), lit(pc).as("centroid_id"),
           expr("CAST(ROUND(dist_raw, 6) AS DOUBLE)").as("dist"))
         .orderBy("rank")
-    }),
+    },
+      // PQ codes + assignment replayed corpus-wide; the probe's ADC
+      // distance is its per-subspace distance to each candidate's assigned
+      // centroid, folded in subspace order (the llm_pq_topk fold), ranked
+      // within the probe's own cluster only
+      s"""WITH ${Llm.pqCodeCtes},
+         |$ivfOracleCtes,
+         |pdist AS (SELECT m, j, d FROM pd WHERE vec_id = 7),
+         |adc AS (SELECT cq.vec_id AS cand_id,
+         |               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |                 list(pdist.d ORDER BY cq.m)), (acc, v) -> acc + v) AS dist
+         |        FROM pqcodes cq
+         |        JOIN asg a ON a.vec_id = cq.vec_id
+         |        JOIN pdist ON pdist.m = cq.m AND pdist.j = cq.code, pc
+         |        WHERE a.cid = pc.cid AND cq.vec_id <> 7
+         |        GROUP BY cq.vec_id),
+         |r AS (SELECT cand_id, dist,
+         |             row_number() OVER (ORDER BY dist, cand_id) AS rank
+         |      FROM adc)
+         |SELECT CAST(rank AS INT) AS rank, cand_id,
+         |       (SELECT CAST(cid AS INT) FROM pc) AS centroid_id,
+         |       CAST(ROUND(dist, 6) AS DOUBLE) AS dist
+         |FROM r WHERE rank <= 3 ORDER BY rank""".stripMargin),
 
     // the serving path's quality row: recall@3 of the IVF-PQ shard scan
     // against the exact full-corpus cosine top-3 — the number an ANN
     // deployment publishes next to its latency
-    "llm_ivfpq_recall" -> ((s, d) => {
+    Entry("llm_ivfpq_recall", (s, d) => {
       import graft.llm.{Ivf, Similarity}
       val e = t(s, d, "embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
@@ -465,14 +537,42 @@ object Io {
         .orderBy(col("dist_raw").asc, col("cand_id")).limit(3)
       Similarity.annRecall(Similarity.bruteForceTopK(probe, e, 3), approx)
         .orderBy("probe_id")
-    }),
+    },
+      // the same ADC shard scan vs the exact full-corpus cosine top-3
+      s"""WITH ${Llm.pqCodeCtes},
+         |$ivfOracleCtes,
+         |pdist AS (SELECT m, j, d FROM pd WHERE vec_id = 7),
+         |adc AS (SELECT cq.vec_id AS cand_id,
+         |               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |                 list(pdist.d ORDER BY cq.m)), (acc, v) -> acc + v) AS dist
+         |        FROM pqcodes cq
+         |        JOIN asg a ON a.vec_id = cq.vec_id
+         |        JOIN pdist ON pdist.m = cq.m AND pdist.j = cq.code, pc
+         |        WHERE a.cid = pc.cid AND cq.vec_id <> 7
+         |        GROUP BY cq.vec_id),
+         |ap AS (SELECT cand_id FROM (
+         |         SELECT cand_id, row_number() OVER (ORDER BY dist, cand_id) AS rnk
+         |         FROM adc) WHERE rnk <= 3),
+         |ex AS (SELECT cand_id FROM (
+         |         SELECT e.vec_id AS cand_id, row_number() OVER (
+         |           ORDER BY ${Llm.duckCosine("e.embedding", "qe")} DESC,
+         |                    e.vec_id) AS rnk
+         |         FROM embeddings e, q WHERE e.vec_id <> 7) WHERE rnk <= 3)
+         |SELECT CAST(7 AS BIGINT) AS probe_id,
+         |       CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
+         |       CAST((SELECT count(*) FROM ex JOIN ap USING (cand_id))
+         |            AS BIGINT) AS n_hit,
+         |       CAST(ROUND(
+         |         CAST((SELECT count(*) FROM ex JOIN ap USING (cand_id)) AS DOUBLE)
+         |         / NULLIF((SELECT count(*) FROM ex), 0), 6) AS DOUBLE) AS recall
+         |""".stripMargin),
 
     // MULTI-PROBE IVF: the nprobe/recall frontier over the SAME
     // partition-pruned layout — nprobe shards selected with an IN on the
     // partition column (plan-gated: the scan's PartitionFilters carry the
     // probed centroid set), exact cosine within the probed shards,
     // recall@5 against the exact full-corpus top-5 per nprobe
-    "llm_ivf_nprobe" -> ((s, d) => {
+    Entry("llm_ivf_nprobe", (s, d) => {
       import graft.llm.{Ivf, Similarity}
       val e = t(s, d, "embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
@@ -503,7 +603,37 @@ object Io {
       }.reduce(_ unionByName _)
         .select("nprobe", "probe_id", "n_exact", "n_hit", "recall")
         .orderBy("nprobe")
-    }),
+    },
+      // the nprobe sweep: probe-side centroid ranking (raw cosine, cid
+      // ties), per-nprobe candidates from the top-nprobe clusters, exact
+      // rounded-cosine top-5 within, recall vs the full-corpus top-5
+      s"""WITH $ivfOracleCtes,
+         |pr AS (SELECT cid, row_number() OVER (
+         |         ORDER BY ${Llm.duckCosineRaw("c.ce", "qe")} DESC, c.cid) AS rnk
+         |       FROM cent c, q),
+         |np(nprobe) AS (VALUES (1), (2), (4)),
+         |scored AS (SELECT a.vec_id AS cand_id, a.cid,
+         |                  ${Llm.duckCosine("e.embedding", "qe")} AS cos
+         |           FROM asg a JOIN embeddings e ON e.vec_id = a.vec_id, q
+         |           WHERE a.vec_id <> 7),
+         |ap AS (SELECT np.nprobe, s.cand_id, row_number() OVER (
+         |         PARTITION BY np.nprobe ORDER BY s.cos DESC, s.cand_id) AS rnk
+         |       FROM np, scored s JOIN pr ON pr.cid = s.cid
+         |       WHERE pr.rnk <= np.nprobe),
+         |ex AS (SELECT cand_id FROM (
+         |         SELECT cand_id, row_number() OVER (
+         |           ORDER BY cos DESC, cand_id) AS rnk
+         |         FROM scored) WHERE rnk <= 5),
+         |hits AS (SELECT a.nprobe, count(*) AS n_hit
+         |         FROM ap a JOIN ex ON ex.cand_id = a.cand_id
+         |         WHERE a.rnk <= 5 GROUP BY a.nprobe)
+         |SELECT np.nprobe, CAST(7 AS BIGINT) AS probe_id,
+         |       CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
+         |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
+         |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
+         |            / NULLIF((SELECT count(*) FROM ex), 0), 6) AS DOUBLE) AS recall
+         |FROM np LEFT JOIN hits h ON h.nprobe = np.nprobe
+         |ORDER BY np.nprobe""".stripMargin),
 
     // FEDERATED query across three storage formats in ONE plan: the
     // parquet fact joins a dimension landed as Arrow IPC (our DSv2) and
@@ -511,7 +641,7 @@ object Io {
     // ordinary relations (pruning/pushdown per source), which is the
     // whole point of the source abstraction: a 100 TB lake is never one
     // format, and the engine must not care
-    "src_federated_join" -> ((s, d) => {
+    Entry("src_federated_join", (s, d) => {
       val pArrow = s"${base(s, d)}/fed_supplier_arrow"
       val pAvro = s"${base(s, d)}/fed_nation_avro"
       t(s, d, "supplier").selectExpr(
@@ -533,7 +663,16 @@ object Io {
           expr("CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)")
             .as("sum_price"))
         .orderBy("n_name")
-    }),
+    },
+      // recomputed over the parquet originals only — green proves both
+      // DSv2 dimensions carried exactly the base rows into the join
+      """SELECT n_name, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
+        |         AS sum_price
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
     // TIME TRAVEL on the Arrow sink's commit log: overwrite lands
     // snapshot v1, append lands v2; a reader pinned to version 1 must
@@ -541,7 +680,7 @@ object Io {
     // published — the snapshot-isolation read a reproducible pipeline
     // pins its inputs with. The oracle recomputes each snapshot's
     // content from the base table: v1 = even keys, v2/latest = all
-    "src_arrow_time_travel" -> ((s, d) => {
+    Entry("src_arrow_time_travel", (s, d) => {
       val sup = t(s, d, "supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
@@ -565,14 +704,28 @@ object Io {
       snap(Some(1), "v1").unionAll(snap(Some(2), "v2"))
         .unionAll(snap(None, "latest"))
         .orderBy("snap")
-    }),
+    },
+      // each snapshot recomputed from the base table: the v1-pinned read
+      // must NOT see the appended odd keys
+      """WITH ev AS (SELECT count(*) AS n,
+        |              CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |                AS sum_bal
+        |            FROM supplier WHERE s_suppkey % 2 = 0),
+        |al AS (SELECT count(*) AS n,
+        |              CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |                AS sum_bal
+        |       FROM supplier)
+        |SELECT 'v1' AS snap, n, sum_bal FROM ev
+        |UNION ALL SELECT 'v2', n, sum_bal FROM al
+        |UNION ALL SELECT 'latest', n, sum_bal FROM al
+        |ORDER BY snap""".stripMargin),
 
     // embedding vectors through the Arrow DSv2 LIST type (the standard
     // vector-interchange format of embedding pipelines): per-vector fold
     // over the read-back list must be bit-identical to the parquet
     // original — a dropped/reordered/precision-damaged element cannot
     // hash-match
-    "src_arrow_vectors" -> ((s, d) => {
+    Entry("src_arrow_vectors", (s, d) => {
       val e = t(s, d, "embeddings")
       val p = s"${base(s, d)}/embeddings_arrow"
       e.repartition(3).write.format("graft.sources.ArrowIpcSource")
@@ -584,13 +737,21 @@ object Io {
             |(acc, x) -> acc + x), 6) AS DOUBLE) AS vsum""".stripMargin,
           "label")
         .orderBy("vec_id")
-    }),
+    },
+      // recomputed over the ORIGINAL parquet — green means the arrow list
+      // write+read preserved every element bit-for-bit, in order
+      """SELECT vec_id, CAST(len(embedding) AS INT) AS n_dims,
+        |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |         list_transform(embedding, x -> CAST(x AS DOUBLE))),
+        |         (acc, x) -> acc + x), 6) + 0.0 AS DOUBLE) AS vsum,
+        |       label
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
 
     // Avro round-trip through the custom DataSource V2 (read+write; the
     // spark-avro module is absent, so the source builds on the Avro core
     // library): two-phase-commit distributed write, multi-file scan,
     // field-pruned decode — oracle over the original parquet
-    "src_avro_roundtrip" -> ((s, d) => {
+    Entry("src_avro_roundtrip", (s, d) => {
       val ord = t(s, d, "orders").selectExpr(
         "CAST(o_orderkey AS BIGINT) AS o_orderkey", "o_orderstatus",
         "CAST(o_totalprice AS DOUBLE) AS o_totalprice")
@@ -603,7 +764,11 @@ object Io {
           expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_tp"),
           min("o_orderkey").as("first_key"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp,
+        |       CAST(MIN(o_orderkey) AS BIGINT) AS first_key
+        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
 
     // line-oriented text source with gzip codec (the raw-corpus landing
     // format): write tab-joined lines compressed, read back and re-split.
@@ -611,7 +776,7 @@ object Io {
     // NON-splittable — one file = one read task — so the writer controls
     // read parallelism via repartition(n) at write time; splittable
     // codecs or parquet are the right call once shards exceed ~1 GB
-    "src_text_gzip" -> ((s, d) => {
+    Entry("src_text_gzip", (s, d) => {
       val lines = t(s, d, "documents")
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("n_chars"))
           .as("value"))
@@ -626,13 +791,17 @@ object Io {
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
           min("doc_id").as("first_doc"))
         .orderBy("lang")
-    }),
+    },
+      """SELECT lang, count(*) AS n_docs,
+        |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+        |       min(doc_id) AS first_doc
+        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // ORC roundtrip through Spark's native columnar ORC source (predicate
     // pushdown + column pruning like parquet); the aggregate of the
     // read-back must equal the parquet-side oracle, so a lossy write or a
     // mis-read row hash-mismatches
-    "src_orc_roundtrip" -> ((s, d) => {
+    Entry("src_orc_roundtrip", (s, d) => {
       val part = t(s, d, "part")
       val p = s"${base(s, d)}/part_orc"
       part.repartition(3).write.mode("overwrite").orc(p)
@@ -643,7 +812,12 @@ object Io {
           expr("CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_price"),
           min("p_name").as("first_name"))
         .orderBy("p_brand")
-    }),
+    },
+      """SELECT p_brand, count(*) AS n_parts,
+        |       CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
+        |       min(p_name) AS first_name
+        |FROM part WHERE p_size <= 25
+        |GROUP BY 1 ORDER BY p_brand""".stripMargin),
 
     // XML round-trip through Spark 4's built-in XML source (rowTag
     // records, schema inference on read): entity escaping must preserve
@@ -651,7 +825,7 @@ object Io {
     // any mangling; ignoreSurroundingSpaces=false so legitimate edge
     // whitespace survives. NULL text round-trips as an absent element →
     // both engines read it back through the same coalesce.
-    "src_xml_roundtrip" -> ((s, d) => {
+    Entry("src_xml_roundtrip", (s, d) => {
       val docsDf = t(s, d, "documents")
       val p = s"${base(s, d)}/documents_xml"
       docsDf.repartition(3).write.mode("overwrite")
@@ -667,7 +841,12 @@ object Io {
           sum(expr("CAST(conv(substr(md5(coalesce(text, '')), 1, 12), 16, 10) AS BIGINT)"))
             .as("fp_sum"))
         .orderBy("lang")
-    }),
+    },
+      """SELECT lang, count(*) AS n_docs,
+        |       CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum,
+        |       CAST(SUM(('0x' || substr(md5(coalesce(text, '')), 1, 12))::BIGINT)
+        |            AS BIGINT) AS fp_sum
+        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // AGGREGATE PUSHDOWN into the parquet scan: with the v2 reader and
     // spark.sql.parquet.aggregatePushdown on, COUNT/MIN/MAX answer from
@@ -676,7 +855,7 @@ object Io {
     // (plan-gated: PushedAggregation reaches the scan). Materialized
     // inside the conf scope (pushdown is decided at physical planning),
     // returned as the 1-row result.
-    "src_agg_pushdown" -> ((s, d) => {
+    Entry("src_agg_pushdown", (s, d) => {
       import org.apache.spark.sql.functions.col
       val prevV1 = s.conf.get("spark.sql.sources.useV1SourceList")
       val prevAgg = s.conf.get("spark.sql.parquet.aggregatePushdown", "false")
@@ -702,9 +881,13 @@ object Io {
         s.conf.set("spark.sql.sources.useV1SourceList", prevV1)
         s.conf.set("spark.sql.parquet.aggregatePushdown", prevAgg)
       }
-    }),
+    },
+      """SELECT count(*) AS n_rows,
+        |       min(l_orderkey) AS min_okey, max(l_orderkey) AS max_okey,
+        |       min(l_partkey) AS min_pkey, max(l_partkey) AS max_pkey
+        |FROM lineitem""".stripMargin, mutatesSession = true),
 
-    "src_listing_dir" -> ((s, d) => {
+    Entry("src_listing_dir", (s, d) => {
       val li = t(s, d, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
       val p = s"${base(s, d)}/lineitem_dir"
@@ -716,7 +899,12 @@ object Io {
         .agg(count("*").as("n_items"),
           expr("CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)").as("sum_qty"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """SELECT l_returnflag, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
 
     // NESTED-type round-trip: struct + array columns written to parquet
     // and read back with the projection reaching INSIDE the struct (the
@@ -724,7 +912,7 @@ object Io {
     // not a full-struct materialize); the oracle recomputes every field
     // from the flat source columns, so a shredding/reassembly bug in
     // either direction cannot hash-match
-    "src_nested_struct" -> ((s, d) => {
+    Entry("src_nested_struct", (s, d) => {
       val p = s"${base(s, d)}/docs_nested"
       t(s, d, "documents")
         .selectExpr("doc_id",
@@ -736,9 +924,13 @@ object Io {
           "meta.n_chars AS n_chars",
           "tags[0] AS tag0", "CAST(size(tags) AS INT) AS n_tags")
         .orderBy("doc_id")
-    }),
+    },
+      // every nested field recomputed from the FLAT source columns
+      """SELECT doc_id, lang, n_chars,
+        |       source AS tag0, CAST(2 AS INT) AS n_tags
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "sink_parquet_partitioned" -> ((s, d) => {
+    Entry("sink_parquet_partitioned", (s, d) => {
       val orders = t(s, d, "orders")
       val p = s"${base(s, d)}/orders_by_status"
       orders.where("o_orderstatus = 'F'")
@@ -750,7 +942,11 @@ object Io {
         .agg(count("*").as("n_orders"),
           expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_tp"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
+        |FROM orders WHERE o_orderstatus IN ('F', 'O')
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
 
     // bucketed tables: both sides pre-hashed into the same bucket count on
     // the join key, so the join needs NO shuffle at all — at 100 TB this is
@@ -758,7 +954,7 @@ object Io {
     // reading co-located buckets (BucketedJoinSpec pins the no-Exchange
     // plan; here the differential check proves the bucketed files carry
     // the right rows)
-    "bucketed_join" -> ((s, d) => {
+    Entry("bucketed_join", (s, d) => {
       // project to the join/agg columns before bucketing: a bucketed layout
       // exists to be read many times, and materializing columns no reader
       // needs just multiplies the one-off write cost (at 100 TB, the write
@@ -777,7 +973,11 @@ object Io {
         .agg(count("*").as("n_orders"),
           expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_tp"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin, mutatesSession = true),
 
     // schema evolution: two parquet generations of the same table — the
     // later one grew a column — read as ONE table via mergeSchema (the
@@ -786,7 +986,7 @@ object Io {
     // surface the new column as NULL; the oracle recomputes the same split
     // from the original fixture, so a dropped generation, a misaligned
     // column, or default-filled-instead-of-NULL all hash-mismatch.
-    "src_merge_schema" -> ((s, d) => {
+    Entry("src_merge_schema", (s, d) => {
       val orders = t(s, d, "orders")
       val dir = s"${base(s, d)}/orders_evolved"
       orders.where("o_orderkey % 2 = 0")
@@ -800,7 +1000,12 @@ object Io {
         .agg(count(lit(1)).as("n_orders"),
           expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)").as("sum_tp"))
         .orderBy("status")
-    }),
+    },
+      """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus
+        |            ELSE '__pre_evolution' END AS status,
+        |       count(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
+        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin),
 
     // small-file compaction (operators/Compact): 64 tiny files coalesced —
     // no shuffle — to the byte-target count, then the compacted copy is
@@ -818,7 +1023,7 @@ object Io {
     // LayoutOperatorSpec asserts on the footer (offset present, bloom
     // membership answers) — here the differential check proves the
     // filtered read returns exactly the base table's rows
-    "sink_parquet_bloom" -> ((s, d) => {
+    Entry("sink_parquet_bloom", (s, d) => {
       val p = s"${base(s, d)}/lineitem_bloom"
       t(s, d, "lineitem")
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
@@ -833,9 +1038,16 @@ object Io {
           expr("CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)")
             .as("sum_price"))
         .orderBy("l_orderkey")
-    }),
+    },
+      // the bloom-written copy must answer the point lookup exactly like
+      // the base table
+      """SELECT l_orderkey, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
+        |         AS sum_price
+        |FROM lineitem WHERE l_orderkey IN (7, 1029, 4480, 29988)
+        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin),
 
-    "sink_compact_small_files" -> ((s, d) => {
+    Entry("sink_compact_small_files", (s, d) => {
       val staged = s"${base(s, d)}/compact_in"
       val compacted = s"${base(s, d)}/compact_out"
       t(s, d, "events").repartition(64)
@@ -848,7 +1060,11 @@ object Io {
           expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").as("sum_value"),
           countDistinct(col("user_id")).as("n_users"))
         .orderBy("event_type")
-    }),
+    },
+      """SELECT event_type, count(*) AS n_events,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        |       count(DISTINCT user_id) AS n_users
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin, mutatesSession = true),
 
     // z-order layout (operators/ZOrder): Morton-interleave
     // (l_partkey, l_suppkey), then bucket the z-range with exact integer
@@ -858,7 +1074,7 @@ object Io {
     // interleave feeds some bucket's min/max, so one wrong bit anywhere
     // hash-mismatches; the per-file locality the layout buys is asserted
     // in LayoutOperatorSpec.
-    "layout_zorder" -> ((s, d) => {
+    Entry("layout_zorder", (s, d) => {
       import graft.operators.ZOrder
       val li = t(s, d, "lineitem").select("l_partkey", "l_suppkey")
         .withColumn("z", ZOrder.zvalue(col("l_partkey"), col("l_suppkey")))
@@ -871,6 +1087,17 @@ object Io {
           min("l_suppkey").as("min_sk"), max("l_suppkey").as("max_sk"),
           min("z").as("min_z"), max("z").as("max_z"))
         .orderBy("bucket")
+    },
+      {
+      val z = graft.operators.ZOrder.zvalueSql("l_partkey", "l_suppkey")
+      s"""WITH li AS (SELECT l_partkey, l_suppkey, $z AS z FROM lineitem),
+         |m AS (SELECT max(z) AS zmax FROM li)
+         |SELECT (z * 8) // (zmax + 1) AS bucket, count(*) AS n_rows,
+         |       min(l_partkey) AS min_pk, max(l_partkey) AS max_pk,
+         |       min(l_suppkey) AS min_sk, max(l_suppkey) AS max_sk,
+         |       min(z) AS min_z, max(z) AS max_z
+         |FROM li CROSS JOIN m
+         |GROUP BY 1 ORDER BY bucket""".stripMargin
     }),
 
     // LINEAR multi-touch attribution: each purchase's credit split 1/n
@@ -880,7 +1107,7 @@ object Io {
     // never an NLJ), per-touch credit is ONE division rounded to 6 and
     // summed on DECIMAL (order-free). The fractional-credit sibling of
     // ts_attribution's last-touch rule
-    "ts_attribution_linear" -> ((s, d) => {
+    Entry("ts_attribution_linear", (s, d) => {
       val ev = t(s, d, "events")
       val touches = ev.where("event_type <> 'purchase'")
         .select(col("user_id").as("t_user"), col("ts").as("t_ts"),
@@ -901,7 +1128,26 @@ object Io {
         .agg(count(lit(1)).as("n_touch_events"),
           expr("CAST(SUM(credit) AS DOUBLE)").as("credit_sum"))
         .orderBy("touch_type")
-    }),
+    },
+      // the flat lookback join + the same rounded 1/n credit on DECIMAL
+      """
+      WITH t AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
+                 FROM events WHERE event_type <> 'purchase'),
+      p AS (SELECT event_id AS p_id, user_id,
+                   CAST(ts AS TIMESTAMP) AS w_end,
+                   CAST(ts AS TIMESTAMP) - INTERVAL 2 HOUR AS w_start
+            FROM events WHERE event_type = 'purchase'),
+      pairs AS (SELECT p.p_id, t.event_type AS touch_type
+                FROM t JOIN p ON t.user_id = p.user_id
+                              AND t.ts >= p.w_start AND t.ts < p.w_end),
+      c AS (SELECT p_id, touch_type,
+                   CAST(ROUND(CAST(1.0 AS DOUBLE)
+                              / count(*) OVER (PARTITION BY p_id), 6)
+                        AS DECIMAL(16,6)) AS credit
+            FROM pairs)
+      SELECT touch_type, count(*) AS n_touch_events,
+             CAST(SUM(credit) AS DOUBLE) AS credit_sum
+      FROM c GROUP BY 1 ORDER BY touch_type"""),
 
     // spatial proximity join via CELL-NEIGHBORHOOD blocking (the geo
     // twin of the binned range join): one side explodes to its 3×3
@@ -909,7 +1155,7 @@ object Io {
     // pair meets EXACTLY once (at the plain side's cell — no dedup
     // pass); residual = the exact integer centi-degree box. Never an
     // all-pairs NLJ: work ∝ points × 9 + per-cell density²
-    "join_geo_box" -> ((s, d) => {
+    Entry("join_geo_box", (s, d) => {
       Tables.register(s, d)
       val pts = s.table("customer").selectExpr("c_custkey AS id",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000 AS lat_c",
@@ -929,7 +1175,20 @@ object Io {
         .selectExpr("a_id", "b_id",
           "abs(a_lat - b_lat) AS dlat_c", "abs(a_lon - b_lon) AS dlon_c")
         .orderBy("a_id", "b_id")
-    }),
+    },
+      """
+      WITH p AS (SELECT c_custkey AS id,
+                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000 AS lat_c,
+                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000 AS lon_c
+                 FROM customer)
+      SELECT a.id AS a_id, b.id AS b_id,
+             abs(a.lat_c - b.lat_c) AS dlat_c,
+             abs(a.lon_c - b.lon_c) AS dlon_c
+      FROM p a JOIN p b
+        ON a.id < b.id
+       AND abs(a.lat_c - b.lat_c) <= 100
+       AND abs(a.lon_c - b.lon_c) <= 100
+      ORDER BY a_id, b_id"""),
 
     // POINT-IN-POLYGON spatial join — the containment predicate the
     // box/knn/geohash family lacks: three fixed polygons (one concave)
@@ -939,12 +1198,18 @@ object Io {
     // crossings odd. Candidates prefilter on the polygon bbox, then the
     // per-(point, polygon) crossing count is one grouped SUM over ≤
     // |edges| rows; the corpus never shuffles — both joins broadcast
-    "join_geo_polygon" -> ((s, d) => {
+    Entry("join_geo_polygon", (s, d) => {
       Tables.register(s, d)
       s.sql(geoPolygonSql(
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10) AS BIGINT) % 36000 - 18000",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000"))
-    }),
+    },
+      // the flat box inequality join — a blocking bug (pair met twice or
+      // missed at a cell edge) changes the multiset
+      // identical ray-cast SQL, DuckDB md5→int idiom
+      geoPolygonSql(
+      "('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000",
+      "('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000")),
 
     // bounded-radius spatial kNN on the SAME 3×3 cell blocking: each
     // point's 3 nearest neighbors among candidates within the 100-centi-
@@ -955,7 +1220,7 @@ object Io {
     // window partitions per point over ≤ per-cell-density² candidates.
     // The standard geo serving shape: candidates from blocking, exact
     // top-k inside
-    "join_geo_knn" -> ((s, d) => {
+    Entry("join_geo_knn", (s, d) => {
       Tables.register(s, d)
       val pts = s.table("customer").selectExpr("c_custkey AS id",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000 AS lat_c",
@@ -981,13 +1246,34 @@ object Io {
         .select(col("a_id"), col("rank").cast("int").as("rank"),
           col("b_id"), col("d2"))
         .orderBy("a_id", "rank")
-    }),
+    },
+      // the box+rank contract replayed directly (no cell arithmetic — the
+      // blocking is the entry's plan concern, not the output's)
+      """
+      WITH p AS (SELECT c_custkey AS id,
+                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000 AS lat_c,
+                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000 AS lon_c
+                 FROM customer),
+      cand AS (SELECT a.id AS a_id, b.id AS b_id,
+                      (a.lat_c - b.lat_c) * (a.lat_c - b.lat_c)
+                        + (a.lon_c - b.lon_c) * (a.lon_c - b.lon_c) AS d2
+               FROM p a JOIN p b
+                 ON a.id <> b.id
+                AND abs(a.lat_c - b.lat_c) <= 100
+                AND abs(a.lon_c - b.lon_c) <= 100),
+      rk AS (SELECT a_id, b_id, d2,
+                    row_number() OVER (PARTITION BY a_id
+                      ORDER BY d2, b_id) AS rank
+             FROM cand)
+      SELECT a_id, CAST(rank AS INT) AS rank, b_id, CAST(d2 AS BIGINT) AS d2
+      FROM rk WHERE rank <= 3
+      ORDER BY a_id, rank"""),
 
     // geohash encode (geohash IS a Morton code in base32 dress — reuses
     // the ZOrder mask-table interleave, lon bit leading): synthesized
     // centi-degree points, 6-char cells, prefix-blocked aggregate (equal
     // prefixes = nearby cells — the spatial candidate generator)
-    "fn_geohash" -> ((s, d) => {
+    Entry("fn_geohash", (s, d) => {
       Tables.register(s, d)
       val pts = s.table("customer").selectExpr("c_custkey",
         "(c_custkey * 7919) % 18000 - 9000 AS lat_c",
@@ -1000,13 +1286,26 @@ object Io {
           min("c_custkey").as("min_key"),
           min("geohash").as("min_hash"), max("geohash").as("max_hash"))
         .orderBy("cell")
+    },
+      // the identical interleave + alphabet lookups, DuckDB's // division
+      {
+      val gh = graft.operators.ZOrder.geohashDuckSql("lat_c", "lon_c")
+      s"""WITH p AS (SELECT c_custkey,
+         |                  (c_custkey * 7919) % 18000 - 9000 AS lat_c,
+         |                  (c_custkey * 104729) % 36000 - 18000 AS lon_c
+         |           FROM customer),
+         |g AS (SELECT c_custkey, $gh AS geohash FROM p)
+         |SELECT substr(geohash, 1, 2) AS cell, count(*) AS n_points,
+         |       min(c_custkey) AS min_key,
+         |       min(geohash) AS min_hash, max(geohash) AS max_hash
+         |FROM g GROUP BY 1 ORDER BY cell""".stripMargin
     }),
 
     // SQL-defined functions (Spark 4): a scalar UDF (CREATE TEMPORARY
     // FUNCTION ... RETURN expr) and a TABLE function, both consumed by
     // one aggregate — the catalog-function surface; the optimizer
     // INLINES the bodies, so the oracle replays the inlined SQL
-    "sql_udf" -> ((s, d) => {
+    Entry("sql_udf", (s, d) => {
       Tables.register(s, d)
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc(p DOUBLE, disc DOUBLE)
                RETURNS DECIMAL(26,4)
@@ -1022,13 +1321,24 @@ object Io {
                FROM lineitem l
                JOIN graft_big_orders(150000.0) b ON l.l_orderkey = b.o_orderkey
                GROUP BY 1, 2 ORDER BY 1, 2""")
-    }),
+    },
+      // the two function bodies inlined by hand — what Spark's optimizer
+      // does mechanically
+      """SELECT l.l_returnflag, o.o_orderstatus, count(*) AS n,
+        |       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+        |                * (CAST(1 AS DECIMAL(4,2))
+        |                   - CAST(l.l_discount AS DECIMAL(4,2))))
+        |            AS DOUBLE) AS disc_total
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_totalprice > 150000.0
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, mutatesSession = true),
 
     // Hilbert-curve layout index (ZOrder's stronger sibling — no quadrant
     // seams, consecutive indexes always grid neighbors): the unrolled
     // state-machine walk as 10 chained codegen projections; bucket
     // min/max spans of BOTH keys mirror layout_zorder's pruning audit
-    "layout_hilbert" -> ((s, d) => {
+    Entry("layout_hilbert", (s, d) => {
       import graft.operators.Hilbert
       val li = t(s, d, "lineitem")
         .selectExpr("l_partkey % 1024 AS px", "l_orderkey % 1024 AS sy")
@@ -1042,23 +1352,44 @@ object Io {
           min("sy").as("min_sy"), max("sy").as("max_sy"),
           min("h").as("min_h"), max("h").as("max_h"))
         .orderBy("bucket")
+    },
+      // the identical unrolled walk as chained CTEs (Hilbert.hilbertCtes —
+      // one shared per-level expression source, the ZOrder mask-table rule)
+      {
+      val ctes = graft.operators.Hilbert.hilbertCtes(10, "b", Seq("px", "sy"))
+      s"""WITH b AS (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS sy,
+         |                  CAST(l_partkey % 1024 AS BIGINT) & 1023 AS hx,
+         |                  CAST(l_orderkey % 1024 AS BIGINT) & 1023 AS hy,
+         |                  CAST(0 AS BIGINT) AS hd
+         |           FROM lineitem),
+         |$ctes,
+         |hh AS (SELECT px, sy, hd AS h FROM h10),
+         |m AS (SELECT max(h) AS hmax FROM hh)
+         |SELECT (h * 8) // (hmax + 1) AS bucket, count(*) AS n_rows,
+         |       min(px) AS min_px, max(px) AS max_px,
+         |       min(sy) AS min_sy, max(sy) AS max_sy,
+         |       min(h) AS min_h, max(h) AS max_h
+         |FROM hh CROSS JOIN m GROUP BY 1 ORDER BY bucket""".stripMargin
     }),
 
     // ---- partitioning surface -------------------------------------------
-    "repartition_agg" -> ((s, d) =>
+    Entry("repartition_agg", (s, d) =>
       t(s, d, "lineitem")
         .repartition(16, col("l_orderkey"))
         .groupBy("l_linestatus")
         .agg(count("*").as("n_items"),
           expr("CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)").as("sum_price"))
         .coalesce(2)
-        .orderBy("l_linestatus")),
+        .orderBy("l_linestatus"),
+      """SELECT l_linestatus, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE) AS sum_price
+        |FROM lineitem GROUP BY 1 ORDER BY l_linestatus""".stripMargin),
 
     // manual salting (operators/Skew): results must be IDENTICAL to the
     // unsalted join/agg — the oracle below computes the plain versions, so
     // a salt that loses or duplicates rows shows up as a hash mismatch
     // (round-3 ADVICE: Skew had only unit tests, no differential entry)
-    "skew_salted_join" -> ((s, d) => {
+    Entry("skew_salted_join", (s, d) => {
       val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_quantity"))
       val ord = t(s, d, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
@@ -1067,9 +1398,13 @@ object Io {
         .agg(count("*").as("n_items"),
           expr("CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)").as("sum_qty"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """SELECT o_orderstatus, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
 
-    "skew_salted_agg" -> ((s, d) => {
+    Entry("skew_salted_agg", (s, d) => {
       // DECIMAL before the two-phase sum: double partials would re-add in
       // salt order and drift from the oracle's single exact sum
       val li = t(s, d, "lineitem")
@@ -1079,10 +1414,13 @@ object Io {
         .select(col("l_returnflag"), col("n"),
           expr("CAST(s AS DOUBLE)").as("s"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """SELECT l_returnflag, count(*) AS n,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS s
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
 
     // ---- parameterized SQL ----------------------------------------------
-    "param_sql" -> ((s, d) => {
+    Entry("param_sql", (s, d) => {
       Tables.register(s, d)
       s.sql(
         """SELECT o_orderpriority, COUNT(*) AS n
@@ -1090,12 +1428,16 @@ object Io {
           |WHERE o_totalprice > :minp AND o_orderdate < CAST(:cutoff AS TIMESTAMP)
           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
         Map("minp" -> 150000, "cutoff" -> "1997-01-01 00:00:00"))
-    }),
+    },
+      """SELECT o_orderpriority, count(*) AS n
+        |FROM orders
+        |WHERE o_totalprice > 150000 AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // Spark 4 session variables + dynamic SQL: DECLARE / SET VAR state
     // resolves both by name inside the statement and positionally through
     // EXECUTE IMMEDIATE ... USING; the oracle is the classic literal form
-    "sql_session_vars" -> ((s, d) => {
+    Entry("sql_session_vars", (s, d) => {
       Tables.register(s, d)
       s.sql("DECLARE OR REPLACE VARIABLE qty_floor INT DEFAULT 0")
       s.sql("SET VAR qty_floor = 45")
@@ -1105,13 +1447,17 @@ object Io {
           |          CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
           |   FROM lineitem WHERE l_quantity >= ? GROUP BY 1 ORDER BY 1'
           |  USING qty_floor""".stripMargin)
-    }),
+    },
+      """SELECT l_returnflag, count(*) AS n_items,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem WHERE l_quantity >= 45
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Spark-4 SQL SCRIPTING surface (BEGIN…END compound, DECLARE, SET
     // from a subquery, WHILE loop, IF/ELSE branch): the script's control
     // flow runs on the driver, every statement inside is a full Catalyst
     // plan; the oracle recomputes the loop algebra in closed form
-    "sql_scripting" -> ((s, d) => {
+    Entry("sql_scripting", (s, d) => {
       Tables.register(s, d)
       s.sql(
         """BEGIN
@@ -1133,10 +1479,15 @@ object Io {
           |    FROM region ORDER BY r_regionkey;
           |  END IF;
           |END""".stripMargin)
-    }),
+    },
+      // the loop algebra in closed form: acc = (0+1+2+3)·n = 6n
+      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name,
+        |       CAST((SELECT count(*) FROM nation) AS BIGINT) AS n_nations,
+        |       CAST(6 * (SELECT count(*) FROM nation) AS BIGINT) AS acc
+        |FROM region ORDER BY r_regionkey""".stripMargin),
 
     // ---- events time series ----------------------------------------------
-    "ts_window_agg" -> ((s, d) => {
+    Entry("ts_window_agg", (s, d) => {
       Tables.register(s, d)
       s.sql(
         """SELECT date_trunc('hour', ts) AS hour_ts, event_type,
@@ -1146,7 +1497,14 @@ object Io {
           |FROM events
           |GROUP BY 1, 2
           |ORDER BY hour_ts, event_type""".stripMargin)
-    }),
+    },
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
+        |       count(*) AS n_events,
+        |       count(DISTINCT user_id) AS n_users,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM events
+        |GROUP BY 1, 2
+        |ORDER BY hour_ts, event_type""".stripMargin),
 
     // STREAMING differential entry (bounded replay): the events fixture
     // staged as a landing directory, tailed by a REAL StreamingQuery —
@@ -1160,7 +1518,7 @@ object Io {
     // cannot perturb the float result. COUNT(DISTINCT) is unsupported in
     // streaming aggs, hence no n_users column here (the batch
     // ts_window_agg keeps it).
-    "ts_stream_window_agg" -> ((s, d) => {
+    Entry("ts_stream_window_agg", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
@@ -1182,14 +1540,22 @@ object Io {
       // events is no longer referenced — don't leak it per invocation
       Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("hour_ts", "event_type")
-    }),
+    },
+      // bounded replay makes streaming deterministic: the oracle is the
+      // batch semantics of the same windowed aggregate
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
+        |       count(*) AS n_events,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM events
+        |GROUP BY 1, 2
+        |ORDER BY hour_ts, event_type""".stripMargin, mutatesSession = true),
 
     // sliding (overlapping) windows through the real streaming engine:
     // each event contributes to length/slide = 4 window rows in the SAME
     // state store — the multi-assignment path the tumbling twin never
     // exercises; the oracle expands the epoch-aligned membership
     // arithmetic per event and re-aggregates from scratch
-    "ts_stream_sliding_agg" -> ((s, d) => {
+    Entry("ts_stream_sliding_agg", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
@@ -1207,14 +1573,26 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Complete())
       Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("win_start", "event_type")
-    }),
+    },
+      // epoch-aligned sliding membership, expanded flat: an event at t sits
+      // in the 4 windows starting at 30-min grid points (t's bucket, minus
+      // 0..3 slides)
+      """WITH x AS (SELECT event_type,
+        |                  (epoch_us(ts) // 1800000000) * 1800000000 AS b
+        |           FROM events),
+        |w AS (SELECT event_type, b - k * 1800000000 AS ws
+        |      FROM x, unnest(generate_series(0, 3)) AS u(k))
+        |SELECT make_timestamp(ws) AS win_start, event_type,
+        |       count(*) AS n_events
+        |FROM w GROUP BY 1, 2
+        |ORDER BY win_start, event_type""".stripMargin, mutatesSession = true),
 
     // the session-window twin of ts_stream_window_agg: bounded replay
     // through the MERGING-state streaming path (session windows keep a
     // different state implementation than tumbling windows), checked by
     // the same lag-based DuckDB oracle the batch ts_session_window entry
     // has proven against this fixture
-    "ts_stream_session_window" -> ((s, d) => {
+    Entry("ts_stream_session_window", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, session_window}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
@@ -1231,7 +1609,25 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Complete())
       Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id", "session_start")
-    }),
+    },
+      // identical semantics to ts_session_window (the streaming path must
+      // produce the batch answer on bounded input)
+      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |x AS (SELECT user_id, ts,
+        |             CASE WHEN lag(ts) OVER w IS NULL
+        |                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+        |                  THEN 1 ELSE 0 END AS brk
+        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |y AS (SELECT user_id, ts,
+        |             SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+        |                            ROWS UNBOUNDED PRECEDING) AS sess
+        |      FROM x)
+        |SELECT user_id,
+        |       MIN(ts) AS session_start,
+        |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+        |       COUNT(*) AS n_events
+        |FROM y GROUP BY user_id, sess
+        |ORDER BY user_id, session_start""".stripMargin, mutatesSession = true),
 
     // stream-static enrichment join: each streamed event joins the
     // per-user lifetime stats computed BATCH-side from the same fixture
@@ -1239,7 +1635,7 @@ object Io {
     // uses for dimension lookup, distinct from the stream-stream joins
     // oracled below. On drained bounded input the enriched aggregate
     // must equal the plain batch join, which is the DuckDB oracle.
-    "ts_stream_enrich" -> ((s, d) => {
+    Entry("ts_stream_enrich", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
@@ -1259,14 +1655,22 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Complete())
       Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("event_type")
-    }),
+    },
+      """WITH u AS (SELECT user_id, count(*) AS u_events,
+        |                  SUM(CAST(value AS DECIMAL(18,2))) AS u_value
+        |           FROM events GROUP BY 1)
+        |SELECT event_type, count(*) AS n_events,
+        |       CAST(SUM(u_events) AS BIGINT) AS sum_user_events,
+        |       CAST(SUM(u_value) AS DOUBLE) AS sum_user_value
+        |FROM events e JOIN u USING (user_id)
+        |GROUP BY 1 ORDER BY event_type""".stripMargin, mutatesSession = true),
 
     // transactional FILE sink: the stream lands purchases as parquet
     // through the _spark_metadata commit log (the exactly-once landing
     // path a 100 TB ingest uses), and the batch read-back honors only
     // manifest-committed files — a duplicated, lost or uncommitted batch
     // file changes the aggregate and hash-mismatches the plain oracle
-    "ts_stream_file_sink" -> ((s, d) => {
+    Entry("ts_stream_file_sink", (s, d) => {
       import org.apache.spark.sql.functions.{count, expr, lit}
       val events = Tables.load(s, d, "events")
         .select("ts", "user_id", "event_type", "value")
@@ -1290,7 +1694,12 @@ object Io {
             .as("sum_value"),
           expr("max(unix_micros(ts))").as("max_ts_us"))
         .orderBy("user_mod")
-    }),
+    },
+      """SELECT user_id % 10 AS user_mod, count(*) AS n_purchases,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        |       epoch_us(CAST(max(ts) AS TIMESTAMP)) AS max_ts_us
+        |FROM events WHERE event_type = 'purchase'
+        |GROUP BY 1 ORDER BY user_mod""".stripMargin, mutatesSession = true),
 
     // CRASH/RESTART exactly-once resume — the operational contract every
     // continuous ingest depends on: a file-sink query drains half its
@@ -1302,7 +1711,7 @@ object Io {
     // all three hash-mismatch. The transform is stateless on purpose
     // (offset/manifest recovery is the surface under test; stateful
     // recovery semantics are pinned by the late-drop/timers entries).
-    "ts_stream_resume" -> ((s, d) => {
+    Entry("ts_stream_resume", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1328,7 +1737,13 @@ object Io {
         (evs.where(s"event_id % 4 = $i"), s"f$i.parquet", t0 + i * 60000)))
       run() // phase 2: resumes from the checkpoint, drains f2, f3
       s.read.parquet(s"$root/out").orderBy("event_id")
-    }),
+    },
+      // the whole input exactly once, regardless of the two-phase replay
+      """SELECT event_id, event_type,
+        |       CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS value_cents,
+        |       CAST(date_trunc('DAY', CAST(ts AS TIMESTAMP)) AS DATE) AS day
+        |FROM events WHERE CAST(value AS DOUBLE) > 100.0
+        |ORDER BY event_id""".stripMargin, mutatesSession = true),
 
     // STREAMING MERGE/upsert materialization: a keyed changelog arrives
     // in micro-batches (3 landing files, maxFilesPerTrigger=1) and
@@ -1348,7 +1763,7 @@ object Io {
     // oracle recomputes the derived strings from the base table and
     // md5-compares: one mangled quote or swallowed newline anywhere
     // hash-mismatches
-    "src_csv_quoted" -> ((s, d) => {
+    Entry("src_csv_quoted", (s, d) => {
       val tricky = t(s, d, "part").where("p_partkey < 200")
         .selectExpr("CAST(p_partkey AS BIGINT) AS k",
           "concat(p_name, ',', p_type) AS f_comma",
@@ -1362,7 +1777,17 @@ object Io {
         .selectExpr("k", "md5(f_comma) AS h_comma",
           "md5(f_quote) AS h_quote", "md5(f_newline) AS h_newline")
         .orderBy("k")
-    }),
+    },
+      // the WHOLE changelog applied in one shot (window rank, no
+      // incremental fold, no tombstone carrying) — green proves the
+      // 3-batch foreachBatch merge converged to the same snapshot
+      // the tricky strings recomputed straight from the base table — the
+      // CSV files never enter the oracle's path
+      """SELECT CAST(p_partkey AS BIGINT) AS k,
+        |       md5(p_name || ',' || p_type) AS h_comma,
+        |       md5('"' || p_brand || '"' || ' quoted') AS h_quote,
+        |       md5(p_name || chr(10) || p_type) AS h_newline
+        |FROM part WHERE p_partkey < 200 ORDER BY k""".stripMargin),
 
     // PER-KEY gap-fill at hourly grain — the complement of ts_gap_fill's
     // global daily spine: every (user, hour) slot between the user's OWN
@@ -1370,7 +1795,7 @@ object Io {
     // for each other's calendar), observed hours carrying real
     // aggregates and missing hours explicit zeros with a filled flag.
     // Integer hour ids, never raw timestamps, cross the output edge
-    "ts_gap_fill_perkey" -> ((s, d) => {
+    Entry("ts_gap_fill_perkey", (s, d) => {
       val ev = Tables.load(s, d, "events").where("user_id < 20")
         .withColumn("hour", expr("unix_micros(ts) div 3600000000"))
       val slots = ev.groupBy("user_id")
@@ -1385,7 +1810,25 @@ object Io {
           expr("CAST(coalesce(sv, 0) AS DOUBLE)").as("sum_value"),
           col("n").isNull.as("filled"))
         .orderBy("user_id", "hour")
-    }),
+    },
+      // the dense grid rebuilt with generate_series over the same
+      // per-user hour bounds
+      """WITH ev AS (SELECT user_id, epoch_us(ts) // 3600000000 AS hour,
+        |                   CAST(value AS DECIMAL(18,2)) AS v
+        |            FROM events WHERE user_id < 20),
+        |b AS (SELECT user_id, min(hour) AS mn, max(hour) AS mx
+        |      FROM ev GROUP BY user_id),
+        |slots AS (SELECT user_id, h.h AS hour
+        |          FROM b, unnest(generate_series(mn, mx)) h(h)),
+        |ag AS (SELECT user_id, hour, count(*) AS n, SUM(v) AS sv
+        |       FROM ev GROUP BY 1, 2)
+        |SELECT s.user_id, s.hour,
+        |       CAST(COALESCE(ag.n, 0) AS BIGINT) AS n_events,
+        |       CAST(COALESCE(ag.sv, 0) AS DOUBLE) AS sum_value,
+        |       ag.n IS NULL AS filled
+        |FROM slots s LEFT JOIN ag ON ag.user_id = s.user_id
+        |                         AND ag.hour = s.hour
+        |ORDER BY s.user_id, s.hour""".stripMargin),
 
     // STREAMING READ OF THE TABLE'S OWN COMMIT LOG: three batch commits
     // land three generations in the Arrow sink; a micro-batch stream
@@ -1396,7 +1839,7 @@ object Io {
     // exactly-once because manifests are immutable and staging files
     // are invisible. The oracle recomputes each generation's membership
     // from the base table: green pins the offset-range file planning
-    "ts_stream_commit_log" -> ((s, d) => {
+    Entry("ts_stream_commit_log", (s, d) => {
       val sup = t(s, d, "supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
@@ -1422,9 +1865,15 @@ object Io {
       }
       import s.implicits._
       acc.toSeq.toDF("batch_id", "n_rows", "sum_bal").orderBy("batch_id")
-    }),
+    },
+      // each micro-batch is one commit = one residue class of suppkey
+      """SELECT CAST(s_suppkey % 3 AS BIGINT) AS batch_id,
+        |       count(*) AS n_rows,
+        |       CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |         AS sum_bal
+        |FROM supplier GROUP BY 1 ORDER BY batch_id""".stripMargin, mutatesSession = true),
 
-    "ts_stream_upsert" -> ((s, d) => {
+    Entry("ts_stream_upsert", (s, d) => {
       import org.apache.spark.sql.functions.expr
       val events = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "value")
@@ -1454,7 +1903,18 @@ object Io {
         .where("op <> 'D'")
         .selectExpr("k", "seq", "op", "CAST(total AS DOUBLE) AS total")
         .orderBy("k")
-    }),
+    },
+      """WITH ch AS (SELECT user_id AS k, event_id AS seq,
+        |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
+        |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
+        |    CAST(value AS DECIMAL(18,2)) AS total
+        |  FROM events),
+        |last AS (SELECT k, seq, op, total,
+        |           row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+        |         FROM ch)
+        |SELECT k, seq, op, CAST(total AS DOUBLE) AS total
+        |FROM last WHERE rn = 1 AND op <> 'D'
+        |ORDER BY k""".stripMargin, mutatesSession = true),
 
     // STREAMING SCD2 maintenance: each micro-batch of changelog rows
     // merges into the dimension's version history via scd2Incremental —
@@ -1472,7 +1932,7 @@ object Io {
     // the CLAUDE.md trap), rows re-sort by (ts, event_id) inside each
     // batch. The drained count per user must equal the batch
     // regexp_count over the full sequence — the differential oracle.
-    "ts_stream_pattern" -> ((s, d) => {
+    Entry("ts_stream_pattern", (s, d) => {
       Tables.register(s, d)
       val evs = s.table("events")
         .select("ts", "event_id", "user_id", "event_type")
@@ -1509,7 +1969,18 @@ object Io {
         .groupBy("user_id")
         .agg(max("n_conversion").as("n_conversion"))
         .orderBy("user_id")
-    }),
+    },
+      // the FULL-changelog SCD2 recompute — whatever micro-batch split the
+      // stream fed through scd2Incremental must converge to exactly this
+      // the streaming state machine's drained counts == batch regexp_count
+      // over each user's full ordered sequence
+      """WITH seqs AS (SELECT user_id,
+        |                     string_agg(substr(event_type, 1, 1), ''
+        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS seq
+        |              FROM events GROUP BY user_id)
+        |SELECT user_id,
+        |       CAST(len(regexp_extract_all(seq, 'v[ce]*p')) AS BIGINT) AS n_conversion
+        |FROM seqs ORDER BY user_id""".stripMargin, mutatesSession = true),
 
     // STREAMING CUSUM drift alarm (the ts_cusum_drift closed form run
     // live): per metric series the state is TWO Longs — running prefix
@@ -1518,7 +1989,7 @@ object Io {
     // snapshots is the drained answer and the BATCH windows are the
     // differential oracle. Order-dependent state → TIME-sliced replay
     // quartiles (the CLAUDE.md trap), in-batch re-sort by (ts, event_id)
-    "ts_stream_cusum" -> ((s, d) => {
+    Entry("ts_stream_cusum", (s, d) => {
       Tables.register(s, d)
       val evs = s.table("events")
         .select("ts", "event_id", "event_type", "value")
@@ -1558,9 +2029,12 @@ object Io {
           max("n_alarms").as("n_alarms"),
           max("max_cusum").as("max_cusum"))
         .orderBy("event_type")
-    }),
+    },
+      // the drained CUSUM state must equal the batch closed form — the
+      // oracle IS the batch twin's windows, verbatim
+      Relational.cusumDriftSql, mutatesSession = true),
 
-    "ts_stream_scd2" -> ((s, d) => {
+    Entry("ts_stream_scd2", (s, d) => {
       val events = Tables.load(s, d, "events")
         .select("event_id", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_scd2"
@@ -1592,7 +2066,20 @@ object Io {
         .selectExpr("k", "valid_from", "valid_to", "op",
           "CAST(total AS DOUBLE) AS total", "is_current")
         .orderBy("k", "valid_from")
-    }),
+    },
+      """WITH ch AS (SELECT user_id AS k, event_id AS seq,
+        |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
+        |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
+        |    CAST(value AS DECIMAL(18,2)) AS total
+        |  FROM events)
+        |SELECT k, seq AS valid_from,
+        |       (SELECT min(c2.seq) FROM ch c2
+        |        WHERE c2.k = ch.k AND c2.seq > ch.seq) AS valid_to,
+        |       op, CAST(total AS DOUBLE) AS total,
+        |       (SELECT min(c2.seq) FROM ch c2
+        |        WHERE c2.k = ch.k AND c2.seq > ch.seq) IS NULL AS is_current
+        |FROM ch WHERE op <> 'D'
+        |ORDER BY k, valid_from""".stripMargin, mutatesSession = true),
 
     // STREAMING watermark-DROP semantics, differentially oracled: the one
     // streaming behavior bounded Complete-mode replay cannot pin is that
@@ -1624,7 +2111,7 @@ object Io {
     // fixture's microsecond-random timestamps guarantee no window
     // boundary ever falls exactly ON a watermark, so strict-vs-inclusive
     // comparisons cannot diverge silently.
-    "ts_stream_late_drop" -> ((s, d) => {
+    Entry("ts_stream_late_drop", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
       val (landing, schema) = stageLateLanding(s, d)
       val stream = s.readStream.schema(schema)
@@ -1640,7 +2127,41 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Append())
       Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("hour_ts", "event_type")
-    }),
+    },
+      // replays the entry's watermark arithmetic in SQL: f1a/f1b/f2/f3 are
+      // the same hash/boundary split the entry stages, wmf1a is the
+      // ms-floored watermark established by f1a's batch — the late filter
+      // for f2's batch, one batch later (probed: late-event filtering uses
+      // the PREVIOUS batch's watermark against the window END) — and only
+      // windows closed by the FINAL watermark may appear in Append output
+      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_id,
+        |                   event_type, value FROM events),
+        |b AS (SELECT date_trunc('hour', max(ts)) - INTERVAL 6 HOUR AS h6,
+        |             date_trunc('hour', max(ts)) - INTERVAL 12 HOUR AS h12 FROM ev),
+        |f1a AS (SELECT ev.* FROM ev, b WHERE ts <= h12
+        |        AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 <> 0),
+        |f1b AS (SELECT ev.* FROM ev, b WHERE ts > h12 AND ts <= h6
+        |        AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 <> 0),
+        |f2 AS (SELECT ev.* FROM ev, b WHERE ts <= h6
+        |       AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 = 0),
+        |f3 AS (SELECT ev.* FROM ev, b WHERE ts > h6),
+        |wmf1a AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm FROM f1a),
+        |wmfin AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm FROM ev),
+        |kept AS (SELECT * FROM f1a
+        |         UNION ALL
+        |         SELECT * FROM f1b
+        |         UNION ALL
+        |         SELECT f2.* FROM f2, wmf1a
+        |         WHERE date_trunc('hour', f2.ts) + INTERVAL 1 HOUR > wmf1a.wm
+        |         UNION ALL
+        |         SELECT * FROM f3)
+        |SELECT CAST(date_trunc('hour', k.ts) AS TIMESTAMP) AS hour_ts, event_type,
+        |       count(*) AS n_events,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM kept k, wmfin
+        |WHERE date_trunc('hour', k.ts) + INTERVAL 1 HOUR <= wmfin.wm
+        |GROUP BY 1, 2
+        |ORDER BY hour_ts, event_type""".stripMargin, mutatesSession = true),
 
     // INCREMENTAL-EMISSION semantics, differentially oracled: the same
     // four-file replay in UPDATE mode. Each micro-batch re-emits the
@@ -1652,7 +2173,7 @@ object Io {
     // each kept row with its batch number and replays the emission
     // history as a windowed cumulative sum — Update mode's entire
     // emission contract, value-checked.
-    "ts_stream_update_emit" -> ((s, d) => {
+    Entry("ts_stream_update_emit", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
       val (landing, schema) = stageLateLanding(s, d)
       val stream = s.readStream.schema(schema)
@@ -1668,7 +2189,38 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Update())
       Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("hour_ts", "event_type", "n_events")
-    }),
+    },
+      // Update mode's emission history: tag each kept row with its batch
+      // (the same 4-file split), then every (batch, group) with >= 1 kept
+      // row emits the group's CUMULATIVE aggregate as of that batch — a
+      // windowed cumulative sum over the batch ordering replays the
+      // multiset the memory sink accumulates
+      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_id,
+        |                   event_type, value FROM events),
+        |b AS (SELECT date_trunc('hour', max(ts)) - INTERVAL 6 HOUR AS h6,
+        |             date_trunc('hour', max(ts)) - INTERVAL 12 HOUR AS h12 FROM ev),
+        |tagged AS (SELECT ev.*, CASE
+        |             WHEN ts <= h6 AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 = 0 THEN 3
+        |             WHEN ts <= h12 THEN 1
+        |             WHEN ts <= h6 THEN 2
+        |             ELSE 4 END AS batch
+        |           FROM ev, b),
+        |wmf1a AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm
+        |          FROM tagged WHERE batch = 1),
+        |kept AS (SELECT t.* FROM tagged t, wmf1a
+        |         WHERE batch <> 3
+        |            OR date_trunc('hour', ts) + INTERVAL 1 HOUR > wmf1a.wm),
+        |g AS (SELECT batch, date_trunc('hour', ts) AS h, event_type,
+        |             count(*) AS dn,
+        |             sum(CAST(value AS DECIMAL(18,6))) AS ds
+        |      FROM kept GROUP BY 1, 2, 3)
+        |SELECT CAST(h AS TIMESTAMP) AS hour_ts, event_type,
+        |       CAST(SUM(dn) OVER w AS BIGINT) AS n_events,
+        |       CAST(SUM(ds) OVER w AS DOUBLE) AS sum_value
+        |FROM g
+        |WINDOW w AS (PARTITION BY h, event_type ORDER BY batch
+        |             ROWS UNBOUNDED PRECEDING)
+        |ORDER BY hour_ts, event_type, n_events""".stripMargin, mutatesSession = true),
 
     // STREAM-STREAM join execution path, differentially oracled — the
     // third streaming family after the windowed/session aggregations and
@@ -1678,8 +2230,19 @@ object Io {
     // answer, so the plain batch join is the oracle; the join itself
     // runs through a real StreamingQuery (two file-source streams over
     // the purchase/view slices of the fixture).
-    "ts_stream_interval_join" -> ((s, d) =>
-      streamIntervalJoin(s, d, "inner", "ts_stream_ij_sink")),
+    Entry("ts_stream_interval_join", (s, d) =>
+      streamIntervalJoin(s, d, "inner", "ts_stream_ij_sink"),
+      // bounded replay of a drained stream-stream INNER join equals the
+      // batch join — the oracle is the plain interval join
+      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
+        |           FROM events),
+        |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
+        |v AS (SELECT * FROM e WHERE event_type = 'view')
+        |SELECT l.user_id, l.ts AS left_ts, r.ts AS right_ts,
+        |       l.event_type AS left_type, r.event_type AS right_type
+        |FROM p l JOIN v r ON l.user_id = r.user_id
+        |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
+        |ORDER BY l.user_id, left_ts, right_ts""".stripMargin, mutatesSession = true),
 
     // EXACTLY-ONCE dedup under at-least-once delivery, differentially
     // oracled: the same events file lands TWICE (two identical files,
@@ -1688,7 +2251,7 @@ object Io {
     // every row, batch 2's verbatim re-delivery is dropped via keyed
     // state. A broken dedup doubles every row and cannot hash-match the
     // oracle (the plain distinct selection of the fixture).
-    "ts_stream_dedup" -> ((s, d) => {
+    Entry("ts_stream_dedup", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events").select("ts", "event_id", "event_type", "value")
@@ -1710,7 +2273,10 @@ object Io {
       Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("event_id").select(
         col("event_id"), col("event_type"), col("value"))
-    }),
+    },
+      // exactly-once output from a doubled delivery == the plain fixture
+      """SELECT event_id, event_type, value
+        |FROM events ORDER BY event_id""".stripMargin, mutatesSession = true),
 
     // CONDITIONAL EMISSION (flatMapGroupsWithState), differentially
     // oracled: the zero-or-many path mapGroups cannot express. Events
@@ -1721,7 +2287,7 @@ object Io {
     // max — quiet users stay silent. The oracle recomputes both halves'
     // per-user count/max and the strict-improvement rule in SQL, so the
     // emitted multiset (including the silent users) is value-checked.
-    "ts_stream_alerts" -> ((s, d) => {
+    Entry("ts_stream_alerts", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1746,7 +2312,28 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Append())
       Tables.deleteRecursively(new java.io.File(landing))
       s.table(sink).orderBy("user_id", "n_events")
-    }),
+    },
+      // batch 1 emits every user with history; batch 2 emits only strict
+      // max improvements (cumulative count, overall max)
+      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id,
+        |                  CAST(value AS DOUBLE) AS value
+        |           FROM events),
+        |b AS (SELECT date_trunc('HOUR', max(ts)) - INTERVAL 12 HOUR AS h12
+        |      FROM e),
+        |h1 AS (SELECT user_id, count(*) AS n1, max(value) AS m1
+        |       FROM e, b WHERE ts <= h12 GROUP BY user_id),
+        |h2 AS (SELECT user_id, count(*) AS n2, max(value) AS m2
+        |       FROM e, b WHERE ts > h12 GROUP BY user_id),
+        |e1 AS (SELECT user_id, CAST(n1 AS BIGINT) AS n_events,
+        |              m1 AS max_value
+        |       FROM h1),
+        |e2 AS (SELECT h2.user_id,
+        |              CAST(COALESCE(h1.n1, 0) + h2.n2 AS BIGINT) AS n_events,
+        |              GREATEST(COALESCE(h1.m1, h2.m2), h2.m2) AS max_value
+        |       FROM h2 LEFT JOIN h1 ON h1.user_id = h2.user_id
+        |       WHERE h1.user_id IS NULL OR h2.m2 > h1.m1)
+        |SELECT * FROM e1 UNION ALL SELECT * FROM e2
+        |ORDER BY user_id, n_events""".stripMargin, mutatesSession = true),
 
     // CUSTOM KEYED STATE (mapGroupsWithState), differentially oracled:
     // the typed Dataset[Event] path through runningUserStats — per-user
@@ -1754,7 +2341,7 @@ object Io {
     // drained fixture makes each user emit exactly one cumulative
     // update, so the oracle is the plain per-user aggregate (count +
     // max are aggregation-order independent, so the check is exact).
-    "ts_stream_running_stats" -> ((s, d) => {
+    Entry("ts_stream_running_stats", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1771,7 +2358,11 @@ object Io {
         org.apache.spark.sql.streaming.OutputMode.Update())
       Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id")
-    }),
+    },
+      // one drained micro-batch => one cumulative update per user; count
+      // and max are aggregation-order independent, so the check is exact
+      """SELECT user_id, count(*) AS n_events, max(value) AS max_value
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin, mutatesSession = true),
 
     // the Spark 4 transformWithState successor API to the entry above:
     // typed ValueState per user through the RocksDB state store (the only
@@ -1779,7 +2370,7 @@ object Io {
     // restored after), multi-trigger replay via maxFilesPerTrigger(1).
     // The LAST emission per user must equal the plain batch aggregate —
     // integer micro-unit sums, so state arithmetic crosses engines exactly
-    "ts_stream_tws_totals" -> ((s, d) => {
+    Entry("ts_stream_tws_totals", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1803,14 +2394,19 @@ object Io {
         .agg(max("n_events").as("n_events"),
           expr("max_by(sum_micros, n_events)").as("sum_micros"))
         .orderBy("user_id")
-    }),
+    },
+      // the drained-stream fixed point: whatever the trigger split, the
+      // final ValueState per user must equal the whole-input aggregate
+      """SELECT user_id, count(*) AS n_events,
+        |       CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS sum_micros
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin, mutatesSession = true),
 
     // ListState variant: deterministic 3-file replay (event_id % 3 ->
     // mtime-ordered landing files), one list element appended per
     // (user, trigger) = that batch's max value in micro-units; the
     // drained digest per user (n_batches / sum / max of per-batch maxes)
     // is recomputed by the oracle from the same % 3 split
-    "ts_stream_tws_batchmax" -> ((s, d) => {
+    Entry("ts_stream_tws_batchmax", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1839,7 +2435,17 @@ object Io {
           expr("max_by(sum_maxes, n_batches)").as("sum_maxes"),
           expr("max_by(max_max, n_batches)").as("max_max"))
         .orderBy("user_id")
-    }),
+    },
+      // per (user, file) max -> per-user digest of those maxes, straight
+      // from the same event_id % 3 split the staging uses
+      """WITH mic AS (SELECT user_id, event_id % 3 AS f,
+        |                    CAST(ROUND(value * 1000000) AS BIGINT) AS m
+        |             FROM events),
+        |bm AS (SELECT user_id, f, MAX(m) AS bmax FROM mic GROUP BY 1, 2)
+        |SELECT user_id, count(*) AS n_batches,
+        |       CAST(SUM(bmax) AS BIGINT) AS sum_maxes,
+        |       MAX(bmax) AS max_max
+        |FROM bm GROUP BY user_id ORDER BY user_id""".stripMargin, mutatesSession = true),
 
     // initial-state warm start: history (event_id % 3 = 0) lands as a
     // BATCH aggregate that seeds the v2 state via handleInitialState,
@@ -1847,7 +2453,7 @@ object Io {
     // streaming user's totals must equal the aggregate over
     // history ∪ stream (users with history but no stream rows never
     // re-emit, so the oracle restricts to streaming users)
-    "ts_stream_tws_initial" -> ((s, d) => {
+    Entry("ts_stream_tws_initial", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1880,13 +2486,23 @@ object Io {
         .agg(max("n_events").as("n_events"),
           expr("max_by(sum_micros, n_events)").as("sum_micros"))
         .orderBy("user_id")
-    }),
+    },
+      """WITH mic AS (SELECT user_id, event_id,
+        |                    CAST(ROUND(value * 1000000) AS BIGINT) AS m
+        |             FROM events),
+        |tot AS (SELECT user_id, count(*) AS n_events,
+        |               CAST(SUM(m) AS BIGINT) AS sum_micros
+        |        FROM mic GROUP BY user_id),
+        |streamers AS (SELECT DISTINCT user_id FROM events WHERE event_id % 3 <> 0)
+        |SELECT t.user_id, t.n_events, t.sum_micros
+        |FROM tot t JOIN streamers s ON s.user_id = t.user_id
+        |ORDER BY t.user_id""".stripMargin, mutatesSession = true),
 
     // MapState twin of the entry above: per-user event_type -> count map
     // through the same RocksDB-backed v2 state layer; only touched types
     // re-emit per trigger, and the last emission per (user, type) must
     // equal the batch GROUP BY
-    "ts_stream_tws_typecounts" -> ((s, d) => {
+    Entry("ts_stream_tws_typecounts", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -1909,7 +2525,9 @@ object Io {
         .groupBy("user_id", "event_type")
         .agg(max("n").as("n_events"))
         .orderBy("user_id", "event_type")
-    }),
+    },
+      """SELECT user_id, event_type, count(*) AS n_events
+        |FROM events GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin, mutatesSession = true),
 
     // STREAMING HLL: per event type, the 64-register distinct-user
     // sketch as TWS MapState — cardinality state stays 64 ints per key
@@ -1917,7 +2535,7 @@ object Io {
     // the unordered repartition(3) replay converges to the batch
     // register pipeline (the differential oracle); estimate = the same
     // alpha*m^2 / harmonic division as llm_distinct_sketch
-    "ts_stream_hll" -> ((s, d) => {
+    Entry("ts_stream_hll", (s, d) => {
       Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
@@ -1943,14 +2561,44 @@ object Io {
         .withColumn("hll_est", expr(
           s"CAST(ROUND(CAST($alphaNum AS DOUBLE) / harmonic_s, 6) AS DOUBLE)"))
         .orderBy("event_type")
-    }),
+    },
+      // the batch register pipeline over the full table IS the drained
+      // stream state (max-merge order independence); same md5 bucket/rho
+      // derivation as llm_distinct_sketch, same estimate division
+      {
+      val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
+      s"""WITH h AS (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hh
+         |           FROM events),
+         |f AS (SELECT event_type,
+         |             CAST(('0x' || substr(hh, 14, 3))::BIGINT % 64 AS INT) AS bucket,
+         |             length(regexp_extract(substr(hh, 1, 13), '^0*')) AS zeros,
+         |             substr(hh, length(regexp_extract(substr(hh, 1, 13), '^0*')) + 1, 1) AS fd
+         |      FROM h),
+         |r AS (SELECT event_type, bucket,
+         |             CASE WHEN zeros = 13 THEN 53
+         |             ELSE zeros * 4 + 1 + (CASE fd
+         |               WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
+         |               WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
+         |               WHEN '7' THEN 1 ELSE 0 END) END AS rho
+         |      FROM f),
+         |regs AS (SELECT event_type, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
+         |sk AS (SELECT event_type, count(*) AS nb,
+         |              CAST(SUM(1::BIGINT << (53 - mj)) AS BIGINT) AS s_hit
+         |       FROM regs GROUP BY 1)
+         |SELECT event_type, CAST(nb AS BIGINT) AS n_buckets_hit,
+         |       CAST(s_hit + (64 - nb) * (1::BIGINT << 53) AS BIGINT) AS harmonic_s,
+         |       CAST(ROUND(CAST($alphaNum AS DOUBLE)
+         |            / CAST(s_hit + (64 - nb) * (1::BIGINT << 53) AS BIGINT),
+         |            6) AS DOUBLE) AS hll_est
+         |FROM sk ORDER BY event_type""".stripMargin
+    }, mutatesSession = true),
 
     // STREAMING exact distinct via bitmap chunks — agg_bitmap_distinct's
     // state held live as TWS MapState; OR-merge is idempotent, so the
     // unordered replay (and any duplicate delivery) converges and the
     // batch bit_or pipeline is the oracle. Both snapshot fields are
     // monotone → max picks the drained state
-    "ts_stream_bitmap_distinct" -> ((s, d) => {
+    Entry("ts_stream_bitmap_distinct", (s, d) => {
       Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
@@ -1975,7 +2623,16 @@ object Io {
         .selectExpr("event_type", "CAST(n_chunks AS BIGINT) AS n_chunks",
           "CAST(n_distinct AS BIGINT) AS n_distinct")
         .orderBy("event_type")
-    }),
+    },
+      // the drained OR-merged bitmaps must equal the batch bit_or pipeline
+      """
+      WITH b AS (SELECT event_type, user_id // 62 AS chunk,
+                        bit_or(1::BIGINT << CAST(user_id % 62 AS INT)) AS bm
+                 FROM events GROUP BY event_type, user_id // 62)
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_chunks,
+             CAST(SUM(bit_count(bm)) AS BIGINT) AS n_distinct
+      FROM b GROUP BY event_type
+      ORDER BY event_type""", mutatesSession = true),
 
     // STREAMING top-k heavy hitters: the exact per-type (user → count)
     // map as TWS MapState, re-ranked each batch — counts are commutative
@@ -1983,7 +2640,7 @@ object Io {
     // groupBy + rank window is the oracle verbatim; ties break on
     // user_id so the ranking itself is deterministic. n_total is
     // strictly monotone per key → max_by picks the drained snapshot
-    "ts_stream_topk" -> ((s, d) => {
+    Entry("ts_stream_topk", (s, d) => {
       Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
@@ -2007,7 +2664,20 @@ object Io {
         .selectExpr("event_type", "CAST(rank AS INT) AS rank",
           "m.user_id AS user_id", "CAST(m.cnt AS BIGINT) AS cnt")
         .orderBy("event_type", "rank")
-    }),
+    },
+      // the drained top-k map must equal the batch count + rank window
+      // (ties on user_id make the ranking total)
+      """
+      WITH c AS (SELECT event_type, user_id, COUNT(*) AS cnt
+                 FROM events GROUP BY event_type, user_id),
+      r AS (SELECT event_type, user_id, cnt,
+                   row_number() OVER (PARTITION BY event_type
+                     ORDER BY cnt DESC, user_id) AS rank
+            FROM c)
+      SELECT event_type, CAST(rank AS INT) AS rank, user_id,
+             CAST(cnt AS BIGINT) AS cnt
+      FROM r WHERE rank <= 5
+      ORDER BY event_type, rank""", mutatesSession = true),
 
     // STREAMING histogram-sketch quantiles: agg_quantile_sketch's
     // (bin → count) state held live as TWS MapState — the sketch is
@@ -2015,7 +2685,7 @@ object Io {
     // the BATCH sketch SQL is the oracle verbatim; estimate arithmetic
     // is the identical all-integer interpolation. n_total is strictly
     // monotone per key → max_by picks the drained snapshot
-    "ts_stream_quantile" -> ((s, d) => {
+    Entry("ts_stream_quantile", (s, d) => {
       Tables.register(s, d)
       val rows = s.table("orders").selectExpr("o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents")
@@ -2038,7 +2708,10 @@ object Io {
         .selectExpr("o_orderstatus", "CAST(pct AS INT) AS pct",
           "CAST(est_cents AS BIGINT) AS est_cents")
         .orderBy("o_orderstatus", "pct")
-    }),
+    },
+      // the drained sketch must equal the batch histogram sketch — oracle
+      // = the agg_quantile_sketch algebra (DuckDB's //), verbatim
+      Ops.quantileSketchOracle, mutatesSession = true),
 
     // event-time TIMERS — the last v2 surface without an entry (r9
     // verdict #8): per-user inactivity sessionization through
@@ -2058,7 +2731,7 @@ object Io {
     // watermark (ms-floored global max ts - 2h delay) — 86 of 150
     // fixture users at sf0.01; the rest stay in state and emit
     // nothing. The oracle recomputes the expiry arithmetic per user
-    "ts_stream_tws_timers" -> ((s, d) => {
+    Entry("ts_stream_tws_timers", (s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.register(s, d)
       val evs = s.table("events")
@@ -2087,7 +2760,22 @@ object Io {
         .select(col("user_id"), col("n_events"),
           expr("timestamp_millis(expired_at_ms)").as("expired_at"))
         .orderBy("user_id")
-    }),
+    },
+      // replay the timer arithmetic: a user fires iff its expiry
+      // (ms-floored last event ts + 4h gap) is strictly below the final
+      // watermark (ms-floored global max ts - 2h delay); the fired record
+      // carries the whole-stream event count (the state at firing time —
+      // every user's rows land in ONE batch, before its timer can fire)
+      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
+        |u AS (SELECT user_id, count(*) AS n_events,
+        |             date_trunc('milliseconds', max(ts)) AS last_ts
+        |      FROM ev GROUP BY 1),
+        |wm AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm
+        |       FROM ev)
+        |SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
+        |       CAST(last_ts + INTERVAL 4 HOUR AS TIMESTAMP) AS expired_at
+        |FROM u, wm WHERE last_ts + INTERVAL 4 HOUR < wm.wm
+        |ORDER BY user_id""".stripMargin, mutatesSession = true),
 
     // LEFT-OUTER stream-stream join: the WATERMARK-EVICTION emission
     // contract, differentially oracled. An unmatched left row emits
@@ -2098,1017 +2786,14 @@ object Io {
     // (min of both streams' ms-floored max ts, minus the 2h delay).
     // The oracle recomputes match set, watermark, and eviction rule in
     // SQL, so the emitted/held-back split is value-checked.
-    "ts_stream_outer_join" -> ((s, d) =>
-      streamIntervalJoin(s, d, "left_outer", "ts_stream_oj_sink")),
-
-    // FULL-OUTER stream-stream join — BOTH eviction contracts at once:
-    // unmatched left emits under the left rule above, unmatched right
-    // emits once the watermark passes its own ts (a right row can only
-    // be matched by a left with l.ts in [r.ts - 1h, r.ts], and future
-    // lefts sit above the watermark) — both rules recomputed in SQL
-    "ts_stream_full_outer_join" -> ((s, d) =>
-      streamIntervalJoin(s, d, "full_outer", "ts_stream_foj_sink")),
-
-    "ts_sessionize" -> ((s, d) => {
-      Tables.register(s, d)
-      s.sql(
-        """SELECT user_id,
-          |       CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
-          |       COUNT(*) AS n_events
-          |FROM (SELECT user_id,
-          |             CASE WHEN prev_ts IS NULL
-          |                    OR ts - prev_ts > INTERVAL '30' MINUTE THEN 1 ELSE 0 END AS new_sess
-          |      FROM (SELECT user_id, ts, event_id,
-          |                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          |            FROM events))
-          |GROUP BY user_id
-          |ORDER BY user_id""".stripMargin)
-    }),
-
-    // gap-based session windows in BATCH mode (the streaming twin lives in
-    // graft.streaming.Streams): Spark's session_window merges events whose
-    // gaps stay under 30 min; the oracle rebuilds the same sessions with
-    // gaps-and-islands SQL. Boundary semantics (probed; SessionWindowSpec
-    // pins them): an event EXACTLY 30 min after the previous one MERGES —
-    // the merge rule is touch-inclusive even though each raw window is
-    // half-open — so the oracle's break condition is STRICTLY `>`.
-    "ts_session_window" -> ((s, d) => {
-      Tables.register(s, d)
-      // session_window must appear IN the GROUP BY — as a plain projection
-      // it never merges, every event keeps its raw [ts, ts+gap) window
-      s.sql(
-        """SELECT user_id,
-          |       session_window.start AS session_start,
-          |       session_window.end AS session_end,
-          |       COUNT(*) AS n_events
-          |FROM events
-          |GROUP BY user_id, session_window(ts, '30 minutes')
-          |ORDER BY user_id, session_start""".stripMargin)
-    }),
-
-    // as-of join: every purchase attributed to the user's latest preceding
-    // view (backward inclusive), DuckDB's native ASOF JOIN as the oracle
-    "ts_asof_join" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.where("event_type = 'purchase'")
-        .select("event_id", "user_id", "ts")
-      val views = ev.where("event_type = 'view'")
-        .groupBy("user_id", "ts").agg(max("value").as("v_value"))
-      graft.operators.AsOf.joinBackward(purchases, views, "user_id", "ts",
-          Seq("v_value"))
-        .selectExpr("event_id", "user_id", "ts AS p_ts",
-          "CAST(right_v_value AS DOUBLE) AS v_value")
-        .orderBy("event_id")
-    }),
-
-    // the skew-safe as-of (time-bucketed pre-carry, hourly buckets): must
-    // produce EXACTLY the rows of ts_asof_join — same DuckDB ASOF oracle,
-    // so the boundary stitch is differentially checked on real data
-    "ts_asof_bucketed" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.where("event_type = 'purchase'")
-        .select("event_id", "user_id", "ts")
-      val views = ev.where("event_type = 'view'")
-        .groupBy("user_id", "ts").agg(max("value").as("v_value"))
-      graft.operators.AsOf.joinBackwardBucketed(purchases, views, "user_id",
-          "ts", Seq("v_value"), bucketSeconds = 3600L)
-        .selectExpr("event_id", "user_id", "ts AS p_ts",
-          "CAST(right_v_value AS DOUBLE) AS v_value")
-        .orderBy("event_id")
-    }),
-
-    // forward as-of: every view attributed to the user's next purchase
-    // (at-or-after, inclusive) — the mirror of ts_asof_join, oracled by
-    // DuckDB's ASOF JOIN with the inequality flipped
-    "ts_asof_forward" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val views = ev.where("event_type = 'view'")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.where("event_type = 'purchase'")
-        .groupBy("user_id", "ts").agg(max("value").as("p_value"))
-      graft.operators.AsOf.joinForward(views, purchases, "user_id", "ts",
-          Seq("p_value"))
-        .selectExpr("event_id", "user_id", "ts AS v_ts",
-          "CAST(right_p_value AS DOUBLE) AS p_value")
-        .orderBy("event_id")
-    }),
-
-    // nearest-direction as-of (pandas merge_asof direction='nearest'):
-    // each purchase matched to its closest view in EITHER direction,
-    // exact integer-micros distance, ties to the earlier (backward)
-    // side; composed from the two one-shuffle carry passes stitched on
-    // the unique left id — the oracle composes DuckDB's two ASOF JOINs
-    // with the same pick rule
-    "ts_asof_nearest" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.where("event_type = 'purchase'")
-        .select("event_id", "user_id", "ts")
-      val views = ev.where("event_type = 'view'")
-        .groupBy(col("user_id"), col("ts").as("v_ts"))
-        .agg(max("value").as("v_value"))
-        .selectExpr("user_id", "v_ts AS ts", "v_ts", "v_value")
-      graft.operators.AsOf.joinNearest(purchases, views, "user_id", "ts",
-          "event_id", Seq("v_ts", "v_value"), "v_ts")
-        .selectExpr("event_id", "user_id",
-          "abs(unix_micros(ts) - unix_micros(right_v_ts)) AS delta_us",
-          "CAST(right_v_value AS DOUBLE) AS v_value", "direction")
-        .orderBy("event_id")
-    }),
-
-    // nearest as-of BOUNDED by a 10-minute tolerance (pandas merge_asof
-    // tolerance=): a directed match beyond the window counts as absent —
-    // an in-window backward match beats a closer out-of-window forward
-    // one, and purchases with no view within ±10 min drop out entirely.
-    // Same two carry passes; the bound is a post-stitch integer-micros
-    // predicate, not a new plan
-    "ts_asof_nearest_tol" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.where("event_type = 'purchase'")
-        .select("event_id", "user_id", "ts")
-      val views = ev.where("event_type = 'view'")
-        .groupBy(col("user_id"), col("ts").as("v_ts"))
-        .agg(max("value").as("v_value"))
-        .selectExpr("user_id", "v_ts AS ts", "v_ts", "v_value")
-      graft.operators.AsOf.joinNearest(purchases, views, "user_id", "ts",
-          "event_id", Seq("v_ts", "v_value"), "v_ts",
-          toleranceMicros = 600L * 1000000L)
-        .selectExpr("event_id", "user_id",
-          "abs(unix_micros(ts) - unix_micros(right_v_ts)) AS delta_us",
-          "CAST(right_v_value AS DOUBLE) AS v_value", "direction")
-        .orderBy("event_id")
-    }),
-
-    // ordered conversion funnel view → click → purchase, 7-day max gap per
-    // step (operators/Funnel): per-user frontier timestamps as exact epoch
-    // micros + step_reached. The oracle replays the frontier-greedy rule as
-    // three chained min-aggregates in SQL — a wrong strictness ('>=' for
-    // '>'), a wrong horizon bound, or a lost stalling user all change the
-    // multiset. Micros-exact: both engines work in the micro-truncated
-    // domain (CAST(ts AS TIMESTAMP) in DuckDB) and epoch_us/unix_micros
-    // are integer, so no rounding anywhere.
-    "ts_funnel" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val steps = Seq(
-        "view" -> (col("event_type") === "view"),
-        "click" -> (col("event_type") === "click"),
-        "purchase" -> (col("event_type") === "purchase"))
-      graft.operators.Funnel.ordered(ev, "user_id", "ts", steps,
-          Some("INTERVAL 7 DAYS"))
-        .selectExpr("user_id",
-          "unix_micros(view_ts) AS view_us",
-          "unix_micros(click_ts) AS click_us",
-          "unix_micros(purchase_ts) AS purchase_us",
-          ("CAST(1 + CASE WHEN click_ts IS NULL THEN 0 ELSE 1 END" +
-            " + CASE WHEN purchase_ts IS NULL THEN 0 ELSE 1 END AS INT)" +
-            " AS step_reached"))
-        .orderBy("user_id")
-    }),
-
-    // daily resample + gap fill with LOCF (operators/Resample): the dense
-    // per-user day spine materializes missing days as zero-count rows and
-    // carries the last observed daily sum forward. The oracle rebuilds the
-    // spine with generate_series and the carry with IGNORE NULLS window
-    // SQL; sums ride DECIMAL until the output edge.
-    "ts_gap_fill" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      graft.operators.Resample.locfDaily(ev, "user_id", "ts", "value")
-        .orderBy("user_id", "day")
-    }),
-
-    // binned range join (operators/RangeJoin): clicks inside 10-minute
-    // error-incident windows — NO equi key, so Catalyst alone plans a
-    // nested loop; the bin discretization turns it into a hash equi-join
-    // (plan-gated in RangeJoinSpec). The oracle is the plain interval
-    // predicate in DuckDB, so a bin off-by-one at either edge, a dropped
-    // multi-bin interval, or a double-counted pair all hash-mismatch.
-    "join_range_binned" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val incidents = ev.where("event_type = 'error'")
-        .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
-          expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
-      val clicks = ev.where("event_type = 'click'")
-        .select(col("event_id"), col("ts"), col("value"))
-      graft.operators.RangeJoin.pointInInterval(
-          clicks, "ts", incidents, "inc_s", "inc_e", binSeconds = 600L)
-        .groupBy("incident_id")
-        .agg(count(lit(1)).as("n_clicks"),
-          expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)")
-            .as("click_value"))
-        .orderBy("incident_id")
-    }),
-
-    // interval × interval overlap through the same binning (attributed
-    // to the shared max-start bin — exactly-once, no dedup): error
-    // windows overlapping purchase windows, counted per incident
-    "join_interval_overlap" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val inc = ev.where("event_type = 'error'")
-        .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
-          expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
-      val pur = ev.where("event_type = 'purchase'")
-        .select(col("event_id").as("p_id"), col("ts").as("p_s"),
-          expr("ts + INTERVAL 10 MINUTES").as("p_e"), col("value"))
-      graft.operators.RangeJoin.intervalOverlap(
-          inc, "inc_s", "inc_e", pur, "p_s", "p_e", binSeconds = 600L)
-        .groupBy("incident_id")
-        .agg(count(lit(1)).as("n_overlaps"),
-          expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)")
-            .as("purchase_value"))
-        .orderBy("incident_id")
-    }),
-
-    // tolerance self-pairing (RangeJoin.proximityPairs): error events
-    // within 5 minutes of each other across ALL users — no equi key, the
-    // classic coincidence-correlation query. Micros-exact output, each
-    // unordered pair exactly once (a_id < b_id)
-    "join_proximity_pairs" -> ((s, d) => {
-      val errs = t(s, d, "events").where("event_type = 'error'")
-        .select("event_id", "ts")
-      graft.operators.RangeJoin.proximityPairs(errs, "event_id", "ts",
-          toleranceSeconds = 300L)
-        .selectExpr("a_id", "b_id",
-          "unix_micros(b_ts) - unix_micros(a_ts) AS gap_us")
-        .orderBy("a_id", "b_id")
-    }),
-
-    // Allen's interval-algebra census over the SAME binned overlap join
-    // (never an all-pairs NLJ): every overlapping event-interval pair
-    // classified into the 9 concurrent Allen relations (equals, starts/
-    // started_by, finishes/finished_by, during/contains, overlaps/
-    // overlapped_by — the disjoint before/after/meets need no join) by a
-    // CASE over exact endpoint micros. Variable durations (value-derived,
-    // floor() to dodge the CAST-rounding divergence) populate every
-    // branch; pairs attribute once via the shared-bin rule + a_id < b_id
-    "join_allen_relations" -> ((s, d) => {
-      // minute-floored starts + minute-multiple durations: endpoint
-      // coincidences (equals/starts/finishes/meets-free census) actually
-      // occur, so every CASE branch carries pairs
-      val ev = t(s, d, "events").where("event_type IN ('error', 'signup')")
-        .select(col("event_id"),
-          expr("(unix_micros(ts) div 60000000) * 60000000").as("su"))
-        .withColumn("eu",
-          expr("su + 60000000 * (1 + (event_id % 10))"))
-      val a = ev.select(col("event_id").as("a_id"),
-        expr("timestamp_micros(su)").as("a_s"),
-        expr("timestamp_micros(eu)").as("a_e"),
-        col("su").as("a_su"), col("eu").as("a_eu"))
-      val b = ev.select(col("event_id").as("b_id"),
-        expr("timestamp_micros(su)").as("b_s"),
-        expr("timestamp_micros(eu)").as("b_e"),
-        col("su").as("b_su"), col("eu").as("b_eu"))
-      graft.operators.RangeJoin.intervalOverlap(
-          a, "a_s", "a_e", b, "b_s", "b_e", binSeconds = 600L)
-        .where("a_id < b_id")
-        .withColumn("relation", expr(
-          """CASE WHEN a_su = b_su AND a_eu = b_eu THEN 'equals'
-            |     WHEN a_su = b_su AND a_eu < b_eu THEN 'starts'
-            |     WHEN a_su = b_su THEN 'started_by'
-            |     WHEN a_eu = b_eu AND a_su > b_su THEN 'finishes'
-            |     WHEN a_eu = b_eu THEN 'finished_by'
-            |     WHEN a_su > b_su AND a_eu < b_eu THEN 'during'
-            |     WHEN a_su < b_su AND a_eu > b_eu THEN 'contains'
-            |     WHEN a_su < b_su THEN 'overlaps'
-            |     ELSE 'overlapped_by' END""".stripMargin))
-        .groupBy("relation")
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("relation")
-    }),
-
-    // z-order clustered WRITE (ZOrder.writeClustered): range-partitioned
-    // by z, sorted within files; reading it back must reproduce the
-    // original lineitem aggregate exactly — the layout rewrite is
-    // lossless (the per-file locality it buys is LayoutOperatorSpec's
-    // footer-stat assertion)
-    "sink_zorder_clustered" -> ((s, d) => {
-      val out = s"${base(s, d)}/zorder_out"
-      graft.operators.ZOrder.writeClustered(
-        t(s, d, "lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
-        "l_partkey", "l_suppkey", out, numFiles = 8)
-      s.read.parquet(out)
-        .groupBy(expr("l_partkey % 10").as("pk_mod"))
-        .agg(count(lit(1)).as("n_rows"),
-          expr("CAST(SUM(CAST(l_quantity AS DECIMAL(14,2))) AS DOUBLE)")
-            .as("sum_qty"),
-          max("l_suppkey").as("max_sk"))
-        .orderBy("pk_mod")
-    }),
-
-    // catalog DML: CTAS + INSERT INTO a managed parquet table, then read
-    // back (reference DmlNode INSERT/CTAS, datafusion.proto:269-283) —
-    // the oracle aggregates the original rows, so a lost or duplicated
-    // insert shows up as a hash mismatch
-    "ddl_ctas_insert" -> ((s, d) => {
-      Tables.register(s, d)
-      Tables.dropManaged(s, "ctas_orders")
-      s.sql(
-        """CREATE TABLE ctas_orders USING PARQUET AS
-          |SELECT o_orderstatus, o_totalprice FROM orders
-          |WHERE o_orderstatus = 'F'""".stripMargin)
-      s.sql(
-        """INSERT INTO ctas_orders
-          |SELECT o_orderstatus, o_totalprice FROM orders
-          |WHERE o_orderstatus = 'O'""".stripMargin)
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS n_orders,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
-          |FROM ctas_orders
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    "json_props_agg" -> ((s, d) => {
-      Tables.register(s, d)
-      s.sql(
-        """SELECT event_type,
-          |       CAST(SUM(CAST(get_json_object(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-          |       COUNT(*) AS n_events
-          |FROM events
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    // Spark 4's VARIANT type over the semi-structured props column:
-    // parse once, typed variant_get extraction, try_variant_get on a
-    // missing path must be NULL-silent (counted, expected zero hits);
-    // the oracle extracts through DuckDB's JSON functions instead
-    "fn_variant_json" -> ((s, d) => {
-      Tables.register(s, d)
-      s.sql(
-        """SELECT event_type,
-          |       CAST(SUM(variant_get(parse_json(props), '$.k', 'bigint')) AS BIGINT) AS sum_k,
-          |       CAST(SUM(CASE WHEN variant_get(parse_json(props), '$.k', 'bigint') > 50
-          |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
-          |       COUNT(try_variant_get(parse_json(props), '$.missing', 'bigint')) AS n_missing_hits
-          |FROM events
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    // the physical index predicted from the fixture writer's doc_id
-    // order (invariant verified with DuckDB file_row_number at every SF)
-    "src_metadata_cols" -> """
-      SELECT doc_id, 'documents.parquet' AS file_name,
-             CAST(doc_id AS BIGINT) AS row_index
-      FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-
-    "src_csv_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp,
-        |       CAST(MIN(o_orderdate) AS DATE) AS first_date
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "src_ndjson_roundtrip" ->
-      """SELECT c_mktsegment, count(*) AS n_cust,
-        |       CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal,
-        |       min(c_name) AS first_name
-        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-
-    "src_arrow_roundtrip" ->
-      """SELECT CAST(s_nationkey AS BIGINT) AS s_nationkey, count(*) AS n_supp,
-        |       CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal,
-        |       min(s_name) AS first_name
-        |FROM supplier GROUP BY 1 ORDER BY s_nationkey""".stripMargin,
-
-    // assignment replayed corpus-wide (raw-cosine argmax, min-cid ties
-    // — the Ivf.assign contract), then ranked within the probe's cluster
-    "sink_ivf_partitioned" ->
-      s"""WITH c AS (SELECT CAST(vec_id AS INT) AS cid, embedding AS ce
-         |           FROM embeddings WHERE vec_id IN (3, 17, 31, 59)),
-         |a AS (SELECT v.vec_id, c.cid,
-         |             ${Llm.duckCosineRaw("v.embedding", "c.ce")} AS cos
-         |      FROM embeddings v CROSS JOIN c),
-         |mx AS (SELECT vec_id, MAX(cos) AS m FROM a GROUP BY vec_id),
-         |asg AS (SELECT a.vec_id, MIN(a.cid) AS cid
-         |        FROM a JOIN mx ON a.vec_id = mx.vec_id AND a.cos = mx.m
-         |        GROUP BY a.vec_id),
-         |pc AS (SELECT cid FROM asg WHERE vec_id = 7),
-         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 7),
-         |scored AS (SELECT e.vec_id,
-         |                  ${Llm.duckCosine("e.embedding", "qe")} AS cos
-         |           FROM asg JOIN embeddings e ON e.vec_id = asg.vec_id,
-         |                pc, q
-         |           WHERE asg.cid = pc.cid AND asg.vec_id <> 7),
-         |r AS (SELECT vec_id, cos,
-         |             row_number() OVER (ORDER BY cos DESC, vec_id) AS rank
-         |      FROM scored)
-         |SELECT CAST(rank AS INT) AS rank, vec_id,
-         |       (SELECT CAST(cid AS INT) FROM pc) AS centroid_id, cos
-         |FROM r WHERE rank <= 3 ORDER BY rank""".stripMargin,
-
-    // PQ codes + assignment replayed corpus-wide; the probe's ADC
-    // distance is its per-subspace distance to each candidate's assigned
-    // centroid, folded in subspace order (the llm_pq_topk fold), ranked
-    // within the probe's own cluster only
-    "llm_ivfpq_serving" ->
-      s"""WITH ${Llm.pqCodeCtes},
-         |$ivfOracleCtes,
-         |pdist AS (SELECT m, j, d FROM pd WHERE vec_id = 7),
-         |adc AS (SELECT cq.vec_id AS cand_id,
-         |               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |                 list(pdist.d ORDER BY cq.m)), (acc, v) -> acc + v) AS dist
-         |        FROM pqcodes cq
-         |        JOIN asg a ON a.vec_id = cq.vec_id
-         |        JOIN pdist ON pdist.m = cq.m AND pdist.j = cq.code, pc
-         |        WHERE a.cid = pc.cid AND cq.vec_id <> 7
-         |        GROUP BY cq.vec_id),
-         |r AS (SELECT cand_id, dist,
-         |             row_number() OVER (ORDER BY dist, cand_id) AS rank
-         |      FROM adc)
-         |SELECT CAST(rank AS INT) AS rank, cand_id,
-         |       (SELECT CAST(cid AS INT) FROM pc) AS centroid_id,
-         |       CAST(ROUND(dist, 6) AS DOUBLE) AS dist
-         |FROM r WHERE rank <= 3 ORDER BY rank""".stripMargin,
-
-    // the same ADC shard scan vs the exact full-corpus cosine top-3
-    "llm_ivfpq_recall" ->
-      s"""WITH ${Llm.pqCodeCtes},
-         |$ivfOracleCtes,
-         |pdist AS (SELECT m, j, d FROM pd WHERE vec_id = 7),
-         |adc AS (SELECT cq.vec_id AS cand_id,
-         |               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |                 list(pdist.d ORDER BY cq.m)), (acc, v) -> acc + v) AS dist
-         |        FROM pqcodes cq
-         |        JOIN asg a ON a.vec_id = cq.vec_id
-         |        JOIN pdist ON pdist.m = cq.m AND pdist.j = cq.code, pc
-         |        WHERE a.cid = pc.cid AND cq.vec_id <> 7
-         |        GROUP BY cq.vec_id),
-         |ap AS (SELECT cand_id FROM (
-         |         SELECT cand_id, row_number() OVER (ORDER BY dist, cand_id) AS rnk
-         |         FROM adc) WHERE rnk <= 3),
-         |ex AS (SELECT cand_id FROM (
-         |         SELECT e.vec_id AS cand_id, row_number() OVER (
-         |           ORDER BY ${Llm.duckCosine("e.embedding", "qe")} DESC,
-         |                    e.vec_id) AS rnk
-         |         FROM embeddings e, q WHERE e.vec_id <> 7) WHERE rnk <= 3)
-         |SELECT CAST(7 AS BIGINT) AS probe_id,
-         |       CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |       CAST((SELECT count(*) FROM ex JOIN ap USING (cand_id))
-         |            AS BIGINT) AS n_hit,
-         |       CAST(ROUND(
-         |         CAST((SELECT count(*) FROM ex JOIN ap USING (cand_id)) AS DOUBLE)
-         |         / NULLIF((SELECT count(*) FROM ex), 0), 6) AS DOUBLE) AS recall
-         |""".stripMargin,
-
-    // the nprobe sweep: probe-side centroid ranking (raw cosine, cid
-    // ties), per-nprobe candidates from the top-nprobe clusters, exact
-    // rounded-cosine top-5 within, recall vs the full-corpus top-5
-    "llm_ivf_nprobe" ->
-      s"""WITH $ivfOracleCtes,
-         |pr AS (SELECT cid, row_number() OVER (
-         |         ORDER BY ${Llm.duckCosineRaw("c.ce", "qe")} DESC, c.cid) AS rnk
-         |       FROM cent c, q),
-         |np(nprobe) AS (VALUES (1), (2), (4)),
-         |scored AS (SELECT a.vec_id AS cand_id, a.cid,
-         |                  ${Llm.duckCosine("e.embedding", "qe")} AS cos
-         |           FROM asg a JOIN embeddings e ON e.vec_id = a.vec_id, q
-         |           WHERE a.vec_id <> 7),
-         |ap AS (SELECT np.nprobe, s.cand_id, row_number() OVER (
-         |         PARTITION BY np.nprobe ORDER BY s.cos DESC, s.cand_id) AS rnk
-         |       FROM np, scored s JOIN pr ON pr.cid = s.cid
-         |       WHERE pr.rnk <= np.nprobe),
-         |ex AS (SELECT cand_id FROM (
-         |         SELECT cand_id, row_number() OVER (
-         |           ORDER BY cos DESC, cand_id) AS rnk
-         |         FROM scored) WHERE rnk <= 5),
-         |hits AS (SELECT a.nprobe, count(*) AS n_hit
-         |         FROM ap a JOIN ex ON ex.cand_id = a.cand_id
-         |         WHERE a.rnk <= 5 GROUP BY a.nprobe)
-         |SELECT np.nprobe, CAST(7 AS BIGINT) AS probe_id,
-         |       CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-         |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
-         |            / NULLIF((SELECT count(*) FROM ex), 0), 6) AS DOUBLE) AS recall
-         |FROM np LEFT JOIN hits h ON h.nprobe = np.nprobe
-         |ORDER BY np.nprobe""".stripMargin,
-
-    // recomputed over the parquet originals only — green proves both
-    // DSv2 dimensions carried exactly the base rows into the join
-    "src_federated_join" ->
-      """SELECT n_name, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |         AS sum_price
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    // each snapshot recomputed from the base table: the v1-pinned read
-    // must NOT see the appended odd keys
-    "src_arrow_time_travel" ->
-      """WITH ev AS (SELECT count(*) AS n,
-        |              CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |                AS sum_bal
-        |            FROM supplier WHERE s_suppkey % 2 = 0),
-        |al AS (SELECT count(*) AS n,
-        |              CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |                AS sum_bal
-        |       FROM supplier)
-        |SELECT 'v1' AS snap, n, sum_bal FROM ev
-        |UNION ALL SELECT 'v2', n, sum_bal FROM al
-        |UNION ALL SELECT 'latest', n, sum_bal FROM al
-        |ORDER BY snap""".stripMargin,
-
-    // recomputed over the ORIGINAL parquet — green means the arrow list
-    // write+read preserved every element bit-for-bit, in order
-    "src_arrow_vectors" ->
-      """SELECT vec_id, CAST(len(embedding) AS INT) AS n_dims,
-        |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |         list_transform(embedding, x -> CAST(x AS DOUBLE))),
-        |         (acc, x) -> acc + x), 6) + 0.0 AS DOUBLE) AS vsum,
-        |       label
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "src_avro_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp,
-        |       CAST(MIN(o_orderkey) AS BIGINT) AS first_key
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "src_csv_malformed" ->
-      """SELECT c_mktsegment,
-        |       count(*) AS n_rows,
-        |       COUNT(CASE WHEN c_custkey % 50 <> 0 THEN 1 END) AS n_keys_parsed,
-        |       COUNT(CASE WHEN c_custkey % 50 = 0 THEN 1 END) AS n_corrupt,
-        |       CAST(SUM(CASE WHEN c_custkey % 50 <> 0
-        |                     THEN CAST(c_acctbal AS DECIMAL(12,2)) END) AS DOUBLE)
-        |         AS sum_clean_bal
-        |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-
-    "src_text_gzip" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |       min(doc_id) AS first_doc
-        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "src_orc_roundtrip" ->
-      """SELECT p_brand, count(*) AS n_parts,
-        |       CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
-        |       min(p_name) AS first_name
-        |FROM part WHERE p_size <= 25
-        |GROUP BY 1 ORDER BY p_brand""".stripMargin,
-
-    "src_xml_roundtrip" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum,
-        |       CAST(SUM(('0x' || substr(md5(coalesce(text, '')), 1, 12))::BIGINT)
-        |            AS BIGINT) AS fp_sum
-        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "src_listing_dir" ->
-      """SELECT l_returnflag, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    // every nested field recomputed from the FLAT source columns
-    "src_nested_struct" ->
-      """SELECT doc_id, lang, n_chars,
-        |       source AS tag0, CAST(2 AS INT) AS n_tags
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "sink_parquet_partitioned" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
-        |FROM orders WHERE o_orderstatus IN ('F', 'O')
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-
-    "src_merge_schema" ->
-      """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus
-        |            ELSE '__pre_evolution' END AS status,
-        |       count(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
-        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-
-    // the bloom-written copy must answer the point lookup exactly like
-    // the base table
-    "sink_parquet_bloom" ->
-      """SELECT l_orderkey, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |         AS sum_price
-        |FROM lineitem WHERE l_orderkey IN (7, 1029, 4480, 29988)
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-
-    "sink_compact_small_files" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |       count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "layout_zorder" -> {
-      val z = graft.operators.ZOrder.zvalueSql("l_partkey", "l_suppkey")
-      s"""WITH li AS (SELECT l_partkey, l_suppkey, $z AS z FROM lineitem),
-         |m AS (SELECT max(z) AS zmax FROM li)
-         |SELECT (z * 8) // (zmax + 1) AS bucket, count(*) AS n_rows,
-         |       min(l_partkey) AS min_pk, max(l_partkey) AS max_pk,
-         |       min(l_suppkey) AS min_sk, max(l_suppkey) AS max_sk,
-         |       min(z) AS min_z, max(z) AS max_z
-         |FROM li CROSS JOIN m
-         |GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
-
-    "repartition_agg" ->
-      """SELECT l_linestatus, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY 1 ORDER BY l_linestatus""".stripMargin,
-
-    // the flat lookback join + the same rounded 1/n credit on DECIMAL
-    "ts_attribution_linear" -> """
-      WITH t AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
-                 FROM events WHERE event_type <> 'purchase'),
-      p AS (SELECT event_id AS p_id, user_id,
-                   CAST(ts AS TIMESTAMP) AS w_end,
-                   CAST(ts AS TIMESTAMP) - INTERVAL 2 HOUR AS w_start
-            FROM events WHERE event_type = 'purchase'),
-      pairs AS (SELECT p.p_id, t.event_type AS touch_type
-                FROM t JOIN p ON t.user_id = p.user_id
-                              AND t.ts >= p.w_start AND t.ts < p.w_end),
-      c AS (SELECT p_id, touch_type,
-                   CAST(ROUND(CAST(1.0 AS DOUBLE)
-                              / count(*) OVER (PARTITION BY p_id), 6)
-                        AS DECIMAL(16,6)) AS credit
-            FROM pairs)
-      SELECT touch_type, count(*) AS n_touch_events,
-             CAST(SUM(credit) AS DOUBLE) AS credit_sum
-      FROM c GROUP BY 1 ORDER BY touch_type""",
-
-    // the flat box inequality join — a blocking bug (pair met twice or
-    // missed at a cell edge) changes the multiset
-    // identical ray-cast SQL, DuckDB md5→int idiom
-    "join_geo_polygon" -> geoPolygonSql(
-      "('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000",
-      "('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000"),
-
-    "join_geo_box" -> """
-      WITH p AS (SELECT c_custkey AS id,
-                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000 AS lat_c,
-                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000 AS lon_c
-                 FROM customer)
-      SELECT a.id AS a_id, b.id AS b_id,
-             abs(a.lat_c - b.lat_c) AS dlat_c,
-             abs(a.lon_c - b.lon_c) AS dlon_c
-      FROM p a JOIN p b
-        ON a.id < b.id
-       AND abs(a.lat_c - b.lat_c) <= 100
-       AND abs(a.lon_c - b.lon_c) <= 100
-      ORDER BY a_id, b_id""",
-
-    // the box+rank contract replayed directly (no cell arithmetic — the
-    // blocking is the entry's plan concern, not the output's)
-    "join_geo_knn" -> """
-      WITH p AS (SELECT c_custkey AS id,
-                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000 AS lat_c,
-                        ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT % 36000 - 18000 AS lon_c
-                 FROM customer),
-      cand AS (SELECT a.id AS a_id, b.id AS b_id,
-                      (a.lat_c - b.lat_c) * (a.lat_c - b.lat_c)
-                        + (a.lon_c - b.lon_c) * (a.lon_c - b.lon_c) AS d2
-               FROM p a JOIN p b
-                 ON a.id <> b.id
-                AND abs(a.lat_c - b.lat_c) <= 100
-                AND abs(a.lon_c - b.lon_c) <= 100),
-      rk AS (SELECT a_id, b_id, d2,
-                    row_number() OVER (PARTITION BY a_id
-                      ORDER BY d2, b_id) AS rank
-             FROM cand)
-      SELECT a_id, CAST(rank AS INT) AS rank, b_id, CAST(d2 AS BIGINT) AS d2
-      FROM rk WHERE rank <= 3
-      ORDER BY a_id, rank""",
-
-    // the identical interleave + alphabet lookups, DuckDB's // division
-    "fn_geohash" -> {
-      val gh = graft.operators.ZOrder.geohashDuckSql("lat_c", "lon_c")
-      s"""WITH p AS (SELECT c_custkey,
-         |                  (c_custkey * 7919) % 18000 - 9000 AS lat_c,
-         |                  (c_custkey * 104729) % 36000 - 18000 AS lon_c
-         |           FROM customer),
-         |g AS (SELECT c_custkey, $gh AS geohash FROM p)
-         |SELECT substr(geohash, 1, 2) AS cell, count(*) AS n_points,
-         |       min(c_custkey) AS min_key,
-         |       min(geohash) AS min_hash, max(geohash) AS max_hash
-         |FROM g GROUP BY 1 ORDER BY cell""".stripMargin
-    },
-
-    // the two function bodies inlined by hand — what Spark's optimizer
-    // does mechanically
-    "sql_udf" ->
-      """SELECT l.l_returnflag, o.o_orderstatus, count(*) AS n,
-        |       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-        |                * (CAST(1 AS DECIMAL(4,2))
-        |                   - CAST(l.l_discount AS DECIMAL(4,2))))
-        |            AS DOUBLE) AS disc_total
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_totalprice > 150000.0
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the identical unrolled walk as chained CTEs (Hilbert.hilbertCtes —
-    // one shared per-level expression source, the ZOrder mask-table rule)
-    "layout_hilbert" -> {
-      val ctes = graft.operators.Hilbert.hilbertCtes(10, "b", Seq("px", "sy"))
-      s"""WITH b AS (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS sy,
-         |                  CAST(l_partkey % 1024 AS BIGINT) & 1023 AS hx,
-         |                  CAST(l_orderkey % 1024 AS BIGINT) & 1023 AS hy,
-         |                  CAST(0 AS BIGINT) AS hd
-         |           FROM lineitem),
-         |$ctes,
-         |hh AS (SELECT px, sy, hd AS h FROM h10),
-         |m AS (SELECT max(h) AS hmax FROM hh)
-         |SELECT (h * 8) // (hmax + 1) AS bucket, count(*) AS n_rows,
-         |       min(px) AS min_px, max(px) AS max_px,
-         |       min(sy) AS min_sy, max(sy) AS max_sy,
-         |       min(h) AS min_h, max(h) AS max_h
-         |FROM hh CROSS JOIN m GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
-
-    "skew_salted_join" ->
-      """SELECT o_orderstatus, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "skew_salted_agg" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS s
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    "param_sql" ->
-      """SELECT o_orderpriority, count(*) AS n
-        |FROM orders
-        |WHERE o_totalprice > 150000 AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "sql_session_vars" ->
-      """SELECT l_returnflag, count(*) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_quantity >= 45
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the loop algebra in closed form: acc = (0+1+2+3)·n = 6n
-    "sql_scripting" ->
-      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name,
-        |       CAST((SELECT count(*) FROM nation) AS BIGINT) AS n_nations,
-        |       CAST(6 * (SELECT count(*) FROM nation) AS BIGINT) AS acc
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "ts_window_agg" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |       count(*) AS n_events,
-        |       count(DISTINCT user_id) AS n_users,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY hour_ts, event_type""".stripMargin,
-
-    // bounded replay makes streaming deterministic: the oracle is the
-    // batch semantics of the same windowed aggregate
-    "ts_stream_window_agg" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |       count(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY hour_ts, event_type""".stripMargin,
-
-    // epoch-aligned sliding membership, expanded flat: an event at t sits
-    // in the 4 windows starting at 30-min grid points (t's bucket, minus
-    // 0..3 slides)
-    "ts_stream_sliding_agg" ->
-      """WITH x AS (SELECT event_type,
-        |                  (epoch_us(ts) // 1800000000) * 1800000000 AS b
-        |           FROM events),
-        |w AS (SELECT event_type, b - k * 1800000000 AS ws
-        |      FROM x, unnest(generate_series(0, 3)) AS u(k))
-        |SELECT make_timestamp(ws) AS win_start, event_type,
-        |       count(*) AS n_events
-        |FROM w GROUP BY 1, 2
-        |ORDER BY win_start, event_type""".stripMargin,
-
-    // replays the entry's watermark arithmetic in SQL: f1a/f1b/f2/f3 are
-    // the same hash/boundary split the entry stages, wmf1a is the
-    // ms-floored watermark established by f1a's batch — the late filter
-    // for f2's batch, one batch later (probed: late-event filtering uses
-    // the PREVIOUS batch's watermark against the window END) — and only
-    // windows closed by the FINAL watermark may appear in Append output
-    "ts_stream_late_drop" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   event_type, value FROM events),
-        |b AS (SELECT date_trunc('hour', max(ts)) - INTERVAL 6 HOUR AS h6,
-        |             date_trunc('hour', max(ts)) - INTERVAL 12 HOUR AS h12 FROM ev),
-        |f1a AS (SELECT ev.* FROM ev, b WHERE ts <= h12
-        |        AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 <> 0),
-        |f1b AS (SELECT ev.* FROM ev, b WHERE ts > h12 AND ts <= h6
-        |        AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 <> 0),
-        |f2 AS (SELECT ev.* FROM ev, b WHERE ts <= h6
-        |       AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 = 0),
-        |f3 AS (SELECT ev.* FROM ev, b WHERE ts > h6),
-        |wmf1a AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm FROM f1a),
-        |wmfin AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm FROM ev),
-        |kept AS (SELECT * FROM f1a
-        |         UNION ALL
-        |         SELECT * FROM f1b
-        |         UNION ALL
-        |         SELECT f2.* FROM f2, wmf1a
-        |         WHERE date_trunc('hour', f2.ts) + INTERVAL 1 HOUR > wmf1a.wm
-        |         UNION ALL
-        |         SELECT * FROM f3)
-        |SELECT CAST(date_trunc('hour', k.ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |       count(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM kept k, wmfin
-        |WHERE date_trunc('hour', k.ts) + INTERVAL 1 HOUR <= wmfin.wm
-        |GROUP BY 1, 2
-        |ORDER BY hour_ts, event_type""".stripMargin,
-
-    // Update mode's emission history: tag each kept row with its batch
-    // (the same 4-file split), then every (batch, group) with >= 1 kept
-    // row emits the group's CUMULATIVE aggregate as of that batch — a
-    // windowed cumulative sum over the batch ordering replays the
-    // multiset the memory sink accumulates
-    "ts_stream_update_emit" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |                   event_type, value FROM events),
-        |b AS (SELECT date_trunc('hour', max(ts)) - INTERVAL 6 HOUR AS h6,
-        |             date_trunc('hour', max(ts)) - INTERVAL 12 HOUR AS h12 FROM ev),
-        |tagged AS (SELECT ev.*, CASE
-        |             WHEN ts <= h6 AND ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15))::BIGINT % 10 = 0 THEN 3
-        |             WHEN ts <= h12 THEN 1
-        |             WHEN ts <= h6 THEN 2
-        |             ELSE 4 END AS batch
-        |           FROM ev, b),
-        |wmf1a AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm
-        |          FROM tagged WHERE batch = 1),
-        |kept AS (SELECT t.* FROM tagged t, wmf1a
-        |         WHERE batch <> 3
-        |            OR date_trunc('hour', ts) + INTERVAL 1 HOUR > wmf1a.wm),
-        |g AS (SELECT batch, date_trunc('hour', ts) AS h, event_type,
-        |             count(*) AS dn,
-        |             sum(CAST(value AS DECIMAL(18,6))) AS ds
-        |      FROM kept GROUP BY 1, 2, 3)
-        |SELECT CAST(h AS TIMESTAMP) AS hour_ts, event_type,
-        |       CAST(SUM(dn) OVER w AS BIGINT) AS n_events,
-        |       CAST(SUM(ds) OVER w AS DOUBLE) AS sum_value
-        |FROM g
-        |WINDOW w AS (PARTITION BY h, event_type ORDER BY batch
-        |             ROWS UNBOUNDED PRECEDING)
-        |ORDER BY hour_ts, event_type, n_events""".stripMargin,
-
-    // bounded replay of a drained stream-stream INNER join equals the
-    // batch join — the oracle is the plain interval join
-    "ts_stream_interval_join" ->
-      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
-        |           FROM events),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT * FROM e WHERE event_type = 'view')
-        |SELECT l.user_id, l.ts AS left_ts, r.ts AS right_ts,
-        |       l.event_type AS left_type, r.event_type AS right_type
-        |FROM p l JOIN v r ON l.user_id = r.user_id
-        |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-        |ORDER BY l.user_id, left_ts, right_ts""".stripMargin,
-
-    // exactly-once output from a doubled delivery == the plain fixture
-    "ts_stream_dedup" ->
-      """SELECT event_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // one drained micro-batch => one cumulative update per user; count
-    // and max are aggregation-order independent, so the check is exact
-    "ts_stream_running_stats" ->
-      """SELECT user_id, count(*) AS n_events, max(value) AS max_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "ts_stream_tws_typecounts" ->
-      """SELECT user_id, event_type, count(*) AS n_events
-        |FROM events GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    "src_agg_pushdown" ->
-      """SELECT count(*) AS n_rows,
-        |       min(l_orderkey) AS min_okey, max(l_orderkey) AS max_okey,
-        |       min(l_partkey) AS min_pkey, max(l_partkey) AS max_pkey
-        |FROM lineitem""".stripMargin,
-
-    // the whole input exactly once, regardless of the two-phase replay
-    "ts_stream_resume" ->
-      """SELECT event_id, event_type,
-        |       CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS value_cents,
-        |       CAST(date_trunc('DAY', CAST(ts AS TIMESTAMP)) AS DATE) AS day
-        |FROM events WHERE CAST(value AS DOUBLE) > 100.0
-        |ORDER BY event_id""".stripMargin,
-
-    // the batch register pipeline over the full table IS the drained
-    // stream state (max-merge order independence); same md5 bucket/rho
-    // derivation as llm_distinct_sketch, same estimate division
-    "ts_stream_hll" -> {
-      val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
-      s"""WITH h AS (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS hh
-         |           FROM events),
-         |f AS (SELECT event_type,
-         |             CAST(('0x' || substr(hh, 14, 3))::BIGINT % 64 AS INT) AS bucket,
-         |             length(regexp_extract(substr(hh, 1, 13), '^0*')) AS zeros,
-         |             substr(hh, length(regexp_extract(substr(hh, 1, 13), '^0*')) + 1, 1) AS fd
-         |      FROM h),
-         |r AS (SELECT event_type, bucket,
-         |             CASE WHEN zeros = 13 THEN 53
-         |             ELSE zeros * 4 + 1 + (CASE fd
-         |               WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-         |               WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-         |               WHEN '7' THEN 1 ELSE 0 END) END AS rho
-         |      FROM f),
-         |regs AS (SELECT event_type, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT event_type, count(*) AS nb,
-         |              CAST(SUM(1::BIGINT << (53 - mj)) AS BIGINT) AS s_hit
-         |       FROM regs GROUP BY 1)
-         |SELECT event_type, CAST(nb AS BIGINT) AS n_buckets_hit,
-         |       CAST(s_hit + (64 - nb) * (1::BIGINT << 53) AS BIGINT) AS harmonic_s,
-         |       CAST(ROUND(CAST($alphaNum AS DOUBLE)
-         |            / CAST(s_hit + (64 - nb) * (1::BIGINT << 53) AS BIGINT),
-         |            6) AS DOUBLE) AS hll_est
-         |FROM sk ORDER BY event_type""".stripMargin
-    },
-
-    // replay the timer arithmetic: a user fires iff its expiry
-    // (ms-floored last event ts + 4h gap) is strictly below the final
-    // watermark (ms-floored global max ts - 2h delay); the fired record
-    // carries the whole-stream event count (the state at firing time —
-    // every user's rows land in ONE batch, before its timer can fire)
-    "ts_stream_tws_timers" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
-        |u AS (SELECT user_id, count(*) AS n_events,
-        |             date_trunc('milliseconds', max(ts)) AS last_ts
-        |      FROM ev GROUP BY 1),
-        |wm AS (SELECT date_trunc('milliseconds', max(ts)) - INTERVAL 2 HOUR AS wm
-        |       FROM ev)
-        |SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
-        |       CAST(last_ts + INTERVAL 4 HOUR AS TIMESTAMP) AS expired_at
-        |FROM u, wm WHERE last_ts + INTERVAL 4 HOUR < wm.wm
-        |ORDER BY user_id""".stripMargin,
-
-    // per (user, file) max -> per-user digest of those maxes, straight
-    // from the same event_id % 3 split the staging uses
-    "ts_stream_tws_batchmax" ->
-      """WITH mic AS (SELECT user_id, event_id % 3 AS f,
-        |                    CAST(ROUND(value * 1000000) AS BIGINT) AS m
-        |             FROM events),
-        |bm AS (SELECT user_id, f, MAX(m) AS bmax FROM mic GROUP BY 1, 2)
-        |SELECT user_id, count(*) AS n_batches,
-        |       CAST(SUM(bmax) AS BIGINT) AS sum_maxes,
-        |       MAX(bmax) AS max_max
-        |FROM bm GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "ts_stream_tws_initial" ->
-      """WITH mic AS (SELECT user_id, event_id,
-        |                    CAST(ROUND(value * 1000000) AS BIGINT) AS m
-        |             FROM events),
-        |tot AS (SELECT user_id, count(*) AS n_events,
-        |               CAST(SUM(m) AS BIGINT) AS sum_micros
-        |        FROM mic GROUP BY user_id),
-        |streamers AS (SELECT DISTINCT user_id FROM events WHERE event_id % 3 <> 0)
-        |SELECT t.user_id, t.n_events, t.sum_micros
-        |FROM tot t JOIN streamers s ON s.user_id = t.user_id
-        |ORDER BY t.user_id""".stripMargin,
-
-    // the drained-stream fixed point: whatever the trigger split, the
-    // final ValueState per user must equal the whole-input aggregate
-    "ts_stream_tws_totals" ->
-      """SELECT user_id, count(*) AS n_events,
-        |       CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT) AS sum_micros
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // batch 1 emits every user with history; batch 2 emits only strict
-    // max improvements (cumulative count, overall max)
-    "ts_stream_alerts" ->
-      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id,
-        |                  CAST(value AS DOUBLE) AS value
-        |           FROM events),
-        |b AS (SELECT date_trunc('HOUR', max(ts)) - INTERVAL 12 HOUR AS h12
-        |      FROM e),
-        |h1 AS (SELECT user_id, count(*) AS n1, max(value) AS m1
-        |       FROM e, b WHERE ts <= h12 GROUP BY user_id),
-        |h2 AS (SELECT user_id, count(*) AS n2, max(value) AS m2
-        |       FROM e, b WHERE ts > h12 GROUP BY user_id),
-        |e1 AS (SELECT user_id, CAST(n1 AS BIGINT) AS n_events,
-        |              m1 AS max_value
-        |       FROM h1),
-        |e2 AS (SELECT h2.user_id,
-        |              CAST(COALESCE(h1.n1, 0) + h2.n2 AS BIGINT) AS n_events,
-        |              GREATEST(COALESCE(h1.m1, h2.m2), h2.m2) AS max_value
-        |       FROM h2 LEFT JOIN h1 ON h1.user_id = h2.user_id
-        |       WHERE h1.user_id IS NULL OR h2.m2 > h1.m1)
-        |SELECT * FROM e1 UNION ALL SELECT * FROM e2
-        |ORDER BY user_id, n_events""".stripMargin,
-
-    // left-outer replay: matched rows are the batch join; an UNMATCHED
-    // left row emits null-padded iff its join window's upper bound
-    // (l.ts + 1h) is below the final watermark — min of both streams'
-    // ms-floored max event time minus the 2h delay (Spark's default
-    // multiple-watermark policy is min; flooring pinned by the
-    // late-drop entries)
-    "ts_stream_outer_join" ->
+    Entry("ts_stream_outer_join", (s, d) =>
+      streamIntervalJoin(s, d, "left_outer", "ts_stream_oj_sink"),
+      // left-outer replay: matched rows are the batch join; an UNMATCHED
+      // left row emits null-padded iff its join window's upper bound
+      // (l.ts + 1h) is below the final watermark — min of both streams'
+      // ms-floored max event time minus the 2h delay (Spark's default
+      // multiple-watermark policy is min; flooring pinned by the
+      // late-drop entries)
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
         |           FROM events),
         |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
@@ -3132,9 +2817,15 @@ object Io {
         |                          AND r.ts <= l.ts + INTERVAL 1 HOUR)
         |        AND l.ts + INTERVAL 1 HOUR < (SELECT w FROM wm))
         |SELECT * FROM m UNION ALL SELECT * FROM o
-        |ORDER BY user_id, left_ts, right_ts""".stripMargin,
+        |ORDER BY user_id, left_ts, right_ts""".stripMargin, mutatesSession = true),
 
-    "ts_stream_full_outer_join" ->
+    // FULL-OUTER stream-stream join — BOTH eviction contracts at once:
+    // unmatched left emits under the left rule above, unmatched right
+    // emits once the watermark passes its own ts (a right row can only
+    // be matched by a left with l.ts in [r.ts - 1h, r.ts], and future
+    // lefts sit above the watermark) — both rules recomputed in SQL
+    Entry("ts_stream_full_outer_join", (s, d) =>
+      streamIntervalJoin(s, d, "full_outer", "ts_stream_foj_sink"),
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
         |           FROM events),
         |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
@@ -3168,9 +2859,23 @@ object Io {
         |                           AND r.ts <= l.ts + INTERVAL 1 HOUR)
         |         AND r.ts < (SELECT w FROM wm))
         |SELECT * FROM m UNION ALL SELECT * FROM o UNION ALL SELECT * FROM ro
-        |ORDER BY user_id, left_ts, right_ts""".stripMargin,
+        |ORDER BY user_id, left_ts, right_ts""".stripMargin, mutatesSession = true),
 
-    "ts_sessionize" ->
+    Entry("ts_sessionize", (s, d) => {
+      Tables.register(s, d)
+      s.sql(
+        """SELECT user_id,
+          |       CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
+          |       COUNT(*) AS n_events
+          |FROM (SELECT user_id,
+          |             CASE WHEN prev_ts IS NULL
+          |                    OR ts - prev_ts > INTERVAL '30' MINUTE THEN 1 ELSE 0 END AS new_sess
+          |      FROM (SELECT user_id, ts, event_id,
+          |                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+          |            FROM events))
+          |GROUP BY user_id
+          |ORDER BY user_id""".stripMargin)
+    },
       """SELECT user_id,
         |       CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
         |       count(*) AS n_events
@@ -3181,9 +2886,28 @@ object Io {
         |                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
         |            FROM events) x) y
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
-    "ts_session_window" ->
+    // gap-based session windows in BATCH mode (the streaming twin lives in
+    // graft.streaming.Streams): Spark's session_window merges events whose
+    // gaps stay under 30 min; the oracle rebuilds the same sessions with
+    // gaps-and-islands SQL. Boundary semantics (probed; SessionWindowSpec
+    // pins them): an event EXACTLY 30 min after the previous one MERGES —
+    // the merge rule is touch-inclusive even though each raw window is
+    // half-open — so the oracle's break condition is STRICTLY `>`.
+    Entry("ts_session_window", (s, d) => {
+      Tables.register(s, d)
+      // session_window must appear IN the GROUP BY — as a plain projection
+      // it never merges, every event keeps its raw [ts, ts+gap) window
+      s.sql(
+        """SELECT user_id,
+          |       session_window.start AS session_start,
+          |       session_window.end AS session_end,
+          |       COUNT(*) AS n_events
+          |FROM events
+          |GROUP BY user_id, session_window(ts, '30 minutes')
+          |ORDER BY user_id, session_start""".stripMargin)
+    },
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |x AS (SELECT user_id, ts,
         |             CASE WHEN lag(ts) OVER w IS NULL
@@ -3199,187 +2923,98 @@ object Io {
         |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
         |       COUNT(*) AS n_events
         |FROM y GROUP BY user_id, sess
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
 
-    // identical semantics to ts_session_window (the streaming path must
-    // produce the batch answer on bounded input)
-    "ts_stream_session_window" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |x AS (SELECT user_id, ts,
-        |             CASE WHEN lag(ts) OVER w IS NULL
-        |                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-        |                  THEN 1 ELSE 0 END AS brk
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |y AS (SELECT user_id, ts,
-        |             SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                            ROWS UNBOUNDED PRECEDING) AS sess
-        |      FROM x)
-        |SELECT user_id,
-        |       MIN(ts) AS session_start,
-        |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-        |       COUNT(*) AS n_events
-        |FROM y GROUP BY user_id, sess
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "ts_stream_enrich" ->
-      """WITH u AS (SELECT user_id, count(*) AS u_events,
-        |                  SUM(CAST(value AS DECIMAL(18,2))) AS u_value
-        |           FROM events GROUP BY 1)
-        |SELECT event_type, count(*) AS n_events,
-        |       CAST(SUM(u_events) AS BIGINT) AS sum_user_events,
-        |       CAST(SUM(u_value) AS DOUBLE) AS sum_user_value
-        |FROM events e JOIN u USING (user_id)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "ts_stream_file_sink" ->
-      """SELECT user_id % 10 AS user_mod, count(*) AS n_purchases,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |       epoch_us(CAST(max(ts) AS TIMESTAMP)) AS max_ts_us
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY user_mod""".stripMargin,
-
-    // the WHOLE changelog applied in one shot (window rank, no
-    // incremental fold, no tombstone carrying) — green proves the
-    // 3-batch foreachBatch merge converged to the same snapshot
-    // the tricky strings recomputed straight from the base table — the
-    // CSV files never enter the oracle's path
-    "src_csv_quoted" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS k,
-        |       md5(p_name || ',' || p_type) AS h_comma,
-        |       md5('"' || p_brand || '"' || ' quoted') AS h_quote,
-        |       md5(p_name || chr(10) || p_type) AS h_newline
-        |FROM part WHERE p_partkey < 200 ORDER BY k""".stripMargin,
-
-    // the dense grid rebuilt with generate_series over the same
-    // per-user hour bounds
-    "ts_gap_fill_perkey" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) // 3600000000 AS hour,
-        |                   CAST(value AS DECIMAL(18,2)) AS v
-        |            FROM events WHERE user_id < 20),
-        |b AS (SELECT user_id, min(hour) AS mn, max(hour) AS mx
-        |      FROM ev GROUP BY user_id),
-        |slots AS (SELECT user_id, h.h AS hour
-        |          FROM b, unnest(generate_series(mn, mx)) h(h)),
-        |ag AS (SELECT user_id, hour, count(*) AS n, SUM(v) AS sv
-        |       FROM ev GROUP BY 1, 2)
-        |SELECT s.user_id, s.hour,
-        |       CAST(COALESCE(ag.n, 0) AS BIGINT) AS n_events,
-        |       CAST(COALESCE(ag.sv, 0) AS DOUBLE) AS sum_value,
-        |       ag.n IS NULL AS filled
-        |FROM slots s LEFT JOIN ag ON ag.user_id = s.user_id
-        |                         AND ag.hour = s.hour
-        |ORDER BY s.user_id, s.hour""".stripMargin,
-
-    // each micro-batch is one commit = one residue class of suppkey
-    "ts_stream_commit_log" ->
-      """SELECT CAST(s_suppkey % 3 AS BIGINT) AS batch_id,
-        |       count(*) AS n_rows,
-        |       CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |         AS sum_bal
-        |FROM supplier GROUP BY 1 ORDER BY batch_id""".stripMargin,
-
-    "ts_stream_upsert" ->
-      """WITH ch AS (SELECT user_id AS k, event_id AS seq,
-        |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
-        |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
-        |    CAST(value AS DECIMAL(18,2)) AS total
-        |  FROM events),
-        |last AS (SELECT k, seq, op, total,
-        |           row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
-        |         FROM ch)
-        |SELECT k, seq, op, CAST(total AS DOUBLE) AS total
-        |FROM last WHERE rn = 1 AND op <> 'D'
-        |ORDER BY k""".stripMargin,
-
-    // the FULL-changelog SCD2 recompute — whatever micro-batch split the
-    // stream fed through scd2Incremental must converge to exactly this
-    // the streaming state machine's drained counts == batch regexp_count
-    // over each user's full ordered sequence
-    "ts_stream_pattern" ->
-      """WITH seqs AS (SELECT user_id,
-        |                     string_agg(substr(event_type, 1, 1), ''
-        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS seq
-        |              FROM events GROUP BY user_id)
-        |SELECT user_id,
-        |       CAST(len(regexp_extract_all(seq, 'v[ce]*p')) AS BIGINT) AS n_conversion
-        |FROM seqs ORDER BY user_id""".stripMargin,
-
-    // the drained CUSUM state must equal the batch closed form — the
-    // oracle IS the batch twin's windows, verbatim
-    "ts_stream_cusum" -> Relational.sql("ts_cusum_drift"),
-
-    // the drained sketch must equal the batch histogram sketch — oracle
-    // = the agg_quantile_sketch algebra (DuckDB's //), verbatim
-    "ts_stream_quantile" -> Ops.oracles("agg_quantile_sketch"),
-
-    // the drained OR-merged bitmaps must equal the batch bit_or pipeline
-    "ts_stream_bitmap_distinct" -> """
-      WITH b AS (SELECT event_type, user_id // 62 AS chunk,
-                        bit_or(1::BIGINT << CAST(user_id % 62 AS INT)) AS bm
-                 FROM events GROUP BY event_type, user_id // 62)
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-             CAST(SUM(bit_count(bm)) AS BIGINT) AS n_distinct
-      FROM b GROUP BY event_type
-      ORDER BY event_type""",
-
-    // the drained top-k map must equal the batch count + rank window
-    // (ties on user_id make the ranking total)
-    "ts_stream_topk" -> """
-      WITH c AS (SELECT event_type, user_id, COUNT(*) AS cnt
-                 FROM events GROUP BY event_type, user_id),
-      r AS (SELECT event_type, user_id, cnt,
-                   row_number() OVER (PARTITION BY event_type
-                     ORDER BY cnt DESC, user_id) AS rank
-            FROM c)
-      SELECT event_type, CAST(rank AS INT) AS rank, user_id,
-             CAST(cnt AS BIGINT) AS cnt
-      FROM r WHERE rank <= 5
-      ORDER BY event_type, rank""",
-
-    "ts_stream_scd2" ->
-      """WITH ch AS (SELECT user_id AS k, event_id AS seq,
-        |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
-        |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
-        |    CAST(value AS DECIMAL(18,2)) AS total
-        |  FROM events)
-        |SELECT k, seq AS valid_from,
-        |       (SELECT min(c2.seq) FROM ch c2
-        |        WHERE c2.k = ch.k AND c2.seq > ch.seq) AS valid_to,
-        |       op, CAST(total AS DOUBLE) AS total,
-        |       (SELECT min(c2.seq) FROM ch c2
-        |        WHERE c2.k = ch.k AND c2.seq > ch.seq) IS NULL AS is_current
-        |FROM ch WHERE op <> 'D'
-        |ORDER BY k, valid_from""".stripMargin,
-
-    "ts_asof_join" ->
+    // as-of join: every purchase attributed to the user's latest preceding
+    // view (backward inclusive), DuckDB's native ASOF JOIN as the oracle
+    Entry("ts_asof_join", (s, d) => {
+      val ev = t(s, d, "events")
+      val purchases = ev.where("event_type = 'purchase'")
+        .select("event_id", "user_id", "ts")
+      val views = ev.where("event_type = 'view'")
+        .groupBy("user_id", "ts").agg(max("value").as("v_value"))
+      graft.operators.AsOf.joinBackward(purchases, views, "user_id", "ts",
+          Seq("v_value"))
+        .selectExpr("event_id", "user_id", "ts AS p_ts",
+          "CAST(right_v_value AS DOUBLE) AS v_value")
+        .orderBy("event_id")
+    },
       """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS v_value
         |      FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         |SELECT p.event_id, p.user_id, p.ts AS p_ts, v.v_value
         |FROM p ASOF JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "ts_asof_bucketed" ->
+    // the skew-safe as-of (time-bucketed pre-carry, hourly buckets): must
+    // produce EXACTLY the rows of ts_asof_join — same DuckDB ASOF oracle,
+    // so the boundary stitch is differentially checked on real data
+    Entry("ts_asof_bucketed", (s, d) => {
+      val ev = t(s, d, "events")
+      val purchases = ev.where("event_type = 'purchase'")
+        .select("event_id", "user_id", "ts")
+      val views = ev.where("event_type = 'view'")
+        .groupBy("user_id", "ts").agg(max("value").as("v_value"))
+      graft.operators.AsOf.joinBackwardBucketed(purchases, views, "user_id",
+          "ts", Seq("v_value"), bucketSeconds = 3600L)
+        .selectExpr("event_id", "user_id", "ts AS p_ts",
+          "CAST(right_v_value AS DOUBLE) AS v_value")
+        .orderBy("event_id")
+    },
       """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS v_value
         |      FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         |SELECT p.event_id, p.user_id, p.ts AS p_ts, v.v_value
         |FROM p ASOF JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "ts_asof_forward" ->
+    // forward as-of: every view attributed to the user's next purchase
+    // (at-or-after, inclusive) — the mirror of ts_asof_join, oracled by
+    // DuckDB's ASOF JOIN with the inequality flipped
+    Entry("ts_asof_forward", (s, d) => {
+      val ev = t(s, d, "events")
+      val views = ev.where("event_type = 'view'")
+        .select("event_id", "user_id", "ts")
+      val purchases = ev.where("event_type = 'purchase'")
+        .groupBy("user_id", "ts").agg(max("value").as("p_value"))
+      graft.operators.AsOf.joinForward(views, purchases, "user_id", "ts",
+          Seq("p_value"))
+        .selectExpr("event_id", "user_id", "ts AS v_ts",
+          "CAST(right_p_value AS DOUBLE) AS p_value")
+        .orderBy("event_id")
+    },
       """WITH v AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'view'),
         |p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS p_value
         |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
         |SELECT v.event_id, v.user_id, v.ts AS v_ts, p.p_value
         |FROM v ASOF JOIN p ON v.user_id = p.user_id AND v.ts <= p.ts
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    // two ASOF JOINs composed with the same integer-micros pick rule
-    "ts_asof_nearest" ->
+    // nearest-direction as-of (pandas merge_asof direction='nearest'):
+    // each purchase matched to its closest view in EITHER direction,
+    // exact integer-micros distance, ties to the earlier (backward)
+    // side; composed from the two one-shuffle carry passes stitched on
+    // the unique left id — the oracle composes DuckDB's two ASOF JOINs
+    // with the same pick rule
+    Entry("ts_asof_nearest", (s, d) => {
+      val ev = t(s, d, "events")
+      val purchases = ev.where("event_type = 'purchase'")
+        .select("event_id", "user_id", "ts")
+      val views = ev.where("event_type = 'view'")
+        .groupBy(col("user_id"), col("ts").as("v_ts"))
+        .agg(max("value").as("v_value"))
+        .selectExpr("user_id", "v_ts AS ts", "v_ts", "v_value")
+      graft.operators.AsOf.joinNearest(purchases, views, "user_id", "ts",
+          "event_id", Seq("v_ts", "v_value"), "v_ts")
+        .selectExpr("event_id", "user_id",
+          "abs(unix_micros(ts) - unix_micros(right_v_ts)) AS delta_us",
+          "CAST(right_v_value AS DOUBLE) AS v_value", "direction")
+        .orderBy("event_id")
+    },
+      // two ASOF JOINs composed with the same integer-micros pick rule
       """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS v_value
@@ -3399,11 +3034,32 @@ object Io {
         |            AS BIGINT) AS delta_us,
         |       CAST(CASE WHEN use_b THEN bval ELSE fval END AS DOUBLE) AS v_value,
         |       CASE WHEN use_b THEN 'b' ELSE 'f' END AS direction
-        |FROM j ORDER BY event_id""".stripMargin,
+        |FROM j ORDER BY event_id""".stripMargin),
 
-    // the same two-ASOF stitch with each side masked by the tolerance
-    // BEFORE the pick — pandas' rule, replayed in closed form
-    "ts_asof_nearest_tol" ->
+    // nearest as-of BOUNDED by a 10-minute tolerance (pandas merge_asof
+    // tolerance=): a directed match beyond the window counts as absent —
+    // an in-window backward match beats a closer out-of-window forward
+    // one, and purchases with no view within ±10 min drop out entirely.
+    // Same two carry passes; the bound is a post-stitch integer-micros
+    // predicate, not a new plan
+    Entry("ts_asof_nearest_tol", (s, d) => {
+      val ev = t(s, d, "events")
+      val purchases = ev.where("event_type = 'purchase'")
+        .select("event_id", "user_id", "ts")
+      val views = ev.where("event_type = 'view'")
+        .groupBy(col("user_id"), col("ts").as("v_ts"))
+        .agg(max("value").as("v_value"))
+        .selectExpr("user_id", "v_ts AS ts", "v_ts", "v_value")
+      graft.operators.AsOf.joinNearest(purchases, views, "user_id", "ts",
+          "event_id", Seq("v_ts", "v_value"), "v_ts",
+          toleranceMicros = 600L * 1000000L)
+        .selectExpr("event_id", "user_id",
+          "abs(unix_micros(ts) - unix_micros(right_v_ts)) AS delta_us",
+          "CAST(right_v_value AS DOUBLE) AS v_value", "direction")
+        .orderBy("event_id")
+    },
+      // the same two-ASOF stitch with each side masked by the tolerance
+      // BEFORE the pick — pandas' rule, replayed in closed form
       """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS v_value
@@ -3427,9 +3083,33 @@ object Io {
         |            AS BIGINT) AS delta_us,
         |       CAST(CASE WHEN use_b THEN bval ELSE fval END AS DOUBLE) AS v_value,
         |       CASE WHEN use_b THEN 'b' ELSE 'f' END AS direction
-        |FROM j ORDER BY event_id""".stripMargin,
+        |FROM j ORDER BY event_id""".stripMargin),
 
-    "ts_funnel" ->
+    // ordered conversion funnel view → click → purchase, 7-day max gap per
+    // step (operators/Funnel): per-user frontier timestamps as exact epoch
+    // micros + step_reached. The oracle replays the frontier-greedy rule as
+    // three chained min-aggregates in SQL — a wrong strictness ('>=' for
+    // '>'), a wrong horizon bound, or a lost stalling user all change the
+    // multiset. Micros-exact: both engines work in the micro-truncated
+    // domain (CAST(ts AS TIMESTAMP) in DuckDB) and epoch_us/unix_micros
+    // are integer, so no rounding anywhere.
+    Entry("ts_funnel", (s, d) => {
+      val ev = t(s, d, "events")
+      val steps = Seq(
+        "view" -> (col("event_type") === "view"),
+        "click" -> (col("event_type") === "click"),
+        "purchase" -> (col("event_type") === "purchase"))
+      graft.operators.Funnel.ordered(ev, "user_id", "ts", steps,
+          Some("INTERVAL 7 DAYS"))
+        .selectExpr("user_id",
+          "unix_micros(view_ts) AS view_us",
+          "unix_micros(click_ts) AS click_us",
+          "unix_micros(purchase_ts) AS purchase_us",
+          ("CAST(1 + CASE WHEN click_ts IS NULL THEN 0 ELSE 1 END" +
+            " + CASE WHEN purchase_ts IS NULL THEN 0 ELSE 1 END AS INT)" +
+            " AS step_reached"))
+        .orderBy("user_id")
+    },
       """WITH ev AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |s1 AS (SELECT user_id, min(ts) AS t1 FROM ev WHERE event_type = 'view' GROUP BY 1),
         |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev e JOIN s1 ON e.user_id = s1.user_id
@@ -3444,9 +3124,18 @@ object Io {
         |              + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END AS INT) AS step_reached
         |FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
         |        LEFT JOIN s3 ON s1.user_id = s3.user_id
-        |ORDER BY s1.user_id""".stripMargin,
+        |ORDER BY s1.user_id""".stripMargin),
 
-    "ts_gap_fill" ->
+    // daily resample + gap fill with LOCF (operators/Resample): the dense
+    // per-user day spine materializes missing days as zero-count rows and
+    // carries the last observed daily sum forward. The oracle rebuilds the
+    // spine with generate_series and the carry with IGNORE NULLS window
+    // SQL; sums ride DECIMAL until the output edge.
+    Entry("ts_gap_fill", (s, d) => {
+      val ev = t(s, d, "events")
+      graft.operators.Resample.locfDaily(ev, "user_id", "ts", "value")
+        .orderBy("user_id", "day")
+    },
       """WITH ev AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, value
         |            FROM events),
         |daily AS (SELECT user_id, day, count(*) AS n_events,
@@ -3463,9 +3152,29 @@ object Io {
         |       CAST(last_value(dl.s IGNORE NULLS)
         |              OVER (PARTITION BY sp.user_id ORDER BY sp.day) AS DOUBLE) AS locf_sum
         |FROM spine sp LEFT JOIN daily dl ON sp.user_id = dl.user_id AND sp.day = dl.day
-        |ORDER BY sp.user_id, sp.day""".stripMargin,
+        |ORDER BY sp.user_id, sp.day""".stripMargin),
 
-    "join_range_binned" ->
+    // binned range join (operators/RangeJoin): clicks inside 10-minute
+    // error-incident windows — NO equi key, so Catalyst alone plans a
+    // nested loop; the bin discretization turns it into a hash equi-join
+    // (plan-gated in RangeJoinSpec). The oracle is the plain interval
+    // predicate in DuckDB, so a bin off-by-one at either edge, a dropped
+    // multi-bin interval, or a double-counted pair all hash-mismatch.
+    Entry("join_range_binned", (s, d) => {
+      val ev = t(s, d, "events")
+      val incidents = ev.where("event_type = 'error'")
+        .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
+          expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
+      val clicks = ev.where("event_type = 'click'")
+        .select(col("event_id"), col("ts"), col("value"))
+      graft.operators.RangeJoin.pointInInterval(
+          clicks, "ts", incidents, "inc_s", "inc_e", binSeconds = 600L)
+        .groupBy("incident_id")
+        .agg(count(lit(1)).as("n_clicks"),
+          expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)")
+            .as("click_value"))
+        .orderBy("incident_id")
+    },
       """WITH inc AS (SELECT event_id AS incident_id, ts AS s,
         |                    ts + INTERVAL 10 MINUTE AS e
         |             FROM events WHERE event_type = 'error'),
@@ -3473,9 +3182,27 @@ object Io {
         |SELECT incident_id, count(*) AS n_clicks,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS click_value
         |FROM inc JOIN clk ON clk.ts >= inc.s AND clk.ts < inc.e
-        |GROUP BY 1 ORDER BY incident_id""".stripMargin,
+        |GROUP BY 1 ORDER BY incident_id""".stripMargin),
 
-    "join_interval_overlap" ->
+    // interval × interval overlap through the same binning (attributed
+    // to the shared max-start bin — exactly-once, no dedup): error
+    // windows overlapping purchase windows, counted per incident
+    Entry("join_interval_overlap", (s, d) => {
+      val ev = t(s, d, "events")
+      val inc = ev.where("event_type = 'error'")
+        .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
+          expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
+      val pur = ev.where("event_type = 'purchase'")
+        .select(col("event_id").as("p_id"), col("ts").as("p_s"),
+          expr("ts + INTERVAL 10 MINUTES").as("p_e"), col("value"))
+      graft.operators.RangeJoin.intervalOverlap(
+          inc, "inc_s", "inc_e", pur, "p_s", "p_e", binSeconds = 600L)
+        .groupBy("incident_id")
+        .agg(count(lit(1)).as("n_overlaps"),
+          expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)")
+            .as("purchase_value"))
+        .orderBy("incident_id")
+    },
       """WITH inc AS (SELECT event_id AS incident_id, ts AS s,
         |                    ts + INTERVAL 10 MINUTE AS e
         |             FROM events WHERE event_type = 'error'),
@@ -3484,21 +3211,74 @@ object Io {
         |SELECT incident_id, count(*) AS n_overlaps,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS purchase_value
         |FROM inc JOIN pur ON inc.s < pur.e AND pur.s < inc.e
-        |GROUP BY 1 ORDER BY incident_id""".stripMargin,
+        |GROUP BY 1 ORDER BY incident_id""".stripMargin),
 
-    "join_proximity_pairs" ->
+    // tolerance self-pairing (RangeJoin.proximityPairs): error events
+    // within 5 minutes of each other across ALL users — no equi key, the
+    // classic coincidence-correlation query. Micros-exact output, each
+    // unordered pair exactly once (a_id < b_id)
+    Entry("join_proximity_pairs", (s, d) => {
+      val errs = t(s, d, "events").where("event_type = 'error'")
+        .select("event_id", "ts")
+      graft.operators.RangeJoin.proximityPairs(errs, "event_id", "ts",
+          toleranceSeconds = 300L)
+        .selectExpr("a_id", "b_id",
+          "unix_micros(b_ts) - unix_micros(a_ts) AS gap_us")
+        .orderBy("a_id", "b_id")
+    },
       """WITH e AS (SELECT event_id, ts FROM events WHERE event_type = 'error')
         |SELECT a.event_id AS a_id, b.event_id AS b_id,
         |       epoch_us(CAST(b.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP)) AS gap_us
         |FROM e a JOIN e b
         |  ON a.event_id < b.event_id
         | AND abs(epoch_us(CAST(a.ts AS TIMESTAMP)) - epoch_us(CAST(b.ts AS TIMESTAMP))) <= 300000000
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
-    // the flat inequality join (DuckDB IEJoin) + the identical CASE —
-    // a binning bug (double-attributed or dropped pair) or a relation
-    // misclassification both change the census
-    "join_allen_relations" ->
+    // Allen's interval-algebra census over the SAME binned overlap join
+    // (never an all-pairs NLJ): every overlapping event-interval pair
+    // classified into the 9 concurrent Allen relations (equals, starts/
+    // started_by, finishes/finished_by, during/contains, overlaps/
+    // overlapped_by — the disjoint before/after/meets need no join) by a
+    // CASE over exact endpoint micros. Variable durations (value-derived,
+    // floor() to dodge the CAST-rounding divergence) populate every
+    // branch; pairs attribute once via the shared-bin rule + a_id < b_id
+    Entry("join_allen_relations", (s, d) => {
+      // minute-floored starts + minute-multiple durations: endpoint
+      // coincidences (equals/starts/finishes/meets-free census) actually
+      // occur, so every CASE branch carries pairs
+      val ev = t(s, d, "events").where("event_type IN ('error', 'signup')")
+        .select(col("event_id"),
+          expr("(unix_micros(ts) div 60000000) * 60000000").as("su"))
+        .withColumn("eu",
+          expr("su + 60000000 * (1 + (event_id % 10))"))
+      val a = ev.select(col("event_id").as("a_id"),
+        expr("timestamp_micros(su)").as("a_s"),
+        expr("timestamp_micros(eu)").as("a_e"),
+        col("su").as("a_su"), col("eu").as("a_eu"))
+      val b = ev.select(col("event_id").as("b_id"),
+        expr("timestamp_micros(su)").as("b_s"),
+        expr("timestamp_micros(eu)").as("b_e"),
+        col("su").as("b_su"), col("eu").as("b_eu"))
+      graft.operators.RangeJoin.intervalOverlap(
+          a, "a_s", "a_e", b, "b_s", "b_e", binSeconds = 600L)
+        .where("a_id < b_id")
+        .withColumn("relation", expr(
+          """CASE WHEN a_su = b_su AND a_eu = b_eu THEN 'equals'
+            |     WHEN a_su = b_su AND a_eu < b_eu THEN 'starts'
+            |     WHEN a_su = b_su THEN 'started_by'
+            |     WHEN a_eu = b_eu AND a_su > b_su THEN 'finishes'
+            |     WHEN a_eu = b_eu THEN 'finished_by'
+            |     WHEN a_su > b_su AND a_eu < b_eu THEN 'during'
+            |     WHEN a_su < b_su AND a_eu > b_eu THEN 'contains'
+            |     WHEN a_su < b_su THEN 'overlaps'
+            |     ELSE 'overlapped_by' END""".stripMargin))
+        .groupBy("relation")
+        .agg(count(lit(1)).as("n_pairs"))
+        .orderBy("relation")
+    },
+      // the flat inequality join (DuckDB IEJoin) + the identical CASE —
+      // a binning bug (double-attributed or dropped pair) or a relation
+      // misclassification both change the census
       """WITH iv AS (SELECT event_id,
         |                   (epoch_us(CAST(ts AS TIMESTAMP)) // 60000000)
         |                     * 60000000 AS s,
@@ -3520,34 +3300,93 @@ object Io {
         |                  ELSE 'overlapped_by' END AS relation
         |      FROM p)
         |SELECT relation, count(*) AS n_pairs
-        |FROM r GROUP BY 1 ORDER BY relation""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY relation""".stripMargin),
 
-    "sink_zorder_clustered" ->
+    // z-order clustered WRITE (ZOrder.writeClustered): range-partitioned
+    // by z, sorted within files; reading it back must reproduce the
+    // original lineitem aggregate exactly — the layout rewrite is
+    // lossless (the per-file locality it buys is LayoutOperatorSpec's
+    // footer-stat assertion)
+    Entry("sink_zorder_clustered", (s, d) => {
+      val out = s"${base(s, d)}/zorder_out"
+      graft.operators.ZOrder.writeClustered(
+        t(s, d, "lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
+        "l_partkey", "l_suppkey", out, numFiles = 8)
+      s.read.parquet(out)
+        .groupBy(expr("l_partkey % 10").as("pk_mod"))
+        .agg(count(lit(1)).as("n_rows"),
+          expr("CAST(SUM(CAST(l_quantity AS DECIMAL(14,2))) AS DOUBLE)")
+            .as("sum_qty"),
+          max("l_suppkey").as("max_sk"))
+        .orderBy("pk_mod")
+    },
       """SELECT l_partkey % 10 AS pk_mod, count(*) AS n_rows,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(14,2))) AS DOUBLE) AS sum_qty,
         |       max(l_suppkey) AS max_sk
-        |FROM lineitem GROUP BY 1 ORDER BY pk_mod""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY pk_mod""".stripMargin),
 
-    "ddl_ctas_insert" ->
+    // catalog DML: CTAS + INSERT INTO a managed parquet table, then read
+    // back (reference DmlNode INSERT/CTAS, datafusion.proto:269-283) —
+    // the oracle aggregates the original rows, so a lost or duplicated
+    // insert shows up as a hash mismatch
+    Entry("ddl_ctas_insert", (s, d) => {
+      Tables.register(s, d)
+      Tables.dropManaged(s, "ctas_orders")
+      s.sql(
+        """CREATE TABLE ctas_orders USING PARQUET AS
+          |SELECT o_orderstatus, o_totalprice FROM orders
+          |WHERE o_orderstatus = 'F'""".stripMargin)
+      s.sql(
+        """INSERT INTO ctas_orders
+          |SELECT o_orderstatus, o_totalprice FROM orders
+          |WHERE o_orderstatus = 'O'""".stripMargin)
+      s.sql(
+        """SELECT o_orderstatus, COUNT(*) AS n_orders,
+          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
+          |FROM ctas_orders
+          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+    },
       """SELECT o_orderstatus, count(*) AS n_orders,
         |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_tp
         |FROM orders WHERE o_orderstatus IN ('F', 'O')
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin, mutatesSession = true),
 
-    "json_props_agg" ->
+    Entry("json_props_agg", (s, d) => {
+      Tables.register(s, d)
+      s.sql(
+        """SELECT event_type,
+          |       CAST(SUM(CAST(get_json_object(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+          |       COUNT(*) AS n_events
+          |FROM events
+          |GROUP BY event_type ORDER BY event_type""".stripMargin)
+    },
       """SELECT event_type,
         |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |       count(*) AS n_events
         |FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "fn_variant_json" ->
+    // Spark 4's VARIANT type over the semi-structured props column:
+    // parse once, typed variant_get extraction, try_variant_get on a
+    // missing path must be NULL-silent (counted, expected zero hits);
+    // the oracle extracts through DuckDB's JSON functions instead
+    Entry("fn_variant_json", (s, d) => {
+      Tables.register(s, d)
+      s.sql(
+        """SELECT event_type,
+          |       CAST(SUM(variant_get(parse_json(props), '$.k', 'bigint')) AS BIGINT) AS sum_k,
+          |       CAST(SUM(CASE WHEN variant_get(parse_json(props), '$.k', 'bigint') > 50
+          |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
+          |       COUNT(try_variant_get(parse_json(props), '$.missing', 'bigint')) AS n_missing_hits
+          |FROM events
+          |GROUP BY event_type ORDER BY event_type""".stripMargin)
+    },
       """SELECT event_type,
         |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |       CAST(SUM(CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
         |       COUNT(json_extract(props, '$.missing')) AS n_missing_hits
         |FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)
   )
 }

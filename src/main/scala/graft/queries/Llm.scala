@@ -366,2620 +366,6 @@ object Llm {
         |  i -> concat_ws(' ', slice(split(text, ' '), i * 8 + 1, 8))))""".stripMargin)
       .as("text"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_exact" -> ((s, d) => Dedup.exact(docs(s, d)).orderBy("fp")),
-
-    "llm_minhash_bands" -> ((s, d) =>
-      Dedup.lshCandidates(docs(s, d)).orderBy("doc_a", "doc_b")),
-
-    "llm_jaccard_verify" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.jaccard(dd, Dedup.lshCandidates(dd)).orderBy("doc_a", "doc_b")
-    }),
-
-    "llm_simhash" -> ((s, d) => Dedup.simhash(docs(s, d)).orderBy("doc_id")),
-
-    // no ORDER BY: the candidate set is ~n² in dup-heavy corpora and the
-    // differential compare canonicalizes row order anyway — a global sort
-    // of the pair set would be pure benchmark overhead at scale.
-    // Default banding = the web-scale point (15-bit bands, Hamming <= 3).
-    // AUDIT/REPORT FORM, not the pipeline form: the doc-level expanded
-    // pair list is inherently output-bound on dup-heavy corpora (561.7 s
-    // at SF~10 vs simhash_groups 17.1 s / simhash_pipeline 4.96 s) —
-    // benchmark and deploy those two for dedup at scale; this entry
-    // exists to hand auditors the explicit pairs.
-    "llm_simhash_near" -> ((s, d) => Dedup.simhashCandidates(docs(s, d))),
-
-    // the wide-radius configuration (6-bit bands, Hamming <= 8): higher
-    // recall radius, ~1300x higher random band-collision rate — kept
-    // differentially checked for dup-heavy corpora that can afford it
-    "llm_simhash_radius8" -> ((s, d) =>
-      Dedup.simhashCandidates(docs(s, d), bandBits = 6, maxHamming = 8)),
-
-    // fingerprint-group-level reporting: output is O(distinct near-dup
-    // fingerprint pairs) instead of O(doc pairs) — the form that stays
-    // materializable when dup mass makes the expanded pair set explode
-    // (measured at SF~10 100x replication: 342.9 s expanded vs 22.2 s
-    // grouped, same banding)
-    "llm_simhash_groups" -> ((s, d) =>
-      Dedup.simhashNearGroups(docs(s, d)).orderBy("sim_a", "sim_b")),
-
-    // exact-collapse fronting the banded join: doc-level survivor pairs
-    // with collapsed copy counts — total pair_count mass equals the
-    // expanded simhashCandidates answer, but output stays O(survivor
-    // pairs) under replication-heavy corpora (the SF~10 blow-up class)
-    "llm_simhash_pipeline" -> ((s, d) =>
-      Dedup.simhashPipeline(docs(s, d)).orderBy("doc_a", "doc_b", "hamming")),
-
-    "llm_text_stats" -> ((s, d) => TextAnalysis.stats(docs(s, d)).orderBy("doc_id")),
-
-    "llm_quality_filter" -> ((s, d) =>
-      TextAnalysis.qualityFilter(docs(s, d))
-        .select("doc_id", "n_tokens").orderBy("doc_id")),
-
-    "llm_dedup_pipeline" -> ((s, d) =>
-      Dedup.dedupe(docs(s, d)).select("doc_id").orderBy("doc_id")),
-
-    // connected components over verified near-dup pairs (min-label
-    // propagation + pointer jumping): every doc in at least one >=0.6
-    // Jaccard pair, labeled with its component's minimum doc_id
-    "llm_dup_clusters" -> ((s, d) =>
-      Dedup.dupClusters(Dedup.nearDupPairs(docs(s, d))).orderBy("doc_id")),
-
-    // greedy maximal-coverage selection: the 4 docs that together cover
-    // the most distinct trigram shingles (submodular curation pick,
-    // (1−1/e)-approximate; TextAnalysis.coverageSelect — the mmrSelect
-    // driver-greedy shape with integer gains)
-    "llm_coverage_select" -> ((s, d) =>
-      TextAnalysis.coverageSelect(docs(s, d), k = 4)
-        .selectExpr("CAST(step AS INT) AS step", "doc_id",
-          "CAST(gain AS BIGINT) AS gain",
-          "CAST(covered_total AS BIGINT) AS covered_total")
-        .orderBy("step")),
-
-    // cluster-size census over the connected components — the dedup
-    // dashboard's headline table ("how much of the corpus is 2-copies
-    // vs template farms"). Exact-collapse FRONTS the banding (the
-    // simhashPipeline discipline: raw LSH candidates go quadratic in
-    // exact-class size on dup-heavy corpora), then cluster sizes are
-    // re-expanded from the collapse copy counts, and multi-copy exact
-    // classes with no near-dup neighbor surface as their own clusters —
-    // so the histogram still counts every underlying document, at
-    // O(survivor-pair) cost. n_docs = size × count makes the dup-mass
-    // per size class readable directly
-    "llm_cluster_size_hist" -> ((s, d) => {
-      val dd = docs(s, d)
-      // localCheckpoint (r16 opt): the copy-count table feeds the
-      // survivor join, the cluster re-expansion AND the alone-class
-      // anti-join; survivors feed the candidate and verify chains
-      val counts = Dedup.exact(dd)
-        .select(col("keep_id").as("doc_id"), col("n_docs").as("n_copies"))
-        .localCheckpoint()
-      val survivors = dd.join(counts.select("doc_id"), Seq("doc_id"))
-        .localCheckpoint()
-      val pairs = Dedup.nearDupPairs(survivors)
-      val clustered = Dedup.dupClusters(pairs)
-      val near = clustered.join(counts, Seq("doc_id"))
-        .groupBy("cluster_rep").agg(sum("n_copies").as("sz"))
-        .select("sz")
-      val alone = counts.where(col("n_copies") > 1)
-        .join(clustered.select("doc_id"), Seq("doc_id"), "left_anti")
-        .select(col("n_copies").as("sz"))
-      near.union(alone)
-        .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
-        .selectExpr("CAST(sz AS BIGINT) AS cluster_size",
-          "CAST(n_clusters AS BIGINT) AS n_clusters",
-          "CAST(sz * n_clusters AS BIGINT) AS n_docs")
-        .orderBy("cluster_size")
-    }),
-
-    // k-core peel over the verified-pair graph of DISTINCT content:
-    // exact-collapse fronts the banding (copy cliques trivially satisfy
-    // any k AND densify candidates quadratically — measured 536 s at
-    // factor-100 on the raw form), so the 3 rounds of degree>=2
-    // filtering leave the genuinely dense near-dup cores (template
-    // farms); incidental one-off matches dissolve in round 1
-    "llm_kcore" -> ((s, d) => {
-      // localCheckpoint (r16 opt): survivors feed the candidate AND the
-      // verify chain — the lazy form re-derived the exact collapse per
-      // consumer (same shape as llm_dedup_venn)
-      val survivors = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
-      Dedup.kCore(Dedup.nearDupPairs(survivors), k = 2, rounds = 3).orderBy("doc_id")
-    }),
-
-    // link prediction by common-neighbor count: non-adjacent pairs two
-    // hops apart in the co-purchase graph (basket pairs bought together
-    // >= 3 times) — wedge join + adjacency anti-join, log-free on
-    // purpose. The co-purchase graph, not the near-dup one: duplicate
-    // clusters are complete cliques (every 2-hop pair already adjacent),
-    // so an open wedge cannot exist there by construction
-    "llm_link_predict" -> ((s, d) => {
-      val items = Tables.load(s, d, "lineitem")
-        .selectExpr("l_orderkey AS ok", "l_partkey AS pk").distinct()
-      val edges = items.as("x")
-        .join(items.as("y"), expr("x.ok = y.ok AND x.pk < y.pk"))
-        .selectExpr("x.pk AS doc_a", "y.pk AS doc_b")
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("c"))
-        .where(col("c") >= 3).select("doc_a", "doc_b")
-      Dedup.linkPredict(edges, minCommon = 1).orderBy("doc_a", "doc_b")
-    }),
-
-    // the full pipeline with transitive-closure semantics: only each
-    // duplicate component's minimum doc_id survives (vs dedupe()'s
-    // documented one-pass greedy rule)
-    "llm_dedup_cc" -> ((s, d) =>
-      Dedup.dedupeClustered(docs(s, d)).select("doc_id").orderBy("doc_id")),
-
-    // quality-ranked survivor selection: per duplicate component keep the
-    // cleanest/longest member (alnum ratio, then token count, then min
-    // doc_id) instead of dedupeClustered's arbitrary min-id rule
-    "llm_dedup_quality" -> ((s, d) =>
-      Dedup.dedupeByQuality(docs(s, d)).select("doc_id").orderBy("doc_id")),
-
-    "llm_token_counts" -> ((s, d) =>
-      TextAnalysis.tokenCounts(docs(s, d)).orderBy("doc_id")),
-
-    "llm_lang_id" -> ((s, d) => TextAnalysis.langId(docs(s, d)).orderBy("doc_id")),
-
-    // language-ID EVAL against the fixture's labeled lang column: the
-    // confusion matrix that decides whether the n-gram heuristic is good
-    // enough to route documents — per (true, predicted) cell counts; the
-    // eval loop every classifier in the curation stack needs
-    "llm_langid_eval" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.langId(dd)
-        .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang").as("true_lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("true_lang", "pred_lang")
-    }),
-
-    "llm_fingerprint" -> ((s, d) =>
-      TextAnalysis.fingerprint(docs(s, d)).orderBy("doc_id")),
-
-    // Kneser–Ney count statistics — the per-word tables a KN-smoothed
-    // bigram LM is built from (SRILM/KenLM's count pass): corpus unigram
-    // tokens, continuation count N1+(·w) (distinct LEFT contexts — the
-    // KN lower-order numerator), and fan-out N1+(w·) (distinct followers
-    // — the back-off normalizer). Pure integer aggregates over the
-    // bigram stream, vocabulary-bounded shuffles, >=50-count floor keeps
-    // the output head-of-vocab sized
-    "llm_kn_counts" -> ((s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(size(col("w")) >= 2)
-      val bg = toks.select(explode(expr(
-          "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS c, w[i] AS t))"))
-          .as("b"))
-        .select(col("b.c").as("c"), col("b.t").as("t"))
-      val uni = toks.select(explode(col("w")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("n_unigram"))
-      val cont = bg.groupBy(col("t").as("word"))
-        .agg(countDistinct("c").as("n_ctx_left"))
-      val fol = bg.groupBy(col("c").as("word"))
-        .agg(countDistinct("t").as("n_follow"))
-      uni.join(cont, Seq("word"), "left").join(fol, Seq("word"), "left")
-        .where(col("n_unigram") >= 50)
-        .selectExpr("word", "CAST(n_unigram AS BIGINT) AS n_unigram",
-          "CAST(COALESCE(n_ctx_left, 0) AS BIGINT) AS n_ctx_left",
-          "CAST(COALESCE(n_follow, 0) AS BIGINT) AS n_follow")
-        .orderBy("word")
-    }),
-
-    // the count-of-counts side of KN smoothing: how many bigram TYPES
-    // occur exactly 1..4 times (Good–Turing's n_k) and the standard
-    // absolute discount D = n1/(n1 + 2·n2) — integer bins, ONE final
-    // IEEE division at the edge
-    "llm_kn_discounts" -> ((s, d) => {
-      val toks = docs(s, d).select(
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(size(col("w")) >= 2)
-      toks.select(explode(expr(
-          "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS c, w[i] AS t))"))
-          .as("b"))
-        .groupBy(col("b.c"), col("b.t")).agg(count(lit(1)).as("cnt"))
-        .agg(
-          sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("cnt") === 2, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("cnt") === 3, 1L).otherwise(0L)).as("n3"),
-          sum(when(col("cnt") === 4, 1L).otherwise(0L)).as("n4"),
-          count(lit(1)).as("n_types"))
-        .selectExpr("CAST(n1 AS BIGINT) AS n1", "CAST(n2 AS BIGINT) AS n2",
-          "CAST(n3 AS BIGINT) AS n3", "CAST(n4 AS BIGINT) AS n4",
-          "CAST(n_types AS BIGINT) AS n_types",
-          // NULLIF: a dup-heavy corpus can have NO 1/2-count bigram types
-          // at all (sf0.1 does) — ANSI division must yield NULL, not kill
-          "CAST(ROUND(CAST(n1 AS DOUBLE) / NULLIF(CAST(n1 + 2 * n2 AS DOUBLE), 0.0D), 6) AS DOUBLE) AS d_kn")
-    }),
-
-    // green-list watermark detection (Kirchenbauer-style): keyed-hash
-    // parity per adjacent token pair, one-proportion z against 1/2, the
-    // flag decided in pure integers ((2g-n)² > 16n) — no float decides
-    "llm_watermark_detect" -> ((s, d) =>
-      TextAnalysis.watermarkDetect(docs(s, d), "wm1")
-        .selectExpr("doc_id", "CAST(n_scored AS BIGINT) AS n_scored",
-          "CAST(n_green AS BIGINT) AS n_green", "z_green", "flagged")
-        .orderBy("doc_id")),
-
-    // the KN statistics composed into the actual smoothed LM (r14
-    // verdict #4): interpolated Kneser–Ney bigram model with the dyadic
-    // D=3/4 discount, trained on the hash-split train side, scoring the
-    // held-out side — P_KN as ONE IEEE division of exact int64 products
-    // per bigram, log-free per-doc outputs (see knScoreHeldOut scaladoc)
-    "llm_kn_perplexity" -> ((s, d) => {
-      val dd = docs(s, d)
-      val split = TextAnalysis.hashSplit(dd)
-      def part(cond: String) = dd.join(
-        split.where(cond).select("doc_id"), Seq("doc_id"))
-      TextAnalysis.knScoreHeldOut(
-          part("split <> 'train'"), part("split = 'train'"))
-        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
-          "CAST(n_oov AS BIGINT) AS n_oov",
-          "CAST(n_ctx_oov AS BIGINT) AS n_ctx_oov",
-          "avg_p_kn", "hard_frac_ppm")
-        .orderBy("doc_id")
-    }),
-
-    // order-3 Kneser–Ney with bigram backoff (r15 verdict #5 — the
-    // KenLM-default order): one trigram-type aggregate feeds all four
-    // model tables; top-order products pass int64 so numerator and
-    // denominator are exact DECIMAL(38,0) (oracle: HUGEINT) and every
-    // P_KN3 is still ONE IEEE division (see kn3ScoreHeldOut scaladoc)
-    "llm_kn3_perplexity" -> ((s, d) => {
-      val dd = docs(s, d)
-      val split = TextAnalysis.hashSplit(dd)
-      def part(cond: String) = dd.join(
-        split.where(cond).select("doc_id"), Seq("doc_id"))
-      TextAnalysis.kn3ScoreHeldOut(
-          part("split <> 'train'"), part("split = 'train'"))
-        .selectExpr("doc_id", "CAST(n_trigrams AS BIGINT) AS n_trigrams",
-          "CAST(n_oov AS BIGINT) AS n_oov",
-          "CAST(n_ctx_oov AS BIGINT) AS n_ctx_oov",
-          "CAST(n_mid_oov AS BIGINT) AS n_mid_oov",
-          "avg_p_kn3", "hard_frac_ppm")
-        .orderBy("doc_id")
-    }),
-
-    // chance-corrected rater agreement (Cohen's kappa) between the
-    // n-gram language-ID heuristic and the fixture's gold labels — the
-    // one-number upgrade over llm_langid_eval's raw confusion matrix:
-    // kappa = (N·agree − Σ_l row_l·col_l) / (N² − Σ_l row_l·col_l),
-    // every term an exact integer, ONE IEEE division at the edge. The
-    // margins are label-cardinality rows; the 1-row sides broadcast
-    "llm_langid_kappa" -> ((s, d) => {
-      val dd = docs(s, d)
-      val cells = TextAnalysis.langId(dd)
-        .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("cnt"))
-      val stats = cells.agg(sum("cnt").as("n"),
-        sum(when(col("lang") === col("pred_lang"), col("cnt"))
-          .otherwise(0L)).as("agree"))
-      val pe = cells.groupBy(col("lang").as("l")).agg(sum("cnt").as("rn"))
-        .join(cells.groupBy(col("pred_lang").as("l")).agg(sum("cnt").as("cn")),
-          Seq("l"))
-        .agg(sum(expr("rn * cn")).as("pe_num"))
-      stats.crossJoin(broadcast(pe))
-        .selectExpr("CAST(n AS BIGINT) AS n",
-          "CAST(agree AS BIGINT) AS n_agree",
-          "CAST(pe_num AS BIGINT) AS pe_num",
-          "CAST(ROUND(CAST(n * agree - pe_num AS DOUBLE) / " +
-            "CAST(n * n - pe_num AS DOUBLE), 6) AS DOUBLE) AS kappa")
-    }),
-
-    // pass@k (the Codex-paper estimator) from per-task trial tallies:
-    // tasks = customers, trials = their orders, "pass" = status F.
-    // pass@k depends only on (n, c), so the output groups by that pair —
-    // compact at any scale — and the unbiased 1 − C(n−c,k)/C(n,k) is
-    // evaluated as the literal-unrolled RATIO CHAIN Π(n−c−j)/(n−j)
-    // (k! cancels): a fixed left-to-right IEEE tree shared verbatim
-    // with the oracle, overflow-free at ANY n (the raw integer products
-    // overflowed int64 at the 10× staging's ~400 trials/task)
-    "llm_pass_at_k" -> ((s, d) => {
-      val tasks = Tables.load(s, d, "orders")
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("c"))
-        .where(col("n") >= 10)
-      def passAt(k: Int): String = {
-        val ratio = (0 until k).map(j =>
-          s"(CAST(n - c - $j AS DOUBLE) / CAST(n - $j AS DOUBLE))")
-          .mkString(" * ")
-        s"""CAST(ROUND(CASE WHEN n - c < $k THEN CAST(1.0 AS DOUBLE)
-           |  ELSE 1.0 - $ratio
-           |  END, 6) AS DOUBLE) AS pass_at_$k""".stripMargin
-      }
-      tasks.groupBy("n", "c").agg(count(lit(1)).as("n_tasks"))
-        .selectExpr("CAST(n AS BIGINT) AS n", "CAST(c AS BIGINT) AS c",
-          "CAST(n_tasks AS BIGINT) AS n_tasks",
-          passAt(1), passAt(5), passAt(10))
-        .orderBy("n", "c")
-    }),
-
-    // passage-level dedup rate (the RefinedWeb-style granularity between
-    // whole-document dedup and line dedup): per-source chunk counts vs
-    // distinct chunk md5s over the same 32/24 windows llm_passage_chunks
-    // emits — the number that says HOW MUCH of a source is recycled
-    // passages even when no two whole documents match
-    "llm_chunk_dedup" -> ((s, d) =>
-      docs(s, d).select(col("source"),
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(expr("size(w) >= 1 AND w[0] <> ''"))
-        .select(col("source"), explode(expr(
-          """transform(
-            |  sequence(0, CASE WHEN size(w) > 32 THEN (size(w) - 9) DIV 24
-            |                   ELSE 0 END),
-            |  j -> md5(array_join(slice(w, j * 24 + 1, 32), ' ')))"""
-            .stripMargin)).as("h"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_chunks"), countDistinct("h").as("n_distinct"))
-        .selectExpr("source", "CAST(n_chunks AS BIGINT) AS n_chunks",
-          "CAST(n_distinct AS BIGINT) AS n_distinct_chunks",
-          "CAST((n_chunks - n_distinct) * 1000000 DIV n_chunks AS BIGINT) AS dup_ppm")
-        .orderBy("source")),
-
-    // TextTiling-style topic segmentation signal: token-set Jaccard
-    // between CONSECUTIVE passage chunks of each document; a low-overlap
-    // boundary (<0.1) marks a topic shift — the split points a
-    // context-window packer should prefer. Exact integer overlaps via
-    // the exploded (chunk, token) join, one ROUND division per boundary
-    "llm_topic_shifts" -> ((s, d) => {
-      val ch = docs(s, d).select(col("doc_id"),
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(expr("size(w) > 32 AND w[0] <> ''"))
-        .select(col("doc_id"), posexplode(expr(
-          """transform(sequence(0, (size(w) - 9) DIV 24),
-            |  j -> slice(w, j * 24 + 1, 32))""".stripMargin))
-          .as(Seq("j", "cw")))
-      val tk = ch.select(col("doc_id"), col("j"), explode(col("cw")).as("tok"))
-        .distinct()
-      val sz = tk.groupBy("doc_id", "j").agg(count(lit(1)).as("n_tok"))
-      val ov = tk
-        .join(tk.select(col("doc_id"), (col("j") - 1).as("j"), col("tok")),
-          Seq("doc_id", "j", "tok"))
-        .groupBy("doc_id", "j").agg(count(lit(1)).as("n_both"))
-      val pairs = sz
-        .join(sz.select(col("doc_id"), (col("j") - 1).as("j"),
-          col("n_tok").as("n_next")), Seq("doc_id", "j"))
-        .join(ov, Seq("doc_id", "j"), "left")
-        .select(col("doc_id"), expr(
-          "CAST(ROUND(CAST(COALESCE(n_both, 0) AS DOUBLE) " +
-            "/ (n_tok + n_next - COALESCE(n_both, 0)), 6) AS DOUBLE)").as("jac"))
-      pairs.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("jac") < 0.1, 1L).otherwise(0L)).as("n_shifts"),
-          min("jac").as("min_jac"))
-        .selectExpr("doc_id", "CAST(n_pairs AS BIGINT) AS n_pairs",
-          "CAST(n_shifts AS BIGINT) AS n_shifts",
-          "CAST(min_jac AS DOUBLE) AS min_jaccard")
-        .orderBy("doc_id")
-    }),
-
-    // per-source DISTINCTIVE-term signatures ("what makes src3 src3"):
-    // contrastive integer lift tf_s·(T−T_s) DIV ((tf−tf_s+1)·T_s) — the
-    // llm_pmi_collocations discipline applied source-vs-rest — top-5 per
-    // source via a rank window (WindowGroupLimit prunes below the sort).
-    // The corpus-profiling step before choosing mixture weights
-    "llm_source_signature" -> ((s, d) => {
-      val toks = docs(s, d).select(col("source"),
-          explode(expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')")).as("term"))
-        .where(col("term") =!= "")
-      val bySrc = toks.groupBy("source", "term").agg(count(lit(1)).as("tf_s"))
-      val tot = toks.groupBy("term").agg(count(lit(1)).as("tf"))
-      val sTot = toks.groupBy("source").agg(count(lit(1)).as("ts_tot"))
-      val gTot = toks.agg(count(lit(1)).as("t_tot"))
-      bySrc.join(tot, Seq("term")).join(sTot, Seq("source"))
-        .crossJoin(broadcast(gTot))
-        .where(col("tf_s") >= 10)
-        .withColumn("lift",
-          expr("tf_s * (t_tot - ts_tot) DIV ((tf - tf_s + 1) * ts_tot)"))
-        .withColumn("rank", expr(
-          "row_number() OVER (PARTITION BY source ORDER BY lift DESC, tf_s DESC, term)"))
-        .where(col("rank") <= 5)
-        .selectExpr("source", "CAST(rank AS INT) AS rank", "term",
-          "CAST(tf_s AS BIGINT) AS tf_s", "CAST(lift AS BIGINT) AS lift")
-        .orderBy("source", "rank")
-    }),
-
-    // training-order shuffle QUALITY audit: adjacent-position same-source
-    // rate of the seeded permutation vs the closed-form expectation for a
-    // uniform shuffle (Σ n_s(n_s−1) / N(N−1)) — the diagnostic that
-    // catches a broken shuffle (curriculum leakage: long same-source
-    // runs inflate gradient correlation). Observed count from ONE
-    // pos→pos+1 equi self-join of the two-phase permutation; both rates
-    // published as exact integer ppm
-    "llm_shuffle_quality" -> ((s, d) => {
-      val dd = docs(s, d)
-      val ord = TrainOrder.shuffleOrder(dd.select("doc_id"), "sq1")
-        .join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
-      val adj = ord.select(col("pos"), col("source").as("src_a"))
-        .join(ord.select((col("pos") - 1).as("pos"), col("source").as("src_b")),
-          Seq("pos"))
-      val obs = adj.agg(count(lit(1)).as("n_pairs"),
-        sum(when(col("src_a") === col("src_b"), 1L).otherwise(0L)).as("n_same"))
-      val exp = dd.groupBy("source").agg(count(lit(1)).as("ns"))
-        .agg(sum(expr("ns * (ns - 1)")).as("same_num"), sum("ns").as("n"))
-      obs.crossJoin(broadcast(exp))
-        .selectExpr("CAST(n_pairs AS BIGINT) AS n_pairs",
-          "CAST(n_same AS BIGINT) AS n_same",
-          "CAST(n_same * 1000000 DIV n_pairs AS BIGINT) AS same_ppm_obs",
-          "CAST(same_num * 1000000 DIV (n * (n - 1)) AS BIGINT) AS same_ppm_exp")
-    }),
-
-    // Venn census of the three dedup fronts — what each method catches
-    // that the others miss: exact collapse first (its drop count is the
-    // survivor complement), then BOTH near-dup methods run over the SAME
-    // exact survivors: MinHash+Jaccard transitive clusters drop non-rep
-    // members, simhash banding drops any doc with a smaller-id partner
-    // within Hamming<=3 (each method's own standard survivor rule).
-    // One integer row — the dashboard number that justifies running
-    // both lexical fronts
-    "llm_dedup_venn" -> ((s, d) => {
-      val dd = docs(s, d)
-      // localCheckpoint (r16 opt): the exact-survivor corpus feeds THREE
-      // chains (MinHash pairs, simhash banding, the flag frame) — the
-      // lazy form re-derived the scan+md5+collapse per consumer (17
-      // parquet scans / 60 Exchanges executed)
-      val survivors = Dedup.exactSurvivors(dd).localCheckpoint()
-      val mhPairs = Dedup.nearDupPairs(survivors)
-      val mhDropped = Dedup.dupClusters(mhPairs)
-        .where(col("doc_id") =!= col("cluster_rep")).select("doc_id")
-      val shDropped = Dedup.simhashCandidates(survivors)
-        .select(col("doc_b").as("doc_id")).distinct()
-      val flags = survivors.select("doc_id")
-        .join(mhDropped.withColumn("mh", lit(1)), Seq("doc_id"), "left")
-        .join(shDropped.withColumn("sh", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_survivors"),
-          sum(when(col("mh").isNotNull && col("sh").isNull, 1L)
-            .otherwise(0L)).as("n_minhash_only"),
-          sum(when(col("sh").isNotNull && col("mh").isNull, 1L)
-            .otherwise(0L)).as("n_simhash_only"),
-          sum(when(col("sh").isNotNull && col("mh").isNotNull, 1L)
-            .otherwise(0L)).as("n_both_near"))
-      flags.crossJoin(broadcast(dd.agg(count(lit(1)).as("n_docs"))))
-        .selectExpr("CAST(n_docs AS BIGINT) AS n_docs",
-          "CAST(n_docs - n_survivors AS BIGINT) AS n_exact_dropped",
-          "CAST(n_minhash_only AS BIGINT) AS n_minhash_only",
-          "CAST(n_simhash_only AS BIGINT) AS n_simhash_only",
-          "CAST(n_both_near AS BIGINT) AS n_both_near",
-          "CAST(n_survivors - n_minhash_only - n_simhash_only - n_both_near AS BIGINT) AS n_clean")
-    }),
-
-    // simhash banding precision sweep — which Hamming radius is worth
-    // it: candidates at radius<=r (exact-collapse survivors, the banded
-    // join) verified by exact shingle Jaccard>=0.6; pairs that share no
-    // shingle verify at 0 (LEFT join, COALESCE — the inner jaccard join
-    // would silently overstate precision). Radii expand via a broadcast
-    // 4-row theta join — never a per-radius rescan
-    "llm_simhash_pr_curve" -> ((s, d) => {
-      // localCheckpoint (r16 opt): the exact-survivor corpus feeds BOTH
-      // the simhash fingerprint chain and the jaccard verify chain, and
-      // the candidate-pair set feeds BOTH the radius census and the
-      // verify join — the lazy form re-derived each per consumer (31
-      // parquet scans / 119 Exchanges in the executed plan)
-      val dd = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
-      val sp = Dedup.simhashCandidates(dd).localCheckpoint()
-      val jac = Dedup.jaccard(dd, sp.select("doc_a", "doc_b"))
-      val pairs = sp.join(jac, Seq("doc_a", "doc_b"), "left")
-        .select(col("hamming"), coalesce(col("jaccard"), lit(0.0)).as("jac"))
-      val radii = s.range(0, 4).select(col("id").as("radius"))
-      pairs.join(broadcast(radii), expr("hamming <= radius"))
-        .groupBy("radius")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("jac") >= 0.6, 1L).otherwise(0L)).as("n_verified"))
-        .selectExpr("CAST(radius AS INT) AS radius",
-          "CAST(n_pairs AS BIGINT) AS n_pairs",
-          "CAST(n_verified AS BIGINT) AS n_verified",
-          "CAST(n_verified * 1000000 DIV n_pairs AS BIGINT) AS precision_ppm")
-        .orderBy("radius")
-    }),
-
-    // b-bit MinHash (Li & König 2010) at b=1: keep only the LOW BIT of
-    // each of the 8 minhash values — 1/64th the signature storage — and
-    // estimate Jaccard from the bit-collision count as ĵ = 2c − 1 (the
-    // r→0 form; a non-matching pair still collides half the time by
-    // chance). Published beside the exact shingle Jaccard on the SAME
-    // banding candidates over exact-collapse SURVIVORS (copies share
-    // every minhash — raw candidates go quadratic per exact class,
-    // measured 6× super-linear at the 10× staging), so the entry IS the
-    // estimator-vs-truth audit; integer bit matches, one ROUND division
-    "llm_bbit_minhash" -> ((s, d) => {
-      // localCheckpoint (r16 opt): candidates feed the estimator join and
-      // the exact verify, the bit table joins twice (a/b sides) — both
-      // are pair/signature-sized. The survivor corpus itself stays lazy:
-      // checkpointing it was A/B'd and lost (2.29 → 2.58 s) — this entry
-      // derives the corpus only thrice and the text materialization costs
-      // more than the re-derives.
-      val dd = Dedup.exactSurvivors(docs(s, d))
-      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
-        .localCheckpoint()
-      val bits = Dedup.minhash(dd).select(
-        col("doc_id") +: (0 until 8).map(i => expr(s"h$i % 2").as(s"b$i")): _*)
-        .localCheckpoint()
-      val bitsA = bits.toDF("doc_a" +: (0 until 8).map(i => s"ab$i"): _*)
-      val bitsB = bits.toDF("doc_b" +: (0 until 8).map(i => s"bb$i"): _*)
-      val matchExpr = (0 until 8)
-        .map(i => s"CAST(ab$i = bb$i AS INT)").mkString(" + ")
-      val est = cand.join(bitsA, Seq("doc_a")).join(bitsB, Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"), expr(matchExpr).as("nm"))
-      Dedup.jaccard(dd, cand).join(est, Seq("doc_a", "doc_b"))
-        .selectExpr("doc_a", "doc_b", "CAST(nm AS INT) AS n_match",
-          "CAST(ROUND(CAST(2 * nm - 8 AS DOUBLE) / 8.0, 6) AS DOUBLE) AS j_est",
-          "jaccard")
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // RAG-style passage chunking: fixed 32-token windows at stride 24
-    // (8-token overlap), per-chunk md5 over the joined tokens — the
-    // ingestion step between documents and an embedding index. Pure
-    // per-row positional expression work (one Generate per doc), no
-    // corpus state; the trailing partial window is kept, the chunk
-    // count is the closed form 1 + ceil((n−32)/24)
-    "llm_passage_chunks" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(expr("size(w) >= 1 AND w[0] <> ''"))
-        .select(col("doc_id"), expr("size(w)").as("n_toks"),
-          posexplode(expr(
-            """transform(
-              |  sequence(0, CASE WHEN size(w) > 32 THEN (size(w) - 9) DIV 24
-              |                   ELSE 0 END),
-              |  j -> struct(j * 24 AS st,
-              |              size(slice(w, j * 24 + 1, 32)) AS len,
-              |              md5(array_join(slice(w, j * 24 + 1, 32), ' ')) AS h))"""
-              .stripMargin)).as(Seq("chunk_idx", "ch")))
-        .selectExpr("doc_id", "CAST(chunk_idx AS INT) AS chunk_idx",
-          "CAST(ch.st AS BIGINT) AS start_tok",
-          "CAST(ch.len AS BIGINT) AS chunk_len", "ch.h AS chunk_md5")
-        .orderBy("doc_id", "chunk_idx")),
-
-    // decontamination: the first 50 documents play the benchmark set; any
-    // corpus doc sharing >= 30% of a probe's 3-word shingles is flagged
-    // (this probe range includes genuine plants: probes 31/44 sit verbatim
-    // inside other fixture docs — containment 1.0 — so the entry is
-    // non-empty and exercises the exact case the operator exists for)
-    "llm_decontaminate" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.containment(dd, dd.where("doc_id < 50"), minContainment = 0.3)
-        .orderBy("doc_id", "probe_id")
-    }),
-
-    // the large-probe-set decontamination path: Bloom prefilter on the
-    // corpus-shingle stream + exact confirm join — bit-identical result
-    // to containment() at any fpp (the oracle recomputes the EXACT
-    // semantics with no bloom at all, so a prefilter that dropped a true
-    // hit could never hash-match); wider probe slice than
-    // llm_decontaminate so the two entries' outputs differ
-    "llm_bloom_decontaminate" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.containmentBloom(dd, dd.where("doc_id < 80"), minContainment = 0.3)
-        .orderBy("doc_id", "probe_id")
-    }),
-
-    // MULTI-SUITE decontamination sweep (r10 verdict #7): three benchmark
-    // suites, each with its own probe slice and containment threshold,
-    // checked in ONE corpus pass — suite tags and thresholds fan out
-    // post-count on broadcast dimension tables, so the corpus side is
-    // scanned once no matter how many suites ride along (PlanShapeSpec
-    // gates the scan count against the suite count)
-    "llm_decontam_suite" -> ((s, d) => {
-      import s.implicits._
-      val dd = docs(s, d)
-      val probes = dd.where("doc_id < 110").withColumn("suite", expr(
-        "CASE WHEN doc_id < 40 THEN 'qa' WHEN doc_id < 80 THEN 'math' ELSE 'code' END"))
-      val thr = Seq(("qa", 0.3), ("math", 0.5), ("code", 0.2))
-        .toDF("suite", "min_containment")
-      Dedup.containmentBloomSuites(dd, probes, thr)
-        .orderBy("suite", "doc_id", "probe_id")
-    }),
-
-    // per-domain quota: at most 8 docs per source, best alnum_ratio first
-    // (doc_id tie-break) — the FineWeb "no domain dominates" cap
-    "llm_domain_cap" -> ((s, d) =>
-      TextAnalysis.domainCap(docs(s, d), maxPerKey = 8)
-        .select("doc_id", "source").orderBy("source", "doc_id")),
-
-    // context-window packing: 64-token chunks advancing by 56 (8 overlap)
-    "llm_chunk" -> ((s, d) =>
-      TextAnalysis.chunk(docs(s, d), chunkTokens = 64, overlap = 8)
-        .orderBy("doc_id", "chunk_idx")),
-
-    // 5 docs per language, chosen by content-hash order — deterministic
-    // stratified sampling (WindowGroupLimit plan: rank prunes pre-shuffle)
-    "llm_stratified_sample" -> ((s, d) =>
-      TextAnalysis.stratifiedSample(docs(s, d), "lang", 5)
-        .select("doc_id", "lang").orderBy("lang", "doc_id")),
-
-    // training-mix rebalance: per-source keep rates by id-hash bucket;
-    // sources absent from the rate table drop out entirely
-    "llm_mixture_sample" -> ((s, d) =>
-      TextAnalysis.mixtureSample(docs(s, d),
-          Map("src0" -> 100, "src1" -> 50, "src2" -> 25, "src3" -> 10))
-        .select("doc_id", "source").orderBy("doc_id")),
-
-    "llm_hash_split" -> ((s, d) =>
-      TextAnalysis.hashSplit(docs(s, d)).orderBy("doc_id")),
-
-    // token-budget shard packing (two-phase prefix sum — the global
-    // cumsum never runs as a single-task window; plan-asserted). 4096
-    // docs per bucket, 2^16 tokens per shard
-    "llm_pack_shards" -> ((s, d) =>
-      TextAnalysis.packShards(docs(s, d)).orderBy("doc_id")),
-
-    "llm_ngram_stats" -> ((s, d) =>
-      TextAnalysis.ngramStats(docs(s, d), n = 2, k = 20)),
-
-    // packing-efficiency report over packShards' assignment — the
-    // artifact that says whether the shard budget is wasting context
-    // window: per shard, docs, used tokens, capacity remainder and an
-    // integer fill rate in ppm. Assignment is start-based, so a doc
-    // straddling a boundary overfills its start shard (remainder goes
-    // negative) and the next shard reads under-full — exactly what the
-    // report is for. One rollup over the two-phase prefix-sum output
-    "llm_pack_efficiency" -> ((s, d) => {
-      TextAnalysis.packShards(docs(s, d), tokensPerShard = 4096L)
-        .createOrReplaceTempView("__pack_eff")
-      s.sql("""
-        SELECT CAST(shard AS BIGINT) AS shard,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS used_tokens,
-               CAST(4096 - SUM(n_tokens) AS BIGINT) AS waste_tokens,
-               CAST((SUM(n_tokens) * 1000000) DIV 4096 AS BIGINT) AS fill_ppm
-        FROM __pack_eff GROUP BY shard ORDER BY shard""")
-    }),
-
-    // deterministic training order (llm/TrainOrder): seeded md5
-    // permutation + 1024-doc shard assignment, computed with the
-    // hash-prefix two-phase prefix sum — no single-task global window
-    // (plan-asserted in TrainOrderSpec). The oracle recomputes the
-    // permutation as ONE flat row_number, so a mis-stitched bucket
-    // offset, an unstable tiebreak, or a biased bucket key all
-    // hash-mismatch.
-    "llm_shuffle_order" -> ((s, d) =>
-      TrainOrder.shuffleShards(docs(s, d), seed = "graft-r9",
-          shardDocs = 1024L)
-        .orderBy("doc_id")),
-
-    // multi-epoch training orders: the SAME permutation machinery with
-    // per-epoch seeds gives independent orders per epoch (each a true
-    // permutation of the corpus — no doc repeats or drops within an
-    // epoch, the property a naive per-epoch random() cannot give across
-    // restarts); displacement shows the orders really decorrelate
-    "llm_epoch_orders" -> ((s, d) => {
-      val dd = docs(s, d)
-      val e1 = TrainOrder.shuffleOrder(dd, "epoch-1")
-        .select(col("doc_id"), col("pos").as("pos_e1"))
-      val e2 = TrainOrder.shuffleOrder(dd, "epoch-2")
-        .select(col("doc_id"), col("pos").as("pos_e2"))
-      e1.join(e2, Seq("doc_id"))
-        .selectExpr("doc_id", "CAST(pos_e1 AS BIGINT) AS pos_e1",
-          "CAST(pos_e2 AS BIGINT) AS pos_e2",
-          "CAST(ABS(pos_e1 - pos_e2) AS BIGINT) AS displacement")
-        .orderBy("doc_id")
-    }),
-
-    // stride-scheduled mixture interleave: source weights 1/2/3 (by
-    // source index mod 3), every training-order prefix holds each source
-    // in weight proportion. Spark computes pos in closed form (per-row
-    // arithmetic over the constant-folded source list); the oracle is
-    // the flat row_number over the stride keys — green proves the
-    // closed-form rank identity.
-    "llm_mixture_interleave" -> ((s, d) =>
-      TrainOrder.interleaveStride(docs(s, d), "source",
-          expr("1 + CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) % 3"),
-          seed = "graft-mix")
-        .orderBy("doc_id")),
-
-    // per-doc novelty against the corpus: fraction of a doc's distinct
-    // 3-gram shingles with corpus document frequency <= 2 — integer
-    // counts until the final rounded ratio
-    "llm_novelty" -> ((s, d) =>
-      TextAnalysis.novelty(docs(s, d)).orderBy("doc_id")),
-
-    // Gini–Simpson + effective vocabulary (Σcnt² stays exact integer —
-    // the log-free perplexity proxy)
-    "llm_token_diversity" -> ((s, d) =>
-      TextAnalysis.tokenDiversity(docs(s, d)).orderBy("doc_id")),
-
-    // threshold heavy hitters through the CMS prefilter — exact result
-    // (the oracle is the plain GROUP BY ... HAVING; the sketch pass is
-    // invisible to it by the no-underestimate guarantee)
-    "llm_heavy_hitters" -> ((s, d) =>
-      TextAnalysis.heavyHitters(docs(s, d), minDf = 35L, n = 2)
-        .orderBy(col("df").desc, col("shingle"))),
-
-    // targeted-curation retrieval scoring: BM25 of every doc against a
-    // fixed 3-term query; contributions share one expression string
-    // with the oracle (bm25Contribution), summed on DECIMAL
-    "llm_bm25" -> ((s, d) =>
-      TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
-        .orderBy("doc_id")),
-
-    // Gopher-style repetition quality signals: top 2-gram share and
-    // duplicate-2-gram ratio per document
-    "llm_repetition" -> ((s, d) =>
-      TextAnalysis.repetition(docs(s, d)).orderBy("doc_id")),
-
-    // line-level boilerplate removal (CCNet/FineWeb pre-dedup step). The
-    // fixture text is single-line, so the wiring synthesizes line
-    // structure first — 8-token lines — exactly as the oracle does;
-    // duplicate documents then genuinely share lines, which is the case
-    // the operator exists for
-    "llm_line_dedup" -> ((s, d) =>
-      TextAnalysis.lineDedup(lineified(s, d)).orderBy("doc_id")),
-
-    // incremental ingest: the batch (doc_id % 5 = 0) deduped against the
-    // accepted corpus (the rest) — exact cross-fingerprint drop + banded
-    // cross-LSH + Jaccard verify, batch survivors out
-    "llm_dedup_incremental" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.dedupeIncremental(
-        existing = dd.where(col("doc_id") % 5 =!= 0),
-        incoming = dd.where(col("doc_id") % 5 === 0))
-        .select(col("doc_id"), md5(col("text")).as("content_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // the CCNet ordering, composed: strip boilerplate lines FIRST
-    // (keepText surfaces the reassembled document), exact-dedup what
-    // remains — docs that differed only in boilerplate collapse
-    "llm_line_dedup_pipeline" -> ((s, d) => {
-      val cleaned = TextAnalysis.lineDedup(lineified(s, d), keepText = true)
-        .select(col("doc_id"), col("kept_text").as("text"))
-      Dedup.exact(cleaned).orderBy("fp")
-    }),
-
-    // PII scrubbing over deterministically-injected emails/phones/IPs;
-    // scrub_md5 proves the replacements landed at identical offsets
-    "llm_pii_scrub" -> ((s, d) => {
-      val dd = docs(s, d)
-        .select(col("doc_id"), expr(piiInject("STRING")).as("text"))
-      TextAnalysis.piiScrub(dd).orderBy("doc_id")
-    }),
-
-    // exact duplicate-span detection (Lee et al. 2021 substring dedup
-    // signal): maximal 5-token spans shared verbatim with another doc
-    "llm_dup_spans" -> ((s, d) =>
-      Dedup.dupSpans(docs(s, d)).orderBy("doc_id")),
-
-    // the removal counterpart: scrub every duplicated span except the
-    // minimum-doc_id copy; one copy of every passage survives corpus-wide
-    "llm_scrub_spans" -> ((s, d) =>
-      Dedup.scrubDupSpans(docs(s, d)).orderBy("doc_id")),
-
-    "llm_cosine_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bruteForceTopK(e.where("vec_id < 5"), e, 3)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // power-of-two sequence-length bucketing — the batching layout a
-    // trainer/server pads into (a doc of n tokens rides the smallest
-    // 2^k ≥ n bucket, floor 16): bucket from pure integer bit
-    // arithmetic (shift the length down until zero — expressed as the
-    // CASE ladder both engines constant-fold), padding waste = bucket −
-    // n summed exactly. The report that prices a bucket set before
-    // anyone trains with it
-    "llm_length_buckets" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__lb_docs")
-      s.sql(raw"""
-        WITH t AS (SELECT doc_id,
-                          CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_tok
-                   FROM __lb_docs),
-        b AS (SELECT doc_id, n_tok,
-                     CASE WHEN n_tok <= 16 THEN 16
-                          WHEN n_tok <= 32 THEN 32
-                          WHEN n_tok <= 64 THEN 64
-                          WHEN n_tok <= 128 THEN 128
-                          WHEN n_tok <= 256 THEN 256
-                          WHEN n_tok <= 512 THEN 512
-                          ELSE 1024 END AS bucket
-              FROM t)
-        SELECT CAST(bucket AS INT) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
-               CAST(SUM(bucket - n_tok) AS BIGINT) AS pad_waste,
-               CAST((SUM(n_tok) * 1000000) DIV SUM(bucket) AS BIGINT) AS fill_ppm
-        FROM b GROUP BY bucket ORDER BY bucket""")
-    }),
-
-    // composite Gopher-style admission gate — the four rule families as
-    // ONE scan with a verdict BITMASK (which rule failed is as
-    // important as the verdict — curation debugging reads the mask
-    // histogram): length band, alnum ratio, word-count band, and
-    // max-token-share repetition, all integer cross-multiplications.
-    // The repetition signal needs one explode+agg per doc, joined back
-    "llm_gopher_gate" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__gg_docs")
-      s.sql(s"""
-        WITH base AS (SELECT doc_id, text, n_chars,
-                             length(regexp_replace(text, '[^a-zA-Z0-9]', '')) AS alnum
-                      FROM __gg_docs),
-        toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
-                   SELECT doc_id, explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) AS tok
-                   FROM __gg_docs) t
-                 WHERE length(tok) > 0 GROUP BY doc_id, tok),
-        rep AS (SELECT doc_id, SUM(tf) AS n_words, MAX(tf) AS max_tf
-                FROM toks GROUP BY doc_id)
-        SELECT b.doc_id,
-               CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000 THEN 1 ELSE 0 END
-                 + CASE WHEN 1000 * b.alnum >= 600 * b.n_chars THEN 2 ELSE 0 END
-                 + CASE WHEN COALESCE(r.n_words, 0) BETWEEN 10 AND 5000 THEN 4 ELSE 0 END
-                 + CASE WHEN COALESCE(5 * r.max_tf <= r.n_words, FALSE) THEN 8 ELSE 0 END
-                 AS INT) AS rule_mask,
-               CAST(COALESCE(r.n_words, 0) AS BIGINT) AS n_words,
-               CAST(COALESCE(r.max_tf, 0) AS BIGINT) AS max_tf,
-               CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000
-                          AND 1000 * b.alnum >= 600 * b.n_chars
-                          AND COALESCE(r.n_words, 0) BETWEEN 10 AND 5000
-                          AND COALESCE(5 * r.max_tf <= r.n_words, FALSE)
-                     THEN TRUE ELSE FALSE END AS BOOLEAN) AS kept
-        FROM base b LEFT JOIN rep r ON r.doc_id = b.doc_id
-        ORDER BY b.doc_id""")
-    }),
-
-    // temperature-balanced mixture quotas (the multilingual-sampling
-    // trick: share ∝ tokens^(1/T), here T=2 → SQRT, the one sanctioned
-    // transcendental — correctly-rounded IEEE): high-resource sources
-    // are damped, low-resource boosted. The Σ√tokens denominator folds
-    // the |sources|-row list in source order (never an unordered double
-    // SUM); quotas are FLOOR of one fixed tree, so membership is
-    // integer-deterministic. Compare llm_token_budget_mix (linear
-    // weights): same quota machinery, different allocation curve
-    "llm_mixture_temperature" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__mt_docs")
-      s.sql(raw"""
-        WITH st AS (SELECT source,
-                           SUM(CAST(size(split(trim(text), '\\s+')) AS BIGINT)) AS tokens
-                    FROM __mt_docs GROUP BY source),
-        sq AS (SELECT source, tokens, SQRT(CAST(tokens AS DOUBLE)) AS w FROM st),
-        tot AS (SELECT aggregate(transform(array_sort(collect_list(struct(source, w))),
-                         s -> s.w), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) AS tw
-                FROM sq)
-        SELECT source, CAST(tokens AS BIGINT) AS tokens,
-               CAST(FLOOR(w / tw * 1000000) AS BIGINT) AS share_ppm,
-               CAST(FLOOR(w / tw * 100000) AS BIGINT) AS quota_tokens
-        FROM sq CROSS JOIN tot
-        ORDER BY source""")
-    }),
-
-    // held-out LM quality scoring — the honest perplexity filter: the
-    // bigram model trains on the hash-split train side ONLY and scores
-    // the held-out side (in-corpus counts leak every doc into its own
-    // model); unseen bigrams contribute p=0 and surface as n_oov
-    "llm_lm_heldout" -> ((s, d) => {
-      val dd = docs(s, d)
-      val split = TextAnalysis.hashSplit(dd)
-      def part(cond: String) = dd.join(
-        split.where(cond).select("doc_id"), Seq("doc_id"))
-      TextAnalysis.bigramScoreHeldOut(
-          part("split <> 'train'"), part("split = 'train'"))
-        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
-          "CAST(n_oov AS BIGINT) AS n_oov",
-          "CAST(n_rare AS BIGINT) AS n_rare", "avg_p")
-        .orderBy("doc_id")
-    }),
-
-    // speculative-decoding acceptance audit: the bigram draft table
-    // (trained on the hash-split train side) proposes each next token on
-    // held-out docs; accept iff the draft equals the actual next token —
-    // the acceptance-rate number that decides whether a draft model
-    // pays for itself. Pure integer censuses; one broadcast-sized
-    // draft-table join onto the eval bigram stream
-    "llm_draft_accept" -> ((s, d) => {
-      val dd = docs(s, d)
-      val split = TextAnalysis.hashSplit(dd)
-      def part(cond: String) = dd.join(
-        split.where(cond).select("doc_id"), Seq("doc_id"))
-      val draft = TextAnalysis.ngramDraft(part("split = 'train'"), minCount = 3)
-        .select(col("w1"), col("draft"))
-      val ebg = part("split <> 'train'")
-        .select(col("doc_id"),
-          expr(s"split(${Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(expr("size(w) >= 2"))
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(w) - 2), " +
-            "i -> struct(w[i] AS w1, w[i+1] AS w2))")).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      ebg.join(draft, Seq("w1"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(when(col("draft").isNotNull, 1L).otherwise(0L)).as("n_drafted"),
-          sum(when(col("draft") === col("w2"), 1L).otherwise(0L)).as("n_accept"))
-        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
-          "CAST(n_drafted AS BIGINT) AS n_drafted",
-          "CAST(n_accept AS BIGINT) AS n_accept",
-          "CAST(FLOOR(n_accept * 1000000 / NULLIF(n_drafted, 0)) AS BIGINT) AS accept_ppm")
-        .orderBy("doc_id")
-    }),
-
-    // short-time DFT spectrogram over REAL decoded PCM: per-frame power
-    // in the 4 lowest bins against the driver-literal DftBasis, dominant
-    // bin by strict argmax, per-doc histogram + peak power
-    // max_power leaves as FLOOR->BIGINT: powers sit at ~1e10 where
-    // DuckDB's multiply-round-divide ROUND(,6) perturbs the last ULP
-    // (the llm_weighted_sample 1e14 trap) — floor of identical doubles
-    // is exact in both engines
-    "llm_audio_spectrogram" -> ((s, d) =>
-      Multimodal.spectrogram(Multimodal.synthesizeAudio(docs(s, d))).toDF()
-        .selectExpr("doc_id", "n_frames", "dom1", "dom2", "dom3", "dom4",
-          "CAST(FLOOR(max_power) AS BIGINT) AS max_power")
-        .orderBy("doc_id")),
-
-    // energy-threshold VAD over REAL decoded WAV PCM (frame peaks,
-    // run-length segments) — the speech/silence segmentation step; the
-    // oracle replays the generator's sample formula through identical
-    // frame and island arithmetic
-    "llm_audio_vad" -> ((s, d) =>
-      Multimodal.vadSegments(Multimodal.synthesizeAudio(docs(s, d)))
-        .toDF().orderBy("doc_id")),
-
-    // ColBERT-style late interaction (MaxSim): each vector splits into
-    // 4 sub-vectors ("token embeddings" — deterministic 16-dim slices of
-    // the stored 64-dim vector, the wiring a real multi-vector table
-    // feeds directly); score(q, d) = Σ_i max_j cos(q_i, d_j), the
-    // retrieval scorer that beats single-vector cosine on long docs.
-    // Per-(pair, i) max runs on ROUNDED cosines (deterministic both
-    // engines), the 4-term sum folds in i order, ranking ties on cand.
-    // Probes are the bounded slice; at corpus scale the candidate set
-    // comes from a first-stage ANN exactly like llm_knn_approx
-    "llm_maxsim" -> ((s, d) => {
-      emb(s, d).createOrReplaceTempView("__ms_emb")
-      s.sql("""
-        WITH sub AS (SELECT vec_id, i,
-                            slice(embedding, i * 16 + 1, 16) AS sv
-                     FROM __ms_emb
-                     LATERAL VIEW explode(sequence(0, 3)) t AS i),
-        q AS (SELECT vec_id AS qid, i AS qi, sv AS qv FROM sub WHERE vec_id < 3),
-        c AS (SELECT vec_id AS did, i AS dj, sv AS dv FROM sub WHERE vec_id >= 3),
-        p AS (SELECT /*+ BROADCAST(q) */ q.qid, c.did, q.qi,
-                     MAX(CAST(ROUND(graft_cosine(q.qv, c.dv), 6) AS DOUBLE)) AS mcos
-              FROM q JOIN c ON c.did <> q.qid
-              GROUP BY q.qid, c.did, q.qi),
-        sc AS (SELECT qid, did,
-                      CAST(ROUND(aggregate(transform(
-                        array_sort(collect_list(struct(qi, mcos))), e -> e.mcos),
-                        CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), 6) AS DOUBLE) AS maxsim
-               FROM p GROUP BY qid, did),
-        r AS (SELECT qid, did, maxsim,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY maxsim DESC, did) AS rank
-              FROM sc)
-        SELECT qid AS probe_id, did AS cand_id, maxsim,
-               CAST(rank AS INT) AS rank
-        FROM r WHERE rank <= 5
-        ORDER BY probe_id, rank""")
-    }),
-
-    // embedding-table outlier audit: each label's 3 members least
-    // similar to the label's DECIMAL-exact centroid — the mislabel QC
-    // of a vector store (Similarity.embedOutliers; the embeddingDrift
-    // decimal-mean discipline, ascending-dim cosine folds, vec_id ties)
-    "llm_embed_outliers" -> ((s, d) =>
-      Similarity.embedOutliers(emb(s, d), k = 3)
-        .selectExpr("vec_id", "CAST(label AS INT) AS label", "cos",
-          "CAST(rank AS INT) AS rank")
-        .orderBy("label", "rank")),
-
-    // bitext mining (LASER/CCMatrix shape): for every source-language
-    // doc's embedding, the nearest target-language candidate with the
-    // top1−top2 margin criterion — margin-based filtering is what keeps
-    // mined pairs precise when absolute cosine is uninformative. Probes
-    // and candidates come from the lang column joined onto the embedding
-    // table (vec_id = doc_id); margin arithmetic runs on the ROUNDED
-    // ranked cosines, so both engines subtract identical doubles. The
-    // source side is the bounded probe set (one language's slice); at
-    // corpus scale the candidate join composes over lshTopKBanded like
-    // hardNegatives — the margin rule is unchanged
-    "llm_bitext_mine" -> ((s, d) => {
-      val e = emb(s, d)
-      val langs = docs(s, d).select(col("doc_id"), col("lang"))
-      def side(l: String) = e.join(langs, e("vec_id") === langs("doc_id"))
-        .where(s"lang = '$l'").select("vec_id", "embedding")
-      // the probe slice is the bounded side — hint it, or the theta join
-      // between two join OUTPUTS (no scan statistics) degenerates to a
-      // CartesianProduct instead of the probe-broadcast NLJ every other
-      // brute-force entry plans (PlanShapeSpec's global gate)
-      Similarity.bruteForceTopK(broadcast(side("de")), side("en"), 2)
-        .groupBy("probe_id")
-        .agg(max(when(col("rank") === 1, col("cand_id"))).as("best_cand"),
-          max(when(col("rank") === 1, col("cos"))).as("cos1"),
-          max(when(col("rank") === 2, col("cos"))).as("cos2"))
-        .selectExpr("probe_id", "best_cand", "cos1",
-          "CAST(ROUND(cos1 - cos2, 6) AS DOUBLE) AS margin",
-          "cos1 - cos2 > 0.02 AS accepted")
-        .orderBy("probe_id")
-    }),
-
-    "llm_ann_bucketed" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.lshTopK(e.where("vec_id < 16"), e, 3, planes = 8)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // multi-band LSH ANN: 4 bands of 8 disjoint hyperplanes, candidate
-    // if ANY band agrees (OR-of-ANDs amplification) — the production
-    // answer to the one-band index's recall collapse
-    "llm_ann_banded" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.lshTopKBanded(e.where("vec_id < 16"), e, 3,
-        bands = 4, planesPerBand = 8)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // the measurement pair: recall@3 of the banded index against brute
-    // force — quantifies how much the OR-of-bands recovers over
-    // llm_ann_recall's one-band baseline
-    "llm_ann_recall_banded" -> ((s, d) => {
-      val e = emb(s, d)
-      val probes = e.where("vec_id < 16")
-      Similarity.annRecall(
-        Similarity.bruteForceTopK(probes, e, 3),
-        Similarity.lshTopKBanded(probes, e, 3, bands = 4, planesPerBand = 8))
-        .orderBy("probe_id")
-    }),
-
-    // unit-normalize the embedding table (after this, cosine == dot).
-    // The unit vector is posexploded to scalar (vec_id, pos, u) rows:
-    // the driver's pandas comparator cannot sort array-typed columns
-    // (round-4 verdict #1), and EntryContractSpec now bans them.
-    "llm_normalize" -> ((s, d) =>
-      Similarity.l2Normalize(emb(s, d))
-        .select(col("vec_id"), posexplode(col("unit")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
-          col("col").as("u"))
-        .orderBy("vec_id", "pos")),
-
-    // JL-style dimensionality reduction over the shared md5 hyperplanes
-    // (sign of projection j == lshBucket bit j); per-row fold, no shuffle
-    "llm_random_project" -> ((s, d) =>
-      Similarity.randomProject(emb(s, d), outDims = 8)
-        .select(col("vec_id"), posexplode(col("projected")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
-          col("col").as("v"))
-        .orderBy("vec_id", "pos")),
-
-    // IVF ANN with FIXED centroids (the first 8 corpus vectors) so the
-    // oracle checks the whole assign/shortlist/candidate-join/top-k query
-    // path without having to oracle k-means training (round-3 ADVICE; the
-    // trained path is covered by IvfSpec's recall test). nprobe=2 of k=8:
-    // the candidate join really prunes, it isn't a disguised brute force.
-    "llm_ivf_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.topK(e.where("vec_id < 6"), e, centroids, k = 3, nprobe = 2)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // incremental ANN ingest: assign only the NEW batch (vec_id >= 1600,
-    // the arriving 20%) to the existing centroids and merge occupancy
-    // deltas into the standing per-shard counts — the vector-DB ingest
-    // step (cdc_incremental_agg's monoid-merge pattern on the IVF
-    // layout): the corpus is never re-assigned, only the batch moves
-    "llm_ivf_incremental" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      def occ(vecs: org.apache.spark.sql.DataFrame) =
-        Ivf.assign(vecs, centroids).groupBy("centroid_id")
-          .agg(count(lit(1)).as("n"))
-      occ(e.where("vec_id < 1600"))
-        .withColumnRenamed("n", "n_old")
-        .join(occ(e.where("vec_id >= 1600"))
-          .withColumnRenamed("n", "n_new"), Seq("centroid_id"), "full")
-        .selectExpr("centroid_id",
-          "CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old",
-          "CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new",
-          "CAST(COALESCE(n_old, 0) + COALESCE(n_new, 0) AS BIGINT) AS n_total")
-        .orderBy("centroid_id")
-    }),
-
-    // IVF maintenance ACTION (r15 verdict #6): split the heaviest
-    // cluster by one Lloyd step on 2 seeded sub-centroids and emit the
-    // UPDATED centroid rows only — the hot-shard surgery the balance
-    // audit calls for; only the split cluster's members are rescanned
-    // after the one checkpointed assign (plan-gated in PlanShapeSpec)
-    "llm_ivf_split" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.splitHeaviest(e, centroids)
-        .selectExpr("CAST(centroid_id AS INT) AS centroid_id", "dim",
-          "component", "CAST(n_members AS BIGINT) AS n_members")
-        .orderBy("centroid_id", "dim")
-    }),
-
-    // IVF shard-balance report — the nlist-occupancy audit an ANN
-    // deployment runs before trusting latency SLOs (a hot centroid owns
-    // the probe tail): nearest-centroid assignment (one broadcast of the
-    // k-row table, map-side argmax) rolled up to per-centroid occupancy,
-    // ppm share, and an integer hot flag (n·k > 2·total = twice the
-    // balanced share). Fixed centroids like llm_ivf_topk so the oracle
-    // replays assignment without oracling k-means
-    "llm_ivf_balance" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.assign(e, centroids)
-        .groupBy("centroid_id")
-        .agg(count(lit(1)).as("n_vectors"))
-        .selectExpr("centroid_id", "CAST(n_vectors AS BIGINT) AS n_vectors",
-          "CAST(n_vectors * 1000000 DIV (SUM(n_vectors) OVER ()) AS BIGINT) AS share_ppm",
-          "CAST(n_vectors * 8 > 2 * (SUM(n_vectors) OVER ()) AS BOOLEAN) AS is_hot")
-        .orderBy("centroid_id")
-    }),
-
-    // ROUGE-2 recall verification of near-dup candidates — the CLIPPED
-    // MULTISET overlap (Σ min(count_a, count_b)), which catches repeated-
-    // passage duplication that set-Jaccard (llm_jaccard_verify) and
-    // tf-cosine (llm_lexical_cosine) each miss differently; both
-    // directions reported because recall is asymmetric. Candidates from
-    // the same MinHash banding over exact-collapse SURVIVORS — copy
-    // pairs are trivially recall 1.0 and would densify candidates
-    // quadratically per exact class; never all-pairs; counts exact
-    // integers, two ROUND divisions at the edge
-    "llm_rouge_verify" -> ((s, d) => {
-      // localCheckpoint (r16 opt): only the pair-sized candidate set is
-      // materialized (two consumers). Checkpointing the survivor corpus
-      // and the bigram multiset was A/B'd and LOST (1.76 → 2.14 s) —
-      // corpus-scale string materialization costs more than the lazy
-      // re-derives here.
-      val dd = Dedup.exactSurvivors(docs(s, d))
-      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
-        .localCheckpoint()
-      val bg = dd.select(col("doc_id"),
-          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
-        .where(size(col("w")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(w) - 1), i -> concat(w[i-1], ' ', w[i]))"))
-          .as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      val tot = bg.groupBy("doc_id").agg(sum("c").as("t"))
-      cand.as("c")
-        .join(bg.as("x"), expr("x.doc_id = c.doc_a"))
-        .join(bg.as("y"), expr("y.doc_id = c.doc_b AND y.bg = x.bg"))
-        .groupBy(col("c.doc_a"), col("c.doc_b"))
-        .agg(sum(expr("LEAST(x.c, y.c)")).as("ov"))
-        .join(tot.as("ta"), expr("ta.doc_id = doc_a"))
-        .join(tot.as("tb"), expr("tb.doc_id = doc_b"))
-        .selectExpr("doc_a", "doc_b", "CAST(ov AS BIGINT) AS overlap2",
-          "CAST(ta.t AS BIGINT) AS n2_a", "CAST(tb.t AS BIGINT) AS n2_b",
-          "CAST(ROUND(CAST(ov AS DOUBLE) / CAST(ta.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_ra",
-          "CAST(ROUND(CAST(ov AS DOUBLE) / CAST(tb.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_rb")
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // ANN EVALUATION: recall@3 of the LSH-bucketed ANN against the exact
-    // brute-force top-3, per probe — the accept/reject measurement an
-    // index deployment runs before trusting approximate results. The
-    // 8-plane single-band bucketing genuinely misses neighbors outside
-    // the probe's bucket, so the entry exercises the partial-recall and
-    // zero-hit paths, not just agreement. Integer hit counts until the
-    // final rounded ratio; both rankings tie-break on cand_id, so both
-    // result sets (and hence the recall) are deterministic.
-    "llm_ann_recall" -> ((s, d) => {
-      val e = emb(s, d)
-      val probes = e.where("vec_id < 16")
-      val exact = Similarity.bruteForceTopK(probes, e, 3)
-      val approx = Similarity.lshTopK(probes, e, 3, planes = 8)
-      Similarity.annRecall(exact, approx).orderBy("probe_id")
-    }),
-
-    // content-defined chunk boundaries (FastCDC-style rolling-hash
-    // cuts): every (doc, chunk) with its offset/length/md5 — the
-    // storage-dedup keys identical passages share wherever they sit
-    "llm_cdc_chunks" -> ((s, d) =>
-      Dedup.cdcChunks(docs(s, d)).orderBy("doc_id", "chunk_idx")),
-
-    // the dedup-store ledger over those chunks: physical bytes =
-    // unique-chunk bytes; the ratio is what a chunked blob store saves.
-    // ONE pass over the chunk stream: same-md5 chunks share their
-    // length, so logical bytes = Σ ul·copies off the unique table
-    "llm_cdc_dedup" -> ((s, d) =>
-      Dedup.cdcChunks(docs(s, d))
-        .groupBy("chunk_md5")
-        .agg(first(col("len")).cast("long").as("ul"),
-          count(lit(1)).as("copies"))
-        .agg(sum(col("copies")).as("n_chunks"),
-          count(lit(1)).as("n_unique"),
-          sum(expr("ul * copies")).as("logical_bytes"),
-          sum(col("ul")).as("physical_bytes"))
-        .select(col("n_chunks"), col("n_unique"), col("logical_bytes"),
-          col("physical_bytes"),
-          expr("CAST(ROUND(CAST(physical_bytes AS DOUBLE) " +
-            "/ logical_bytes, 6) AS DOUBLE)").as("stored_fraction"))),
-
-    // per-group centroid drift between corpus versions: v2 drops every
-    // 7th vector (re-land churn) and NEGATES every 3rd (a re-encoded /
-    // poisoned slice); cos(mean_v1, mean_v2) per source flags it
-    "llm_embedding_drift" -> ((s, d) => {
-      val e = emb(s, d)
-      val v1 = e.select(expr("vec_id % 5").as("grp"), col("embedding"))
-      val v2 = e.where("vec_id % 7 <> 0")
-        .select(expr("vec_id % 5").as("grp"),
-          expr("""CASE WHEN vec_id % 3 = 0
-                 |THEN transform(embedding, x -> CAST(-x AS FLOAT))
-                 |ELSE embedding END""".stripMargin).as("embedding"))
-      Similarity.embeddingDrift(v1, v2).orderBy("grp")
-    }),
-
-    // matryoshka truncation eval: top-3 retrieval on the 16-dim PREFIX
-    // of each embedding scored against full-64-dim exact top-3 — the
-    // measurement that decides whether prefix-truncated vectors (4x
-    // less shuffle width and index memory) retrieve well enough; pure
-    // reuse of the brute-force + recall machinery over sliced arrays
-    "llm_matryoshka_recall" -> ((s, d) => {
-      val e = emb(s, d)
-      val probes = e.where("vec_id < 16")
-      def pre(df: org.apache.spark.sql.DataFrame) =
-        df.withColumn("embedding", expr("slice(embedding, 1, 16)"))
-      Similarity.annRecall(
-          Similarity.bruteForceTopK(probes, e, 3),
-          Similarity.bruteForceTopK(pre(probes), pre(e), 3))
-        .orderBy("probe_id")
-    }),
-
-    // int8-range scalar quantization: per-vector code signature (sum /
-    // zeros / min / max) pins every code of every vector — a one-ULP
-    // drift in the amp reduction or the rounding step hash-mismatches
-    "llm_quantize_embed" -> ((s, d) =>
-      Similarity.quantizeCodes(emb(s, d)).selectExpr(
-          "vec_id",
-          "aggregate(codes, CAST(0 AS BIGINT), (acc, v) -> acc + v) AS code_sum",
-          "CAST(size(filter(codes, v -> v = 0)) AS INT) AS n_zero",
-          "array_min(codes) AS code_min",
-          "array_max(codes) AS code_max")
-        .orderBy("vec_id")),
-
-    // recall@3 of integer-code dot-product ranking against exact float
-    // cosine — measures what the 4x memory saving costs in ranking
-    // quality, the acceptance gate before deploying quantized ANN
-    "llm_quantize_recall" -> ((s, d) => {
-      val e = emb(s, d)
-      val exact = Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 3)
-      val q = Similarity.quantizeCodes(e)
-      val approx = Similarity.quantizedTopK(q.where("vec_id < 16"), q, 3)
-      Similarity.annRecall(exact, approx).orderBy("probe_id")
-    }),
-
-    // SemDeDup composition on fixed centroids (same round-3 pattern as
-    // llm_ivf_topk: the query path is oracled without oracling k-means;
-    // the trained path is IvfSpec-covered). Threshold 0.4 drops a real
-    // slice at every scale (18/19/235 vectors at sf0.001/0.01/0.1)
-    "llm_semantic_dedup" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.semanticDedup(e, centroids, minCosine = 0.4).orderBy("vec_id")
-    }),
-
-    "llm_embed_neardup" -> ((s, d) =>
-      // 0.4: the synthetic embeddings have no true dups (max pairwise
-      // cosine ~0.51 at sf0.01) — the cut keeps the entry non-empty
-      Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
-        .orderBy("vec_a", "vec_b")),
-
-    // semantic decontamination: every corpus vector scored by max cosine
-    // against the broadcast benchmark slice (vec_id < 8) — the
-    // embedding-level counterpart of llm_decontaminate's n-gram
-    // containment (verbatim leakage) and llm_bloom_decontaminate's
-    // at-scale probe set; 0.2 flags a real slice of the near-orthogonal
-    // synthetic embeddings at every scale
-    "llm_semantic_decontaminate" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.semanticDecontaminate(
-          e.where("vec_id >= 8"), e.where("vec_id < 8"), minCosine = 0.2)
-        .orderBy("vec_id")
-    }),
-
-    // cross-family composition: embedding near-dup pairs grouped into
-    // connected components by the same dupClusters operator the text
-    // pipeline uses — one clustering primitive, any pair source
-    "llm_embed_clusters" -> ((s, d) => {
-      val pairs = Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      Dedup.dupClusters(pairs)
-        .select(col("doc_id").as("vec_id"), col("cluster_rep"))
-        .orderBy("vec_id")
-    }),
-
-    "llm_frame_sample" -> ((s, d) =>
-      // fixture text is pure ASCII (checked: octet_length == length), so
-      // the oracle's char-based slicing matches the byte-based frames
-      Multimodal.frameSample(Multimodal.attach(docs(s, d)), nFrames = 4)
-        .toDF().orderBy("doc_id", "frame_idx")),
-
-    // REAL codec round-trip: deterministic PNGs synthesized from doc_id
-    // formulas (ImageSynth), encoded AND decoded through javax.imageio;
-    // geometry + exact per-channel pixel sums come from the decoded
-    // raster, and the oracle recomputes the generation formulas over a
-    // pixel grid — a wrong decode cannot hash-match.
-    "llm_multimodal_decode" -> ((s, d) => {
-      val dec = Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
-      dec.toDF().select(col("doc_id"), col("width"), col("height"),
-        col("sum_r"), col("sum_g"), col("sum_b"),
-        meanChan("sum_r").as("mean_r"), meanChan("sum_g").as("mean_g"),
-        meanChan("sum_b").as("mean_b"))
-        .orderBy("doc_id")
-    }),
-
-    // header-only metadata extraction: the PNG signature + IHDR fields
-    // parsed from the REAL ImageIO-encoded bytes by pure binary slicing
-    // (substring/hex/conv — codegen'd, no decoder anywhere in the path).
-    // At 100 TB this is how an image size/type index is built for the
-    // cost of reading 26 bytes per blob; the oracle recomputes the
-    // dimensions from the generator's closed form, so agreement proves
-    // the real encoder wrote the header the spec promises
-    "llm_image_meta" -> ((s, d) =>
-      Multimodal.synthesizeImages(docs(s, d)).toDF()
-        .selectExpr("doc_id",
-          "hex(substring(png, 1, 8)) = '89504E470D0A1A0A' AS sig_ok",
-          "CAST(conv(hex(substring(png, 17, 4)), 16, 10) AS INT) AS width",
-          "CAST(conv(hex(substring(png, 21, 4)), 16, 10) AS INT) AS height",
-          "CAST(conv(hex(substring(png, 25, 1)), 16, 10) AS INT) AS bit_depth",
-          "CAST(conv(hex(substring(png, 26, 1)), 16, 10) AS INT) AS color_type")
-        .orderBy("doc_id")),
-
-    // red-channel exposure histogram over the REAL decoded raster
-    // (16 bins, DIV 16) — the colorimetry profile an image-curation
-    // filter reads; oracle = the generator's pixel formula binned
-    // identically
-    "llm_image_histogram" -> ((s, d) =>
-      Multimodal.histogramImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")))
-        .toDF()
-        .selectExpr("doc_id", "CAST(bin AS INT) AS bin",
-          "CAST(n_pixels AS BIGINT) AS n_pixels")
-        .orderBy("doc_id", "bin")),
-
-    // cross-source duplication matrix — "who copies whom": UNDERLYING
-    // doc-pair counts rolled up by source pair, computed at
-    // O(survivor-pair) cost via the simhashPipeline discipline.
-    // Exact-collapse fronts the banding; near-dup survivor pairs
-    // re-expand through each class's per-source copy counts (na × nb
-    // underlying pairs, direction = min-survivor-id side), and each
-    // exact class contributes its own verbatim-copy mass in closed form
-    // (n_s1·n_s2 cross-source, C(n,2) same-source, source-ordered) —
-    // so verbatim copying across sources stays visible without ever
-    // materializing the per-copy candidate clique
-    "llm_dup_source_matrix" -> ((s, d) => {
-      val dd = docs(s, d)
-      // localCheckpoint (r16 opt): the class table joins four ways (the
-      // survivor selection + both pair endpoints), the per-source class
-      // counts three ways (both endpoints + the intra-class pairs)
-      val fps = dd.select(col("doc_id"), col("source"),
-        expr(s"md5(${graft.llm.Dedup.normalizeExpr})").as("fp"))
-      val cls = fps.groupBy("fp").agg(min("doc_id").as("keep_id"))
-        .localCheckpoint()
-      val clsrc = fps.groupBy("fp", "source").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-      val survivors = dd.join(
-        cls.select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
-      val pairs = Dedup.nearDupPairs(survivors)
-      val crossM = pairs
-        .join(cls.select(col("keep_id").as("doc_a"), col("fp").as("fp_a")), Seq("doc_a"))
-        .join(cls.select(col("keep_id").as("doc_b"), col("fp").as("fp_b")), Seq("doc_b"))
-        .join(clsrc.select(col("fp").as("fp_a"), col("source").as("source_a"),
-          col("n").as("na")), Seq("fp_a"))
-        .join(clsrc.select(col("fp").as("fp_b"), col("source").as("source_b"),
-          col("n").as("nb")), Seq("fp_b"))
-        .select(col("source_a"), col("source_b"), expr("na * nb").as("m"))
-      val intraM = clsrc.as("a")
-        .join(clsrc.as("b"), expr("a.fp = b.fp AND a.source <= b.source"))
-        .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
-          expr("CASE WHEN a.source = b.source THEN a.n * (a.n - 1) DIV 2 " +
-            "ELSE a.n * b.n END").as("m"))
-        .where(col("m") > 0)
-      crossM.union(intraM)
-        .groupBy("source_a", "source_b")
-        .agg(sum("m").as("n_pairs"))
-        .selectExpr("source_a", "source_b", "CAST(n_pairs AS BIGINT) AS n_pairs")
-        .orderBy("source_a", "source_b")
-    }),
-
-    // VLM-curation aspect bucketing (the SDXL trick: train at a fixed
-    // set of aspect ratios, route each image to its closest bucket) on
-    // REAL decoded raster geometry, plus the min-area admission gate.
-    // Closest bucket = argmin of |w·b − a·h|/b — one IEEE division per
-    // candidate over exact integers, ties to the lowest bucket id, so
-    // the routing is total; the oracle replays the generator's dimension
-    // formulas through the identical scoring. Decode is map-only; the
-    // rollup is one |buckets|-row agg — embarrassingly parallel at 100 TB
-    "llm_image_buckets" -> ((s, d) => {
-      Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
-        .toDF().createOrReplaceTempView("__img_bk")
-      s.sql("""
-        WITH dims AS (SELECT doc_id, width AS w, height AS h FROM __img_bk
-                      WHERE width * height >= 64),
-        buckets AS (SELECT * FROM VALUES (1, 1, 1), (2, 4, 3), (3, 3, 4),
-                      (4, 16, 9), (5, 9, 16) AS b(bid, a, bb)),
-        scored AS (SELECT doc_id, w, h, bid, a, bb,
-                          CAST(abs(w * bb - a * h) AS DOUBLE) / CAST(bb AS DOUBLE) AS m
-                   FROM dims CROSS JOIN buckets),
-        pick AS (SELECT doc_id, w, h, bid, a, bb,
-                        row_number() OVER (PARTITION BY doc_id ORDER BY m, bid) AS rn
-                 FROM scored)
-        SELECT concat(CAST(a AS STRING), ':', CAST(bb AS STRING)) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_images,
-               CAST(SUM(w * h) AS BIGINT) AS sum_pixels,
-               MIN(doc_id) AS min_doc
-        FROM pick WHERE rn = 1
-        GROUP BY a, bb ORDER BY bucket""")
-    }),
-
-    // quality-score survival curve — the curation artifact a threshold
-    // decision is actually made from: docs ranked by an integer quality
-    // proxy (alnum-char fraction, scaled 0..1000 — log-free, exact),
-    // cut into deciles by the closed-form rank formula, each decile
-    // reporting its doc count, score band, and CUMULATIVE character
-    // share ("keep the top 3 deciles → keep 41% of the chars"). One
-    // scan + one post-agg global window over |docs| ranks; at 100 TB
-    // the rank runs through the two-phase prefix sum like shuffleOrder
-    "llm_quality_survival" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__qs_docs")
-      s.sql("""
-        WITH sc AS (SELECT doc_id, n_chars,
-                           (1000 * length(regexp_replace(text, '[^a-zA-Z0-9]', '')))
-                             DIV GREATEST(n_chars, 1) AS score
-                    FROM __qs_docs),
-        n AS (SELECT COUNT(*) AS nd, SUM(n_chars) AS total_chars FROM sc),
-        r AS (SELECT doc_id, n_chars, score,
-                     ((row_number() OVER (ORDER BY score DESC, doc_id) - 1) * 10)
-                       DIV nd + 1 AS decile
-              FROM sc CROSS JOIN n),
-        g AS (SELECT decile, COUNT(*) AS n_docs,
-                     MIN(score) AS min_score, MAX(score) AS max_score,
-                     SUM(n_chars) AS sum_chars
-              FROM r GROUP BY decile)
-        SELECT CAST(decile AS INT) AS decile, CAST(n_docs AS BIGINT) AS n_docs,
-               CAST(min_score AS BIGINT) AS min_score,
-               CAST(max_score AS BIGINT) AS max_score,
-               CAST(sum_chars AS BIGINT) AS sum_chars,
-               CAST(ROUND(CAST(SUM(sum_chars) OVER (ORDER BY decile
-                      ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                    / CAST(n.total_chars AS DOUBLE), 6) AS DOUBLE)
-                 AS cum_char_frac
-        FROM g CROSS JOIN n ORDER BY decile""")
-    }),
-
-    // decode -> nearest-neighbor resize to fit 24px: the resample reads
-    // the real decoded raster; the oracle replays the integer source-pixel
-    // map over the target grid
-    "llm_resize" -> ((s, d) => {
-      val dec = Multimodal.resizeImages(
-        Multimodal.synthesizeImages(docs(s, d)), maxSide = 24)
-      dec.toDF().select(col("doc_id"), col("width"), col("height"),
-        col("sum_r"), col("sum_g"), col("sum_b"))
-        .orderBy("doc_id")
-    }),
-
-    // perceptual image fingerprint: dHash over the REAL decoded raster
-    // (11x6 nearest-neighbor thumbnail, integer BT.601 luma, 60
-    // column-adjacent comparison bits) — the oracle replays the
-    // synthesis formulas over the thumbnail grid, so a wrong decode or
-    // a wrong resample map cannot hash-match
-    "llm_image_dhash" -> ((s, d) =>
-      Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
-        .orderBy("doc_id")),
-
-    // DCT perceptual hash (pHash) over the REAL decoded raster: 32×32
-    // luma thumbnail, separable DCT-II against the driver-literal cosine
-    // basis (fixed fold order), 63 median-thresholded AC bits + the
-    // exact integer DC mass — the frequency-domain fingerprint that
-    // survives the noise dHash gradient bits flip on
-    "llm_image_phash" -> ((s, d) =>
-      Multimodal.phashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
-        .orderBy("doc_id")),
-
-    // perceptual near-dup IMAGE join: the dHash fingerprints ride the
-    // SAME lossless (15-bit band, Hamming<=3) banded equi-join as the
-    // text simhash (Dedup.fingerprintNearGroups) — group-level
-    // reporting, never an all-pairs image comparison; the oracle IS the
-    // all-pairs Hamming join over recomputed fingerprints, green proving
-    // the banding lossless
-    "llm_image_neardup" -> ((s, d) =>
-      Dedup.fingerprintNearGroups(
-        Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
-          .withColumnRenamed("dhash", "simhash"))
-        .select(col("sim_a").as("fp_a"), col("sim_b").as("fp_b"),
-          col("hamming"), col("docs_a"), col("docs_b"), col("pair_count"))
-        .orderBy("fp_a", "fp_b")),
-
-    // REAL audio codec round-trip: deterministic 16-bit mono PCM WAVs
-    // synthesized from (doc_id, i) formulas (AudioSynth), encoded AND
-    // parsed through the JDK's javax.sound.sampled; sample rate comes
-    // from the decoded header, amplitude stats (sum / sum|s| / peak /
-    // energy) from the decoded PCM frames as exact integers — the oracle
-    // recomputes the generation formulas over an index series, so a
-    // wrong decode cannot hash-match
-    "llm_audio_features" -> ((s, d) => {
-      val dec = Multimodal.decodeAudio(Multimodal.synthesizeAudio(docs(s, d)))
-      dec.toDF().select(col("doc_id"), col("sample_rate"), col("n_samples"),
-        col("sum_val"), col("sum_abs"), col("peak_abs"), col("energy"))
-        .orderBy("doc_id")
-    }),
-
-    // audio signal-integrity QC over the REAL decoded PCM: clipped-sample
-    // census, clipped-RUN shape (flat-lined segment vs transient peaks)
-    // and zero-crossing count — all exact integers from one in-order
-    // pass; the oracle replays the synth formula through gaps-and-islands
-    "llm_audio_clipping" -> ((s, d) =>
-      Multimodal.audioQc(Multimodal.synthesizeAudio(docs(s, d)))
-        .toDF().orderBy("doc_id")),
-
-    // Sobel edge-density census over the REAL decoded rasters (integer
-    // BT.601 luma, integer kernels, interior pixels only) — the
-    // blank/flat-image curation signal; the oracle replays the pixel
-    // formula through the identical kernel
-    "llm_image_edges" -> ((s, d) =>
-      Multimodal.convolveImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")), threshold = 200000L)
-        .toDF()
-        .where("width >= 3 AND height >= 3")
-        .selectExpr("doc_id", "CAST(width AS INT) AS width",
-          "CAST(height AS INT) AS height",
-          "CAST(n_interior AS BIGINT) AS n_interior",
-          "CAST(n_edge AS BIGINT) AS n_edge",
-          "CAST(sum_gabs AS BIGINT) AS sum_gabs",
-          "CAST(ROUND(CAST(n_edge AS DOUBLE) / CAST(n_interior AS DOUBLE)," +
-            " 6) AS DOUBLE) AS edge_frac")
-        .orderBy("doc_id")),
-
-    // variance-of-Laplacian blur detector over the same decoded rasters
-    // — the standard sharpness filter; variance from exact integer
-    // sufficient statistics (n·Σl² − (Σl)²) / n², every operand cast to
-    // DOUBLE before multiplying so both engines round identically. The
-    // variance runs ~1e9–1e10, squarely in the pinned DuckDB
-    // multiply-ROUND-divide ULP regime (probed here: …798.222222 vs
-    // …798.222223), so it leaves FLOOR→BIGINT, not ROUND(,6)
-    "llm_image_blur" -> ((s, d) =>
-      Multimodal.convolveImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")), threshold = 200000L)
-        .toDF()
-        .where("width >= 3 AND height >= 3")
-        .selectExpr("doc_id",
-          "CAST(n_interior AS BIGINT) AS n_interior",
-          "CAST(sum_lap AS BIGINT) AS sum_lap",
-          "CAST(sum_lap2 AS BIGINT) AS sum_lap2",
-          "CAST(FLOOR((CAST(n_interior AS DOUBLE) * CAST(sum_lap2 AS DOUBLE)" +
-            " - CAST(sum_lap AS DOUBLE) * CAST(sum_lap AS DOUBLE))" +
-            " / (CAST(n_interior AS DOUBLE) * CAST(n_interior AS DOUBLE)))" +
-            " AS BIGINT) AS var_lap_floor")
-        .orderBy("doc_id")),
-
-    // EXACT word-level WER via the ASCII word-encoding trick (one
-    // symbol per distinct word per doc, native levenshtein on the
-    // encodings — DuckDB's levenshtein is byte-based, so the alphabet
-    // stays printable ASCII); hypothesis = deterministic md5-keyed
-    // drops + append-'q' typos over the 40-word reference prefix
-    "llm_wer_eval" -> ((s, d) =>
-      TextAnalysis.werEval(docs(s, d)).orderBy("doc_id")),
-
-    // Newman modularity of the SOURCE partition over the near-dup
-    // survivor graph — "does duplication cluster within sources?"
-    // (q_num = 4·m·e_c − d_c² keeps the per-community term an EXACT
-    // integer; Q = Σ q_num / 4m²). Same exact-collapse → LSH-banded
-    // survivor pairs as llm_dup_source_matrix — never all-pairs; the
-    // modularity terms are three bounded per-source rollups
-    "llm_dup_modularity" -> ((s, d) => {
-      val survivors = Dedup.exactSurvivors(docs(s, d))
-      val pairs = Dedup.nearDupPairs(survivors)
-      val src = survivors.select(col("doc_id"), col("source"))
-      // localCheckpoint: edges feed THREE rollups (m, degrees, intra) —
-      // without it the whole exact-collapse + LSH + jaccard pair
-      // pipeline re-evaluates per consumer (measured 5.98 s vs 2.35 for
-      // the single-consumer dup_source_matrix); the edge list itself is
-      // survivor-pair-scale, safe to materialize at any corpus size
-      val edges = pairs
-        .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
-          Seq("doc_a"))
-        .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")),
-          Seq("doc_b"))
-        .localCheckpoint()
-      val mDf = edges.agg(count(lit(1)).as("m_edges"))
-      val deg = edges.select(col("doc_a").as("doc_id"), col("sa").as("source"))
-        .union(edges.select(col("doc_b").as("doc_id"), col("sb").as("source")))
-        .groupBy("doc_id", "source").agg(count(lit(1)).as("deg"))
-      val nodes = src.groupBy("source").agg(count(lit(1)).as("n_nodes"))
-      val dsum = deg.groupBy("source").agg(sum("deg").as("d_sum"))
-      val eintra = edges.where(col("sa") === col("sb"))
-        .groupBy(col("sa").as("source")).agg(count(lit(1)).as("e_intra"))
-      nodes
-        .join(dsum, Seq("source"), "left")
-        .join(eintra, Seq("source"), "left")
-        .crossJoin(mDf)
-        .where(col("m_edges") > 0)
-        .selectExpr("source", "CAST(n_nodes AS BIGINT) AS n_nodes",
-          "CAST(COALESCE(e_intra, 0) AS BIGINT) AS e_intra",
-          "CAST(COALESCE(d_sum, 0) AS BIGINT) AS d_sum",
-          "CAST(m_edges AS BIGINT) AS m_edges",
-          "CAST(4 * m_edges * COALESCE(e_intra, 0) " +
-            "- COALESCE(d_sum, 0) * COALESCE(d_sum, 0) AS BIGINT) AS q_num")
-        .orderBy("source")
-    }),
-
-    // REAL video container round-trip: deterministic uncompressed AVIs
-    // (RIFF + avih/strh/strf + bottom-up stride-padded 24-bit BGR movi
-    // frames) synthesized from (doc_id, frame, x, y) formulas, then
-    // parsed by a spec-driven RIFF chunk walker; frame sums and
-    // blue-plane inter-frame motion come from the decoded rasters as
-    // exact integers, and the oracle recomputes the formulas over a
-    // (frame, x, y) grid — a wrong walk, row flip, stride pad or
-    // channel order cannot hash-match
-    "llm_video_decode" -> ((s, d) =>
-      Multimodal.decodeVideo(Multimodal.synthesizeVideo(docs(s, d)))
-        .toDF().orderBy("doc_id")),
-
-    // scene-change detection over the REAL decoded rasters: per frame
-    // boundary, the exact integer luma SAD + the mean-threshold cut
-    // verdict — the keyframe-selection primitive; map-only over the
-    // payload scan, one row per boundary
-    "llm_scene_cuts" -> ((s, d) =>
-      Multimodal.sceneCuts(Multimodal.synthesizeVideo(docs(s, d)))
-        .toDF().orderBy("doc_id", "frame")),
-
-    // the opaque-payload path (compressed video stays env-bound — no
-    // codec in the JDK or this container): md5-derived pseudo-features
-    // through the same batched mapPartitions shape a JNI/ffmpeg codec
-    // would plug into
-    "llm_av_features" -> ((s, d) => {
-      val dec = Multimodal.decode(Multimodal.attach(docs(s, d)))
-      val cols = Seq(col("doc_id"), col("n_bytes"), col("content_md5"),
-        col("width"), col("height")) ++
-        (0 until 8).map(j => col("feature").getItem(j).as(s"f$j"))
-      dec.select(cols: _*).orderBy("doc_id")
-    }),
-
-    // hard-negative mining: nearest different-label corpus vectors per
-    // probe — the ANN-mining step of contrastive training loops
-    "llm_hard_negatives" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.hardNegatives(e.where("vec_id < 16"), e, 3)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // speculative-decoding draft table: per word, the argmax corpus
-    // successor (count >= 3) + successor-vocab width — corpus frequency
-    // (no per-doc distinct), vocabulary-bounded argmax partitions
-    "llm_ngram_draft" -> ((s, d) =>
-      TextAnalysis.ngramDraft(docs(s, d), minCount = 3).orderBy("w1")),
-
-    // binary-embedding ANN: 60 sign bits per vector, exact XOR+popcount
-    // Hamming top-5, each hit flagged against the exact cosine top-5 —
-    // the 1-bit quantization recall row next to llm_quantize_recall's
-    // int8 and llm_pq_recall's PQ points
-    "llm_hamming_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val probes = e.where("vec_id < 16")
-      val exact = Similarity.bruteForceTopK(probes, e, 5)
-        .select(col("probe_id"), col("cand_id"), lit(1).as("__hit"))
-      Similarity.hammingTopK(probes, e, 5)
-        .join(exact, Seq("probe_id", "cand_id"), "left")
-        .selectExpr("probe_id", "rank", "cand_id", "hamming",
-          "CAST(coalesce(__hit, 0) AS INT) AS in_exact")
-        .orderBy("probe_id", "rank")
-    }),
-
-    // embedding-table data-quality profile in ONE scan: count, zero/
-    // short vectors, exact norm² extremes and corpus mean — the vector
-    // twin of qc_column_profile (a corrupted export shows up as zero
-    // vectors, NaN components or a collapsed norm distribution before
-    // any ANN index is built). Per-row norm² is a deterministic
-    // left-fold; the corpus SUM rides DECIMAL after a per-row ROUND
-    // (order-free), never a raw double sum
-    "qc_embedding_profile" -> ((s, d) =>
-      emb(s, d)
-        .selectExpr("vec_id", "size(embedding) AS dims",
-          """aggregate(embedding, CAST(0.0 AS DOUBLE),
-            |  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""
-            .stripMargin + " AS n2")
-        .selectExpr("vec_id", "dims",
-          "CAST(ROUND(n2, 6) AS DECIMAL(18,6)) AS n2d",
-          "CASE WHEN n2 = 0.0 THEN 1 ELSE 0 END AS is_zero",
-          "CASE WHEN isnan(n2) THEN 1 ELSE 0 END AS is_nan")
-        .groupBy("dims")
-        .agg(count(lit(1)).as("n_vecs"),
-          sum("is_zero").cast("long").as("n_zero"),
-          sum("is_nan").cast("long").as("n_nan"),
-          expr("CAST(min(n2d) AS DOUBLE)").as("min_norm2"),
-          expr("CAST(max(n2d) AS DOUBLE)").as("max_norm2"),
-          expr("CAST(ROUND(CAST(SUM(n2d) AS DOUBLE) / count(1), 6) AS DOUBLE)")
-            .as("mean_norm2"))
-        .orderBy("dims")),
-
-    // pairwise source-vocabulary overlap by HLL inclusion-exclusion:
-    // union sketch = bucketwise register max, ONE token scan then
-    // |sources|x64 integer arithmetic — "which crawls duplicate each
-    // other" without any cross-source token comparison
-    "llm_hll_overlap" -> ((s, d) =>
-      TextAnalysis.distinctOverlap(docs(s, d)).orderBy("src_a", "src_b")),
-
-    // hybrid-retrieval rank fusion: the BM25 lexical top-50 (TakeOrdered,
-    // never a global sort) fused with the dense cosine top-50 for probe
-    // vec 0 via reciprocal-rank fusion — scores never mix, only ranks,
-    // the reason RRF survives incomparable scales; fixed-order addition
-    // chain keeps the doubles cross-engine deterministic
-    "llm_rrf_fusion" -> ((s, d) => {
-      val lex = TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
-        .orderBy(col("bm25").desc, col("doc_id")).limit(50)
-        .withColumn("rank",
-          expr("row_number() OVER (ORDER BY bm25 DESC, doc_id)"))
-        .select("doc_id", "rank")
-      val e = emb(s, d)
-      val sem = Similarity.bruteForceTopK(e.where("vec_id = 0"), e, 50)
-        .select(col("cand_id").as("doc_id"), col("rank"))
-      Similarity.rrfFuse(Seq("lex" -> lex, "sem" -> sem))
-        .selectExpr("fused_rank", "doc_id",
-          "CAST(coalesce(rank_lex, 0) AS INT) AS rank_lex",
-          "CAST(coalesce(rank_sem, 0) AS INT) AS rank_sem", "rrf")
-        .orderBy("fused_rank")
-    }),
-
-    // k-NN label-vote classification eval: each probe classified by the
-    // plurality label of its 5 nearest neighbors, scored against its own
-    // label — the standard embedding-quality probe; deterministic vote
-    // tie-break (votes, then closest supporter, then min label)
-    "llm_knn_classify" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.knnClassify(e.where("vec_id < 100"), e, 5)
-        .orderBy("probe_id")
-    }),
-
-    // the SERVING-shaped kNN (r12 verdict #5): candidates from the
-    // 1-bit XOR+popcount Hamming top-5 (not exact cosine), classified by
-    // the same vote via knnClassifyFrom, with the per-probe recall@5 of
-    // the candidate set vs exact published in the SAME row — the
-    // deploy-or-not evidence (vote agreement is bounded by candidate
-    // recall). llm_knn_classify stays as the exact eval baseline
-    "llm_knn_approx" -> ((s, d) => {
-      val e = emb(s, d)
-      val probes = e.where("vec_id < 100")
-      val approx = Similarity.hammingTopK(probes, e, 5)
-      val exact = Similarity.bruteForceTopK(probes, e, 5)
-      Similarity.knnClassifyFrom(approx, probes, e)
-        .join(Similarity.annRecall(exact, approx), Seq("probe_id"))
-        .selectExpr("probe_id", "true_label", "pred_label",
-          "CAST(votes AS BIGINT) AS votes", "correct",
-          "CAST(n_exact AS BIGINT) AS n_exact",
-          "CAST(n_hit AS BIGINT) AS n_hit", "recall")
-        .orderBy("probe_id")
-    }),
-
-    // per-source dataset card + the ALL rollup row in the same single
-    // scan: docs, chars, word tokens, language spread, short-doc ratio —
-    // the corpus datasheet a curation run publishes next to its output
-    "llm_dataset_card" -> ((s, d) =>
-      docs(s, d)
-        .rollup("source")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_chars").as("n_chars_sum"),
-          sum(expr("CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT)"))
-            .as("n_words"),
-          countDistinct("lang").as("n_langs"),
-          sum(expr("CAST(CASE WHEN n_chars < 200 THEN 1 ELSE 0 END AS BIGINT)"))
-            .as("n_short"))
-        .selectExpr("coalesce(source, 'ALL') AS source", "n_docs",
-          "n_chars_sum", "n_words", "n_langs",
-          "CAST(ROUND(n_short / n_docs, 6) AS DOUBLE) AS short_ratio",
-          "CAST(ROUND(n_chars_sum / n_docs, 6) AS DOUBLE) AS mean_chars")
-        .orderBy("source")),
-
-    // tf-WEIGHTED lexical cosine for near-dup verification — the metric
-    // that tolerates boilerplate repetition where set-Jaccard dilutes
-    // (a doc that repeats its header 50× still scores ≈1 against its
-    // near-copy): candidates from 12-char normalized-prefix blocking
-    // (self-contained, replayable in SQL — the ER blocking shape), dot
-    // and norms exact integers, cos² = one fixed IEEE tree at the edge
-    // (squared on purpose: no sqrt cross-engine). Work ∝ per-block
-    // density² + shared-token join — never all-pairs
-    "llm_lexical_cosine" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__lc_docs")
-      s.sql(s"""
-        WITH nrm AS (SELECT doc_id, ${graft.llm.Dedup.normalizeExpr} AS t
-                     FROM __lc_docs),
-        blk AS (SELECT doc_id, substr(t, 1, 12) AS blk, t
-                FROM nrm WHERE length(t) >= 12),
-        pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM blk a JOIN blk b
-                    ON a.blk = b.blk AND a.doc_id < b.doc_id),
-        toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
-                   SELECT doc_id, tok
-                   FROM nrm LATERAL VIEW explode(split(t, ' ')) x AS tok
-                   WHERE length(tok) > 0)
-                 GROUP BY doc_id, tok),
-        n2 AS (SELECT doc_id, SUM(tf * tf) AS n2 FROM toks GROUP BY doc_id),
-        dt AS (SELECT p.doc_a, p.doc_b, SUM(x.tf * y.tf) AS dot
-               FROM pairs p
-                    JOIN toks x ON x.doc_id = p.doc_a
-                    JOIN toks y ON y.doc_id = p.doc_b AND y.tok = x.tok
-               GROUP BY p.doc_a, p.doc_b)
-        SELECT d.doc_a, d.doc_b, CAST(d.dot AS BIGINT) AS dot,
-               CAST(ROUND(CAST(d.dot AS DOUBLE) * CAST(d.dot AS DOUBLE)
-                          / (CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)), 6)
-                    AS DOUBLE) AS cos2
-        FROM dt d JOIN n2 a ON a.doc_id = d.doc_a
-                  JOIN n2 b ON b.doc_id = d.doc_b
-        ORDER BY doc_a, doc_b""")
-    }),
-
-    // rarity-weighted keyword extraction (topic tagging for curation
-    // dashboards): score = tf · (N div df) — the INTEGER idf surrogate
-    // (log never runs in-plan, the house rule); two corpus-token aggs +
-    // one broadcast-sized df join, top-3 per doc through a rank window
-    // the WindowGroupLimit prunes before the shuffle
-    "llm_keywords" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__kw_docs")
-      s.sql(s"""
-        WITH toks AS (SELECT doc_id, tok
-                      FROM __kw_docs
-                      LATERAL VIEW explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) t AS tok
-                      WHERE length(tok) > 2),
-        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
-        df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-        n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM tf),
-        sc AS (SELECT tf.doc_id, tf.tok, tf.tf, df.df,
-                      tf.tf * (n.nd DIV df.df) AS score
-               FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n),
-        rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                           ORDER BY score DESC, tok) AS rank
-               FROM sc)
-        SELECT doc_id, CAST(rank AS INT) AS rank, tok,
-               CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-               CAST(score AS BIGINT) AS score
-        FROM rk WHERE rank <= 3
-        ORDER BY doc_id, rank""")
-    }),
-
-    // pseudo-relevance feedback (RM/Rocchio-lite query expansion): the
-    // top-3 docs by integer query-term tf elect 5 expansion terms by
-    // the rarity score tf·(N div df) (the llm_keywords scorer) with
-    // query terms excluded — the first-stage retrieval loop a search
-    // system runs before the expensive reranker. Every score integer,
-    // both rankings tie-broken (doc_id / term), top-k via rank windows
-    "llm_query_expansion" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__qe_docs")
-      s.sql(s"""
-        WITH toks AS (SELECT doc_id, tok
-                      FROM __qe_docs
-                      LATERAL VIEW explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) t AS tok
-                      WHERE length(tok) > 2),
-        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
-        rel AS (SELECT doc_id, SUM(tf) AS qscore
-                FROM tf WHERE tok IN ('hash', 'join')
-                GROUP BY doc_id),
-        top3 AS (SELECT doc_id FROM (
-                   SELECT doc_id, row_number() OVER (
-                     ORDER BY qscore DESC, doc_id) AS rn FROM rel) r
-                 WHERE rn <= 3),
-        df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-        nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tf),
-        cand AS (SELECT tf.tok, SUM(tf.tf) AS tf_top
-                 FROM tf JOIN top3 ON top3.doc_id = tf.doc_id
-                 WHERE tf.tok NOT IN ('hash', 'join')
-                 GROUP BY tf.tok),
-        sc AS (SELECT c.tok, c.tf_top, df.df,
-                      c.tf_top * (nd.n DIV df.df) AS score
-               FROM cand c JOIN df ON df.tok = c.tok CROSS JOIN nd),
-        r AS (SELECT tok, tf_top, df, score,
-                     row_number() OVER (ORDER BY score DESC, tok) AS rank
-              FROM sc)
-        SELECT tok AS term, CAST(tf_top AS BIGINT) AS tf_top,
-               CAST(df AS BIGINT) AS df, CAST(score AS BIGINT) AS score,
-               CAST(rank AS INT) AS rank
-        FROM r WHERE rank <= 5
-        ORDER BY rank""")
-    }),
-
-    // PMI collocation mining — which word pairs co-occur far above
-    // chance (phrase/boilerplate discovery, tokenizer-merge candidates).
-    // Log-free by the house rule: the PMI EXPONENT ordering is the
-    // lift ratio c_xy·N²/(B·c_x·c_y), emitted through ONE fixed IEEE
-    // tree at the output edge; the qualifying-row SET is cut by the
-    // INTEGER occurrence threshold alone, so no float ever decides
-    // membership. Two token aggs (map-side combinable) + a
-    // vocabulary-sized unigram join + a 1-row totals broadcast — at
-    // 100 TB every shuffle key is a token, never a doc
-    "llm_pmi_collocations" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__pmi_docs")
-      s.sql(s"""
-        WITH norm AS (SELECT split(${graft.llm.Dedup.normalizeExpr}, ' ') AS w
-                      FROM __pmi_docs),
-        u AS (SELECT tok, COUNT(*) AS c FROM (
-                SELECT explode(w) AS tok FROM norm) t
-              WHERE length(tok) > 0 GROUP BY tok),
-        tot AS (SELECT (SELECT SUM(c) FROM u) AS n_tok,
-                       (SELECT SUM(size(w) - 1) FROM norm WHERE size(w) >= 2) AS n_big),
-        b AS (SELECT bigram, COUNT(*) AS c_xy FROM (
-                SELECT explode(transform(sequence(1, size(w) - 1),
-                         i -> concat(w[i-1], ' ', w[i]))) AS bigram
-                FROM norm WHERE size(w) >= 2) t
-              GROUP BY bigram HAVING COUNT(*) >= 20)
-        SELECT b.bigram, CAST(b.c_xy AS BIGINT) AS c_xy,
-               CAST(ux.c AS BIGINT) AS c_x, CAST(uy.c AS BIGINT) AS c_y,
-               CAST(ROUND(CAST(b.c_xy AS DOUBLE) * CAST(tot.n_tok AS DOUBLE) * CAST(tot.n_tok AS DOUBLE)
-                    / (CAST(tot.n_big AS DOUBLE) * CAST(ux.c AS DOUBLE) * CAST(uy.c AS DOUBLE)), 6)
-                    AS DOUBLE) AS lift
-        FROM b JOIN u ux ON ux.tok = split(b.bigram, ' ')[0]
-               JOIN u uy ON uy.tok = split(b.bigram, ' ')[1]
-               CROSS JOIN tot
-        ORDER BY bigram""")
-    }),
-
-    // code-vs-prose detection — the routing filter a mixed crawl runs
-    // before tokenizer/quality decisions (code wants different
-    // normalization and its own mixture weight): integer densities of
-    // code punctuation ({};()=) and keyword hits vs word count, decision
-    // by a pure integer cross-multiplication rule. Code fragments are
-    // synthesized onto a deterministic doc subset (the fixture corpus is
-    // clean prose) so both verdict paths carry rows. Map-only + one
-    // rollup — embarrassingly parallel
-    "llm_code_detect" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__code_docs")
-      s.sql("""
-        WITH t AS (SELECT doc_id, source,
-                          CASE WHEN doc_id % 6 = 0 THEN concat(text,
-                                 ' function f(x) { return x * g(x); } var y = f(2);')
-                               WHEN doc_id % 7 = 0 THEN concat(text,
-                                 ' SELECT a, b FROM t WHERE x = 1; UPDATE t SET a = 2;')
-                               ELSE text END AS body
-                   FROM __code_docs),
-        m AS (SELECT doc_id, source,
-                     CAST(regexp_count(body, '[{}();=]') AS BIGINT) AS n_punct,
-                     CAST(regexp_count(body,
-                       'function|return|var |SELECT |FROM |WHERE |UPDATE ') AS BIGINT) AS n_kw,
-                     CAST(regexp_count(body, '[a-zA-Z0-9]+') AS BIGINT) AS n_words
-              FROM t)
-        SELECT doc_id, n_punct, n_kw, n_words,
-               CAST((n_punct + 3 * n_kw) * 10 > n_words AS BOOLEAN) AS is_code
-        FROM m ORDER BY doc_id""")
-    }),
-
-    // contrastive in-batch negative construction — same-label items
-    // scattered across training batches so in-batch negatives stay
-    // valid: rank within label by seeded md5, batch = rank mod 16 (the
-    // closed form guarantees a label's copies land in DISTINCT batches
-    // until it has more copies than batches — max_label_dup reports
-    // exactly ceil(|label|/16)). One window over the label partition +
-    // one rollup; the permutation is the shuffleOrder hash discipline
-    "llm_contrastive_batches" -> ((s, d) => {
-      emb(s, d).createOrReplaceTempView("__cb_emb")
-      s.sql("""
-        WITH r AS (SELECT vec_id, label,
-                          row_number() OVER (PARTITION BY label
-                            ORDER BY md5(CAST(vec_id AS STRING)), vec_id) - 1 AS rn
-                   FROM __cb_emb),
-        a AS (SELECT vec_id, label, rn % 16 AS batch FROM r),
-        g AS (SELECT batch, label, COUNT(*) AS cnt FROM a GROUP BY batch, label)
-        SELECT CAST(batch AS INT) AS batch,
-               CAST(SUM(cnt) AS BIGINT) AS n_items,
-               CAST(COUNT(*) AS BIGINT) AS n_labels,
-               CAST(MAX(cnt) AS BIGINT) AS max_label_dup
-        FROM g GROUP BY batch ORDER BY batch""")
-    }),
-
-    // URL canonicalization dedup — the crawl-curation step BEFORE text
-    // dedup: the same page arrives under tracking-parameter and fragment
-    // variants, and canonical grouping collapses them without touching
-    // the payload. Recipe: strip #fragment, strip utm_* params (mid/
-    // first/sole positions — three anchored regexes, character classes
-    // only so the SAME pattern text runs on Java regex and RE2),
-    // lowercase scheme+host but never the path/query. Pure per-row
-    // projection + one hash agg — embarrassingly parallel at 100 TB.
-    // URLs are synthesized deterministically from doc_id/source (the
-    // fixture has no url column); min(doc_id) is the canonical keeper
-    "llm_url_dedup" -> ((s, d) => {
-      docs(s, d).createOrReplaceTempView("__url_docs")
-      s.sql("""
-        WITH u0 AS (SELECT doc_id,
-               CASE WHEN doc_id % 5 = 0 THEN
-                 concat('https://', upper(source), '.Example.com/alt/',
-                        CAST(doc_id % 50 AS STRING),
-                        '?utm_medium=email&id=', CAST(doc_id % 20 AS STRING))
-               ELSE
-                 concat('https://', upper(source), '.Example.com/page/',
-                        CAST(doc_id % 50 AS STRING),
-                        '?id=', CAST(doc_id % 20 AS STRING),
-                        CASE WHEN doc_id % 3 = 0 THEN '&utm_campaign=spring' ELSE '' END,
-                        CASE WHEN doc_id % 4 = 0 THEN '&utm_source=feed' ELSE '' END,
-                        CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END)
-               END AS url FROM __url_docs),
-        c AS (SELECT doc_id, url,
-                     regexp_replace(regexp_replace(regexp_replace(
-                       regexp_replace(url, '#.*$', ''),
-                       '&utm_[a-z]+=[^&]*', ''),
-                       '[?]utm_[a-z]+=[^&]*&', '?'),
-                       '[?]utm_[a-z]+=[^&]*$', '') AS stripped
-              FROM u0),
-        k AS (SELECT doc_id, url,
-                     concat(lower(regexp_extract(stripped, '^https?://[^/]+', 0)),
-                            substr(stripped,
-                              length(regexp_extract(stripped, '^https?://[^/]+', 0)) + 1))
-                       AS canonical_url
-              FROM c)
-        SELECT canonical_url,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(COUNT(DISTINCT url) AS BIGINT) AS n_variants,
-               MIN(doc_id) AS keeper_doc_id
-        FROM k GROUP BY canonical_url
-        ORDER BY canonical_url""")
-    }),
-
-    // Flesch-Kincaid-style readability for quality filtering: word /
-    // sentence / vowel-group counts are three regexp passes over the map
-    // side (one scan, no shuffle before the output sort), the grade one
-    // FIXED IEEE tree over the integer counts (the qc_benford
-    // discipline), banding on the ROUNDED grade so both engines compare
-    // the identical double
-    "llm_readability" -> ((s, d) =>
-      docs(s, d)
-        .selectExpr("doc_id",
-          "CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT) AS n_words",
-          "CAST(GREATEST(1, size(regexp_extract_all(text, '[.!?]+', 0))) AS BIGINT) AS n_sents",
-          "CAST(GREATEST(1, size(regexp_extract_all(lower(text), '[aeiouy]+', 0))) AS BIGINT) AS n_syll")
-        .where("n_words > 0")
-        .selectExpr("doc_id", "n_words", "n_sents", "n_syll",
-          """CAST(ROUND(CAST(0.39 AS DOUBLE) * (CAST(n_words AS DOUBLE) / n_sents)
-            |  + CAST(11.8 AS DOUBLE) * (CAST(n_syll AS DOUBLE) / n_words)
-            |  - CAST(15.59 AS DOUBLE), 6) AS DOUBLE) AS fk""".stripMargin)
-        .selectExpr("doc_id", "n_words", "n_sents", "n_syll", "fk",
-          """CASE WHEN fk < CAST(6.0 AS DOUBLE) THEN 'easy'
-            |     WHEN fk < CAST(10.0 AS DOUBLE) THEN 'medium'
-            |     ELSE 'hard' END AS band""".stripMargin)
-        .orderBy("doc_id")),
-
-    // winnowing fingerprints (MOSS): per-doc window-minima digest over
-    // 8-char gram hashes — shared substrings of >= 11 chars must share
-    // a fingerprint
-    "llm_winnow" -> ((s, d) =>
-      TextAnalysis.winnow(docs(s, d)).orderBy("doc_id")),
-
-    // vocabulary encode: corpus-derived top-100 dictionary broadcast over
-    // the token stream; ids_fp digests the exact id sequence per doc
-    "llm_vocab_map" -> ((s, d) =>
-      TextAnalysis.vocabEncode(docs(s, d)).orderBy("doc_id")),
-
-    // graded retrieval evaluation: NDCG@10 next to llm_retrieval_mrr's
-    // MRR — rank discounts 1/log2(i+1) and the ideal prefix sums enter
-    // as DRIVER literals (libm log never runs in plan — the qc_benford
-    // discipline); the DCG fold adds hit discounts in rank order
-    "llm_ndcg_eval" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
-        .join(e.select(col("vec_id").as("probe_id"),
-          col("label").as("probe_label")), "probe_id")
-        .join(e.select(col("vec_id").as("cand_id"),
-          col("label").as("cand_label")), "cand_id")
-        .where("cand_label = probe_label")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_rel"),
-          expr(s"""aggregate(array_sort(collect_list(rank)),
-                  |  CAST(0.0 AS DOUBLE),
-                  |  (acc, r) -> acc + element_at($ndcgDiscArr, r))"""
-            .stripMargin).as("__dcg"))
-        .selectExpr("probe_id", "CAST(n_rel AS BIGINT) AS n_rel",
-          "CAST(ROUND(__dcg, 6) AS DOUBLE) AS dcg",
-          s"CAST(ROUND(__dcg / element_at($ndcgIdcgArr, CAST(n_rel AS INT)), 6) AS DOUBLE) AS ndcg")
-        .orderBy("probe_id")
-    }),
-
-    // paraphrase candidate mining: semantically CLOSE (bucketed exact
-    // cosine >= 0.4) but lexically FAR (shingle jaccard < 0.5, with
-    // zero-overlap pairs counted at 0 via the LEFT join) — the pair
-    // source for contrastive/paraphrase training that pure dedup
-    // discards; composition of cosineNearDups + jaccardWithZeros
-    "llm_paraphrase_mine" -> ((s, d) => {
-      // exact-collapse FRONT on identical vectors (the bbit_minhash
-      // lesson applied to the embedding side): verbatim copies explode
-      // the bucketed cosine self-join quadratically — factor-100 sweep
-      // 177.6 s raw vs 4.57 s with min-id survivors; dup-free corpora
-      // pass through unchanged
-      val surv = emb(s, d).groupBy("embedding")
-        .agg(min("vec_id").as("vec_id"))
-      val cands = Similarity.cosineNearDups(surv, minCosine = 0.4)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
-          col("cos"))
-      // shingle ONLY candidate-touched docs: the embedded slice is a
-      // subset of the corpus, so shingling every document charges the
-      // whole corpus's shingle shuffle to a pair set that never reads it
-      // (10x sweep: 8.1 s whole-corpus vs 6.9 semi-joined — the residual
-      // is the one unavoidable corpus scan feeding the semi-join)
-      val ids = cands.select(col("doc_a").as("doc_id"))
-        .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-      Dedup.jaccardWithZeros(
-          docs(s, d).join(ids, Seq("doc_id"), "left_semi"), cands)
-        .where(col("jaccard") < 0.5)
-        .select("doc_a", "doc_b", "cos", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // vocabulary coverage curve — the tokenizer-design audit: what
-    // fraction of corpus token MASS does a top-k vocabulary cover?
-    // Scale shape: the only global order is a TakeOrdered head cut
-    // (limit 30 here; 10k in production — never a full vocab sort); the
-    // cumulative mass is an exact integer running sum over that bounded
-    // head, totals come from
-    // one separate agg
-    "llm_vocab_coverage" -> ((s, d) => {
-      val toks = docs(s, d)
-        .select(explode(expr(
-          s"filter(split(${Dedup.normalizeExpr}, ' '), w -> length(w) > 0)"))
-          .as("tok"))
-      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-      val head = vocab.orderBy(col("cnt").desc, col("tok")).limit(30)
-        .selectExpr("tok", "cnt",
-          "row_number() OVER (ORDER BY cnt DESC, tok) AS rk",
-          "SUM(cnt) OVER (ORDER BY cnt DESC, tok ROWS UNBOUNDED PRECEDING) AS cum")
-      val totals = vocab.agg(count(lit(1)).as("vocab_size"),
-        sum("cnt").as("total_tokens"))
-      head.where(col("rk").isin(5, 10, 30))
-        .crossJoin(broadcast(totals))
-        .selectExpr("CAST(rk AS BIGINT) AS k",
-          "CAST(cum AS BIGINT) AS covered_tokens",
-          "CAST(vocab_size AS BIGINT) AS vocab_size",
-          "CAST(total_tokens AS BIGINT) AS total_tokens",
-          // DECIMAL(38,0) before the ppm scaling (r15 ADVICE): DuckDB
-          // promotes cum*1e6 to HUGEINT while int64 would overflow past
-          // ~9.2e12 corpus tokens under ANSI — widen to match the oracle
-          "CAST(CAST(cum AS DECIMAL(38,0)) * 1000000 DIV total_tokens AS BIGINT) AS covered_ppm")
-        .orderBy("k")
-    }),
-
-    // CCNet-style quality bucketing: per SOURCE, head/middle/tail
-    // terciles by the bigram LM score — the closed-form tercile rank
-    // (3·(r−1)) DIV n (the agg_rfm_segments discipline — never ntile),
-    // per-bucket census with a doc-id-ordered mean fold. The per-source
-    // rank window is the real CCNet shape (it sorts each language shard
-    // by perplexity); buckets then gate which shard enters training
-    "llm_ccnet_buckets" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.bigramScore(dd, minCount = 2)
-        .join(dd.select("doc_id", "source"), "doc_id")
-        .selectExpr("source", "doc_id", "avg_p",
-          "row_number() OVER (PARTITION BY source ORDER BY avg_p DESC, doc_id) AS r",
-          "count(1) OVER (PARTITION BY source) AS n")
-        .selectExpr("source", "doc_id", "avg_p",
-          """CASE (3 * (r - 1)) DIV n WHEN 0 THEN 'head'
-            |     WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket""".stripMargin)
-        .groupBy("source", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          expr(
-            """CAST(ROUND(aggregate(
-              |  transform(array_sort(collect_list(struct(doc_id, avg_p))),
-              |            x -> x.avg_p),
-              |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) / count(1), 6)
-              |AS DOUBLE)""".stripMargin).as("mean_p"))
-        .selectExpr("source", "bucket", "CAST(n_docs AS BIGINT) AS n_docs",
-          "mean_p")
-        .orderBy("source", "bucket")
-    }),
-
-    // retrieval evaluation: first same-label hit rank in the exact top-10
-    // per probe, with its reciprocal — the MRR ingredient; probes whose
-    // top-10 holds no relevant result emit no row (both engines)
-    "llm_retrieval_mrr" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
-        .join(e.select(col("vec_id").as("probe_id"),
-          col("label").as("probe_label")), "probe_id")
-        .join(e.select(col("vec_id").as("cand_id"),
-          col("label").as("cand_label")), "cand_id")
-        .where("cand_label = probe_label")
-        .groupBy("probe_id")
-        .agg(min("rank").as("first_hit_rank"))
-        .selectExpr("probe_id", "first_hit_rank",
-          "CAST(ROUND(1.0 / first_hit_rank, 6) AS DOUBLE) AS rr")
-        .orderBy("probe_id")
-    }),
-
-    // one k-means Lloyd iteration, differentially: 4 fixture vectors seed
-    // the centroids, assignment is the broadcast argmax Ivf.assign uses,
-    // and the recomputed centroid means are DECIMAL-exact sums over one
-    // correctly-rounded double division — the training step spark.ml
-    // hides, pinned value-by-value against DuckDB
-    "llm_kmeans_iter" -> ((s, d) => {
-      val e = emb(s, d)
-      val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-      Ivf.lloydIterate(e, cents).orderBy("centroid_id", "dim")
-    }),
-
-    // three chained Lloyd steps — the full training loop differentially:
-    // each iteration's rounded means feed the next through a FLOAT
-    // round-trip, so one drifting component anywhere in the chain
-    // hash-mismatches the final state
-    "llm_kmeans_converged" -> ((s, d) => {
-      val e = emb(s, d)
-      val seed = e.where(col("vec_id").isin(3, 17, 31, 59))
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.lloydLoop(e, seed, iters = 3).orderBy("centroid_id", "dim")
-    }),
-
-    // exact edit-distance join over 30-char document prefixes (fuzzy key
-    // matching): Ed-Join prefix filtering on rarest q-grams, threshold
-    // levenshtein verify — the oracle brute-forces every pair, so a
-    // missed candidate (unsound prefix filter) hash-mismatches
-    "llm_edit_distance_join" -> ((s, d) => {
-      val keyed = Tables.load(s, d, "documents")
-        .selectExpr("doc_id", "substr(text, 1, 30) AS st")
-      Fuzzy.editDistanceJoin(keyed, "doc_id", "st", k = 3)
-        .selectExpr("a_id", "b_id", "CAST(dist AS INT) AS dist")
-        .orderBy("a_id", "b_id")
-    }),
-
-    // which SOURCES duplicate each other: group-level MinHash — min() is
-    // associative, so re-keying docs by source before the minhash groupBy
-    // yields the signature of each source's union shingle set; pairwise
-    // agreement over 8 permutations estimates cross-source Jaccard
-    "llm_source_similarity" -> ((s, d) =>
-      Dedup.groupSimilarity(docs(s, d), "source").orderBy("src_a", "src_b")),
-
-    // one BPE merge-training step: pre/post pair counts around the
-    // argmax merge — the corpus collapses to the word-frequency dict
-    // before any pair work (the classic BPE scale property)
-    "llm_bpe_merge_step" -> ((s, d) =>
-      TextAnalysis.bpeMergeStep(docs(s, d))),
-
-    // WordPiece's likelihood criterion over the same dictionary: rank
-    // merges by freq(ab)/(freq(a)·freq(b)) — rare-but-cohesive pairs
-    // beat frequent collisions; score is a raw IEEE division (no ROUND
-    // edge), ties lexicographic
-    "llm_wordpiece_step" -> ((s, d) =>
-      TextAnalysis.wordpieceStep(docs(s, d)).orderBy("rank")),
-
-    // eval hygiene: held-out (val/test) docs whose content leaks from the
-    // train split — exact fingerprint or cross-band near-dup — i.e. the
-    // complement of dedupeIncremental's survivors; the check that runs
-    // before trusting any benchmark number
-    "llm_split_leakage" -> ((s, d) => {
-      val dd = docs(s, d)
-      // localCheckpoint (r17 opt): the split table is METADATA-scale
-      // (doc_id, split) but its derivation is a corpus-wide
-      // normalize+md5 pass, and it feeds the train selection (consumed
-      // 3× inside dedupeIncremental) plus the heldout selection
-      // (consumed twice) — the lazy form re-ran the md5 pass per
-      // consumer (44 parquet scans / 49 Exchanges executed,
-      // plans/r17/llm_split_leakage_before.txt)
-      val split = TextAnalysis.hashSplit(dd).select("doc_id", "split")
-        .localCheckpoint()
-      val train = dd.join(
-        split.where("split = 'train'").select("doc_id"), "doc_id")
-      val heldout = dd.join(
-        split.where("split <> 'train'").select("doc_id"), "doc_id")
-      val clean = Dedup.dedupeIncremental(train, heldout)
-      heldout.join(clean.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .selectExpr("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-
-    // the one-row dedup health report a pipeline owner actually reads:
-    // corpus size, exact-dup mass, candidate/verified pair counts,
-    // cluster census — every number an aggregate of operators that are
-    // themselves oracled row-by-row elsewhere
-    "llm_dedup_report" -> ((s, d) => {
-      val dd = docs(s, d)
-      // localCheckpoint (r16 opt): the exact table feeds the mass stats
-      // AND the survivor join; survivors feed candidate generation AND
-      // the jaccard verify — 12 parquet scans executed in the lazy form
-      val ex = Dedup.exact(dd).localCheckpoint()
-      val exStats = ex.agg(
-        sum("n_docs").as("n_docs"),
-        count(lit(1)).as("n_distinct_content"),
-        sum(expr("n_docs - 1")).as("n_exact_collapsed"))
-      // near-dup census on DISTINCT content only (the dedupe()/dedup_cc
-      // front-collapse): verbatim copies would densify the candidate
-      // graph quadratically in copy count and measure nothing new —
-      // measured 33 s vs 5 s at the 10x dup-heavy staging
-      val survivors = dd.join(
-        ex.select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
-      // localCheckpoint: the scan→shingle→minhash→band subtree is the
-      // report's dominant cost and feeds BOTH the pair count and the
-      // jaccard verify chain — materialize the (pair-bounded, small)
-      // candidate set once instead of re-deriving it per consumer
-      val cands = Dedup.lshCandidates(survivors).localCheckpoint()
-      val verified = Dedup.jaccard(survivors, cands)
-        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
-      val pairStats = cands.agg(count(lit(1)).as("n_candidate_pairs"))
-        .crossJoin(verified.agg(count(lit(1)).as("n_verified_pairs")))
-      val cStats = Dedup.dupClusters(verified)
-        .groupBy("cluster_rep").agg(count(lit(1)).as("sz"))
-        .agg(count(lit(1)).as("n_clusters"),
-          coalesce(max("sz"), lit(0L)).as("largest_cluster"))
-      exStats.crossJoin(pairStats).crossJoin(cStats)
-    }),
-
-    // diversity-balanced sampling (r14 verdict #6): per-IVF-cluster token
-    // quotas — the standard answer to topic over-concentration that
-    // importance weighting (llm_importance_score) misses: assign every
-    // embedded doc to its nearest centroid (fixed 8 like llm_ivf_topk —
-    // broadcast k-row table, map-side argmax), then fill each CLUSTER's
-    // equal share of the token budget in seeded-md5 order through the
-    // tokenBudgetMix two-phase prefix sum (running sums per
-    // (cluster, bucket), bucket offsets over a metadata-scale window —
-    // no cluster ever serializes into one task, no global sort). The
-    // oracle replays assignment + ONE flat per-cluster window, proving
-    // the stitch
-    "llm_cluster_quota" -> ((s, d) => {
-      val e = emb(s, d)
-      val centroids = e.where("vec_id < 8")
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      val clusters = Ivf.assign(e, centroids)
-        .select(col("vec_id").as("doc_id"),
-          concat(lit("c"), col("centroid_id")).as("cluster"))
-      TextAnalysis.tokenBudgetMix(
-          docs(s, d).join(clusters, Seq("doc_id")),
-          (0 to 7).map(i => s"c$i" -> 1L).toMap,
-          budgetTokens = 16000L, seed = "quota1", sourceCol = "cluster")
-        .orderBy("doc_id")
-    }),
-
-    // training-mix construction under a 20k-token budget with 1:2:3:4
-    // source weights — quota fill in seeded order via the two-phase
-    // prefix sum (no flat per-source window task)
-    "llm_token_budget_mix" -> ((s, d) =>
-      TextAnalysis.tokenBudgetMix(docs(s, d),
-          Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src5" -> 4L),
-          budgetTokens = 20000L, seed = "mix1")
-        .orderBy("doc_id")),
-
-    // license/provenance propagation through exact dedup: the survivor
-    // carries the full source attribution of every collapsed copy
-    "llm_dedup_attribution" -> ((s, d) =>
-      docs(s, d)
-        .select(expr(s"md5(${Dedup.normalizeExpr})").as("fp"),
-          col("doc_id"), col("source"))
-        .groupBy("fp")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_docs"),
-          countDistinct(col("source")).as("n_sources"),
-          min("source").as("first_source"), max("source").as("last_source"))
-        .orderBy("fp")),
-
-    // triangle census of the LSH candidate graph over DISTINCT content
-    // (copy cliques would contribute n-choose-3 degenerate triangles):
-    // near-clique duplicate communities vs chains of borderline pairs
-    "llm_dup_triangles" -> ((s, d) =>
-      Dedup.dupTriangles(Dedup.lshCandidates(Dedup.exactSurvivors(docs(s, d))))
-        .orderBy("a", "b", "c")),
-
-    // content-policy blocklist: per-category term-occurrence counts with
-    // the block verdict at >2 hits; the policy table broadcasts
-    "llm_blocklist_filter" -> ((s, d) =>
-      TextAnalysis.blocklistFilter(docs(s, d),
-          Map("latency" -> Seq("slow"), "volume" -> Seq("big", "small")),
-          maxHits = 2)
-        .orderBy("doc_id", "category")),
-
-    // feature-hashed linear quality-classifier inference: 64-bucket token
-    // hashing, broadcast weight table, integer-exact logits
-    "llm_quality_classifier" -> ((s, d) =>
-      TextAnalysis.classifierScore(docs(s, d),
-        TextAnalysis.hashedWeights(s, 64), 64).orderBy("doc_id")),
-
-    // T5-style span corruption, the deterministic materialized variant:
-    // block masking a pure function of (doc_id, block), numbered
-    // sentinels, input/target sequences leave as md5 fingerprints with
-    // order pinned by doubled positions — the oracle rebuilds both
-    // strings with string_agg ORDER BY pos
-    "llm_span_corrupt" -> ((s, d) =>
-      TextAnalysis.spanCorrupt(docs(s, d)).orderBy("doc_id")),
-
-    // DSIR-style importance selection: hashed-bigram target/raw bucket
-    // histograms (64 rows of broadcast model state) learned from the
-    // corpus itself, per-doc importance = exact-BIGINT mass ratio with
-    // add-one smoothing, one IEEE division at the edge; selection is a
-    // per-row predicate (tgt_mass > raw_mass), never a global rank
-    "llm_dsir_select" -> ((s, d) =>
-      TextAnalysis.importanceScore(docs(s, d), expr("lang = 'en'"))
-        .orderBy("doc_id")),
-
-    // deterministic weighted subsample: 120 docs drawn with probability
-    // rising in n_chars, membership a pure function of (seed, doc_id);
-    // TakeOrderedAndProject — no global sort (plan-gated)
-    // priority is raw (no ROUND-6 edge): one conversion + one division is
-    // bit-identical by IEEE, while DuckDB's ROUND perturbs ULPs at 1e14
-    "llm_weighted_sample" -> ((s, d) =>
-      TrainOrder.weightedSample(docs(s, d), "doc_id", "n_chars", "s42", 120)
-        .selectExpr("doc_id", "n_chars", "priority")
-        .orderBy("doc_id")),
-
-    // PCA top component by power iteration over the INTEGER covariance
-    // of the int8-quantized corpus — exact BIGINT cells, integer first
-    // matvec (v0 = 1), ordered double folds for the second; the
-    // dominant-direction estimate embedding whitening removes
-    "llm_pca_power" -> ((s, d) =>
-      Similarity.pcaPower(emb(s, d)).orderBy("dim")),
-
-    // whitening: project out the PCA dominant direction per vector —
-    // projection + residual norm, the all-but-the-top post-process
-    "llm_whiten" -> ((s, d) =>
-      Similarity.dominantRemove(emb(s, d)).orderBy("vec_id")),
-
-    // 8-step BPE TRAINING loop: the learned merge table, each step's
-    // best pair depending on the previous merges — the chained oracle
-    // replays all eight stages in CTEs (the dict is localCheckpointed
-    // between steps, so the Spark plan stays linear; DuckDB's CTE chain
-    // has no inliner doubling)
-    "llm_bpe_train" -> ((s, d) =>
-      TextAnalysis.bpeTrain(docs(s, d), iters = 8).orderBy("iter")),
-
-    // BPE ENCODE: the learned 4-merge table applied to every document —
-    // the unique-word dictionary is tokenized once (vocab-sized merge
-    // work), docs' words equi-join the (word -> token count) map; the
-    // corpus never flows through the replace passes
-    "llm_bpe_encode" -> ((s, d) =>
-      TextAnalysis.bpeEncode(docs(s, d), iters = 4).orderBy("doc_id")),
-
-    // tokenizer-fit report: fertility (tokens/word) and compression
-    // (chars/token) per source — the eval table a tokenizer change ships
-    // with; ratios are single IEEE divisions of exact BIGINT sums
-    "llm_bpe_fertility" -> ((s, d) =>
-      TextAnalysis.tokenizerFertility(docs(s, d), iters = 4)
-        .orderBy("source")),
-
-    // MMR diversified retrieval: 3 greedy picks for query vec 7 at
-    // lambda=0.7 — relevance computed once, each step broadcasts the
-    // <=k selected vectors; ranks on raw cosine doubles, vec_id ties
-    "llm_mmr_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.mmrSelect(e.where(col("vec_id") === 7),
-          e.where(col("vec_id") =!= 7), k = 3, lambda = 0.7)
-        .orderBy("rank")
-    }),
-
-    // corpus-self bigram LM quality signal (CCNet stand-in, log-free):
-    // mean transition probability + rare-bigram rate per doc; each p is
-    // one IEEE division of exact integers, folded in position order
-    "llm_bigram_lm" -> ((s, d) =>
-      TextAnalysis.bigramScore(docs(s, d), minCount = 2).orderBy("doc_id")),
-
-    // per-cluster k-means objective: Σ(x-μ)² via the Σx²−(Σx)²/n
-    // expansion — corpus sums DECIMAL-exact and order-free, IEEE math
-    // confined to the k×dims cells folded in fixed dim order
-    "llm_kmeans_inertia" -> ((s, d) => {
-      val e = emb(s, d)
-      val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid"))
-      Ivf.inertia(e, cents).orderBy("centroid_id")
-    }),
-
-    // PageRank (2 damped power steps) over the jaccard>=0.6 candidate
-    // graph — which docs sit at the CORE of a near-dup neighborhood;
-    // per-node incoming sums fold in fixed neighbor order
-    "llm_pagerank" -> ((s, d) =>
-      Dedup.pageRank(Dedup.nearDupPairs(docs(s, d)), iters = 2).orderBy("doc_id")),
-
-    // semi-supervised label propagation over the same candidate graph:
-    // every 5th doc seeds its language, two synchronous plurality rounds
-    // (min-label ties, seeds clamped) — the oracle replays both rounds
-    // as chained CTEs with row_number argmax
-    "llm_label_propagation" -> ((s, d) => {
-      val dd = docs(s, d)
-      val pairs = Dedup.nearDupPairs(dd)
-      val seeds = dd.where("doc_id % 5 = 0")
-        .select(col("doc_id"), col("lang").as("label"))
-      Dedup.labelPropagation(pairs, seeds, iters = 2).orderBy("doc_id")
-    }),
-
-    // deterministic HyperLogLog distinct-token sketch per source (md5
-    // bucket+rho, exact-integer harmonic sum) next to the exact count —
-    // the cardinality estimator that moves 64 registers instead of the
-    // token stream; NOT approx_count_distinct (engine-internal HLL++)
-    // register-level HLL MERGE: per-source sketches union by per-bucket
-    // max — 64 ints per shard cross the wire, never tokens; the
-    // sum-vs-union gap exposes cross-source vocabulary overlap
-    "llm_sketch_merge" -> ((s, d) =>
-      TextAnalysis.distinctSketchMerged(docs(s, d))),
-
-    "llm_distinct_sketch" -> ((s, d) =>
-      TextAnalysis.distinctSketch(docs(s, d)).orderBy("source")),
-
-    // per-doc TF-IDF top-5 keywords (log-free idf: tf·N/df — exact
-    // BIGINT product, one IEEE division, no rounding edge in the rank)
-    "llm_tfidf_keywords" -> ((s, d) =>
-      TextAnalysis.tfidfKeywords(docs(s, d)).orderBy("doc_id", "rank")),
-
-    // curriculum schedule: fixed n_chars difficulty tiers lead the
-    // order, seeded md5 shuffle within each tier — two-phase prefix sum
-    // partitioned by (tier, bucket), no global window
-    "llm_curriculum_order" -> ((s, d) =>
-      TrainOrder.curriculumOrder(docs(s, d),
-          expr("CASE WHEN n_chars < 250 THEN 0 WHEN n_chars < 450 THEN 1 ELSE 2 END"),
-          seed = "curr")
-        .orderBy("doc_id")),
-
-    // LSH banding-point tuning: candidates/verified/precision for the
-    // (2x4, 4x2, 8x1) splits of the 8-hash signature — the sample
-    // measurement run before committing a banding point corpus-wide
-    "llm_lsh_tuning" -> ((s, d) =>
-      Dedup.lshTuning(docs(s, d)).orderBy("bands")),
-
-    // product quantization: per-subspace nearest-centroid codes (8
-    // subspaces x 16 codes over 64 dims — 64x smaller than float32);
-    // the oracle recomputes the md5-derived codebook and the argmin
-    // (first-minimum tie-break) per (vector, subspace)
-    "llm_pq_codes" -> ((s, d) =>
-      Similarity.pqCodes(emb(s, d))
-        .select(col("vec_id"), posexplode(col("pq_codes")).as(Seq("m", "code")))
-        .orderBy("vec_id", "m")),
-
-    // ADC top-k over the code table: probe builds one 8x16 exact lookup
-    // table, every candidate costs 8 lookups + a fixed-order fold
-    "llm_pq_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // PQ quality vs exact cosine top-5 — the recall evaluation an ANN
-    // compression choice ships with
-    "llm_pq_recall" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.annRecall(
-          Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 5),
-          Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5))
-        .orderBy("probe_id")
-    }),
-
-    // END-TO-END corpus refresh (r9 verdict #9) — the chain a real
-    // training-data pipeline runs, as ONE declared query over the
-    // already-proven primitives: quality gate → exact+near dedupe →
-    // decontaminate vs the benchmark slice → hashed-linear classifier →
-    // per-source token-budget mix → deterministic training order +
-    // shards. Every stage feeds the previous stage's survivors; the
-    // oracle replays the whole chain in CTEs, so a drift ANYWHERE in
-    // the composition (not just in a unit entry) hash-mismatches.
-    // Scale shape: the stages compose without materialization barriers
-    // — each is the same banded/bucketed/broadcast plan its unit entry
-    // gates, and the only driver-side state is the quota table.
-    "llm_pipeline_e2e" -> ((s, d) => {
-      val dd = docs(s, d)
-      // 1. quality envelope gate (token band, alnum, whitespace)
-      val gated = dd.join(
-        TextAnalysis.qualityFilter(dd).select("doc_id"), Seq("doc_id"))
-      // 2. exact collapse + greedy near-dup drop. localCheckpoint: the
-      // dedupe subtree (shingle -> minhash -> band join -> jaccard) is
-      // the chain's expensive half and feeds BOTH the decontamination
-      // corpus and the survivor stream — without the checkpoint each
-      // downstream branch re-derives it from the scan (measured 22.3 s
-      // -> 8.9 s at sf0.1). A real refresh materializes stage outputs
-      // at exactly these cut points.
-      val deduped = Dedup.dedupe(gated).localCheckpoint()
-      // 3. decontaminate: drop anything sharing >= 30% of a benchmark
-      // probe's shingles (probes = raw doc_id < 50 slice)
-      val flagged = Dedup.containment(deduped, dd.where("doc_id < 50"),
-          minContainment = 0.3)
-        .select("doc_id").distinct()
-      val clean = deduped.join(flagged, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      // 4. hashed-linear quality classifier: keep positive logits
-      val kept = clean.join(
-        TextAnalysis.classifierScore(clean, TextAnalysis.hashedWeights(s, 64), 64)
-          .where("logit > 0").select("doc_id"), Seq("doc_id"))
-      // 5. per-source token-budget mix (6 weighted sources, 15k budget)
-      val mixed = TextAnalysis.tokenBudgetMix(kept,
-        Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src3" -> 2L,
-          "src4" -> 1L, "src5" -> 4L),
-        budgetTokens = 15000L, seed = "e2e-mix").localCheckpoint()
-      // 6. deterministic training order + 64-doc shards over the mix
-      mixed.join(
-          TrainOrder.shuffleShards(mixed.select("doc_id"), "e2e-ord", 64L),
-          Seq("doc_id"))
-        .select("doc_id", "source", "n_tokens", "pos", "shard")
-        .orderBy("doc_id")
-    })
-  )
-
   /** Shared oracle CTEs for the line-dedup entries: the same 8-token
     * lineification as the Spark wiring, then the line-df boilerplate rule
     * recomputed with DuckDB windows/aggregates, ending in a per-line
@@ -3060,136 +446,20 @@ object Llm {
       .stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "llm_line_dedup" ->
-      s"""WITH $lineDedupCtes
-         |SELECT doc_id, count(*) AS n_lines,
-         |       count(CASE WHEN NOT is_bl THEN 1 END) AS n_kept,
-         |       md5(coalesce(string_agg(line, chr(10) ORDER BY line_no)
-         |                      FILTER (WHERE NOT is_bl), '')) AS kept_md5
-         |FROM fx GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // cross-corpus pairing rule over the shared band CTEs: existing side
-    // a, batch side b; exact pass + near drop replayed independently
-    "llm_dedup_incremental" ->
-      s"""WITH ${bandCtes("documents")},
-         |cands AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.band) AS n_bands
-         |          FROM bands a JOIN bands b
-         |            ON a.band = b.band AND a.sig = b.sig
-         |           AND a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0
-         |          GROUP BY 1, 2),
-         |$jaccardCtes,
-         |ex_fp AS (SELECT DISTINCT md5($NORM) AS fp FROM documents WHERE doc_id % 5 <> 0),
-         |in_docs AS (SELECT doc_id, text, md5($NORM) AS fp FROM documents WHERE doc_id % 5 = 0),
-         |exact_surv AS (SELECT i.doc_id, i.text FROM in_docs i
-         |               LEFT JOIN ex_fp e ON i.fp = e.fp WHERE e.fp IS NULL),
-         |drop_near AS (SELECT DISTINCT doc_b AS doc_id FROM jac WHERE jaccard >= 0.6)
-         |SELECT s.doc_id, md5(s.text) AS content_md5
-         |FROM exact_surv s LEFT JOIN drop_near n ON s.doc_id = n.doc_id
-         |WHERE n.doc_id IS NULL ORDER BY s.doc_id""".stripMargin,
-
-    "llm_line_dedup_pipeline" ->
-      s"""WITH $lineDedupCtes,
-         |kept AS (SELECT doc_id,
-         |                coalesce(string_agg(line, chr(10) ORDER BY line_no)
-         |                           FILTER (WHERE NOT is_bl), '') AS text
-         |         FROM fx GROUP BY doc_id)
-         |SELECT md5($NORM) AS fp, min(doc_id) AS keep_id, count(*) AS n_docs
-         |FROM kept GROUP BY 1 ORDER BY fp""".stripMargin,
-
-    // sequential scrub: each pattern counts matches in the text AFTER the
-    // previous patterns' replacements, exactly as piiScrub folds
-    "llm_pii_scrub" ->
-      raw"""WITH d2 AS (SELECT doc_id, coalesce(${piiInject("VARCHAR")}, '') AS text FROM documents),
-         |s1 AS (SELECT doc_id,
-         |        CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-         |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t
-         |       FROM d2),
-         |s2 AS (SELECT doc_id, n_email,
-         |        CAST(len(regexp_extract_all(t, '\b\d{3}-\d{4}\b')) AS BIGINT) AS n_phone,
-         |        regexp_replace(t, '\b\d{3}-\d{4}\b', '<PHONE>', 'g') AS t
-         |       FROM s1),
-         |s3 AS (SELECT doc_id, n_email, n_phone,
-         |        CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ip,
-         |        regexp_replace(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS t
-         |       FROM s2)
-         |SELECT doc_id, n_email, n_phone, n_ip, md5(t) AS scrub_md5
-         |FROM s3 ORDER BY doc_id""".stripMargin,
-
-    // position-indexed 5-gram hashes -> cross-doc df -> interval union
-    // per doc, recomputed with DuckDB windows; 0-based p mirrors posexplode
-    "llm_dup_spans" ->
-      raw"""WITH tw AS (SELECT doc_id, string_split($NORMC, ' ') AS w FROM documents),
-         |tk AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, w
-         |       FROM tw WHERE len(w) >= 5),
-         |g AS (SELECT doc_id, n_tokens, CAST(i - 1 AS BIGINT) AS p,
-         |             md5(array_to_string(w[i : i + 4], ' ')) AS gh
-         |      FROM tk, unnest(generate_series(1, len(w) - 4)) AS u(i)),
-         |dg AS (SELECT gh FROM (SELECT DISTINCT doc_id, gh FROM g)
-         |       GROUP BY gh HAVING count(*) >= 2),
-         |d AS (SELECT g.doc_id, g.n_tokens, g.p FROM g JOIN dg USING (gh)),
-         |m AS (SELECT doc_id, n_tokens, p,
-         |             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 5
-         |                  THEN 0 ELSE 1 END AS nw
-         |      FROM d),
-         |isl AS (SELECT doc_id, n_tokens, p,
-         |               sum(nw) OVER (PARTITION BY doc_id ORDER BY p
-         |                             ROWS UNBOUNDED PRECEDING) AS grp
-         |        FROM m),
-         |sp AS (SELECT doc_id, n_tokens, grp, max(p) - min(p) + 5 AS span_tokens
-         |       FROM isl GROUP BY doc_id, n_tokens, grp)
-         |SELECT doc_id, n_tokens, count(*) AS n_spans,
-         |       CAST(sum(span_tokens) AS BIGINT) AS dup_tokens,
-         |       CAST(ROUND(CAST(sum(span_tokens) AS DOUBLE) / n_tokens, 6) AS DOUBLE) AS dup_frac
-         |FROM sp GROUP BY doc_id, n_tokens ORDER BY doc_id""".stripMargin,
-
-    // removal replay: redundant position = gram with df >= 2 held by a
-    // non-minimum doc; islands -> covered ranges -> anti-join tokens ->
-    // ordered reassembly hash; fully-scrubbed docs fall back to md5('')
-    "llm_scrub_spans" ->
-      raw"""WITH tw AS (SELECT doc_id, string_split($NORMC, ' ') AS w FROM documents),
-         |tk AS (SELECT doc_id, w FROM tw WHERE len(w) >= 5),
-         |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS p,
-         |             md5(array_to_string(w[i : i + 4], ' ')) AS gh
-         |      FROM tk, unnest(generate_series(1, len(w) - 4)) AS u(i)),
-         |gm AS (SELECT gh, count(DISTINCT doc_id) AS df, min(doc_id) AS mind
-         |       FROM g GROUP BY gh),
-         |d AS (SELECT g.doc_id, g.p FROM g JOIN gm USING (gh)
-         |      WHERE gm.df >= 2 AND g.doc_id <> gm.mind),
-         |m AS (SELECT doc_id, p,
-         |             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 5
-         |                  THEN 0 ELSE 1 END AS nw
-         |      FROM d),
-         |isl AS (SELECT doc_id, p,
-         |               sum(nw) OVER (PARTITION BY doc_id ORDER BY p
-         |                             ROWS UNBOUNDED PRECEDING) AS grp
-         |        FROM m),
-         |sp AS (SELECT doc_id, min(p) AS s, max(p) + 4 AS e
-         |       FROM isl GROUP BY doc_id, grp),
-         |cov AS (SELECT doc_id, i AS p FROM sp, unnest(generate_series(s, e)) AS u(i)),
-         |tok AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS p, w[i] AS tok
-         |        FROM tw, unnest(generate_series(1, len(w))) AS u(i)),
-         |kept AS (SELECT t.doc_id, t.p, t.tok FROM tok t
-         |         LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
-         |         WHERE c.p IS NULL),
-         |ka AS (SELECT doc_id, count(*) AS kept_tokens,
-         |              md5(string_agg(tok, ' ' ORDER BY p)) AS scrub_md5
-         |       FROM kept GROUP BY doc_id)
-         |SELECT tw.doc_id, CAST(len(tw.w) AS BIGINT) AS n_tokens,
-         |       CAST(coalesce(ka.kept_tokens, 0) AS BIGINT) AS kept_tokens,
-         |       coalesce(ka.scrub_md5, md5('')) AS scrub_md5
-         |FROM tw LEFT JOIN ka ON tw.doc_id = ka.doc_id
-         |ORDER BY tw.doc_id""".stripMargin,
-
-    "llm_dedup_exact" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_dedup_exact", (s, d) => Dedup.exact(docs(s, d)).orderBy("fp"),
       s"""SELECT md5($NORM) AS fp, min(doc_id) AS keep_id, count(*) AS n_docs
-         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin),
 
-    "llm_minhash_bands" ->
+    Entry("llm_minhash_bands", (s, d) =>
+      Dedup.lshCandidates(docs(s, d)).orderBy("doc_a", "doc_b"),
       s"""WITH ${minhashCtes()}
-         |SELECT doc_a, doc_b, n_bands FROM cands ORDER BY doc_a, doc_b""".stripMargin,
+         |SELECT doc_a, doc_b, n_bands FROM cands ORDER BY doc_a, doc_b""".stripMargin),
 
-    "llm_jaccard_verify" ->
+    Entry("llm_jaccard_verify", (s, d) => {
+      val dd = docs(s, d)
+      Dedup.jaccard(dd, Dedup.lshCandidates(dd)).orderBy("doc_a", "doc_b")
+    },
       s"""WITH ${minhashCtes()},
          |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
          |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS n_both
@@ -3202,9 +472,9 @@ object Llm {
          |FROM inter i
          |JOIN sizes sa ON sa.doc_id = i.doc_a
          |JOIN sizes sb ON sb.doc_id = i.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "llm_simhash" ->
+    Entry("llm_simhash", (s, d) => Dedup.simhash(docs(s, d)).orderBy("doc_id"),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -3212,9 +482,18 @@ object Llm {
          |          GROUP BY doc_id, b)
          |SELECT doc_id,
          |       CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-         |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "llm_simhash_near" ->
+    // no ORDER BY: the candidate set is ~n² in dup-heavy corpora and the
+    // differential compare canonicalizes row order anyway — a global sort
+    // of the pair set would be pure benchmark overhead at scale.
+    // Default banding = the web-scale point (15-bit bands, Hamming <= 3).
+    // AUDIT/REPORT FORM, not the pipeline form: the doc-level expanded
+    // pair list is inherently output-bound on dup-heavy corpora (561.7 s
+    // at SF~10 vs simhash_groups 17.1 s / simhash_pipeline 4.96 s) —
+    // benchmark and deploy those two for dedup at scale; this entry
+    // exists to hand auditors the explicit pairs.
+    Entry("llm_simhash_near", (s, d) => Dedup.simhashCandidates(docs(s, d)),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -3230,9 +509,37 @@ object Llm {
          |FROM banded a JOIN banded b
          |  ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "llm_simhash_groups" ->
+    // the wide-radius configuration (6-bit bands, Hamming <= 8): higher
+    // recall radius, ~1300x higher random band-collision rate — kept
+    // differentially checked for dup-heavy corpora that can afford it
+    Entry("llm_simhash_radius8", (s, d) =>
+      Dedup.simhashCandidates(docs(s, d), bandBits = 6, maxHamming = 8),
+      s"""WITH $tokCtes,
+         |votes AS (SELECT doc_id, b,
+         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
+         |          FROM th, unnest(generate_series(0, 59)) AS g(b)
+         |          GROUP BY doc_id, b),
+         |sim AS (SELECT doc_id,
+         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
+         |        FROM votes GROUP BY doc_id),
+         |banded AS (SELECT doc_id, simhash, band, (simhash >> (band * 6)) & 63 AS chunk
+         |           FROM sim, unnest(generate_series(0, 9)) AS g(band))
+         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+         |FROM banded a JOIN banded b
+         |  ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
+         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
+         |ORDER BY doc_a, doc_b""".stripMargin),
+
+    // fingerprint-group-level reporting: output is O(distinct near-dup
+    // fingerprint pairs) instead of O(doc pairs) — the form that stays
+    // materializable when dup mass makes the expanded pair set explode
+    // (measured at SF~10 100x replication: 342.9 s expanded vs 22.2 s
+    // grouped, same banding)
+    Entry("llm_simhash_groups", (s, d) =>
+      Dedup.simhashNearGroups(docs(s, d)).orderBy("sim_a", "sim_b"),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -3259,9 +566,14 @@ object Llm {
          |                 n_docs AS docs_b, n_docs * (n_docs - 1) // 2 AS pair_count
          |          FROM grp WHERE n_docs > 1)
          |SELECT * FROM cross_g UNION ALL SELECT * FROM intra
-         |ORDER BY sim_a, sim_b""".stripMargin,
+         |ORDER BY sim_a, sim_b""".stripMargin),
 
-    "llm_simhash_pipeline" ->
+    // exact-collapse fronting the banded join: doc-level survivor pairs
+    // with collapsed copy counts — total pair_count mass equals the
+    // expanded simhashCandidates answer, but output stays O(survivor
+    // pairs) under replication-heavy corpora (the SF~10 blow-up class)
+    Entry("llm_simhash_pipeline", (s, d) =>
+      Dedup.simhashPipeline(docs(s, d)).orderBy("doc_a", "doc_b", "hamming"),
       s"""WITH ex AS (SELECT md5($NORM) AS fp, min(doc_id) AS keep_id,
          |                   count(*) AS n_docs
          |            FROM documents GROUP BY 1),
@@ -3294,27 +606,9 @@ object Llm {
          |                 n_docs AS copies_b, n_docs * (n_docs - 1) // 2 AS pair_count
          |          FROM ex WHERE n_docs > 1)
          |SELECT * FROM cross_p UNION ALL SELECT * FROM intra
-         |ORDER BY doc_a, doc_b, hamming""".stripMargin,
+         |ORDER BY doc_a, doc_b, hamming""".stripMargin),
 
-    "llm_simhash_radius8" ->
-      s"""WITH $tokCtes,
-         |votes AS (SELECT doc_id, b,
-         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-         |          FROM th, unnest(generate_series(0, 59)) AS g(b)
-         |          GROUP BY doc_id, b),
-         |sim AS (SELECT doc_id,
-         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-         |        FROM votes GROUP BY doc_id),
-         |banded AS (SELECT doc_id, simhash, band, (simhash >> (band * 6)) & 63 AS chunk
-         |           FROM sim, unnest(generate_series(0, 9)) AS g(band))
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         |FROM banded a JOIN banded b
-         |  ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "llm_text_stats" ->
+    Entry("llm_text_stats", (s, d) => TextAnalysis.stats(docs(s, d)).orderBy("doc_id"),
       raw"""SELECT doc_id,
          |  CAST(length(text) AS BIGINT) AS n_chars,
          |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
@@ -3324,9 +618,11 @@ object Llm {
          |       / NULLIF(length(text), 0), 6) AS DOUBLE) AS space_ratio,
          |  CAST(ROUND(CAST(length($NORM) AS DOUBLE)
          |       / NULLIF(length(string_split_regex(trim(text), '\s+')), 0), 6) AS DOUBLE) AS avg_token_len
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "llm_quality_filter" ->
+    Entry("llm_quality_filter", (s, d) =>
+      TextAnalysis.qualityFilter(docs(s, d))
+        .select("doc_id", "n_tokens").orderBy("doc_id"),
       raw"""WITH st AS (
          |  SELECT doc_id,
          |    CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
@@ -3338,9 +634,10 @@ object Llm {
          |SELECT doc_id, n_tokens FROM st
          |WHERE n_tokens BETWEEN 5 AND 5000
          |  AND alnum_ratio >= 0.7 AND space_ratio <= 0.4
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    "llm_dedup_pipeline" ->
+    Entry("llm_dedup_pipeline", (s, d) =>
+      Dedup.dedupe(docs(s, d)).select("doc_id").orderBy("doc_id"),
       s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -3349,87 +646,16 @@ object Llm {
          |nd AS (SELECT DISTINCT doc_b AS doc_id FROM jac WHERE jaccard >= 0.6)
          |SELECT doc_id FROM docs2
          |WHERE doc_id NOT IN (SELECT doc_id FROM nd)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // the oracle computes the SAME prefix sum as one flat window — the
-    // differential proves the two-phase decomposition stitches exactly
-    "llm_pack_shards" ->
-      raw"""WITH t AS (SELECT doc_id,
-         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (SELECT doc_id, n_tokens,
-         |             sum(n_tokens) OVER (ORDER BY doc_id
-         |                                 ROWS UNBOUNDED PRECEDING) AS cum_tokens
-         |      FROM t)
-         |SELECT doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens,
-         |       CAST((cum_tokens - n_tokens) // 65536 AS BIGINT) AS shard
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // the flat cumsum assignment rolled up with the same integer ppm
-    "llm_pack_efficiency" ->
-      raw"""WITH t AS (SELECT doc_id,
-         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (SELECT doc_id, n_tokens,
-         |             sum(n_tokens) OVER (ORDER BY doc_id
-         |                                 ROWS UNBOUNDED PRECEDING) AS cum_tokens
-         |      FROM t),
-         |a AS (SELECT doc_id, n_tokens,
-         |             (cum_tokens - n_tokens) // 4096 AS shard
-         |      FROM c)
-         |SELECT CAST(shard AS BIGINT) AS shard,
-         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(n_tokens) AS BIGINT) AS used_tokens,
-         |       CAST(4096 - SUM(n_tokens) AS BIGINT) AS waste_tokens,
-         |       CAST((SUM(n_tokens) * 1000000) // 4096 AS BIGINT) AS fill_ppm
-         |FROM a GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "llm_shuffle_order" ->
-      """WITH k AS (SELECT doc_id,
-        |                  md5('graft-r9:' || CAST(doc_id AS VARCHAR)) AS key
-        |           FROM documents)
-        |SELECT doc_id,
-        |       CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos,
-        |       CAST((row_number() OVER (ORDER BY key, doc_id) - 1) // 1024
-        |            AS BIGINT) AS shard
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    // both epochs' permutations as flat row_numbers over their seeds
-    "llm_epoch_orders" ->
-      """WITH k1 AS (SELECT doc_id,
-        |                   md5('epoch-1:' || CAST(doc_id AS VARCHAR)) AS key
-        |            FROM documents),
-        |k2 AS (SELECT doc_id,
-        |              md5('epoch-2:' || CAST(doc_id AS VARCHAR)) AS key
-        |       FROM documents),
-        |p1 AS (SELECT doc_id,
-        |              CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos_e1
-        |       FROM k1),
-        |p2 AS (SELECT doc_id,
-        |              CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos_e2
-        |       FROM k2)
-        |SELECT p1.doc_id, p1.pos_e1, p2.pos_e2,
-        |       CAST(ABS(p1.pos_e1 - p2.pos_e2) AS BIGINT) AS displacement
-        |FROM p1 JOIN p2 ON p2.doc_id = p1.doc_id
-        |ORDER BY p1.doc_id""".stripMargin,
-
-    "llm_mixture_interleave" ->
-      """WITH w AS (SELECT doc_id, source,
-        |                  1 + CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) % 3 AS wt,
-        |                  md5('graft-mix:' || CAST(doc_id AS VARCHAR)) AS key
-        |           FROM documents),
-        |p AS (SELECT doc_id, source, wt,
-        |             row_number() OVER (PARTITION BY source ORDER BY key, doc_id) - 1 AS p
-        |      FROM w),
-        |k AS (SELECT doc_id, source, (p + 1) * (6 // wt) AS kk FROM p)
-        |SELECT doc_id, source,
-        |       CAST(row_number() OVER (ORDER BY kk, source) - 1 AS BIGINT) AS pos
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    // reachability closure: every label a doc can reach through >=0.6
-    // pairs; min over them == the component representative (the Spark
-    // side converges to the same fixed point by label propagation)
-    "llm_dup_clusters" ->
+    // connected components over verified near-dup pairs (min-label
+    // propagation + pointer jumping): every doc in at least one >=0.6
+    // Jaccard pair, labeled with its component's minimum doc_id
+    Entry("llm_dup_clusters", (s, d) =>
+      Dedup.dupClusters(Dedup.nearDupPairs(docs(s, d))).orderBy("doc_id"),
+      // reachability closure: every label a doc can reach through >=0.6
+      // pairs; min over them == the component representative (the Spark
+      // side converges to the same fixed point by label propagation)
       s"""WITH RECURSIVE ${minhashCtes()},
          |$jaccardCtes,
          |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
@@ -3439,13 +665,23 @@ object Llm {
          |          UNION
          |          SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc_id = e.dst)
          |SELECT doc_id, min(lab) AS cluster_rep FROM reach
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // the 4 greedy rounds replayed as chained CTEs (the kcore fixed-
-    // round pattern): each round anti-joins the covered shingles and
-    // the picked docs, re-counts, takes the same (gain DESC, doc_id)
-    // argmax
-    "llm_coverage_select" -> {
+    // greedy maximal-coverage selection: the 4 docs that together cover
+    // the most distinct trigram shingles (submodular curation pick,
+    // (1−1/e)-approximate; TextAnalysis.coverageSelect — the mmrSelect
+    // driver-greedy shape with integer gains)
+    Entry("llm_coverage_select", (s, d) =>
+      TextAnalysis.coverageSelect(docs(s, d), k = 4)
+        .selectExpr("CAST(step AS INT) AS step", "doc_id",
+          "CAST(gain AS BIGINT) AS gain",
+          "CAST(covered_total AS BIGINT) AS covered_total")
+        .orderBy("step"),
+      // the 4 greedy rounds replayed as chained CTEs (the kcore fixed-
+      // round pattern): each round anti-joins the covered shingles and
+      // the picked docs, re-counts, takes the same (gain DESC, doc_id)
+      // argmax
+      {
       val k = 4
       val parts = scala.collection.mutable.ArrayBuffer.empty[String]
       parts += shingleCtes("documents")
@@ -3475,12 +711,46 @@ object Llm {
          |              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS covered_total
          |FROM ($steps) u
          |ORDER BY step""".stripMargin
-    },
+    }),
 
-    // the recursive reach components over the exact-collapse survivors,
-    // sizes re-expanded from the copy counts, standalone multi-copy
-    // exact classes re-added, rolled into the same two-level size census
-    "llm_cluster_size_hist" ->
+    // cluster-size census over the connected components — the dedup
+    // dashboard's headline table ("how much of the corpus is 2-copies
+    // vs template farms"). Exact-collapse FRONTS the banding (the
+    // simhashPipeline discipline: raw LSH candidates go quadratic in
+    // exact-class size on dup-heavy corpora), then cluster sizes are
+    // re-expanded from the collapse copy counts, and multi-copy exact
+    // classes with no near-dup neighbor surface as their own clusters —
+    // so the histogram still counts every underlying document, at
+    // O(survivor-pair) cost. n_docs = size × count makes the dup-mass
+    // per size class readable directly
+    Entry("llm_cluster_size_hist", (s, d) => {
+      val dd = docs(s, d)
+      // localCheckpoint (r16 opt): the copy-count table feeds the
+      // survivor join, the cluster re-expansion AND the alone-class
+      // anti-join; survivors feed the candidate and verify chains
+      val counts = Dedup.exact(dd)
+        .select(col("keep_id").as("doc_id"), col("n_docs").as("n_copies"))
+        .localCheckpoint()
+      val survivors = dd.join(counts.select("doc_id"), Seq("doc_id"))
+        .localCheckpoint()
+      val pairs = Dedup.nearDupPairs(survivors)
+      val clustered = Dedup.dupClusters(pairs)
+      val near = clustered.join(counts, Seq("doc_id"))
+        .groupBy("cluster_rep").agg(sum("n_copies").as("sz"))
+        .select("sz")
+      val alone = counts.where(col("n_copies") > 1)
+        .join(clustered.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select(col("n_copies").as("sz"))
+      near.union(alone)
+        .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
+        .selectExpr("CAST(sz AS BIGINT) AS cluster_size",
+          "CAST(n_clusters AS BIGINT) AS n_clusters",
+          "CAST(sz * n_clusters AS BIGINT) AS n_docs")
+        .orderBy("cluster_size")
+    },
+      // the recursive reach components over the exact-collapse survivors,
+      // sizes re-expanded from the copy counts, standalone multi-copy
+      // exact classes re-added, rolled into the same two-level size census
       s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |cls AS (SELECT fp, min(doc_id) AS keep_id, count(*) AS n_copies
          |        FROM fps GROUP BY fp),
@@ -3505,11 +775,66 @@ object Llm {
          |SELECT CAST(sz AS BIGINT) AS cluster_size,
          |       CAST(COUNT(*) AS BIGINT) AS n_clusters,
          |       CAST(sz * COUNT(*) AS BIGINT) AS n_docs
-         |FROM szs GROUP BY sz ORDER BY cluster_size""".stripMargin,
+         |FROM szs GROUP BY sz ORDER BY cluster_size""".stripMargin),
 
-    // the same wedge join + adjacency anti-join over the replayed
-    // co-purchase edge set
-    "llm_link_predict" ->
+    // k-core peel over the verified-pair graph of DISTINCT content:
+    // exact-collapse fronts the banding (copy cliques trivially satisfy
+    // any k AND densify candidates quadratically — measured 536 s at
+    // factor-100 on the raw form), so the 3 rounds of degree>=2
+    // filtering leave the genuinely dense near-dup cores (template
+    // farms); incidental one-off matches dissolve in round 1
+    Entry("llm_kcore", (s, d) => {
+      // localCheckpoint (r16 opt): survivors feed the candidate AND the
+      // verify chain — the lazy form re-derived the exact collapse per
+      // consumer (same shape as llm_dedup_venn)
+      val survivors = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
+      Dedup.kCore(Dedup.nearDupPairs(survivors), k = 2, rounds = 3).orderBy("doc_id")
+    },
+      // the three peel rounds replayed as chained CTEs over the exact-
+      // collapse survivors — a wrong degree count, a one-sided endpoint
+      // filter, or an extra/missing round all change the surviving
+      // multiset. Each edge CTE is read twice by the next round, so the
+      // ones that are re-read are MATERIALIZED: inlined, DuckDB re-derives
+      // the whole minhash + Jaccard stack per reference (100 s at sf0.01,
+      // past 20 GB of spill at sf0.1)
+      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
+         |${minhashCtes("docs2")},
+         |$jaccardCtes,
+         |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
+         |e0 AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
+         |       UNION SELECT doc_b, doc_a FROM pairs),
+         |k1 AS (SELECT src FROM e0 GROUP BY src HAVING count(*) >= 2),
+         |e1 AS MATERIALIZED (SELECT e.src, e.dst FROM e0 e JOIN k1 x ON e.src = x.src
+         |       JOIN k1 y ON e.dst = y.src),
+         |k2 AS (SELECT src FROM e1 GROUP BY src HAVING count(*) >= 2),
+         |e2 AS MATERIALIZED (SELECT e.src, e.dst FROM e1 e JOIN k2 x ON e.src = x.src
+         |       JOIN k2 y ON e.dst = y.src),
+         |k3 AS (SELECT src FROM e2 GROUP BY src HAVING count(*) >= 2),
+         |e3 AS (SELECT e.src, e.dst FROM e2 e JOIN k3 x ON e.src = x.src
+         |       JOIN k3 y ON e.dst = y.src)
+         |SELECT src AS doc_id, count(*) AS degree
+         |FROM e3 GROUP BY src ORDER BY doc_id""".stripMargin),
+
+    // link prediction by common-neighbor count: non-adjacent pairs two
+    // hops apart in the co-purchase graph (basket pairs bought together
+    // >= 3 times) — wedge join + adjacency anti-join, log-free on
+    // purpose. The co-purchase graph, not the near-dup one: duplicate
+    // clusters are complete cliques (every 2-hop pair already adjacent),
+    // so an open wedge cannot exist there by construction
+    Entry("llm_link_predict", (s, d) => {
+      val items = Tables.load(s, d, "lineitem")
+        .selectExpr("l_orderkey AS ok", "l_partkey AS pk").distinct()
+      val edges = items.as("x")
+        .join(items.as("y"), expr("x.ok = y.ok AND x.pk < y.pk"))
+        .selectExpr("x.pk AS doc_a", "y.pk AS doc_b")
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("c"))
+        .where(col("c") >= 3).select("doc_a", "doc_b")
+      Dedup.linkPredict(edges, minCommon = 1).orderBy("doc_a", "doc_b")
+    },
+      // the same wedge join + adjacency anti-join over the replayed
+      // co-purchase edge set
       """WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |               FROM lineitem),
         |und AS (SELECT a.pk AS a, b.pk AS b
@@ -3524,34 +849,13 @@ object Llm {
         |SELECT wg.u AS doc_a, wg.w AS doc_b,
         |       CAST(common_cnt AS BIGINT) AS common_cnt
         |FROM wg ANTI JOIN und ON wg.u = und.a AND wg.w = und.b
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
 
-    // the three peel rounds replayed as chained CTEs over the exact-
-    // collapse survivors — a wrong degree count, a one-sided endpoint
-    // filter, or an extra/missing round all change the surviving
-    // multiset
-    "llm_kcore" ->
-      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
-         |${minhashCtes("docs2")},
-         |$jaccardCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
-         |e0 AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |       UNION SELECT doc_b, doc_a FROM pairs),
-         |k1 AS (SELECT src FROM e0 GROUP BY src HAVING count(*) >= 2),
-         |e1 AS (SELECT e.src, e.dst FROM e0 e JOIN k1 x ON e.src = x.src
-         |       JOIN k1 y ON e.dst = y.src),
-         |k2 AS (SELECT src FROM e1 GROUP BY src HAVING count(*) >= 2),
-         |e2 AS (SELECT e.src, e.dst FROM e1 e JOIN k2 x ON e.src = x.src
-         |       JOIN k2 y ON e.dst = y.src),
-         |k3 AS (SELECT src FROM e2 GROUP BY src HAVING count(*) >= 2),
-         |e3 AS (SELECT e.src, e.dst FROM e2 e JOIN k3 x ON e.src = x.src
-         |       JOIN k3 y ON e.dst = y.src)
-         |SELECT src AS doc_id, count(*) AS degree
-         |FROM e3 GROUP BY src ORDER BY doc_id""".stripMargin,
-
-    "llm_dedup_cc" ->
+    // the full pipeline with transitive-closure semantics: only each
+    // duplicate component's minimum doc_id survives (vs dedupe()'s
+    // documented one-pass greedy rule)
+    Entry("llm_dedup_cc", (s, d) =>
+      Dedup.dedupeClustered(docs(s, d)).select("doc_id").orderBy("doc_id"),
       s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -3567,12 +871,16 @@ object Llm {
          |           HAVING doc_id <> min(lab))
          |SELECT doc_id FROM docs2
          |WHERE doc_id NOT IN (SELECT doc_id FROM nonrep)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // same reachability closure, but the survivor per component is the
-    // quality argmax (alnum ratio, token count, min doc_id) — the oracle
-    // recomputes the scoring and the window rule independently
-    "llm_dedup_quality" ->
+    // quality-ranked survivor selection: per duplicate component keep the
+    // cleanest/longest member (alnum ratio, then token count, then min
+    // doc_id) instead of dedupeClustered's arbitrary min-id rule
+    Entry("llm_dedup_quality", (s, d) =>
+      Dedup.dedupeByQuality(docs(s, d)).select("doc_id").orderBy("doc_id"),
+      // same reachability closure, but the survivor per component is the
+      // quality argmax (alnum ratio, token count, min doc_id) — the oracle
+      // recomputes the scoring and the window rule independently
       s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -3597,15 +905,16 @@ object Llm {
          |         WHERE rn = 1),
          |drops AS (SELECT doc_id FROM comp WHERE doc_id NOT IN (SELECT doc_id FROM best))
          |SELECT doc_id FROM docs2 WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    "llm_token_counts" ->
+    Entry("llm_token_counts", (s, d) =>
+      TextAnalysis.tokenCounts(docs(s, d)).orderBy("doc_id"),
       raw"""SELECT doc_id,
          |  CAST(length(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]', 0)) AS BIGINT) AS n_bpeish,
          |  CAST(length(list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+', 0))) AS BIGINT) AS n_unique_words
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "llm_lang_id" ->
+    Entry("llm_lang_id", (s, d) => TextAnalysis.langId(docs(s, d)).orderBy("doc_id"),
       s"""WITH markers(lang_cand, marker) AS (VALUES $markerValues),
          |toks AS (SELECT DISTINCT doc_id, tok
          |         FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents)),
@@ -3618,10 +927,21 @@ object Llm {
          |       CAST(COALESCE(b.hits, 0) AS BIGINT) AS hits
          |FROM documents d
          |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON b.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
 
-    // the same prediction chain joined back to the labeled column
-    "llm_langid_eval" ->
+    // language-ID EVAL against the fixture's labeled lang column: the
+    // confusion matrix that decides whether the n-gram heuristic is good
+    // enough to route documents — per (true, predicted) cell counts; the
+    // eval loop every classifier in the curation stack needs
+    Entry("llm_langid_eval", (s, d) => {
+      val dd = docs(s, d)
+      TextAnalysis.langId(dd)
+        .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .groupBy(col("lang").as("true_lang"), col("pred_lang"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy("true_lang", "pred_lang")
+    },
+      // the same prediction chain joined back to the labeled column
       s"""WITH markers(lang_cand, marker) AS (VALUES $markerValues),
          |toks AS (SELECT DISTINCT doc_id, tok
          |         FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents)),
@@ -3636,10 +956,46 @@ object Llm {
          |         LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
          |           ON b.doc_id = d.doc_id)
          |SELECT true_lang, pred_lang, count(*) AS n
-         |FROM pred GROUP BY 1, 2 ORDER BY true_lang, pred_lang""".stripMargin,
+         |FROM pred GROUP BY 1, 2 ORDER BY true_lang, pred_lang""".stripMargin),
 
-    // the same bigram stream rebuilt positionally, margins re-aggregated
-    "llm_kn_counts" ->
+    Entry("llm_fingerprint", (s, d) =>
+      TextAnalysis.fingerprint(docs(s, d)).orderBy("doc_id"),
+      s"""WITH n AS (SELECT doc_id, $NORM AS norm FROM documents),
+         |g AS (SELECT doc_id, md5(substr(norm, i, 8)) AS h
+         |      FROM n, unnest(generate_series(1, length(norm) - 7, 2)) AS u(i)
+         |      WHERE length(norm) >= 8)
+         |SELECT doc_id, array_to_string(list_sort(list(DISTINCT h))[1:4], ',') AS fp
+         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // Kneser–Ney count statistics — the per-word tables a KN-smoothed
+    // bigram LM is built from (SRILM/KenLM's count pass): corpus unigram
+    // tokens, continuation count N1+(·w) (distinct LEFT contexts — the
+    // KN lower-order numerator), and fan-out N1+(w·) (distinct followers
+    // — the back-off normalizer). Pure integer aggregates over the
+    // bigram stream, vocabulary-bounded shuffles, >=50-count floor keeps
+    // the output head-of-vocab sized
+    Entry("llm_kn_counts", (s, d) => {
+      val toks = docs(s, d).select(col("doc_id"),
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(size(col("w")) >= 2)
+      val bg = toks.select(explode(expr(
+          "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS c, w[i] AS t))"))
+          .as("b"))
+        .select(col("b.c").as("c"), col("b.t").as("t"))
+      val uni = toks.select(explode(col("w")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("n_unigram"))
+      val cont = bg.groupBy(col("t").as("word"))
+        .agg(countDistinct("c").as("n_ctx_left"))
+      val fol = bg.groupBy(col("c").as("word"))
+        .agg(countDistinct("t").as("n_follow"))
+      uni.join(cont, Seq("word"), "left").join(fol, Seq("word"), "left")
+        .where(col("n_unigram") >= 50)
+        .selectExpr("word", "CAST(n_unigram AS BIGINT) AS n_unigram",
+          "CAST(COALESCE(n_ctx_left, 0) AS BIGINT) AS n_ctx_left",
+          "CAST(COALESCE(n_follow, 0) AS BIGINT) AS n_follow")
+        .orderBy("word")
+    },
+      // the same bigram stream rebuilt positionally, margins re-aggregated
       s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents
          |           WHERE length(string_split($NORM, ' ')) >= 2),
          |bg AS (SELECT w[i] AS c, w[i+1] AS t
@@ -3653,10 +1009,34 @@ object Llm {
          |       CAST(COALESCE(f.n_follow, 0) AS BIGINT) AS n_follow
          |FROM uni u LEFT JOIN cont c USING (word) LEFT JOIN fol f USING (word)
          |WHERE u.n_unigram >= 50
-         |ORDER BY word""".stripMargin,
+         |ORDER BY word""".stripMargin),
 
-    // bigram-type count-of-counts + the absolute-discount formula
-    "llm_kn_discounts" ->
+    // the count-of-counts side of KN smoothing: how many bigram TYPES
+    // occur exactly 1..4 times (Good–Turing's n_k) and the standard
+    // absolute discount D = n1/(n1 + 2·n2) — integer bins, ONE final
+    // IEEE division at the edge
+    Entry("llm_kn_discounts", (s, d) => {
+      val toks = docs(s, d).select(
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(size(col("w")) >= 2)
+      toks.select(explode(expr(
+          "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS c, w[i] AS t))"))
+          .as("b"))
+        .groupBy(col("b.c"), col("b.t")).agg(count(lit(1)).as("cnt"))
+        .agg(
+          sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("n1"),
+          sum(when(col("cnt") === 2, 1L).otherwise(0L)).as("n2"),
+          sum(when(col("cnt") === 3, 1L).otherwise(0L)).as("n3"),
+          sum(when(col("cnt") === 4, 1L).otherwise(0L)).as("n4"),
+          count(lit(1)).as("n_types"))
+        .selectExpr("CAST(n1 AS BIGINT) AS n1", "CAST(n2 AS BIGINT) AS n2",
+          "CAST(n3 AS BIGINT) AS n3", "CAST(n4 AS BIGINT) AS n4",
+          "CAST(n_types AS BIGINT) AS n_types",
+          // NULLIF: a dup-heavy corpus can have NO 1/2-count bigram types
+          // at all (sf0.1 does) — ANSI division must yield NULL, not kill
+          "CAST(ROUND(CAST(n1 AS DOUBLE) / NULLIF(CAST(n1 + 2 * n2 AS DOUBLE), 0.0D), 6) AS DOUBLE) AS d_kn")
+    },
+      // bigram-type count-of-counts + the absolute-discount formula
       s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents
          |           WHERE length(string_split($NORM, ' ')) >= 2),
          |bt AS (SELECT w[i] AS c, w[i+1] AS t, count(*) AS cnt
@@ -3670,561 +1050,17 @@ object Llm {
          |       CAST(ROUND(CAST(count_if(cnt = 1) AS DOUBLE)
          |            / NULLIF(CAST(count_if(cnt = 1) + 2 * count_if(cnt = 2) AS DOUBLE), 0.0), 6)
          |            AS DOUBLE) AS d_kn
-         |FROM bt""".stripMargin,
+         |FROM bt""".stripMargin),
 
-    // the langid_eval prediction chain, folded to kappa's integer terms
-    "llm_langid_kappa" ->
-      s"""WITH markers(lang_cand, marker) AS (VALUES $markerValues),
-         |toks AS (SELECT DISTINCT doc_id, tok
-         |         FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents)),
-         |scores AS (SELECT doc_id, lang_cand, count(*) AS hits
-         |           FROM toks JOIN markers ON tok = marker GROUP BY 1, 2),
-         |best AS (SELECT doc_id, lang_cand AS pred_lang,
-         |                row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang_cand) AS rn
-         |         FROM scores),
-         |pred AS (SELECT d.doc_id, d.lang AS true_lang,
-         |                COALESCE(b.pred_lang, 'und') AS pred_lang
-         |         FROM documents d
-         |         LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
-         |           ON b.doc_id = d.doc_id),
-         |cells AS (SELECT true_lang, pred_lang, count(*) AS cnt
-         |          FROM pred GROUP BY 1, 2),
-         |st AS (SELECT SUM(cnt) AS n,
-         |              SUM(CASE WHEN true_lang = pred_lang THEN cnt ELSE 0 END) AS agree
-         |       FROM cells),
-         |rm AS (SELECT true_lang AS l, SUM(cnt) AS rn FROM cells GROUP BY 1),
-         |cm AS (SELECT pred_lang AS l, SUM(cnt) AS cn FROM cells GROUP BY 1),
-         |pe AS (SELECT SUM(rm.rn * cm.cn) AS pe_num FROM rm JOIN cm USING (l))
-         |SELECT CAST(st.n AS BIGINT) AS n, CAST(st.agree AS BIGINT) AS n_agree,
-         |       CAST(pe.pe_num AS BIGINT) AS pe_num,
-         |       CAST(ROUND(CAST(st.n * st.agree - pe.pe_num AS DOUBLE)
-         |            / CAST(st.n * st.n - pe.pe_num AS DOUBLE), 6) AS DOUBLE) AS kappa
-         |FROM st CROSS JOIN pe""".stripMargin,
-
-    // the identical literal-unrolled ratio chain — k! cancels, no
-    // integer product can overflow
-    "llm_pass_at_k" -> {
-      def passAt(k: Int): String = {
-        val ratio = (0 until k).map(j =>
-          s"(CAST(n - c - $j AS DOUBLE) / CAST(n - $j AS DOUBLE))")
-          .mkString(" * ")
-        s"""CAST(ROUND(CASE WHEN n - c < $k THEN CAST(1.0 AS DOUBLE)
-           |  ELSE 1.0 - $ratio
-           |  END, 6) AS DOUBLE) AS pass_at_$k""".stripMargin
-      }
-      s"""WITH tasks AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-         |                      CAST(count_if(o_orderstatus = 'F') AS BIGINT) AS c
-         |               FROM orders GROUP BY 1 HAVING count(*) >= 10)
-         |SELECT n, c, CAST(count(*) AS BIGINT) AS n_tasks,
-         |       ${passAt(1)}, ${passAt(5)}, ${passAt(10)}
-         |FROM tasks GROUP BY n, c ORDER BY n, c""".stripMargin
-    },
-
-    // the same windows, chunk md5s re-derived with 1-based list slices
-    "llm_chunk_dedup" ->
-      s"""WITH n AS (SELECT doc_id, source, string_split($NORM, ' ') AS w FROM documents),
-         |t AS (SELECT doc_id, source, w, length(w) AS nt FROM n
-         |      WHERE length(w) >= 1 AND w[1] <> ''),
-         |ch AS (SELECT source, md5(array_to_string(w[j*24+1 : j*24+32], ' ')) AS h
-         |       FROM t, unnest(generate_series(0,
-         |              CASE WHEN nt > 32 THEN (nt - 9) // 24 ELSE 0 END)) AS u(j))
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(count(DISTINCT h) AS BIGINT) AS n_distinct_chunks,
-         |       CAST((count(*) - count(DISTINCT h)) * 1000000 // count(*) AS BIGINT) AS dup_ppm
-         |FROM ch GROUP BY source ORDER BY source""".stripMargin,
-
-    // consecutive-chunk token-set Jaccard replayed over the exploded
-    // (chunk, token) join
-    "llm_topic_shifts" ->
-      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |t AS (SELECT doc_id, w, length(w) AS nt FROM n
-         |      WHERE length(w) > 32 AND w[1] <> ''),
-         |ch AS (SELECT doc_id, j, w[j*24+1 : j*24+32] AS cw
-         |       FROM t, unnest(generate_series(0, (nt - 9) // 24)) AS u(j)),
-         |tk AS (SELECT DISTINCT doc_id, j, tok
-         |       FROM (SELECT doc_id, j, unnest(cw) AS tok FROM ch)),
-         |sz AS (SELECT doc_id, j, count(*) AS n_tok FROM tk GROUP BY 1, 2),
-         |ov AS (SELECT a.doc_id, a.j, count(*) AS n_both
-         |       FROM tk a JOIN tk b ON b.doc_id = a.doc_id AND b.j = a.j + 1
-         |            AND b.tok = a.tok
-         |       GROUP BY 1, 2),
-         |pr AS (SELECT a.doc_id,
-         |              CAST(ROUND(CAST(COALESCE(o.n_both, 0) AS DOUBLE)
-         |                / (a.n_tok + b.n_tok - COALESCE(o.n_both, 0)), 6)
-         |                AS DOUBLE) AS jac
-         |       FROM sz a JOIN sz b ON b.doc_id = a.doc_id AND b.j = a.j + 1
-         |            LEFT JOIN ov o ON o.doc_id = a.doc_id AND o.j = a.j)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-         |       CAST(count_if(jac < 0.1) AS BIGINT) AS n_shifts,
-         |       CAST(MIN(jac) AS DOUBLE) AS min_jaccard
-         |FROM pr GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the same contrastive lift and rank window over unnested tokens
-    "llm_source_signature" ->
-      s"""WITH tk AS (SELECT source, term
-         |            FROM (SELECT d.source,
-         |                         unnest(string_split($NORM, ' ')) AS term
-         |                  FROM documents d)
-         |            WHERE term <> ''),
-         |bs AS (SELECT source, term, count(*) AS tf_s FROM tk GROUP BY 1, 2),
-         |tt AS (SELECT term, count(*) AS tf FROM tk GROUP BY 1),
-         |st AS (SELECT source, count(*) AS ts_tot FROM tk GROUP BY 1),
-         |gt AS (SELECT count(*) AS t_tot FROM tk),
-         |sc AS (SELECT b.source, b.term, b.tf_s,
-         |              b.tf_s * (gt.t_tot - st.ts_tot)
-         |                // ((tt.tf - b.tf_s + 1) * st.ts_tot) AS lift
-         |       FROM bs b JOIN tt USING (term) JOIN st USING (source)
-         |            CROSS JOIN gt
-         |       WHERE b.tf_s >= 10),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY source
-         |        ORDER BY lift DESC, tf_s DESC, term) AS rank FROM sc)
-         |SELECT source, CAST(rank AS INT) AS rank, term,
-         |       CAST(tf_s AS BIGINT) AS tf_s, CAST(lift AS BIGINT) AS lift
-         |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
-
-    // flat-window permutation replay (the two-phase prefix sum is
-    // pinned equivalent elsewhere), adjacency + expectation re-derived
-    "llm_shuffle_quality" ->
-      s"""WITH ord AS (SELECT doc_id,
-         |              row_number() OVER (
-         |                ORDER BY md5('sq1:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos
-         |            FROM documents),
-         |os AS (SELECT o.pos, d.source FROM ord o JOIN documents d USING (doc_id)),
-         |adj AS (SELECT a.source AS sa, b.source AS sb
-         |        FROM os a JOIN os b ON b.pos = a.pos + 1),
-         |obs AS (SELECT count(*) AS n_pairs, count_if(sa = sb) AS n_same FROM adj),
-         |ex AS (SELECT SUM(ns * (ns - 1)) AS same_num, SUM(ns) AS n
-         |       FROM (SELECT count(*) AS ns FROM documents GROUP BY source))
-         |SELECT CAST(obs.n_pairs AS BIGINT) AS n_pairs,
-         |       CAST(obs.n_same AS BIGINT) AS n_same,
-         |       CAST(obs.n_same * 1000000 // obs.n_pairs AS BIGINT) AS same_ppm_obs,
-         |       CAST(ex.same_num * 1000000 // (ex.n * (ex.n - 1)) AS BIGINT) AS same_ppm_exp
-         |FROM obs CROSS JOIN ex""".stripMargin,
-
-    // exact collapse + BOTH near-dup chains over the survivors: the
-    // recursive reach gives the MinHash transitive drops, the simhash
-    // banding chain the smaller-partner drops, one flag rollup
-    "llm_dedup_venn" ->
-      s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
-         |${minhashCtes("docs2")},
-         |$jaccardCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach AS (SELECT src AS doc_id, src AS lab FROM edges
-         |          UNION
-         |          SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc_id = e.dst),
-         |nonrep AS (SELECT doc_id FROM reach GROUP BY doc_id
-         |           HAVING doc_id <> min(lab)),
-         |toksv AS (SELECT DISTINCT doc_id, tok
-         |          FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM docs2)),
-         |thv AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toksv),
-         |votes AS (SELECT doc_id, b,
-         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-         |          FROM thv, unnest(generate_series(0, 59)) AS g(b)
-         |          GROUP BY doc_id, b),
-         |sim AS (SELECT doc_id,
-         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-         |        FROM votes GROUP BY doc_id),
-         |bandedv AS (SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS chunk
-         |            FROM sim, unnest(generate_series(0, 3)) AS g(band)),
-         |shd AS (SELECT DISTINCT b.doc_id
-         |        FROM bandedv a JOIN bandedv b
-         |          ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-         |        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |fl AS (SELECT k.doc_id,
-         |              CASE WHEN nr.doc_id IS NOT NULL THEN 1 ELSE 0 END AS mh,
-         |              CASE WHEN sd.doc_id IS NOT NULL THEN 1 ELSE 0 END AS sh2
-         |       FROM keep k LEFT JOIN nonrep nr ON nr.doc_id = k.doc_id
-         |            LEFT JOIN shd sd ON sd.doc_id = k.doc_id),
-         |ag AS (SELECT count(*) AS n_surv,
-         |              count_if(mh = 1 AND sh2 = 0) AS mo,
-         |              count_if(sh2 = 1 AND mh = 0) AS so,
-         |              count_if(mh = 1 AND sh2 = 1) AS bo
-         |       FROM fl),
-         |nd AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT CAST(nd.n_docs AS BIGINT) AS n_docs,
-         |       CAST(nd.n_docs - ag.n_surv AS BIGINT) AS n_exact_dropped,
-         |       CAST(ag.mo AS BIGINT) AS n_minhash_only,
-         |       CAST(ag.so AS BIGINT) AS n_simhash_only,
-         |       CAST(ag.bo AS BIGINT) AS n_both_near,
-         |       CAST(ag.n_surv - ag.mo - ag.so - ag.bo AS BIGINT) AS n_clean
-         |FROM ag CROSS JOIN nd""".stripMargin,
-
-    // the survivor simhash chain joined LEFT to exact-jaccard
-    // verification, radii via a 4-row theta join
-    "llm_simhash_pr_curve" ->
-      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
-         |${shingleCtes("docs2")},
-         |toksv AS (SELECT DISTINCT doc_id, tok
-         |          FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM docs2)),
-         |thv AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toksv),
-         |votes AS (SELECT doc_id, b,
-         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-         |          FROM thv, unnest(generate_series(0, 59)) AS g(b)
-         |          GROUP BY doc_id, b),
-         |sim AS (SELECT doc_id,
-         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-         |        FROM votes GROUP BY doc_id),
-         |bandedv AS (SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS chunk
-         |            FROM sim, unnest(generate_series(0, 3)) AS g(band)),
-         |sp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |              CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         |       FROM bandedv a JOIN bandedv b
-         |         ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-         |       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT p.doc_a, p.doc_b, count(*) AS n_both
-         |          FROM sp p JOIN sh x ON x.doc_id = p.doc_a
-         |               JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
-         |          GROUP BY 1, 2),
-         |jp AS (SELECT p.doc_a, p.doc_b, p.hamming,
-         |              COALESCE(CAST(ROUND(CAST(i.n_both AS DOUBLE)
-         |                / (sa.n_sh + sb.n_sh - i.n_both), 6) AS DOUBLE),
-         |                CAST(0.0 AS DOUBLE)) AS jac
-         |       FROM sp p LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-         |            LEFT JOIN sizes sa ON sa.doc_id = p.doc_a
-         |            LEFT JOIN sizes sb ON sb.doc_id = p.doc_b)
-         |SELECT CAST(r.radius AS INT) AS radius,
-         |       CAST(count(*) AS BIGINT) AS n_pairs,
-         |       CAST(count_if(jp.jac >= 0.6) AS BIGINT) AS n_verified,
-         |       CAST(count_if(jp.jac >= 0.6) * 1000000 // count(*) AS BIGINT) AS precision_ppm
-         |FROM (SELECT unnest(generate_series(0, 3)) AS radius) r
-         |JOIN jp ON jp.hamming <= r.radius
-         |GROUP BY r.radius ORDER BY radius""".stripMargin,
-
-    // low bits straight off the oracle's own minhash CTE over the
-    // exact-collapse survivors, exact jaccard from the shared
-    // verification CTEs
-    "llm_bbit_minhash" -> {
-      val bitCols = (0 until 8).map(i => s"h$i % 2 AS b$i").mkString(", ")
-      val matchSum = (0 until 8)
-        .map(i => s"CAST(a.b$i = b.b$i AS INT)").mkString(" + ")
-      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
-         |${minhashCtes("docs2")},
-         |$jaccardCtes,
-         |bits AS (SELECT doc_id, $bitCols FROM mh),
-         |nm AS (SELECT c.doc_a, c.doc_b, $matchSum AS nm
-         |       FROM cands c JOIN bits a ON a.doc_id = c.doc_a
-         |            JOIN bits b ON b.doc_id = c.doc_b)
-         |SELECT j.doc_a, j.doc_b, CAST(nm.nm AS INT) AS n_match,
-         |       CAST(ROUND(CAST(2 * nm.nm - 8 AS DOUBLE) / 8.0, 6) AS DOUBLE) AS j_est,
-         |       j.jaccard
-         |FROM jac j JOIN nm ON nm.doc_a = j.doc_a AND nm.doc_b = j.doc_b
-         |ORDER BY j.doc_a, j.doc_b""".stripMargin
-    },
-
-    // chunk windows replayed with 1-based inclusive list slices
-    "llm_passage_chunks" ->
-      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |t AS (SELECT doc_id, w, length(w) AS nt FROM n
-         |      WHERE length(w) >= 1 AND w[1] <> ''),
-         |ch AS (SELECT doc_id, j AS chunk_idx, j * 24 AS start_tok,
-         |              w[j * 24 + 1 : j * 24 + 32] AS cw
-         |       FROM t, unnest(generate_series(0,
-         |              CASE WHEN nt > 32 THEN (nt - 9) // 24 ELSE 0 END)) AS u(j))
-         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-         |       CAST(start_tok AS BIGINT) AS start_tok,
-         |       CAST(length(cw) AS BIGINT) AS chunk_len,
-         |       md5(array_to_string(cw, ' ')) AS chunk_md5
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "llm_fingerprint" ->
-      s"""WITH n AS (SELECT doc_id, $NORM AS norm FROM documents),
-         |g AS (SELECT doc_id, md5(substr(norm, i, 8)) AS h
-         |      FROM n, unnest(generate_series(1, length(norm) - 7, 2)) AS u(i)
-         |      WHERE length(norm) >= 8)
-         |SELECT doc_id, array_to_string(list_sort(list(DISTINCT h))[1:4], ',') AS fp
-         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "llm_decontaminate" ->
-      s"""WITH ${shingleCtes("documents")},
-         |ps AS (SELECT doc_id AS probe_id, shingle FROM sh WHERE doc_id < 50),
-         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh FROM ps GROUP BY 1),
-         |hits AS (SELECT d.doc_id, p.probe_id, count(*) AS n_shared
-         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
-         |         WHERE d.doc_id <> p.probe_id
-         |         GROUP BY 1, 2)
-         |SELECT h.doc_id, h.probe_id, h.n_shared,
-         |       CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) AS containment
-         |FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
-         |WHERE CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) >= 0.3
-         |ORDER BY h.doc_id, h.probe_id""".stripMargin,
-
-    // exact decontamination semantics — the bloom prefilter is invisible
-    // to the result by construction, so the oracle is containment() over
-    // the wider probe slice
-    "llm_bloom_decontaminate" ->
-      s"""WITH ${shingleCtes("documents")},
-         |ps AS (SELECT doc_id AS probe_id, shingle FROM sh WHERE doc_id < 80),
-         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh FROM ps GROUP BY 1),
-         |hits AS (SELECT d.doc_id, p.probe_id, count(*) AS n_shared
-         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
-         |         WHERE d.doc_id <> p.probe_id
-         |         GROUP BY 1, 2)
-         |SELECT h.doc_id, h.probe_id, h.n_shared,
-         |       CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) AS containment
-         |FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
-         |WHERE CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) >= 0.3
-         |ORDER BY h.doc_id, h.probe_id""".stripMargin,
-
-    // all three suites replayed over the one shared shingle CTE with
-    // per-suite thresholds in a dimension CTE — exact containment
-    // semantics, the bloom prefilter invisible by construction
-    "llm_decontam_suite" ->
-      s"""WITH ${shingleCtes("documents")},
-         |ps AS (SELECT CASE WHEN doc_id < 40 THEN 'qa'
-         |                   WHEN doc_id < 80 THEN 'math'
-         |                   ELSE 'code' END AS suite,
-         |              doc_id AS probe_id, shingle
-         |       FROM sh WHERE doc_id < 110),
-         |thr AS (SELECT 'qa' AS suite, CAST(0.3 AS DOUBLE) AS mc
-         |        UNION ALL SELECT 'math', CAST(0.5 AS DOUBLE)
-         |        UNION ALL SELECT 'code', CAST(0.2 AS DOUBLE)),
-         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh
-         |          FROM (SELECT DISTINCT probe_id, shingle FROM ps) GROUP BY 1),
-         |hits AS (SELECT d.doc_id, p.suite, p.probe_id, count(*) AS n_shared
-         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
-         |         WHERE d.doc_id <> p.probe_id
-         |         GROUP BY 1, 2, 3),
-         |sel AS (SELECT h.suite, h.doc_id, h.probe_id, h.n_shared, t.mc,
-         |               CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6)
-         |                    AS DOUBLE) AS containment
-         |        FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
-         |             JOIN thr t ON t.suite = h.suite)
-         |SELECT suite, doc_id, probe_id, n_shared, containment
-         |FROM sel WHERE containment >= mc
-         |ORDER BY suite, doc_id, probe_id""".stripMargin,
-
-    // the contribution expression is THE SAME STRING the Spark plan
-    // compiles (TextAnalysis.bm25Contribution) — one source of truth
-    // for literals and operator sequencing in both engines
-    "llm_bm25" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents),
-         |dlen AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-         |consts AS (SELECT count(*) AS n_docs, sum(dl) AS tot FROM dlen),
-         |tfreq AS (SELECT doc_id, tok, count(*) AS tf FROM toks
-         |          WHERE tok IN ('hash', 'join', 'window') GROUP BY 1, 2),
-         |dfreq AS (SELECT tok, count(*) AS df FROM tfreq GROUP BY 1),
-         |contrib AS (SELECT t.doc_id,
-         |                   ${TextAnalysis.bm25Contribution(1.2, 0.75)} AS c
-         |            FROM tfreq t JOIN dfreq USING (tok)
-         |                 JOIN dlen USING (doc_id) CROSS JOIN consts)
-         |SELECT doc_id, count(*) AS n_terms, CAST(SUM(c) AS DOUBLE) AS bm25
-         |FROM contrib GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "llm_domain_cap" ->
-      raw"""WITH q AS (
-         |  SELECT doc_id, source,
-         |         CAST(ROUND(CAST(length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
-         |              / NULLIF(length(text), 0), 6) AS DOUBLE) AS alnum
-         |  FROM documents),
-         |r AS (SELECT doc_id, source,
-         |             row_number() OVER (PARTITION BY source
-         |               ORDER BY alnum DESC NULLS LAST, doc_id) AS rn
-         |      FROM q)
-         |SELECT doc_id, source FROM r WHERE rn <= 8
-         |ORDER BY source, doc_id""".stripMargin,
-
-    "llm_chunk" ->
-      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, w, i AS chunk_idx,
-         |             w[i * 56 + 1 : i * 56 + 64] AS cw
-         |      FROM n, unnest(generate_series(0,
-         |             (GREATEST(length(w) - 64, 0) + 55) // 56)) AS u(i))
-         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-         |       CAST(length(cw) AS BIGINT) AS n_chunk_tokens,
-         |       md5(array_to_string(cw, ' ')) AS chunk_md5
-         |FROM g ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "llm_stratified_sample" ->
-      """SELECT doc_id, lang
-        |FROM (SELECT doc_id, lang,
-        |             row_number() OVER (PARTITION BY lang
-        |               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |      FROM documents) t
-        |WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin,
-
-    "llm_mixture_sample" ->
-      """WITH rates(source, keep_pct) AS (VALUES
-        |  ('src0', 100), ('src1', 50), ('src2', 25), ('src3', 10))
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN rates r ON d.source = r.source
-        |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < r.keep_pct
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "llm_hash_split" ->
-      s"""WITH b AS (SELECT doc_id,
-         |                  CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
-         |           FROM documents)
-         |SELECT doc_id, bucket,
-         |       CASE WHEN bucket < 90 THEN 'train'
-         |            WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    "llm_ngram_stats" ->
-      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
-         |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
-         |       WHERE length(w) >= 2)
-         |SELECT shingle, count(*) AS df
-         |FROM sh GROUP BY 1
-         |ORDER BY df DESC, shingle LIMIT 20""".stripMargin,
-
-    "llm_novelty" ->
-      s"""WITH ${shingleCtes("documents")},
-         |f AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
-         |pd AS (SELECT s.doc_id, count(*) AS n_shingles,
-         |              sum(CASE WHEN f.df <= 2 THEN 1 ELSE 0 END) AS n_rare
-         |       FROM sh s JOIN f USING (shingle) GROUP BY s.doc_id)
-         |SELECT d.doc_id,
-         |       CAST(COALESCE(pd.n_shingles, 0) AS BIGINT) AS n_shingles,
-         |       CAST(COALESCE(pd.n_rare, 0) AS BIGINT) AS n_rare,
-         |       CAST(ROUND(CAST(pd.n_rare AS DOUBLE) / NULLIF(pd.n_shingles, 0), 6) AS DOUBLE) AS rare_ratio
-         |FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "llm_token_diversity" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
-         |              FROM documents),
-         |tc AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
-         |a AS (SELECT doc_id, sum(cnt) AS n_tokens, count(*) AS n_distinct,
-         |             sum(cnt * cnt) AS s2
-         |      FROM tc GROUP BY 1)
-         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |       CAST(n_distinct AS BIGINT) AS n_distinct,
-         |       CAST(ROUND(1.0 - CAST(s2 AS DOUBLE)
-         |            / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)), 6)
-         |            AS DOUBLE) AS simpson,
-         |       CAST(ROUND(CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)
-         |            / CAST(s2 AS DOUBLE), 6) AS DOUBLE) AS eff_vocab
-         |FROM a ORDER BY doc_id""".stripMargin,
-
-    "llm_heavy_hitters" ->
-      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
-         |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
-         |       WHERE length(w) >= 2)
-         |SELECT shingle, count(*) AS df
-         |FROM sh GROUP BY 1 HAVING count(*) >= 35
-         |ORDER BY df DESC, shingle""".stripMargin,
-
-    "llm_cosine_topk" ->
-      s"""WITH pairs AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 5),
-         |ranked AS (SELECT probe_id, cand_id, cos,
-         |                  CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS INT) AS rank
-         |           FROM pairs)
-         |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
-         |ORDER BY probe_id, rank""".stripMargin,
-
-    // the same CASE ladder and integer fill arithmetic
-    "llm_length_buckets" ->
-      raw"""WITH t AS (SELECT doc_id,
-         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |b AS (SELECT doc_id, n_tok,
-         |             CASE WHEN n_tok <= 16 THEN 16
-         |                  WHEN n_tok <= 32 THEN 32
-         |                  WHEN n_tok <= 64 THEN 64
-         |                  WHEN n_tok <= 128 THEN 128
-         |                  WHEN n_tok <= 256 THEN 256
-         |                  WHEN n_tok <= 512 THEN 512
-         |                  ELSE 1024 END AS bucket
-         |      FROM t)
-         |SELECT CAST(bucket AS INT) AS bucket,
-         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
-         |       CAST(SUM(bucket - n_tok) AS BIGINT) AS pad_waste,
-         |       CAST((SUM(n_tok) * 1000000) // SUM(bucket) AS BIGINT) AS fill_ppm
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // the same four integer rules (DuckDB 'g' flag on the strip regex)
-    "llm_gopher_gate" ->
-      s"""WITH base AS (SELECT doc_id, text, n_chars,
-         |                     length(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g')) AS alnum
-         |              FROM documents),
-         |toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
-         |           SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
-         |           FROM documents) t
-         |         WHERE length(tok) > 0 GROUP BY doc_id, tok),
-         |rep AS (SELECT doc_id, SUM(tf) AS n_words, MAX(tf) AS max_tf
-         |        FROM toks GROUP BY doc_id)
-         |SELECT b.doc_id,
-         |       CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000 THEN 1 ELSE 0 END
-         |         + CASE WHEN 1000 * b.alnum >= 600 * b.n_chars THEN 2 ELSE 0 END
-         |         + CASE WHEN COALESCE(r.n_words, 0) BETWEEN 10 AND 5000 THEN 4 ELSE 0 END
-         |         + CASE WHEN COALESCE(5 * r.max_tf <= r.n_words, FALSE) THEN 8 ELSE 0 END
-         |         AS INT) AS rule_mask,
-         |       CAST(COALESCE(r.n_words, 0) AS BIGINT) AS n_words,
-         |       CAST(COALESCE(r.max_tf, 0) AS BIGINT) AS max_tf,
-         |       CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000
-         |                  AND 1000 * b.alnum >= 600 * b.n_chars
-         |                  AND COALESCE(r.n_words, 0) BETWEEN 10 AND 5000
-         |                  AND COALESCE(5 * r.max_tf <= r.n_words, FALSE)
-         |             THEN TRUE ELSE FALSE END AS BOOLEAN) AS kept
-         |FROM base b LEFT JOIN rep r ON r.doc_id = b.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    // the same √tokens shares with the source-ordered list fold
-    "llm_mixture_temperature" ->
-      raw"""WITH st AS (SELECT source,
-         |               SUM(CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT)) AS tokens
-         |             FROM documents GROUP BY source),
-         |sq AS (SELECT source, tokens, SQRT(CAST(tokens AS DOUBLE)) AS w FROM st),
-         |tot AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |                 list(w ORDER BY source)), (acc, x) -> acc + x) AS tw
-         |        FROM sq)
-         |SELECT source, CAST(tokens AS BIGINT) AS tokens,
-         |       CAST(FLOOR(w / tw * 1000000) AS BIGINT) AS share_ppm,
-         |       CAST(FLOOR(w / tw * 100000) AS BIGINT) AS quota_tokens
-         |FROM sq CROSS JOIN tot
-         |ORDER BY source""".stripMargin,
-
-    // the train-side counts joined LEFT onto the held-out bigrams; the
-    // hash-split bucket is the llm_hash_split idiom inline
-    "llm_lm_heldout" ->
-      s"""WITH tk AS (SELECT doc_id,
-         |              list_filter(string_split($NORM, ' '),
-         |                          w -> length(w) > 0) AS t,
-         |              CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
-         |            FROM documents),
-         |uni AS (SELECT w AS w1, count(*) AS c1
-         |        FROM (SELECT unnest(t) AS w FROM tk WHERE bucket < 90)
-         |        GROUP BY w),
-         |tbg AS (SELECT t[i] AS w1, t[i + 1] AS w2
-         |        FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
-         |        WHERE len(t) >= 2 AND bucket < 90),
-         |cbi AS (SELECT w1, w2, count(*) AS c12 FROM tbg GROUP BY w1, w2),
-         |ebg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] AS w1,
-         |               t[i + 1] AS w2
-         |        FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
-         |        WHERE len(t) >= 2 AND bucket >= 90),
-         |j AS (SELECT ebg.doc_id, ebg.pos, cbi.c12,
-         |             CASE WHEN cbi.c12 IS NULL OR uni.c1 IS NULL THEN CAST(0.0 AS DOUBLE)
-         |                  ELSE CAST(cbi.c12 AS DOUBLE) / CAST(uni.c1 AS DOUBLE) END AS p,
-         |             CASE WHEN cbi.c12 IS NULL THEN 1 ELSE 0 END AS oov
-         |      FROM ebg LEFT JOIN cbi ON ebg.w1 = cbi.w1 AND ebg.w2 = cbi.w2
-         |           LEFT JOIN uni ON ebg.w1 = uni.w1)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |       CAST(SUM(oov) AS BIGINT) AS n_oov,
-         |       CAST(SUM(CASE WHEN c12 IS NOT NULL AND c12 < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
-         |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |         list(p ORDER BY pos)), (acc, v) -> acc + v) / count(*), 6)
-         |         AS DOUBLE) AS avg_p
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // identical keyed-hash parity and integer flag arithmetic
-    "llm_watermark_detect" ->
+    // green-list watermark detection (Kirchenbauer-style): keyed-hash
+    // parity per adjacent token pair, one-proportion z against 1/2, the
+    // flag decided in pure integers ((2g-n)² > 16n) — no float decides
+    Entry("llm_watermark_detect", (s, d) =>
+      TextAnalysis.watermarkDetect(docs(s, d), "wm1")
+        .selectExpr("doc_id", "CAST(n_scored AS BIGINT) AS n_scored",
+          "CAST(n_green AS BIGINT) AS n_green", "z_green", "flagged")
+        .orderBy("doc_id"),
+      // identical keyed-hash parity and integer flag arithmetic
       s"""WITH tk AS (SELECT doc_id,
          |              list_filter(string_split($NORM, ' '),
          |                          w -> length(w) > 0) AS t
@@ -4244,12 +1080,29 @@ object Llm {
          |       (2 * n_green > n_scored AND
          |        (2 * n_green - n_scored) * (2 * n_green - n_scored)
          |          > 16 * n_scored) AS flagged
-         |FROM a ORDER BY doc_id""".stripMargin,
+         |FROM a ORDER BY doc_id""".stripMargin),
 
-    // interpolated KN with D=3/4 multiplied through to exact integer
-    // numerators/denominators — every CTE mirrors knScoreHeldOut's
-    // derivation from the ONE bigram-type table
-    "llm_kn_perplexity" ->
+    // the KN statistics composed into the actual smoothed LM (r14
+    // verdict #4): interpolated Kneser–Ney bigram model with the dyadic
+    // D=3/4 discount, trained on the hash-split train side, scoring the
+    // held-out side — P_KN as ONE IEEE division of exact int64 products
+    // per bigram, log-free per-doc outputs (see knScoreHeldOut scaladoc)
+    Entry("llm_kn_perplexity", (s, d) => {
+      val dd = docs(s, d)
+      val split = TextAnalysis.hashSplit(dd)
+      def part(cond: String) = dd.join(
+        split.where(cond).select("doc_id"), Seq("doc_id"))
+      TextAnalysis.knScoreHeldOut(
+          part("split <> 'train'"), part("split = 'train'"))
+        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
+          "CAST(n_oov AS BIGINT) AS n_oov",
+          "CAST(n_ctx_oov AS BIGINT) AS n_ctx_oov",
+          "avg_p_kn", "hard_frac_ppm")
+        .orderBy("doc_id")
+    },
+      // interpolated KN with D=3/4 multiplied through to exact integer
+      // numerators/denominators — every CTE mirrors knScoreHeldOut's
+      // derivation from the ONE bigram-type table
       s"""WITH tk AS (SELECT doc_id,
          |              list_filter(string_split($NORM, ' '),
          |                          w -> length(w) > 0) AS t,
@@ -4286,12 +1139,30 @@ object Llm {
          |         AS DOUBLE) AS avg_p_kn,
          |       CAST(FLOOR(SUM(CASE WHEN p < 0.0009765625 THEN 1 ELSE 0 END)
          |         * 1000000 / count(*)) AS BIGINT) AS hard_frac_ppm
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // identical trigram-type derivations; the exact integer products go
-    // through HUGEINT (Spark: DECIMAL(38,0)) and each P is the same
-    // single double division; fold in position order
-    "llm_kn3_perplexity" ->
+    // order-3 Kneser–Ney with bigram backoff (r15 verdict #5 — the
+    // KenLM-default order): one trigram-type aggregate feeds all four
+    // model tables; top-order products pass int64 so numerator and
+    // denominator are exact DECIMAL(38,0) (oracle: HUGEINT) and every
+    // P_KN3 is still ONE IEEE division (see kn3ScoreHeldOut scaladoc)
+    Entry("llm_kn3_perplexity", (s, d) => {
+      val dd = docs(s, d)
+      val split = TextAnalysis.hashSplit(dd)
+      def part(cond: String) = dd.join(
+        split.where(cond).select("doc_id"), Seq("doc_id"))
+      TextAnalysis.kn3ScoreHeldOut(
+          part("split <> 'train'"), part("split = 'train'"))
+        .selectExpr("doc_id", "CAST(n_trigrams AS BIGINT) AS n_trigrams",
+          "CAST(n_oov AS BIGINT) AS n_oov",
+          "CAST(n_ctx_oov AS BIGINT) AS n_ctx_oov",
+          "CAST(n_mid_oov AS BIGINT) AS n_mid_oov",
+          "avg_p_kn3", "hard_frac_ppm")
+        .orderBy("doc_id")
+    },
+      // identical trigram-type derivations; the exact integer products go
+      // through HUGEINT (Spark: DECIMAL(38,0)) and each P is the same
+      // single double division; fold in position order
       s"""WITH tk AS (SELECT doc_id,
          |              list_filter(string_split($NORM, ' '),
          |                          w -> length(w) > 0) AS t,
@@ -4348,11 +1219,1339 @@ object Llm {
          |         AS DOUBLE) AS avg_p_kn3,
          |       CAST(FLOOR(SUM(CASE WHEN p < 0.00006103515625 THEN 1 ELSE 0 END)
          |         * 1000000 / count(*)) AS BIGINT) AS hard_frac_ppm
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // train-side draft table (argmax with the same (cnt DESC, w2)
-    // tie-break) LEFT-joined onto the held-out bigram stream
-    "llm_draft_accept" ->
+    // chance-corrected rater agreement (Cohen's kappa) between the
+    // n-gram language-ID heuristic and the fixture's gold labels — the
+    // one-number upgrade over llm_langid_eval's raw confusion matrix:
+    // kappa = (N·agree − Σ_l row_l·col_l) / (N² − Σ_l row_l·col_l),
+    // every term an exact integer, ONE IEEE division at the edge. The
+    // margins are label-cardinality rows; the 1-row sides broadcast
+    Entry("llm_langid_kappa", (s, d) => {
+      val dd = docs(s, d)
+      val cells = TextAnalysis.langId(dd)
+        .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .groupBy(col("lang"), col("pred_lang"))
+        .agg(count(lit(1)).as("cnt"))
+      val stats = cells.agg(sum("cnt").as("n"),
+        sum(when(col("lang") === col("pred_lang"), col("cnt"))
+          .otherwise(0L)).as("agree"))
+      val pe = cells.groupBy(col("lang").as("l")).agg(sum("cnt").as("rn"))
+        .join(cells.groupBy(col("pred_lang").as("l")).agg(sum("cnt").as("cn")),
+          Seq("l"))
+        .agg(sum(expr("rn * cn")).as("pe_num"))
+      stats.crossJoin(broadcast(pe))
+        .selectExpr("CAST(n AS BIGINT) AS n",
+          "CAST(agree AS BIGINT) AS n_agree",
+          "CAST(pe_num AS BIGINT) AS pe_num",
+          "CAST(ROUND(CAST(n * agree - pe_num AS DOUBLE) / " +
+            "CAST(n * n - pe_num AS DOUBLE), 6) AS DOUBLE) AS kappa")
+    },
+      // the langid_eval prediction chain, folded to kappa's integer terms
+      s"""WITH markers(lang_cand, marker) AS (VALUES $markerValues),
+         |toks AS (SELECT DISTINCT doc_id, tok
+         |         FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents)),
+         |scores AS (SELECT doc_id, lang_cand, count(*) AS hits
+         |           FROM toks JOIN markers ON tok = marker GROUP BY 1, 2),
+         |best AS (SELECT doc_id, lang_cand AS pred_lang,
+         |                row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang_cand) AS rn
+         |         FROM scores),
+         |pred AS (SELECT d.doc_id, d.lang AS true_lang,
+         |                COALESCE(b.pred_lang, 'und') AS pred_lang
+         |         FROM documents d
+         |         LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
+         |           ON b.doc_id = d.doc_id),
+         |cells AS (SELECT true_lang, pred_lang, count(*) AS cnt
+         |          FROM pred GROUP BY 1, 2),
+         |st AS (SELECT SUM(cnt) AS n,
+         |              SUM(CASE WHEN true_lang = pred_lang THEN cnt ELSE 0 END) AS agree
+         |       FROM cells),
+         |rm AS (SELECT true_lang AS l, SUM(cnt) AS rn FROM cells GROUP BY 1),
+         |cm AS (SELECT pred_lang AS l, SUM(cnt) AS cn FROM cells GROUP BY 1),
+         |pe AS (SELECT SUM(rm.rn * cm.cn) AS pe_num FROM rm JOIN cm USING (l))
+         |SELECT CAST(st.n AS BIGINT) AS n, CAST(st.agree AS BIGINT) AS n_agree,
+         |       CAST(pe.pe_num AS BIGINT) AS pe_num,
+         |       CAST(ROUND(CAST(st.n * st.agree - pe.pe_num AS DOUBLE)
+         |            / CAST(st.n * st.n - pe.pe_num AS DOUBLE), 6) AS DOUBLE) AS kappa
+         |FROM st CROSS JOIN pe""".stripMargin),
+
+    // pass@k (the Codex-paper estimator) from per-task trial tallies:
+    // tasks = customers, trials = their orders, "pass" = status F.
+    // pass@k depends only on (n, c), so the output groups by that pair —
+    // compact at any scale — and the unbiased 1 − C(n−c,k)/C(n,k) is
+    // evaluated as the literal-unrolled RATIO CHAIN Π(n−c−j)/(n−j)
+    // (k! cancels): a fixed left-to-right IEEE tree shared verbatim
+    // with the oracle, overflow-free at ANY n (the raw integer products
+    // overflowed int64 at the 10× staging's ~400 trials/task)
+    Entry("llm_pass_at_k", (s, d) => {
+      val tasks = Tables.load(s, d, "orders")
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("c"))
+        .where(col("n") >= 10)
+      def passAt(k: Int): String = {
+        val ratio = (0 until k).map(j =>
+          s"(CAST(n - c - $j AS DOUBLE) / CAST(n - $j AS DOUBLE))")
+          .mkString(" * ")
+        s"""CAST(ROUND(CASE WHEN n - c < $k THEN CAST(1.0 AS DOUBLE)
+           |  ELSE 1.0 - $ratio
+           |  END, 6) AS DOUBLE) AS pass_at_$k""".stripMargin
+      }
+      tasks.groupBy("n", "c").agg(count(lit(1)).as("n_tasks"))
+        .selectExpr("CAST(n AS BIGINT) AS n", "CAST(c AS BIGINT) AS c",
+          "CAST(n_tasks AS BIGINT) AS n_tasks",
+          passAt(1), passAt(5), passAt(10))
+        .orderBy("n", "c")
+    },
+      // the identical literal-unrolled ratio chain — k! cancels, no
+      // integer product can overflow
+      {
+      def passAt(k: Int): String = {
+        val ratio = (0 until k).map(j =>
+          s"(CAST(n - c - $j AS DOUBLE) / CAST(n - $j AS DOUBLE))")
+          .mkString(" * ")
+        s"""CAST(ROUND(CASE WHEN n - c < $k THEN CAST(1.0 AS DOUBLE)
+           |  ELSE 1.0 - $ratio
+           |  END, 6) AS DOUBLE) AS pass_at_$k""".stripMargin
+      }
+      s"""WITH tasks AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
+         |                      CAST(count_if(o_orderstatus = 'F') AS BIGINT) AS c
+         |               FROM orders GROUP BY 1 HAVING count(*) >= 10)
+         |SELECT n, c, CAST(count(*) AS BIGINT) AS n_tasks,
+         |       ${passAt(1)}, ${passAt(5)}, ${passAt(10)}
+         |FROM tasks GROUP BY n, c ORDER BY n, c""".stripMargin
+    }),
+
+    // passage-level dedup rate (the RefinedWeb-style granularity between
+    // whole-document dedup and line dedup): per-source chunk counts vs
+    // distinct chunk md5s over the same 32/24 windows llm_passage_chunks
+    // emits — the number that says HOW MUCH of a source is recycled
+    // passages even when no two whole documents match
+    Entry("llm_chunk_dedup", (s, d) =>
+      docs(s, d).select(col("source"),
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(expr("size(w) >= 1 AND w[0] <> ''"))
+        .select(col("source"), explode(expr(
+          """transform(
+            |  sequence(0, CASE WHEN size(w) > 32 THEN (size(w) - 9) DIV 24
+            |                   ELSE 0 END),
+            |  j -> md5(array_join(slice(w, j * 24 + 1, 32), ' ')))"""
+            .stripMargin)).as("h"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_chunks"), countDistinct("h").as("n_distinct"))
+        .selectExpr("source", "CAST(n_chunks AS BIGINT) AS n_chunks",
+          "CAST(n_distinct AS BIGINT) AS n_distinct_chunks",
+          "CAST((n_chunks - n_distinct) * 1000000 DIV n_chunks AS BIGINT) AS dup_ppm")
+        .orderBy("source"),
+      // the same windows, chunk md5s re-derived with 1-based list slices
+      s"""WITH n AS (SELECT doc_id, source, string_split($NORM, ' ') AS w FROM documents),
+         |t AS (SELECT doc_id, source, w, length(w) AS nt FROM n
+         |      WHERE length(w) >= 1 AND w[1] <> ''),
+         |ch AS (SELECT source, md5(array_to_string(w[j*24+1 : j*24+32], ' ')) AS h
+         |       FROM t, unnest(generate_series(0,
+         |              CASE WHEN nt > 32 THEN (nt - 9) // 24 ELSE 0 END)) AS u(j))
+         |SELECT source, CAST(count(*) AS BIGINT) AS n_chunks,
+         |       CAST(count(DISTINCT h) AS BIGINT) AS n_distinct_chunks,
+         |       CAST((count(*) - count(DISTINCT h)) * 1000000 // count(*) AS BIGINT) AS dup_ppm
+         |FROM ch GROUP BY source ORDER BY source""".stripMargin),
+
+    // TextTiling-style topic segmentation signal: token-set Jaccard
+    // between CONSECUTIVE passage chunks of each document; a low-overlap
+    // boundary (<0.1) marks a topic shift — the split points a
+    // context-window packer should prefer. Exact integer overlaps via
+    // the exploded (chunk, token) join, one ROUND division per boundary
+    Entry("llm_topic_shifts", (s, d) => {
+      val ch = docs(s, d).select(col("doc_id"),
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(expr("size(w) > 32 AND w[0] <> ''"))
+        .select(col("doc_id"), posexplode(expr(
+          """transform(sequence(0, (size(w) - 9) DIV 24),
+            |  j -> slice(w, j * 24 + 1, 32))""".stripMargin))
+          .as(Seq("j", "cw")))
+      val tk = ch.select(col("doc_id"), col("j"), explode(col("cw")).as("tok"))
+        .distinct()
+      val sz = tk.groupBy("doc_id", "j").agg(count(lit(1)).as("n_tok"))
+      val ov = tk
+        .join(tk.select(col("doc_id"), (col("j") - 1).as("j"), col("tok")),
+          Seq("doc_id", "j", "tok"))
+        .groupBy("doc_id", "j").agg(count(lit(1)).as("n_both"))
+      val pairs = sz
+        .join(sz.select(col("doc_id"), (col("j") - 1).as("j"),
+          col("n_tok").as("n_next")), Seq("doc_id", "j"))
+        .join(ov, Seq("doc_id", "j"), "left")
+        .select(col("doc_id"), expr(
+          "CAST(ROUND(CAST(COALESCE(n_both, 0) AS DOUBLE) " +
+            "/ (n_tok + n_next - COALESCE(n_both, 0)), 6) AS DOUBLE)").as("jac"))
+      pairs.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("jac") < 0.1, 1L).otherwise(0L)).as("n_shifts"),
+          min("jac").as("min_jac"))
+        .selectExpr("doc_id", "CAST(n_pairs AS BIGINT) AS n_pairs",
+          "CAST(n_shifts AS BIGINT) AS n_shifts",
+          "CAST(min_jac AS DOUBLE) AS min_jaccard")
+        .orderBy("doc_id")
+    },
+      // consecutive-chunk token-set Jaccard replayed over the exploded
+      // (chunk, token) join
+      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |t AS (SELECT doc_id, w, length(w) AS nt FROM n
+         |      WHERE length(w) > 32 AND w[1] <> ''),
+         |ch AS (SELECT doc_id, j, w[j*24+1 : j*24+32] AS cw
+         |       FROM t, unnest(generate_series(0, (nt - 9) // 24)) AS u(j)),
+         |tk AS (SELECT DISTINCT doc_id, j, tok
+         |       FROM (SELECT doc_id, j, unnest(cw) AS tok FROM ch)),
+         |sz AS (SELECT doc_id, j, count(*) AS n_tok FROM tk GROUP BY 1, 2),
+         |ov AS (SELECT a.doc_id, a.j, count(*) AS n_both
+         |       FROM tk a JOIN tk b ON b.doc_id = a.doc_id AND b.j = a.j + 1
+         |            AND b.tok = a.tok
+         |       GROUP BY 1, 2),
+         |pr AS (SELECT a.doc_id,
+         |              CAST(ROUND(CAST(COALESCE(o.n_both, 0) AS DOUBLE)
+         |                / (a.n_tok + b.n_tok - COALESCE(o.n_both, 0)), 6)
+         |                AS DOUBLE) AS jac
+         |       FROM sz a JOIN sz b ON b.doc_id = a.doc_id AND b.j = a.j + 1
+         |            LEFT JOIN ov o ON o.doc_id = a.doc_id AND o.j = a.j)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
+         |       CAST(count_if(jac < 0.1) AS BIGINT) AS n_shifts,
+         |       CAST(MIN(jac) AS DOUBLE) AS min_jaccard
+         |FROM pr GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // per-source DISTINCTIVE-term signatures ("what makes src3 src3"):
+    // contrastive integer lift tf_s·(T−T_s) DIV ((tf−tf_s+1)·T_s) — the
+    // llm_pmi_collocations discipline applied source-vs-rest — top-5 per
+    // source via a rank window (WindowGroupLimit prunes below the sort).
+    // The corpus-profiling step before choosing mixture weights
+    Entry("llm_source_signature", (s, d) => {
+      val toks = docs(s, d).select(col("source"),
+          explode(expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')")).as("term"))
+        .where(col("term") =!= "")
+      val bySrc = toks.groupBy("source", "term").agg(count(lit(1)).as("tf_s"))
+      val tot = toks.groupBy("term").agg(count(lit(1)).as("tf"))
+      val sTot = toks.groupBy("source").agg(count(lit(1)).as("ts_tot"))
+      val gTot = toks.agg(count(lit(1)).as("t_tot"))
+      bySrc.join(tot, Seq("term")).join(sTot, Seq("source"))
+        .crossJoin(broadcast(gTot))
+        .where(col("tf_s") >= 10)
+        .withColumn("lift",
+          expr("tf_s * (t_tot - ts_tot) DIV ((tf - tf_s + 1) * ts_tot)"))
+        .withColumn("rank", expr(
+          "row_number() OVER (PARTITION BY source ORDER BY lift DESC, tf_s DESC, term)"))
+        .where(col("rank") <= 5)
+        .selectExpr("source", "CAST(rank AS INT) AS rank", "term",
+          "CAST(tf_s AS BIGINT) AS tf_s", "CAST(lift AS BIGINT) AS lift")
+        .orderBy("source", "rank")
+    },
+      // the same contrastive lift and rank window over unnested tokens
+      s"""WITH tk AS (SELECT source, term
+         |            FROM (SELECT d.source,
+         |                         unnest(string_split($NORM, ' ')) AS term
+         |                  FROM documents d)
+         |            WHERE term <> ''),
+         |bs AS (SELECT source, term, count(*) AS tf_s FROM tk GROUP BY 1, 2),
+         |tt AS (SELECT term, count(*) AS tf FROM tk GROUP BY 1),
+         |st AS (SELECT source, count(*) AS ts_tot FROM tk GROUP BY 1),
+         |gt AS (SELECT count(*) AS t_tot FROM tk),
+         |sc AS (SELECT b.source, b.term, b.tf_s,
+         |              b.tf_s * (gt.t_tot - st.ts_tot)
+         |                // ((tt.tf - b.tf_s + 1) * st.ts_tot) AS lift
+         |       FROM bs b JOIN tt USING (term) JOIN st USING (source)
+         |            CROSS JOIN gt
+         |       WHERE b.tf_s >= 10),
+         |r AS (SELECT *, row_number() OVER (PARTITION BY source
+         |        ORDER BY lift DESC, tf_s DESC, term) AS rank FROM sc)
+         |SELECT source, CAST(rank AS INT) AS rank, term,
+         |       CAST(tf_s AS BIGINT) AS tf_s, CAST(lift AS BIGINT) AS lift
+         |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin),
+
+    // training-order shuffle QUALITY audit: adjacent-position same-source
+    // rate of the seeded permutation vs the closed-form expectation for a
+    // uniform shuffle (Σ n_s(n_s−1) / N(N−1)) — the diagnostic that
+    // catches a broken shuffle (curriculum leakage: long same-source
+    // runs inflate gradient correlation). Observed count from ONE
+    // pos→pos+1 equi self-join of the two-phase permutation; both rates
+    // published as exact integer ppm
+    Entry("llm_shuffle_quality", (s, d) => {
+      val dd = docs(s, d)
+      val ord = TrainOrder.shuffleOrder(dd.select("doc_id"), "sq1")
+        .join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
+      val adj = ord.select(col("pos"), col("source").as("src_a"))
+        .join(ord.select((col("pos") - 1).as("pos"), col("source").as("src_b")),
+          Seq("pos"))
+      val obs = adj.agg(count(lit(1)).as("n_pairs"),
+        sum(when(col("src_a") === col("src_b"), 1L).otherwise(0L)).as("n_same"))
+      val exp = dd.groupBy("source").agg(count(lit(1)).as("ns"))
+        .agg(sum(expr("ns * (ns - 1)")).as("same_num"), sum("ns").as("n"))
+      obs.crossJoin(broadcast(exp))
+        .selectExpr("CAST(n_pairs AS BIGINT) AS n_pairs",
+          "CAST(n_same AS BIGINT) AS n_same",
+          "CAST(n_same * 1000000 DIV n_pairs AS BIGINT) AS same_ppm_obs",
+          "CAST(same_num * 1000000 DIV (n * (n - 1)) AS BIGINT) AS same_ppm_exp")
+    },
+      // flat-window permutation replay (the two-phase prefix sum is
+      // pinned equivalent elsewhere), adjacency + expectation re-derived
+      s"""WITH ord AS (SELECT doc_id,
+         |              row_number() OVER (
+         |                ORDER BY md5('sq1:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos
+         |            FROM documents),
+         |os AS (SELECT o.pos, d.source FROM ord o JOIN documents d USING (doc_id)),
+         |adj AS (SELECT a.source AS sa, b.source AS sb
+         |        FROM os a JOIN os b ON b.pos = a.pos + 1),
+         |obs AS (SELECT count(*) AS n_pairs, count_if(sa = sb) AS n_same FROM adj),
+         |ex AS (SELECT SUM(ns * (ns - 1)) AS same_num, SUM(ns) AS n
+         |       FROM (SELECT count(*) AS ns FROM documents GROUP BY source))
+         |SELECT CAST(obs.n_pairs AS BIGINT) AS n_pairs,
+         |       CAST(obs.n_same AS BIGINT) AS n_same,
+         |       CAST(obs.n_same * 1000000 // obs.n_pairs AS BIGINT) AS same_ppm_obs,
+         |       CAST(ex.same_num * 1000000 // (ex.n * (ex.n - 1)) AS BIGINT) AS same_ppm_exp
+         |FROM obs CROSS JOIN ex""".stripMargin),
+
+    // Venn census of the three dedup fronts — what each method catches
+    // that the others miss: exact collapse first (its drop count is the
+    // survivor complement), then BOTH near-dup methods run over the SAME
+    // exact survivors: MinHash+Jaccard transitive clusters drop non-rep
+    // members, simhash banding drops any doc with a smaller-id partner
+    // within Hamming<=3 (each method's own standard survivor rule).
+    // One integer row — the dashboard number that justifies running
+    // both lexical fronts
+    Entry("llm_dedup_venn", (s, d) => {
+      val dd = docs(s, d)
+      // localCheckpoint (r16 opt): the exact-survivor corpus feeds THREE
+      // chains (MinHash pairs, simhash banding, the flag frame) — the
+      // lazy form re-derived the scan+md5+collapse per consumer (17
+      // parquet scans / 60 Exchanges executed)
+      val survivors = Dedup.exactSurvivors(dd).localCheckpoint()
+      val mhPairs = Dedup.nearDupPairs(survivors)
+      val mhDropped = Dedup.dupClusters(mhPairs)
+        .where(col("doc_id") =!= col("cluster_rep")).select("doc_id")
+      val shDropped = Dedup.simhashCandidates(survivors)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val flags = survivors.select("doc_id")
+        .join(mhDropped.withColumn("mh", lit(1)), Seq("doc_id"), "left")
+        .join(shDropped.withColumn("sh", lit(1)), Seq("doc_id"), "left")
+        .agg(count(lit(1)).as("n_survivors"),
+          sum(when(col("mh").isNotNull && col("sh").isNull, 1L)
+            .otherwise(0L)).as("n_minhash_only"),
+          sum(when(col("sh").isNotNull && col("mh").isNull, 1L)
+            .otherwise(0L)).as("n_simhash_only"),
+          sum(when(col("sh").isNotNull && col("mh").isNotNull, 1L)
+            .otherwise(0L)).as("n_both_near"))
+      flags.crossJoin(broadcast(dd.agg(count(lit(1)).as("n_docs"))))
+        .selectExpr("CAST(n_docs AS BIGINT) AS n_docs",
+          "CAST(n_docs - n_survivors AS BIGINT) AS n_exact_dropped",
+          "CAST(n_minhash_only AS BIGINT) AS n_minhash_only",
+          "CAST(n_simhash_only AS BIGINT) AS n_simhash_only",
+          "CAST(n_both_near AS BIGINT) AS n_both_near",
+          "CAST(n_survivors - n_minhash_only - n_simhash_only - n_both_near AS BIGINT) AS n_clean")
+    },
+      // exact collapse + BOTH near-dup chains over the survivors: the
+      // recursive reach gives the MinHash transitive drops, the simhash
+      // banding chain the smaller-partner drops, one flag rollup
+      s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
+         |${minhashCtes("docs2")},
+         |$jaccardCtes,
+         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
+         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+         |          UNION SELECT doc_b, doc_a FROM pairs),
+         |reach AS (SELECT src AS doc_id, src AS lab FROM edges
+         |          UNION
+         |          SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc_id = e.dst),
+         |nonrep AS (SELECT doc_id FROM reach GROUP BY doc_id
+         |           HAVING doc_id <> min(lab)),
+         |toksv AS (SELECT DISTINCT doc_id, tok
+         |          FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM docs2)),
+         |thv AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toksv),
+         |votes AS (SELECT doc_id, b,
+         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
+         |          FROM thv, unnest(generate_series(0, 59)) AS g(b)
+         |          GROUP BY doc_id, b),
+         |sim AS (SELECT doc_id,
+         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
+         |        FROM votes GROUP BY doc_id),
+         |bandedv AS (SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS chunk
+         |            FROM sim, unnest(generate_series(0, 3)) AS g(band)),
+         |shd AS (SELECT DISTINCT b.doc_id
+         |        FROM bandedv a JOIN bandedv b
+         |          ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
+         |        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+         |fl AS (SELECT k.doc_id,
+         |              CASE WHEN nr.doc_id IS NOT NULL THEN 1 ELSE 0 END AS mh,
+         |              CASE WHEN sd.doc_id IS NOT NULL THEN 1 ELSE 0 END AS sh2
+         |       FROM keep k LEFT JOIN nonrep nr ON nr.doc_id = k.doc_id
+         |            LEFT JOIN shd sd ON sd.doc_id = k.doc_id),
+         |ag AS (SELECT count(*) AS n_surv,
+         |              count_if(mh = 1 AND sh2 = 0) AS mo,
+         |              count_if(sh2 = 1 AND mh = 0) AS so,
+         |              count_if(mh = 1 AND sh2 = 1) AS bo
+         |       FROM fl),
+         |nd AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT CAST(nd.n_docs AS BIGINT) AS n_docs,
+         |       CAST(nd.n_docs - ag.n_surv AS BIGINT) AS n_exact_dropped,
+         |       CAST(ag.mo AS BIGINT) AS n_minhash_only,
+         |       CAST(ag.so AS BIGINT) AS n_simhash_only,
+         |       CAST(ag.bo AS BIGINT) AS n_both_near,
+         |       CAST(ag.n_surv - ag.mo - ag.so - ag.bo AS BIGINT) AS n_clean
+         |FROM ag CROSS JOIN nd""".stripMargin),
+
+    // simhash banding precision sweep — which Hamming radius is worth
+    // it: candidates at radius<=r (exact-collapse survivors, the banded
+    // join) verified by exact shingle Jaccard>=0.6; pairs that share no
+    // shingle verify at 0 (LEFT join, COALESCE — the inner jaccard join
+    // would silently overstate precision). Radii expand via a broadcast
+    // 4-row theta join — never a per-radius rescan
+    Entry("llm_simhash_pr_curve", (s, d) => {
+      // localCheckpoint (r16 opt): the exact-survivor corpus feeds BOTH
+      // the simhash fingerprint chain and the jaccard verify chain, and
+      // the candidate-pair set feeds BOTH the radius census and the
+      // verify join — the lazy form re-derived each per consumer (31
+      // parquet scans / 119 Exchanges in the executed plan)
+      val dd = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
+      val sp = Dedup.simhashCandidates(dd).localCheckpoint()
+      val jac = Dedup.jaccard(dd, sp.select("doc_a", "doc_b"))
+      val pairs = sp.join(jac, Seq("doc_a", "doc_b"), "left")
+        .select(col("hamming"), coalesce(col("jaccard"), lit(0.0)).as("jac"))
+      val radii = s.range(0, 4).select(col("id").as("radius"))
+      pairs.join(broadcast(radii), expr("hamming <= radius"))
+        .groupBy("radius")
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("jac") >= 0.6, 1L).otherwise(0L)).as("n_verified"))
+        .selectExpr("CAST(radius AS INT) AS radius",
+          "CAST(n_pairs AS BIGINT) AS n_pairs",
+          "CAST(n_verified AS BIGINT) AS n_verified",
+          "CAST(n_verified * 1000000 DIV n_pairs AS BIGINT) AS precision_ppm")
+        .orderBy("radius")
+    },
+      // the survivor simhash chain joined LEFT to exact-jaccard
+      // verification, radii via a 4-row theta join
+      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
+         |${shingleCtes("docs2")},
+         |toksv AS (SELECT DISTINCT doc_id, tok
+         |          FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM docs2)),
+         |thv AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toksv),
+         |votes AS (SELECT doc_id, b,
+         |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
+         |          FROM thv, unnest(generate_series(0, 59)) AS g(b)
+         |          GROUP BY doc_id, b),
+         |sim AS (SELECT doc_id,
+         |               CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
+         |        FROM votes GROUP BY doc_id),
+         |bandedv AS (SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS chunk
+         |            FROM sim, unnest(generate_series(0, 3)) AS g(band)),
+         |sp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |              CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+         |       FROM bandedv a JOIN bandedv b
+         |         ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id
+         |       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+         |inter AS (SELECT p.doc_a, p.doc_b, count(*) AS n_both
+         |          FROM sp p JOIN sh x ON x.doc_id = p.doc_a
+         |               JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
+         |          GROUP BY 1, 2),
+         |jp AS (SELECT p.doc_a, p.doc_b, p.hamming,
+         |              COALESCE(CAST(ROUND(CAST(i.n_both AS DOUBLE)
+         |                / (sa.n_sh + sb.n_sh - i.n_both), 6) AS DOUBLE),
+         |                CAST(0.0 AS DOUBLE)) AS jac
+         |       FROM sp p LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+         |            LEFT JOIN sizes sa ON sa.doc_id = p.doc_a
+         |            LEFT JOIN sizes sb ON sb.doc_id = p.doc_b)
+         |SELECT CAST(r.radius AS INT) AS radius,
+         |       CAST(count(*) AS BIGINT) AS n_pairs,
+         |       CAST(count_if(jp.jac >= 0.6) AS BIGINT) AS n_verified,
+         |       CAST(count_if(jp.jac >= 0.6) * 1000000 // count(*) AS BIGINT) AS precision_ppm
+         |FROM (SELECT unnest(generate_series(0, 3)) AS radius) r
+         |JOIN jp ON jp.hamming <= r.radius
+         |GROUP BY r.radius ORDER BY radius""".stripMargin),
+
+    // b-bit MinHash (Li & König 2010) at b=1: keep only the LOW BIT of
+    // each of the 8 minhash values — 1/64th the signature storage — and
+    // estimate Jaccard from the bit-collision count as ĵ = 2c − 1 (the
+    // r→0 form; a non-matching pair still collides half the time by
+    // chance). Published beside the exact shingle Jaccard on the SAME
+    // banding candidates over exact-collapse SURVIVORS (copies share
+    // every minhash — raw candidates go quadratic per exact class,
+    // measured 6× super-linear at the 10× staging), so the entry IS the
+    // estimator-vs-truth audit; integer bit matches, one ROUND division
+    Entry("llm_bbit_minhash", (s, d) => {
+      // localCheckpoint (r16 opt): candidates feed the estimator join and
+      // the exact verify, the bit table joins twice (a/b sides) — both
+      // are pair/signature-sized. The survivor corpus itself stays lazy:
+      // checkpointing it was A/B'd and lost (2.29 → 2.58 s) — this entry
+      // derives the corpus only thrice and the text materialization costs
+      // more than the re-derives.
+      val dd = Dedup.exactSurvivors(docs(s, d))
+      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
+        .localCheckpoint()
+      val bits = Dedup.minhash(dd).select(
+        col("doc_id") +: (0 until 8).map(i => expr(s"h$i % 2").as(s"b$i")): _*)
+        .localCheckpoint()
+      val bitsA = bits.toDF("doc_a" +: (0 until 8).map(i => s"ab$i"): _*)
+      val bitsB = bits.toDF("doc_b" +: (0 until 8).map(i => s"bb$i"): _*)
+      val matchExpr = (0 until 8)
+        .map(i => s"CAST(ab$i = bb$i AS INT)").mkString(" + ")
+      val est = cand.join(bitsA, Seq("doc_a")).join(bitsB, Seq("doc_b"))
+        .select(col("doc_a"), col("doc_b"), expr(matchExpr).as("nm"))
+      Dedup.jaccard(dd, cand).join(est, Seq("doc_a", "doc_b"))
+        .selectExpr("doc_a", "doc_b", "CAST(nm AS INT) AS n_match",
+          "CAST(ROUND(CAST(2 * nm - 8 AS DOUBLE) / 8.0, 6) AS DOUBLE) AS j_est",
+          "jaccard")
+        .orderBy("doc_a", "doc_b")
+    },
+      // low bits straight off the oracle's own minhash CTE over the
+      // exact-collapse survivors, exact jaccard from the shared
+      // verification CTEs
+      {
+      val bitCols = (0 until 8).map(i => s"h$i % 2 AS b$i").mkString(", ")
+      val matchSum = (0 until 8)
+        .map(i => s"CAST(a.b$i = b.b$i AS INT)").mkString(" + ")
+      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
+         |${minhashCtes("docs2")},
+         |$jaccardCtes,
+         |bits AS (SELECT doc_id, $bitCols FROM mh),
+         |nm AS (SELECT c.doc_a, c.doc_b, $matchSum AS nm
+         |       FROM cands c JOIN bits a ON a.doc_id = c.doc_a
+         |            JOIN bits b ON b.doc_id = c.doc_b)
+         |SELECT j.doc_a, j.doc_b, CAST(nm.nm AS INT) AS n_match,
+         |       CAST(ROUND(CAST(2 * nm.nm - 8 AS DOUBLE) / 8.0, 6) AS DOUBLE) AS j_est,
+         |       j.jaccard
+         |FROM jac j JOIN nm ON nm.doc_a = j.doc_a AND nm.doc_b = j.doc_b
+         |ORDER BY j.doc_a, j.doc_b""".stripMargin
+    }),
+
+    // RAG-style passage chunking: fixed 32-token windows at stride 24
+    // (8-token overlap), per-chunk md5 over the joined tokens — the
+    // ingestion step between documents and an embedding index. Pure
+    // per-row positional expression work (one Generate per doc), no
+    // corpus state; the trailing partial window is kept, the chunk
+    // count is the closed form 1 + ceil((n−32)/24)
+    Entry("llm_passage_chunks", (s, d) =>
+      docs(s, d).select(col("doc_id"),
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(expr("size(w) >= 1 AND w[0] <> ''"))
+        .select(col("doc_id"), expr("size(w)").as("n_toks"),
+          posexplode(expr(
+            """transform(
+              |  sequence(0, CASE WHEN size(w) > 32 THEN (size(w) - 9) DIV 24
+              |                   ELSE 0 END),
+              |  j -> struct(j * 24 AS st,
+              |              size(slice(w, j * 24 + 1, 32)) AS len,
+              |              md5(array_join(slice(w, j * 24 + 1, 32), ' ')) AS h))"""
+              .stripMargin)).as(Seq("chunk_idx", "ch")))
+        .selectExpr("doc_id", "CAST(chunk_idx AS INT) AS chunk_idx",
+          "CAST(ch.st AS BIGINT) AS start_tok",
+          "CAST(ch.len AS BIGINT) AS chunk_len", "ch.h AS chunk_md5")
+        .orderBy("doc_id", "chunk_idx"),
+      // chunk windows replayed with 1-based inclusive list slices
+      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |t AS (SELECT doc_id, w, length(w) AS nt FROM n
+         |      WHERE length(w) >= 1 AND w[1] <> ''),
+         |ch AS (SELECT doc_id, j AS chunk_idx, j * 24 AS start_tok,
+         |              w[j * 24 + 1 : j * 24 + 32] AS cw
+         |       FROM t, unnest(generate_series(0,
+         |              CASE WHEN nt > 32 THEN (nt - 9) // 24 ELSE 0 END)) AS u(j))
+         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
+         |       CAST(start_tok AS BIGINT) AS start_tok,
+         |       CAST(length(cw) AS BIGINT) AS chunk_len,
+         |       md5(array_to_string(cw, ' ')) AS chunk_md5
+         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
+
+    // decontamination: the first 50 documents play the benchmark set; any
+    // corpus doc sharing >= 30% of a probe's 3-word shingles is flagged
+    // (this probe range includes genuine plants: probes 31/44 sit verbatim
+    // inside other fixture docs — containment 1.0 — so the entry is
+    // non-empty and exercises the exact case the operator exists for)
+    Entry("llm_decontaminate", (s, d) => {
+      val dd = docs(s, d)
+      Dedup.containment(dd, dd.where("doc_id < 50"), minContainment = 0.3)
+        .orderBy("doc_id", "probe_id")
+    },
+      s"""WITH ${shingleCtes("documents")},
+         |ps AS (SELECT doc_id AS probe_id, shingle FROM sh WHERE doc_id < 50),
+         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh FROM ps GROUP BY 1),
+         |hits AS (SELECT d.doc_id, p.probe_id, count(*) AS n_shared
+         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
+         |         WHERE d.doc_id <> p.probe_id
+         |         GROUP BY 1, 2)
+         |SELECT h.doc_id, h.probe_id, h.n_shared,
+         |       CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) AS containment
+         |FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
+         |WHERE CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) >= 0.3
+         |ORDER BY h.doc_id, h.probe_id""".stripMargin),
+
+    // the large-probe-set decontamination path: Bloom prefilter on the
+    // corpus-shingle stream + exact confirm join — bit-identical result
+    // to containment() at any fpp (the oracle recomputes the EXACT
+    // semantics with no bloom at all, so a prefilter that dropped a true
+    // hit could never hash-match); wider probe slice than
+    // llm_decontaminate so the two entries' outputs differ
+    Entry("llm_bloom_decontaminate", (s, d) => {
+      val dd = docs(s, d)
+      Dedup.containmentBloom(dd, dd.where("doc_id < 80"), minContainment = 0.3)
+        .orderBy("doc_id", "probe_id")
+    },
+      // exact decontamination semantics — the bloom prefilter is invisible
+      // to the result by construction, so the oracle is containment() over
+      // the wider probe slice
+      s"""WITH ${shingleCtes("documents")},
+         |ps AS (SELECT doc_id AS probe_id, shingle FROM sh WHERE doc_id < 80),
+         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh FROM ps GROUP BY 1),
+         |hits AS (SELECT d.doc_id, p.probe_id, count(*) AS n_shared
+         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
+         |         WHERE d.doc_id <> p.probe_id
+         |         GROUP BY 1, 2)
+         |SELECT h.doc_id, h.probe_id, h.n_shared,
+         |       CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) AS containment
+         |FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
+         |WHERE CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6) AS DOUBLE) >= 0.3
+         |ORDER BY h.doc_id, h.probe_id""".stripMargin),
+
+    // MULTI-SUITE decontamination sweep (r10 verdict #7): three benchmark
+    // suites, each with its own probe slice and containment threshold,
+    // checked in ONE corpus pass — suite tags and thresholds fan out
+    // post-count on broadcast dimension tables, so the corpus side is
+    // scanned once no matter how many suites ride along (PlanShapeSpec
+    // gates the scan count against the suite count)
+    Entry("llm_decontam_suite", (s, d) => {
+      import s.implicits._
+      val dd = docs(s, d)
+      val probes = dd.where("doc_id < 110").withColumn("suite", expr(
+        "CASE WHEN doc_id < 40 THEN 'qa' WHEN doc_id < 80 THEN 'math' ELSE 'code' END"))
+      val thr = Seq(("qa", 0.3), ("math", 0.5), ("code", 0.2))
+        .toDF("suite", "min_containment")
+      Dedup.containmentBloomSuites(dd, probes, thr)
+        .orderBy("suite", "doc_id", "probe_id")
+    },
+      // all three suites replayed over the one shared shingle CTE with
+      // per-suite thresholds in a dimension CTE — exact containment
+      // semantics, the bloom prefilter invisible by construction
+      s"""WITH ${shingleCtes("documents")},
+         |ps AS (SELECT CASE WHEN doc_id < 40 THEN 'qa'
+         |                   WHEN doc_id < 80 THEN 'math'
+         |                   ELSE 'code' END AS suite,
+         |              doc_id AS probe_id, shingle
+         |       FROM sh WHERE doc_id < 110),
+         |thr AS (SELECT 'qa' AS suite, CAST(0.3 AS DOUBLE) AS mc
+         |        UNION ALL SELECT 'math', CAST(0.5 AS DOUBLE)
+         |        UNION ALL SELECT 'code', CAST(0.2 AS DOUBLE)),
+         |sizes AS (SELECT probe_id, count(*) AS n_probe_sh
+         |          FROM (SELECT DISTINCT probe_id, shingle FROM ps) GROUP BY 1),
+         |hits AS (SELECT d.doc_id, p.suite, p.probe_id, count(*) AS n_shared
+         |         FROM sh d JOIN ps p ON d.shingle = p.shingle
+         |         WHERE d.doc_id <> p.probe_id
+         |         GROUP BY 1, 2, 3),
+         |sel AS (SELECT h.suite, h.doc_id, h.probe_id, h.n_shared, t.mc,
+         |               CAST(ROUND(CAST(h.n_shared AS DOUBLE) / s.n_probe_sh, 6)
+         |                    AS DOUBLE) AS containment
+         |        FROM hits h JOIN sizes s ON s.probe_id = h.probe_id
+         |             JOIN thr t ON t.suite = h.suite)
+         |SELECT suite, doc_id, probe_id, n_shared, containment
+         |FROM sel WHERE containment >= mc
+         |ORDER BY suite, doc_id, probe_id""".stripMargin),
+
+    // per-domain quota: at most 8 docs per source, best alnum_ratio first
+    // (doc_id tie-break) — the FineWeb "no domain dominates" cap
+    Entry("llm_domain_cap", (s, d) =>
+      TextAnalysis.domainCap(docs(s, d), maxPerKey = 8)
+        .select("doc_id", "source").orderBy("source", "doc_id"),
+      raw"""WITH q AS (
+         |  SELECT doc_id, source,
+         |         CAST(ROUND(CAST(length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
+         |              / NULLIF(length(text), 0), 6) AS DOUBLE) AS alnum
+         |  FROM documents),
+         |r AS (SELECT doc_id, source,
+         |             row_number() OVER (PARTITION BY source
+         |               ORDER BY alnum DESC NULLS LAST, doc_id) AS rn
+         |      FROM q)
+         |SELECT doc_id, source FROM r WHERE rn <= 8
+         |ORDER BY source, doc_id""".stripMargin),
+
+    // context-window packing: 64-token chunks advancing by 56 (8 overlap)
+    Entry("llm_chunk", (s, d) =>
+      TextAnalysis.chunk(docs(s, d), chunkTokens = 64, overlap = 8)
+        .orderBy("doc_id", "chunk_idx"),
+      s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |g AS (SELECT doc_id, w, i AS chunk_idx,
+         |             w[i * 56 + 1 : i * 56 + 64] AS cw
+         |      FROM n, unnest(generate_series(0,
+         |             (GREATEST(length(w) - 64, 0) + 55) // 56)) AS u(i))
+         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
+         |       CAST(length(cw) AS BIGINT) AS n_chunk_tokens,
+         |       md5(array_to_string(cw, ' ')) AS chunk_md5
+         |FROM g ORDER BY doc_id, chunk_idx""".stripMargin),
+
+    // 5 docs per language, chosen by content-hash order — deterministic
+    // stratified sampling (WindowGroupLimit plan: rank prunes pre-shuffle)
+    Entry("llm_stratified_sample", (s, d) =>
+      TextAnalysis.stratifiedSample(docs(s, d), "lang", 5)
+        .select("doc_id", "lang").orderBy("lang", "doc_id"),
+      """SELECT doc_id, lang
+        |FROM (SELECT doc_id, lang,
+        |             row_number() OVER (PARTITION BY lang
+        |               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        |      FROM documents) t
+        |WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin),
+
+    // training-mix rebalance: per-source keep rates by id-hash bucket;
+    // sources absent from the rate table drop out entirely
+    Entry("llm_mixture_sample", (s, d) =>
+      TextAnalysis.mixtureSample(docs(s, d),
+          Map("src0" -> 100, "src1" -> 50, "src2" -> 25, "src3" -> 10))
+        .select("doc_id", "source").orderBy("doc_id"),
+      """WITH rates(source, keep_pct) AS (VALUES
+        |  ('src0', 100), ('src1', 50), ('src2', 25), ('src3', 10))
+        |SELECT d.doc_id, d.source
+        |FROM documents d JOIN rates r ON d.source = r.source
+        |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < r.keep_pct
+        |ORDER BY d.doc_id""".stripMargin),
+
+    Entry("llm_hash_split", (s, d) =>
+      TextAnalysis.hashSplit(docs(s, d)).orderBy("doc_id"),
+      s"""WITH b AS (SELECT doc_id,
+         |                  CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
+         |           FROM documents)
+         |SELECT doc_id, bucket,
+         |       CASE WHEN bucket < 90 THEN 'train'
+         |            WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
+         |FROM b ORDER BY doc_id""".stripMargin),
+
+    // token-budget shard packing (two-phase prefix sum — the global
+    // cumsum never runs as a single-task window; plan-asserted). 4096
+    // docs per bucket, 2^16 tokens per shard
+    Entry("llm_pack_shards", (s, d) =>
+      TextAnalysis.packShards(docs(s, d)).orderBy("doc_id"),
+      // the oracle computes the SAME prefix sum as one flat window — the
+      // differential proves the two-phase decomposition stitches exactly
+      raw"""WITH t AS (SELECT doc_id,
+         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |c AS (SELECT doc_id, n_tokens,
+         |             sum(n_tokens) OVER (ORDER BY doc_id
+         |                                 ROWS UNBOUNDED PRECEDING) AS cum_tokens
+         |      FROM t)
+         |SELECT doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens,
+         |       CAST((cum_tokens - n_tokens) // 65536 AS BIGINT) AS shard
+         |FROM c ORDER BY doc_id""".stripMargin),
+
+    Entry("llm_ngram_stats", (s, d) =>
+      TextAnalysis.ngramStats(docs(s, d), n = 2, k = 20),
+      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
+         |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
+         |       WHERE length(w) >= 2)
+         |SELECT shingle, count(*) AS df
+         |FROM sh GROUP BY 1
+         |ORDER BY df DESC, shingle LIMIT 20""".stripMargin),
+
+    // packing-efficiency report over packShards' assignment — the
+    // artifact that says whether the shard budget is wasting context
+    // window: per shard, docs, used tokens, capacity remainder and an
+    // integer fill rate in ppm. Assignment is start-based, so a doc
+    // straddling a boundary overfills its start shard (remainder goes
+    // negative) and the next shard reads under-full — exactly what the
+    // report is for. One rollup over the two-phase prefix-sum output
+    Entry("llm_pack_efficiency", (s, d) => {
+      TextAnalysis.packShards(docs(s, d), tokensPerShard = 4096L)
+        .createOrReplaceTempView("__pack_eff")
+      s.sql("""
+        SELECT CAST(shard AS BIGINT) AS shard,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(n_tokens) AS BIGINT) AS used_tokens,
+               CAST(4096 - SUM(n_tokens) AS BIGINT) AS waste_tokens,
+               CAST((SUM(n_tokens) * 1000000) DIV 4096 AS BIGINT) AS fill_ppm
+        FROM __pack_eff GROUP BY shard ORDER BY shard""")
+    },
+      // the flat cumsum assignment rolled up with the same integer ppm
+      raw"""WITH t AS (SELECT doc_id,
+         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |c AS (SELECT doc_id, n_tokens,
+         |             sum(n_tokens) OVER (ORDER BY doc_id
+         |                                 ROWS UNBOUNDED PRECEDING) AS cum_tokens
+         |      FROM t),
+         |a AS (SELECT doc_id, n_tokens,
+         |             (cum_tokens - n_tokens) // 4096 AS shard
+         |      FROM c)
+         |SELECT CAST(shard AS BIGINT) AS shard,
+         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |       CAST(SUM(n_tokens) AS BIGINT) AS used_tokens,
+         |       CAST(4096 - SUM(n_tokens) AS BIGINT) AS waste_tokens,
+         |       CAST((SUM(n_tokens) * 1000000) // 4096 AS BIGINT) AS fill_ppm
+         |FROM a GROUP BY shard ORDER BY shard""".stripMargin),
+
+    // deterministic training order (llm/TrainOrder): seeded md5
+    // permutation + 1024-doc shard assignment, computed with the
+    // hash-prefix two-phase prefix sum — no single-task global window
+    // (plan-asserted in TrainOrderSpec). The oracle recomputes the
+    // permutation as ONE flat row_number, so a mis-stitched bucket
+    // offset, an unstable tiebreak, or a biased bucket key all
+    // hash-mismatch.
+    Entry("llm_shuffle_order", (s, d) =>
+      TrainOrder.shuffleShards(docs(s, d), seed = "graft-r9",
+          shardDocs = 1024L)
+        .orderBy("doc_id"),
+      """WITH k AS (SELECT doc_id,
+        |                  md5('graft-r9:' || CAST(doc_id AS VARCHAR)) AS key
+        |           FROM documents)
+        |SELECT doc_id,
+        |       CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos,
+        |       CAST((row_number() OVER (ORDER BY key, doc_id) - 1) // 1024
+        |            AS BIGINT) AS shard
+        |FROM k ORDER BY doc_id""".stripMargin),
+
+    // multi-epoch training orders: the SAME permutation machinery with
+    // per-epoch seeds gives independent orders per epoch (each a true
+    // permutation of the corpus — no doc repeats or drops within an
+    // epoch, the property a naive per-epoch random() cannot give across
+    // restarts); displacement shows the orders really decorrelate
+    Entry("llm_epoch_orders", (s, d) => {
+      val dd = docs(s, d)
+      val e1 = TrainOrder.shuffleOrder(dd, "epoch-1")
+        .select(col("doc_id"), col("pos").as("pos_e1"))
+      val e2 = TrainOrder.shuffleOrder(dd, "epoch-2")
+        .select(col("doc_id"), col("pos").as("pos_e2"))
+      e1.join(e2, Seq("doc_id"))
+        .selectExpr("doc_id", "CAST(pos_e1 AS BIGINT) AS pos_e1",
+          "CAST(pos_e2 AS BIGINT) AS pos_e2",
+          "CAST(ABS(pos_e1 - pos_e2) AS BIGINT) AS displacement")
+        .orderBy("doc_id")
+    },
+      // both epochs' permutations as flat row_numbers over their seeds
+      """WITH k1 AS (SELECT doc_id,
+        |                   md5('epoch-1:' || CAST(doc_id AS VARCHAR)) AS key
+        |            FROM documents),
+        |k2 AS (SELECT doc_id,
+        |              md5('epoch-2:' || CAST(doc_id AS VARCHAR)) AS key
+        |       FROM documents),
+        |p1 AS (SELECT doc_id,
+        |              CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos_e1
+        |       FROM k1),
+        |p2 AS (SELECT doc_id,
+        |              CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS pos_e2
+        |       FROM k2)
+        |SELECT p1.doc_id, p1.pos_e1, p2.pos_e2,
+        |       CAST(ABS(p1.pos_e1 - p2.pos_e2) AS BIGINT) AS displacement
+        |FROM p1 JOIN p2 ON p2.doc_id = p1.doc_id
+        |ORDER BY p1.doc_id""".stripMargin),
+
+    // stride-scheduled mixture interleave: source weights 1/2/3 (by
+    // source index mod 3), every training-order prefix holds each source
+    // in weight proportion. Spark computes pos in closed form (per-row
+    // arithmetic over the constant-folded source list); the oracle is
+    // the flat row_number over the stride keys — green proves the
+    // closed-form rank identity.
+    Entry("llm_mixture_interleave", (s, d) =>
+      TrainOrder.interleaveStride(docs(s, d), "source",
+          expr("1 + CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) % 3"),
+          seed = "graft-mix")
+        .orderBy("doc_id"),
+      """WITH w AS (SELECT doc_id, source,
+        |                  1 + CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) % 3 AS wt,
+        |                  md5('graft-mix:' || CAST(doc_id AS VARCHAR)) AS key
+        |           FROM documents),
+        |p AS (SELECT doc_id, source, wt,
+        |             row_number() OVER (PARTITION BY source ORDER BY key, doc_id) - 1 AS p
+        |      FROM w),
+        |k AS (SELECT doc_id, source, (p + 1) * (6 // wt) AS kk FROM p)
+        |SELECT doc_id, source,
+        |       CAST(row_number() OVER (ORDER BY kk, source) - 1 AS BIGINT) AS pos
+        |FROM k ORDER BY doc_id""".stripMargin),
+
+    // per-doc novelty against the corpus: fraction of a doc's distinct
+    // 3-gram shingles with corpus document frequency <= 2 — integer
+    // counts until the final rounded ratio
+    Entry("llm_novelty", (s, d) =>
+      TextAnalysis.novelty(docs(s, d)).orderBy("doc_id"),
+      s"""WITH ${shingleCtes("documents")},
+         |f AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
+         |pd AS (SELECT s.doc_id, count(*) AS n_shingles,
+         |              sum(CASE WHEN f.df <= 2 THEN 1 ELSE 0 END) AS n_rare
+         |       FROM sh s JOIN f USING (shingle) GROUP BY s.doc_id)
+         |SELECT d.doc_id,
+         |       CAST(COALESCE(pd.n_shingles, 0) AS BIGINT) AS n_shingles,
+         |       CAST(COALESCE(pd.n_rare, 0) AS BIGINT) AS n_rare,
+         |       CAST(ROUND(CAST(pd.n_rare AS DOUBLE) / NULLIF(pd.n_shingles, 0), 6) AS DOUBLE) AS rare_ratio
+         |FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id
+         |ORDER BY d.doc_id""".stripMargin),
+
+    // Gini–Simpson + effective vocabulary (Σcnt² stays exact integer —
+    // the log-free perplexity proxy)
+    Entry("llm_token_diversity", (s, d) =>
+      TextAnalysis.tokenDiversity(docs(s, d)).orderBy("doc_id"),
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
+         |              FROM documents),
+         |tc AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
+         |a AS (SELECT doc_id, sum(cnt) AS n_tokens, count(*) AS n_distinct,
+         |             sum(cnt * cnt) AS s2
+         |      FROM tc GROUP BY 1)
+         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+         |       CAST(n_distinct AS BIGINT) AS n_distinct,
+         |       CAST(ROUND(1.0 - CAST(s2 AS DOUBLE)
+         |            / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)), 6)
+         |            AS DOUBLE) AS simpson,
+         |       CAST(ROUND(CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)
+         |            / CAST(s2 AS DOUBLE), 6) AS DOUBLE) AS eff_vocab
+         |FROM a ORDER BY doc_id""".stripMargin),
+
+    // threshold heavy hitters through the CMS prefilter — exact result
+    // (the oracle is the plain GROUP BY ... HAVING; the sketch pass is
+    // invisible to it by the no-underestimate guarantee)
+    Entry("llm_heavy_hitters", (s, d) =>
+      TextAnalysis.heavyHitters(docs(s, d), minDf = 35L, n = 2)
+        .orderBy(col("df").desc, col("shingle")),
+      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
+         |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
+         |       WHERE length(w) >= 2)
+         |SELECT shingle, count(*) AS df
+         |FROM sh GROUP BY 1 HAVING count(*) >= 35
+         |ORDER BY df DESC, shingle""".stripMargin),
+
+    // targeted-curation retrieval scoring: BM25 of every doc against a
+    // fixed 3-term query; contributions share one expression string
+    // with the oracle (bm25Contribution), summed on DECIMAL
+    Entry("llm_bm25", (s, d) =>
+      TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
+        .orderBy("doc_id"),
+      // the contribution expression is THE SAME STRING the Spark plan
+      // compiles (TextAnalysis.bm25Contribution) — one source of truth
+      // for literals and operator sequencing in both engines
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents),
+         |dlen AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
+         |consts AS (SELECT count(*) AS n_docs, sum(dl) AS tot FROM dlen),
+         |tfreq AS (SELECT doc_id, tok, count(*) AS tf FROM toks
+         |          WHERE tok IN ('hash', 'join', 'window') GROUP BY 1, 2),
+         |dfreq AS (SELECT tok, count(*) AS df FROM tfreq GROUP BY 1),
+         |contrib AS (SELECT t.doc_id,
+         |                   ${TextAnalysis.bm25Contribution(1.2, 0.75)} AS c
+         |            FROM tfreq t JOIN dfreq USING (tok)
+         |                 JOIN dlen USING (doc_id) CROSS JOIN consts)
+         |SELECT doc_id, count(*) AS n_terms, CAST(SUM(c) AS DOUBLE) AS bm25
+         |FROM contrib GROUP BY 1 ORDER BY doc_id""".stripMargin),
+
+    // Gopher-style repetition quality signals: top 2-gram share and
+    // duplicate-2-gram ratio per document
+    Entry("llm_repetition", (s, d) =>
+      TextAnalysis.repetition(docs(s, d)).orderBy("doc_id"),
+      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
+         |g AS (SELECT doc_id, w[i] || ' ' || w[i+1] AS gram
+         |      FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
+         |      WHERE length(w) >= 2),
+         |cnt AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
+         |t AS (SELECT doc_id, gram, c,
+         |             CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n_grams,
+         |             count(*) OVER (PARTITION BY doc_id) AS n_distinct,
+         |             row_number() OVER (PARTITION BY doc_id
+         |                                ORDER BY c DESC, gram) AS rn
+         |      FROM cnt)
+         |SELECT doc_id, gram AS top_gram, c AS top_n, n_grams, n_distinct,
+         |       CAST(ROUND(CAST(c AS DOUBLE) / n_grams, 6) AS DOUBLE) AS top_frac,
+         |       CAST(ROUND(1 - CAST(n_distinct AS DOUBLE) / n_grams, 6) AS DOUBLE) AS dup_ratio
+         |FROM t WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+
+    // line-level boilerplate removal (CCNet/FineWeb pre-dedup step). The
+    // fixture text is single-line, so the wiring synthesizes line
+    // structure first — 8-token lines — exactly as the oracle does;
+    // duplicate documents then genuinely share lines, which is the case
+    // the operator exists for
+    Entry("llm_line_dedup", (s, d) =>
+      TextAnalysis.lineDedup(lineified(s, d)).orderBy("doc_id"),
+      s"""WITH $lineDedupCtes
+         |SELECT doc_id, count(*) AS n_lines,
+         |       count(CASE WHEN NOT is_bl THEN 1 END) AS n_kept,
+         |       md5(coalesce(string_agg(line, chr(10) ORDER BY line_no)
+         |                      FILTER (WHERE NOT is_bl), '')) AS kept_md5
+         |FROM fx GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // incremental ingest: the batch (doc_id % 5 = 0) deduped against the
+    // accepted corpus (the rest) — exact cross-fingerprint drop + banded
+    // cross-LSH + Jaccard verify, batch survivors out
+    Entry("llm_dedup_incremental", (s, d) => {
+      val dd = docs(s, d)
+      Dedup.dedupeIncremental(
+        existing = dd.where(col("doc_id") % 5 =!= 0),
+        incoming = dd.where(col("doc_id") % 5 === 0))
+        .select(col("doc_id"), md5(col("text")).as("content_md5"))
+        .orderBy("doc_id")
+    },
+      // cross-corpus pairing rule over the shared band CTEs: existing side
+      // a, batch side b; exact pass + near drop replayed independently
+      s"""WITH ${bandCtes("documents")},
+         |cands AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.band) AS n_bands
+         |          FROM bands a JOIN bands b
+         |            ON a.band = b.band AND a.sig = b.sig
+         |           AND a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0
+         |          GROUP BY 1, 2),
+         |$jaccardCtes,
+         |ex_fp AS (SELECT DISTINCT md5($NORM) AS fp FROM documents WHERE doc_id % 5 <> 0),
+         |in_docs AS (SELECT doc_id, text, md5($NORM) AS fp FROM documents WHERE doc_id % 5 = 0),
+         |exact_surv AS (SELECT i.doc_id, i.text FROM in_docs i
+         |               LEFT JOIN ex_fp e ON i.fp = e.fp WHERE e.fp IS NULL),
+         |drop_near AS (SELECT DISTINCT doc_b AS doc_id FROM jac WHERE jaccard >= 0.6)
+         |SELECT s.doc_id, md5(s.text) AS content_md5
+         |FROM exact_surv s LEFT JOIN drop_near n ON s.doc_id = n.doc_id
+         |WHERE n.doc_id IS NULL ORDER BY s.doc_id""".stripMargin),
+
+    // the CCNet ordering, composed: strip boilerplate lines FIRST
+    // (keepText surfaces the reassembled document), exact-dedup what
+    // remains — docs that differed only in boilerplate collapse
+    Entry("llm_line_dedup_pipeline", (s, d) => {
+      val cleaned = TextAnalysis.lineDedup(lineified(s, d), keepText = true)
+        .select(col("doc_id"), col("kept_text").as("text"))
+      Dedup.exact(cleaned).orderBy("fp")
+    },
+      s"""WITH $lineDedupCtes,
+         |kept AS (SELECT doc_id,
+         |                coalesce(string_agg(line, chr(10) ORDER BY line_no)
+         |                           FILTER (WHERE NOT is_bl), '') AS text
+         |         FROM fx GROUP BY doc_id)
+         |SELECT md5($NORM) AS fp, min(doc_id) AS keep_id, count(*) AS n_docs
+         |FROM kept GROUP BY 1 ORDER BY fp""".stripMargin),
+
+    // PII scrubbing over deterministically-injected emails/phones/IPs;
+    // scrub_md5 proves the replacements landed at identical offsets
+    Entry("llm_pii_scrub", (s, d) => {
+      val dd = docs(s, d)
+        .select(col("doc_id"), expr(piiInject("STRING")).as("text"))
+      TextAnalysis.piiScrub(dd).orderBy("doc_id")
+    },
+      // sequential scrub: each pattern counts matches in the text AFTER the
+      // previous patterns' replacements, exactly as piiScrub folds
+      raw"""WITH d2 AS (SELECT doc_id, coalesce(${piiInject("VARCHAR")}, '') AS text FROM documents),
+         |s1 AS (SELECT doc_id,
+         |        CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
+         |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t
+         |       FROM d2),
+         |s2 AS (SELECT doc_id, n_email,
+         |        CAST(len(regexp_extract_all(t, '\b\d{3}-\d{4}\b')) AS BIGINT) AS n_phone,
+         |        regexp_replace(t, '\b\d{3}-\d{4}\b', '<PHONE>', 'g') AS t
+         |       FROM s1),
+         |s3 AS (SELECT doc_id, n_email, n_phone,
+         |        CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ip,
+         |        regexp_replace(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS t
+         |       FROM s2)
+         |SELECT doc_id, n_email, n_phone, n_ip, md5(t) AS scrub_md5
+         |FROM s3 ORDER BY doc_id""".stripMargin),
+
+    // exact duplicate-span detection (Lee et al. 2021 substring dedup
+    // signal): maximal 5-token spans shared verbatim with another doc
+    Entry("llm_dup_spans", (s, d) =>
+      Dedup.dupSpans(docs(s, d)).orderBy("doc_id"),
+      // position-indexed 5-gram hashes -> cross-doc df -> interval union
+      // per doc, recomputed with DuckDB windows; 0-based p mirrors posexplode
+      raw"""WITH tw AS (SELECT doc_id, string_split($NORMC, ' ') AS w FROM documents),
+         |tk AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, w
+         |       FROM tw WHERE len(w) >= 5),
+         |g AS (SELECT doc_id, n_tokens, CAST(i - 1 AS BIGINT) AS p,
+         |             md5(array_to_string(w[i : i + 4], ' ')) AS gh
+         |      FROM tk, unnest(generate_series(1, len(w) - 4)) AS u(i)),
+         |dg AS (SELECT gh FROM (SELECT DISTINCT doc_id, gh FROM g)
+         |       GROUP BY gh HAVING count(*) >= 2),
+         |d AS (SELECT g.doc_id, g.n_tokens, g.p FROM g JOIN dg USING (gh)),
+         |m AS (SELECT doc_id, n_tokens, p,
+         |             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 5
+         |                  THEN 0 ELSE 1 END AS nw
+         |      FROM d),
+         |isl AS (SELECT doc_id, n_tokens, p,
+         |               sum(nw) OVER (PARTITION BY doc_id ORDER BY p
+         |                             ROWS UNBOUNDED PRECEDING) AS grp
+         |        FROM m),
+         |sp AS (SELECT doc_id, n_tokens, grp, max(p) - min(p) + 5 AS span_tokens
+         |       FROM isl GROUP BY doc_id, n_tokens, grp)
+         |SELECT doc_id, n_tokens, count(*) AS n_spans,
+         |       CAST(sum(span_tokens) AS BIGINT) AS dup_tokens,
+         |       CAST(ROUND(CAST(sum(span_tokens) AS DOUBLE) / n_tokens, 6) AS DOUBLE) AS dup_frac
+         |FROM sp GROUP BY doc_id, n_tokens ORDER BY doc_id""".stripMargin),
+
+    // the removal counterpart: scrub every duplicated span except the
+    // minimum-doc_id copy; one copy of every passage survives corpus-wide
+    Entry("llm_scrub_spans", (s, d) =>
+      Dedup.scrubDupSpans(docs(s, d)).orderBy("doc_id"),
+      // removal replay: redundant position = gram with df >= 2 held by a
+      // non-minimum doc; islands -> covered ranges -> anti-join tokens ->
+      // ordered reassembly hash; fully-scrubbed docs fall back to md5('')
+      raw"""WITH tw AS (SELECT doc_id, string_split($NORMC, ' ') AS w FROM documents),
+         |tk AS (SELECT doc_id, w FROM tw WHERE len(w) >= 5),
+         |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS p,
+         |             md5(array_to_string(w[i : i + 4], ' ')) AS gh
+         |      FROM tk, unnest(generate_series(1, len(w) - 4)) AS u(i)),
+         |gm AS (SELECT gh, count(DISTINCT doc_id) AS df, min(doc_id) AS mind
+         |       FROM g GROUP BY gh),
+         |d AS (SELECT g.doc_id, g.p FROM g JOIN gm USING (gh)
+         |      WHERE gm.df >= 2 AND g.doc_id <> gm.mind),
+         |m AS (SELECT doc_id, p,
+         |             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 5
+         |                  THEN 0 ELSE 1 END AS nw
+         |      FROM d),
+         |isl AS (SELECT doc_id, p,
+         |               sum(nw) OVER (PARTITION BY doc_id ORDER BY p
+         |                             ROWS UNBOUNDED PRECEDING) AS grp
+         |        FROM m),
+         |sp AS (SELECT doc_id, min(p) AS s, max(p) + 4 AS e
+         |       FROM isl GROUP BY doc_id, grp),
+         |cov AS (SELECT doc_id, i AS p FROM sp, unnest(generate_series(s, e)) AS u(i)),
+         |tok AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS p, w[i] AS tok
+         |        FROM tw, unnest(generate_series(1, len(w))) AS u(i)),
+         |kept AS (SELECT t.doc_id, t.p, t.tok FROM tok t
+         |         LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
+         |         WHERE c.p IS NULL),
+         |ka AS (SELECT doc_id, count(*) AS kept_tokens,
+         |              md5(string_agg(tok, ' ' ORDER BY p)) AS scrub_md5
+         |       FROM kept GROUP BY doc_id)
+         |SELECT tw.doc_id, CAST(len(tw.w) AS BIGINT) AS n_tokens,
+         |       CAST(coalesce(ka.kept_tokens, 0) AS BIGINT) AS kept_tokens,
+         |       coalesce(ka.scrub_md5, md5('')) AS scrub_md5
+         |FROM tw LEFT JOIN ka ON tw.doc_id = ka.doc_id
+         |ORDER BY tw.doc_id""".stripMargin),
+
+    Entry("llm_cosine_topk", (s, d) => {
+      val e = emb(s, d)
+      Similarity.bruteForceTopK(e.where("vec_id < 5"), e, 3)
+        .orderBy("probe_id", "rank")
+    },
+      s"""WITH pairs AS (
+         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
+         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
+         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
+         |  WHERE p.vec_id < 5),
+         |ranked AS (SELECT probe_id, cand_id, cos,
+         |                  CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS INT) AS rank
+         |           FROM pairs)
+         |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
+         |ORDER BY probe_id, rank""".stripMargin),
+
+    // power-of-two sequence-length bucketing — the batching layout a
+    // trainer/server pads into (a doc of n tokens rides the smallest
+    // 2^k ≥ n bucket, floor 16): bucket from pure integer bit
+    // arithmetic (shift the length down until zero — expressed as the
+    // CASE ladder both engines constant-fold), padding waste = bucket −
+    // n summed exactly. The report that prices a bucket set before
+    // anyone trains with it
+    Entry("llm_length_buckets", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__lb_docs")
+      s.sql(raw"""
+        WITH t AS (SELECT doc_id,
+                          CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_tok
+                   FROM __lb_docs),
+        b AS (SELECT doc_id, n_tok,
+                     CASE WHEN n_tok <= 16 THEN 16
+                          WHEN n_tok <= 32 THEN 32
+                          WHEN n_tok <= 64 THEN 64
+                          WHEN n_tok <= 128 THEN 128
+                          WHEN n_tok <= 256 THEN 256
+                          WHEN n_tok <= 512 THEN 512
+                          ELSE 1024 END AS bucket
+              FROM t)
+        SELECT CAST(bucket AS INT) AS bucket,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
+               CAST(SUM(bucket - n_tok) AS BIGINT) AS pad_waste,
+               CAST((SUM(n_tok) * 1000000) DIV SUM(bucket) AS BIGINT) AS fill_ppm
+        FROM b GROUP BY bucket ORDER BY bucket""")
+    },
+      // the same CASE ladder and integer fill arithmetic
+      raw"""WITH t AS (SELECT doc_id,
+         |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok
+         |  FROM documents),
+         |b AS (SELECT doc_id, n_tok,
+         |             CASE WHEN n_tok <= 16 THEN 16
+         |                  WHEN n_tok <= 32 THEN 32
+         |                  WHEN n_tok <= 64 THEN 64
+         |                  WHEN n_tok <= 128 THEN 128
+         |                  WHEN n_tok <= 256 THEN 256
+         |                  WHEN n_tok <= 512 THEN 512
+         |                  ELSE 1024 END AS bucket
+         |      FROM t)
+         |SELECT CAST(bucket AS INT) AS bucket,
+         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |       CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
+         |       CAST(SUM(bucket - n_tok) AS BIGINT) AS pad_waste,
+         |       CAST((SUM(n_tok) * 1000000) // SUM(bucket) AS BIGINT) AS fill_ppm
+         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
+
+    // composite Gopher-style admission gate — the four rule families as
+    // ONE scan with a verdict BITMASK (which rule failed is as
+    // important as the verdict — curation debugging reads the mask
+    // histogram): length band, alnum ratio, word-count band, and
+    // max-token-share repetition, all integer cross-multiplications.
+    // The repetition signal needs one explode+agg per doc, joined back
+    Entry("llm_gopher_gate", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__gg_docs")
+      s.sql(s"""
+        WITH base AS (SELECT doc_id, text, n_chars,
+                             length(regexp_replace(text, '[^a-zA-Z0-9]', '')) AS alnum
+                      FROM __gg_docs),
+        toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
+                   SELECT doc_id, explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) AS tok
+                   FROM __gg_docs) t
+                 WHERE length(tok) > 0 GROUP BY doc_id, tok),
+        rep AS (SELECT doc_id, SUM(tf) AS n_words, MAX(tf) AS max_tf
+                FROM toks GROUP BY doc_id)
+        SELECT b.doc_id,
+               CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000 THEN 1 ELSE 0 END
+                 + CASE WHEN 1000 * b.alnum >= 600 * b.n_chars THEN 2 ELSE 0 END
+                 + CASE WHEN COALESCE(r.n_words, 0) BETWEEN 10 AND 5000 THEN 4 ELSE 0 END
+                 + CASE WHEN COALESCE(5 * r.max_tf <= r.n_words, FALSE) THEN 8 ELSE 0 END
+                 AS INT) AS rule_mask,
+               CAST(COALESCE(r.n_words, 0) AS BIGINT) AS n_words,
+               CAST(COALESCE(r.max_tf, 0) AS BIGINT) AS max_tf,
+               CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000
+                          AND 1000 * b.alnum >= 600 * b.n_chars
+                          AND COALESCE(r.n_words, 0) BETWEEN 10 AND 5000
+                          AND COALESCE(5 * r.max_tf <= r.n_words, FALSE)
+                     THEN TRUE ELSE FALSE END AS BOOLEAN) AS kept
+        FROM base b LEFT JOIN rep r ON r.doc_id = b.doc_id
+        ORDER BY b.doc_id""")
+    },
+      // the same four integer rules (DuckDB 'g' flag on the strip regex)
+      s"""WITH base AS (SELECT doc_id, text, n_chars,
+         |                     length(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g')) AS alnum
+         |              FROM documents),
+         |toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
+         |           SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
+         |           FROM documents) t
+         |         WHERE length(tok) > 0 GROUP BY doc_id, tok),
+         |rep AS (SELECT doc_id, SUM(tf) AS n_words, MAX(tf) AS max_tf
+         |        FROM toks GROUP BY doc_id)
+         |SELECT b.doc_id,
+         |       CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000 THEN 1 ELSE 0 END
+         |         + CASE WHEN 1000 * b.alnum >= 600 * b.n_chars THEN 2 ELSE 0 END
+         |         + CASE WHEN COALESCE(r.n_words, 0) BETWEEN 10 AND 5000 THEN 4 ELSE 0 END
+         |         + CASE WHEN COALESCE(5 * r.max_tf <= r.n_words, FALSE) THEN 8 ELSE 0 END
+         |         AS INT) AS rule_mask,
+         |       CAST(COALESCE(r.n_words, 0) AS BIGINT) AS n_words,
+         |       CAST(COALESCE(r.max_tf, 0) AS BIGINT) AS max_tf,
+         |       CAST(CASE WHEN b.n_chars BETWEEN 30 AND 10000
+         |                  AND 1000 * b.alnum >= 600 * b.n_chars
+         |                  AND COALESCE(r.n_words, 0) BETWEEN 10 AND 5000
+         |                  AND COALESCE(5 * r.max_tf <= r.n_words, FALSE)
+         |             THEN TRUE ELSE FALSE END AS BOOLEAN) AS kept
+         |FROM base b LEFT JOIN rep r ON r.doc_id = b.doc_id
+         |ORDER BY b.doc_id""".stripMargin),
+
+    // temperature-balanced mixture quotas (the multilingual-sampling
+    // trick: share ∝ tokens^(1/T), here T=2 → SQRT, the one sanctioned
+    // transcendental — correctly-rounded IEEE): high-resource sources
+    // are damped, low-resource boosted. The Σ√tokens denominator folds
+    // the |sources|-row list in source order (never an unordered double
+    // SUM); quotas are FLOOR of one fixed tree, so membership is
+    // integer-deterministic. Compare llm_token_budget_mix (linear
+    // weights): same quota machinery, different allocation curve
+    Entry("llm_mixture_temperature", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__mt_docs")
+      s.sql(raw"""
+        WITH st AS (SELECT source,
+                           SUM(CAST(size(split(trim(text), '\\s+')) AS BIGINT)) AS tokens
+                    FROM __mt_docs GROUP BY source),
+        sq AS (SELECT source, tokens, SQRT(CAST(tokens AS DOUBLE)) AS w FROM st),
+        tot AS (SELECT aggregate(transform(array_sort(collect_list(struct(source, w))),
+                         s -> s.w), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) AS tw
+                FROM sq)
+        SELECT source, CAST(tokens AS BIGINT) AS tokens,
+               CAST(FLOOR(w / tw * 1000000) AS BIGINT) AS share_ppm,
+               CAST(FLOOR(w / tw * 100000) AS BIGINT) AS quota_tokens
+        FROM sq CROSS JOIN tot
+        ORDER BY source""")
+    },
+      // the same √tokens shares with the source-ordered list fold
+      raw"""WITH st AS (SELECT source,
+         |               SUM(CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT)) AS tokens
+         |             FROM documents GROUP BY source),
+         |sq AS (SELECT source, tokens, SQRT(CAST(tokens AS DOUBLE)) AS w FROM st),
+         |tot AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |                 list(w ORDER BY source)), (acc, x) -> acc + x) AS tw
+         |        FROM sq)
+         |SELECT source, CAST(tokens AS BIGINT) AS tokens,
+         |       CAST(FLOOR(w / tw * 1000000) AS BIGINT) AS share_ppm,
+         |       CAST(FLOOR(w / tw * 100000) AS BIGINT) AS quota_tokens
+         |FROM sq CROSS JOIN tot
+         |ORDER BY source""".stripMargin),
+
+    // held-out LM quality scoring — the honest perplexity filter: the
+    // bigram model trains on the hash-split train side ONLY and scores
+    // the held-out side (in-corpus counts leak every doc into its own
+    // model); unseen bigrams contribute p=0 and surface as n_oov
+    Entry("llm_lm_heldout", (s, d) => {
+      val dd = docs(s, d)
+      val split = TextAnalysis.hashSplit(dd)
+      def part(cond: String) = dd.join(
+        split.where(cond).select("doc_id"), Seq("doc_id"))
+      TextAnalysis.bigramScoreHeldOut(
+          part("split <> 'train'"), part("split = 'train'"))
+        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
+          "CAST(n_oov AS BIGINT) AS n_oov",
+          "CAST(n_rare AS BIGINT) AS n_rare", "avg_p")
+        .orderBy("doc_id")
+    },
+      // the train-side counts joined LEFT onto the held-out bigrams; the
+      // hash-split bucket is the llm_hash_split idiom inline
+      s"""WITH tk AS (SELECT doc_id,
+         |              list_filter(string_split($NORM, ' '),
+         |                          w -> length(w) > 0) AS t,
+         |              CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
+         |            FROM documents),
+         |uni AS (SELECT w AS w1, count(*) AS c1
+         |        FROM (SELECT unnest(t) AS w FROM tk WHERE bucket < 90)
+         |        GROUP BY w),
+         |tbg AS (SELECT t[i] AS w1, t[i + 1] AS w2
+         |        FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
+         |        WHERE len(t) >= 2 AND bucket < 90),
+         |cbi AS (SELECT w1, w2, count(*) AS c12 FROM tbg GROUP BY w1, w2),
+         |ebg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] AS w1,
+         |               t[i + 1] AS w2
+         |        FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
+         |        WHERE len(t) >= 2 AND bucket >= 90),
+         |j AS (SELECT ebg.doc_id, ebg.pos, cbi.c12,
+         |             CASE WHEN cbi.c12 IS NULL OR uni.c1 IS NULL THEN CAST(0.0 AS DOUBLE)
+         |                  ELSE CAST(cbi.c12 AS DOUBLE) / CAST(uni.c1 AS DOUBLE) END AS p,
+         |             CASE WHEN cbi.c12 IS NULL THEN 1 ELSE 0 END AS oov
+         |      FROM ebg LEFT JOIN cbi ON ebg.w1 = cbi.w1 AND ebg.w2 = cbi.w2
+         |           LEFT JOIN uni ON ebg.w1 = uni.w1)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |       CAST(SUM(oov) AS BIGINT) AS n_oov,
+         |       CAST(SUM(CASE WHEN c12 IS NOT NULL AND c12 < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
+         |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |         list(p ORDER BY pos)), (acc, v) -> acc + v) / count(*), 6)
+         |         AS DOUBLE) AS avg_p
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+
+    // speculative-decoding acceptance audit: the bigram draft table
+    // (trained on the hash-split train side) proposes each next token on
+    // held-out docs; accept iff the draft equals the actual next token —
+    // the acceptance-rate number that decides whether a draft model
+    // pays for itself. Pure integer censuses; one broadcast-sized
+    // draft-table join onto the eval bigram stream
+    Entry("llm_draft_accept", (s, d) => {
+      val dd = docs(s, d)
+      val split = TextAnalysis.hashSplit(dd)
+      def part(cond: String) = dd.join(
+        split.where(cond).select("doc_id"), Seq("doc_id"))
+      val draft = TextAnalysis.ngramDraft(part("split = 'train'"), minCount = 3)
+        .select(col("w1"), col("draft"))
+      val ebg = part("split <> 'train'")
+        .select(col("doc_id"),
+          expr(s"split(${Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(expr("size(w) >= 2"))
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(0, size(w) - 2), " +
+            "i -> struct(w[i] AS w1, w[i+1] AS w2))")).as("p"))
+        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+      ebg.join(draft, Seq("w1"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          sum(when(col("draft").isNotNull, 1L).otherwise(0L)).as("n_drafted"),
+          sum(when(col("draft") === col("w2"), 1L).otherwise(0L)).as("n_accept"))
+        .selectExpr("doc_id", "CAST(n_bigrams AS BIGINT) AS n_bigrams",
+          "CAST(n_drafted AS BIGINT) AS n_drafted",
+          "CAST(n_accept AS BIGINT) AS n_accept",
+          "CAST(FLOOR(n_accept * 1000000 / NULLIF(n_drafted, 0)) AS BIGINT) AS accept_ppm")
+        .orderBy("doc_id")
+    },
+      // train-side draft table (argmax with the same (cnt DESC, w2)
+      // tie-break) LEFT-joined onto the held-out bigram stream
       s"""WITH tk AS (SELECT doc_id, string_split($NORM, ' ') AS w,
          |              CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
          |            FROM documents),
@@ -4374,12 +2573,24 @@ object Llm {
          |       CAST(SUM(CASE WHEN draft = w2 THEN 1 ELSE 0 END) AS BIGINT) AS n_accept,
          |       CAST(FLOOR(SUM(CASE WHEN draft = w2 THEN 1 ELSE 0 END) * 1000000
          |         / NULLIF(SUM(CASE WHEN draft IS NOT NULL THEN 1 ELSE 0 END), 0)) AS BIGINT) AS accept_ppm
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // the generator's sample formula through the identical per-frame
-    // DFT folds (ascending sample order) against the same string-cast
-    // basis literals; dominant bin via (p DESC, k) row_number
-    "llm_audio_spectrogram" -> {
+    // short-time DFT spectrogram over REAL decoded PCM: per-frame power
+    // in the 4 lowest bins against the driver-literal DftBasis, dominant
+    // bin by strict argmax, per-doc histogram + peak power
+    // max_power leaves as FLOOR->BIGINT: powers sit at ~1e10 where
+    // DuckDB's multiply-round-divide ROUND(,6) perturbs the last ULP
+    // (the llm_weighted_sample 1e14 trap) — floor of identical doubles
+    // is exact in both engines
+    Entry("llm_audio_spectrogram", (s, d) =>
+      Multimodal.spectrogram(Multimodal.synthesizeAudio(docs(s, d))).toDF()
+        .selectExpr("doc_id", "n_frames", "dom1", "dom2", "dom3", "dom4",
+          "CAST(FLOOR(max_power) AS BIGINT) AS max_power")
+        .orderBy("doc_id"),
+      // the generator's sample formula through the identical per-frame
+      // DFT folds (ascending sample order) against the same string-cast
+      // basis literals; dominant bin via (p DESC, k) row_number
+      {
       val basis = (for {
         k <- 0 until Multimodal.DftBasis.Bins
         i <- 0 until Multimodal.DftBasis.Frame
@@ -4415,11 +2626,17 @@ object Llm {
          |JOIN (SELECT doc_id, MAX(p) AS m FROM pw GROUP BY doc_id) mx
          |  USING (doc_id)
          |GROUP BY d.doc_id, mx.m ORDER BY d.doc_id""".stripMargin
-    },
+    }),
 
-    // the generator's sample formula through the identical 32-sample
-    // frame peaks and gaps-and-islands run arithmetic
-    "llm_audio_vad" ->
+    // energy-threshold VAD over REAL decoded WAV PCM (frame peaks,
+    // run-length segments) — the speech/silence segmentation step; the
+    // oracle replays the generator's sample formula through identical
+    // frame and island arithmetic
+    Entry("llm_audio_vad", (s, d) =>
+      Multimodal.vadSegments(Multimodal.synthesizeAudio(docs(s, d)))
+        .toDF().orderBy("doc_id"),
+      // the generator's sample formula through the identical 32-sample
+      // frame peaks and gaps-and-islands run arithmetic
       """WITH nn AS (SELECT doc_id, CAST(64 + (doc_id * 13) % 512 AS INT) AS ns
         |            FROM documents),
         |s AS (SELECT doc_id, i,
@@ -4446,11 +2663,46 @@ object Llm {
         |       CAST(a.n_segments AS BIGINT) AS n_segments,
         |       CAST(COALESCE(mr.max_run, 0) AS BIGINT) AS max_run
         |FROM agg a LEFT JOIN mr ON mr.doc_id = a.doc_id
-        |ORDER BY a.doc_id""".stripMargin,
+        |ORDER BY a.doc_id""".stripMargin),
 
-    // the same sub-vector slices, rounded per-token maxima and
-    // qi-ordered fold
-    "llm_maxsim" ->
+    // ColBERT-style late interaction (MaxSim): each vector splits into
+    // 4 sub-vectors ("token embeddings" — deterministic 16-dim slices of
+    // the stored 64-dim vector, the wiring a real multi-vector table
+    // feeds directly); score(q, d) = Σ_i max_j cos(q_i, d_j), the
+    // retrieval scorer that beats single-vector cosine on long docs.
+    // Per-(pair, i) max runs on ROUNDED cosines (deterministic both
+    // engines), the 4-term sum folds in i order, ranking ties on cand.
+    // Probes are the bounded slice; at corpus scale the candidate set
+    // comes from a first-stage ANN exactly like llm_knn_approx
+    Entry("llm_maxsim", (s, d) => {
+      emb(s, d).createOrReplaceTempView("__ms_emb")
+      s.sql("""
+        WITH sub AS (SELECT vec_id, i,
+                            slice(embedding, i * 16 + 1, 16) AS sv
+                     FROM __ms_emb
+                     LATERAL VIEW explode(sequence(0, 3)) t AS i),
+        q AS (SELECT vec_id AS qid, i AS qi, sv AS qv FROM sub WHERE vec_id < 3),
+        c AS (SELECT vec_id AS did, i AS dj, sv AS dv FROM sub WHERE vec_id >= 3),
+        p AS (SELECT /*+ BROADCAST(q) */ q.qid, c.did, q.qi,
+                     MAX(CAST(ROUND(graft_cosine(q.qv, c.dv), 6) AS DOUBLE)) AS mcos
+              FROM q JOIN c ON c.did <> q.qid
+              GROUP BY q.qid, c.did, q.qi),
+        sc AS (SELECT qid, did,
+                      CAST(ROUND(aggregate(transform(
+                        array_sort(collect_list(struct(qi, mcos))), e -> e.mcos),
+                        CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), 6) AS DOUBLE) AS maxsim
+               FROM p GROUP BY qid, did),
+        r AS (SELECT qid, did, maxsim,
+                     row_number() OVER (PARTITION BY qid
+                       ORDER BY maxsim DESC, did) AS rank
+              FROM sc)
+        SELECT qid AS probe_id, did AS cand_id, maxsim,
+               CAST(rank AS INT) AS rank
+        FROM r WHERE rank <= 5
+        ORDER BY probe_id, rank""")
+    },
+      // the same sub-vector slices, rounded per-token maxima and
+      // qi-ordered fold
       s"""WITH sub AS (SELECT vec_id, i,
          |                    list_slice(embedding, i * 16 + 1, i * 16 + 16) AS sv
          |             FROM embeddings, unnest(generate_series(0, 3)) t(i)),
@@ -4472,11 +2724,19 @@ object Llm {
          |SELECT qid AS probe_id, did AS cand_id, maxsim,
          |       CAST(rank AS INT) AS rank
          |FROM r WHERE rank <= 5
-         |ORDER BY probe_id, rank""".stripMargin,
+         |ORDER BY probe_id, rank""".stripMargin),
 
-    // the same decimal-rounded centroid sums, the same ascending-dim
-    // folds (list_reduce with the 0.0 prepend), the same ranking
-    "llm_embed_outliers" ->
+    // embedding-table outlier audit: each label's 3 members least
+    // similar to the label's DECIMAL-exact centroid — the mislabel QC
+    // of a vector store (Similarity.embedOutliers; the embeddingDrift
+    // decimal-mean discipline, ascending-dim cosine folds, vec_id ties)
+    Entry("llm_embed_outliers", (s, d) =>
+      Similarity.embedOutliers(emb(s, d), k = 3)
+        .selectExpr("vec_id", "CAST(label AS INT) AS label", "cos",
+          "CAST(rank AS INT) AS rank")
+        .orderBy("label", "rank"),
+      // the same decimal-rounded centroid sums, the same ascending-dim
+      // folds (list_reduce with the 0.0 prepend), the same ranking
       """WITH ex AS (SELECT label, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS v
         |            FROM embeddings,
         |                 unnest(generate_series(1, len(embedding))) AS t(i)),
@@ -4507,11 +2767,39 @@ object Llm {
         |SELECT vec_id, CAST(label AS INT) AS label, cos,
         |       CAST(rank AS INT) AS rank
         |FROM r WHERE rank <= 3
-        |ORDER BY label, rank""".stripMargin,
+        |ORDER BY label, rank""".stripMargin),
 
-    // the same lang-sided pairs, ranked on the same rounded cosine, the
-    // same margin tree
-    "llm_bitext_mine" ->
+    // bitext mining (LASER/CCMatrix shape): for every source-language
+    // doc's embedding, the nearest target-language candidate with the
+    // top1−top2 margin criterion — margin-based filtering is what keeps
+    // mined pairs precise when absolute cosine is uninformative. Probes
+    // and candidates come from the lang column joined onto the embedding
+    // table (vec_id = doc_id); margin arithmetic runs on the ROUNDED
+    // ranked cosines, so both engines subtract identical doubles. The
+    // source side is the bounded probe set (one language's slice); at
+    // corpus scale the candidate join composes over lshTopKBanded like
+    // hardNegatives — the margin rule is unchanged
+    Entry("llm_bitext_mine", (s, d) => {
+      val e = emb(s, d)
+      val langs = docs(s, d).select(col("doc_id"), col("lang"))
+      def side(l: String) = e.join(langs, e("vec_id") === langs("doc_id"))
+        .where(s"lang = '$l'").select("vec_id", "embedding")
+      // the probe slice is the bounded side — hint it, or the theta join
+      // between two join OUTPUTS (no scan statistics) degenerates to a
+      // CartesianProduct instead of the probe-broadcast NLJ every other
+      // brute-force entry plans (PlanShapeSpec's global gate)
+      Similarity.bruteForceTopK(broadcast(side("de")), side("en"), 2)
+        .groupBy("probe_id")
+        .agg(max(when(col("rank") === 1, col("cand_id"))).as("best_cand"),
+          max(when(col("rank") === 1, col("cos"))).as("cos1"),
+          max(when(col("rank") === 2, col("cos"))).as("cos2"))
+        .selectExpr("probe_id", "best_cand", "cos1",
+          "CAST(ROUND(cos1 - cos2, 6) AS DOUBLE) AS margin",
+          "cos1 - cos2 > 0.02 AS accepted")
+        .orderBy("probe_id")
+    },
+      // the same lang-sided pairs, ranked on the same rounded cosine, the
+      // same margin tree
       s"""WITH src AS (SELECT e.vec_id, e.embedding
          |             FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
          |             WHERE d.lang = 'de'),
@@ -4533,9 +2821,13 @@ object Llm {
          |SELECT probe_id, best_cand, cos1,
          |       CAST(ROUND(cos1 - cos2, 6) AS DOUBLE) AS margin,
          |       cos1 - cos2 > 0.02 AS accepted
-         |FROM a ORDER BY probe_id""".stripMargin,
+         |FROM a ORDER BY probe_id""".stripMargin),
 
-    "llm_ann_bucketed" ->
+    Entry("llm_ann_bucketed", (s, d) => {
+      val e = emb(s, d)
+      Similarity.lshTopK(e.where("vec_id < 16"), e, 3, planes = 8)
+        .orderBy("probe_id", "rank")
+    },
       s"""WITH b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
          |           FROM embeddings),
          |pairs AS (
@@ -4547,165 +2839,19 @@ object Llm {
          |                  CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS INT) AS rank
          |           FROM pairs)
          |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
-         |ORDER BY probe_id, rank""".stripMargin,
+         |ORDER BY probe_id, rank""".stripMargin),
 
-    // NULLIF mirrors the Spark-side ANSI guard; "+ 0.0" canonicalizes
-    // DuckDB's ROUND, which (unlike Spark's BigDecimal HALF_UP) preserves
-    // the sign of zero — a tiny negative component would otherwise hash
-    // as '-0.0' against Spark's '0.0'
-    "llm_random_project" -> {
-      // the same left-to-right fold as the Spark plan, per output dim,
-      // against the identical plane literals; + 0.0 canonicalizes -0.0
-      val comps = (0 until 8).map { p =>
-        val plane = duckPlane(p, 64)
-        s"""CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |  list_transform(generate_series(1, LEAST(len(embedding), 64)),
-           |    i -> CAST(embedding[i] AS DOUBLE) * ($plane)[i])),
-           |  (acc, v) -> acc + v), 6) + 0.0 AS DOUBLE)""".stripMargin
-      }.mkString(",\n ")
-      s"""WITH pr AS (SELECT vec_id, [$comps] AS projected FROM embeddings)
-         |SELECT vec_id, CAST(generate_subscripts(projected, 1) AS BIGINT) AS pos,
-         |       unnest(projected) AS v
-         |FROM pr ORDER BY vec_id, pos""".stripMargin
+    // multi-band LSH ANN: 4 bands of 8 disjoint hyperplanes, candidate
+    // if ANY band agrees (OR-of-ANDs amplification) — the production
+    // answer to the one-band index's recall collapse
+    Entry("llm_ann_banded", (s, d) => {
+      val e = emb(s, d)
+      Similarity.lshTopKBanded(e.where("vec_id < 16"), e, 3,
+        bands = 4, planesPerBand = 8)
+        .orderBy("probe_id", "rank")
     },
-
-    "llm_normalize" ->
-      s"""WITH un AS (SELECT vec_id,
-         |       list_transform(embedding,
-         |         x -> CAST(ROUND(CAST(x AS DOUBLE) / NULLIF(${duckNorm("embedding")}, 0.0), 6) + 0.0 AS DOUBLE)) AS unit
-         |FROM embeddings)
-         |SELECT vec_id, CAST(generate_subscripts(unit, 1) AS BIGINT) AS pos,
-         |       unnest(unit) AS u
-         |FROM un ORDER BY vec_id, pos""".stripMargin,
-
-    "llm_ivf_topk" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id, embedding AS centroid
-         |              FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id AS cand_id, embedding AS ce, centroid_id,
-         |               row_number() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
-         |        FROM embeddings, cent),
-         |assigned AS (SELECT cand_id, ce, centroid_id FROM asg WHERE rn = 1),
-         |sl AS (SELECT vec_id AS probe_id, embedding AS pe, centroid_id,
-         |              row_number() OVER (PARTITION BY vec_id
-         |                ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
-         |       FROM embeddings, cent WHERE vec_id < 6),
-         |pairs AS (SELECT s.probe_id, a.cand_id, ${duckCosine("s.pe", "a.ce")} AS cos
-         |          FROM (SELECT * FROM sl WHERE rn <= 2) s
-         |          JOIN assigned a ON a.centroid_id = s.centroid_id
-         |          WHERE a.cand_id <> s.probe_id),
-         |ranked AS (SELECT probe_id, cand_id, cos,
-         |                  CAST(row_number() OVER (PARTITION BY probe_id
-         |                    ORDER BY cos DESC, cand_id) AS INT) AS rank
-         |           FROM pairs)
-         |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
-         |ORDER BY probe_id, rank""".stripMargin,
-
-    // the same argmax assignment split at the batch boundary, occupancy
-    // merged with a FULL join so empty-on-one-side shards count at 0
-    "llm_ivf_incremental" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
-         |                     embedding AS centroid
-         |              FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, centroid_id,
-         |               row_number() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
-         |        FROM embeddings, cent),
-         |a AS (SELECT vec_id, centroid_id FROM asg WHERE rn = 1),
-         |oldc AS (SELECT centroid_id, COUNT(*) AS n_old FROM a
-         |         WHERE vec_id < 1600 GROUP BY centroid_id),
-         |newc AS (SELECT centroid_id, COUNT(*) AS n_new FROM a
-         |         WHERE vec_id >= 1600 GROUP BY centroid_id)
-         |SELECT COALESCE(o.centroid_id, nw.centroid_id) AS centroid_id,
-         |       CAST(COALESCE(o.n_old, 0) AS BIGINT) AS n_old,
-         |       CAST(COALESCE(nw.n_new, 0) AS BIGINT) AS n_new,
-         |       CAST(COALESCE(o.n_old, 0) + COALESCE(nw.n_new, 0) AS BIGINT) AS n_total
-         |FROM oldc o FULL JOIN newc nw ON nw.centroid_id = o.centroid_id
-         |ORDER BY centroid_id""".stripMargin,
-
-    // the same assignment replay, then: heaviest cluster by (n DESC,
-    // id), seed A = min-vec_id member, seed B = least-cosine-to-A member
-    // (ties min vec_id), sub-assignment argmax with min-id ties, and the
-    // kmeans_iter DECIMAL-exact mean arithmetic on the two sub-groups
-    "llm_ivf_split" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
-         |                     embedding AS centroid
-         |              FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-         |               row_number() OVER (PARTITION BY e.vec_id
-         |                 ORDER BY ${duckCosineRaw("e.embedding", "c.centroid")} DESC, c.centroid_id) AS rn
-         |        FROM embeddings e, cent c),
-         |a AS (SELECT vec_id, embedding, centroid_id FROM asg WHERE rn = 1),
-         |heavy AS (SELECT centroid_id FROM a GROUP BY centroid_id
-         |          ORDER BY COUNT(*) DESC, centroid_id LIMIT 1),
-         |mem AS (SELECT a.vec_id, a.embedding FROM a JOIN heavy USING (centroid_id)),
-         |sa AS (SELECT embedding AS v FROM mem ORDER BY vec_id LIMIT 1),
-         |sb AS (SELECT m.embedding AS v FROM mem m, sa
-         |       ORDER BY ${duckCosineRaw("m.embedding", "sa.v")} ASC, m.vec_id LIMIT 1),
-         |subc AS (SELECT (SELECT centroid_id FROM heavy) AS cid, v FROM sa
-         |         UNION ALL
-         |         SELECT (SELECT MAX(centroid_id) + 1 FROM cent), v FROM sb),
-         |sasg AS (SELECT m.vec_id, m.embedding, s.cid,
-         |                row_number() OVER (PARTITION BY m.vec_id
-         |                  ORDER BY ${duckCosineRaw("m.embedding", "s.v")} DESC, s.cid) AS rn
-         |         FROM mem m, subc s),
-         |sm AS (SELECT vec_id, embedding, cid FROM sasg WHERE rn = 1),
-         |px AS (SELECT sm.cid, CAST(i - 1 AS INT) AS dim,
-         |              CAST(sm.embedding[i] AS DOUBLE) AS v
-         |       FROM sm, unnest(generate_series(1, len(sm.embedding))) AS u(i))
-         |SELECT CAST(cid AS INT) AS centroid_id, dim,
-         |       CAST(ROUND(CAST(SUM(CAST(v AS DECIMAL(18,9))) AS DOUBLE)
-         |                    / COUNT(*), 6) + 0.0 AS DOUBLE) AS component,
-         |       COUNT(*) AS n_members
-         |FROM px GROUP BY cid, dim
-         |ORDER BY centroid_id, dim""".stripMargin,
-
-    // the same argmax assignment (unrounded cosine, min-cid ties via the
-    // struct ordering), rolled up with the same integer share arithmetic
-    "llm_ivf_balance" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
-         |                     embedding AS centroid
-         |              FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, centroid_id,
-         |               row_number() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
-         |        FROM embeddings, cent),
-         |occ AS (SELECT centroid_id, COUNT(*) AS n_vectors
-         |        FROM asg WHERE rn = 1 GROUP BY centroid_id),
-         |tot AS (SELECT SUM(n_vectors) AS t FROM occ)
-         |SELECT o.centroid_id, CAST(o.n_vectors AS BIGINT) AS n_vectors,
-         |       CAST(o.n_vectors * 1000000 // tot.t AS BIGINT) AS share_ppm,
-         |       CAST(o.n_vectors * 8 > 2 * tot.t AS BOOLEAN) AS is_hot
-         |FROM occ o CROSS JOIN tot
-         |ORDER BY o.centroid_id""".stripMargin,
-
-    // the same banding candidates over the exact-collapse survivors,
-    // clipped-multiset bigram overlap
-    "llm_rouge_verify" ->
-      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
-         |${minhashCtes("docs2")},
-         |nrm2 AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM docs2),
-         |bgc AS (SELECT doc_id, w[i] || ' ' || w[i+1] AS bg, count(*) AS c
-         |        FROM nrm2, unnest(generate_series(1, length(w) - 1)) AS t(i)
-         |        WHERE length(w) >= 2 GROUP BY doc_id, bg),
-         |tot AS (SELECT doc_id, SUM(c) AS t FROM bgc GROUP BY doc_id),
-         |ov AS (SELECT c.doc_a, c.doc_b, SUM(LEAST(x.c, y.c)) AS ov
-         |       FROM cands c JOIN bgc x ON x.doc_id = c.doc_a
-         |            JOIN bgc y ON y.doc_id = c.doc_b AND y.bg = x.bg
-         |       GROUP BY 1, 2)
-         |SELECT o.doc_a, o.doc_b, CAST(o.ov AS BIGINT) AS overlap2,
-         |       CAST(ta.t AS BIGINT) AS n2_a, CAST(tb.t AS BIGINT) AS n2_b,
-         |       CAST(ROUND(CAST(o.ov AS DOUBLE) / CAST(ta.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_ra,
-         |       CAST(ROUND(CAST(o.ov AS DOUBLE) / CAST(tb.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_rb
-         |FROM ov o JOIN tot ta ON ta.doc_id = o.doc_a
-         |     JOIN tot tb ON tb.doc_id = o.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // candidates = DISTINCT pairs agreeing in ANY of the 4 disjoint
-    // 8-plane bands, then exact-cosine rank — mirrors lshTopKBanded
-    "llm_ann_banded" ->
+      // candidates = DISTINCT pairs agreeing in ANY of the 4 disjoint
+      // 8-plane bands, then exact-cosine rank — mirrors lshTopKBanded
       s"""WITH bb AS (${duckBandedCte(4, 8, 64)}),
          |cand AS (SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS cand_id
          |         FROM bb p JOIN bb c
@@ -4722,9 +2868,19 @@ object Llm {
          |                    ORDER BY cos DESC, cand_id) AS INT) AS rank
          |           FROM pairs)
          |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
-         |ORDER BY probe_id, rank""".stripMargin,
+         |ORDER BY probe_id, rank""".stripMargin),
 
-    "llm_ann_recall_banded" ->
+    // the measurement pair: recall@3 of the banded index against brute
+    // force — quantifies how much the OR-of-bands recovers over
+    // llm_ann_recall's one-band baseline
+    Entry("llm_ann_recall_banded", (s, d) => {
+      val e = emb(s, d)
+      val probes = e.where("vec_id < 16")
+      Similarity.annRecall(
+        Similarity.bruteForceTopK(probes, e, 3),
+        Similarity.lshTopKBanded(probes, e, 3, bands = 4, planesPerBand = 8))
+        .orderBy("probe_id")
+    },
       s"""WITH ex_pairs AS (
          |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
          |         ${duckCosine("p.embedding", "c.embedding")} AS cos
@@ -4761,19 +2917,364 @@ object Llm {
          |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
          |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
          |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
-         |ORDER BY t.probe_id""".stripMargin,
+         |ORDER BY t.probe_id""".stripMargin),
 
-    // exact top-3 (cosine_topk CTEs, probes < 16) vs the LSH-bucketed
-    // ANN (ann_bucketed CTEs) -> per-probe hit counts -> rounded recall
-    // the same rolling-hash boundary rule over each doc's positions;
-    // cuts assembled as 0 ++ ordered boundaries ++ len (end-of-doc
-    // boundaries excluded on both sides, so no distinct is needed)
-    "llm_cdc_chunks" ->
+    // unit-normalize the embedding table (after this, cosine == dot).
+    // The unit vector is posexploded to scalar (vec_id, pos, u) rows:
+    // the driver's pandas comparator cannot sort array-typed columns
+    // (round-4 verdict #1), and EntryContractSpec now bans them.
+    Entry("llm_normalize", (s, d) =>
+      Similarity.l2Normalize(emb(s, d))
+        .select(col("vec_id"), posexplode(col("unit")))
+        .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
+          col("col").as("u"))
+        .orderBy("vec_id", "pos"),
+      s"""WITH un AS (SELECT vec_id,
+         |       list_transform(embedding,
+         |         x -> CAST(ROUND(CAST(x AS DOUBLE) / NULLIF(${duckNorm("embedding")}, 0.0), 6) + 0.0 AS DOUBLE)) AS unit
+         |FROM embeddings)
+         |SELECT vec_id, CAST(generate_subscripts(unit, 1) AS BIGINT) AS pos,
+         |       unnest(unit) AS u
+         |FROM un ORDER BY vec_id, pos""".stripMargin),
+
+    // JL-style dimensionality reduction over the shared md5 hyperplanes
+    // (sign of projection j == lshBucket bit j); per-row fold, no shuffle
+    Entry("llm_random_project", (s, d) =>
+      Similarity.randomProject(emb(s, d), outDims = 8)
+        .select(col("vec_id"), posexplode(col("projected")))
+        .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
+          col("col").as("v"))
+        .orderBy("vec_id", "pos"),
+      // NULLIF mirrors the Spark-side ANSI guard; "+ 0.0" canonicalizes
+      // DuckDB's ROUND, which (unlike Spark's BigDecimal HALF_UP) preserves
+      // the sign of zero — a tiny negative component would otherwise hash
+      // as '-0.0' against Spark's '0.0'
+      {
+      // the same left-to-right fold as the Spark plan, per output dim,
+      // against the identical plane literals; + 0.0 canonicalizes -0.0
+      val comps = (0 until 8).map { p =>
+        val plane = duckPlane(p, 64)
+        s"""CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+           |  list_transform(generate_series(1, LEAST(len(embedding), 64)),
+           |    i -> CAST(embedding[i] AS DOUBLE) * ($plane)[i])),
+           |  (acc, v) -> acc + v), 6) + 0.0 AS DOUBLE)""".stripMargin
+      }.mkString(",\n ")
+      s"""WITH pr AS (SELECT vec_id, [$comps] AS projected FROM embeddings)
+         |SELECT vec_id, CAST(generate_subscripts(projected, 1) AS BIGINT) AS pos,
+         |       unnest(projected) AS v
+         |FROM pr ORDER BY vec_id, pos""".stripMargin
+    }),
+
+    // IVF ANN with FIXED centroids (the first 8 corpus vectors) so the
+    // oracle checks the whole assign/shortlist/candidate-join/top-k query
+    // path without having to oracle k-means training (round-3 ADVICE; the
+    // trained path is covered by IvfSpec's recall test). nprobe=2 of k=8:
+    // the candidate join really prunes, it isn't a disguised brute force.
+    Entry("llm_ivf_topk", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.topK(e.where("vec_id < 6"), e, centroids, k = 3, nprobe = 2)
+        .orderBy("probe_id", "rank")
+    },
+      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id, embedding AS centroid
+         |              FROM embeddings WHERE vec_id < 8),
+         |asg AS (SELECT vec_id AS cand_id, embedding AS ce, centroid_id,
+         |               row_number() OVER (PARTITION BY vec_id
+         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
+         |        FROM embeddings, cent),
+         |assigned AS (SELECT cand_id, ce, centroid_id FROM asg WHERE rn = 1),
+         |sl AS (SELECT vec_id AS probe_id, embedding AS pe, centroid_id,
+         |              row_number() OVER (PARTITION BY vec_id
+         |                ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
+         |       FROM embeddings, cent WHERE vec_id < 6),
+         |pairs AS (SELECT s.probe_id, a.cand_id, ${duckCosine("s.pe", "a.ce")} AS cos
+         |          FROM (SELECT * FROM sl WHERE rn <= 2) s
+         |          JOIN assigned a ON a.centroid_id = s.centroid_id
+         |          WHERE a.cand_id <> s.probe_id),
+         |ranked AS (SELECT probe_id, cand_id, cos,
+         |                  CAST(row_number() OVER (PARTITION BY probe_id
+         |                    ORDER BY cos DESC, cand_id) AS INT) AS rank
+         |           FROM pairs)
+         |SELECT probe_id, cand_id, cos, rank FROM ranked WHERE rank <= 3
+         |ORDER BY probe_id, rank""".stripMargin),
+
+    // incremental ANN ingest: assign only the NEW batch (vec_id >= 1600,
+    // the arriving 20%) to the existing centroids and merge occupancy
+    // deltas into the standing per-shard counts — the vector-DB ingest
+    // step (cdc_incremental_agg's monoid-merge pattern on the IVF
+    // layout): the corpus is never re-assigned, only the batch moves
+    Entry("llm_ivf_incremental", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      def occ(vecs: org.apache.spark.sql.DataFrame) =
+        Ivf.assign(vecs, centroids).groupBy("centroid_id")
+          .agg(count(lit(1)).as("n"))
+      occ(e.where("vec_id < 1600"))
+        .withColumnRenamed("n", "n_old")
+        .join(occ(e.where("vec_id >= 1600"))
+          .withColumnRenamed("n", "n_new"), Seq("centroid_id"), "full")
+        .selectExpr("centroid_id",
+          "CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old",
+          "CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new",
+          "CAST(COALESCE(n_old, 0) + COALESCE(n_new, 0) AS BIGINT) AS n_total")
+        .orderBy("centroid_id")
+    },
+      // the same argmax assignment split at the batch boundary, occupancy
+      // merged with a FULL join so empty-on-one-side shards count at 0
+      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
+         |                     embedding AS centroid
+         |              FROM embeddings WHERE vec_id < 8),
+         |asg AS (SELECT vec_id, centroid_id,
+         |               row_number() OVER (PARTITION BY vec_id
+         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
+         |        FROM embeddings, cent),
+         |a AS (SELECT vec_id, centroid_id FROM asg WHERE rn = 1),
+         |oldc AS (SELECT centroid_id, COUNT(*) AS n_old FROM a
+         |         WHERE vec_id < 1600 GROUP BY centroid_id),
+         |newc AS (SELECT centroid_id, COUNT(*) AS n_new FROM a
+         |         WHERE vec_id >= 1600 GROUP BY centroid_id)
+         |SELECT COALESCE(o.centroid_id, nw.centroid_id) AS centroid_id,
+         |       CAST(COALESCE(o.n_old, 0) AS BIGINT) AS n_old,
+         |       CAST(COALESCE(nw.n_new, 0) AS BIGINT) AS n_new,
+         |       CAST(COALESCE(o.n_old, 0) + COALESCE(nw.n_new, 0) AS BIGINT) AS n_total
+         |FROM oldc o FULL JOIN newc nw ON nw.centroid_id = o.centroid_id
+         |ORDER BY centroid_id""".stripMargin),
+
+    // IVF maintenance ACTION (r15 verdict #6): split the heaviest
+    // cluster by one Lloyd step on 2 seeded sub-centroids and emit the
+    // UPDATED centroid rows only — the hot-shard surgery the balance
+    // audit calls for; only the split cluster's members are rescanned
+    // after the one checkpointed assign (plan-gated in PlanShapeSpec)
+    Entry("llm_ivf_split", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.splitHeaviest(e, centroids)
+        .selectExpr("CAST(centroid_id AS INT) AS centroid_id", "dim",
+          "component", "CAST(n_members AS BIGINT) AS n_members")
+        .orderBy("centroid_id", "dim")
+    },
+      // the same assignment replay, then: heaviest cluster by (n DESC,
+      // id), seed A = min-vec_id member, seed B = least-cosine-to-A member
+      // (ties min vec_id), sub-assignment argmax with min-id ties, and the
+      // kmeans_iter DECIMAL-exact mean arithmetic on the two sub-groups
+      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
+         |                     embedding AS centroid
+         |              FROM embeddings WHERE vec_id < 8),
+         |asg AS (SELECT e.vec_id, e.embedding, c.centroid_id,
+         |               row_number() OVER (PARTITION BY e.vec_id
+         |                 ORDER BY ${duckCosineRaw("e.embedding", "c.centroid")} DESC, c.centroid_id) AS rn
+         |        FROM embeddings e, cent c),
+         |a AS (SELECT vec_id, embedding, centroid_id FROM asg WHERE rn = 1),
+         |heavy AS (SELECT centroid_id FROM a GROUP BY centroid_id
+         |          ORDER BY COUNT(*) DESC, centroid_id LIMIT 1),
+         |mem AS (SELECT a.vec_id, a.embedding FROM a JOIN heavy USING (centroid_id)),
+         |sa AS (SELECT embedding AS v FROM mem ORDER BY vec_id LIMIT 1),
+         |sb AS (SELECT m.embedding AS v FROM mem m, sa
+         |       ORDER BY ${duckCosineRaw("m.embedding", "sa.v")} ASC, m.vec_id LIMIT 1),
+         |subc AS (SELECT (SELECT centroid_id FROM heavy) AS cid, v FROM sa
+         |         UNION ALL
+         |         SELECT (SELECT MAX(centroid_id) + 1 FROM cent), v FROM sb),
+         |sasg AS (SELECT m.vec_id, m.embedding, s.cid,
+         |                row_number() OVER (PARTITION BY m.vec_id
+         |                  ORDER BY ${duckCosineRaw("m.embedding", "s.v")} DESC, s.cid) AS rn
+         |         FROM mem m, subc s),
+         |sm AS (SELECT vec_id, embedding, cid FROM sasg WHERE rn = 1),
+         |px AS (SELECT sm.cid, CAST(i - 1 AS INT) AS dim,
+         |              CAST(sm.embedding[i] AS DOUBLE) AS v
+         |       FROM sm, unnest(generate_series(1, len(sm.embedding))) AS u(i))
+         |SELECT CAST(cid AS INT) AS centroid_id, dim,
+         |       CAST(ROUND(CAST(SUM(CAST(v AS DECIMAL(18,9))) AS DOUBLE)
+         |                    / COUNT(*), 6) + 0.0 AS DOUBLE) AS component,
+         |       COUNT(*) AS n_members
+         |FROM px GROUP BY cid, dim
+         |ORDER BY centroid_id, dim""".stripMargin),
+
+    // IVF shard-balance report — the nlist-occupancy audit an ANN
+    // deployment runs before trusting latency SLOs (a hot centroid owns
+    // the probe tail): nearest-centroid assignment (one broadcast of the
+    // k-row table, map-side argmax) rolled up to per-centroid occupancy,
+    // ppm share, and an integer hot flag (n·k > 2·total = twice the
+    // balanced share). Fixed centroids like llm_ivf_topk so the oracle
+    // replays assignment without oracling k-means
+    Entry("llm_ivf_balance", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.assign(e, centroids)
+        .groupBy("centroid_id")
+        .agg(count(lit(1)).as("n_vectors"))
+        .selectExpr("centroid_id", "CAST(n_vectors AS BIGINT) AS n_vectors",
+          "CAST(n_vectors * 1000000 DIV (SUM(n_vectors) OVER ()) AS BIGINT) AS share_ppm",
+          "CAST(n_vectors * 8 > 2 * (SUM(n_vectors) OVER ()) AS BOOLEAN) AS is_hot")
+        .orderBy("centroid_id")
+    },
+      // the same argmax assignment (unrounded cosine, min-cid ties via the
+      // struct ordering), rolled up with the same integer share arithmetic
+      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id,
+         |                     embedding AS centroid
+         |              FROM embeddings WHERE vec_id < 8),
+         |asg AS (SELECT vec_id, centroid_id,
+         |               row_number() OVER (PARTITION BY vec_id
+         |                 ORDER BY ${duckCosineRaw("embedding", "centroid")} DESC, centroid_id) AS rn
+         |        FROM embeddings, cent),
+         |occ AS (SELECT centroid_id, COUNT(*) AS n_vectors
+         |        FROM asg WHERE rn = 1 GROUP BY centroid_id),
+         |tot AS (SELECT SUM(n_vectors) AS t FROM occ)
+         |SELECT o.centroid_id, CAST(o.n_vectors AS BIGINT) AS n_vectors,
+         |       CAST(o.n_vectors * 1000000 // tot.t AS BIGINT) AS share_ppm,
+         |       CAST(o.n_vectors * 8 > 2 * tot.t AS BOOLEAN) AS is_hot
+         |FROM occ o CROSS JOIN tot
+         |ORDER BY o.centroid_id""".stripMargin),
+
+    // ROUGE-2 recall verification of near-dup candidates — the CLIPPED
+    // MULTISET overlap (Σ min(count_a, count_b)), which catches repeated-
+    // passage duplication that set-Jaccard (llm_jaccard_verify) and
+    // tf-cosine (llm_lexical_cosine) each miss differently; both
+    // directions reported because recall is asymmetric. Candidates from
+    // the same MinHash banding over exact-collapse SURVIVORS — copy
+    // pairs are trivially recall 1.0 and would densify candidates
+    // quadratically per exact class; never all-pairs; counts exact
+    // integers, two ROUND divisions at the edge
+    Entry("llm_rouge_verify", (s, d) => {
+      // localCheckpoint (r16 opt): only the pair-sized candidate set is
+      // materialized (two consumers). Checkpointing the survivor corpus
+      // and the bigram multiset was A/B'd and LOST (1.76 → 2.14 s) —
+      // corpus-scale string materialization costs more than the lazy
+      // re-derives here.
+      val dd = Dedup.exactSurvivors(docs(s, d))
+      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
+        .localCheckpoint()
+      val bg = dd.select(col("doc_id"),
+          expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
+        .where(size(col("w")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(1, size(w) - 1), i -> concat(w[i-1], ' ', w[i]))"))
+          .as("bg"))
+        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
+      val tot = bg.groupBy("doc_id").agg(sum("c").as("t"))
+      cand.as("c")
+        .join(bg.as("x"), expr("x.doc_id = c.doc_a"))
+        .join(bg.as("y"), expr("y.doc_id = c.doc_b AND y.bg = x.bg"))
+        .groupBy(col("c.doc_a"), col("c.doc_b"))
+        .agg(sum(expr("LEAST(x.c, y.c)")).as("ov"))
+        .join(tot.as("ta"), expr("ta.doc_id = doc_a"))
+        .join(tot.as("tb"), expr("tb.doc_id = doc_b"))
+        .selectExpr("doc_a", "doc_b", "CAST(ov AS BIGINT) AS overlap2",
+          "CAST(ta.t AS BIGINT) AS n2_a", "CAST(tb.t AS BIGINT) AS n2_b",
+          "CAST(ROUND(CAST(ov AS DOUBLE) / CAST(ta.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_ra",
+          "CAST(ROUND(CAST(ov AS DOUBLE) / CAST(tb.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_rb")
+        .orderBy("doc_a", "doc_b")
+    },
+      // the same banding candidates over the exact-collapse survivors,
+      // clipped-multiset bigram overlap
+      s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
+         |${minhashCtes("docs2")},
+         |nrm2 AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM docs2),
+         |bgc AS (SELECT doc_id, w[i] || ' ' || w[i+1] AS bg, count(*) AS c
+         |        FROM nrm2, unnest(generate_series(1, length(w) - 1)) AS t(i)
+         |        WHERE length(w) >= 2 GROUP BY doc_id, bg),
+         |tot AS (SELECT doc_id, SUM(c) AS t FROM bgc GROUP BY doc_id),
+         |ov AS (SELECT c.doc_a, c.doc_b, SUM(LEAST(x.c, y.c)) AS ov
+         |       FROM cands c JOIN bgc x ON x.doc_id = c.doc_a
+         |            JOIN bgc y ON y.doc_id = c.doc_b AND y.bg = x.bg
+         |       GROUP BY 1, 2)
+         |SELECT o.doc_a, o.doc_b, CAST(o.ov AS BIGINT) AS overlap2,
+         |       CAST(ta.t AS BIGINT) AS n2_a, CAST(tb.t AS BIGINT) AS n2_b,
+         |       CAST(ROUND(CAST(o.ov AS DOUBLE) / CAST(ta.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_ra,
+         |       CAST(ROUND(CAST(o.ov AS DOUBLE) / CAST(tb.t AS DOUBLE), 6) AS DOUBLE) AS rouge2_rb
+         |FROM ov o JOIN tot ta ON ta.doc_id = o.doc_a
+         |     JOIN tot tb ON tb.doc_id = o.doc_b
+         |ORDER BY doc_a, doc_b""".stripMargin),
+
+    // ANN EVALUATION: recall@3 of the LSH-bucketed ANN against the exact
+    // brute-force top-3, per probe — the accept/reject measurement an
+    // index deployment runs before trusting approximate results. The
+    // 8-plane single-band bucketing genuinely misses neighbors outside
+    // the probe's bucket, so the entry exercises the partial-recall and
+    // zero-hit paths, not just agreement. Integer hit counts until the
+    // final rounded ratio; both rankings tie-break on cand_id, so both
+    // result sets (and hence the recall) are deterministic.
+    Entry("llm_ann_recall", (s, d) => {
+      val e = emb(s, d)
+      val probes = e.where("vec_id < 16")
+      val exact = Similarity.bruteForceTopK(probes, e, 3)
+      val approx = Similarity.lshTopK(probes, e, 3, planes = 8)
+      Similarity.annRecall(exact, approx).orderBy("probe_id")
+    },
+      s"""WITH ex_pairs AS (
+         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
+         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
+         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
+         |  WHERE p.vec_id < 16),
+         |ex_ranked AS (SELECT probe_id, cand_id,
+         |                     row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY cos DESC, cand_id) AS rank
+         |              FROM ex_pairs),
+         |ex AS (SELECT probe_id, cand_id FROM ex_ranked WHERE rank <= 3),
+         |b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
+         |      FROM embeddings),
+         |ap_pairs AS (
+         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
+         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
+         |  FROM b p JOIN b c ON p.bucket = c.bucket AND c.vec_id <> p.vec_id
+         |  WHERE p.vec_id < 16),
+         |ap_ranked AS (SELECT probe_id, cand_id,
+         |                     row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY cos DESC, cand_id) AS rank
+         |              FROM ap_pairs),
+         |ap AS (SELECT probe_id, cand_id FROM ap_ranked WHERE rank <= 3),
+         |hits AS (SELECT e.probe_id, count(*) AS n_hit
+         |         FROM ex e JOIN ap a
+         |           ON a.probe_id = e.probe_id AND a.cand_id = e.cand_id
+         |         GROUP BY e.probe_id),
+         |tot AS (SELECT probe_id, count(*) AS n_exact FROM ex GROUP BY probe_id)
+         |SELECT t.probe_id, CAST(t.n_exact AS BIGINT) AS n_exact,
+         |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
+         |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
+         |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
+         |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
+         |ORDER BY t.probe_id""".stripMargin),
+
+    // content-defined chunk boundaries (FastCDC-style rolling-hash
+    // cuts): every (doc, chunk) with its offset/length/md5 — the
+    // storage-dedup keys identical passages share wherever they sit
+    Entry("llm_cdc_chunks", (s, d) =>
+      Dedup.cdcChunks(docs(s, d)).orderBy("doc_id", "chunk_idx"),
+      // exact top-3 (cosine_topk CTEs, probes < 16) vs the LSH-bucketed
+      // ANN (ann_bucketed CTEs) -> per-probe hit counts -> rounded recall
+      // the same rolling-hash boundary rule over each doc's positions;
+      // cuts assembled as 0 ++ ordered boundaries ++ len (end-of-doc
+      // boundaries excluded on both sides, so no distinct is needed)
       s"""WITH $cdcChunkCtes
          |SELECT doc_id, chunk_idx, start, len, chunk_md5
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
+         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    "llm_cdc_dedup" ->
+    // the dedup-store ledger over those chunks: physical bytes =
+    // unique-chunk bytes; the ratio is what a chunked blob store saves.
+    // ONE pass over the chunk stream: same-md5 chunks share their
+    // length, so logical bytes = Σ ul·copies off the unique table
+    Entry("llm_cdc_dedup", (s, d) =>
+      Dedup.cdcChunks(docs(s, d))
+        .groupBy("chunk_md5")
+        .agg(first(col("len")).cast("long").as("ul"),
+          count(lit(1)).as("copies"))
+        .agg(sum(col("copies")).as("n_chunks"),
+          count(lit(1)).as("n_unique"),
+          sum(expr("ul * copies")).as("logical_bytes"),
+          sum(col("ul")).as("physical_bytes"))
+        .select(col("n_chunks"), col("n_unique"), col("logical_bytes"),
+          col("physical_bytes"),
+          expr("CAST(ROUND(CAST(physical_bytes AS DOUBLE) " +
+            "/ logical_bytes, 6) AS DOUBLE)").as("stored_fraction")),
       s"""WITH $cdcChunkCtes,
          |u AS (SELECT chunk_md5, MIN(len) AS ul FROM ch GROUP BY 1)
          |SELECT (SELECT CAST(count(*) AS BIGINT) FROM ch) AS n_chunks,
@@ -4783,10 +3284,22 @@ object Llm {
          |       CAST(ROUND(
          |         (SELECT CAST(SUM(ul) AS DOUBLE) FROM u)
          |         / (SELECT CAST(SUM(len) AS BIGINT) FROM ch), 6) AS DOUBLE)
-         |         AS stored_fraction""".stripMargin,
+         |         AS stored_fraction""".stripMargin),
 
-    // the same DECIMAL-exact means, cosine folded as list(x ORDER BY dim)
-    "llm_embedding_drift" ->
+    // per-group centroid drift between corpus versions: v2 drops every
+    // 7th vector (re-land churn) and NEGATES every 3rd (a re-encoded /
+    // poisoned slice); cos(mean_v1, mean_v2) per source flags it
+    Entry("llm_embedding_drift", (s, d) => {
+      val e = emb(s, d)
+      val v1 = e.select(expr("vec_id % 5").as("grp"), col("embedding"))
+      val v2 = e.where("vec_id % 7 <> 0")
+        .select(expr("vec_id % 5").as("grp"),
+          expr("""CASE WHEN vec_id % 3 = 0
+                 |THEN transform(embedding, x -> CAST(-x AS FLOAT))
+                 |ELSE embedding END""".stripMargin).as("embedding"))
+      Similarity.embeddingDrift(v1, v2).orderBy("grp")
+    },
+      // the same DECIMAL-exact means, cosine folded as list(x ORDER BY dim)
       s"""WITH v1 AS (SELECT vec_id % 5 AS grp, embedding FROM embeddings),
          |v2 AS (SELECT vec_id % 5 AS grp,
          |              CASE WHEN vec_id % 3 = 0
@@ -4821,11 +3334,25 @@ object Llm {
          |            * SQRT(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
          |              list(mb * mb ORDER BY dim)), (acc, x) -> acc + x))), 6)
          |       AS DOUBLE) AS drift_cos
-         |FROM j GROUP BY grp ORDER BY grp""".stripMargin,
+         |FROM j GROUP BY grp ORDER BY grp""".stripMargin),
 
-    // the same exact-vs-approx recall shape, approx = brute force over
-    // the 16-element list prefix on both sides
-    "llm_matryoshka_recall" ->
+    // matryoshka truncation eval: top-3 retrieval on the 16-dim PREFIX
+    // of each embedding scored against full-64-dim exact top-3 — the
+    // measurement that decides whether prefix-truncated vectors (4x
+    // less shuffle width and index memory) retrieve well enough; pure
+    // reuse of the brute-force + recall machinery over sliced arrays
+    Entry("llm_matryoshka_recall", (s, d) => {
+      val e = emb(s, d)
+      val probes = e.where("vec_id < 16")
+      def pre(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("embedding", expr("slice(embedding, 1, 16)"))
+      Similarity.annRecall(
+          Similarity.bruteForceTopK(probes, e, 3),
+          Similarity.bruteForceTopK(pre(probes), pre(e), 3))
+        .orderBy("probe_id")
+    },
+      // the same exact-vs-approx recall shape, approx = brute force over
+      // the 16-element list prefix on both sides
       s"""WITH ex_pairs AS (
          |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
          |         ${duckCosine("p.embedding", "c.embedding")} AS cos
@@ -4856,147 +3383,21 @@ object Llm {
          |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
          |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
          |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
-         |ORDER BY t.probe_id""".stripMargin,
+         |ORDER BY t.probe_id""".stripMargin),
 
-    "llm_ann_recall" ->
-      s"""WITH ex_pairs AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 16),
-         |ex_ranked AS (SELECT probe_id, cand_id,
-         |                     row_number() OVER (PARTITION BY probe_id
-         |                       ORDER BY cos DESC, cand_id) AS rank
-         |              FROM ex_pairs),
-         |ex AS (SELECT probe_id, cand_id FROM ex_ranked WHERE rank <= 3),
-         |b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
-         |      FROM embeddings),
-         |ap_pairs AS (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
-         |  FROM b p JOIN b c ON p.bucket = c.bucket AND c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 16),
-         |ap_ranked AS (SELECT probe_id, cand_id,
-         |                     row_number() OVER (PARTITION BY probe_id
-         |                       ORDER BY cos DESC, cand_id) AS rank
-         |              FROM ap_pairs),
-         |ap AS (SELECT probe_id, cand_id FROM ap_ranked WHERE rank <= 3),
-         |hits AS (SELECT e.probe_id, count(*) AS n_hit
-         |         FROM ex e JOIN ap a
-         |           ON a.probe_id = e.probe_id AND a.cand_id = e.cand_id
-         |         GROUP BY e.probe_id),
-         |tot AS (SELECT probe_id, count(*) AS n_exact FROM ex GROUP BY probe_id)
-         |SELECT t.probe_id, CAST(t.n_exact AS BIGINT) AS n_exact,
-         |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
-         |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
-         |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
-         |ORDER BY t.probe_id""".stripMargin,
-
-    // the generator's pixel formula binned identically over the grid
-    "llm_image_histogram" ->
-      """WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
-        |                     1 + (doc_id * 3) % 37 AS h
-        |              FROM documents WHERE doc_id < 200),
-        |px AS (SELECT doc_id, ((x * 7 + y * 11 + doc_id) % 256) // 16 AS bin
-        |       FROM dims, unnest(generate_series(0, w - 1)) AS ux(x),
-        |                  unnest(generate_series(0, h - 1)) AS uy(y))
-        |SELECT doc_id, CAST(bin AS INT) AS bin,
-        |       CAST(COUNT(*) AS BIGINT) AS n_pixels
-        |FROM px GROUP BY doc_id, bin
-        |ORDER BY doc_id, bin""".stripMargin,
-
-    // survivor pairs re-expanded through per-class per-source copy
-    // counts + the closed-form intra-class verbatim-copy mass
-    "llm_dup_source_matrix" ->
-      s"""WITH fps AS (SELECT doc_id, source, md5($NORM) AS fp FROM documents),
-         |cls AS (SELECT fp, min(doc_id) AS keep_id FROM fps GROUP BY fp),
-         |clsrc AS (SELECT fp, source, count(*) AS n FROM fps GROUP BY fp, source),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d
-         |          JOIN cls ON cls.keep_id = d.doc_id),
-         |${minhashCtes("docs2")},
-         |$jaccardCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
-         |crossm AS (SELECT ca.source AS source_a, cb.source AS source_b,
-         |                  ca.n * cb.n AS m
-         |           FROM pairs p
-         |           JOIN cls ka ON ka.keep_id = p.doc_a
-         |           JOIN cls kb ON kb.keep_id = p.doc_b
-         |           JOIN clsrc ca ON ca.fp = ka.fp
-         |           JOIN clsrc cb ON cb.fp = kb.fp),
-         |intram AS (SELECT a.source AS source_a, b.source AS source_b,
-         |                  CASE WHEN a.source = b.source
-         |                       THEN a.n * (a.n - 1) // 2
-         |                       ELSE a.n * b.n END AS m
-         |           FROM clsrc a JOIN clsrc b
-         |             ON a.fp = b.fp AND a.source <= b.source),
-         |u AS (SELECT * FROM crossm
-         |      UNION ALL SELECT * FROM intram WHERE m > 0)
-         |SELECT source_a, source_b, CAST(SUM(m) AS BIGINT) AS n_pairs
-         |FROM u GROUP BY source_a, source_b
-         |ORDER BY source_a, source_b""".stripMargin,
-
-    // the generator's dimension formulas routed through the identical
-    // bucket scoring (one IEEE division, ties to lowest bucket id)
-    "llm_image_buckets" ->
-      """WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
-        |                     1 + (doc_id * 3) % 37 AS h
-        |              FROM documents
-        |              WHERE (1 + doc_id % 47) * (1 + (doc_id * 3) % 37) >= 64),
-        |buckets(bid, a, bb) AS (VALUES (1, 1, 1), (2, 4, 3), (3, 3, 4),
-        |                               (4, 16, 9), (5, 9, 16)),
-        |scored AS (SELECT doc_id, w, h, bid, a, bb,
-        |                  CAST(abs(w * bb - a * h) AS DOUBLE) / CAST(bb AS DOUBLE) AS m
-        |           FROM dims CROSS JOIN buckets),
-        |pick AS (SELECT doc_id, w, h, bid, a, bb,
-        |                row_number() OVER (PARTITION BY doc_id ORDER BY m, bid) AS rn
-        |         FROM scored)
-        |SELECT CAST(a AS VARCHAR) || ':' || CAST(bb AS VARCHAR) AS bucket,
-        |       CAST(COUNT(*) AS BIGINT) AS n_images,
-        |       CAST(SUM(w * h) AS BIGINT) AS sum_pixels,
-        |       MIN(doc_id) AS min_doc
-        |FROM pick WHERE rn = 1
-        |GROUP BY a, bb ORDER BY bucket""".stripMargin,
-
-    // the same integer score, closed-form decile and cumulative share;
-    // DuckDB regex needs the 'g' flag Spark applies by default
-    "llm_quality_survival" ->
-      """WITH sc AS (SELECT doc_id, n_chars,
-        |                   (1000 * length(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g')))
-        |                     // GREATEST(n_chars, 1) AS score
-        |            FROM documents),
-        |n AS (SELECT COUNT(*) AS nd, SUM(n_chars) AS total_chars FROM sc),
-        |r AS (SELECT doc_id, n_chars, score,
-        |             ((row_number() OVER (ORDER BY score DESC, doc_id) - 1) * 10)
-        |               // nd + 1 AS decile
-        |      FROM sc CROSS JOIN n),
-        |g AS (SELECT decile, COUNT(*) AS n_docs,
-        |             MIN(score) AS min_score, MAX(score) AS max_score,
-        |             SUM(n_chars) AS sum_chars
-        |      FROM r GROUP BY decile)
-        |SELECT CAST(decile AS INT) AS decile, CAST(n_docs AS BIGINT) AS n_docs,
-        |       CAST(min_score AS BIGINT) AS min_score,
-        |       CAST(max_score AS BIGINT) AS max_score,
-        |       CAST(sum_chars AS BIGINT) AS sum_chars,
-        |       CAST(ROUND(CAST(SUM(sum_chars) OVER (ORDER BY decile
-        |              ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |            / CAST(n.total_chars AS DOUBLE), 6) AS DOUBLE)
-        |         AS cum_char_frac
-        |FROM g CROSS JOIN n ORDER BY decile""".stripMargin,
-
-    // closed-form IHDR expectation: ImageIO writes 8-bit truecolor
-    // (bit depth 8, color type 2) for TYPE_INT_RGB input per the PNG spec
-    "llm_image_meta" ->
-      """SELECT doc_id, TRUE AS sig_ok,
-        |       CAST(1 + doc_id % 47 AS INT) AS width,
-        |       CAST(1 + (doc_id * 3) % 37 AS INT) AS height,
-        |       CAST(8 AS INT) AS bit_depth,
-        |       CAST(2 AS INT) AS color_type
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // identical amp reduction, scaling tree and round — codes replayed
-    // element-by-element through DuckDB list functions
-    "llm_quantize_embed" ->
+    // int8-range scalar quantization: per-vector code signature (sum /
+    // zeros / min / max) pins every code of every vector — a one-ULP
+    // drift in the amp reduction or the rounding step hash-mismatches
+    Entry("llm_quantize_embed", (s, d) =>
+      Similarity.quantizeCodes(emb(s, d)).selectExpr(
+          "vec_id",
+          "aggregate(codes, CAST(0 AS BIGINT), (acc, v) -> acc + v) AS code_sum",
+          "CAST(size(filter(codes, v -> v = 0)) AS INT) AS n_zero",
+          "array_min(codes) AS code_min",
+          "array_max(codes) AS code_max")
+        .orderBy("vec_id"),
+      // identical amp reduction, scaling tree and round — codes replayed
+      // element-by-element through DuckDB list functions
       s"""WITH amp AS (SELECT max(abs(CAST(x AS DOUBLE))) AS a
          |             FROM (SELECT unnest(embedding) AS x FROM embeddings)),
          |q AS (SELECT vec_id,
@@ -5008,11 +3409,20 @@ object Llm {
          |       CAST(len(list_filter(codes, v -> v = 0)) AS INT) AS n_zero,
          |       CAST(list_min(codes) AS INT) AS code_min,
          |       CAST(list_max(codes) AS INT) AS code_max
-         |FROM q ORDER BY vec_id""".stripMargin,
+         |FROM q ORDER BY vec_id""".stripMargin),
 
-    // exact float-cosine top-3 vs integer-code-dot top-3, both ranked
-    // with the cand_id tie-break; the integer dot needs no rounding edge
-    "llm_quantize_recall" ->
+    // recall@3 of integer-code dot-product ranking against exact float
+    // cosine — measures what the 4x memory saving costs in ranking
+    // quality, the acceptance gate before deploying quantized ANN
+    Entry("llm_quantize_recall", (s, d) => {
+      val e = emb(s, d)
+      val exact = Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 3)
+      val q = Similarity.quantizeCodes(e)
+      val approx = Similarity.quantizedTopK(q.where("vec_id < 16"), q, 3)
+      Similarity.annRecall(exact, approx).orderBy("probe_id")
+    },
+      // exact float-cosine top-3 vs integer-code-dot top-3, both ranked
+      // with the cand_id tie-break; the integer dot needs no rounding edge
       s"""WITH ex_pairs AS (
          |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
          |         ${duckCosine("p.embedding", "c.embedding")} AS cos
@@ -5050,12 +3460,22 @@ object Llm {
          |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
          |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
          |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
-         |ORDER BY t.probe_id""".stripMargin,
+         |ORDER BY t.probe_id""".stripMargin),
 
-    // mirrors the entry: nearest-centroid assignment ranks on the RAW
-    // cosine (both engines order the same bit-identical doubles), the
-    // drop decision compares the ROUND(...,6) cosine
-    "llm_semantic_dedup" ->
+    // SemDeDup composition on fixed centroids (same round-3 pattern as
+    // llm_ivf_topk: the query path is oracled without oracling k-means;
+    // the trained path is IvfSpec-covered). Threshold 0.4 drops a real
+    // slice at every scale (18/19/235 vectors at sf0.001/0.01/0.1)
+    Entry("llm_semantic_dedup", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.semanticDedup(e, centroids, minCosine = 0.4).orderBy("vec_id")
+    },
+      // mirrors the entry: nearest-centroid assignment ranks on the RAW
+      // cosine (both engines order the same bit-identical doubles), the
+      // drop decision compares the ROUND(...,6) cosine
       s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS centroid_id, embedding AS centroid
          |              FROM embeddings WHERE vec_id < 8),
          |asg AS (SELECT vec_id, embedding, centroid_id,
@@ -5070,18 +3490,33 @@ object Llm {
          |SELECT a.vec_id, a.centroid_id
          |FROM a LEFT JOIN dropped d ON a.vec_id = d.vec_id
          |WHERE d.vec_id IS NULL
-         |ORDER BY a.vec_id""".stripMargin,
+         |ORDER BY a.vec_id""".stripMargin),
 
-    "llm_embed_neardup" ->
+    Entry("llm_embed_neardup", (s, d) =>
+      // 0.4: the synthetic embeddings have no true dups (max pairwise
+      // cosine ~0.51 at sf0.01) — the cut keeps the entry non-empty
+      Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
+        .orderBy("vec_a", "vec_b"),
       s"""WITH b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
          |           FROM embeddings)
          |SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
          |       ${duckCosine("x.embedding", "y.embedding")} AS cos
          |FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
          |WHERE ${duckCosine("x.embedding", "y.embedding")} >= 0.4
-         |ORDER BY vec_a, vec_b""".stripMargin,
+         |ORDER BY vec_a, vec_b""".stripMargin),
 
-    "llm_semantic_decontaminate" ->
+    // semantic decontamination: every corpus vector scored by max cosine
+    // against the broadcast benchmark slice (vec_id < 8) — the
+    // embedding-level counterpart of llm_decontaminate's n-gram
+    // containment (verbatim leakage) and llm_bloom_decontaminate's
+    // at-scale probe set; 0.2 flags a real slice of the near-orthogonal
+    // synthetic embeddings at every scale
+    Entry("llm_semantic_decontaminate", (s, d) => {
+      val e = emb(s, d)
+      Similarity.semanticDecontaminate(
+          e.where("vec_id >= 8"), e.where("vec_id < 8"), minCosine = 0.2)
+        .orderBy("vec_id")
+    },
       s"""WITH p AS (SELECT vec_id AS probe_id, embedding FROM embeddings
          |           WHERE vec_id < 8),
          |c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
@@ -5090,9 +3525,18 @@ object Llm {
          |          FROM c CROSS JOIN p)
          |SELECT vec_id, MAX(cos) AS max_cos,
          |       CAST(MAX(cos) >= 0.2 AS INT) AS contaminated
-         |FROM pairs GROUP BY 1 ORDER BY vec_id""".stripMargin,
+         |FROM pairs GROUP BY 1 ORDER BY vec_id""".stripMargin),
 
-    "llm_embed_clusters" ->
+    // cross-family composition: embedding near-dup pairs grouped into
+    // connected components by the same dupClusters operator the text
+    // pipeline uses — one clustering primitive, any pair source
+    Entry("llm_embed_clusters", (s, d) => {
+      val pairs = Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
+      Dedup.dupClusters(pairs)
+        .select(col("doc_id").as("vec_id"), col("cluster_rep"))
+        .orderBy("vec_id")
+    },
       s"""WITH RECURSIVE b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
          |           FROM embeddings),
          |p AS (SELECT x.vec_id AS va, y.vec_id AS vb
@@ -5104,26 +3548,13 @@ object Llm {
          |          UNION
          |          SELECT e.src, r.lab FROM edges e JOIN reach r ON r.vec_id = e.dst)
          |SELECT vec_id, min(lab) AS cluster_rep FROM reach
-         |GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+         |GROUP BY vec_id ORDER BY vec_id""".stripMargin),
 
-    "llm_repetition" ->
-      s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, w[i] || ' ' || w[i+1] AS gram
-         |      FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
-         |      WHERE length(w) >= 2),
-         |cnt AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-         |t AS (SELECT doc_id, gram, c,
-         |             CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n_grams,
-         |             count(*) OVER (PARTITION BY doc_id) AS n_distinct,
-         |             row_number() OVER (PARTITION BY doc_id
-         |                                ORDER BY c DESC, gram) AS rn
-         |      FROM cnt)
-         |SELECT doc_id, gram AS top_gram, c AS top_n, n_grams, n_distinct,
-         |       CAST(ROUND(CAST(c AS DOUBLE) / n_grams, 6) AS DOUBLE) AS top_frac,
-         |       CAST(ROUND(1 - CAST(n_distinct AS DOUBLE) / n_grams, 6) AS DOUBLE) AS dup_ratio
-         |FROM t WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "llm_frame_sample" ->
+    Entry("llm_frame_sample", (s, d) =>
+      // fixture text is pure ASCII (checked: octet_length == length), so
+      // the oracle's char-based slicing matches the byte-based frames
+      Multimodal.frameSample(Multimodal.attach(docs(s, d)), nFrames = 4)
+        .toDF().orderBy("doc_id", "frame_idx"),
       """WITH b AS (SELECT doc_id, text, length(text) AS n,
         |                  LEAST(4, length(text)) AS nf
         |           FROM documents),
@@ -5134,12 +3565,24 @@ object Llm {
         |SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
         |       md5(substring(text, CAST(fr + 1 AS INT), CAST(un - fr AS INT))) AS frame_md5,
         |       CAST(un - fr AS BIGINT) AS frame_bytes
-        |FROM g ORDER BY doc_id, frame_idx""".stripMargin,
+        |FROM g ORDER BY doc_id, frame_idx""".stripMargin),
 
-    // recompute the ImageSynth generation formulas over the pixel grid —
-    // the Spark side got these numbers by DECODING real PNG bytes, so a
-    // hash match here proves the javax.imageio round-trip, pixel-exact
-    "llm_multimodal_decode" ->
+    // REAL codec round-trip: deterministic PNGs synthesized from doc_id
+    // formulas (ImageSynth), encoded AND decoded through javax.imageio;
+    // geometry + exact per-channel pixel sums come from the decoded
+    // raster, and the oracle recomputes the generation formulas over a
+    // pixel grid — a wrong decode cannot hash-match.
+    Entry("llm_multimodal_decode", (s, d) => {
+      val dec = Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
+      dec.toDF().select(col("doc_id"), col("width"), col("height"),
+        col("sum_r"), col("sum_g"), col("sum_b"),
+        meanChan("sum_r").as("mean_r"), meanChan("sum_g").as("mean_g"),
+        meanChan("sum_b").as("mean_b"))
+        .orderBy("doc_id")
+    },
+      // recompute the ImageSynth generation formulas over the pixel grid —
+      // the Spark side got these numbers by DECODING real PNG bytes, so a
+      // hash match here proves the javax.imageio round-trip, pixel-exact
       """WITH dims AS (SELECT doc_id,
         |                     CAST(1 + doc_id % 47 AS INT) AS width,
         |                     CAST(1 + (doc_id * 3) % 37 AS INT) AS height
@@ -5159,12 +3602,252 @@ object Llm {
         |       CAST(ROUND(CAST(sum(r) AS DOUBLE) / (width * height), 6) AS DOUBLE) AS mean_r,
         |       CAST(ROUND(CAST(sum(g) AS DOUBLE) / (width * height), 6) AS DOUBLE) AS mean_g,
         |       CAST(ROUND(CAST(sum(b) AS DOUBLE) / (width * height), 6) AS DOUBLE) AS mean_b
-        |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin),
 
-    // target geometry by the same aspect-preserving floor math, then the
-    // nearest-neighbor source-pixel map (x*w//w2, y*h//h2) replayed over
-    // the target grid against the generation formulas
-    "llm_resize" ->
+    // header-only metadata extraction: the PNG signature + IHDR fields
+    // parsed from the REAL ImageIO-encoded bytes by pure binary slicing
+    // (substring/hex/conv — codegen'd, no decoder anywhere in the path).
+    // At 100 TB this is how an image size/type index is built for the
+    // cost of reading 26 bytes per blob; the oracle recomputes the
+    // dimensions from the generator's closed form, so agreement proves
+    // the real encoder wrote the header the spec promises
+    Entry("llm_image_meta", (s, d) =>
+      Multimodal.synthesizeImages(docs(s, d)).toDF()
+        .selectExpr("doc_id",
+          "hex(substring(png, 1, 8)) = '89504E470D0A1A0A' AS sig_ok",
+          "CAST(conv(hex(substring(png, 17, 4)), 16, 10) AS INT) AS width",
+          "CAST(conv(hex(substring(png, 21, 4)), 16, 10) AS INT) AS height",
+          "CAST(conv(hex(substring(png, 25, 1)), 16, 10) AS INT) AS bit_depth",
+          "CAST(conv(hex(substring(png, 26, 1)), 16, 10) AS INT) AS color_type")
+        .orderBy("doc_id"),
+      // closed-form IHDR expectation: ImageIO writes 8-bit truecolor
+      // (bit depth 8, color type 2) for TYPE_INT_RGB input per the PNG spec
+      """SELECT doc_id, TRUE AS sig_ok,
+        |       CAST(1 + doc_id % 47 AS INT) AS width,
+        |       CAST(1 + (doc_id * 3) % 37 AS INT) AS height,
+        |       CAST(8 AS INT) AS bit_depth,
+        |       CAST(2 AS INT) AS color_type
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    // red-channel exposure histogram over the REAL decoded raster
+    // (16 bins, DIV 16) — the colorimetry profile an image-curation
+    // filter reads; oracle = the generator's pixel formula binned
+    // identically
+    Entry("llm_image_histogram", (s, d) =>
+      Multimodal.histogramImages(Multimodal.synthesizeImages(
+          docs(s, d).where("doc_id < 200")))
+        .toDF()
+        .selectExpr("doc_id", "CAST(bin AS INT) AS bin",
+          "CAST(n_pixels AS BIGINT) AS n_pixels")
+        .orderBy("doc_id", "bin"),
+      // the generator's pixel formula binned identically over the grid
+      """WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
+        |                     1 + (doc_id * 3) % 37 AS h
+        |              FROM documents WHERE doc_id < 200),
+        |px AS (SELECT doc_id, ((x * 7 + y * 11 + doc_id) % 256) // 16 AS bin
+        |       FROM dims, unnest(generate_series(0, w - 1)) AS ux(x),
+        |                  unnest(generate_series(0, h - 1)) AS uy(y))
+        |SELECT doc_id, CAST(bin AS INT) AS bin,
+        |       CAST(COUNT(*) AS BIGINT) AS n_pixels
+        |FROM px GROUP BY doc_id, bin
+        |ORDER BY doc_id, bin""".stripMargin),
+
+    // cross-source duplication matrix — "who copies whom": UNDERLYING
+    // doc-pair counts rolled up by source pair, computed at
+    // O(survivor-pair) cost via the simhashPipeline discipline.
+    // Exact-collapse fronts the banding; near-dup survivor pairs
+    // re-expand through each class's per-source copy counts (na × nb
+    // underlying pairs, direction = min-survivor-id side), and each
+    // exact class contributes its own verbatim-copy mass in closed form
+    // (n_s1·n_s2 cross-source, C(n,2) same-source, source-ordered) —
+    // so verbatim copying across sources stays visible without ever
+    // materializing the per-copy candidate clique
+    Entry("llm_dup_source_matrix", (s, d) => {
+      val dd = docs(s, d)
+      // localCheckpoint (r16 opt): the class table joins four ways (the
+      // survivor selection + both pair endpoints), the per-source class
+      // counts three ways (both endpoints + the intra-class pairs)
+      val fps = dd.select(col("doc_id"), col("source"),
+        expr(s"md5(${graft.llm.Dedup.normalizeExpr})").as("fp"))
+      val cls = fps.groupBy("fp").agg(min("doc_id").as("keep_id"))
+        .localCheckpoint()
+      val clsrc = fps.groupBy("fp", "source").agg(count(lit(1)).as("n"))
+        .localCheckpoint()
+      val survivors = dd.join(
+        cls.select(col("keep_id").as("doc_id")), Seq("doc_id"))
+        .localCheckpoint()
+      val pairs = Dedup.nearDupPairs(survivors)
+      val crossM = pairs
+        .join(cls.select(col("keep_id").as("doc_a"), col("fp").as("fp_a")), Seq("doc_a"))
+        .join(cls.select(col("keep_id").as("doc_b"), col("fp").as("fp_b")), Seq("doc_b"))
+        .join(clsrc.select(col("fp").as("fp_a"), col("source").as("source_a"),
+          col("n").as("na")), Seq("fp_a"))
+        .join(clsrc.select(col("fp").as("fp_b"), col("source").as("source_b"),
+          col("n").as("nb")), Seq("fp_b"))
+        .select(col("source_a"), col("source_b"), expr("na * nb").as("m"))
+      val intraM = clsrc.as("a")
+        .join(clsrc.as("b"), expr("a.fp = b.fp AND a.source <= b.source"))
+        .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
+          expr("CASE WHEN a.source = b.source THEN a.n * (a.n - 1) DIV 2 " +
+            "ELSE a.n * b.n END").as("m"))
+        .where(col("m") > 0)
+      crossM.union(intraM)
+        .groupBy("source_a", "source_b")
+        .agg(sum("m").as("n_pairs"))
+        .selectExpr("source_a", "source_b", "CAST(n_pairs AS BIGINT) AS n_pairs")
+        .orderBy("source_a", "source_b")
+    },
+      // survivor pairs re-expanded through per-class per-source copy
+      // counts + the closed-form intra-class verbatim-copy mass
+      s"""WITH fps AS (SELECT doc_id, source, md5($NORM) AS fp FROM documents),
+         |cls AS (SELECT fp, min(doc_id) AS keep_id FROM fps GROUP BY fp),
+         |clsrc AS (SELECT fp, source, count(*) AS n FROM fps GROUP BY fp, source),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d
+         |          JOIN cls ON cls.keep_id = d.doc_id),
+         |${minhashCtes("docs2")},
+         |$jaccardCtes,
+         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
+         |crossm AS (SELECT ca.source AS source_a, cb.source AS source_b,
+         |                  ca.n * cb.n AS m
+         |           FROM pairs p
+         |           JOIN cls ka ON ka.keep_id = p.doc_a
+         |           JOIN cls kb ON kb.keep_id = p.doc_b
+         |           JOIN clsrc ca ON ca.fp = ka.fp
+         |           JOIN clsrc cb ON cb.fp = kb.fp),
+         |intram AS (SELECT a.source AS source_a, b.source AS source_b,
+         |                  CASE WHEN a.source = b.source
+         |                       THEN a.n * (a.n - 1) // 2
+         |                       ELSE a.n * b.n END AS m
+         |           FROM clsrc a JOIN clsrc b
+         |             ON a.fp = b.fp AND a.source <= b.source),
+         |u AS (SELECT * FROM crossm
+         |      UNION ALL SELECT * FROM intram WHERE m > 0)
+         |SELECT source_a, source_b, CAST(SUM(m) AS BIGINT) AS n_pairs
+         |FROM u GROUP BY source_a, source_b
+         |ORDER BY source_a, source_b""".stripMargin),
+
+    // VLM-curation aspect bucketing (the SDXL trick: train at a fixed
+    // set of aspect ratios, route each image to its closest bucket) on
+    // REAL decoded raster geometry, plus the min-area admission gate.
+    // Closest bucket = argmin of |w·b − a·h|/b — one IEEE division per
+    // candidate over exact integers, ties to the lowest bucket id, so
+    // the routing is total; the oracle replays the generator's dimension
+    // formulas through the identical scoring. Decode is map-only; the
+    // rollup is one |buckets|-row agg — embarrassingly parallel at 100 TB
+    Entry("llm_image_buckets", (s, d) => {
+      Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
+        .toDF().createOrReplaceTempView("__img_bk")
+      s.sql("""
+        WITH dims AS (SELECT doc_id, width AS w, height AS h FROM __img_bk
+                      WHERE width * height >= 64),
+        buckets AS (SELECT * FROM VALUES (1, 1, 1), (2, 4, 3), (3, 3, 4),
+                      (4, 16, 9), (5, 9, 16) AS b(bid, a, bb)),
+        scored AS (SELECT doc_id, w, h, bid, a, bb,
+                          CAST(abs(w * bb - a * h) AS DOUBLE) / CAST(bb AS DOUBLE) AS m
+                   FROM dims CROSS JOIN buckets),
+        pick AS (SELECT doc_id, w, h, bid, a, bb,
+                        row_number() OVER (PARTITION BY doc_id ORDER BY m, bid) AS rn
+                 FROM scored)
+        SELECT concat(CAST(a AS STRING), ':', CAST(bb AS STRING)) AS bucket,
+               CAST(COUNT(*) AS BIGINT) AS n_images,
+               CAST(SUM(w * h) AS BIGINT) AS sum_pixels,
+               MIN(doc_id) AS min_doc
+        FROM pick WHERE rn = 1
+        GROUP BY a, bb ORDER BY bucket""")
+    },
+      // the generator's dimension formulas routed through the identical
+      // bucket scoring (one IEEE division, ties to lowest bucket id)
+      """WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
+        |                     1 + (doc_id * 3) % 37 AS h
+        |              FROM documents
+        |              WHERE (1 + doc_id % 47) * (1 + (doc_id * 3) % 37) >= 64),
+        |buckets(bid, a, bb) AS (VALUES (1, 1, 1), (2, 4, 3), (3, 3, 4),
+        |                               (4, 16, 9), (5, 9, 16)),
+        |scored AS (SELECT doc_id, w, h, bid, a, bb,
+        |                  CAST(abs(w * bb - a * h) AS DOUBLE) / CAST(bb AS DOUBLE) AS m
+        |           FROM dims CROSS JOIN buckets),
+        |pick AS (SELECT doc_id, w, h, bid, a, bb,
+        |                row_number() OVER (PARTITION BY doc_id ORDER BY m, bid) AS rn
+        |         FROM scored)
+        |SELECT CAST(a AS VARCHAR) || ':' || CAST(bb AS VARCHAR) AS bucket,
+        |       CAST(COUNT(*) AS BIGINT) AS n_images,
+        |       CAST(SUM(w * h) AS BIGINT) AS sum_pixels,
+        |       MIN(doc_id) AS min_doc
+        |FROM pick WHERE rn = 1
+        |GROUP BY a, bb ORDER BY bucket""".stripMargin),
+
+    // quality-score survival curve — the curation artifact a threshold
+    // decision is actually made from: docs ranked by an integer quality
+    // proxy (alnum-char fraction, scaled 0..1000 — log-free, exact),
+    // cut into deciles by the closed-form rank formula, each decile
+    // reporting its doc count, score band, and CUMULATIVE character
+    // share ("keep the top 3 deciles → keep 41% of the chars"). One
+    // scan + one post-agg global window over |docs| ranks; at 100 TB
+    // the rank runs through the two-phase prefix sum like shuffleOrder
+    Entry("llm_quality_survival", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__qs_docs")
+      s.sql("""
+        WITH sc AS (SELECT doc_id, n_chars,
+                           (1000 * length(regexp_replace(text, '[^a-zA-Z0-9]', '')))
+                             DIV GREATEST(n_chars, 1) AS score
+                    FROM __qs_docs),
+        n AS (SELECT COUNT(*) AS nd, SUM(n_chars) AS total_chars FROM sc),
+        r AS (SELECT doc_id, n_chars, score,
+                     ((row_number() OVER (ORDER BY score DESC, doc_id) - 1) * 10)
+                       DIV nd + 1 AS decile
+              FROM sc CROSS JOIN n),
+        g AS (SELECT decile, COUNT(*) AS n_docs,
+                     MIN(score) AS min_score, MAX(score) AS max_score,
+                     SUM(n_chars) AS sum_chars
+              FROM r GROUP BY decile)
+        SELECT CAST(decile AS INT) AS decile, CAST(n_docs AS BIGINT) AS n_docs,
+               CAST(min_score AS BIGINT) AS min_score,
+               CAST(max_score AS BIGINT) AS max_score,
+               CAST(sum_chars AS BIGINT) AS sum_chars,
+               CAST(ROUND(CAST(SUM(sum_chars) OVER (ORDER BY decile
+                      ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+                    / CAST(n.total_chars AS DOUBLE), 6) AS DOUBLE)
+                 AS cum_char_frac
+        FROM g CROSS JOIN n ORDER BY decile""")
+    },
+      // the same integer score, closed-form decile and cumulative share;
+      // DuckDB regex needs the 'g' flag Spark applies by default
+      """WITH sc AS (SELECT doc_id, n_chars,
+        |                   (1000 * length(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g')))
+        |                     // GREATEST(n_chars, 1) AS score
+        |            FROM documents),
+        |n AS (SELECT COUNT(*) AS nd, SUM(n_chars) AS total_chars FROM sc),
+        |r AS (SELECT doc_id, n_chars, score,
+        |             ((row_number() OVER (ORDER BY score DESC, doc_id) - 1) * 10)
+        |               // nd + 1 AS decile
+        |      FROM sc CROSS JOIN n),
+        |g AS (SELECT decile, COUNT(*) AS n_docs,
+        |             MIN(score) AS min_score, MAX(score) AS max_score,
+        |             SUM(n_chars) AS sum_chars
+        |      FROM r GROUP BY decile)
+        |SELECT CAST(decile AS INT) AS decile, CAST(n_docs AS BIGINT) AS n_docs,
+        |       CAST(min_score AS BIGINT) AS min_score,
+        |       CAST(max_score AS BIGINT) AS max_score,
+        |       CAST(sum_chars AS BIGINT) AS sum_chars,
+        |       CAST(ROUND(CAST(SUM(sum_chars) OVER (ORDER BY decile
+        |              ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+        |            / CAST(n.total_chars AS DOUBLE), 6) AS DOUBLE)
+        |         AS cum_char_frac
+        |FROM g CROSS JOIN n ORDER BY decile""".stripMargin),
+
+    // decode -> nearest-neighbor resize to fit 24px: the resample reads
+    // the real decoded raster; the oracle replays the integer source-pixel
+    // map over the target grid
+    Entry("llm_resize", (s, d) => {
+      val dec = Multimodal.resizeImages(
+        Multimodal.synthesizeImages(docs(s, d)), maxSide = 24)
+      dec.toDF().select(col("doc_id"), col("width"), col("height"),
+        col("sum_r"), col("sum_g"), col("sum_b"))
+        .orderBy("doc_id")
+    },
+      // target geometry by the same aspect-preserving floor math, then the
+      // nearest-neighbor source-pixel map (x*w//w2, y*h//h2) replayed over
+      // the target grid against the generation formulas
       """WITH dims AS (SELECT doc_id,
         |                     CAST(1 + doc_id % 47 AS INT) AS w,
         |                     CAST(1 + (doc_id * 3) % 37 AS INT) AS h
@@ -5187,31 +3870,57 @@ object Llm {
         |       CAST(sum(r) AS BIGINT) AS sum_r,
         |       CAST(sum(g) AS BIGINT) AS sum_g,
         |       CAST(sum(b) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id, w2, h2 ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id, w2, h2 ORDER BY doc_id""".stripMargin),
 
-    // the ImageSynth formulas replayed over the 11x6 dHash thumbnail
-    // grid: luma = 299r+587g+114b on the nearest-neighbor source pixel,
-    // bit y*10+x iff the right neighbor is brighter — the decoded-raster
-    // hash must land on exactly this BIGINT
-    "llm_image_dhash" ->
+    // perceptual image fingerprint: dHash over the REAL decoded raster
+    // (11x6 nearest-neighbor thumbnail, integer BT.601 luma, 60
+    // column-adjacent comparison bits) — the oracle replays the
+    // synthesis formulas over the thumbnail grid, so a wrong decode or
+    // a wrong resample map cannot hash-match
+    Entry("llm_image_dhash", (s, d) =>
+      Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+        .orderBy("doc_id"),
+      // the ImageSynth formulas replayed over the 11x6 dHash thumbnail
+      // grid: luma = 299r+587g+114b on the nearest-neighbor source pixel,
+      // bit y*10+x iff the right neighbor is brighter — the decoded-raster
+      // hash must land on exactly this BIGINT
       s"""WITH $dhashCtes
          |SELECT doc_id, CAST(dhash AS BIGINT) AS dhash
-         |FROM dh ORDER BY doc_id""".stripMargin,
+         |FROM dh ORDER BY doc_id""".stripMargin),
 
-    // the synthesis formulas on the 32×32 grid, the IDENTICAL
-    // driver-literal DCT basis, ascending-pixel folds, order-statistic
-    // median — the decoded-raster DCT must land on exactly this BIGINT
-    "llm_image_phash" ->
+    // DCT perceptual hash (pHash) over the REAL decoded raster: 32×32
+    // luma thumbnail, separable DCT-II against the driver-literal cosine
+    // basis (fixed fold order), 63 median-thresholded AC bits + the
+    // exact integer DC mass — the frequency-domain fingerprint that
+    // survives the noise dHash gradient bits flip on
+    Entry("llm_image_phash", (s, d) =>
+      Multimodal.phashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+        .orderBy("doc_id"),
+      // the synthesis formulas on the 32×32 grid, the IDENTICAL
+      // driver-literal DCT basis, ascending-pixel folds, order-statistic
+      // median — the decoded-raster DCT must land on exactly this BIGINT
       s"""WITH $phashCtes
          |SELECT p.doc_id, CAST(p.phash AS BIGINT) AS phash,
          |       CAST(d.dc_sum AS BIGINT) AS dc_sum
          |FROM ph p JOIN dcm d USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // the oracle is the ALL-PAIRS Hamming join over recomputed
-    // fingerprints — green proves the Spark side's (15-bit band,
-    // Hamming<=3) banded equi-join lossless on real perceptual hashes
-    "llm_image_neardup" ->
+    // perceptual near-dup IMAGE join: the dHash fingerprints ride the
+    // SAME lossless (15-bit band, Hamming<=3) banded equi-join as the
+    // text simhash (Dedup.fingerprintNearGroups) — group-level
+    // reporting, never an all-pairs image comparison; the oracle IS the
+    // all-pairs Hamming join over recomputed fingerprints, green proving
+    // the banding lossless
+    Entry("llm_image_neardup", (s, d) =>
+      Dedup.fingerprintNearGroups(
+        Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+          .withColumnRenamed("dhash", "simhash"))
+        .select(col("sim_a").as("fp_a"), col("sim_b").as("fp_b"),
+          col("hamming"), col("docs_a"), col("docs_b"), col("pair_count"))
+        .orderBy("fp_a", "fp_b"),
+      // the oracle is the ALL-PAIRS Hamming join over recomputed
+      // fingerprints — green proves the Spark side's (15-bit band,
+      // Hamming<=3) banded equi-join lossless on real perceptual hashes
       s"""WITH $dhashCtes,
          |g AS (SELECT dhash, count(*) AS n_docs FROM dh GROUP BY dhash)
          |SELECT CAST(a.dhash AS BIGINT) AS fp_a, CAST(b.dhash AS BIGINT) AS fp_b,
@@ -5226,13 +3935,25 @@ object Llm {
          |       CAST(n_docs AS BIGINT), CAST(n_docs AS BIGINT),
          |       CAST(n_docs * (n_docs - 1) // 2 AS BIGINT)
          |FROM g WHERE n_docs > 1
-         |ORDER BY fp_a, fp_b""".stripMargin,
+         |ORDER BY fp_a, fp_b""".stripMargin),
 
-    // replay the AudioSynth arithmetic over an index series: n = 64 +
-    // (doc_id·13) mod 512 samples, s(i) = ((doc_id·31 + i·17) mod 2^16)
-    // − 32768 — everything nonnegative before the subtraction, so both
-    // engines' % agree; sums CAST from DuckDB's HUGEINT to BIGINT
-    "llm_audio_features" ->
+    // REAL audio codec round-trip: deterministic 16-bit mono PCM WAVs
+    // synthesized from (doc_id, i) formulas (AudioSynth), encoded AND
+    // parsed through the JDK's javax.sound.sampled; sample rate comes
+    // from the decoded header, amplitude stats (sum / sum|s| / peak /
+    // energy) from the decoded PCM frames as exact integers — the oracle
+    // recomputes the generation formulas over an index series, so a
+    // wrong decode cannot hash-match
+    Entry("llm_audio_features", (s, d) => {
+      val dec = Multimodal.decodeAudio(Multimodal.synthesizeAudio(docs(s, d)))
+      dec.toDF().select(col("doc_id"), col("sample_rate"), col("n_samples"),
+        col("sum_val"), col("sum_abs"), col("peak_abs"), col("energy"))
+        .orderBy("doc_id")
+    },
+      // replay the AudioSynth arithmetic over an index series: n = 64 +
+      // (doc_id·13) mod 512 samples, s(i) = ((doc_id·31 + i·17) mod 2^16)
+      // − 32768 — everything nonnegative before the subtraction, so both
+      // engines' % agree; sums CAST from DuckDB's HUGEINT to BIGINT
       s"""WITH p AS (
          |  SELECT doc_id, 64 + (doc_id * 13) % 512 AS n FROM documents),
          |idx AS (SELECT doc_id, n, unnest(range(n)) AS i FROM p),
@@ -5246,11 +3967,17 @@ object Llm {
          |       CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
          |       CAST(max(abs(v)) AS INT) AS peak_abs,
          |       CAST(sum(v * v) AS BIGINT) AS energy
-         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // the synth formula replayed through the identical clip / run /
-    // crossing rules — runs via gaps-and-islands on the sample index
-    "llm_audio_clipping" ->
+    // audio signal-integrity QC over the REAL decoded PCM: clipped-sample
+    // census, clipped-RUN shape (flat-lined segment vs transient peaks)
+    // and zero-crossing count — all exact integers from one in-order
+    // pass; the oracle replays the synth formula through gaps-and-islands
+    Entry("llm_audio_clipping", (s, d) =>
+      Multimodal.audioQc(Multimodal.synthesizeAudio(docs(s, d)))
+        .toDF().orderBy("doc_id"),
+      // the synth formula replayed through the identical clip / run /
+      // crossing rules — runs via gaps-and-islands on the sample index
       """WITH p AS (
         |  SELECT doc_id, 64 + (doc_id * 13) % 512 AS n FROM documents),
         |idx AS (SELECT doc_id, n, unnest(range(n)) AS i FROM p),
@@ -5277,47 +4004,113 @@ object Llm {
         |       CAST(COALESCE(r.max_run, 0) AS BIGINT) AS max_clip_run,
         |       CAST(b.n_cross AS BIGINT) AS n_zero_cross
         |FROM base b LEFT JOIN runagg r ON r.doc_id = b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin),
 
-    // same survivor graph; the three rollups and the exact-integer
-    // modularity numerator replayed verbatim
-    "llm_dup_modularity" ->
-      s"""WITH fps AS (SELECT doc_id, source, md5($NORM) AS fp FROM documents),
-         |cls AS (SELECT fp, min(doc_id) AS keep_id FROM fps GROUP BY fp),
-         |docs2 AS (SELECT d.doc_id, d.text FROM documents d
-         |          JOIN cls ON cls.keep_id = d.doc_id),
-         |${minhashCtes("docs2")},
-         |$jaccardCtes,
-         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
-         |srcs AS (SELECT d.doc_id, d.source FROM documents d
-         |         JOIN cls ON cls.keep_id = d.doc_id),
-         |edges AS (SELECT p.doc_a, p.doc_b, a.source AS sa, b.source AS sb
-         |          FROM pairs p JOIN srcs a ON a.doc_id = p.doc_a
-         |                       JOIN srcs b ON b.doc_id = p.doc_b),
-         |mm AS (SELECT COUNT(*) AS m FROM edges),
-         |deg AS (SELECT doc_id, source, COUNT(*) AS deg FROM (
-         |          SELECT doc_a AS doc_id, sa AS source FROM edges
-         |          UNION ALL SELECT doc_b, sb FROM edges) GROUP BY doc_id, source),
-         |nodes AS (SELECT source, COUNT(*) AS n_nodes FROM srcs GROUP BY source),
-         |ds AS (SELECT source, SUM(deg) AS d_sum FROM deg GROUP BY source),
-         |ei AS (SELECT sa AS source, COUNT(*) AS e_intra FROM edges
-         |       WHERE sa = sb GROUP BY sa)
-         |SELECT n.source, CAST(n.n_nodes AS BIGINT) AS n_nodes,
-         |       CAST(COALESCE(ei.e_intra, 0) AS BIGINT) AS e_intra,
-         |       CAST(COALESCE(ds.d_sum, 0) AS BIGINT) AS d_sum,
-         |       CAST(mm.m AS BIGINT) AS m_edges,
-         |       CAST(4 * mm.m * COALESCE(ei.e_intra, 0)
-         |            - COALESCE(ds.d_sum, 0) * COALESCE(ds.d_sum, 0) AS BIGINT) AS q_num
-         |FROM nodes n CROSS JOIN mm
-         |LEFT JOIN ds ON ds.source = n.source
-         |LEFT JOIN ei ON ei.source = n.source
-         |WHERE mm.m > 0
-         |ORDER BY n.source""".stripMargin,
+    // Sobel edge-density census over the REAL decoded rasters (integer
+    // BT.601 luma, integer kernels, interior pixels only) — the
+    // blank/flat-image curation signal; the oracle replays the pixel
+    // formula through the identical kernel
+    Entry("llm_image_edges", (s, d) =>
+      Multimodal.convolveImages(Multimodal.synthesizeImages(
+          docs(s, d).where("doc_id < 200")), threshold = 200000L)
+        .toDF()
+        .where("width >= 3 AND height >= 3")
+        .selectExpr("doc_id", "CAST(width AS INT) AS width",
+          "CAST(height AS INT) AS height",
+          "CAST(n_interior AS BIGINT) AS n_interior",
+          "CAST(n_edge AS BIGINT) AS n_edge",
+          "CAST(sum_gabs AS BIGINT) AS sum_gabs",
+          "CAST(ROUND(CAST(n_edge AS DOUBLE) / CAST(n_interior AS DOUBLE)," +
+            " 6) AS DOUBLE) AS edge_frac")
+        .orderBy("doc_id"),
+      // the generator's pixel formula replayed through the identical
+      // integer Sobel kernel over the interior grid
+      {
+      def l(x: String, y: String): String =
+        s"(299 * ((($x) * 7 + ($y) * 11 + doc_id) % 256) + " +
+          s"587 * ((($x) * 13 + ($y) * 5 + doc_id * 3) % 256) + " +
+          s"114 * ((($x) * 17 + ($y) * 3 + doc_id * 7) % 256))"
+      val gx = s"((${l("x + 1", "y - 1")} + 2 * ${l("x + 1", "y")} + ${l("x + 1", "y + 1")})" +
+        s" - (${l("x - 1", "y - 1")} + 2 * ${l("x - 1", "y")} + ${l("x - 1", "y + 1")}))"
+      val gy = s"((${l("x - 1", "y + 1")} + 2 * ${l("x", "y + 1")} + ${l("x + 1", "y + 1")})" +
+        s" - (${l("x - 1", "y - 1")} + 2 * ${l("x", "y - 1")} + ${l("x + 1", "y - 1")}))"
+      s"""WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
+         |                     1 + (doc_id * 3) % 37 AS h
+         |              FROM documents WHERE doc_id < 200),
+         |px AS (SELECT doc_id, w, h,
+         |              abs($gx) + abs($gy) AS gabs
+         |       FROM dims, unnest(generate_series(1, w - 2)) AS ux(x),
+         |                  unnest(generate_series(1, h - 2)) AS uy(y)
+         |       WHERE w >= 3 AND h >= 3)
+         |SELECT doc_id, CAST(max(w) AS INT) AS width,
+         |       CAST(max(h) AS INT) AS height,
+         |       CAST(COUNT(*) AS BIGINT) AS n_interior,
+         |       CAST(SUM(CASE WHEN gabs >= 200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_edge,
+         |       CAST(SUM(gabs) AS BIGINT) AS sum_gabs,
+         |       CAST(ROUND(CAST(SUM(CASE WHEN gabs >= 200000 THEN 1 ELSE 0 END) AS DOUBLE)
+         |            / CAST(COUNT(*) AS DOUBLE), 6) AS DOUBLE) AS edge_frac
+         |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    }),
 
-    // identical word stream, hash flags, per-doc vocabulary index and
-    // ASCII encoding; DuckDB's byte-based levenshtein coincides with
-    // Spark's codepoint walk on the pure-ASCII alphabet
-    "llm_wer_eval" ->
+    // variance-of-Laplacian blur detector over the same decoded rasters
+    // — the standard sharpness filter; variance from exact integer
+    // sufficient statistics (n·Σl² − (Σl)²) / n², every operand cast to
+    // DOUBLE before multiplying so both engines round identically. The
+    // variance runs ~1e9–1e10, squarely in the pinned DuckDB
+    // multiply-ROUND-divide ULP regime (probed here: …798.222222 vs
+    // …798.222223), so it leaves FLOOR→BIGINT, not ROUND(,6)
+    Entry("llm_image_blur", (s, d) =>
+      Multimodal.convolveImages(Multimodal.synthesizeImages(
+          docs(s, d).where("doc_id < 200")), threshold = 200000L)
+        .toDF()
+        .where("width >= 3 AND height >= 3")
+        .selectExpr("doc_id",
+          "CAST(n_interior AS BIGINT) AS n_interior",
+          "CAST(sum_lap AS BIGINT) AS sum_lap",
+          "CAST(sum_lap2 AS BIGINT) AS sum_lap2",
+          "CAST(FLOOR((CAST(n_interior AS DOUBLE) * CAST(sum_lap2 AS DOUBLE)" +
+            " - CAST(sum_lap AS DOUBLE) * CAST(sum_lap AS DOUBLE))" +
+            " / (CAST(n_interior AS DOUBLE) * CAST(n_interior AS DOUBLE)))" +
+            " AS BIGINT) AS var_lap_floor")
+        .orderBy("doc_id"),
+      // the same grid through the integer Laplacian; variance from the
+      // identical all-DOUBLE expression tree over BIGINT-cast sums
+      {
+      def l(x: String, y: String): String =
+        s"(299 * ((($x) * 7 + ($y) * 11 + doc_id) % 256) + " +
+          s"587 * ((($x) * 13 + ($y) * 5 + doc_id * 3) % 256) + " +
+          s"114 * ((($x) * 17 + ($y) * 3 + doc_id * 7) % 256))"
+      val lap = s"(4 * ${l("x", "y")} - ${l("x - 1", "y")} - ${l("x + 1", "y")}" +
+        s" - ${l("x", "y - 1")} - ${l("x", "y + 1")})"
+      s"""WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
+         |                     1 + (doc_id * 3) % 37 AS h
+         |              FROM documents WHERE doc_id < 200),
+         |px AS (SELECT doc_id, $lap AS lap
+         |       FROM dims, unnest(generate_series(1, w - 2)) AS ux(x),
+         |                  unnest(generate_series(1, h - 2)) AS uy(y)
+         |       WHERE w >= 3 AND h >= 3),
+         |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_interior,
+         |               CAST(SUM(lap) AS BIGINT) AS sum_lap,
+         |               CAST(SUM(lap * lap) AS BIGINT) AS sum_lap2
+         |        FROM px GROUP BY doc_id)
+         |SELECT doc_id, n_interior, sum_lap, sum_lap2,
+         |       CAST(FLOOR((CAST(n_interior AS DOUBLE) * CAST(sum_lap2 AS DOUBLE)
+         |            - CAST(sum_lap AS DOUBLE) * CAST(sum_lap AS DOUBLE))
+         |            / (CAST(n_interior AS DOUBLE) * CAST(n_interior AS DOUBLE)))
+         |            AS BIGINT) AS var_lap_floor
+         |FROM agg ORDER BY doc_id""".stripMargin
+    }),
+
+    // EXACT word-level WER via the ASCII word-encoding trick (one
+    // symbol per distinct word per doc, native levenshtein on the
+    // encodings — DuckDB's levenshtein is byte-based, so the alphabet
+    // stays printable ASCII); hypothesis = deterministic md5-keyed
+    // drops + append-'q' typos over the 40-word reference prefix
+    Entry("llm_wer_eval", (s, d) =>
+      TextAnalysis.werEval(docs(s, d)).orderBy("doc_id"),
+      // identical word stream, hash flags, per-doc vocabulary index and
+      // ASCII encoding; DuckDB's byte-based levenshtein coincides with
+      // Spark's codepoint walk on the pure-ASCII alphabet
       s"""WITH ws AS (SELECT doc_id,
          |  list_filter(string_split($NORM, ' '), w -> length(w) > 0)[1:40] AS wl
          |  FROM documents),
@@ -5351,68 +4144,97 @@ object Llm {
          |       CAST(levenshtein(enc_ref, enc_hyp) AS BIGINT) AS n_edits,
          |       CAST(ROUND(CAST(levenshtein(enc_ref, enc_hyp) AS DOUBLE)
          |            / CAST(n_ref AS DOUBLE), 6) AS DOUBLE) AS wer
-         |FROM enc ORDER BY doc_id""".stripMargin,
+         |FROM enc ORDER BY doc_id""".stripMargin),
 
-    // the generator's pixel formula replayed through the identical
-    // integer Sobel kernel over the interior grid
-    "llm_image_edges" -> {
-      def l(x: String, y: String): String =
-        s"(299 * ((($x) * 7 + ($y) * 11 + doc_id) % 256) + " +
-          s"587 * ((($x) * 13 + ($y) * 5 + doc_id * 3) % 256) + " +
-          s"114 * ((($x) * 17 + ($y) * 3 + doc_id * 7) % 256))"
-      val gx = s"((${l("x + 1", "y - 1")} + 2 * ${l("x + 1", "y")} + ${l("x + 1", "y + 1")})" +
-        s" - (${l("x - 1", "y - 1")} + 2 * ${l("x - 1", "y")} + ${l("x - 1", "y + 1")}))"
-      val gy = s"((${l("x - 1", "y + 1")} + 2 * ${l("x", "y + 1")} + ${l("x + 1", "y + 1")})" +
-        s" - (${l("x - 1", "y - 1")} + 2 * ${l("x", "y - 1")} + ${l("x + 1", "y - 1")}))"
-      s"""WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
-         |                     1 + (doc_id * 3) % 37 AS h
-         |              FROM documents WHERE doc_id < 200),
-         |px AS (SELECT doc_id, w, h,
-         |              abs($gx) + abs($gy) AS gabs
-         |       FROM dims, unnest(generate_series(1, w - 2)) AS ux(x),
-         |                  unnest(generate_series(1, h - 2)) AS uy(y)
-         |       WHERE w >= 3 AND h >= 3)
-         |SELECT doc_id, CAST(max(w) AS INT) AS width,
-         |       CAST(max(h) AS INT) AS height,
-         |       CAST(COUNT(*) AS BIGINT) AS n_interior,
-         |       CAST(SUM(CASE WHEN gabs >= 200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_edge,
-         |       CAST(SUM(gabs) AS BIGINT) AS sum_gabs,
-         |       CAST(ROUND(CAST(SUM(CASE WHEN gabs >= 200000 THEN 1 ELSE 0 END) AS DOUBLE)
-         |            / CAST(COUNT(*) AS DOUBLE), 6) AS DOUBLE) AS edge_frac
-         |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    // Newman modularity of the SOURCE partition over the near-dup
+    // survivor graph — "does duplication cluster within sources?"
+    // (q_num = 4·m·e_c − d_c² keeps the per-community term an EXACT
+    // integer; Q = Σ q_num / 4m²). Same exact-collapse → LSH-banded
+    // survivor pairs as llm_dup_source_matrix — never all-pairs; the
+    // modularity terms are three bounded per-source rollups
+    Entry("llm_dup_modularity", (s, d) => {
+      val survivors = Dedup.exactSurvivors(docs(s, d))
+      val pairs = Dedup.nearDupPairs(survivors)
+      val src = survivors.select(col("doc_id"), col("source"))
+      // localCheckpoint: edges feed THREE rollups (m, degrees, intra) —
+      // without it the whole exact-collapse + LSH + jaccard pair
+      // pipeline re-evaluates per consumer (measured 5.98 s vs 2.35 for
+      // the single-consumer dup_source_matrix); the edge list itself is
+      // survivor-pair-scale, safe to materialize at any corpus size
+      val edges = pairs
+        .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
+          Seq("doc_a"))
+        .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")),
+          Seq("doc_b"))
+        .localCheckpoint()
+      val mDf = edges.agg(count(lit(1)).as("m_edges"))
+      val deg = edges.select(col("doc_a").as("doc_id"), col("sa").as("source"))
+        .union(edges.select(col("doc_b").as("doc_id"), col("sb").as("source")))
+        .groupBy("doc_id", "source").agg(count(lit(1)).as("deg"))
+      val nodes = src.groupBy("source").agg(count(lit(1)).as("n_nodes"))
+      val dsum = deg.groupBy("source").agg(sum("deg").as("d_sum"))
+      val eintra = edges.where(col("sa") === col("sb"))
+        .groupBy(col("sa").as("source")).agg(count(lit(1)).as("e_intra"))
+      nodes
+        .join(dsum, Seq("source"), "left")
+        .join(eintra, Seq("source"), "left")
+        .crossJoin(mDf)
+        .where(col("m_edges") > 0)
+        .selectExpr("source", "CAST(n_nodes AS BIGINT) AS n_nodes",
+          "CAST(COALESCE(e_intra, 0) AS BIGINT) AS e_intra",
+          "CAST(COALESCE(d_sum, 0) AS BIGINT) AS d_sum",
+          "CAST(m_edges AS BIGINT) AS m_edges",
+          "CAST(4 * m_edges * COALESCE(e_intra, 0) " +
+            "- COALESCE(d_sum, 0) * COALESCE(d_sum, 0) AS BIGINT) AS q_num")
+        .orderBy("source")
     },
+      // same survivor graph; the three rollups and the exact-integer
+      // modularity numerator replayed verbatim
+      s"""WITH fps AS (SELECT doc_id, source, md5($NORM) AS fp FROM documents),
+         |cls AS (SELECT fp, min(doc_id) AS keep_id FROM fps GROUP BY fp),
+         |docs2 AS (SELECT d.doc_id, d.text FROM documents d
+         |          JOIN cls ON cls.keep_id = d.doc_id),
+         |${minhashCtes("docs2")},
+         |$jaccardCtes,
+         |pairs AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.6),
+         |srcs AS (SELECT d.doc_id, d.source FROM documents d
+         |         JOIN cls ON cls.keep_id = d.doc_id),
+         |edges AS (SELECT p.doc_a, p.doc_b, a.source AS sa, b.source AS sb
+         |          FROM pairs p JOIN srcs a ON a.doc_id = p.doc_a
+         |                       JOIN srcs b ON b.doc_id = p.doc_b),
+         |mm AS (SELECT COUNT(*) AS m FROM edges),
+         |deg AS (SELECT doc_id, source, COUNT(*) AS deg FROM (
+         |          SELECT doc_a AS doc_id, sa AS source FROM edges
+         |          UNION ALL SELECT doc_b, sb FROM edges) GROUP BY doc_id, source),
+         |nodes AS (SELECT source, COUNT(*) AS n_nodes FROM srcs GROUP BY source),
+         |ds AS (SELECT source, SUM(deg) AS d_sum FROM deg GROUP BY source),
+         |ei AS (SELECT sa AS source, COUNT(*) AS e_intra FROM edges
+         |       WHERE sa = sb GROUP BY sa)
+         |SELECT n.source, CAST(n.n_nodes AS BIGINT) AS n_nodes,
+         |       CAST(COALESCE(ei.e_intra, 0) AS BIGINT) AS e_intra,
+         |       CAST(COALESCE(ds.d_sum, 0) AS BIGINT) AS d_sum,
+         |       CAST(mm.m AS BIGINT) AS m_edges,
+         |       CAST(4 * mm.m * COALESCE(ei.e_intra, 0)
+         |            - COALESCE(ds.d_sum, 0) * COALESCE(ds.d_sum, 0) AS BIGINT) AS q_num
+         |FROM nodes n CROSS JOIN mm
+         |LEFT JOIN ds ON ds.source = n.source
+         |LEFT JOIN ei ON ei.source = n.source
+         |WHERE mm.m > 0
+         |ORDER BY n.source""".stripMargin),
 
-    // the same grid through the integer Laplacian; variance from the
-    // identical all-DOUBLE expression tree over BIGINT-cast sums
-    "llm_image_blur" -> {
-      def l(x: String, y: String): String =
-        s"(299 * ((($x) * 7 + ($y) * 11 + doc_id) % 256) + " +
-          s"587 * ((($x) * 13 + ($y) * 5 + doc_id * 3) % 256) + " +
-          s"114 * ((($x) * 17 + ($y) * 3 + doc_id * 7) % 256))"
-      val lap = s"(4 * ${l("x", "y")} - ${l("x - 1", "y")} - ${l("x + 1", "y")}" +
-        s" - ${l("x", "y - 1")} - ${l("x", "y + 1")})"
-      s"""WITH dims AS (SELECT doc_id, 1 + doc_id % 47 AS w,
-         |                     1 + (doc_id * 3) % 37 AS h
-         |              FROM documents WHERE doc_id < 200),
-         |px AS (SELECT doc_id, $lap AS lap
-         |       FROM dims, unnest(generate_series(1, w - 2)) AS ux(x),
-         |                  unnest(generate_series(1, h - 2)) AS uy(y)
-         |       WHERE w >= 3 AND h >= 3),
-         |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_interior,
-         |               CAST(SUM(lap) AS BIGINT) AS sum_lap,
-         |               CAST(SUM(lap * lap) AS BIGINT) AS sum_lap2
-         |        FROM px GROUP BY doc_id)
-         |SELECT doc_id, n_interior, sum_lap, sum_lap2,
-         |       CAST(FLOOR((CAST(n_interior AS DOUBLE) * CAST(sum_lap2 AS DOUBLE)
-         |            - CAST(sum_lap AS DOUBLE) * CAST(sum_lap AS DOUBLE))
-         |            / (CAST(n_interior AS DOUBLE) * CAST(n_interior AS DOUBLE)))
-         |            AS BIGINT) AS var_lap_floor
-         |FROM agg ORDER BY doc_id""".stripMargin
-    },
-
-    // the synthesis formulas replayed over a (frame, x, y) grid — the
-    // decoder's container walk must land on exactly these values
-    "llm_video_decode" ->
+    // REAL video container round-trip: deterministic uncompressed AVIs
+    // (RIFF + avih/strh/strf + bottom-up stride-padded 24-bit BGR movi
+    // frames) synthesized from (doc_id, frame, x, y) formulas, then
+    // parsed by a spec-driven RIFF chunk walker; frame sums and
+    // blue-plane inter-frame motion come from the decoded rasters as
+    // exact integers, and the oracle recomputes the formulas over a
+    // (frame, x, y) grid — a wrong walk, row flip, stride pad or
+    // channel order cannot hash-match
+    Entry("llm_video_decode", (s, d) =>
+      Multimodal.decodeVideo(Multimodal.synthesizeVideo(docs(s, d)))
+        .toDF().orderBy("doc_id"),
+      // the synthesis formulas replayed over a (frame, x, y) grid — the
+      // decoder's container walk must land on exactly these values
       """WITH geo AS (SELECT doc_id, CAST(2 + doc_id % 4 AS INT) AS n,
         |                    CAST(8 + doc_id % 9 AS INT) AS w,
         |                    CAST(4 + doc_id % 7 AS INT) AS h
@@ -5437,12 +4259,18 @@ object Llm {
         |       CAST(sum_b AS BIGINT) AS sum_b,
         |       CAST(motion_b AS BIGINT) AS motion_b
         |FROM geo g JOIN s USING (doc_id) JOIN mv USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    // per-boundary luma SADs recomputed from the synth formulas over a
-    // (frame, x, y) grid — a wrong walk, stride pad, channel order or
-    // threshold scale cannot hash-match
-    "llm_scene_cuts" ->
+    // scene-change detection over the REAL decoded rasters: per frame
+    // boundary, the exact integer luma SAD + the mean-threshold cut
+    // verdict — the keyframe-selection primitive; map-only over the
+    // payload scan, one row per boundary
+    Entry("llm_scene_cuts", (s, d) =>
+      Multimodal.sceneCuts(Multimodal.synthesizeVideo(docs(s, d)))
+        .toDF().orderBy("doc_id", "frame"),
+      // per-boundary luma SADs recomputed from the synth formulas over a
+      // (frame, x, y) grid — a wrong walk, stride pad, channel order or
+      // threshold scale cannot hash-match
       """WITH geo AS (SELECT doc_id, CAST(2 + doc_id % 4 AS INT) AS n,
         |                    CAST(8 + doc_id % 9 AS INT) AS w,
         |                    CAST(4 + doc_id % 7 AS INT) AS h
@@ -5462,9 +4290,20 @@ object Llm {
         |SELECT doc_id, CAST(f AS INT) AS frame,
         |       CAST(SUM(dl) AS BIGINT) AS sad_luma,
         |       CAST(SUM(dl) >= 32000 * max(w) * max(h) AS BOOLEAN) AS is_cut
-        |FROM d GROUP BY doc_id, f ORDER BY doc_id, frame""".stripMargin,
+        |FROM d GROUP BY doc_id, f ORDER BY doc_id, frame""".stripMargin),
 
-    "llm_av_features" -> {
+    // the opaque-payload path (compressed video stays env-bound — no
+    // codec in the JDK or this container): md5-derived pseudo-features
+    // through the same batched mapPartitions shape a JNI/ffmpeg codec
+    // would plug into
+    Entry("llm_av_features", (s, d) => {
+      val dec = Multimodal.decode(Multimodal.attach(docs(s, d)))
+      val cols = Seq(col("doc_id"), col("n_bytes"), col("content_md5"),
+        col("width"), col("height")) ++
+        (0 until 8).map(j => col("feature").getItem(j).as(s"f$j"))
+      dec.select(cols: _*).orderBy("doc_id")
+    },
+      {
       val feats = (0 until 8).map(j =>
         s"('0x' || substr(md5(text), ${j * 2 + 1}, 2))::BIGINT / CAST(255 AS DOUBLE) AS f$j").mkString(",\n  ")
       s"""SELECT doc_id,
@@ -5474,11 +4313,17 @@ object Llm {
          |  CAST(1 + ('0x' || substr(md5(text), 5, 4))::BIGINT % 64 AS INT) AS height,
          |  $feats
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    // same ranking recomputation as llm_cosine_topk with the label
-    // disagreement predicate inside the pair join
-    "llm_hard_negatives" ->
+    // hard-negative mining: nearest different-label corpus vectors per
+    // probe — the ANN-mining step of contrastive training loops
+    Entry("llm_hard_negatives", (s, d) => {
+      val e = emb(s, d)
+      Similarity.hardNegatives(e.where("vec_id < 16"), e, 3)
+        .orderBy("probe_id", "rank")
+    },
+      // same ranking recomputation as llm_cosine_topk with the label
+      // disagreement predicate inside the pair join
       s"""WITH pairs AS (
          |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
          |         c.vec_id AS cand_id, c.label AS neg_label,
@@ -5492,173 +4337,15 @@ object Llm {
          |           FROM pairs)
          |SELECT probe_id, probe_label, cand_id, neg_label, cos, rank
          |FROM ranked WHERE rank <= 3
-         |ORDER BY probe_id, rank""".stripMargin,
+         |ORDER BY probe_id, rank""".stripMargin),
 
-    // same derivation via string_split/window rank; the per-doc id
-    // sequence digest uses ORDER BY pos inside string_agg where Spark
-    // sorts the collected (pos, id) structs
-    "llm_vocab_map" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, i - 1 AS pos, w[i] AS tok
-         |  FROM (SELECT doc_id, string_split($NORM, ' ') AS w
-         |        FROM documents) t,
-         |       unnest(generate_series(1, len(w))) AS u(i)
-         |  WHERE length(w[i]) > 0),
-         |vocab AS (
-         |  SELECT tok, row_number() OVER (ORDER BY df DESC, tok) - 1 AS tok_id
-         |  FROM (SELECT tok, count(*) AS df
-         |        FROM (SELECT DISTINCT doc_id, tok FROM toks)
-         |        GROUP BY tok ORDER BY df DESC, tok LIMIT 100)),
-         |enc AS (SELECT t.doc_id, t.pos, COALESCE(v.tok_id, -1) AS tok_id
-         |        FROM toks t LEFT JOIN vocab v ON t.tok = v.tok)
-         |SELECT doc_id, COUNT(*) AS n_tokens,
-         |       CAST(COUNT(*) FILTER (WHERE tok_id = -1) AS BIGINT) AS n_oov,
-         |       md5(string_agg(CAST(tok_id AS VARCHAR), ',' ORDER BY pos)) AS ids_fp
-         |FROM enc GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-
-    // top-10 ranking recomputed from scratch, label relevance applied
-    // AFTER the rank cut (a hit outside the top-10 must not count)
-    // the same head cut and exact integer running sum
-    "llm_vocab_coverage" ->
-      s"""WITH toks2 AS (SELECT unnest(list_filter(string_split($NORM, ' '),
-         |                       w -> length(w) > 0)) AS tok
-         |              FROM documents),
-         |vocab AS (SELECT tok, count(*) AS cnt FROM toks2 GROUP BY tok),
-         |head AS (SELECT tok, cnt,
-         |                row_number() OVER (ORDER BY cnt DESC, tok) AS rk,
-         |                SUM(cnt) OVER (ORDER BY cnt DESC, tok
-         |                  ROWS UNBOUNDED PRECEDING) AS cum
-         |         FROM vocab QUALIFY rk <= 30),
-         |tot AS (SELECT count(*) AS vocab_size, SUM(cnt) AS total_tokens
-         |        FROM vocab)
-         |SELECT CAST(rk AS BIGINT) AS k, CAST(cum AS BIGINT) AS covered_tokens,
-         |       CAST(vocab_size AS BIGINT) AS vocab_size,
-         |       CAST(total_tokens AS BIGINT) AS total_tokens,
-         |       CAST(cum * 1000000 // total_tokens AS BIGINT) AS covered_ppm
-         |FROM head CROSS JOIN tot
-         |WHERE rk IN (5, 10, 30)
-         |ORDER BY k""".stripMargin,
-
-    // the llm_bigram_lm scoring CTEs feeding the identical closed-form
-    // tercile rank and a doc-id-ordered mean fold per bucket
-    "llm_ccnet_buckets" ->
-      s"""WITH tk AS (SELECT doc_id,
-         |              list_filter(string_split($NORM, ' '),
-         |                          w -> length(w) > 0) AS t
-         |            FROM documents),
-         |uni AS (SELECT w, count(*) AS c1
-         |        FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w),
-         |bg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] AS w1,
-         |              t[i + 1] AS w2
-         |       FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
-         |       WHERE len(t) >= 2),
-         |cbi AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY w1, w2),
-         |j AS (SELECT bg.doc_id, bg.pos,
-         |             CAST(cbi.c12 AS DOUBLE) / CAST(uni.c1 AS DOUBLE) AS p
-         |      FROM bg JOIN cbi ON bg.w1 = cbi.w1 AND bg.w2 = cbi.w2
-         |           JOIN uni ON bg.w1 = uni.w),
-         |sc AS (SELECT doc_id,
-         |              CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |                list(p ORDER BY pos)), (acc, v) -> acc + v)
-         |                / count(*), 6) AS DOUBLE) AS avg_p
-         |       FROM j GROUP BY doc_id),
-         |ss AS (SELECT s.doc_id, d.source, s.avg_p
-         |       FROM sc s JOIN documents d USING (doc_id)),
-         |r AS (SELECT source, doc_id, avg_p,
-         |             row_number() OVER (PARTITION BY source
-         |               ORDER BY avg_p DESC, doc_id) AS r,
-         |             count(*) OVER (PARTITION BY source) AS n
-         |      FROM ss),
-         |b AS (SELECT source, doc_id, avg_p,
-         |             CASE (3 * (r - 1)) // n WHEN 0 THEN 'head'
-         |                  WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
-         |      FROM r)
-         |SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |         list(avg_p ORDER BY doc_id)), (acc, v) -> acc + v)
-         |         / count(*), 6) AS DOUBLE) AS mean_p
-         |FROM b GROUP BY source, bucket ORDER BY source, bucket""".stripMargin,
-
-    // the same exact top-10, hit discounts from the IDENTICAL driver
-    // literal arrays, the DCG fold in ascending rank order
-    "llm_ndcg_eval" ->
-      s"""WITH pairs AS (
-         |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
-         |         c.vec_id AS cand_id, c.label AS cand_label,
-         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 32),
-         |ranked AS (SELECT probe_id, probe_label, cand_label,
-         |                  CAST(row_number() OVER (PARTITION BY probe_id
-         |                       ORDER BY cos DESC, cand_id) AS INT) AS rank
-         |           FROM pairs),
-         |hits AS (SELECT probe_id, rank FROM ranked
-         |         WHERE rank <= 10 AND cand_label = probe_label),
-         |a AS (SELECT probe_id, count(*) AS n_rel,
-         |             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |               list_transform(list_sort(list(rank)),
-         |                 r -> ($duckNdcgDiscArr)[r])),
-         |               (acc, v) -> acc + v) AS dcg0
-         |      FROM hits GROUP BY probe_id)
-         |SELECT probe_id, CAST(n_rel AS BIGINT) AS n_rel,
-         |       CAST(ROUND(dcg0, 6) AS DOUBLE) AS dcg,
-         |       CAST(ROUND(dcg0 / ($duckNdcgIdcgArr)[CAST(n_rel AS INT)], 6)
-         |         AS DOUBLE) AS ndcg
-         |FROM a ORDER BY probe_id""".stripMargin,
-
-    // bucketed cosine candidates LEFT-joined onto the shingle
-    // intersection — zero-overlap pairs verify at jaccard 0 and survive
-    // the lexical-distance filter
-    "llm_paraphrase_mine" ->
-      s"""WITH semb AS (SELECT MIN(vec_id) AS vec_id, embedding
-         |              FROM embeddings GROUP BY embedding),
-         |bkt AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
-         |            FROM semb),
-         |cand AS (SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
-         |                ${duckCosine("x.embedding", "y.embedding")} AS cos
-         |         FROM bkt x JOIN bkt y
-         |           ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-         |         WHERE ${duckCosine("x.embedding", "y.embedding")} >= 0.4),
-         |${shingleCtes("documents")},
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS n_both
-         |          FROM cand c
-         |          JOIN sh x ON x.doc_id = c.doc_a
-         |          JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-         |          GROUP BY 1, 2),
-         |j AS (SELECT c.doc_a, c.doc_b, c.cos,
-         |             CAST(ROUND(CAST(COALESCE(i.n_both, 0) AS DOUBLE)
-         |               / (sa.n_sh + sb.n_sh - COALESCE(i.n_both, 0)), 6)
-         |               AS DOUBLE) AS jaccard
-         |      FROM cand c
-         |      LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-         |      JOIN sizes sa ON sa.doc_id = c.doc_a
-         |      JOIN sizes sb ON sb.doc_id = c.doc_b)
-         |SELECT doc_a, doc_b, cos, jaccard FROM j
-         |WHERE jaccard < 0.5 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "llm_retrieval_mrr" ->
-      s"""WITH pairs AS (
-         |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
-         |         c.vec_id AS cand_id, c.label AS cand_label,
-         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id < 32),
-         |ranked AS (SELECT probe_id, probe_label, cand_label,
-         |                  CAST(row_number() OVER (PARTITION BY probe_id
-         |                       ORDER BY cos DESC, cand_id) AS INT) AS rank
-         |           FROM pairs)
-         |SELECT probe_id, MIN(rank) AS first_hit_rank,
-         |       CAST(ROUND(CAST(1.0 AS DOUBLE) / MIN(rank), 6) AS DOUBLE) AS rr
-         |FROM ranked
-         |WHERE rank <= 10 AND cand_label = probe_label
-         |GROUP BY probe_id
-         |ORDER BY probe_id""".stripMargin,
-
-    // corpus bigram counts (no DISTINCT — draft tables sample corpus
-    // frequency), argmax per first word with the same (cnt, w2) tie-break
-    "llm_ngram_draft" ->
+    // speculative-decoding draft table: per word, the argmax corpus
+    // successor (count >= 3) + successor-vocab width — corpus frequency
+    // (no per-doc distinct), vocabulary-bounded argmax partitions
+    Entry("llm_ngram_draft", (s, d) =>
+      TextAnalysis.ngramDraft(docs(s, d), minCount = 3).orderBy("w1"),
+      // corpus bigram counts (no DISTINCT — draft tables sample corpus
+      // frequency), argmax per first word with the same (cnt, w2) tie-break
       s"""WITH norm AS (SELECT string_split($NORM, ' ') AS w FROM documents),
          |bg AS (SELECT w[i] AS w1, w[i+1] AS w2
          |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
@@ -5670,12 +4357,26 @@ object Llm {
          |       FROM cnt)
          |SELECT w1, w2 AS draft, cnt, CAST(n_next AS BIGINT) AS n_next
          |FROM rk WHERE rn = 1 AND cnt >= 3
-         |ORDER BY w1""".stripMargin,
+         |ORDER BY w1""".stripMargin),
 
-    // sign bits rebuilt by OR-folding shifted bits, Hamming ranked with
-    // the same (distance, cand_id) cut, exact top-5 via the rounded
-    // cosine ranking llm_cosine_topk pins
-    "llm_hamming_topk" ->
+    // binary-embedding ANN: 60 sign bits per vector, exact XOR+popcount
+    // Hamming top-5, each hit flagged against the exact cosine top-5 —
+    // the 1-bit quantization recall row next to llm_quantize_recall's
+    // int8 and llm_pq_recall's PQ points
+    Entry("llm_hamming_topk", (s, d) => {
+      val e = emb(s, d)
+      val probes = e.where("vec_id < 16")
+      val exact = Similarity.bruteForceTopK(probes, e, 5)
+        .select(col("probe_id"), col("cand_id"), lit(1).as("__hit"))
+      Similarity.hammingTopK(probes, e, 5)
+        .join(exact, Seq("probe_id", "cand_id"), "left")
+        .selectExpr("probe_id", "rank", "cand_id", "hamming",
+          "CAST(coalesce(__hit, 0) AS INT) AS in_exact")
+        .orderBy("probe_id", "rank")
+    },
+      // sign bits rebuilt by OR-folding shifted bits, Hamming ranked with
+      // the same (distance, cand_id) cut, exact top-5 via the rounded
+      // cosine ranking llm_cosine_topk pins
       s"""WITH fp AS (SELECT vec_id,
          |              list_reduce(list_prepend(CAST(0 AS BIGINT),
          |                list_transform(generate_series(1, 60),
@@ -5703,11 +4404,36 @@ object Llm {
          |       CAST(CASE WHEN e.cand_id IS NOT NULL THEN 1 ELSE 0 END AS INT) AS in_exact
          |FROM hk h LEFT JOIN ex e
          |  ON h.probe_id = e.probe_id AND h.cand_id = e.cand_id
-         |ORDER BY h.probe_id, h.rank""".stripMargin,
+         |ORDER BY h.probe_id, h.rank""".stripMargin),
 
-    // the same left-fold norm² (list_reduce == aggregate), the same
-    // per-row ROUND→DECIMAL before any cross-row sum
-    "qc_embedding_profile" ->
+    // embedding-table data-quality profile in ONE scan: count, zero/
+    // short vectors, exact norm² extremes and corpus mean — the vector
+    // twin of qc_column_profile (a corrupted export shows up as zero
+    // vectors, NaN components or a collapsed norm distribution before
+    // any ANN index is built). Per-row norm² is a deterministic
+    // left-fold; the corpus SUM rides DECIMAL after a per-row ROUND
+    // (order-free), never a raw double sum
+    Entry("qc_embedding_profile", (s, d) =>
+      emb(s, d)
+        .selectExpr("vec_id", "size(embedding) AS dims",
+          """aggregate(embedding, CAST(0.0 AS DOUBLE),
+            |  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""
+            .stripMargin + " AS n2")
+        .selectExpr("vec_id", "dims",
+          "CAST(ROUND(n2, 6) AS DECIMAL(18,6)) AS n2d",
+          "CASE WHEN n2 = 0.0 THEN 1 ELSE 0 END AS is_zero",
+          "CASE WHEN isnan(n2) THEN 1 ELSE 0 END AS is_nan")
+        .groupBy("dims")
+        .agg(count(lit(1)).as("n_vecs"),
+          sum("is_zero").cast("long").as("n_zero"),
+          sum("is_nan").cast("long").as("n_nan"),
+          expr("CAST(min(n2d) AS DOUBLE)").as("min_norm2"),
+          expr("CAST(max(n2d) AS DOUBLE)").as("max_norm2"),
+          expr("CAST(ROUND(CAST(SUM(n2d) AS DOUBLE) / count(1), 6) AS DOUBLE)")
+            .as("mean_norm2"))
+        .orderBy("dims"),
+      // the same left-fold norm² (list_reduce == aggregate), the same
+      // per-row ROUND→DECIMAL before any cross-row sum
       """WITH n AS (SELECT vec_id, len(embedding) AS dims,
         |                  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
         |                    list_transform(embedding,
@@ -5725,12 +4451,18 @@ object Llm {
         |       CAST(min(n2d) AS DOUBLE) AS min_norm2,
         |       CAST(max(n2d) AS DOUBLE) AS max_norm2,
         |       CAST(ROUND(CAST(SUM(n2d) AS DOUBLE) / count(*), 6) AS DOUBLE) AS mean_norm2
-        |FROM p GROUP BY dims ORDER BY dims""".stripMargin,
+        |FROM p GROUP BY dims ORDER BY dims""".stripMargin),
 
-    // the llm_sketch_merge register pipeline extended to DENSE per-source
-    // registers, pairwise bucket-max unions and the same single-division
-    // estimates — a register or densification drift breaks every pair
-    "llm_hll_overlap" -> {
+    // pairwise source-vocabulary overlap by HLL inclusion-exclusion:
+    // union sketch = bucketwise register max, ONE token scan then
+    // |sources|x64 integer arithmetic — "which crawls duplicate each
+    // other" without any cross-source token comparison
+    Entry("llm_hll_overlap", (s, d) =>
+      TextAnalysis.distinctOverlap(docs(s, d)).orderBy("src_a", "src_b"),
+      // the llm_sketch_merge register pipeline extended to DENSE per-source
+      // registers, pairwise bucket-max unions and the same single-division
+      // estimates — a register or densification drift breaks every pair
+      {
       val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
       s"""WITH dtoks AS (SELECT grp, tok FROM (
          |        SELECT source AS grp, unnest(string_split($NORM, ' ')) AS tok
@@ -5773,12 +4505,31 @@ object Llm {
          |FROM u JOIN per pa ON pa.grp = u.src_a
          |       JOIN per pb ON pb.grp = u.src_b
          |ORDER BY src_a, src_b""".stripMargin
-    },
+    }),
 
-    // both retriever lists rebuilt flat (the llm_bm25 contribution string
-    // and the llm_cosine_topk rounded ranking), fused with the identical
-    // fixed-order coalesce sum and (score, doc_id) cut
-    "llm_rrf_fusion" ->
+    // hybrid-retrieval rank fusion: the BM25 lexical top-50 (TakeOrdered,
+    // never a global sort) fused with the dense cosine top-50 for probe
+    // vec 0 via reciprocal-rank fusion — scores never mix, only ranks,
+    // the reason RRF survives incomparable scales; fixed-order addition
+    // chain keeps the doubles cross-engine deterministic
+    Entry("llm_rrf_fusion", (s, d) => {
+      val lex = TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
+        .orderBy(col("bm25").desc, col("doc_id")).limit(50)
+        .withColumn("rank",
+          expr("row_number() OVER (ORDER BY bm25 DESC, doc_id)"))
+        .select("doc_id", "rank")
+      val e = emb(s, d)
+      val sem = Similarity.bruteForceTopK(e.where("vec_id = 0"), e, 50)
+        .select(col("cand_id").as("doc_id"), col("rank"))
+      Similarity.rrfFuse(Seq("lex" -> lex, "sem" -> sem))
+        .selectExpr("fused_rank", "doc_id",
+          "CAST(coalesce(rank_lex, 0) AS INT) AS rank_lex",
+          "CAST(coalesce(rank_sem, 0) AS INT) AS rank_sem", "rrf")
+        .orderBy("fused_rank")
+    },
+      // both retriever lists rebuilt flat (the llm_bm25 contribution string
+      // and the llm_cosine_topk rounded ranking), fused with the identical
+      // fixed-order coalesce sum and (score, doc_id) cut
       s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents),
          |dlen AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
          |consts AS (SELECT count(*) AS n_docs, sum(dl) AS tot FROM dlen),
@@ -5807,12 +4558,20 @@ object Llm {
          |       CAST(coalesce(rank_lex, 0) AS INT) AS rank_lex,
          |       CAST(coalesce(rank_sem, 0) AS INT) AS rank_sem,
          |       CAST(ROUND(score, 6) AS DOUBLE) AS rrf
-         |FROM r WHERE fused_rank <= 20 ORDER BY fused_rank""".stripMargin,
+         |FROM r WHERE fused_rank <= 20 ORDER BY fused_rank""".stripMargin),
 
-    // the same rounded-cosine top-5 ranking as llm_cosine_topk, then the
-    // plurality vote with the identical (votes, best_rank, label)
-    // tie-break replayed flat
-    "llm_knn_classify" ->
+    // k-NN label-vote classification eval: each probe classified by the
+    // plurality label of its 5 nearest neighbors, scored against its own
+    // label — the standard embedding-quality probe; deterministic vote
+    // tie-break (votes, then closest supporter, then min label)
+    Entry("llm_knn_classify", (s, d) => {
+      val e = emb(s, d)
+      Similarity.knnClassify(e.where("vec_id < 100"), e, 5)
+        .orderBy("probe_id")
+    },
+      // the same rounded-cosine top-5 ranking as llm_cosine_topk, then the
+      // plurality vote with the identical (votes, best_rank, label)
+      // tie-break replayed flat
       s"""WITH pairs AS (
          |  SELECT p.vec_id AS probe_id, p.label AS true_label,
          |         c.vec_id AS cand_id, c.label AS cand_label,
@@ -5833,12 +4592,30 @@ object Llm {
          |SELECT probe_id, true_label, cand_label AS pred_label,
          |       CAST(votes AS BIGINT) AS votes,
          |       CAST(CASE WHEN cand_label = true_label THEN 1 ELSE 0 END AS INT) AS correct
-         |FROM pick WHERE rn = 1 ORDER BY probe_id""".stripMargin,
+         |FROM pick WHERE rn = 1 ORDER BY probe_id""".stripMargin),
 
-    // the hamming_topk fingerprint/candidate CTEs with the knn_classify
-    // vote grafted on, plus the exact-vs-approx recall join — every
-    // stage already pinned by its own entry, composed here
-    "llm_knn_approx" ->
+    // the SERVING-shaped kNN (r12 verdict #5): candidates from the
+    // 1-bit XOR+popcount Hamming top-5 (not exact cosine), classified by
+    // the same vote via knnClassifyFrom, with the per-probe recall@5 of
+    // the candidate set vs exact published in the SAME row — the
+    // deploy-or-not evidence (vote agreement is bounded by candidate
+    // recall). llm_knn_classify stays as the exact eval baseline
+    Entry("llm_knn_approx", (s, d) => {
+      val e = emb(s, d)
+      val probes = e.where("vec_id < 100")
+      val approx = Similarity.hammingTopK(probes, e, 5)
+      val exact = Similarity.bruteForceTopK(probes, e, 5)
+      Similarity.knnClassifyFrom(approx, probes, e)
+        .join(Similarity.annRecall(exact, approx), Seq("probe_id"))
+        .selectExpr("probe_id", "true_label", "pred_label",
+          "CAST(votes AS BIGINT) AS votes", "correct",
+          "CAST(n_exact AS BIGINT) AS n_exact",
+          "CAST(n_hit AS BIGINT) AS n_hit", "recall")
+        .orderBy("probe_id")
+    },
+      // the hamming_topk fingerprint/candidate CTEs with the knn_classify
+      // vote grafted on, plus the exact-vs-approx recall join — every
+      // stage already pinned by its own entry, composed here
       s"""WITH fp AS (SELECT vec_id,
          |              list_reduce(list_prepend(CAST(0 AS BIGINT),
          |                list_transform(generate_series(1, 60),
@@ -5884,10 +4661,75 @@ object Llm {
          |       CAST(r.n_hit AS BIGINT) AS n_hit,
          |       CAST(ROUND(CAST(r.n_hit AS DOUBLE) / r.n_exact, 6) AS DOUBLE) AS recall
          |FROM pick p JOIN rec r ON r.probe_id = p.probe_id
-         |WHERE p.rn = 1 ORDER BY p.probe_id""".stripMargin,
+         |WHERE p.rn = 1 ORDER BY p.probe_id""".stripMargin),
 
-    // same prefix blocking, integer dot/norms, identical IEEE tree
-    "llm_lexical_cosine" ->
+    // per-source dataset card + the ALL rollup row in the same single
+    // scan: docs, chars, word tokens, language spread, short-doc ratio —
+    // the corpus datasheet a curation run publishes next to its output
+    Entry("llm_dataset_card", (s, d) =>
+      docs(s, d)
+        .rollup("source")
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum("n_chars").as("n_chars_sum"),
+          sum(expr("CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT)"))
+            .as("n_words"),
+          countDistinct("lang").as("n_langs"),
+          sum(expr("CAST(CASE WHEN n_chars < 200 THEN 1 ELSE 0 END AS BIGINT)"))
+            .as("n_short"))
+        .selectExpr("coalesce(source, 'ALL') AS source", "n_docs",
+          "n_chars_sum", "n_words", "n_langs",
+          "CAST(ROUND(n_short / n_docs, 6) AS DOUBLE) AS short_ratio",
+          "CAST(ROUND(n_chars_sum / n_docs, 6) AS DOUBLE) AS mean_chars")
+        .orderBy("source"),
+      """SELECT coalesce(source, 'ALL') AS source, count(*) AS n_docs,
+        |       CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum,
+        |       CAST(SUM(len(regexp_extract_all(lower(text), '[a-z0-9]+', 0))) AS BIGINT) AS n_words,
+        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+        |       CAST(ROUND(CAST(SUM(CASE WHEN n_chars < 200 THEN 1 ELSE 0 END) AS BIGINT)
+        |                  / count(*), 6) AS DOUBLE) AS short_ratio,
+        |       CAST(ROUND(CAST(SUM(n_chars) AS BIGINT) / count(*), 6) AS DOUBLE) AS mean_chars
+        |FROM documents GROUP BY ROLLUP (source)
+        |ORDER BY source""".stripMargin),
+
+    // tf-WEIGHTED lexical cosine for near-dup verification — the metric
+    // that tolerates boilerplate repetition where set-Jaccard dilutes
+    // (a doc that repeats its header 50× still scores ≈1 against its
+    // near-copy): candidates from 12-char normalized-prefix blocking
+    // (self-contained, replayable in SQL — the ER blocking shape), dot
+    // and norms exact integers, cos² = one fixed IEEE tree at the edge
+    // (squared on purpose: no sqrt cross-engine). Work ∝ per-block
+    // density² + shared-token join — never all-pairs
+    Entry("llm_lexical_cosine", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__lc_docs")
+      s.sql(s"""
+        WITH nrm AS (SELECT doc_id, ${graft.llm.Dedup.normalizeExpr} AS t
+                     FROM __lc_docs),
+        blk AS (SELECT doc_id, substr(t, 1, 12) AS blk, t
+                FROM nrm WHERE length(t) >= 12),
+        pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+                  FROM blk a JOIN blk b
+                    ON a.blk = b.blk AND a.doc_id < b.doc_id),
+        toks AS (SELECT doc_id, tok, COUNT(*) AS tf FROM (
+                   SELECT doc_id, tok
+                   FROM nrm LATERAL VIEW explode(split(t, ' ')) x AS tok
+                   WHERE length(tok) > 0)
+                 GROUP BY doc_id, tok),
+        n2 AS (SELECT doc_id, SUM(tf * tf) AS n2 FROM toks GROUP BY doc_id),
+        dt AS (SELECT p.doc_a, p.doc_b, SUM(x.tf * y.tf) AS dot
+               FROM pairs p
+                    JOIN toks x ON x.doc_id = p.doc_a
+                    JOIN toks y ON y.doc_id = p.doc_b AND y.tok = x.tok
+               GROUP BY p.doc_a, p.doc_b)
+        SELECT d.doc_a, d.doc_b, CAST(d.dot AS BIGINT) AS dot,
+               CAST(ROUND(CAST(d.dot AS DOUBLE) * CAST(d.dot AS DOUBLE)
+                          / (CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)), 6)
+                    AS DOUBLE) AS cos2
+        FROM dt d JOIN n2 a ON a.doc_id = d.doc_a
+                  JOIN n2 b ON b.doc_id = d.doc_b
+        ORDER BY doc_a, doc_b""")
+    },
+      // same prefix blocking, integer dot/norms, identical IEEE tree
       s"""WITH nrm AS (SELECT doc_id, $NORM AS t FROM documents),
          |blk AS (SELECT doc_id, substr(t, 1, 12) AS blk, t
          |        FROM nrm WHERE length(t) >= 12),
@@ -5910,10 +4752,36 @@ object Llm {
          |            AS DOUBLE) AS cos2
          |FROM dt d JOIN n2 a ON a.doc_id = d.doc_a
          |          JOIN n2 b ON b.doc_id = d.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    // same integer-idf algebra, DuckDB's unnest + // division
-    "llm_keywords" ->
+    // rarity-weighted keyword extraction (topic tagging for curation
+    // dashboards): score = tf · (N div df) — the INTEGER idf surrogate
+    // (log never runs in-plan, the house rule); two corpus-token aggs +
+    // one broadcast-sized df join, top-3 per doc through a rank window
+    // the WindowGroupLimit prunes before the shuffle
+    Entry("llm_keywords", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__kw_docs")
+      s.sql(s"""
+        WITH toks AS (SELECT doc_id, tok
+                      FROM __kw_docs
+                      LATERAL VIEW explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) t AS tok
+                      WHERE length(tok) > 2),
+        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
+        df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
+        n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM tf),
+        sc AS (SELECT tf.doc_id, tf.tok, tf.tf, df.df,
+                      tf.tf * (n.nd DIV df.df) AS score
+               FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n),
+        rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+                           ORDER BY score DESC, tok) AS rank
+               FROM sc)
+        SELECT doc_id, CAST(rank AS INT) AS rank, tok,
+               CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
+               CAST(score AS BIGINT) AS score
+        FROM rk WHERE rank <= 3
+        ORDER BY doc_id, rank""")
+    },
+      // same integer-idf algebra, DuckDB's unnest + // division
       s"""WITH toks AS (SELECT doc_id, tok FROM (
          |        SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |        FROM documents) WHERE length(tok) > 2),
@@ -5930,10 +4798,48 @@ object Llm {
          |       CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
          |       CAST(score AS BIGINT) AS score
          |FROM rk WHERE rank <= 3
-         |ORDER BY doc_id, rank""".stripMargin,
+         |ORDER BY doc_id, rank""".stripMargin),
 
-    // the same two-stage election with DuckDB's unnest + // idf
-    "llm_query_expansion" ->
+    // pseudo-relevance feedback (RM/Rocchio-lite query expansion): the
+    // top-3 docs by integer query-term tf elect 5 expansion terms by
+    // the rarity score tf·(N div df) (the llm_keywords scorer) with
+    // query terms excluded — the first-stage retrieval loop a search
+    // system runs before the expensive reranker. Every score integer,
+    // both rankings tie-broken (doc_id / term), top-k via rank windows
+    Entry("llm_query_expansion", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__qe_docs")
+      s.sql(s"""
+        WITH toks AS (SELECT doc_id, tok
+                      FROM __qe_docs
+                      LATERAL VIEW explode(split(${graft.llm.Dedup.normalizeExpr}, ' ')) t AS tok
+                      WHERE length(tok) > 2),
+        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
+        rel AS (SELECT doc_id, SUM(tf) AS qscore
+                FROM tf WHERE tok IN ('hash', 'join')
+                GROUP BY doc_id),
+        top3 AS (SELECT doc_id FROM (
+                   SELECT doc_id, row_number() OVER (
+                     ORDER BY qscore DESC, doc_id) AS rn FROM rel) r
+                 WHERE rn <= 3),
+        df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
+        nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tf),
+        cand AS (SELECT tf.tok, SUM(tf.tf) AS tf_top
+                 FROM tf JOIN top3 ON top3.doc_id = tf.doc_id
+                 WHERE tf.tok NOT IN ('hash', 'join')
+                 GROUP BY tf.tok),
+        sc AS (SELECT c.tok, c.tf_top, df.df,
+                      c.tf_top * (nd.n DIV df.df) AS score
+               FROM cand c JOIN df ON df.tok = c.tok CROSS JOIN nd),
+        r AS (SELECT tok, tf_top, df, score,
+                     row_number() OVER (ORDER BY score DESC, tok) AS rank
+              FROM sc)
+        SELECT tok AS term, CAST(tf_top AS BIGINT) AS tf_top,
+               CAST(df AS BIGINT) AS df, CAST(score AS BIGINT) AS score,
+               CAST(rank AS INT) AS rank
+        FROM r WHERE rank <= 5
+        ORDER BY rank""")
+    },
+      // the same two-stage election with DuckDB's unnest + // idf
       s"""WITH toks AS (SELECT doc_id, tok FROM (
          |        SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |        FROM documents) t WHERE length(tok) > 2),
@@ -5961,12 +4867,45 @@ object Llm {
          |       CAST(df AS BIGINT) AS df, CAST(score AS BIGINT) AS score,
          |       CAST(rank AS INT) AS rank
          |FROM r WHERE rank <= 5
-         |ORDER BY rank""".stripMargin,
+         |ORDER BY rank""".stripMargin),
 
-    // same token/bigram algebra on DuckDB's 1-based lists; the lift
-    // expression is the character-identical IEEE tree, the row set is
-    // cut by the integer threshold only
-    "llm_pmi_collocations" ->
+    // PMI collocation mining — which word pairs co-occur far above
+    // chance (phrase/boilerplate discovery, tokenizer-merge candidates).
+    // Log-free by the house rule: the PMI EXPONENT ordering is the
+    // lift ratio c_xy·N²/(B·c_x·c_y), emitted through ONE fixed IEEE
+    // tree at the output edge; the qualifying-row SET is cut by the
+    // INTEGER occurrence threshold alone, so no float ever decides
+    // membership. Two token aggs (map-side combinable) + a
+    // vocabulary-sized unigram join + a 1-row totals broadcast — at
+    // 100 TB every shuffle key is a token, never a doc
+    Entry("llm_pmi_collocations", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__pmi_docs")
+      s.sql(s"""
+        WITH norm AS (SELECT split(${graft.llm.Dedup.normalizeExpr}, ' ') AS w
+                      FROM __pmi_docs),
+        u AS (SELECT tok, COUNT(*) AS c FROM (
+                SELECT explode(w) AS tok FROM norm) t
+              WHERE length(tok) > 0 GROUP BY tok),
+        tot AS (SELECT (SELECT SUM(c) FROM u) AS n_tok,
+                       (SELECT SUM(size(w) - 1) FROM norm WHERE size(w) >= 2) AS n_big),
+        b AS (SELECT bigram, COUNT(*) AS c_xy FROM (
+                SELECT explode(transform(sequence(1, size(w) - 1),
+                         i -> concat(w[i-1], ' ', w[i]))) AS bigram
+                FROM norm WHERE size(w) >= 2) t
+              GROUP BY bigram HAVING COUNT(*) >= 20)
+        SELECT b.bigram, CAST(b.c_xy AS BIGINT) AS c_xy,
+               CAST(ux.c AS BIGINT) AS c_x, CAST(uy.c AS BIGINT) AS c_y,
+               CAST(ROUND(CAST(b.c_xy AS DOUBLE) * CAST(tot.n_tok AS DOUBLE) * CAST(tot.n_tok AS DOUBLE)
+                    / (CAST(tot.n_big AS DOUBLE) * CAST(ux.c AS DOUBLE) * CAST(uy.c AS DOUBLE)), 6)
+                    AS DOUBLE) AS lift
+        FROM b JOIN u ux ON ux.tok = split(b.bigram, ' ')[0]
+               JOIN u uy ON uy.tok = split(b.bigram, ' ')[1]
+               CROSS JOIN tot
+        ORDER BY bigram""")
+    },
+      // same token/bigram algebra on DuckDB's 1-based lists; the lift
+      // expression is the character-identical IEEE tree, the row set is
+      // cut by the integer threshold only
       s"""WITH norm AS (SELECT string_split($NORM, ' ') AS w FROM documents),
          |u AS (SELECT tok, COUNT(*) AS c FROM (
          |        SELECT unnest(w) AS tok FROM norm) t
@@ -5986,11 +4925,39 @@ object Llm {
          |FROM b JOIN u ux ON ux.tok = string_split(b.bigram, ' ')[1]
          |       JOIN u uy ON uy.tok = string_split(b.bigram, ' ')[2]
          |       CROSS JOIN tot
-         |ORDER BY bigram""".stripMargin,
+         |ORDER BY bigram""".stripMargin),
 
-    // Spark regexp_count == DuckDB len(regexp_extract_all) (the
-    // ts_event_pattern idiom); identical synthesis, identical integer rule
-    "llm_code_detect" -> """
+    // code-vs-prose detection — the routing filter a mixed crawl runs
+    // before tokenizer/quality decisions (code wants different
+    // normalization and its own mixture weight): integer densities of
+    // code punctuation ({};()=) and keyword hits vs word count, decision
+    // by a pure integer cross-multiplication rule. Code fragments are
+    // synthesized onto a deterministic doc subset (the fixture corpus is
+    // clean prose) so both verdict paths carry rows. Map-only + one
+    // rollup — embarrassingly parallel
+    Entry("llm_code_detect", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__code_docs")
+      s.sql("""
+        WITH t AS (SELECT doc_id, source,
+                          CASE WHEN doc_id % 6 = 0 THEN concat(text,
+                                 ' function f(x) { return x * g(x); } var y = f(2);')
+                               WHEN doc_id % 7 = 0 THEN concat(text,
+                                 ' SELECT a, b FROM t WHERE x = 1; UPDATE t SET a = 2;')
+                               ELSE text END AS body
+                   FROM __code_docs),
+        m AS (SELECT doc_id, source,
+                     CAST(regexp_count(body, '[{}();=]') AS BIGINT) AS n_punct,
+                     CAST(regexp_count(body,
+                       'function|return|var |SELECT |FROM |WHERE |UPDATE ') AS BIGINT) AS n_kw,
+                     CAST(regexp_count(body, '[a-zA-Z0-9]+') AS BIGINT) AS n_words
+              FROM t)
+        SELECT doc_id, n_punct, n_kw, n_words,
+               CAST((n_punct + 3 * n_kw) * 10 > n_words AS BOOLEAN) AS is_code
+        FROM m ORDER BY doc_id""")
+    },
+      // Spark regexp_count == DuckDB len(regexp_extract_all) (the
+      // ts_event_pattern idiom); identical synthesis, identical integer rule
+      """
       WITH t AS (SELECT doc_id, source,
                         CASE WHEN doc_id % 6 = 0 THEN concat(text,
                                ' function f(x) { return x * g(x); } var y = f(2);')
@@ -6006,10 +4973,32 @@ object Llm {
             FROM t)
       SELECT doc_id, n_punct, n_kw, n_words,
              CAST((n_punct + 3 * n_kw) * 10 > n_words AS BOOLEAN) AS is_code
-      FROM m ORDER BY doc_id""",
+      FROM m ORDER BY doc_id"""),
 
-    // the same label-partition rank permutation and mod-16 assignment
-    "llm_contrastive_batches" -> """
+    // contrastive in-batch negative construction — same-label items
+    // scattered across training batches so in-batch negatives stay
+    // valid: rank within label by seeded md5, batch = rank mod 16 (the
+    // closed form guarantees a label's copies land in DISTINCT batches
+    // until it has more copies than batches — max_label_dup reports
+    // exactly ceil(|label|/16)). One window over the label partition +
+    // one rollup; the permutation is the shuffleOrder hash discipline
+    Entry("llm_contrastive_batches", (s, d) => {
+      emb(s, d).createOrReplaceTempView("__cb_emb")
+      s.sql("""
+        WITH r AS (SELECT vec_id, label,
+                          row_number() OVER (PARTITION BY label
+                            ORDER BY md5(CAST(vec_id AS STRING)), vec_id) - 1 AS rn
+                   FROM __cb_emb),
+        a AS (SELECT vec_id, label, rn % 16 AS batch FROM r),
+        g AS (SELECT batch, label, COUNT(*) AS cnt FROM a GROUP BY batch, label)
+        SELECT CAST(batch AS INT) AS batch,
+               CAST(SUM(cnt) AS BIGINT) AS n_items,
+               CAST(COUNT(*) AS BIGINT) AS n_labels,
+               CAST(MAX(cnt) AS BIGINT) AS max_label_dup
+        FROM g GROUP BY batch ORDER BY batch""")
+    },
+      // the same label-partition rank permutation and mod-16 assignment
+      """
       WITH r AS (SELECT vec_id, label,
                         row_number() OVER (PARTITION BY label
                           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS rn
@@ -6020,13 +5009,59 @@ object Llm {
              CAST(SUM(cnt) AS BIGINT) AS n_items,
              CAST(COUNT(*) AS BIGINT) AS n_labels,
              CAST(MAX(cnt) AS BIGINT) AS max_label_dup
-      FROM g GROUP BY batch ORDER BY batch""",
+      FROM g GROUP BY batch ORDER BY batch"""),
 
-    // the identical synthesis + the identical backslash-free regex
-    // pipeline (RE2 and Java agree on character-class-only patterns);
-    // the one repeatable pattern carries DuckDB's 'g' flag — Spark
-    // replaces ALL matches by default, DuckDB only the first
-    "llm_url_dedup" -> """
+    // URL canonicalization dedup — the crawl-curation step BEFORE text
+    // dedup: the same page arrives under tracking-parameter and fragment
+    // variants, and canonical grouping collapses them without touching
+    // the payload. Recipe: strip #fragment, strip utm_* params (mid/
+    // first/sole positions — three anchored regexes, character classes
+    // only so the SAME pattern text runs on Java regex and RE2),
+    // lowercase scheme+host but never the path/query. Pure per-row
+    // projection + one hash agg — embarrassingly parallel at 100 TB.
+    // URLs are synthesized deterministically from doc_id/source (the
+    // fixture has no url column); min(doc_id) is the canonical keeper
+    Entry("llm_url_dedup", (s, d) => {
+      docs(s, d).createOrReplaceTempView("__url_docs")
+      s.sql("""
+        WITH u0 AS (SELECT doc_id,
+               CASE WHEN doc_id % 5 = 0 THEN
+                 concat('https://', upper(source), '.Example.com/alt/',
+                        CAST(doc_id % 50 AS STRING),
+                        '?utm_medium=email&id=', CAST(doc_id % 20 AS STRING))
+               ELSE
+                 concat('https://', upper(source), '.Example.com/page/',
+                        CAST(doc_id % 50 AS STRING),
+                        '?id=', CAST(doc_id % 20 AS STRING),
+                        CASE WHEN doc_id % 3 = 0 THEN '&utm_campaign=spring' ELSE '' END,
+                        CASE WHEN doc_id % 4 = 0 THEN '&utm_source=feed' ELSE '' END,
+                        CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END)
+               END AS url FROM __url_docs),
+        c AS (SELECT doc_id, url,
+                     regexp_replace(regexp_replace(regexp_replace(
+                       regexp_replace(url, '#.*$', ''),
+                       '&utm_[a-z]+=[^&]*', ''),
+                       '[?]utm_[a-z]+=[^&]*&', '?'),
+                       '[?]utm_[a-z]+=[^&]*$', '') AS stripped
+              FROM u0),
+        k AS (SELECT doc_id, url,
+                     concat(lower(regexp_extract(stripped, '^https?://[^/]+', 0)),
+                            substr(stripped,
+                              length(regexp_extract(stripped, '^https?://[^/]+', 0)) + 1))
+                       AS canonical_url
+              FROM c)
+        SELECT canonical_url,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(COUNT(DISTINCT url) AS BIGINT) AS n_variants,
+               MIN(doc_id) AS keeper_doc_id
+        FROM k GROUP BY canonical_url
+        ORDER BY canonical_url""")
+    },
+      // the identical synthesis + the identical backslash-free regex
+      // pipeline (RE2 and Java agree on character-class-only patterns);
+      // the one repeatable pattern carries DuckDB's 'g' flag — Spark
+      // replaces ALL matches by default, DuckDB only the first
+      """
       WITH u0 AS (SELECT doc_id,
              CASE WHEN doc_id % 5 = 0 THEN
                concat('https://', upper(source), '.Example.com/alt/',
@@ -6058,11 +5093,33 @@ object Llm {
              CAST(COUNT(DISTINCT url) AS BIGINT) AS n_variants,
              MIN(doc_id) AS keeper_doc_id
       FROM k GROUP BY canonical_url
-      ORDER BY canonical_url""",
+      ORDER BY canonical_url"""),
 
-    // the same three regexp counts (len == size), the identical IEEE
-    // tree, banding on the shared rounded grade
-    "llm_readability" -> """
+    // Flesch-Kincaid-style readability for quality filtering: word /
+    // sentence / vowel-group counts are three regexp passes over the map
+    // side (one scan, no shuffle before the output sort), the grade one
+    // FIXED IEEE tree over the integer counts (the qc_benford
+    // discipline), banding on the ROUNDED grade so both engines compare
+    // the identical double
+    Entry("llm_readability", (s, d) =>
+      docs(s, d)
+        .selectExpr("doc_id",
+          "CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT) AS n_words",
+          "CAST(GREATEST(1, size(regexp_extract_all(text, '[.!?]+', 0))) AS BIGINT) AS n_sents",
+          "CAST(GREATEST(1, size(regexp_extract_all(lower(text), '[aeiouy]+', 0))) AS BIGINT) AS n_syll")
+        .where("n_words > 0")
+        .selectExpr("doc_id", "n_words", "n_sents", "n_syll",
+          """CAST(ROUND(CAST(0.39 AS DOUBLE) * (CAST(n_words AS DOUBLE) / n_sents)
+            |  + CAST(11.8 AS DOUBLE) * (CAST(n_syll AS DOUBLE) / n_words)
+            |  - CAST(15.59 AS DOUBLE), 6) AS DOUBLE) AS fk""".stripMargin)
+        .selectExpr("doc_id", "n_words", "n_sents", "n_syll", "fk",
+          """CASE WHEN fk < CAST(6.0 AS DOUBLE) THEN 'easy'
+            |     WHEN fk < CAST(10.0 AS DOUBLE) THEN 'medium'
+            |     ELSE 'hard' END AS band""".stripMargin)
+        .orderBy("doc_id"),
+      // the same three regexp counts (len == size), the identical IEEE
+      // tree, banding on the shared rounded grade
+      """
       WITH m AS (SELECT doc_id,
                         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT) AS n_words,
                         CAST(GREATEST(1, len(regexp_extract_all(text, '[.!?]+', 0))) AS BIGINT) AS n_sents,
@@ -6077,22 +5134,15 @@ object Llm {
              CASE WHEN fk < CAST(6.0 AS DOUBLE) THEN 'easy'
                   WHEN fk < CAST(10.0 AS DOUBLE) THEN 'medium'
                   ELSE 'hard' END AS band
-      FROM f ORDER BY doc_id""",
+      FROM f ORDER BY doc_id"""),
 
-    "llm_dataset_card" ->
-      """SELECT coalesce(source, 'ALL') AS source, count(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS n_chars_sum,
-        |       CAST(SUM(len(regexp_extract_all(lower(text), '[a-z0-9]+', 0))) AS BIGINT) AS n_words,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(ROUND(CAST(SUM(CASE WHEN n_chars < 200 THEN 1 ELSE 0 END) AS BIGINT)
-        |                  / count(*), 6) AS DOUBLE) AS short_ratio,
-        |       CAST(ROUND(CAST(SUM(n_chars) AS BIGINT) / count(*), 6) AS DOUBLE) AS mean_chars
-        |FROM documents GROUP BY ROLLUP (source)
-        |ORDER BY source""".stripMargin,
-
-    // the window-minima selection replayed over 1-based gram positions
-    // (Spark's posexplode is 0-based: its pos >= 3 == i >= 4 here)
-    "llm_winnow" ->
+    // winnowing fingerprints (MOSS): per-doc window-minima digest over
+    // 8-char gram hashes — shared substrings of >= 11 chars must share
+    // a fingerprint
+    Entry("llm_winnow", (s, d) =>
+      TextAnalysis.winnow(docs(s, d)).orderBy("doc_id"),
+      // the window-minima selection replayed over 1-based gram positions
+      // (Spark's posexplode is 0-based: its pos >= 3 == i >= 4 here)
       s"""WITH nrm AS (SELECT doc_id, $NORM AS t FROM documents),
          |ok AS (SELECT doc_id, t FROM nrm WHERE length(t) >= 11),
          |g AS (SELECT doc_id, i,
@@ -6106,12 +5156,310 @@ object Llm {
          |       COUNT(DISTINCT wmin) AS n_fps,
          |       CAST(SUM(DISTINCT wmin) AS BIGINT) AS fp_sum
          |FROM wm WHERE i >= 4
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // assignment argmax recomputed on the UNROUNDED cosine (both engines
-    // rank the same bit-identical doubles; min cid breaks exact ties),
-    // means recomputed from scratch over 1-based list subscripts
-    "llm_kmeans_iter" ->
+    // vocabulary encode: corpus-derived top-100 dictionary broadcast over
+    // the token stream; ids_fp digests the exact id sequence per doc
+    Entry("llm_vocab_map", (s, d) =>
+      TextAnalysis.vocabEncode(docs(s, d)).orderBy("doc_id"),
+      // same derivation via string_split/window rank; the per-doc id
+      // sequence digest uses ORDER BY pos inside string_agg where Spark
+      // sorts the collected (pos, id) structs
+      s"""WITH toks AS (
+         |  SELECT doc_id, i - 1 AS pos, w[i] AS tok
+         |  FROM (SELECT doc_id, string_split($NORM, ' ') AS w
+         |        FROM documents) t,
+         |       unnest(generate_series(1, len(w))) AS u(i)
+         |  WHERE length(w[i]) > 0),
+         |vocab AS (
+         |  SELECT tok, row_number() OVER (ORDER BY df DESC, tok) - 1 AS tok_id
+         |  FROM (SELECT tok, count(*) AS df
+         |        FROM (SELECT DISTINCT doc_id, tok FROM toks)
+         |        GROUP BY tok ORDER BY df DESC, tok LIMIT 100)),
+         |enc AS (SELECT t.doc_id, t.pos, COALESCE(v.tok_id, -1) AS tok_id
+         |        FROM toks t LEFT JOIN vocab v ON t.tok = v.tok)
+         |SELECT doc_id, COUNT(*) AS n_tokens,
+         |       CAST(COUNT(*) FILTER (WHERE tok_id = -1) AS BIGINT) AS n_oov,
+         |       md5(string_agg(CAST(tok_id AS VARCHAR), ',' ORDER BY pos)) AS ids_fp
+         |FROM enc GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin),
+
+    // graded retrieval evaluation: NDCG@10 next to llm_retrieval_mrr's
+    // MRR — rank discounts 1/log2(i+1) and the ideal prefix sums enter
+    // as DRIVER literals (libm log never runs in plan — the qc_benford
+    // discipline); the DCG fold adds hit discounts in rank order
+    Entry("llm_ndcg_eval", (s, d) => {
+      val e = emb(s, d)
+      Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
+        .join(e.select(col("vec_id").as("probe_id"),
+          col("label").as("probe_label")), "probe_id")
+        .join(e.select(col("vec_id").as("cand_id"),
+          col("label").as("cand_label")), "cand_id")
+        .where("cand_label = probe_label")
+        .groupBy("probe_id")
+        .agg(count(lit(1)).as("n_rel"),
+          expr(s"""aggregate(array_sort(collect_list(rank)),
+                  |  CAST(0.0 AS DOUBLE),
+                  |  (acc, r) -> acc + element_at($ndcgDiscArr, r))"""
+            .stripMargin).as("__dcg"))
+        .selectExpr("probe_id", "CAST(n_rel AS BIGINT) AS n_rel",
+          "CAST(ROUND(__dcg, 6) AS DOUBLE) AS dcg",
+          s"CAST(ROUND(__dcg / element_at($ndcgIdcgArr, CAST(n_rel AS INT)), 6) AS DOUBLE) AS ndcg")
+        .orderBy("probe_id")
+    },
+      // the same exact top-10, hit discounts from the IDENTICAL driver
+      // literal arrays, the DCG fold in ascending rank order
+      s"""WITH pairs AS (
+         |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
+         |         c.vec_id AS cand_id, c.label AS cand_label,
+         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
+         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
+         |  WHERE p.vec_id < 32),
+         |ranked AS (SELECT probe_id, probe_label, cand_label,
+         |                  CAST(row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY cos DESC, cand_id) AS INT) AS rank
+         |           FROM pairs),
+         |hits AS (SELECT probe_id, rank FROM ranked
+         |         WHERE rank <= 10 AND cand_label = probe_label),
+         |a AS (SELECT probe_id, count(*) AS n_rel,
+         |             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |               list_transform(list_sort(list(rank)),
+         |                 r -> ($duckNdcgDiscArr)[r])),
+         |               (acc, v) -> acc + v) AS dcg0
+         |      FROM hits GROUP BY probe_id)
+         |SELECT probe_id, CAST(n_rel AS BIGINT) AS n_rel,
+         |       CAST(ROUND(dcg0, 6) AS DOUBLE) AS dcg,
+         |       CAST(ROUND(dcg0 / ($duckNdcgIdcgArr)[CAST(n_rel AS INT)], 6)
+         |         AS DOUBLE) AS ndcg
+         |FROM a ORDER BY probe_id""".stripMargin),
+
+    // paraphrase candidate mining: semantically CLOSE (bucketed exact
+    // cosine >= 0.4) but lexically FAR (shingle jaccard < 0.5, with
+    // zero-overlap pairs counted at 0 via the LEFT join) — the pair
+    // source for contrastive/paraphrase training that pure dedup
+    // discards; composition of cosineNearDups + jaccardWithZeros
+    Entry("llm_paraphrase_mine", (s, d) => {
+      // exact-collapse FRONT on identical vectors (the bbit_minhash
+      // lesson applied to the embedding side): verbatim copies explode
+      // the bucketed cosine self-join quadratically — factor-100 sweep
+      // 177.6 s raw vs 4.57 s with min-id survivors; dup-free corpora
+      // pass through unchanged
+      val surv = emb(s, d).groupBy("embedding")
+        .agg(min("vec_id").as("vec_id"))
+      val cands = Similarity.cosineNearDups(surv, minCosine = 0.4)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
+          col("cos"))
+      // shingle ONLY candidate-touched docs: the embedded slice is a
+      // subset of the corpus, so shingling every document charges the
+      // whole corpus's shingle shuffle to a pair set that never reads it
+      // (10x sweep: 8.1 s whole-corpus vs 6.9 semi-joined — the residual
+      // is the one unavoidable corpus scan feeding the semi-join)
+      val ids = cands.select(col("doc_a").as("doc_id"))
+        .union(cands.select(col("doc_b").as("doc_id"))).distinct()
+      Dedup.jaccardWithZeros(
+          docs(s, d).join(ids, Seq("doc_id"), "left_semi"), cands)
+        .where(col("jaccard") < 0.5)
+        .select("doc_a", "doc_b", "cos", "jaccard")
+        .orderBy("doc_a", "doc_b")
+    },
+      // bucketed cosine candidates LEFT-joined onto the shingle
+      // intersection — zero-overlap pairs verify at jaccard 0 and survive
+      // the lexical-distance filter
+      s"""WITH semb AS (SELECT MIN(vec_id) AS vec_id, embedding
+         |              FROM embeddings GROUP BY embedding),
+         |bkt AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
+         |            FROM semb),
+         |cand AS (SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
+         |                ${duckCosine("x.embedding", "y.embedding")} AS cos
+         |         FROM bkt x JOIN bkt y
+         |           ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+         |         WHERE ${duckCosine("x.embedding", "y.embedding")} >= 0.4),
+         |${shingleCtes("documents")},
+         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+         |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS n_both
+         |          FROM cand c
+         |          JOIN sh x ON x.doc_id = c.doc_a
+         |          JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+         |          GROUP BY 1, 2),
+         |j AS (SELECT c.doc_a, c.doc_b, c.cos,
+         |             CAST(ROUND(CAST(COALESCE(i.n_both, 0) AS DOUBLE)
+         |               / (sa.n_sh + sb.n_sh - COALESCE(i.n_both, 0)), 6)
+         |               AS DOUBLE) AS jaccard
+         |      FROM cand c
+         |      LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
+         |      JOIN sizes sa ON sa.doc_id = c.doc_a
+         |      JOIN sizes sb ON sb.doc_id = c.doc_b)
+         |SELECT doc_a, doc_b, cos, jaccard FROM j
+         |WHERE jaccard < 0.5 ORDER BY doc_a, doc_b""".stripMargin),
+
+    // vocabulary coverage curve — the tokenizer-design audit: what
+    // fraction of corpus token MASS does a top-k vocabulary cover?
+    // Scale shape: the only global order is a TakeOrdered head cut
+    // (limit 30 here; 10k in production — never a full vocab sort); the
+    // cumulative mass is an exact integer running sum over that bounded
+    // head, totals come from
+    // one separate agg
+    Entry("llm_vocab_coverage", (s, d) => {
+      val toks = docs(s, d)
+        .select(explode(expr(
+          s"filter(split(${Dedup.normalizeExpr}, ' '), w -> length(w) > 0)"))
+          .as("tok"))
+      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
+      val head = vocab.orderBy(col("cnt").desc, col("tok")).limit(30)
+        .selectExpr("tok", "cnt",
+          "row_number() OVER (ORDER BY cnt DESC, tok) AS rk",
+          "SUM(cnt) OVER (ORDER BY cnt DESC, tok ROWS UNBOUNDED PRECEDING) AS cum")
+      val totals = vocab.agg(count(lit(1)).as("vocab_size"),
+        sum("cnt").as("total_tokens"))
+      head.where(col("rk").isin(5, 10, 30))
+        .crossJoin(broadcast(totals))
+        .selectExpr("CAST(rk AS BIGINT) AS k",
+          "CAST(cum AS BIGINT) AS covered_tokens",
+          "CAST(vocab_size AS BIGINT) AS vocab_size",
+          "CAST(total_tokens AS BIGINT) AS total_tokens",
+          // DECIMAL(38,0) before the ppm scaling (r15 ADVICE): DuckDB
+          // promotes cum*1e6 to HUGEINT while int64 would overflow past
+          // ~9.2e12 corpus tokens under ANSI — widen to match the oracle
+          "CAST(CAST(cum AS DECIMAL(38,0)) * 1000000 DIV total_tokens AS BIGINT) AS covered_ppm")
+        .orderBy("k")
+    },
+      // top-10 ranking recomputed from scratch, label relevance applied
+      // AFTER the rank cut (a hit outside the top-10 must not count)
+      // the same head cut and exact integer running sum
+      s"""WITH toks2 AS (SELECT unnest(list_filter(string_split($NORM, ' '),
+         |                       w -> length(w) > 0)) AS tok
+         |              FROM documents),
+         |vocab AS (SELECT tok, count(*) AS cnt FROM toks2 GROUP BY tok),
+         |head AS (SELECT tok, cnt,
+         |                row_number() OVER (ORDER BY cnt DESC, tok) AS rk,
+         |                SUM(cnt) OVER (ORDER BY cnt DESC, tok
+         |                  ROWS UNBOUNDED PRECEDING) AS cum
+         |         FROM vocab QUALIFY rk <= 30),
+         |tot AS (SELECT count(*) AS vocab_size, SUM(cnt) AS total_tokens
+         |        FROM vocab)
+         |SELECT CAST(rk AS BIGINT) AS k, CAST(cum AS BIGINT) AS covered_tokens,
+         |       CAST(vocab_size AS BIGINT) AS vocab_size,
+         |       CAST(total_tokens AS BIGINT) AS total_tokens,
+         |       CAST(cum * 1000000 // total_tokens AS BIGINT) AS covered_ppm
+         |FROM head CROSS JOIN tot
+         |WHERE rk IN (5, 10, 30)
+         |ORDER BY k""".stripMargin),
+
+    // CCNet-style quality bucketing: per SOURCE, head/middle/tail
+    // terciles by the bigram LM score — the closed-form tercile rank
+    // (3·(r−1)) DIV n (the agg_rfm_segments discipline — never ntile),
+    // per-bucket census with a doc-id-ordered mean fold. The per-source
+    // rank window is the real CCNet shape (it sorts each language shard
+    // by perplexity); buckets then gate which shard enters training
+    Entry("llm_ccnet_buckets", (s, d) => {
+      val dd = docs(s, d)
+      TextAnalysis.bigramScore(dd, minCount = 2)
+        .join(dd.select("doc_id", "source"), "doc_id")
+        .selectExpr("source", "doc_id", "avg_p",
+          "row_number() OVER (PARTITION BY source ORDER BY avg_p DESC, doc_id) AS r",
+          "count(1) OVER (PARTITION BY source) AS n")
+        .selectExpr("source", "doc_id", "avg_p",
+          """CASE (3 * (r - 1)) DIV n WHEN 0 THEN 'head'
+            |     WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket""".stripMargin)
+        .groupBy("source", "bucket")
+        .agg(count(lit(1)).as("n_docs"),
+          expr(
+            """CAST(ROUND(aggregate(
+              |  transform(array_sort(collect_list(struct(doc_id, avg_p))),
+              |            x -> x.avg_p),
+              |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) / count(1), 6)
+              |AS DOUBLE)""".stripMargin).as("mean_p"))
+        .selectExpr("source", "bucket", "CAST(n_docs AS BIGINT) AS n_docs",
+          "mean_p")
+        .orderBy("source", "bucket")
+    },
+      // the llm_bigram_lm scoring CTEs feeding the identical closed-form
+      // tercile rank and a doc-id-ordered mean fold per bucket
+      s"""WITH tk AS (SELECT doc_id,
+         |              list_filter(string_split($NORM, ' '),
+         |                          w -> length(w) > 0) AS t
+         |            FROM documents),
+         |uni AS (SELECT w, count(*) AS c1
+         |        FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w),
+         |bg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] AS w1,
+         |              t[i + 1] AS w2
+         |       FROM tk, unnest(generate_series(1, len(t) - 1)) u(i)
+         |       WHERE len(t) >= 2),
+         |cbi AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY w1, w2),
+         |j AS (SELECT bg.doc_id, bg.pos,
+         |             CAST(cbi.c12 AS DOUBLE) / CAST(uni.c1 AS DOUBLE) AS p
+         |      FROM bg JOIN cbi ON bg.w1 = cbi.w1 AND bg.w2 = cbi.w2
+         |           JOIN uni ON bg.w1 = uni.w),
+         |sc AS (SELECT doc_id,
+         |              CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |                list(p ORDER BY pos)), (acc, v) -> acc + v)
+         |                / count(*), 6) AS DOUBLE) AS avg_p
+         |       FROM j GROUP BY doc_id),
+         |ss AS (SELECT s.doc_id, d.source, s.avg_p
+         |       FROM sc s JOIN documents d USING (doc_id)),
+         |r AS (SELECT source, doc_id, avg_p,
+         |             row_number() OVER (PARTITION BY source
+         |               ORDER BY avg_p DESC, doc_id) AS r,
+         |             count(*) OVER (PARTITION BY source) AS n
+         |      FROM ss),
+         |b AS (SELECT source, doc_id, avg_p,
+         |             CASE (3 * (r - 1)) // n WHEN 0 THEN 'head'
+         |                  WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
+         |      FROM r)
+         |SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
+         |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |         list(avg_p ORDER BY doc_id)), (acc, v) -> acc + v)
+         |         / count(*), 6) AS DOUBLE) AS mean_p
+         |FROM b GROUP BY source, bucket ORDER BY source, bucket""".stripMargin),
+
+    // retrieval evaluation: first same-label hit rank in the exact top-10
+    // per probe, with its reciprocal — the MRR ingredient; probes whose
+    // top-10 holds no relevant result emit no row (both engines)
+    Entry("llm_retrieval_mrr", (s, d) => {
+      val e = emb(s, d)
+      Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
+        .join(e.select(col("vec_id").as("probe_id"),
+          col("label").as("probe_label")), "probe_id")
+        .join(e.select(col("vec_id").as("cand_id"),
+          col("label").as("cand_label")), "cand_id")
+        .where("cand_label = probe_label")
+        .groupBy("probe_id")
+        .agg(min("rank").as("first_hit_rank"))
+        .selectExpr("probe_id", "first_hit_rank",
+          "CAST(ROUND(1.0 / first_hit_rank, 6) AS DOUBLE) AS rr")
+        .orderBy("probe_id")
+    },
+      s"""WITH pairs AS (
+         |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
+         |         c.vec_id AS cand_id, c.label AS cand_label,
+         |         ${duckCosine("p.embedding", "c.embedding")} AS cos
+         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
+         |  WHERE p.vec_id < 32),
+         |ranked AS (SELECT probe_id, probe_label, cand_label,
+         |                  CAST(row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY cos DESC, cand_id) AS INT) AS rank
+         |           FROM pairs)
+         |SELECT probe_id, MIN(rank) AS first_hit_rank,
+         |       CAST(ROUND(CAST(1.0 AS DOUBLE) / MIN(rank), 6) AS DOUBLE) AS rr
+         |FROM ranked
+         |WHERE rank <= 10 AND cand_label = probe_label
+         |GROUP BY probe_id
+         |ORDER BY probe_id""".stripMargin),
+
+    // one k-means Lloyd iteration, differentially: 4 fixture vectors seed
+    // the centroids, assignment is the broadcast argmax Ivf.assign uses,
+    // and the recomputed centroid means are DECIMAL-exact sums over one
+    // correctly-rounded double division — the training step spark.ml
+    // hides, pinned value-by-value against DuckDB
+    Entry("llm_kmeans_iter", (s, d) => {
+      val e = emb(s, d)
+      val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
+        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+      Ivf.lloydIterate(e, cents).orderBy("centroid_id", "dim")
+    },
+      // assignment argmax recomputed on the UNROUNDED cosine (both engines
+      // rank the same bit-identical doubles; min cid breaks exact ties),
+      // means recomputed from scratch over 1-based list subscripts
       s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
          |           WHERE vec_id IN (3, 17, 31, 59)),
          |a AS (SELECT v.vec_id, c.cid,
@@ -6130,13 +5478,24 @@ object Llm {
          |                    / COUNT(*), 6) + 0.0 AS DOUBLE) AS component,
          |       COUNT(*) AS n_members
          |FROM px GROUP BY cid, dim
-         |ORDER BY centroid_id, dim""".stripMargin,
+         |ORDER BY centroid_id, dim""".stripMargin),
 
-    // the whole 3-step chain replayed: assignment (unrounded-cosine
-    // argmax, min-cid ties), DECIMAL-exact means, FLOAT round-trip into
-    // the next stage — the same per-stage arithmetic llm_kmeans_iter
-    // pins once, composed
-    "llm_kmeans_converged" -> {
+    // three chained Lloyd steps — the full training loop differentially:
+    // each iteration's rounded means feed the next through a FLOAT
+    // round-trip, so one drifting component anywhere in the chain
+    // hash-mismatches the final state
+    Entry("llm_kmeans_converged", (s, d) => {
+      val e = emb(s, d)
+      val seed = e.where(col("vec_id").isin(3, 17, 31, 59))
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.lloydLoop(e, seed, iters = 3).orderBy("centroid_id", "dim")
+    },
+      // the whole 3-step chain replayed: assignment (unrounded-cosine
+      // argmax, min-cid ties), DECIMAL-exact means, FLOAT round-trip into
+      // the next stage — the same per-stage arithmetic llm_kmeans_iter
+      // pins once, composed
+      {
       val init =
         """cent0 AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
           |          WHERE vec_id IN (3, 17, 31, 59))""".stripMargin
@@ -6164,12 +5523,23 @@ object Llm {
       s"""WITH ${(init +: steps).mkString(",\n")}
          |SELECT cid AS centroid_id, dim, component, n_members
          |FROM m3 ORDER BY centroid_id, dim""".stripMargin
-    },
+    }),
 
-    // brute force over every pair — no grams, no prefixes, no threshold
-    // cutoff anywhere: the O(n²) recomputation the operator exists to
-    // avoid, which is exactly what proves its candidate set complete
-    "llm_edit_distance_join" -> """
+    // exact edit-distance join over 30-char document prefixes (fuzzy key
+    // matching): Ed-Join prefix filtering on rarest q-grams, threshold
+    // levenshtein verify — the oracle brute-forces every pair, so a
+    // missed candidate (unsound prefix filter) hash-mismatches
+    Entry("llm_edit_distance_join", (s, d) => {
+      val keyed = Tables.load(s, d, "documents")
+        .selectExpr("doc_id", "substr(text, 1, 30) AS st")
+      Fuzzy.editDistanceJoin(keyed, "doc_id", "st", k = 3)
+        .selectExpr("a_id", "b_id", "CAST(dist AS INT) AS dist")
+        .orderBy("a_id", "b_id")
+    },
+      // brute force over every pair — no grams, no prefixes, no threshold
+      // cutoff anywhere: the O(n²) recomputation the operator exists to
+      // avoid, which is exactly what proves its candidate set complete
+      """
       WITH s AS (SELECT doc_id AS id, substr(text, 1, 30) AS st
                  FROM documents WHERE text IS NOT NULL)
       SELECT a.id AS a_id, b.id AS b_id,
@@ -6177,12 +5547,18 @@ object Llm {
       FROM s a JOIN s b ON a.id < b.id
       WHERE abs(length(a.st) - length(b.st)) <= 3
         AND levenshtein(a.st, b.st) <= 3
-      ORDER BY a_id, b_id""",
+      ORDER BY a_id, b_id"""),
 
-    // re-keys docs by source and replays the identical minhash pipeline:
-    // the per-source signature must equal the union-set signature, and
-    // the agreement count is the MinHash Jaccard estimator
-    "llm_source_similarity" -> {
+    // which SOURCES duplicate each other: group-level MinHash — min() is
+    // associative, so re-keying docs by source before the minhash groupBy
+    // yields the signature of each source's union shingle set; pairwise
+    // agreement over 8 permutations estimates cross-source Jaccard
+    Entry("llm_source_similarity", (s, d) =>
+      Dedup.groupSimilarity(docs(s, d), "source").orderBy("src_a", "src_b"),
+      // re-keys docs by source and replays the identical minhash pipeline:
+      // the per-source signature must equal the union-set signature, and
+      // the agreement count is the MinHash Jaccard estimator
+      {
       val unpivot = (0 until 8)
         .map(i => s"SELECT doc_id AS grp, $i AS i, h$i AS h FROM mh")
         .mkString("\n UNION ALL ")
@@ -6196,11 +5572,15 @@ object Llm {
          |FROM long a JOIN long b ON a.i = b.i AND a.grp < b.grp
          |GROUP BY 1, 2
          |ORDER BY src_a, src_b""".stripMargin
-    },
+    }),
 
-    // identical argmax + the same literal space-delimited replace pass
-    // (both engines: non-overlapping leftmost), recounted from scratch
-    "llm_bpe_merge_step" ->
+    // one BPE merge-training step: pre/post pair counts around the
+    // argmax merge — the corpus collapses to the word-frequency dict
+    // before any pair work (the classic BPE scale property)
+    Entry("llm_bpe_merge_step", (s, d) =>
+      TextAnalysis.bpeMergeStep(docs(s, d)),
+      // identical argmax + the same literal space-delimited replace pass
+      // (both engines: non-overlapping leftmost), recounted from scratch
       s"""WITH toksb AS (SELECT unnest(string_split($NORM, ' ')) AS w FROM documents),
          |wcs AS (SELECT w, count(*) AS wc FROM toksb WHERE length(w) > 0 GROUP BY w),
          |seqs AS (SELECT w, wc,
@@ -6223,12 +5603,17 @@ object Llm {
          |SELECT pb.pair, CAST(pb.n AS BIGINT) AS n_before,
          |       CAST(COALESCE(pa.n, 0) AS BIGINT) AS n_after
          |FROM pb LEFT JOIN pa USING (pair)
-         |ORDER BY n_before DESC, pair LIMIT 20""".stripMargin,
+         |ORDER BY n_before DESC, pair LIMIT 20""".stripMargin),
 
-    // the same dictionary, symbol frequencies and likelihood ratio —
-    // double(n) / (double(lf) · double(rf)) is the identical IEEE op
-    // sequence, so raw scores hash-match with no rounding edge
-    "llm_wordpiece_step" ->
+    // WordPiece's likelihood criterion over the same dictionary: rank
+    // merges by freq(ab)/(freq(a)·freq(b)) — rare-but-cohesive pairs
+    // beat frequent collisions; score is a raw IEEE division (no ROUND
+    // edge), ties lexicographic
+    Entry("llm_wordpiece_step", (s, d) =>
+      TextAnalysis.wordpieceStep(docs(s, d)).orderBy("rank"),
+      // the same dictionary, symbol frequencies and likelihood ratio —
+      // double(n) / (double(lf) · double(rf)) is the identical IEEE op
+      // sequence, so raw scores hash-match with no rounding edge
       s"""WITH toksw AS (SELECT unnest(string_split($NORM, ' ')) AS w FROM documents),
          |wcs AS (SELECT w, count(*) AS wc FROM toksw WHERE length(w) > 0 GROUP BY w),
          |seqs AS (SELECT w, wc,
@@ -6252,11 +5637,34 @@ object Llm {
          |       FROM sc)
          |SELECT CAST(rank AS INT) AS rank, pair, CAST(n AS BIGINT) AS n,
          |       CAST(lf AS BIGINT) AS lf, CAST(rf AS BIGINT) AS rf, score
-         |FROM rk WHERE rank <= 20 ORDER BY rank""".stripMargin,
+         |FROM rk WHERE rank <= 20 ORDER BY rank""".stripMargin),
 
-    // the split derivation, exact-fingerprint check and cross-band
-    // near-dup check all replayed; leaked = exact ∪ near over survivors
-    "llm_split_leakage" ->
+    // eval hygiene: held-out (val/test) docs whose content leaks from the
+    // train split — exact fingerprint or cross-band near-dup — i.e. the
+    // complement of dedupeIncremental's survivors; the check that runs
+    // before trusting any benchmark number
+    Entry("llm_split_leakage", (s, d) => {
+      val dd = docs(s, d)
+      // localCheckpoint (r17 opt): the split table is METADATA-scale
+      // (doc_id, split) but its derivation is a corpus-wide
+      // normalize+md5 pass, and it feeds the train selection (consumed
+      // 3× inside dedupeIncremental) plus the heldout selection
+      // (consumed twice) — the lazy form re-ran the md5 pass per
+      // consumer (44 parquet scans / 49 Exchanges executed,
+      // plans/r17/llm_split_leakage_before.txt)
+      val split = TextAnalysis.hashSplit(dd).select("doc_id", "split")
+        .localCheckpoint()
+      val train = dd.join(
+        split.where("split = 'train'").select("doc_id"), "doc_id")
+      val heldout = dd.join(
+        split.where("split <> 'train'").select("doc_id"), "doc_id")
+      val clean = Dedup.dedupeIncremental(train, heldout)
+      heldout.join(clean.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .selectExpr("doc_id", "source")
+        .orderBy("doc_id")
+    },
+      // the split derivation, exact-fingerprint check and cross-band
+      // near-dup check all replayed; leaked = exact ∪ near over survivors
       s"""WITH ${bandCtes("documents")},
          |spl AS (SELECT doc_id,
          |               CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
@@ -6283,12 +5691,47 @@ object Llm {
          |           UNION SELECT doc_id FROM near_leak)
          |SELECT d.doc_id, d.source
          |FROM documents d JOIN leaked l ON l.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
 
-    // every report number independently recomputed: exact-dup mass from
-    // the fp groupBy, near-dup census over the min-id survivors,
-    // clusters from the recursive reachability closure
-    "llm_dedup_report" ->
+    // the one-row dedup health report a pipeline owner actually reads:
+    // corpus size, exact-dup mass, candidate/verified pair counts,
+    // cluster census — every number an aggregate of operators that are
+    // themselves oracled row-by-row elsewhere
+    Entry("llm_dedup_report", (s, d) => {
+      val dd = docs(s, d)
+      // localCheckpoint (r16 opt): the exact table feeds the mass stats
+      // AND the survivor join; survivors feed candidate generation AND
+      // the jaccard verify — 12 parquet scans executed in the lazy form
+      val ex = Dedup.exact(dd).localCheckpoint()
+      val exStats = ex.agg(
+        sum("n_docs").as("n_docs"),
+        count(lit(1)).as("n_distinct_content"),
+        sum(expr("n_docs - 1")).as("n_exact_collapsed"))
+      // near-dup census on DISTINCT content only (the dedupe()/dedup_cc
+      // front-collapse): verbatim copies would densify the candidate
+      // graph quadratically in copy count and measure nothing new —
+      // measured 33 s vs 5 s at the 10x dup-heavy staging
+      val survivors = dd.join(
+        ex.select(col("keep_id").as("doc_id")), Seq("doc_id"))
+        .localCheckpoint()
+      // localCheckpoint: the scan→shingle→minhash→band subtree is the
+      // report's dominant cost and feeds BOTH the pair count and the
+      // jaccard verify chain — materialize the (pair-bounded, small)
+      // candidate set once instead of re-deriving it per consumer
+      val cands = Dedup.lshCandidates(survivors).localCheckpoint()
+      val verified = Dedup.jaccard(survivors, cands)
+        .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
+      val pairStats = cands.agg(count(lit(1)).as("n_candidate_pairs"))
+        .crossJoin(verified.agg(count(lit(1)).as("n_verified_pairs")))
+      val cStats = Dedup.dupClusters(verified)
+        .groupBy("cluster_rep").agg(count(lit(1)).as("sz"))
+        .agg(count(lit(1)).as("n_clusters"),
+          coalesce(max("sz"), lit(0L)).as("largest_cluster"))
+      exStats.crossJoin(pairStats).crossJoin(cStats)
+    },
+      // every report number independently recomputed: exact-dup mass from
+      // the fp groupBy, near-dup census over the min-id survivors,
+      // clusters from the recursive reachability closure
       s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -6309,15 +5752,40 @@ object Llm {
          |       (SELECT count(*) FROM cands) AS n_candidate_pairs,
          |       (SELECT count(*) FROM pairs) AS n_verified_pairs,
          |       (SELECT count(*) FROM csz) AS n_clusters,
-         |       (SELECT CAST(COALESCE(MAX(sz), 0) AS BIGINT) FROM csz) AS largest_cluster""".stripMargin,
+         |       (SELECT CAST(COALESCE(MAX(sz), 0) AS BIGINT) FROM csz) AS largest_cluster""".stripMargin),
 
-    // ONE flat per-source running-sum window — the shape the operator's
-    // two-phase decomposition avoids; identical quota literals via the
-    // shared quotaTable builder
-    // the same argmax assignment as llm_ivf_balance feeding the
-    // llm_token_budget_mix selection replayed with ONE flat per-cluster
-    // window — green proves the two-phase stitch AND the cluster fronting
-    "llm_cluster_quota" -> {
+    // diversity-balanced sampling (r14 verdict #6): per-IVF-cluster token
+    // quotas — the standard answer to topic over-concentration that
+    // importance weighting (llm_importance_score) misses: assign every
+    // embedded doc to its nearest centroid (fixed 8 like llm_ivf_topk —
+    // broadcast k-row table, map-side argmax), then fill each CLUSTER's
+    // equal share of the token budget in seeded-md5 order through the
+    // tokenBudgetMix two-phase prefix sum (running sums per
+    // (cluster, bucket), bucket offsets over a metadata-scale window —
+    // no cluster ever serializes into one task, no global sort). The
+    // oracle replays assignment + ONE flat per-cluster window, proving
+    // the stitch
+    Entry("llm_cluster_quota", (s, d) => {
+      val e = emb(s, d)
+      val centroids = e.where("vec_id < 8")
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      val clusters = Ivf.assign(e, centroids)
+        .select(col("vec_id").as("doc_id"),
+          concat(lit("c"), col("centroid_id")).as("cluster"))
+      TextAnalysis.tokenBudgetMix(
+          docs(s, d).join(clusters, Seq("doc_id")),
+          (0 to 7).map(i => s"c$i" -> 1L).toMap,
+          budgetTokens = 16000L, seed = "quota1", sourceCol = "cluster")
+        .orderBy("doc_id")
+    },
+      // ONE flat per-source running-sum window — the shape the operator's
+      // two-phase decomposition avoids; identical quota literals via the
+      // shared quotaTable builder
+      // the same argmax assignment as llm_ivf_balance feeding the
+      // llm_token_budget_mix selection replayed with ONE flat per-cluster
+      // window — green proves the two-phase stitch AND the cluster fronting
+      {
       val quotas = graft.llm.TextAnalysis
         .quotaTable((0 to 7).map(i => s"c$i" -> 1L).toMap, 16000L)
         .map { case (s, q) => s"('$s', $q)" }.mkString(", ")
@@ -6344,9 +5812,17 @@ object Llm {
          |SELECT doc_id, cluster, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
          |FROM r WHERE cum_tokens - n_tokens < quota
          |ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    "llm_token_budget_mix" -> {
+    // training-mix construction under a 20k-token budget with 1:2:3:4
+    // source weights — quota fill in seeded order via the two-phase
+    // prefix sum (no flat per-source window task)
+    Entry("llm_token_budget_mix", (s, d) =>
+      TextAnalysis.tokenBudgetMix(docs(s, d),
+          Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src5" -> 4L),
+          budgetTokens = 20000L, seed = "mix1")
+        .orderBy("doc_id"),
+      {
       val quotas = graft.llm.TextAnalysis
         .quotaTable(Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L,
           "src5" -> 4L), 20000L)
@@ -6365,19 +5841,34 @@ object Llm {
          |SELECT doc_id, source, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
          |FROM r WHERE cum_tokens - n_tokens < quota
          |ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    // attribution recomputed directly over the normalized-text hash
-    "llm_dedup_attribution" ->
+    // license/provenance propagation through exact dedup: the survivor
+    // carries the full source attribution of every collapsed copy
+    Entry("llm_dedup_attribution", (s, d) =>
+      docs(s, d)
+        .select(expr(s"md5(${Dedup.normalizeExpr})").as("fp"),
+          col("doc_id"), col("source"))
+        .groupBy("fp")
+        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_docs"),
+          countDistinct(col("source")).as("n_sources"),
+          min("source").as("first_source"), max("source").as("last_source"))
+        .orderBy("fp"),
+      // attribution recomputed directly over the normalized-text hash
       s"""SELECT md5($NORM) AS fp, min(doc_id) AS keep_id,
          |       count(*) AS n_docs,
          |       count(DISTINCT source) AS n_sources,
          |       min(source) AS first_source, max(source) AS last_source
-         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin),
 
-    // the same wedge-close joins over the oracle's own candidate CTE,
-    // candidates drawn from the min-id exact-dedup survivors
-    "llm_dup_triangles" ->
+    // triangle census of the LSH candidate graph over DISTINCT content
+    // (copy cliques would contribute n-choose-3 degenerate triangles):
+    // near-clique duplicate communities vs chains of borderline pairs
+    Entry("llm_dup_triangles", (s, d) =>
+      Dedup.dupTriangles(Dedup.lshCandidates(Dedup.exactSurvivors(docs(s, d))))
+        .orderBy("a", "b", "c"),
+      // the same wedge-close joins over the oracle's own candidate CTE,
+      // candidates drawn from the min-id exact-dedup survivors
       s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -6386,10 +5877,16 @@ object Llm {
          |FROM cands e1
          |JOIN cands e2 ON e2.doc_a = e1.doc_b
          |JOIN cands e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
-         |ORDER BY a, b, c""".stripMargin,
+         |ORDER BY a, b, c""".stripMargin),
 
-    // occurrence counts recomputed from a VALUES policy table
-    "llm_blocklist_filter" ->
+    // content-policy blocklist: per-category term-occurrence counts with
+    // the block verdict at >2 hits; the policy table broadcasts
+    Entry("llm_blocklist_filter", (s, d) =>
+      TextAnalysis.blocklistFilter(docs(s, d),
+          Map("latency" -> Seq("slow"), "volume" -> Seq("big", "small")),
+          maxHits = 2)
+        .orderBy("doc_id", "category"),
+      // occurrence counts recomputed from a VALUES policy table
       s"""WITH toksm AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |              FROM documents),
          |t AS (SELECT * FROM (VALUES ('latency', 'slow'), ('volume', 'big'),
@@ -6397,12 +5894,16 @@ object Llm {
          |h AS (SELECT doc_id, category, count(*) AS n_hits
          |      FROM toksm JOIN t ON tok = term GROUP BY 1, 2)
          |SELECT doc_id, category, n_hits, n_hits > 2 AS blocked
-         |FROM h ORDER BY doc_id, category""".stripMargin,
+         |FROM h ORDER BY doc_id, category""".stripMargin),
 
-    // identical 60-bit token hash, bucket fold and closed-form weight
-    // table — the logit is an integer sum, so any hashing/join/weight
-    // drift hash-mismatches exactly
-    "llm_quality_classifier" ->
+    // feature-hashed linear quality-classifier inference: 64-bucket token
+    // hashing, broadcast weight table, integer-exact logits
+    Entry("llm_quality_classifier", (s, d) =>
+      TextAnalysis.classifierScore(docs(s, d),
+        TextAnalysis.hashedWeights(s, 64), 64).orderBy("doc_id"),
+      // identical 60-bit token hash, bucket fold and closed-form weight
+      // table — the logit is an integer sum, so any hashing/join/weight
+      // drift hash-mismatches exactly
       s"""WITH toksm AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |              FROM documents),
          |tb AS (SELECT doc_id,
@@ -6414,12 +5915,18 @@ object Llm {
          |              CAST(SUM(w.w) AS BIGINT) AS logit
          |       FROM tb JOIN w USING (bucket) GROUP BY doc_id)
          |SELECT doc_id, n_tokens, logit, logit > 0 AS pred
-         |FROM sc ORDER BY doc_id""".stripMargin,
+         |FROM sc ORDER BY doc_id""".stripMargin),
 
-    // the same block draw, sentinel numbering and doubled-position
-    // ordering replayed over the split index stream (original indexes
-    // preserved through the length filter, like the Spark posexplode)
-    "llm_span_corrupt" ->
+    // T5-style span corruption, the deterministic materialized variant:
+    // block masking a pure function of (doc_id, block), numbered
+    // sentinels, input/target sequences leave as md5 fingerprints with
+    // order pinned by doubled positions — the oracle rebuilds both
+    // strings with string_agg ORDER BY pos
+    Entry("llm_span_corrupt", (s, d) =>
+      TextAnalysis.spanCorrupt(docs(s, d)).orderBy("doc_id"),
+      // the same block draw, sentinel numbering and doubled-position
+      // ordering replayed over the split index stream (original indexes
+      // preserved through the length filter, like the Spark posexplode)
       s"""WITH wt AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
          |tk AS (SELECT doc_id, i - 1 AS i, w[i] AS tok
          |       FROM wt, unnest(generate_series(1, len(w))) AS u(i)
@@ -6449,12 +5956,19 @@ object Llm {
          |       i.input_md5, COALESCE(t.target_md5, md5('')) AS target_md5
          |FROM cnts c LEFT JOIN ifp i USING (doc_id)
          |     LEFT JOIN tfp t USING (doc_id) LEFT JOIN ns USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // the same bigram-bucket histograms and mass ratio replayed in SQL;
-    // sums CAST from HUGEINT, the one division HUGEINT -> DOUBLE exact
-    // at these magnitudes
-    "llm_dsir_select" ->
+    // DSIR-style importance selection: hashed-bigram target/raw bucket
+    // histograms (64 rows of broadcast model state) learned from the
+    // corpus itself, per-doc importance = exact-BIGINT mass ratio with
+    // add-one smoothing, one IEEE division at the edge; selection is a
+    // per-row predicate (tgt_mass > raw_mass), never a global rank
+    Entry("llm_dsir_select", (s, d) =>
+      TextAnalysis.importanceScore(docs(s, d), expr("lang = 'en'"))
+        .orderBy("doc_id"),
+      // the same bigram-bucket histograms and mass ratio replayed in SQL;
+      // sums CAST from HUGEINT, the one division HUGEINT -> DOUBLE exact
+      // at these magnitudes
       s"""WITH wt AS (SELECT doc_id, lang = 'en' AS is_target,
          |                   string_split($NORM, ' ') AS w
          |            FROM documents),
@@ -6475,12 +5989,20 @@ object Llm {
          |       CAST(raw_mass AS BIGINT) AS raw_mass,
          |       CAST(ROUND((1 + tgt_mass) / (1 + raw_mass), 6) AS DOUBLE) AS score,
          |       tgt_mass > raw_mass AS selected
-         |FROM sc ORDER BY doc_id""".stripMargin,
+         |FROM sc ORDER BY doc_id""".stripMargin),
 
-    // the flat recomputation: every doc's priority, one global ORDER BY +
-    // LIMIT — green proves the per-partition top-k merge selects the
-    // identical membership at the cutoff boundary
-    "llm_weighted_sample" ->
+    // deterministic weighted subsample: 120 docs drawn with probability
+    // rising in n_chars, membership a pure function of (seed, doc_id);
+    // TakeOrderedAndProject — no global sort (plan-gated)
+    // priority is raw (no ROUND-6 edge): one conversion + one division is
+    // bit-identical by IEEE, while DuckDB's ROUND perturbs ULPs at 1e14
+    Entry("llm_weighted_sample", (s, d) =>
+      TrainOrder.weightedSample(docs(s, d), "doc_id", "n_chars", "s42", 120)
+        .selectExpr("doc_id", "n_chars", "priority")
+        .orderBy("doc_id"),
+      // the flat recomputation: every doc's priority, one global ORDER BY +
+      // LIMIT — green proves the per-partition top-k merge selects the
+      // identical membership at the cutoff boundary
       """WITH pr AS (SELECT doc_id, n_chars,
         |        CASE WHEN n_chars > 0 THEN
         |          ('0x' || substr(md5('s42:' || doc_id), 1, 15))::BIGINT::DOUBLE
@@ -6489,12 +6011,17 @@ object Llm {
         |top AS (SELECT * FROM pr
         |        ORDER BY priority ASC NULLS LAST, doc_id LIMIT 120)
         |SELECT doc_id, n_chars, priority
-        |FROM top ORDER BY doc_id""".stripMargin,
+        |FROM top ORDER BY doc_id""".stripMargin),
 
-    // the same quantize -> covariance -> two matvecs chain: integer
-    // covariance (order-free), v0=1 integer first step, list(term ORDER
-    // BY j) sequential folds for the double second step
-    "llm_pca_power" ->
+    // PCA top component by power iteration over the INTEGER covariance
+    // of the int8-quantized corpus — exact BIGINT cells, integer first
+    // matvec (v0 = 1), ordered double folds for the second; the
+    // dominant-direction estimate embedding whitening removes
+    Entry("llm_pca_power", (s, d) =>
+      Similarity.pcaPower(emb(s, d)).orderBy("dim"),
+      // the same quantize -> covariance -> two matvecs chain: integer
+      // covariance (order-free), v0=1 integer first step, list(term ORDER
+      // BY j) sequential folds for the double second step
       s"""WITH $duckPcaCtes,
          |rj AS (SELECT w2.i, v1.v1 * w2.w2 AS n, v1.v1 * v1.v1 AS d
          |       FROM w2 JOIN v1 ON v1.j = w2.i),
@@ -6506,12 +6033,15 @@ object Llm {
          |SELECT CAST(i AS INT) AS dim,
          |       CAST(ROUND(w2 / NULLIF(m2, 0), 6) AS DOUBLE) AS loading,
          |       CAST(ROUND(r, 6) AS DOUBLE) AS rayleigh
-         |FROM w2, m2, ray ORDER BY dim""".stripMargin,
+         |FROM w2, m2, ray ORDER BY dim""".stripMargin),
 
-    // the pca chain + the driver-side arithmetic replayed: ROUND(6)
-    // loadings -> sequential-fold L2 norm -> unit direction -> per-vec
-    // ordered projection / residual folds
-    "llm_whiten" ->
+    // whitening: project out the PCA dominant direction per vector —
+    // projection + residual norm, the all-but-the-top post-process
+    Entry("llm_whiten", (s, d) =>
+      Similarity.dominantRemove(emb(s, d)).orderBy("vec_id"),
+      // the pca chain + the driver-side arithmetic replayed: ROUND(6)
+      // loadings -> sequential-fold L2 norm -> unit direction -> per-vec
+      // ordered projection / residual folds
       s"""WITH $duckPcaCtes,
          |ld AS (SELECT i, ROUND(w2 / NULLIF(m2, 0), 6) AS loading
          |       FROM w2, m2),
@@ -6532,11 +6062,18 @@ object Llm {
          |           k -> (CAST(embedding[k] AS DOUBLE) - proj * u[k])
          |              * (CAST(embedding[k] AS DOUBLE) - proj * u[k]))),
          |         (acc, v) -> acc + v)), 6) AS DOUBLE) AS res_norm
-         |FROM pv ORDER BY vec_id""".stripMargin,
+         |FROM pv ORDER BY vec_id""".stripMargin),
 
-    // the same dictionary evolved through four replace steps, each
-    // step's argmax pair feeding the next stage's CTE
-    "llm_bpe_train" -> {
+    // 8-step BPE TRAINING loop: the learned merge table, each step's
+    // best pair depending on the previous merges — the chained oracle
+    // replays all eight stages in CTEs (the dict is localCheckpointed
+    // between steps, so the Spark plan stays linear; DuckDB's CTE chain
+    // has no inliner doubling)
+    Entry("llm_bpe_train", (s, d) =>
+      TextAnalysis.bpeTrain(docs(s, d), iters = 8).orderBy("iter"),
+      // the same dictionary evolved through four replace steps, each
+      // step's argmax pair feeding the next stage's CTE
+      {
       val steps = (1 to 8).map { i =>
         s"""pc$i AS (SELECT s[i] || ' ' || s[i+1] AS pair, SUM(wc) AS n
            |       FROM (SELECT wc, string_split(seq, ' ') AS s FROM w${i - 1}),
@@ -6561,21 +6098,31 @@ object Llm {
          |SELECT CAST(iter AS INT) AS iter, merge_pair,
          |       CAST(n AS BIGINT) AS n_merged
          |FROM ($out) ORDER BY iter""".stripMargin
-    },
+    }),
 
-    // the same 4-step dictionary evolution, KEEPING word identity so the
-    // final per-word tokenization joins back to each doc's word stream
-    "llm_bpe_encode" ->
+    // BPE ENCODE: the learned 4-merge table applied to every document —
+    // the unique-word dictionary is tokenized once (vocab-sized merge
+    // work), docs' words equi-join the (word -> token count) map; the
+    // corpus never flows through the replace passes
+    Entry("llm_bpe_encode", (s, d) =>
+      TextAnalysis.bpeEncode(docs(s, d), iters = 4).orderBy("doc_id"),
+      // the same 4-step dictionary evolution, KEEPING word identity so the
+      // final per-word tokenization joins back to each doc's word stream
       s"""WITH $bpeEncodeCtes
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
          |       CAST(SUM(nt) AS BIGINT) AS n_tokens,
          |       CAST(SUM(nm) AS BIGINT) AS n_multi
          |FROM dw JOIN wtok USING (w) WHERE length(w) > 0
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // the encode chain rolled up by source: exact BIGINT sums, the two
-    // ratios as single IEEE divisions at the edge
-    "llm_bpe_fertility" ->
+    // tokenizer-fit report: fertility (tokens/word) and compression
+    // (chars/token) per source — the eval table a tokenizer change ships
+    // with; ratios are single IEEE divisions of exact BIGINT sums
+    Entry("llm_bpe_fertility", (s, d) =>
+      TextAnalysis.tokenizerFertility(docs(s, d), iters = 4)
+        .orderBy("source"),
+      // the encode chain rolled up by source: exact BIGINT sums, the two
+      // ratios as single IEEE divisions at the edge
       s"""WITH $bpeEncodeCtes,
          |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nw,
          |              CAST(SUM(nt) AS BIGINT) AS ntok
@@ -6594,12 +6141,21 @@ object Llm {
          |                  / CAST(SUM(ntok) AS DOUBLE), 6) AS DOUBLE)
          |         AS chars_per_token
          |FROM pd JOIN m USING (doc_id)
-         |GROUP BY m.source ORDER BY m.source""".stripMargin,
+         |GROUP BY m.source ORDER BY m.source""".stripMargin),
 
-    // the 3-step greedy replayed as chained CTEs: argmax by the SAME
-    // raw-double score expression, lambda literals interpolated from
-    // the Scala doubles the Spark plan embeds
-    "llm_mmr_topk" -> {
+    // MMR diversified retrieval: 3 greedy picks for query vec 7 at
+    // lambda=0.7 — relevance computed once, each step broadcasts the
+    // <=k selected vectors; ranks on raw cosine doubles, vec_id ties
+    Entry("llm_mmr_topk", (s, d) => {
+      val e = emb(s, d)
+      Similarity.mmrSelect(e.where(col("vec_id") === 7),
+          e.where(col("vec_id") =!= 7), k = 3, lambda = 0.7)
+        .orderBy("rank")
+    },
+      // the 3-step greedy replayed as chained CTEs: argmax by the SAME
+      // raw-double score expression, lambda literals interpolated from
+      // the Scala doubles the Spark plan embeds
+      {
       val lam = s"${0.7}"
       val om = s"${1.0 - 0.7}"
       s"""WITH cand AS (SELECT vec_id, embedding FROM embeddings
@@ -6632,12 +6188,16 @@ object Llm {
          |      UNION ALL SELECT 2, vec_id, rel, div FROM p2
          |      UNION ALL SELECT 3, vec_id, rel, div FROM p3)
          |ORDER BY rank""".stripMargin
-    },
+    }),
 
-    // same bigram/unigram MLE counts, positions via generate_series
-    // where the plan transforms the token array; per-doc fold replayed
-    // as list(p ORDER BY pos)
-    "llm_bigram_lm" ->
+    // corpus-self bigram LM quality signal (CCNet stand-in, log-free):
+    // mean transition probability + rare-bigram rate per doc; each p is
+    // one IEEE division of exact integers, folded in position order
+    Entry("llm_bigram_lm", (s, d) =>
+      TextAnalysis.bigramScore(docs(s, d), minCount = 2).orderBy("doc_id"),
+      // same bigram/unigram MLE counts, positions via generate_series
+      // where the plan transforms the token array; per-doc fold replayed
+      // as list(p ORDER BY pos)
       s"""WITH tk AS (SELECT doc_id,
          |              list_filter(string_split($NORM, ' '),
          |                          w -> length(w) > 0) AS t
@@ -6659,13 +6219,22 @@ object Llm {
          |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
          |         list(p ORDER BY pos)), (acc, v) -> acc + v) / count(*), 6)
          |         AS DOUBLE) AS avg_p
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // assignment replayed (unrounded-cosine argmax, min-cid ties), then
-    // the Σx²−(Σx)²/n expansion: DECIMAL-exact S/Q per (cluster, dim),
-    // double arithmetic only on the k×dims cells, list(... ORDER BY dim)
-    // sequential fold
-    "llm_kmeans_inertia" ->
+    // per-cluster k-means objective: Σ(x-μ)² via the Σx²−(Σx)²/n
+    // expansion — corpus sums DECIMAL-exact and order-free, IEEE math
+    // confined to the k×dims cells folded in fixed dim order
+    Entry("llm_kmeans_inertia", (s, d) => {
+      val e = emb(s, d)
+      val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
+        .select(col("vec_id").cast("int").as("centroid_id"),
+          col("embedding").as("centroid"))
+      Ivf.inertia(e, cents).orderBy("centroid_id")
+    },
+      // assignment replayed (unrounded-cosine argmax, min-cid ties), then
+      // the Σx²−(Σx)²/n expansion: DECIMAL-exact S/Q per (cluster, dim),
+      // double arithmetic only on the k×dims cells, list(... ORDER BY dim)
+      // sequential fold
       s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
          |           WHERE vec_id IN (3, 17, 31, 59)),
          |a AS (SELECT v.vec_id, c.cid,
@@ -6691,13 +6260,18 @@ object Llm {
          |       CAST(ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
          |         list(term ORDER BY dim)), (acc, v) -> acc + v), 6) AS DOUBLE)
          |         AS inertia
-         |FROM t GROUP BY cid ORDER BY centroid_id""".stripMargin,
+         |FROM t GROUP BY cid ORDER BY centroid_id""".stripMargin),
 
-    // two damped power steps over the symmetrized jaccard>=0.6 edge
-    // list; incoming contributions fold in neighbor order, the damping
-    // residual interpolated from the SAME Scala double literal the
-    // Spark plan embeds
-    "llm_pagerank" -> {
+    // PageRank (2 damped power steps) over the jaccard>=0.6 candidate
+    // graph — which docs sit at the CORE of a near-dup neighborhood;
+    // per-node incoming sums fold in fixed neighbor order
+    Entry("llm_pagerank", (s, d) =>
+      Dedup.pageRank(Dedup.nearDupPairs(docs(s, d)), iters = 2).orderBy("doc_id"),
+      // two damped power steps over the symmetrized jaccard>=0.6 edge
+      // list; incoming contributions fold in neighbor order, the damping
+      // residual interpolated from the SAME Scala double literal the
+      // Spark plan embeds
+      {
       val resid = s"${1.0 - 0.85}"
       val iterStep = (i: Int) =>
         s"""c$i AS (SELECT s.dst, s.src, r.pr / d.deg AS c
@@ -6724,12 +6298,23 @@ object Llm {
          |SELECT r2.doc_id, CAST(deg AS BIGINT) AS deg,
          |       CAST(ROUND(pr, 6) AS DOUBLE) AS pr
          |FROM r2 JOIN deg ON deg.src = r2.doc_id ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    // the two plurality rounds replayed as chained CTEs: neighbor label
-    // counts -> row_number argmax (cnt DESC, label) -> seeds clamped via
-    // COALESCE priority seed > best > previous
-    "llm_label_propagation" -> {
+    // semi-supervised label propagation over the same candidate graph:
+    // every 5th doc seeds its language, two synchronous plurality rounds
+    // (min-label ties, seeds clamped) — the oracle replays both rounds
+    // as chained CTEs with row_number argmax
+    Entry("llm_label_propagation", (s, d) => {
+      val dd = docs(s, d)
+      val pairs = Dedup.nearDupPairs(dd)
+      val seeds = dd.where("doc_id % 5 = 0")
+        .select(col("doc_id"), col("lang").as("label"))
+      Dedup.labelPropagation(pairs, seeds, iters = 2).orderBy("doc_id")
+    },
+      // the two plurality rounds replayed as chained CTEs: neighbor label
+      // counts -> row_number argmax (cnt DESC, label) -> seeds clamped via
+      // COALESCE priority seed > best > previous
+      {
       val round = (i: Int) =>
         s"""nb$i AS (SELECT s.src, l.label, count(*) AS cnt
            |        FROM sym s JOIN l${i - 1} l ON l.doc_id = s.dst
@@ -6758,51 +6343,20 @@ object Llm {
          |${round(1)},
          |${round(2)}
          |SELECT doc_id, label FROM l2 ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    // identical md5 bucket/rho arithmetic, HUGEINT sums cast to BIGINT,
-    // the alpha·m²·2^53 numerator interpolated from the SAME Scala
-    // double literal the Spark plan embeds (shortest-roundtrip repr —
-    // both engines parse back the identical bits)
-    "llm_distinct_sketch" -> {
-      val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
-      s"""WITH dtoks AS (SELECT grp, tok FROM (
-         |        SELECT source AS grp, unnest(string_split($NORM, ' ')) AS tok
-         |        FROM documents) WHERE length(tok) > 0),
-         |h AS (SELECT grp, tok, md5(tok) AS hh FROM dtoks),
-         |f AS (SELECT grp,
-         |             CAST(('0x' || substr(hh, 14, 3))::BIGINT % 64 AS INT) AS bucket,
-         |             length(regexp_extract(substr(hh, 1, 13), '^0*')) AS zeros,
-         |             substr(hh, length(regexp_extract(substr(hh, 1, 13), '^0*')) + 1, 1) AS fd
-         |      FROM h),
-         |r AS (SELECT grp, bucket,
-         |             CASE WHEN zeros = 13 THEN 53
-         |             ELSE zeros * 4 + 1 + (CASE fd
-         |               WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-         |               WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-         |               WHEN '7' THEN 1 ELSE 0 END) END AS rho
-         |      FROM f),
-         |regs AS (SELECT grp, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT grp, count(*) AS n_buckets_hit,
-         |              SUM((1::BIGINT << (53 - mj))) AS s_hit
-         |       FROM regs GROUP BY 1),
-         |hs AS (SELECT grp, n_buckets_hit,
-         |              CAST(s_hit + (64 - n_buckets_hit) * (1::BIGINT << 53)
-         |                   AS BIGINT) AS harmonic_s
-         |       FROM sk),
-         |ex AS (SELECT grp, count(DISTINCT tok) AS n_exact FROM dtoks GROUP BY 1)
-         |SELECT hs.grp AS source,
-         |       CAST(n_buckets_hit AS BIGINT) AS n_buckets_hit,
-         |       harmonic_s,
-         |       CAST(ROUND(CAST($alphaNum AS DOUBLE) / harmonic_s, 6)
-         |            AS DOUBLE) AS hll_est,
-         |       CAST(n_exact AS BIGINT) AS n_exact
-         |FROM hs JOIN ex USING (grp) ORDER BY source""".stripMargin
-    },
-
-    // same register chain, then per-bucket MAX across sources; harmonic
-    // pinned to BIGINT before the one division
-    "llm_sketch_merge" -> {
+    // deterministic HyperLogLog distinct-token sketch per source (md5
+    // bucket+rho, exact-integer harmonic sum) next to the exact count —
+    // the cardinality estimator that moves 64 registers instead of the
+    // token stream; NOT approx_count_distinct (engine-internal HLL++)
+    // register-level HLL MERGE: per-source sketches union by per-bucket
+    // max — 64 ints per shard cross the wire, never tokens; the
+    // sum-vs-union gap exposes cross-source vocabulary overlap
+    Entry("llm_sketch_merge", (s, d) =>
+      TextAnalysis.distinctSketchMerged(docs(s, d)),
+      // same register chain, then per-bucket MAX across sources; harmonic
+      // pinned to BIGINT before the one division
+      {
       val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
       s"""WITH dtoks AS (SELECT grp, tok FROM (
          |        SELECT source AS grp, unnest(string_split($NORM, ' ')) AS tok
@@ -6839,9 +6393,54 @@ object Llm {
          |            AS DOUBLE) AS hll_union_est,
          |       n_exact_union, sum_exact_sources
          |FROM hs, exu, pss""".stripMargin
-    },
+    }),
 
-    "llm_tfidf_keywords" ->
+    Entry("llm_distinct_sketch", (s, d) =>
+      TextAnalysis.distinctSketch(docs(s, d)).orderBy("source"),
+      // identical md5 bucket/rho arithmetic, HUGEINT sums cast to BIGINT,
+      // the alpha·m²·2^53 numerator interpolated from the SAME Scala
+      // double literal the Spark plan embeds (shortest-roundtrip repr —
+      // both engines parse back the identical bits)
+      {
+      val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
+      s"""WITH dtoks AS (SELECT grp, tok FROM (
+         |        SELECT source AS grp, unnest(string_split($NORM, ' ')) AS tok
+         |        FROM documents) WHERE length(tok) > 0),
+         |h AS (SELECT grp, tok, md5(tok) AS hh FROM dtoks),
+         |f AS (SELECT grp,
+         |             CAST(('0x' || substr(hh, 14, 3))::BIGINT % 64 AS INT) AS bucket,
+         |             length(regexp_extract(substr(hh, 1, 13), '^0*')) AS zeros,
+         |             substr(hh, length(regexp_extract(substr(hh, 1, 13), '^0*')) + 1, 1) AS fd
+         |      FROM h),
+         |r AS (SELECT grp, bucket,
+         |             CASE WHEN zeros = 13 THEN 53
+         |             ELSE zeros * 4 + 1 + (CASE fd
+         |               WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
+         |               WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
+         |               WHEN '7' THEN 1 ELSE 0 END) END AS rho
+         |      FROM f),
+         |regs AS (SELECT grp, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
+         |sk AS (SELECT grp, count(*) AS n_buckets_hit,
+         |              SUM((1::BIGINT << (53 - mj))) AS s_hit
+         |       FROM regs GROUP BY 1),
+         |hs AS (SELECT grp, n_buckets_hit,
+         |              CAST(s_hit + (64 - n_buckets_hit) * (1::BIGINT << 53)
+         |                   AS BIGINT) AS harmonic_s
+         |       FROM sk),
+         |ex AS (SELECT grp, count(DISTINCT tok) AS n_exact FROM dtoks GROUP BY 1)
+         |SELECT hs.grp AS source,
+         |       CAST(n_buckets_hit AS BIGINT) AS n_buckets_hit,
+         |       harmonic_s,
+         |       CAST(ROUND(CAST($alphaNum AS DOUBLE) / harmonic_s, 6)
+         |            AS DOUBLE) AS hll_est,
+         |       CAST(n_exact AS BIGINT) AS n_exact
+         |FROM hs JOIN ex USING (grp) ORDER BY source""".stripMargin
+    }),
+
+    // per-doc TF-IDF top-5 keywords (log-free idf: tf·N/df — exact
+    // BIGINT product, one IEEE division, no rounding edge in the rank)
+    Entry("llm_tfidf_keywords", (s, d) =>
+      TextAnalysis.tfidfKeywords(docs(s, d)).orderBy("doc_id", "rank"),
       s"""WITH toks AS (SELECT doc_id, tok FROM (
          |       SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |       FROM documents) WHERE length(tok) > 0),
@@ -6858,11 +6457,18 @@ object Llm {
          |SELECT doc_id, tok, CAST(tf AS BIGINT) AS tf,
          |       CAST(df AS BIGINT) AS df,
          |       CAST(ROUND(score, 6) AS DOUBLE) AS score, rank
-         |FROM rk WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
+         |FROM rk WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin),
 
-    // one flat ORDER BY (tier, key, doc_id) row_number — green proves
-    // the (tier, bucket) two-phase stitch is the curriculum order
-    "llm_curriculum_order" ->
+    // curriculum schedule: fixed n_chars difficulty tiers lead the
+    // order, seeded md5 shuffle within each tier — two-phase prefix sum
+    // partitioned by (tier, bucket), no global window
+    Entry("llm_curriculum_order", (s, d) =>
+      TrainOrder.curriculumOrder(docs(s, d),
+          expr("CASE WHEN n_chars < 250 THEN 0 WHEN n_chars < 450 THEN 1 ELSE 2 END"),
+          seed = "curr")
+        .orderBy("doc_id"),
+      // one flat ORDER BY (tier, key, doc_id) row_number — green proves
+      // the (tier, bucket) two-phase stitch is the curriculum order
       """WITH t AS (SELECT doc_id,
         |        CASE WHEN n_chars < 250 THEN 0
         |             WHEN n_chars < 450 THEN 1 ELSE 2 END AS tier,
@@ -6871,9 +6477,14 @@ object Llm {
         |SELECT doc_id, CAST(tier AS INT) AS tier,
         |       CAST(row_number() OVER (ORDER BY tier, key, doc_id) - 1
         |            AS BIGINT) AS pos
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin),
 
-    "llm_lsh_tuning" -> {
+    // LSH banding-point tuning: candidates/verified/precision for the
+    // (2x4, 4x2, 8x1) splits of the 8-hash signature — the sample
+    // measurement run before committing a banding point corpus-wide
+    Entry("llm_lsh_tuning", (s, d) =>
+      Dedup.lshTuning(docs(s, d)).orderBy("bands"),
+      {
       val cfgs = Seq((2, 4), (4, 2), (8, 1))
       val per = cfgs.map { case (b, r) =>
         val bandSel = (0 until b).map { bi =>
@@ -6915,17 +6526,30 @@ object Llm {
          |            / NULLIF(n_candidates, 0), 6) AS DOUBLE) AS precision
          |FROM ($union)
          |ORDER BY bands""".stripMargin
-    },
+    }),
 
-    "llm_pq_codes" ->
+    // product quantization: per-subspace nearest-centroid codes (8
+    // subspaces x 16 codes over 64 dims — 64x smaller than float32);
+    // the oracle recomputes the md5-derived codebook and the argmin
+    // (first-minimum tie-break) per (vector, subspace)
+    Entry("llm_pq_codes", (s, d) =>
+      Similarity.pqCodes(emb(s, d))
+        .select(col("vec_id"), posexplode(col("pq_codes")).as(Seq("m", "code")))
+        .orderBy("vec_id", "m"),
       s"""WITH $pqCtes
          |SELECT vec_id, CAST(m AS INT) AS m, CAST(code AS INT) AS code
-         |FROM pqcodes ORDER BY vec_id, m""".stripMargin,
+         |FROM pqcodes ORDER BY vec_id, m""".stripMargin),
 
-    // ADC distance replayed as the probe's per-subspace distance to the
-    // candidate's ASSIGNED centroid, folded in subspace order (list(d
-    // ORDER BY m) — the same left-to-right fold as Spark's zip_with)
-    "llm_pq_topk" ->
+    // ADC top-k over the code table: probe builds one 8x16 exact lookup
+    // table, every candidate costs 8 lookups + a fixed-order fold
+    Entry("llm_pq_topk", (s, d) => {
+      val e = emb(s, d)
+      Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5)
+        .orderBy("probe_id", "rank")
+    },
+      // ADC distance replayed as the probe's per-subspace distance to the
+      // candidate's ASSIGNED centroid, folded in subspace order (list(d
+      // ORDER BY m) — the same left-to-right fold as Spark's zip_with)
       s"""WITH $pqCtes,
          |rk AS (SELECT probe_id, cand_id, dist,
          |              CAST(row_number() OVER (PARTITION BY probe_id
@@ -6933,9 +6557,17 @@ object Llm {
          |       FROM pqfold)
          |SELECT probe_id, cand_id,
          |       CAST(ROUND(dist, 6) AS DOUBLE) AS dist, rank
-         |FROM rk WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+         |FROM rk WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin),
 
-    "llm_pq_recall" ->
+    // PQ quality vs exact cosine top-5 — the recall evaluation an ANN
+    // compression choice ships with
+    Entry("llm_pq_recall", (s, d) => {
+      val e = emb(s, d)
+      Similarity.annRecall(
+          Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 5),
+          Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5))
+        .orderBy("probe_id")
+    },
       s"""WITH $pqCtes,
          |ap AS (SELECT probe_id, cand_id FROM (
          |         SELECT probe_id, cand_id,
@@ -6962,15 +6594,62 @@ object Llm {
          |       CAST(ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
          |            / NULLIF(t.n_exact, 0), 6) AS DOUBLE) AS recall
          |FROM tot t LEFT JOIN hits h ON h.probe_id = t.probe_id
-         |ORDER BY t.probe_id""".stripMargin,
+         |ORDER BY t.probe_id""".stripMargin),
 
-    // the full refresh chain replayed stage by stage: quality gate,
-    // exact fingerprint collapse, banded-LSH + exact-Jaccard greedy
-    // drop (the minhash/jaccard CTEs over the gated survivors),
-    // probe-shingle containment, hashed-linear logits, per-source
-    // quota fill in seeded order, and the final seeded permutation —
-    // one CTE pipeline, so every inter-stage handoff is value-checked
-    "llm_pipeline_e2e" -> {
+    // END-TO-END corpus refresh (r9 verdict #9) — the chain a real
+    // training-data pipeline runs, as ONE declared query over the
+    // already-proven primitives: quality gate → exact+near dedupe →
+    // decontaminate vs the benchmark slice → hashed-linear classifier →
+    // per-source token-budget mix → deterministic training order +
+    // shards. Every stage feeds the previous stage's survivors; the
+    // oracle replays the whole chain in CTEs, so a drift ANYWHERE in
+    // the composition (not just in a unit entry) hash-mismatches.
+    // Scale shape: the stages compose without materialization barriers
+    // — each is the same banded/bucketed/broadcast plan its unit entry
+    // gates, and the only driver-side state is the quota table.
+    Entry("llm_pipeline_e2e", (s, d) => {
+      val dd = docs(s, d)
+      // 1. quality envelope gate (token band, alnum, whitespace)
+      val gated = dd.join(
+        TextAnalysis.qualityFilter(dd).select("doc_id"), Seq("doc_id"))
+      // 2. exact collapse + greedy near-dup drop. localCheckpoint: the
+      // dedupe subtree (shingle -> minhash -> band join -> jaccard) is
+      // the chain's expensive half and feeds BOTH the decontamination
+      // corpus and the survivor stream — without the checkpoint each
+      // downstream branch re-derives it from the scan (measured 22.3 s
+      // -> 8.9 s at sf0.1). A real refresh materializes stage outputs
+      // at exactly these cut points.
+      val deduped = Dedup.dedupe(gated).localCheckpoint()
+      // 3. decontaminate: drop anything sharing >= 30% of a benchmark
+      // probe's shingles (probes = raw doc_id < 50 slice)
+      val flagged = Dedup.containment(deduped, dd.where("doc_id < 50"),
+          minContainment = 0.3)
+        .select("doc_id").distinct()
+      val clean = deduped.join(flagged, Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      // 4. hashed-linear quality classifier: keep positive logits
+      val kept = clean.join(
+        TextAnalysis.classifierScore(clean, TextAnalysis.hashedWeights(s, 64), 64)
+          .where("logit > 0").select("doc_id"), Seq("doc_id"))
+      // 5. per-source token-budget mix (6 weighted sources, 15k budget)
+      val mixed = TextAnalysis.tokenBudgetMix(kept,
+        Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src3" -> 2L,
+          "src4" -> 1L, "src5" -> 4L),
+        budgetTokens = 15000L, seed = "e2e-mix").localCheckpoint()
+      // 6. deterministic training order + 64-doc shards over the mix
+      mixed.join(
+          TrainOrder.shuffleShards(mixed.select("doc_id"), "e2e-ord", 64L),
+          Seq("doc_id"))
+        .select("doc_id", "source", "n_tokens", "pos", "shard")
+        .orderBy("doc_id")
+    },
+      // the full refresh chain replayed stage by stage: quality gate,
+      // exact fingerprint collapse, banded-LSH + exact-Jaccard greedy
+      // drop (the minhash/jaccard CTEs over the gated survivors),
+      // probe-shingle containment, hashed-linear logits, per-source
+      // quota fill in seeded order, and the final seeded permutation —
+      // one CTE pipeline, so every inter-stage handoff is value-checked
+      {
       val quotas = graft.llm.TextAnalysis
         .quotaTable(Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L,
           "src3" -> 2L, "src4" -> 1L, "src5" -> 4L), 15000L)
@@ -7044,6 +6723,6 @@ object Llm {
          |            AS BIGINT) AS shard
          |FROM mix m JOIN ko USING (doc_id)
          |ORDER BY m.doc_id""".stripMargin
-    }
+    })
   )
 }

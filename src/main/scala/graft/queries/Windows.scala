@@ -22,23 +22,23 @@ object Windows {
   private val TP = "CAST(o_totalprice AS DECIMAL(12,2))"
   private val QTY = "CAST(l_quantity AS DECIMAL(12,2))"
 
-  /** SQL shared verbatim between Spark and the DuckDB oracle. */
-  val sql: Map[String, String] = Map(
+  /** Each entry runs the same SQL text in Spark and DuckDB. */
+  val entries: Seq[Entry] = Seq(
     // row_number top-n per group — the canonical partitioned top-k
-    "win_row_number_topn" -> s"""
+    Entry.sql("win_row_number_topn", s"""
       SELECT o_custkey, o_orderkey, o_totalprice, rn
       FROM (SELECT o_custkey, o_orderkey, o_totalprice,
               ROW_NUMBER() OVER (PARTITION BY o_custkey
                                  ORDER BY o_totalprice DESC, o_orderkey) AS rn
             FROM orders) t
       WHERE rn <= 3
-      ORDER BY o_custkey, rn""",
+      ORDER BY o_custkey, rn"""),
 
     // time-interval RANGE frame — the frame a real sliding metric uses
     // (trailing 1 hour BY EVENT TIME, not by row count): peer-inclusive,
     // so deterministic without a unique ordering; money enters as
     // ROUND(value·100) integer cents and the windowed SUM stays integer
-    "win_range_interval" -> s"""
+    Entry.sql("win_range_interval", s"""
       SELECT user_id, event_id,
         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER (
           PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
@@ -49,11 +49,11 @@ object Windows {
           RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS BIGINT)
           AS n_1h
       FROM events
-      ORDER BY user_id, event_id""",
+      ORDER BY user_id, event_id"""),
 
     // named-WINDOW clause — one definition, many consumers (and the
     // engine plans ONE sort for both functions); unique ordering chain
-    "sql_window_clause" -> s"""
+    Entry.sql("sql_window_clause", s"""
       SELECT user_id, event_id,
         ROW_NUMBER() OVER w AS rn,
         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER w2 AS BIGINT)
@@ -62,10 +62,10 @@ object Windows {
       WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id),
              w2 AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
                     ROWS UNBOUNDED PRECEDING)
-      ORDER BY user_id, rn""",
+      ORDER BY user_id, rn"""),
 
     // rank/dense_rank/percent_rank with ties (deterministic under ties)
-    "win_rank_dense" -> s"""
+    Entry.sql("win_rank_dense", s"""
       SELECT p_brand, p_size, p_partkey,
         RANK() OVER (PARTITION BY p_brand ORDER BY p_size) AS rnk,
         DENSE_RANK() OVER (PARTITION BY p_brand ORDER BY p_size) AS drnk,
@@ -73,10 +73,10 @@ object Windows {
              AS DOUBLE) AS prnk
       FROM part
       WHERE p_size <= 5
-      ORDER BY p_brand, p_size, p_partkey""",
+      ORDER BY p_brand, p_size, p_partkey"""),
 
     // sliding ROWS frame sum (running 4-row window per supplier)
-    "win_sliding_sum" -> s"""
+    Entry.sql("win_sliding_sum", s"""
       SELECT l_suppkey, l_orderkey, l_linenumber,
         CAST(SUM($QTY) OVER (PARTITION BY l_suppkey
                              ORDER BY l_shipdate, l_orderkey, l_linenumber
@@ -84,10 +84,10 @@ object Windows {
              AS DOUBLE) AS qty_sum
       FROM lineitem
       WHERE l_suppkey < 25
-      ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""",
+      ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber"""),
 
     // RANGE frame over a timestamp ordering (trailing 30-day revenue)
-    "win_range_frame" -> s"""
+    Entry.sql("win_range_frame", s"""
       SELECT o_custkey, o_orderkey,
         CAST(SUM($TP) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
                             RANGE BETWEEN INTERVAL '30' DAY PRECEDING
@@ -95,10 +95,10 @@ object Windows {
              AS DOUBLE) AS tp_30d
       FROM orders
       WHERE o_custkey < 150
-      ORDER BY o_custkey, o_orderkey""",
+      ORDER BY o_custkey, o_orderkey"""),
 
     // lag/lead navigation + delta vs previous order
-    "win_lag_lead" -> s"""
+    Entry.sql("win_lag_lead", s"""
       SELECT o_custkey, o_orderkey,
         LAG(o_orderkey) OVER (PARTITION BY o_custkey
                               ORDER BY o_orderdate, o_orderkey) AS prev_ord,
@@ -109,12 +109,12 @@ object Windows {
              AS DOUBLE) AS tp_delta
       FROM orders
       WHERE o_custkey < 150
-      ORDER BY o_custkey, o_orderkey""",
+      ORDER BY o_custkey, o_orderkey"""),
 
     // ratio-to-report: each row's share of its partition total — the
     // windowed sum aggregates DECIMAL (order-independent, exact), and the
     // one share division is correctly-rounded identically in both engines
-    "win_ratio_to_total" -> s"""
+    Entry.sql("win_ratio_to_total", s"""
       SELECT o_custkey, o_orderkey,
         CAST($TP AS DOUBLE) AS tp,
         CAST(ROUND(CAST($TP AS DOUBLE) /
@@ -122,10 +122,10 @@ object Windows {
              AS DOUBLE) AS share
       FROM orders
       WHERE o_custkey < 150
-      ORDER BY o_custkey, o_orderkey""",
+      ORDER BY o_custkey, o_orderkey"""),
 
     // ntile + cume_dist + first/last value with explicit full frame
-    "win_ntile_firstlast" -> s"""
+    Entry.sql("win_ntile_firstlast", s"""
       SELECT o_custkey, o_orderkey,
         NTILE(4) OVER (PARTITION BY o_custkey
                        ORDER BY o_totalprice DESC, o_orderkey) AS quartile,
@@ -142,7 +142,7 @@ object Windows {
                                               AND UNBOUNDED FOLLOWING) AS bottom_ord
       FROM orders
       WHERE o_custkey < 150
-      ORDER BY o_custkey, o_orderkey""",
+      ORDER BY o_custkey, o_orderkey"""),
 
     // exact WEIGHTED median via cumulative-weight window: smallest value
     // whose running weight reaches half the partition total. DECIMAL
@@ -150,7 +150,7 @@ object Windows {
     // frame makes ties well-defined without a unique ordering); the one
     // DOUBLE cast is the output edge. Partition key is supplier —
     // cluster-scale cardinality, so no 100 TB single-partition window
-    "agg_weighted_median" -> s"""
+    Entry.sql("agg_weighted_median", s"""
       WITH w AS (SELECT l_suppkey,
                         CAST(l_extendedprice AS DECIMAL(12,2)) AS v,
                         $QTY AS wt
@@ -163,14 +163,14 @@ object Windows {
             FROM w)
       SELECT l_suppkey, CAST(min(v) AS DOUBLE) AS weighted_median
       FROM c WHERE cw * 2 >= tot
-      GROUP BY l_suppkey ORDER BY l_suppkey""",
+      GROUP BY l_suppkey ORDER BY l_suppkey"""),
 
     // running DISTINCT-user count per event type — the scale-correct
     // formulation: distinct collapses in a (type, user) pre-aggregate
     // (first event day per user), the cumulative window then runs over
     // the TINY (type, day) domain — never a per-event global window,
     // and no count(DISTINCT) inside any frame
-    "win_cumulative_distinct" -> """
+    Entry.sql("win_cumulative_distinct", """
       WITH firsts AS (SELECT event_type, user_id,
                              CAST(min(ts) AS DATE) AS first_day
                       FROM events GROUP BY event_type, user_id),
@@ -180,7 +180,7 @@ object Windows {
              CAST(SUM(new_users) OVER (PARTITION BY event_type ORDER BY day
                                        ROWS UNBOUNDED PRECEDING) AS BIGINT)
                AS cum_users
-      FROM daily ORDER BY event_type, day""",
+      FROM daily ORDER BY event_type, day"""),
 
     // OHLC downsampling (the classic time-series resample): per
     // (type, hour) bucket — open/close picked by deterministic
@@ -188,7 +188,7 @@ object Windows {
     // doubles, no aggregation arithmetic), high/low as plain min/max.
     // Window partitions are (type, hour) — bounded by per-hour data
     // rate, never a whole-key timeline
-    "ts_resample_ohlc" -> """
+    Entry.sql("ts_resample_ohlc", """
       WITH r AS (SELECT event_type, date_trunc('hour', ts) AS bucket, value,
                    ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
                                       ORDER BY ts, event_id) AS rno,
@@ -200,7 +200,7 @@ object Windows {
              MAX(value) AS high, MIN(value) AS low,
              MAX(CASE WHEN rnc = 1 THEN value END) AS close
       FROM r GROUP BY event_type, bucket
-      ORDER BY event_type, bucket""",
+      ORDER BY event_type, bucket"""),
 
     // exact GINI coefficient of per-doc length by source (the token-mass
     // inequality metric a curation team tracks per crawl) — the
@@ -209,7 +209,7 @@ object Windows {
     // (bounded domain), never a per-row sort — the tie-run rank algebra
     // Σ_{i=a..a+c-1}(2i-n-1) = c·(2a+c-n-2) keeps it exact in integers,
     // ONE double division at the edge
-    "agg_gini" -> """
+    Entry.sql("agg_gini", """
       WITH h AS (SELECT source, n_chars AS v, count(*) AS c
                  FROM documents GROUP BY source, n_chars),
       cum AS (SELECT source, v, c,
@@ -224,7 +224,7 @@ object Windows {
                CAST(SUM(v * c * (2 * (bf + 1) + c - n - 2)) AS DOUBLE)
                  / (CAST(max(n) AS DOUBLE) * CAST(max(s) AS DOUBLE)), 6)
                AS DOUBLE) AS gini
-      FROM cum GROUP BY source ORDER BY source""",
+      FROM cum GROUP BY source ORDER BY source"""),
 
     // EXACT distributed OLS per group — never the built-in regr_*
     // aggregates (their double running sums are aggregation-order-
@@ -232,7 +232,7 @@ object Windows {
     // by domain), DECIMAL(38,0) exact sums, the classic closed forms
     // n·Σxy−ΣxΣy over n·Σx²−(Σx)², and IEEE divisions only at the edge.
     // r² avoids squaring 38-digit decimals by moving to double first.
-    "agg_regression_exact" -> """
+    Entry.sql("agg_regression_exact", """
       WITH pts AS (SELECT l_returnflag AS flag,
                           CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT) AS xi,
                           CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS yi
@@ -254,13 +254,13 @@ object Windows {
              CAST(ROUND(num / denx, 6) AS DOUBLE) AS slope,
              CAST(ROUND((syd - num / denx * sxd) / (100.0 * n), 6) AS DOUBLE) AS intercept,
              CAST(ROUND(num * num / (denx * deny), 6) AS DOUBLE) AS r2
-      FROM d ORDER BY flag""",
+      FROM d ORDER BY flag"""),
 
     // hour-of-day seasonality profile per event type: DECIMAL-exact
     // hourly means + each hour's share of the type's traffic — the
     // diurnal fingerprint a scheduler/anomaly baseline consumes; one
     // scan, |types|×24 output rows at any event volume
-    "ts_seasonality" -> """
+    Entry.sql("ts_seasonality", """
       WITH e AS (SELECT event_type,
                         CAST(extract(HOUR FROM CAST(ts AS TIMESTAMP)) AS INT) AS hh,
                         CAST(value AS DECIMAL(18,6)) AS v
@@ -272,7 +272,7 @@ object Windows {
              CAST(ROUND(CAST(h.sv AS DOUBLE) / h.n, 6) AS DOUBLE) AS mean_value,
              CAST(ROUND(CAST(h.n AS DOUBLE) / t.nt, 6) AS DOUBLE) AS hour_share
       FROM h JOIN t ON h.event_type = t.event_type
-      ORDER BY h.event_type, h.hh""",
+      ORDER BY h.event_type, h.hh"""),
 
     // exact HOOVER (Robin Hood) index of per-doc length by source —
     // agg_gini's sortless companion: the share of total mass that would
@@ -281,7 +281,7 @@ object Windows {
     // rows, integer products (int128 in DuckDB, BIGINT here — document
     // lengths × doc counts stay < 2^63 per source at any plausible
     // shard), ONE double division at the edge
-    "agg_hoover" -> """
+    Entry.sql("agg_hoover", """
       WITH st AS (SELECT source, count(*) AS n, SUM(n_chars) AS s
                   FROM documents GROUP BY source)
       SELECT d.source, CAST(max(st.n) AS BIGINT) AS n_docs,
@@ -290,7 +290,7 @@ object Windows {
                  / (2.0 * CAST(max(st.n) AS DOUBLE) * CAST(max(st.s) AS DOUBLE)),
                6) AS DOUBLE) AS hoover
       FROM documents d JOIN st ON d.source = st.source
-      GROUP BY d.source ORDER BY d.source""",
+      GROUP BY d.source ORDER BY d.source"""),
 
     // sample-ratio-mismatch guardrail — the FIRST check any A/B readout
     // runs: users deterministically split 50/50 by an md5 bit, per-arm
@@ -298,7 +298,7 @@ object Windows {
     // cross-multiplied integers (one ROUND division at the edge) plus an
     // integer |z|>2 flag ((na−nb)² > 4(na+nb)) that never touches IEEE.
     // One scan, per-event-type rollup; md5 is the shared hash
-    "agg_srm_check" -> """
+    Entry.sql("agg_srm_check", """
       WITH arms AS (SELECT event_type, user_id,
                            substr(md5('srm' || user_id), 1, 1)
                              IN ('0','1','2','3','4','5','6','7') AS in_a
@@ -311,7 +311,7 @@ object Windows {
              CAST(ROUND(CAST((na - nb) * (na - nb) AS DOUBLE)
                   / CAST(na + nb AS DOUBLE), 6) AS DOUBLE) AS chi2,
              CAST((na - nb) * (na - nb) > 4 * (na + nb) AS BOOLEAN) AS srm_flag
-      FROM c ORDER BY event_type""",
+      FROM c ORDER BY event_type"""),
 
     // Lincoln–Petersen capture–recapture with the Chapman correction —
     // "how big is the corpus we HAVEN'T crawled": two independent md5-bit
@@ -320,7 +320,7 @@ object Windows {
     // estimate (the fixture knows the answer — the point is checking the
     // estimator wiring, not pretending ignorance). Integer marks, one
     // ROUND division
-    "agg_capture_recapture" -> """
+    Entry.sql("agg_capture_recapture", """
       WITH s AS (SELECT doc_id,
                         substr(md5('capA' || doc_id), 1, 1)
                           IN ('0','1','2','3','4','5','6','7') AS in_a,
@@ -334,7 +334,7 @@ object Windows {
              CAST(ROUND(CAST((count_if(in_a) + 1) * (count_if(in_b) + 1) AS DOUBLE)
                   / CAST(count_if(in_a AND in_b) + 1 AS DOUBLE) - 1, 6)
                   AS DOUBLE) AS n_hat_chapman
-      FROM s""",
+      FROM s"""),
 
     // Welch two-sample t-statistic (the unequal-variance A/B test) per
     // status: urgent vs low priority order values. The five sufficient
@@ -342,7 +342,7 @@ object Windows {
     // and squared cents — never regr_*/var_samp, whose double running
     // sums fold in partition order), the closed form is a fixed tree of
     // correctly-rounded IEEE ops; one scan, conditional aggregation
-    "agg_ab_welch" -> """
+    Entry.sql("agg_ab_welch", """
       WITH g AS (SELECT o_orderstatus AS st,
                         CASE WHEN o_orderpriority = '1-URGENT' THEN 'a'
                              ELSE 'b' END AS grp,
@@ -371,14 +371,14 @@ object Windows {
              CAST(ROUND((m1 - m2)
                / sqrt(v1 / CAST(n1 AS DOUBLE) + v2 / CAST(n2 AS DOUBLE)),
                6) AS DOUBLE) AS t_welch
-      FROM d ORDER BY o_orderstatus""",
+      FROM d ORDER BY o_orderstatus"""),
 
     // minimum detectable effect — the power-analysis number every
     // experiment design starts from: pooled SD from DECIMAL-exact
     // sufficient statistics, MDE = (z_{0.975} + z_{0.8})·sqrt(s²(1/n1 +
     // 1/n2)) with the PUBLISHED normal quantiles entering as one literal
     // (1.959964 + 0.841621 = 2.801585); arms are the md5 user bit
-    "agg_mde" -> """
+    Entry.sql("agg_mde", """
       WITH g AS (SELECT event_type,
                         substr(md5('mde' || user_id), 1, 1)
                           IN ('0','1','2','3','4','5','6','7') AS in_a,
@@ -405,7 +405,7 @@ object Windows {
                   / CAST(n1 + n2 - 2 AS DOUBLE))
                   * (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))) / 100.0, 6)
                   AS DOUBLE) AS mde
-      FROM d ORDER BY event_type""",
+      FROM d ORDER BY event_type"""),
 
     // TOST equivalence test (two one-sided Welch t's against a ±500-cent
     // margin) — the NON-inferiority readout an A/B platform needs when
@@ -414,7 +414,7 @@ object Windows {
     // DECIMAL-exact sufficient statistics as agg_mde/agg_ab_welch; both
     // one-sided t's and the z_{0.95}=1.644854 decision are fixed IEEE
     // trees over them, the verdict compares identical doubles
-    "agg_tost" -> """
+    Entry.sql("agg_tost", """
       WITH g AS (SELECT event_type,
                         substr(md5('tost' || user_id), 1, 1)
                           IN ('0','1','2','3','4','5','6','7') AS in_a,
@@ -448,13 +448,13 @@ object Windows {
              (diff + 500.0) / NULLIF(se, CAST(0.0 AS DOUBLE)) > 1.644854
                AND (500.0 - diff) / NULLIF(se, CAST(0.0 AS DOUBLE)) > 1.644854
                AS equivalent
-      FROM d ORDER BY event_type""",
+      FROM d ORDER BY event_type"""),
 
     // temporal referential integrity — the VALID-TIME side of an FK the
     // row-level constraints can't see: every lineitem must ship inside
     // its order's window (never before the order, flagged past +60d);
     // integer timestamp compares, rates as one ROUND division
-    "qc_temporal_fk" -> """
+    Entry.sql("qc_temporal_fk", """
       SELECT o.o_orderstatus,
              CAST(count(*) AS BIGINT) AS n_rows,
              CAST(count_if(l.l_shipdate < o.o_orderdate) AS BIGINT) AS n_ship_before_order,
@@ -462,7 +462,7 @@ object Windows {
              CAST(ROUND(CAST(count_if(l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY) AS DOUBLE)
                   * 1000000.0 / CAST(count(*) AS DOUBLE), 6) AS DOUBLE) AS late_ppm
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_orderstatus ORDER BY o_orderstatus""",
+      GROUP BY o.o_orderstatus ORDER BY o_orderstatus"""),
 
     // delta-method standard error of a RATIO metric (revenue per event)
     // with user-level clustering — the correction every A/B readout of a
@@ -472,7 +472,7 @@ object Windows {
     // S² = (Sxx − 2R·Sxy + R²·Syy)/(n−1) straight from the exact
     // DECIMAL sufficient statistics. Same one-scan shape as agg_ab_welch;
     // a fixed tree of correctly-rounded IEEE ops at the edge
-    "agg_delta_method_ratio" -> """
+    Entry.sql("agg_delta_method_ratio", """
       WITH u AS (SELECT event_type, user_id,
                         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x,
                         CAST(COUNT(*) AS BIGINT) AS y
@@ -494,7 +494,7 @@ object Windows {
              CAST(ROUND(sqrt((sxxd - 2 * r * sxyd + r * r * syyd)
                     / CAST(n - 1 AS DOUBLE) / CAST(n AS DOUBLE))
                   / (syd / CAST(n AS DOUBLE)) / 100.0, 6) AS DOUBLE) AS se_ratio
-      FROM d ORDER BY event_type""",
+      FROM d ORDER BY event_type"""),
 
     // sliding mean-shift CHANGEPOINT score per user timeline: |mean of
     // the 8 preceding - mean of the 8 following| events, flagged above
@@ -503,7 +503,7 @@ object Windows {
     // sequential frame scan, so double sums would drift), one double
     // division per side at the edge; partitions are per-user
     // (cluster-scale cardinality)
-    "ts_changepoint" -> """
+    Entry.sql("ts_changepoint", """
       WITH b AS (SELECT user_id, ts, event_id,
                         CAST(value AS DECIMAL(18,6)) AS v
                  FROM events),
@@ -523,6 +523,6 @@ object Windows {
       FROM w
       WHERE lc = 8 AND rc = 8
         AND ABS(CAST(ls AS DOUBLE) / lc - CAST(rs AS DOUBLE) / rc) > 30
-      ORDER BY user_id, event_id"""
+      ORDER BY user_id, event_id""")
   )
 }

@@ -1,50 +1,30 @@
 package graft
 
-/** The driver contract around SparkEntry: every declared query must carry a
-  * DuckDB oracle (a query without one silently downgrades to a rows-only
-  * check), names must be unique across groups, and the flagship entry must
-  * return rows.
+/** The driver contract around SparkEntry: names are unique (checked when
+  * the registry is built), entries that mutate the session run serially in
+  * Verify, the flagship entry returns rows, and no output column is
+  * complex.
   */
 class EntryContractSpec extends SparkSpec {
+  import graft.queries.Entry
 
-  test("every query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
+  test("a registry with two same-named entries fails and names the duplicate") {
+    val e = Entry.sql("dup_name", "SELECT 1 AS x")
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.registry(Seq(e, Entry.sql("other", "SELECT 2 AS x"), e)))
+    assert(err.getMessage.contains("dup_name"), err.getMessage)
+    assert(!err.getMessage.contains("other"), err.getMessage)
   }
 
-  test("query names are unique across groups (no silent map override)") {
-    val groups: Seq[(String, Set[String])] = Seq(
-      "tpch" -> graft.queries.Tpch.queries.keySet,
-      "windows" -> graft.queries.Windows.sql.keySet,
-      "relational" -> (graft.queries.Relational.sql.keySet ++
-        graft.queries.Relational.sparkSql.keySet),
-      "llm" -> graft.queries.Llm.queries.keySet,
-      "io" -> graft.queries.Io.queries.keySet,
-      "ops" -> graft.queries.Ops.queries.keySet)
-    for {
-      (ga, a) <- groups; (gb, b) <- groups if ga < gb
-    } assert((a & b).isEmpty, s"$ga and $gb both declare: ${(a & b).toSeq.sorted}")
-  }
-
-  // A duplicate key inside ONE Map literal is invisible at runtime (the
-  // later entry silently wins — exactly how a second ts_gap_fill shadowed
-  // the first during round 10), so this gate scans the SOURCE: each
-  // declared name may appear as a map key at most twice across the query
-  // files (once in `queries`, once in the oracle map).
-  test("no entry name is declared more than twice in the query sources") {
-    val dir = new java.io.File("src/main/scala/graft/queries")
-    val text = dir.listFiles.filter(_.getName.endsWith(".scala"))
-      .map(f => new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      .mkString("\n")
-    val offenders = SparkEntry.queries.keySet.toSeq.sorted.flatMap { name =>
-      val n = ("\"" + java.util.regex.Pattern.quote(name) + "\"\\s*->").r
-        .findAllIn(text).size
-      if (n > 2) Some(s"$name declared $n times") else None
-    }
-    assert(offenders.isEmpty, offenders.mkString(", "))
+  test("Verify runs the session-mutating entries serially, the rest pooled") {
+    val (pooled, serial) = Verify.phases(SparkEntry.entries)
+    val names = SparkEntry.queries.keySet
+    val expected = names.filter(_.startsWith("ts_stream_")) ++ Set(
+      "bucketed_join", "ddl_ctas_insert", "sql_udf",
+      "sink_compact_small_files", "src_agg_pushdown")
+    assert(expected.size == 33)
+    assert(serial.map(_.name).toSet == expected)
+    assert(pooled.map(_.name).toSet == names -- expected)
   }
 
   test("flagship entry returns rows on the smoke fixture") {

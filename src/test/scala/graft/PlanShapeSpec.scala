@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Tpch
-
 /** Plan-shape assertions — the "would this survive 100×?" gate (round-2
   * verdict item #2). Correctness is the DuckDB differential check; these
   * tests pin the *physical plans* we rely on at scale:
@@ -321,7 +319,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q6: filters pushed into the lineitem parquet scan") {
-    val pushed = pushedFilters(Tpch.queries("tpch_q6")(spark, sfSmoke))
+    val pushed = pushedFilters(SparkEntry.queries("tpch_q6")(spark, sfSmoke))
     assert(pushed.contains("GreaterThanOrEqual(l_shipdate"),
       s"shipdate range not pushed to parquet: $pushed")
     assert(pushed.contains("LessThan(l_quantity"),
@@ -329,7 +327,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q19: pushdown + pruned read schema on part") {
-    val plan = staticPlan(Tpch.queries("tpch_q19")(spark, sfSmoke))
+    val plan = staticPlan(SparkEntry.queries("tpch_q19")(spark, sfSmoke))
     assert(plan.contains("PushedFilters: ["))
     // q19 projects a handful of columns; the scan must not read all of part
     assert(!plan.contains("p_comment"), "part scan reads unprojected columns")
@@ -591,7 +589,7 @@ class PlanShapeSpec extends SparkSpec {
     spark.conf.set(key, (1L * 1024 * 1024).toString)
     try {
       Seq("tpch_q18", "tpch_q21").foreach { q =>
-        val plan = finalPlan(Tpch.queries(q)(spark, sfBench))
+        val plan = finalPlan(SparkEntry.queries(q)(spark, sfBench))
         assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
           s"$q still broadcasts every join side above the threshold")
       }

@@ -87,7 +87,7 @@ class RangeJoinSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val plan = staticPlan(
-        queries.Io.queries("join_range_binned")(spark, sfSmoke))
+        SparkEntry.queries("join_range_binned")(spark, sfSmoke))
       assert(plan.contains("SortMergeJoin") ||
         plan.contains("ShuffledHashJoin"), plan.linesIterator.take(5).mkString)
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -97,7 +97,7 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("join_range_binned plans as a hash equi-join on the bin, not NLJ") {
-    val df = queries.Io.queries("join_range_binned")(spark, sfSmoke)
+    val df = SparkEntry.queries("join_range_binned")(spark, sfSmoke)
     val plan = staticPlan(df)
     assert(!plan.contains("BroadcastNestedLoopJoin"), "NLJ leaked back in")
     assert(!plan.contains("CartesianProduct"))
