@@ -14,32 +14,13 @@ package graft
   */
 object Bench {
 
-  /** Wall-clock seconds of `f` — the one timer of the benchmark mains
-    * (Bench, ScaleBench, ScaleProbe, TwsProbe).
+  /** Wall-clock seconds of `f` — the one timer of the mains (Bench,
+    * ScaleBench, ScaleProbe, TwsProbe, Verify). A main that times an entry
+    * calls it inside the entry's [[Shared.scope]], so the scope's release
+    * of the entry's checkpoints stays off the clock.
     */
   def time(f: => Any): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Off-the-clock release before a timed run: localCheckpoint() blocks
-    * from PRIOR entries persist until the driver GC's their RDD
-    * references (ContextCleaner is reference-triggered); across 300+
-    * entries they accumulate into storage pressure that taxed the late-
-    * alphabet heavies (r12: llm_pipeline_e2e 10.99 s in the full suite vs
-    * 8.37 s solo, zero code change). One entry's leakage must not be
-    * charged to the next, so drop all persisted blocks — entries
-    * (re)build their own. clearCache first: dropping an InMemoryRelation's
-    * blocks behind the CacheManager's back would leave later plans
-    * substituting a cache they must recompute anyway. blocking=true (r16
-    * verdict #2): the non-blocking variant let the previous entry's
-    * checkpoint-block removal bleed INTO the next entry's timed window
-    * (llm_chunk/llm_chunk_dedup read 6-7× band right after
-    * checkpoint-heavy entries); callers wait here, before their timer.
-    */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
   }
 
   /** Churn guard (r13 verdict #2): the driver's end-of-round bench has
@@ -184,12 +165,12 @@ object Bench {
       else Map.empty[String, Double]
     var outliers = List.empty[(String, Double, Double)]
     // one timed noop-sink pass for (name, fn); shared by the scored loop
-    // and the canary probes, released off the clock first
+    // and the canary probes, its checkpoints released off the clock
     def onePass(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      release(spark)
-      time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-    }
+        org.apache.spark.sql.DataFrame): Double =
+      Shared.scope(spark) {
+        time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      }
     // Whole-run churn canary (r14 verdict #1): three fixed cheap entries
     // timed off-the-clock at session START and END. Broad 1.5-2.5× box
     // churn sails under the per-entry guard; the canary makes the scored

@@ -11,7 +11,7 @@ object Explain {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
     val spark = Session.local("graft-explain")
-    try names.foreach { n =>
+    try names.foreach(n => Shared.scope(spark) {
       val df = SparkEntry.queries(n)(spark, dir)
       // drive THIS QueryExecution without materializing rows on the driver
       // (collect() would pull a multi-million-row candidate set into the
@@ -20,6 +20,6 @@ object Explain {
       df.queryExecution.toRdd.count()
       println(s"==== $n ====")
       println(df.queryExecution.executedPlan.toString)
-    } finally spark.stop()
+    }) finally spark.stop()
   }
 }

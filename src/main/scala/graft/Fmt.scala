@@ -1,7 +1,7 @@
 package graft
 
 /** Locale-pinned number formatting shared by the JSON-emitting mains
-  * (Bench, ScaleBench, ScaleProbe).
+  * (Bench, ScaleBench, ScaleProbe, TwsProbe).
   *
   * Scala's `f"%.2f"` honors the JVM default locale, so under a
   * comma-decimal locale (de_DE, fr_FR) an interpolated double prints

@@ -135,17 +135,16 @@ object ScaleBench {
     val out = Session.scratch(spark, s"scalebench_x$factor")
     try {
       val tStage = time(stage(spark, src, out, factor))
-      def run(q: String): Unit = {
-        // persisted blocks (localCheckpoints) from PRIOR queries are
-        // suite pressure, not this query's cost — the r13 factor-100 run
-        // timed tpch_q18 at 77.9 s under 32 queries' accumulated state
-        // vs 10.4 s clean
-        Bench.release(spark)
-        SparkEntry.queries(q)(spark, out)
-          .write.mode("overwrite").format("noop").save()
+      // each query's checkpoints are released when it ends, off the
+      // clock: blocks left by PRIOR queries are suite pressure, not this
+      // query's cost — the r13 factor-100 run timed tpch_q18 at 77.9 s
+      // under 32 queries' accumulated state vs 10.4 s clean
+      def run(q: String): Double = Shared.scope(spark) {
+        time(SparkEntry.queries(q)(spark, out)
+          .write.mode("overwrite").format("noop").save())
       }
       names.foreach(run) // warm every plan off the clock
-      val timed = names.map(q => s""""$q":${Fmt.sec(time(run(q)))}""")
+      val timed = names.map(q => s""""$q":${Fmt.sec(run(q))}""")
       val rows = spark.read.parquet(s"$out/lineitem.parquet").count()
       val docRows = spark.read.parquet(s"$out/documents.parquet").count()
       println(s"""{"factor":$factor,"lineitem_rows":$rows,"document_rows":$docRows,""" +

@@ -73,42 +73,6 @@ object ScaleProbe {
     }
   }
 
-  private class JobCountListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var jobs = 0
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-  }
-
-  /** Measures the round-5 verdict-#4 premise: does batching the
-    * dupClusters convergence probe every 2 rounds cut the Spark job
-    * count? Same verified-pair graph for both settings, pair
-    * construction materialized off-listener (localCheckpoint) so only
-    * the CC loop's jobs count. Measured answer: NO on LSH near-dup
-    * graphs — pointer jumping converges in ~2 rounds, so batching adds
-    * extra |E|-shuffling rounds to save |V|-cheap probes (see the
-    * dupClusters scaladoc); the probe stays in the output so the trade
-    * is re-checked every round.
-    */
-  private def ccProbe(docs: DataFrame): Seq[String] = {
-    val spark = docs.sparkSession
-    val pairs = llm.Dedup.nearDupPairs(llm.Dedup.exactSurvivors(docs))
-      .localCheckpoint() // materialize: jobs below are the CC loop only
-    // warm the whole CC-loop pipeline off the clock — otherwise the
-    // first measured setting alone carries codegen/JIT cost and the
-    // seconds comparison is asymmetric (job counts are warmth-immune)
-    llm.Dedup.dupClusters(pairs)
-      .write.mode("overwrite").format("noop").save()
-    Seq(1, 2).map { pe =>
-      val lis = new JobCountListener
-      spark.sparkContext.addSparkListener(lis)
-      val t = time(llm.Dedup.dupClusters(pairs, probeEvery = pe)
-        .write.mode("overwrite").format("noop").save())
-      Thread.sleep(500) // async listener bus
-      spark.sparkContext.removeSparkListener(lis)
-      s""""cc_probe_every_$pe":{"sec":${Fmt.sec(t)},"jobs":${lis.jobs}}"""
-    }
-  }
-
   /** Compute-amplified map-stage probe (r13 verdict #4, generalizing the
     * hot-ER single-task lesson): the decode/rolling-hash entries do work
     * ≫ row width in a map-only stage, so on the one-row-group fixture
@@ -290,9 +254,8 @@ object ScaleProbe {
       }
       val asof = asofSkewProbe(spark)
       val er = erSkewProbe(spark)
-      val cc = ccProbe(big)
       val ms = mapStageProbe(spark, dir)
-      println(s"""{"factor":$factor,"rows_x1":$n,${(items ++ shItems ++ asof ++ er ++ cc ++ ms).mkString(",")}}""")
+      println(s"""{"factor":$factor,"rows_x1":$n,${(items ++ shItems ++ asof ++ er ++ ms).mkString(",")}}""")
     } finally spark.stop()
   }
 }

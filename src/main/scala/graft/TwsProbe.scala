@@ -45,8 +45,7 @@ object TwsProbe {
         P + "maxWriteBufferNumber" -> "4")))
     try {
       val tStage = Bench.time(ScaleBench.stage(spark, src, out, factor))
-      def run(q: String): Double = {
-        Bench.release(spark)
+      def run(q: String): Double = Shared.scope(spark) {
         Bench.time(SparkEntry.queries(q)(spark, out)
           .write.mode("overwrite").format("noop").save())
       }

@@ -33,8 +33,10 @@ object Verify {
     val ok = new java.util.concurrent.atomic.AtomicInteger
     def dump(e: Entry): Unit =
       try {
-        e.run(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/${e.name}")
+        Shared.scope(spark) {
+          e.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/${e.name}")
+        }
         ok.incrementAndGet()
       } catch { case t: Throwable =>
         System.err.println(s"[verify] ${e.name} failed: ${t.getMessage}")

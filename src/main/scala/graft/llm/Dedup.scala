@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Document deduplication for large-scale training-data pipelines: exact
   * (normalized-hash), MinHash+LSH banding, SimHash banding, and exact
@@ -31,22 +32,6 @@ import org.apache.spark.sql.functions._
   * explode / md5 / min) — no UDFs in the hot path.
   */
 object Dedup {
-
-  /** Free the storage blocks behind a `localCheckpoint()`'d DataFrame NOW.
-    * `Dataset.unpersist` routes through the CacheManager, which has no
-    * entry for a checkpoint's LogicalRDD — so on checkpointed frames it is
-    * a silent no-op and blocks linger until driver GC (r16 ADVICE). The
-    * real handle is the LogicalRDD's underlying persisted RDD. Falls back
-    * to `Dataset.unpersist` for plans that are not a bare checkpoint.
-    * Callers must guarantee the frame is never touched again: a freed
-    * localCheckpoint cannot recompute (lineage is truncated).
-    */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => df.unpersist(); ()
-    }
 
   /** Whitespace-collapsed lowercase normalization — the usual first step
     * before hashing document text.
@@ -202,12 +187,12 @@ object Dedup {
     // stays lazy: checkpointing the shingle table was A/B'd and lost
     // (3.16 → 3.69 s) — the corpus-scale string materialization costs
     // more than the re-derive.
-    val mh = minhash(docs, numHashes).localCheckpoint()
-    val cands = configs.map { case (bands, rows) =>
+    val mh = Shared.cut(minhash(docs, numHashes))
+    val cands = Shared.cut(configs.map { case (bands, rows) =>
       require(bands * rows == numHashes, s"($bands x $rows) != $numHashes")
       candidatesFromBandSigs(bandSignaturesFromMinhash(mh, numHashes, bands))
         .select(lit(bands).as("bands"), col("doc_a"), col("doc_b"))
-    }.reduce(_.unionAll(_)).localCheckpoint()
+    }.reduce(_.unionAll(_)))
     val verified = verify(docs, cands, keepZeros = false)
       .where(col("jaccard") >= threshold)
       .groupBy("bands").agg(count(lit(1)).as("n_verified"))
@@ -416,9 +401,8 @@ object Dedup {
     // localCheckpoint is the multi-consumer cut (the llm_pipeline_e2e
     // pattern): one scan+shingle materialization, and the 100 TB corpus
     // stays the only file scan in the final plan.
-    val ps = shingles(probes.select("doc_id", "text").dropDuplicates("doc_id"), n)
-      .select(col("doc_id").as("probe_id"), col("shingle"))
-      .localCheckpoint()
+    val ps = Shared.cut(shingles(probes.select("doc_id", "text").dropDuplicates("doc_id"), n)
+      .select(col("doc_id").as("probe_id"), col("shingle")))
     val bloom = {
       val keys = ps.select(expr("xxhash64(shingle)").as("gh"))
       keys.stat.bloomFilter("gh", math.max(ps.count(), 1L), fpp)
@@ -428,8 +412,8 @@ object Dedup {
     val mightHit = call_function("graft_bloom_might_contain",
       expr("xxhash64(shingle)"), lit(bytes))
     val sizes = ps.groupBy("probe_id").agg(count("*").as("n_probe_sh"))
-    val suiteOf = probes.select(col("suite"), col("doc_id").as("probe_id"))
-      .distinct().localCheckpoint()
+    val suiteOf = Shared.cut(probes.select(col("suite"), col("doc_id").as("probe_id"))
+      .distinct())
     shingles(docs, n)
       .where(mightHit)
       .join(ps, Seq("shingle"))
@@ -631,7 +615,7 @@ object Dedup {
     // executed). Materializing the survivor stage is what a real
     // pipeline's stage boundary does anyway (the llm_pipeline_e2e
     // precedent).
-    val survivors = exactSurvivors(docs).localCheckpoint()
+    val survivors = Shared.cut(exactSurvivors(docs))
     (survivors, nearDupPairs(survivors, jaccardThreshold, numHashes, bands))
   }
 
@@ -652,41 +636,29 @@ object Dedup {
     * Scale notes: each round shuffles |E| + |V| rows, bounded by the
     * verified pair set (already LSH-pruned, never all-pairs); per-round
     * results are checkpointed to truncate lineage. `checkpointDir = None`
-    * uses `localCheckpoint()` (executor-local storage — right for a
+    * uses [[graft.Shared.cut]] (executor-local storage — right for a
     * single JVM, and what the declared entries use); a cluster
     * deployment passes `Some(durablePath)` (HDFS/object store), which
     * switches every round to reliable `checkpoint()` so a lost executor
     * replays one round from durable files, not the whole loop from the
     * source scan. The convergence probe is a `limit(1)`-style existence
     * check (isEmpty), not a count — it short-circuits on the first
-    * changed row.
-    *
-    * `probeEvery` batches the probe to every k-th round (labels are
-    * monotone non-increasing, so "no change across a batch" is exactly
-    * the fixed-point test). MEASURED (ScaleProbe cc_probe, 8x corpus,
-    * both settings warmed): batching probes every 2 rounds runs ~60%
-    * MORE Spark jobs (49 vs 31) AND ~45% more wall-clock (1.49 vs
-    * 1.02 s), because pointer jumping reaches the fixed point in ~2
-    * rounds on LSH near-dup graphs (shallow clique-ish components) —
-    * each batched detection then wastes 1-2 EXTRA full rounds (an
-    * |E|+|V| shuffle each) to save probes that only join |V| rows. The
-    * default therefore stays 1; raise it only for high-diameter pair
-    * graphs (long chains: road-network-like, k-NN graphs) where the
-    * round count is large and probe savings accumulate.
+    * changed row. It runs after every round: probing every 2nd round
+    * instead ran more Spark jobs (49 vs 31, 8x corpus), because pointer
+    * jumping converges in ~2 rounds on LSH near-dup graphs, so each
+    * skipped probe cost an extra |E|+|V| round.
     *
     * Output: (doc_id, cluster_rep) for every doc that appears in at least
     * one pair; singleton docs are their own cluster by definition and are
     * left to the caller (see [[dedupeClustered]]).
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25,
-                  probeEvery: Int = 1,
                   checkpointDir: Option[String] = None): DataFrame = {
-    require(probeEvery >= 1, "probeEvery >= 1")
     val ckpt: DataFrame => DataFrame = checkpointDir match {
       case Some(dir) =>
         pairs.sparkSession.sparkContext.setCheckpointDir(dir)
         df => df.checkpoint() // eager + durable: lineage ends at the files
-      case None => df => df.localCheckpoint()
+      case None => Shared.cut
     }
     val edges = ckpt(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -711,26 +683,15 @@ object Dedup {
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val batchStart = labels
-      var cur = labels
-      var k = 0
-      while (k < probeEvery && iter < maxIters) {
-        val next = round(cur)
-        // superseded intra-batch checkpoints would otherwise pin
-        // O(rounds x |V|) storage until driver GC — release eagerly
-        // (batchStart stays alive for the probe below)
-        if (cur ne batchStart) freeCheckpoint(cur)
-        cur = next
-        k += 1
-        iter += 1
-      }
-      done = cur.as("n").join(batchStart.as("o"), Seq("doc_id"))
+      val next = round(labels)
+      iter += 1
+      done = next.as("n").join(labels.as("o"), Seq("doc_id"))
         .where(col("n.label") =!= col("o.label"))
         .isEmpty
-      freeCheckpoint(batchStart)
-      labels = cur
+      Shared.free(labels)
+      labels = next
     }
-    freeCheckpoint(edges)
+    Shared.free(edges)
     // returning unconverged labels would be SILENTLY wrong clusters;
     // with pointer jumping, 25 rounds cover any realistic component
     // diameter, so hitting the cap means something is broken
@@ -747,12 +708,10 @@ object Dedup {
     */
   def dedupeClustered(docs: DataFrame, jaccardThreshold: Double = 0.6,
                       numHashes: Int = 8, bands: Int = 4,
-                      probeEvery: Int = 1,
                       checkpointDir: Option[String] = None): DataFrame = {
     val (survivors, pairs) = survivorsAndPairs(docs, jaccardThreshold,
       numHashes, bands)
-    val nonReps = dupClusters(pairs, probeEvery = probeEvery,
-      checkpointDir = checkpointDir)
+    val nonReps = dupClusters(pairs, checkpointDir = checkpointDir)
       .where(col("doc_id") =!= col("cluster_rep"))
       .select("doc_id")
     survivors.join(nonReps, Seq("doc_id"), "left_anti")
@@ -846,11 +805,10 @@ object Dedup {
     // the lazy form re-ran that corpus pass per consumer
     // (llm_dedup_incremental executed 25 parquet scans / 28 Exchanges;
     // llm_split_leakage 44/49 — plans/r17/*_before.txt)
-    val exactSurvivors = incoming
+    val exactSurvivors = Shared.cut(incoming
       .withColumn("__fp", expr(s"md5($normalizeExpr)"))
       .join(exFp, col("__fp") === exFp("__ex_fp"), "left_anti")
-      .drop("__fp")
-      .localCheckpoint()
+      .drop("__fp"))
     val cross = bandSignatures(existing, numHashes, bands).as("a")
       .join(bandSignatures(exactSurvivors, numHashes, bands).as("b"),
         expr("a.band = b.band AND a.sig = b.sig"))
@@ -1198,16 +1156,14 @@ object Dedup {
     // verify) once per reference: llm_pagerank's executed plan ran
     // 74 parquet scans / 136 Exchanges for a 2-iteration walk over one
     // pair join (plans/r17/llm_pagerank_before.txt).
-    val edges = pairs.select(
+    val edges = Shared.cut(pairs.select(
         least(col("doc_a"), col("doc_b")).as("a"),
         greatest(col("doc_a"), col("doc_b")).as("b"))
       .where(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val sym = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val deg = Shared.cut(sym.groupBy("src").agg(count(lit(1)).as("deg")))
     val adj = sym.join(deg, Seq("src"))
     var ranks = deg.select(col("src").as("doc_id"),
       expr("CAST(1.0 AS DOUBLE)").as("pr"))
@@ -1215,19 +1171,18 @@ object Dedup {
       val contrib = adj.join(ranks, adj("src") === ranks("doc_id"))
         .select(col("dst"), col("src"), expr("pr / deg").as("c"))
       val prev = ranks
-      ranks = contrib.groupBy(col("dst").as("doc_id"))
+      ranks = Shared.cut(contrib.groupBy(col("dst").as("doc_id"))
         .agg(expr(
           s"""CAST(${damping} AS DOUBLE) * aggregate(
              |  transform(array_sort(collect_list(struct(src, c))),
              |    s -> s.c), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-             |+ CAST(${1.0 - damping} AS DOUBLE)""".stripMargin).as("pr"))
-        .localCheckpoint()
+             |+ CAST(${1.0 - damping} AS DOUBLE)""".stripMargin).as("pr")))
       // free superseded ROUND state only: the initial `ranks` is a
       // projection over deg's checkpoint (its plan is not a LogicalRDD),
       // and deg itself is still consumed by the final join below
       if (prev.queryExecution.logical
             .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-        freeCheckpoint(prev)
+        Shared.free(prev)
     }
     ranks.join(deg, ranks("doc_id") === deg("src"))
       .select(col("doc_id"), col("deg"),
@@ -1260,20 +1215,17 @@ object Dedup {
     // re-derived the whole upstream pair computation once per reference
     // (llm_label_propagation executed plan: 95 parquet scans / 267
     // Exchanges for a 2-iteration spread over one candidate-pair join).
-    val edges = pairs.select(
+    val edges = Shared.cut(pairs.select(
         least(col("doc_a"), col("doc_b")).as("a"),
         greatest(col("doc_a"), col("doc_b")).as("b"))
       .where(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val sym = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
     val nodes = sym.select(col("src").as("doc_id")).distinct()
-    val sd = seeds.select(col("doc_id"), col("label").as("seed_label"))
-      .localCheckpoint()
-    var labels = nodes.join(sd, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("seed_label").as("label"))
-      .localCheckpoint()
+    val sd = Shared.cut(seeds.select(col("doc_id"), col("label").as("seed_label")))
+    var labels = Shared.cut(nodes.join(sd, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("seed_label").as("label")))
     for (_ <- 1 to iters) {
       val nbr = sym
         .join(labels.where(col("label").isNotNull)
@@ -1285,13 +1237,12 @@ object Dedup {
           col("label").as("l"))).as("m"))
         .select(col("doc_id"), col("m.l").as("best_label"))
       val prev = labels
-      labels = labels.join(best, Seq("doc_id"), "left")
+      labels = Shared.cut(labels.join(best, Seq("doc_id"), "left")
         .join(sd, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("seed_label"), col("best_label"), col("label"))
-            .as("label"))
-        .localCheckpoint()
-      freeCheckpoint(prev)
+            .as("label")))
+      Shared.free(prev)
     }
     labels
   }
@@ -1326,11 +1277,10 @@ object Dedup {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select(col("src"))
-      sym = sym
+      sym = Shared.cut(sym
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint()
+        .select("src", "dst"))
     }
     sym.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("degree"))

@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** IVF (inverted-file) approximate nearest neighbor — the partition-led
   * scale path next to [[Similarity.lshTopK]]'s hash-led one: cluster the
@@ -220,10 +221,9 @@ object Ivf {
   def splitHeaviest(vecs: DataFrame, centroids: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val a = assign(vecs, centroids)
+    val a = Shared.cut(assign(vecs, centroids)
       .select(col("vec_id"), col("embedding"),
-        col("centroid_id").cast("int").as("centroid_id"))
-      .localCheckpoint()
+        col("centroid_id").cast("int").as("centroid_id")))
     val heavyId = a.groupBy("centroid_id").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("centroid_id")).limit(1)
       .collect()(0).getInt(0)

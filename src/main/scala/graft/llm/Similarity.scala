@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`ArrayType(FloatType)`): brute-force cosine top-k as the exact
@@ -875,11 +876,10 @@ object Similarity {
     import spark.implicits._
     val lam = lambda
     val oneMinus = 1.0 - lambda
-    val rel = candidates
+    val rel = Shared.cut(candidates
       .crossJoin(broadcast(query.select(col("embedding").as("__qe"))))
       .select(col("vec_id"), col("embedding"),
-        expr("graft_cosine(embedding, __qe)").as("__rel"))
-      .localCheckpoint()
+        expr("graft_cosine(embedding, __qe)").as("__rel")))
     // (rank, vec_id, raw rel, raw div)
     val picked = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Long, Array[Float], Double, Double)]

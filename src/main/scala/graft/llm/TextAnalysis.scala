@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Text-analysis operators for training-data pipelines: quality statistics,
   * token counting, n-gram-heuristic language ID and document fingerprinting.
@@ -1019,12 +1020,11 @@ object TextAnalysis {
           "transform(sequence(0, size(s) - 2), i -> concat(s[i], ' ', s[i+1]))"))
           .as("pair"))
         .groupBy("pair").agg(sum("wc").as("n"))
-    var dict = docs
+    var dict = Shared.cut(docs
       .select(explode(expr(s"split(${Dedup.normalizeExpr}, ' ')")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("wc"))
-      .withColumn("seq", concat_ws(" ", split(col("w"), "")))
-      .localCheckpoint()
+      .withColumn("seq", concat_ws(" ", split(col("w"), ""))))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var it = 1
     var exhausted = false
@@ -1035,10 +1035,9 @@ object TextAnalysis {
       else {
         val bp = best(0).getString(0)
         merges += ((it, bp, best(0).getLong(1)))
-        dict = dict.withColumn("seq",
+        dict = Shared.cut(dict.withColumn("seq",
             trim(replace(concat(lit(" "), col("seq"), lit(" ")),
-              lit(s" $bp "), lit(s" ${bp.replace(" ", "")} "))))
-          .localCheckpoint()
+              lit(s" $bp "), lit(s" ${bp.replace(" ", "")} ")))))
         it += 1
       }
     }
@@ -1172,7 +1171,7 @@ object TextAnalysis {
     require(k >= 1, "k must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = Dedup.shingles(docs, n).localCheckpoint()
+    val sh = Shared.cut(Dedup.shingles(docs, n))
     var pickedIds = List.empty[Long]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
     var covered = 0L
@@ -1277,9 +1276,8 @@ object TextAnalysis {
         "transform(sequence(0, size(t) - 2), " +
           "i -> struct(i AS pos, t[i] AS w1, t[i + 1] AS w2))")).as("b"))
       .select(col("doc_id"), col("b.pos"), col("b.w1"), col("b.w2"))
-    val cbi = bigrams(toks(trainDocs)).groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
+    val cbi = Shared.cut(bigrams(toks(trainDocs)).groupBy("w1", "w2")
+      .agg(count(lit(1)).as("c12")))
     val ctx = cbi.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("fan"))
     val cont = cbi.groupBy(col("w2")).agg(count(lit(1)).as("cont"))
@@ -1355,15 +1353,13 @@ object TextAnalysis {
         .as("g"))
       .select(col("doc_id"), col("g.pos"), col("g.w1"), col("g.w2"),
         col("g.w3"))
-    val ctri = trigrams(toks(trainDocs)).groupBy("w1", "w2", "w3")
-      .agg(count(lit(1)).as("c123"))
-      .localCheckpoint()
+    val ctri = Shared.cut(trigrams(toks(trainDocs)).groupBy("w1", "w2", "w3")
+      .agg(count(lit(1)).as("c123")))
     val ctx3 = ctri.groupBy("w1", "w2")
       .agg(sum("c123").as("c12tot"), count(lit(1)).as("fan3"))
     // continuation level: each ctri row is one distinct-w1 type, so
     // count(*) IS N1+(· w2 w3)
-    val cmid = ctri.groupBy("w2", "w3").agg(count(lit(1)).as("cp"))
-      .localCheckpoint()
+    val cmid = Shared.cut(ctri.groupBy("w2", "w3").agg(count(lit(1)).as("cp")))
     val mid = cmid.groupBy("w2")
       .agg(sum("cp").as("midtot"), count(lit(1)).as("fan2"))
     val cont = cmid.groupBy("w3").agg(count(lit(1)).as("cont"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Closed-form causal estimators over observational tables — the
   * difference-in-differences and post-stratification estimates an
@@ -68,16 +69,16 @@ object Causal {
     def fold(k: String, w: String): String =
       s"aggregate(transform(array_sort(collect_list(struct($k AS k, $w AS v))), " +
         s"x -> x.v), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
-    var cur = cells.localCheckpoint()
+    var cur = Shared.cut(cells)
     for (_ <- 1 to iters) {
       val rowM = cur.groupBy("pri").agg(expr(fold("st", "w")).as("ms"))
-      cur = cur.join(rowM, "pri")
+      cur = Shared.cut(cur.join(rowM, "pri")
         .withColumn("w", expr(s"w * CAST($targetRow AS DOUBLE) / ms"))
-        .drop("ms").localCheckpoint()
+        .drop("ms"))
       val colM = cur.groupBy("st").agg(expr(fold("pri", "w")).as("ms"))
-      cur = cur.join(colM, "st")
+      cur = Shared.cut(cur.join(colM, "st")
         .withColumn("w", expr(s"w * CAST($targetCol AS DOUBLE) / ms"))
-        .drop("ms").localCheckpoint()
+        .drop("ms"))
     }
     cur.select(col("pri"), col("st"), col("n"),
       expr("CAST(ROUND(w, 6) AS DOUBLE)").as("weight"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.llm.Dedup
 
 /** Blocked record linkage (entity resolution) — Fellegi–Sunter shape:
   * candidate pairs come from an EQUI-join on blocking keys (the only way
@@ -64,21 +65,29 @@ object Entity {
       .drop("__salt")
   }
 
+  /** The (id → entity label) assignment behind [[goldenRecords]] and the
+    * merge audits: the connected components of the match graph from
+    * [[graft.llm.Dedup.dupClusters]] (min-label propagation with pointer
+    * jumping, run to its fixed point, loud failure if it does not
+    * converge), each id labelled with its component's minimum id.
+    * `pairs`: matched (lid, rid) id pairs; `ids`: every record id (an id
+    * in no pair is its own label). Output: (id, label).
+    */
+  def entityLabels(pairs: DataFrame, ids: DataFrame): DataFrame = {
+    val clusters = Dedup.dupClusters(pairs.selectExpr(
+      "CAST(lid AS BIGINT) AS doc_a", "CAST(rid AS BIGINT) AS doc_b"))
+    ids.join(clusters.withColumnRenamed("doc_id", "id"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster_rep"), col("id")).as("label"))
+  }
+
   /** Survivorship over a matched-pair set — the step AFTER linkage: fold
-    * matches into entities (connected components) and elect ONE golden
+    * matches into entities ([[entityLabels]]) and elect ONE golden
     * record per entity by the caller's ordered preference rule (the MDM
     * "survivorship" policy: most-complete / most-trusted / freshest).
-    *
-    * Components come from fixed-`rounds` min-label propagation: linkage
-    * components are tiny by construction (stars and short chains around
-    * one real-world entity), so a bounded hop count covers them, and —
-    * like [[graft.llm.Dedup.kCore]]'s fixed peel rounds — the
-    * differential oracle replays the exact same rounds as chained CTEs;
-    * a production fixpoint would loop to convergence with per-round
-    * checkpoints like `Dedup.dupClusters`. Each round is one edge
-    * equi-join + one partial-aggregated min — never an adjacency
-    * materialization, so the per-round cost is |edges| regardless of
-    * entity count.
+    * Linkage components are tiny by construction (stars and short chains
+    * around one real-world entity), so the differential oracle replays a
+    * fixed number of min-label rounds as chained CTEs; a component deeper
+    * than those rounds would make the oracle disagree, not pass.
     *
     * `pairs`: matched (lid, rid) id pairs from [[blockedLink]] — the two
     * id spaces must be disjoint. `records`: (id, payload…) for EVERY
@@ -89,77 +98,9 @@ object Entity {
     *
     * Output: (entity_id = min member id, n_members, golden payload…).
     */
-  /** The (id → entity label) assignment behind [[goldenRecords]] and the
-    * merge audits: `rounds` min-label rounds over the symmetrized match
-    * graph, per-round localCheckpoint (lineage ends, cost per round =
-    * |edges|), singleton ids keep their own label.
-    *
-    * Convergence probe (the dupClusters pattern): min-label propagation
-    * is monotone, so a final round that changed nothing is a fixed
-    * point. A component with diameter > rounds would otherwise SILENTLY
-    * split into several entities — and the differential oracle replays
-    * the identical round count, so it structurally cannot catch the
-    * under-merge. One |V|-row join; the per-round localCheckpoint makes
-    * the operator eager already. Note the witness round: a component of
-    * diameter D needs `rounds` >= D + 1 — the labels stop CHANGING only
-    * the round after the last hop lands, so the budget must include one
-    * idle round for the probe to certify (OpsSpec pins this).
-    */
-  def entityLabels(pairs: DataFrame, ids: DataFrame,
-                   rounds: Int = 6, maxExtraRounds: Int = 0): DataFrame = {
-    require(rounds >= 1, "need at least one propagation round")
-    require(maxExtraRounds >= 0, "extension budget cannot be negative")
-    val und = pairs.selectExpr("CAST(lid AS BIGINT) AS a",
-      "CAST(rid AS BIGINT) AS b").distinct()
-    val sym = und.union(und.selectExpr("b AS a", "a AS b"))
-      .localCheckpoint()
-    var labels = ids.select(col("id"), col("id").as("label"))
-    var prev = labels
-    def oneRound(): Unit = {
-      val nbr = sym.select(col("a").as("id"), col("b").as("nb"))
-        .join(labels.select(col("id").as("nb"), col("label").as("nl")),
-          Seq("nb"))
-        .groupBy("id").agg(min("nl").as("minnl"))
-      prev = labels
-      labels = labels.join(nbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("minnl"), col("label")))
-            .as("label"))
-        .localCheckpoint()
-    }
-    def stillMoving(): Boolean =
-      labels.select(col("id"), col("label").as("nl"))
-        .join(prev.select(col("id"), col("label").as("pl")), Seq("id"))
-        .where(col("nl") =!= col("pl")).limit(1).count() != 0L
-    (1 to rounds).foreach(_ => oneRound())
-    // Graceful degradation under scale growth (r14 ADVICE): when the last
-    // round still changed, a diameter has outgrown the budget — with
-    // `maxExtraRounds` headroom the operator keeps propagating one round
-    // at a time until an idle round certifies the fixed point (cost: one
-    // |edges| join + one |V| change-probe per extra round) instead of
-    // hard-failing the entry. The converged min-labels are the same
-    // deterministic connected-component assignment regardless of how
-    // many rounds it took. Budget exhausted → the original loud failure.
-    var extra = 0
-    var moving = stillMoving()
-    while (moving && extra < maxExtraRounds) {
-      oneRound()
-      extra += 1
-      moving = stillMoving()
-    }
-    require(!moving,
-      s"entityLabels: min-label propagation still moving after " +
-        s"${rounds + extra} rounds — a component's diameter exceeds the " +
-        "round budget; raise `rounds`/`maxExtraRounds` (cost is one " +
-        "|edges| join per extra round)")
-    labels
-  }
-
   def goldenRecords(pairs: DataFrame, records: DataFrame,
-                    pick: Seq[Column], rounds: Int = 6,
-                    maxExtraRounds: Int = 6): DataFrame = {
-    val members = records.join(
-      entityLabels(pairs, records.select("id"), rounds, maxExtraRounds),
+                    pick: Seq[Column]): DataFrame = {
+    val members = records.join(entityLabels(pairs, records.select("id")),
       Seq("id"))
     val golden = members
       .withColumn("__rn",

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Exact global order statistics WITHOUT a global sort — the 100 TB way
   * to answer "what is the exact p99 of this column". A naive
@@ -38,8 +39,8 @@ object OrderStats {
     // the documented 3-pass shape actually ran 5+ passes (agg_winsorize
     // plan: extra lineitem scans under each crossJoin). Materializing
     // one row costs nothing and pins pass-1 to exactly one scan.
-    val stats = data.agg(min("__v").as("__min"), max("__v").as("__max"),
-      count(lit(1)).as("__n")).localCheckpoint()
+    val stats = Shared.cut(data.agg(min("__v").as("__min"), max("__v").as("__max"),
+      count(lit(1)).as("__n")))
 
     // pass 2: fixed-width histogram; zero-width (constant column) folds
     // every row into bin 0. Equal values share a bin by construction, so
@@ -67,10 +68,9 @@ object OrderStats {
     // localCheckpoint (r16 opt): `targets` is ≤|ps| rows but its lineage
     // carries the histogram pass — without the cut, pass 3's broadcast
     // build re-ran pass 2 (and pass 1 again under it)
-    val targets = ranks.join(cum,
+    val targets = Shared.cut(ranks.join(cum,
       col("__r") >= col("__prev") && col("__r") < col("__cum"))
-      .select(col("p"), col("__r"), col("__bin"), col("__prev"))
-      .localCheckpoint()
+      .select(col("p"), col("__r"), col("__bin"), col("__prev")))
 
     // pass 3: rescan only the target bins; rank locally within each
     binned.join(broadcast(targets), Seq("__bin"))
@@ -103,8 +103,8 @@ object OrderStats {
       .where(col("__v").isNotNull)
     // localCheckpoint: group-count rows; same 3-pass pinning as the
     // global form above
-    val stats = data.groupBy("__g").agg(min("__v").as("__min"),
-      max("__v").as("__max"), count(lit(1)).as("__n")).localCheckpoint()
+    val stats = Shared.cut(data.groupBy("__g").agg(min("__v").as("__min"),
+      max("__v").as("__max"), count(lit(1)).as("__n")))
 
     val width = (col("__max") - col("__min")) / lit(bins.toDouble)
     val binOf = when(col("__max") === col("__min"), lit(0L))
@@ -122,10 +122,9 @@ object OrderStats {
         floor(lit(p) * (col("__n") - 1).cast("double")).cast("long")
           .as("__r"))): _*)).as("pr"))
       .select(col("__g"), col("pr.p").as("p"), col("pr.__r").as("__r"))
-    val targets = ranks.join(cum, Seq("__g"))
+    val targets = Shared.cut(ranks.join(cum, Seq("__g"))
       .where(col("__r") >= col("__prev") && col("__r") < col("__cum"))
-      .select(col("__g"), col("p"), col("__r"), col("__bin"), col("__prev"))
-      .localCheckpoint()
+      .select(col("__g"), col("p"), col("__r"), col("__bin"), col("__prev")))
 
     binned.join(broadcast(targets), Seq("__g", "__bin"))
       .withColumn("__rn", row_number().over(

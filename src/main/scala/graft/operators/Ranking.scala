@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Pairwise-preference ranking — the Bradley–Terry model that reward
   * modeling / RLHF preference pipelines and match-making systems fit
@@ -39,18 +40,16 @@ object Ranking {
     // only Inf-propagates while ieee_floating_point_ops stays on).
     val nonEmpty = matches.filter(col("n") > 0)
     // symmetrized opponent table n_ij and per-player win totals
-    val sym = nonEmpty.selectExpr("winner AS i", "loser AS j", "n")
+    val sym = Shared.cut(nonEmpty.selectExpr("winner AS i", "loser AS j", "n")
       .unionByName(nonEmpty.selectExpr("loser AS i", "winner AS j", "n"))
-      .groupBy("i", "j").agg(sum("n").as("nij"))
-      .localCheckpoint()
+      .groupBy("i", "j").agg(sum("n").as("nij")))
     val wins = nonEmpty.groupBy(col("winner").as("i"))
       .agg(sum("n").as("w"))
     val players = sym.select(col("i")).distinct()
-    var p = players
+    var p = Shared.cut(players
       .join(wins, Seq("i"), "left")
       .select(col("i"), coalesce(col("w"), lit(0L)).as("w"),
-        lit(1.0d).as("p"))
-      .localCheckpoint()
+        lit(1.0d).as("p")))
     for (_ <- 1 to iters) {
       val den = sym
         .join(p.select(col("i"), col("p").as("pi")), Seq("i"))
@@ -60,10 +59,9 @@ object Ranking {
           """aggregate(transform(array_sort(collect_list(
             |  struct(j, CAST(nij AS DOUBLE) / (pi + pj) AS t))), x -> x.t),
             |  CAST(0.0 AS DOUBLE), (a, v) -> a + v)""".stripMargin).as("den"))
-      p = p.join(den, Seq("i"))
+      p = Shared.cut(p.join(den, Seq("i"))
         .select(col("i"), col("w"),
-          expr("CAST(w AS DOUBLE) / den").as("p"))
-        .localCheckpoint()
+          expr("CAST(w AS DOUBLE) / den").as("p")))
     }
     val totals = sym.groupBy("i").agg(sum("nij").as("n_matches"))
     p.join(totals, Seq("i"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.llm.{Dedup, Fuzzy, Ivf, Multimodal, Similarity, TextAnalysis, TrainOrder}
 
 /** Correctness wiring for the graft.llm operator families (round-2 verdict
@@ -728,11 +728,9 @@ object Llm {
       // localCheckpoint (r16 opt): the copy-count table feeds the
       // survivor join, the cluster re-expansion AND the alone-class
       // anti-join; survivors feed the candidate and verify chains
-      val counts = Dedup.exact(dd)
-        .select(col("keep_id").as("doc_id"), col("n_docs").as("n_copies"))
-        .localCheckpoint()
-      val survivors = dd.join(counts.select("doc_id"), Seq("doc_id"))
-        .localCheckpoint()
+      val counts = Shared.cut(Dedup.exact(dd)
+        .select(col("keep_id").as("doc_id"), col("n_docs").as("n_copies")))
+      val survivors = Shared.cut(dd.join(counts.select("doc_id"), Seq("doc_id")))
       val pairs = Dedup.nearDupPairs(survivors)
       val clustered = Dedup.dupClusters(pairs)
       val near = clustered.join(counts, Seq("doc_id"))
@@ -787,7 +785,7 @@ object Llm {
       // localCheckpoint (r16 opt): survivors feed the candidate AND the
       // verify chain — the lazy form re-derived the exact collapse per
       // consumer (same shape as llm_dedup_venn)
-      val survivors = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
+      val survivors = Shared.cut(Dedup.exactSurvivors(docs(s, d)))
       Dedup.kCore(Dedup.nearDupPairs(survivors), k = 2, rounds = 3).orderBy("doc_id")
     },
       // the three peel rounds replayed as chained CTEs over the exact-
@@ -1519,7 +1517,7 @@ object Llm {
       // chains (MinHash pairs, simhash banding, the flag frame) — the
       // lazy form re-derived the scan+md5+collapse per consumer (17
       // parquet scans / 60 Exchanges executed)
-      val survivors = Dedup.exactSurvivors(dd).localCheckpoint()
+      val survivors = Shared.cut(Dedup.exactSurvivors(dd))
       val mhPairs = Dedup.nearDupPairs(survivors)
       val mhDropped = Dedup.dupClusters(mhPairs)
         .where(col("doc_id") =!= col("cluster_rep")).select("doc_id")
@@ -1606,8 +1604,8 @@ object Llm {
       // the candidate-pair set feeds BOTH the radius census and the
       // verify join — the lazy form re-derived each per consumer (31
       // parquet scans / 119 Exchanges in the executed plan)
-      val dd = Dedup.exactSurvivors(docs(s, d)).localCheckpoint()
-      val sp = Dedup.simhashCandidates(dd).localCheckpoint()
+      val dd = Shared.cut(Dedup.exactSurvivors(docs(s, d)))
+      val sp = Shared.cut(Dedup.simhashCandidates(dd))
       val jac = Dedup.jaccard(dd, sp.select("doc_a", "doc_b"))
       val pairs = sp.join(jac, Seq("doc_a", "doc_b"), "left")
         .select(col("hamming"), coalesce(col("jaccard"), lit(0.0)).as("jac"))
@@ -1682,11 +1680,9 @@ object Llm {
       // derives the corpus only thrice and the text materialization costs
       // more than the re-derives.
       val dd = Dedup.exactSurvivors(docs(s, d))
-      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
-        .localCheckpoint()
-      val bits = Dedup.minhash(dd).select(
-        col("doc_id") +: (0 until 8).map(i => expr(s"h$i % 2").as(s"b$i")): _*)
-        .localCheckpoint()
+      val cand = Shared.cut(Dedup.lshCandidates(dd).select("doc_a", "doc_b"))
+      val bits = Shared.cut(Dedup.minhash(dd).select(
+        col("doc_id") +: (0 until 8).map(i => expr(s"h$i % 2").as(s"b$i")): _*))
       val bitsA = bits.toDF("doc_a" +: (0 until 8).map(i => s"ab$i"): _*)
       val bitsB = bits.toDF("doc_b" +: (0 until 8).map(i => s"bb$i"): _*)
       val matchExpr = (0 until 8)
@@ -3149,8 +3145,7 @@ object Llm {
       // corpus-scale string materialization costs more than the lazy
       // re-derives here.
       val dd = Dedup.exactSurvivors(docs(s, d))
-      val cand = Dedup.lshCandidates(dd).select("doc_a", "doc_b")
-        .localCheckpoint()
+      val cand = Shared.cut(Dedup.lshCandidates(dd).select("doc_a", "doc_b"))
       val bg = dd.select(col("doc_id"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(size(col("w")) >= 2)
@@ -3669,13 +3664,10 @@ object Llm {
       // counts three ways (both endpoints + the intra-class pairs)
       val fps = dd.select(col("doc_id"), col("source"),
         expr(s"md5(${graft.llm.Dedup.normalizeExpr})").as("fp"))
-      val cls = fps.groupBy("fp").agg(min("doc_id").as("keep_id"))
-        .localCheckpoint()
-      val clsrc = fps.groupBy("fp", "source").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-      val survivors = dd.join(
-        cls.select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
+      val cls = Shared.cut(fps.groupBy("fp").agg(min("doc_id").as("keep_id")))
+      val clsrc = Shared.cut(fps.groupBy("fp", "source").agg(count(lit(1)).as("n")))
+      val survivors = Shared.cut(dd.join(
+        cls.select(col("keep_id").as("doc_id")), Seq("doc_id")))
       val pairs = Dedup.nearDupPairs(survivors)
       val crossM = pairs
         .join(cls.select(col("keep_id").as("doc_a"), col("fp").as("fp_a")), Seq("doc_a"))
@@ -4161,12 +4153,11 @@ object Llm {
       // pipeline re-evaluates per consumer (measured 5.98 s vs 2.35 for
       // the single-consumer dup_source_matrix); the edge list itself is
       // survivor-pair-scale, safe to materialize at any corpus size
-      val edges = pairs
+      val edges = Shared.cut(pairs
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
           Seq("doc_a"))
         .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")),
-          Seq("doc_b"))
-        .localCheckpoint()
+          Seq("doc_b")))
       val mDf = edges.agg(count(lit(1)).as("m_edges"))
       val deg = edges.select(col("doc_a").as("doc_id"), col("sa").as("source"))
         .union(edges.select(col("doc_b").as("doc_id"), col("sb").as("source")))
@@ -5652,8 +5643,7 @@ object Llm {
       // (consumed twice) — the lazy form re-ran the md5 pass per
       // consumer (44 parquet scans / 49 Exchanges executed,
       // plans/r17/llm_split_leakage_before.txt)
-      val split = TextAnalysis.hashSplit(dd).select("doc_id", "split")
-        .localCheckpoint()
+      val split = Shared.cut(TextAnalysis.hashSplit(dd).select("doc_id", "split"))
       val train = dd.join(
         split.where("split = 'train'").select("doc_id"), "doc_id")
       val heldout = dd.join(
@@ -5702,7 +5692,7 @@ object Llm {
       // localCheckpoint (r16 opt): the exact table feeds the mass stats
       // AND the survivor join; survivors feed candidate generation AND
       // the jaccard verify — 12 parquet scans executed in the lazy form
-      val ex = Dedup.exact(dd).localCheckpoint()
+      val ex = Shared.cut(Dedup.exact(dd))
       val exStats = ex.agg(
         sum("n_docs").as("n_docs"),
         count(lit(1)).as("n_distinct_content"),
@@ -5711,14 +5701,13 @@ object Llm {
       // front-collapse): verbatim copies would densify the candidate
       // graph quadratically in copy count and measure nothing new —
       // measured 33 s vs 5 s at the 10x dup-heavy staging
-      val survivors = dd.join(
-        ex.select(col("keep_id").as("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
+      val survivors = Shared.cut(dd.join(
+        ex.select(col("keep_id").as("doc_id")), Seq("doc_id")))
       // localCheckpoint: the scan→shingle→minhash→band subtree is the
       // report's dominant cost and feeds BOTH the pair count and the
       // jaccard verify chain — materialize the (pair-bounded, small)
       // candidate set once instead of re-deriving it per consumer
-      val cands = Dedup.lshCandidates(survivors).localCheckpoint()
+      val cands = Shared.cut(Dedup.lshCandidates(survivors))
       val verified = Dedup.jaccard(survivors, cands)
         .where(col("jaccard") >= 0.6).select("doc_a", "doc_b")
       val pairStats = cands.agg(count(lit(1)).as("n_candidate_pairs"))
@@ -6066,13 +6055,15 @@ object Llm {
 
     // 8-step BPE TRAINING loop: the learned merge table, each step's
     // best pair depending on the previous merges — the chained oracle
-    // replays all eight stages in CTEs (the dict is localCheckpointed
-    // between steps, so the Spark plan stays linear; DuckDB's CTE chain
-    // has no inliner doubling)
+    // replays all eight stages in CTEs (the dict is cut with Shared.cut
+    // between steps, so the Spark plan stays linear)
     Entry("llm_bpe_train", (s, d) =>
       TextAnalysis.bpeTrain(docs(s, d), iters = 8).orderBy("iter"),
-      // the same dictionary evolved through four replace steps, each
-      // step's argmax pair feeding the next stage's CTE
+      // the same dictionary evolved through eight replace steps, each
+      // step's argmax pair feeding the next stage's CTE. DuckDB inlines
+      // every CTE reference, and each w$i reads b$i twice and feeds both
+      // pc${i+1} and w${i+1}, so w0 is expanded 3280 times: this text
+      // runs out of memory in DuckDB at sf0.001 and sf0.01
       {
       val steps = (1 to 8).map { i =>
         s"""pc$i AS (SELECT s[i] || ' ' || s[i+1] AS pair, SUM(wc) AS n
@@ -6619,23 +6610,22 @@ object Llm {
       // downstream branch re-derives it from the scan (measured 22.3 s
       // -> 8.9 s at sf0.1). A real refresh materializes stage outputs
       // at exactly these cut points.
-      val deduped = Dedup.dedupe(gated).localCheckpoint()
+      val deduped = Shared.cut(Dedup.dedupe(gated))
       // 3. decontaminate: drop anything sharing >= 30% of a benchmark
       // probe's shingles (probes = raw doc_id < 50 slice)
       val flagged = Dedup.containment(deduped, dd.where("doc_id < 50"),
           minContainment = 0.3)
         .select("doc_id").distinct()
-      val clean = deduped.join(flagged, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val clean = Shared.cut(deduped.join(flagged, Seq("doc_id"), "left_anti"))
       // 4. hashed-linear quality classifier: keep positive logits
       val kept = clean.join(
         TextAnalysis.classifierScore(clean, TextAnalysis.hashedWeights(s, 64), 64)
           .where("logit > 0").select("doc_id"), Seq("doc_id"))
       // 5. per-source token-budget mix (6 weighted sources, 15k budget)
-      val mixed = TextAnalysis.tokenBudgetMix(kept,
+      val mixed = Shared.cut(TextAnalysis.tokenBudgetMix(kept,
         Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src3" -> 2L,
           "src4" -> 1L, "src5" -> 4L),
-        budgetTokens = 15000L, seed = "e2e-mix").localCheckpoint()
+        budgetTokens = 15000L, seed = "e2e-mix"))
       // 6. deterministic training order + 64-doc shards over the mix
       mixed.join(
           TrainOrder.shuffleShards(mixed.select("doc_id"), "e2e-ord", 64L),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.operators.{Bootstrap, Cdc, Constraints, Entity, OrderStats, Resample}
 import graft.llm.TrainOrder
 
@@ -1955,16 +1955,14 @@ object Ops {
       // the second quantile call and the final aggregate re-derived the
       // full median computation under the broadcast join — 43 lineitem
       // scans in the executed plan for a 7-scan composition
-      val med = OrderStats.exactQuantilesByGroup(li, "l_returnflag",
+      val med = Shared.cut(OrderStats.exactQuantilesByGroup(li, "l_returnflag",
           "l_extendedprice", Seq(0.5), bins = 1024)
-        .select(col("l_returnflag"), col("value").as("med"))
-        .localCheckpoint()
+        .select(col("l_returnflag"), col("value").as("med")))
       val withMed = li.join(broadcast(med), "l_returnflag")
         .withColumn("absdev", abs(col("l_extendedprice") - col("med")))
-      val mad = OrderStats.exactQuantilesByGroup(withMed, "l_returnflag",
+      val mad = Shared.cut(OrderStats.exactQuantilesByGroup(withMed, "l_returnflag",
           "absdev", Seq(0.5), bins = 1024)
-        .select(col("l_returnflag"), col("value").as("mad"))
-        .localCheckpoint()
+        .select(col("l_returnflag"), col("value").as("mad")))
       withMed.join(broadcast(mad), "l_returnflag")
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
@@ -2308,11 +2306,11 @@ object Ops {
       ORDER BY event_type"""),
 
     // the step AFTER linkage — MDM survivorship: matched pairs fold into
-    // entities (6 fixed min-label rounds, oracle-replayable like
-    // llm_kcore's peels) and each entity elects ONE golden record by the
-    // ordered policy "never a MOVED segment if avoidable, then highest
-    // balance, then lowest id". Unmatched records stay as singleton
-    // entities — the full MDM table, not just the collisions
+    // entities (connected components; the oracle replays 6 min-label
+    // rounds, like llm_kcore's peels) and each entity elects ONE golden
+    // record by the ordered policy "never a MOVED segment if avoidable,
+    // then highest balance, then lowest id". Unmatched records stay as
+    // singleton entities — the full MDM table, not just the collisions
     Entry("er_golden_record", (s, d) => {
       Tables.register(s, d)
       val cust = s.table("customer")
@@ -2401,7 +2399,7 @@ object Ops {
     // entities carry members that DISAGREE on a hard attribute (segment,
     // nation, balance)? A conflict means the election silently discarded
     // information — the row a data steward reviews before trusting the
-    // golden table. Same linkage + min-label rounds (entityLabels is the
+    // golden table. Same linkage + components (entityLabels is the
     // shared engine), one rollup with integer spreads; singletons can't
     // conflict and are excluded
     Entry("er_merge_conflicts", (s, d) => {
@@ -2430,8 +2428,7 @@ object Ops {
         .unionByName(rightDf
           .selectExpr("rid AS id", "seg", "bal", "c_nationkey AS nat"))
       records
-        .join(Entity.entityLabels(matches, records.select("id"),
-          maxExtraRounds = 6), Seq("id"))
+        .join(Entity.entityLabels(matches, records.select("id")), Seq("id"))
         .groupBy("label")
         .agg(min("id").as("entity_id"), count(lit(1)).as("n_members"),
           countDistinct("seg").as("n_segments"),

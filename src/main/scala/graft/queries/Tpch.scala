@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{Shared, Tables}
 
 /** The 22 SQLBench-H (TPC-H-derived) queries of the reference's validation
   * corpus (reference `tpch/queries/q1.sql` … `q22.sql`, CI-validated at SF1,
@@ -334,7 +334,7 @@ object Tpch {
     // Materialize before dropping the view so the shared session is left
     // clean (a later table named revenue0 must not resolve to this view).
     // The result is a handful of supplier rows, so the checkpoint is tiny.
-    val out = spark.sql(q15Select).localCheckpoint(eager = true)
+    val out = Shared.cut(spark.sql(q15Select))
     spark.catalog.dropTempView("revenue0")
     out
   }

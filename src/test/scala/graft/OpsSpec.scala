@@ -192,31 +192,16 @@ class OpsSpec extends SparkSpec {
       (4L, 1L, 4L, "d", 10L)), s"got $got")
   }
 
-  test("entityLabels fails loudly when a component's diameter exceeds the round budget") {
-    import graft.operators.Entity
-    // a 12-link chain (diameter 12) cannot converge in 2 min-label rounds
-    val pairs = Seq.tabulate(12)(i => (i.toLong, i + 1L)).toDF("lid", "rid")
-    val ids = (0L to 12L).toDF("id")
-    assertThrows[IllegalArgumentException](
-      Entity.entityLabels(pairs, ids, rounds = 2))
-    // diameter rounds + ONE idle witness round = the probe can prove the
-    // fixed point (labels stop changing only the round AFTER the last
-    // hop lands)
-    assertThrows[IllegalArgumentException](
-      Entity.entityLabels(pairs, ids, rounds = 12))
-    val labels = Entity.entityLabels(pairs, ids, rounds = 13)
+  test("dupClusters fails loudly when a chain outruns maxIters") {
+    import graft.llm.Dedup
+    // a 64-link chain: pointer jumping needs more than 2 rounds to fold
+    // it, and unconverged labels would silently split the component
+    val pairs = Seq.tabulate(64)(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    assertThrows[IllegalStateException](
+      Dedup.dupClusters(pairs, maxIters = 2).collect())
+    val labels = Dedup.dupClusters(pairs)
       .collect().map(_.getLong(1)).toSet
     assert(labels == Set(0L), s"chain should fold to label 0, got $labels")
-    // graceful degradation (r14 ADVICE): an extension budget turns the
-    // over-diameter failure into extra |edges| joins — rounds=2 on the
-    // diameter-12 chain converges with headroom, same labels
-    val extended = Entity.entityLabels(pairs, ids, rounds = 2,
-        maxExtraRounds = 20)
-      .collect().map(_.getLong(1)).toSet
-    assert(extended == Set(0L), s"extension should fold to 0, got $extended")
-    // budget too small still fails loudly
-    assertThrows[IllegalArgumentException](
-      Entity.entityLabels(pairs, ids, rounds = 2, maxExtraRounds = 3))
   }
 
   test("kaplanMeier: hand-computed curve; censoring shrinks risk sets only") {
