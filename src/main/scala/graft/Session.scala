@@ -46,6 +46,13 @@ object Session {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // events.ts is TIMESTAMP(NANOS) parquet; see Tables.load.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Every StreamingQuery runs in a cloned session; with artifact
+      // isolation on, each clone gets a fresh executor class loader, and
+      // the codegen cache is keyed on (class loader, code), so each
+      // replay recompiled all its generated classes (ts_stream_window_agg:
+      // 14 Janino compiles of 20-30 ms per run, 0 with isolation off).
+      // graft adds no jars or artifacts to any session.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // bucketed saveAsTable target (in-memory catalog): inside the run
       // root, never the cwd's default spark-warehouse/
       .config("spark.sql.warehouse.dir", new File(root, "warehouse").getPath)

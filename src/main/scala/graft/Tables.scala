@@ -19,8 +19,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** `events.ts` has shipped in two parquet generations: TIMESTAMP(NANOS)
-    * (read as raw nanos via the legacy conf, floor-divided to micros — the
+  /** `<dir>/<name>.parquet` as a batch frame. `events.ts` has shipped in
+    * two parquet generations: TIMESTAMP(NANOS) (read as raw nanos via the
+    * legacy conf `Session.local` pins, floor-divided to micros — the
     * truncation DuckDB applies when casting TIMESTAMP_NS down) and, since
     * the round-9 fixtures, plain micros with isAdjustedToUTC=false, which
     * Spark infers as TIMESTAMP_NTZ. Event-time streaming (watermarks) and
@@ -28,9 +29,21 @@ object Tables {
     * session-time TIMESTAMP — the session is pinned UTC, so wall-clock
     * values are unchanged and stay identical to DuckDB's naive read.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalize(name, spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** `<dir>/<name>.parquet` as a file-source stream, normalized as in
+    * [[load]]: a bounded replay reads the fixture file itself, with no
+    * staging copy, and its first micro-batch admits the one file whole.
+    * The schema costs the same one inference job as [[load]].
+    */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalize(name, graft.streaming.Streams.fromParquet(
+      spark, path, spark.read.parquet(path).schema))
+  }
+
+  private def normalize(name: String, df: DataFrame): DataFrame =
     if (name != "events") df
     else df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -43,7 +56,6 @@ object Tables {
           org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => df
     }
-  }
 
   // Registration is idempotent per (session, dir): queries call register
   // defensively, but within one Verify/Bench session only the first call

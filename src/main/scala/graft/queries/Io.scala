@@ -141,10 +141,10 @@ object Io {
     (landing, evs.schema)
   }
 
-  /** Shared body of the two stream-stream join entries: stage the
-    * purchase/view slices of events as two file-source landing dirs,
-    * drive [[graft.streaming.Streams.intervalJoin]] through a real
-    * StreamingQuery to a fixed-name memory sink, clean up the staging.
+  /** Shared body of the stream-stream join entries: the purchase and
+    * view slices of events as two file-source streams over the fixture
+    * file, driven through [[graft.streaming.Streams.intervalJoin]] by a
+    * real StreamingQuery to a fixed-name memory sink.
     * On bounded, fully-drained input the INNER join emits exactly the
     * batch answer; LEFT-OUTER additionally emits null-padded unmatched
     * left rows once the final watermark evicts their join window (the
@@ -154,23 +154,12 @@ object Io {
   private def streamIntervalJoin(s: SparkSession, d: String,
                                  joinType: String, sink: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    Tables.register(s, d)
-    val evs = s.table("events").select("ts", "user_id", "event_type")
-    def side(t: String): String = {
-      val dir = graft.Session.scratch(s, s"stream_ij_$t")
-      evs.where(col("event_type") === t).write.mode("overwrite").parquet(dir)
-      dir
-    }
-    val pd = side("purchase")
-    val vd = side("view")
+    def side(t: String): DataFrame = Tables.stream(s, d, "events")
+      .where(col("event_type") === t).select("ts", "user_id", "event_type")
     val joined = graft.streaming.Streams.intervalJoin(
-      graft.streaming.Streams.fromParquet(s, pd, evs.schema),
-      graft.streaming.Streams.fromParquet(s, vd, evs.schema),
-      joinType = joinType)
+      side("purchase"), side("view"), joinType = joinType)
     graft.streaming.Streams.runToMemory(joined, sink,
       org.apache.spark.sql.streaming.OutputMode.Append())
-    Tables.deleteRecursively(new java.io.File(pd))
-    Tables.deleteRecursively(new java.io.File(vd))
     s.table(sink).orderBy("user_id", "left_ts", "right_ts")
   }
 
@@ -1507,7 +1496,7 @@ object Io {
         |ORDER BY hour_ts, event_type""".stripMargin),
 
     // STREAMING differential entry (bounded replay): the events fixture
-    // staged as a landing directory, tailed by a REAL StreamingQuery —
+    // file itself, tailed by a REAL StreamingQuery (Tables.stream) —
     // file source -> watermarked tumbling-window aggregate -> memory
     // sink, Complete mode so bounded replay flushes every window (Append
     // would hold back windows the final watermark never passes). On
@@ -1520,11 +1509,7 @@ object Io {
     // ts_window_agg keeps it).
     Entry("ts_stream_window_agg", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
-      val events = Tables.load(s, d, "events")
-        .select("ts", "user_id", "event_type", "value")
-      val dir = graft.Session.scratch(s, "stream_entry")
-      events.write.mode("overwrite").parquet(dir)
-      val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
+      val agg = Tables.stream(s, d, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count("*").as("n_events"),
@@ -1536,9 +1521,6 @@ object Io {
       val sink = "ts_stream_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      // the memory table holds the result rows; the staging copy of
-      // events is no longer referenced — don't leak it per invocation
-      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("hour_ts", "event_type")
     },
       // bounded replay makes streaming deterministic: the oracle is the
@@ -1557,11 +1539,7 @@ object Io {
     // arithmetic per event and re-aggregates from scratch
     Entry("ts_stream_sliding_agg", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, window}
-      val events = Tables.load(s, d, "events")
-        .select("ts", "user_id", "event_type", "value")
-      val dir = graft.Session.scratch(s, "stream_entry")
-      events.write.mode("overwrite").parquet(dir)
-      val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
+      val agg = Tables.stream(s, d, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "2 hours", "30 minutes").as("w"),
           col("event_type"))
@@ -1571,7 +1549,6 @@ object Io {
       val sink = "ts_stream_sliding_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("win_start", "event_type")
     },
       // epoch-aligned sliding membership, expanded flat: an event at t sits
@@ -1594,11 +1571,7 @@ object Io {
     // has proven against this fixture
     Entry("ts_stream_session_window", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, session_window}
-      val events = Tables.load(s, d, "events")
-        .select("ts", "user_id", "event_type", "value")
-      val dir = graft.Session.scratch(s, "stream_entry")
-      events.write.mode("overwrite").parquet(dir)
-      val agg = graft.streaming.Streams.fromParquet(s, dir, events.schema)
+      val agg = Tables.stream(s, d, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
         .agg(count("*").as("n_events"))
@@ -1607,7 +1580,6 @@ object Io {
       val sink = "ts_stream_sess_sink"
       graft.streaming.Streams.runToMemory(agg, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id", "session_start")
     },
       // identical semantics to ts_session_window (the streaming path must
@@ -1637,14 +1609,10 @@ object Io {
     // must equal the plain batch join, which is the DuckDB oracle.
     Entry("ts_stream_enrich", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
-      val events = Tables.load(s, d, "events")
-        .select("ts", "user_id", "event_type", "value")
-      val userStats = events.groupBy("user_id")
+      val userStats = Tables.load(s, d, "events").groupBy("user_id")
         .agg(count(lit(1)).as("u_events"),
           expr("SUM(CAST(value AS DECIMAL(18,2)))").as("u_value"))
-      val dir = graft.Session.scratch(s, "stream_entry")
-      events.write.mode("overwrite").parquet(dir)
-      val enriched = graft.streaming.Streams.fromParquet(s, dir, events.schema)
+      val enriched = Tables.stream(s, d, "events")
         .join(userStats, Seq("user_id"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -1653,7 +1621,6 @@ object Io {
       val sink = "ts_stream_enrich_sink"
       graft.streaming.Streams.runToMemory(enriched, sink,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("event_type")
     },
       """WITH u AS (SELECT user_id, count(*) AS u_events,
@@ -1672,19 +1639,13 @@ object Io {
     // file changes the aggregate and hash-mismatches the plain oracle
     Entry("ts_stream_file_sink", (s, d) => {
       import org.apache.spark.sql.functions.{count, expr, lit}
-      val events = Tables.load(s, d, "events")
-        .select("ts", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_file_sink"
       Tables.deleteRecursively(new java.io.File(root))
-      val inDir = graft.Session.scratch(s, "stream_entry")
-      events.write.mode("overwrite").parquet(inDir)
-      val purchases = graft.streaming.Streams
-        .fromParquet(s, inDir, events.schema)
+      val purchases = Tables.stream(s, d, "events")
         .where("event_type = 'purchase'")
         .select("ts", "user_id", "value")
       graft.streaming.Streams.runToParquet(purchases,
         s"$root/out", s"$root/ck")
-      Tables.deleteRecursively(new java.io.File(inDir))
       // out/ lives until the NEXT invocation's cleanup: the returned
       // frame reads it lazily at the caller's action
       s.read.parquet(s"$root/out")
@@ -2343,20 +2304,15 @@ object Io {
     // max are aggregation-order independent, so the check is exact).
     Entry("ts_stream_running_stats", (s, d) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
-      val evs = s.table("events")
+      val stream = Tables.stream(s, d, "events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_mgs")
-      evs.write.mode("overwrite").parquet(dir)
-      val stream = s.readStream.schema(evs.schema).parquet(dir)
       import s.implicits._
       val updates = graft.streaming.Streams.runningUserStats(
         stream.as[graft.streaming.Streams.Event])
       val sink = "ts_stream_mgs_sink"
       graft.streaming.Streams.runToMemory(updates.toDF(), sink,
         org.apache.spark.sql.streaming.OutputMode.Update())
-      Tables.deleteRecursively(new java.io.File(dir))
       s.table(sink).orderBy("user_id")
     },
       // one drained micro-batch => one cumulative update per user; count

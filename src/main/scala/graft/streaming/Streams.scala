@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface: the same event-analytics transforms the
@@ -39,10 +39,18 @@ object Streams {
   /** File-source stream: treat a parquet path (file, directory or glob) as
     * an unbounded source — the deployment shape where new corpus files
     * land continuously (`readStream` needs the schema up front; inference
-    * would scan the directory).
+    * would scan the directory). A plain file path is read as the one-file
+    * glob `<parent>/{<file>}`: the file source passes a non-glob path on
+    * as `basePath`, which must be a directory, and fails at the first
+    * trigger otherwise.
     */
-  def fromParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
+  def fromParquet(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val isFile = scala.util.Try(fs.getFileStatus(p).isFile).getOrElse(false)
+    spark.readStream.schema(schema)
+      .parquet(if (isFile) s"${p.getParent}/{${p.getName}}" else path)
+  }
 
   /** Tumbling event-time window counts with a watermark. Works identically
     * on a batch DataFrame (watermark is a no-op there) — the streaming
@@ -760,8 +768,8 @@ object Streams {
         OutputMode.Update())
   }
 
-  /** State-partition sizing for the bounded replays (see runToMemory
-    * scaladoc): every stateful operator runs one state store
+  /** State-partition sizing for the bounded replays (see [[drain]]):
+    * every stateful operator runs one state store
     * (open/commit) per shuffle partition per micro-batch, so partitions
     * are sized to state VOLUME, not to the session's scan parallelism.
     * 2 after the r16 sweep over a 10-entry replay subset at sf0.1
@@ -773,6 +781,36 @@ object Streams {
     */
   private val streamShufflePartitions = "2"
 
+  /** Start `df`'s query with `start`, block until the source drains, stop
+    * it. The query runs with [[streamShufflePartitions]] shuffle
+    * partitions, sized to state volume as a real deployment sizes each
+    * streaming job, and the session's value is restored after. Spark
+    * records the count in the query's checkpoint, so a query resumed from
+    * one keeps the count of its first run.
+    */
+  private def drain(df: DataFrame)
+                   (start: DataStreamWriter[Row] => StreamingQuery): Unit = {
+    val conf = df.sparkSession.conf
+    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
+    try {
+      val q = start(df.writeStream)
+      try {
+        q.processAllAvailable()
+        // opt-in batch timing breakdown (SPARK_GRAFT_STREAM_DEBUG=1):
+        // per-batch durationMs components from the progress log — the
+        // measurement view the r16 optimization pass used to see where
+        // replay seconds go (planning vs state commit vs sink)
+        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
+          q.recentProgress.foreach { p =>
+            System.err.println(s"[stream-debug] ${Option(q.name).getOrElse(q.id)} " +
+              s"batch=${p.batchId} rows=${p.numInputRows} durations=${p.durationMs}")
+          }
+      }
+      finally q.stop()
+    } finally conf.set("spark.sql.shuffle.partitions", prevShuffle)
+  }
+
   /** Drive any of the above to an in-memory table and block until the
     * source drains — the test/demo harness path.
     */
@@ -783,58 +821,20 @@ object Streams {
     // long-lived session (Verify loops, Bench, Explain) never accumulate
     // result tables in driver memory
     df.sparkSession.catalog.dropTempView(name)
-    // Size state partitions to state volume: every stateful operator runs
-    // one state store (open/commit/fsync) per shuffle partition per
-    // micro-batch, so the session's scan-sized default (32) pays 32×
-    // store overhead for kilobytes of replay state. 2 suits the bounded
-    // replays and is the same sizing call a real deployment makes per
-    // streaming job; a fresh query starts from a fresh temp checkpoint
-    // each run, so rescaling between invocations is safe.
-    val conf = df.sparkSession.conf
-    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
-      try {
-        q.processAllAvailable()
-        // opt-in batch timing breakdown (SPARK_GRAFT_STREAM_DEBUG=1):
-        // per-batch durationMs components from the progress log — the
-        // measurement view the r16 optimization pass used to see where
-        // replay seconds go (planning vs state commit vs sink)
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream-debug] $name batch=${p.batchId} " +
-              s"rows=${p.numInputRows} durations=${p.durationMs}")
-          }
-      }
-      finally q.stop()
-    } finally conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    drain(df)(_.format("memory").queryName(name).outputMode(mode).start())
   }
 
   /** Drive a stream through a foreachBatch sink and block until the
     * source drains — the MERGE/upsert deployment shape: each micro-batch
     * runs arbitrary batch logic (join against the serving table, rewrite
-    * it) with the batch id for idempotence. Same state-partition sizing
-    * rationale as [[runToMemory]].
+    * it) with the batch id for idempotence.
     */
   def runForeachBatch(df: DataFrame, checkpointDir: String)
-                     (fn: (DataFrame, Long) => Unit): Unit = {
-    val conf = df.sparkSession.conf
-    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
-      val q = df.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          fn(b.toDF(), id)
-        }
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+                     (fn: (DataFrame, Long) => Unit): Unit =
+    drain(df)(_.option("checkpointLocation", checkpointDir)
+      .foreachBatch { (b: Dataset[Row], id: Long) => fn(b.toDF(), id) }
+      .outputMode(OutputMode.Append())
+      .start())
 
   /** Append-mode parquet FILE sink: exactly-once landing via the sink's
     * `_spark_metadata` commit log — a batch read of `outDir` sees only
@@ -842,22 +842,13 @@ object Streams {
     * invisible. This is the landing path a continuous ingest uses at
     * scale; `checkpointDir` carries source offsets + the sink log and
     * must outlive the query for resume (callers here replay bounded
-    * input, so they own both dirs' lifecycle). Same state-partition
-    * sizing rationale as [[runToMemory]].
+    * input, so they own both dirs' lifecycle).
     */
   def runToParquet(df: DataFrame, outDir: String,
-                   checkpointDir: String): Unit = {
-    val conf = df.sparkSession.conf
-    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
-      val q = df.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+                   checkpointDir: String): Unit =
+    drain(df)(_.format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .start())
 }

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 
 /** Every file graft writes lands under the session's run root: the Io
-  * entries' files (`Io.base`), entry-local replay staging and managed
+  * entries' files (`Io.base`), streaming replays' checkpoints and managed
   * (saveAsTable) tables add nothing to `java.io.tmpdir` outside it.
   */
 class RunRootSpec extends SparkSpec {
@@ -51,7 +51,7 @@ class RunRootSpec extends SparkSpec {
     Seq(
       "ts_stream_file_sink",  // file sink + checkpoint under Io.base
       "ts_stream_commit_log", // Arrow log + checkpoint under Io.base
-      "ts_stream_window_agg", // entry-local staging, memory sink
+      "ts_stream_window_agg", // streams the fixture file, memory sink
       "bucketed_join"         // saveAsTable into the warehouse
     ).foreach(n => assert(SparkEntry.queries(n)(spark, sfSmoke).count() > 0, n))
     val touched = snapshot(root).filter { case (p, m) => !before.get(p).contains(m) }.keys

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import graft.streaming.Streams
 import graft.streaming.Streams.Event
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -69,20 +71,72 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source stream over the events fixture equals the batch result") {
-    Tables.register(spark, sfSmoke)
-    val batchEvents = spark.table("events")
-      .select("ts", "user_id", "event_type", "value")
-    // stage the fixture as a "landing directory" the stream tails
-    val dir = Session.scratch(spark, "stream")
-    batchEvents.write.mode("overwrite").parquet(dir)
-    val stream = Streams.fromParquet(spark, dir, batchEvents.schema)
+    val stream = Tables.stream(spark, sfSmoke, "events")
     Streams.runToMemory(
       Streams.windowedCounts(stream), "evt_stream_agg", OutputMode.Complete())
     val streamed = spark.table("evt_stream_agg")
       .orderBy("window_start", "event_type").collect().toSeq
-    val batch = Streams.windowedCounts(batchEvents)
+    val batch = Streams.windowedCounts(Tables.load(spark, sfSmoke, "events"))
       .orderBy("window_start", "event_type").collect().toSeq
     assert(streamed.nonEmpty && streamed == batch)
+  }
+
+  /** Spark jobs `body` launches on this thread: its job group's starts,
+    * read once a later marker job's start shows the listener bus has
+    * delivered everything before it.
+    */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => started.incrementAndGet()
+          case g if g == s"$group-marker" => marked.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      spark.range(1).collect()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.stream drains to the rows and schema of Tables.load, with no extra job") {
+    val load = Tables.load(spark, sfSmoke, "events")
+    Streams.runToMemory(Tables.stream(spark, sfSmoke, "events"),
+      "events_stream_rows", OutputMode.Append())
+    val streamed = spark.table("events_stream_rows")
+    assert(streamed.schema == load.schema)
+    assert(streamed.count() == load.count() && load.count() > 0)
+    assert(streamed.exceptAll(load).isEmpty && load.exceptAll(streamed).isEmpty)
+    // stream first: a cache warmed by the load could only flatter it
+    val streamJobs = jobsLaunchedBy(Tables.stream(spark, sfSmoke, "events"))
+    val loadJobs = jobsLaunchedBy(Tables.load(spark, sfSmoke, "events"))
+    assert(streamJobs <= loadJobs, s"Tables.stream: $streamJobs jobs, Tables.load: $loadJobs")
+  }
+
+  test("a repeated streaming entry compiles no generated code") {
+    // each StreamingQuery runs in a cloned session; with artifact
+    // isolation on, each clone's tasks load generated classes through a
+    // fresh class loader, the codegen cache misses and every run
+    // recompiles (Session.local turns isolation off)
+    val run = SparkEntry.queries("ts_stream_window_agg")
+    assert(run(spark, sfSmoke).collect().nonEmpty)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(spark, sfSmoke).collect().nonEmpty)
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+    assert(recompiled == 0, s"the second run compiled $recompiled classes")
   }
 
   test("flatMapGroupsWithState emits only when the running max changes") {
