@@ -125,8 +125,8 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val names =
-      if (args.length > 2) args.drop(2).toSeq else defaultQueries
+    val selected = SparkEntry.select(
+      if (args.length > 2) args.drop(2).toSeq else defaultQueries)
     val spark = Session.local("graft-scale-bench")
     // the staged replica tree (1.7 GB at factor 100) goes with the run
     // root at stop: leaving it behind churned the page cache and inflated
@@ -139,12 +139,11 @@ object ScaleBench {
       // clock: blocks left by PRIOR queries are suite pressure, not this
       // query's cost — the r13 factor-100 run timed tpch_q18 at 77.9 s
       // under 32 queries' accumulated state vs 10.4 s clean
-      def run(q: String): Double = Shared.scope(spark) {
-        time(SparkEntry.queries(q)(spark, out)
-          .write.mode("overwrite").format("noop").save())
+      def run(e: graft.queries.Entry): Double = Shared.scope(spark) {
+        time(e.run(spark, out).write.mode("overwrite").format("noop").save())
       }
-      names.foreach(run) // warm every plan off the clock
-      val timed = names.map(q => s""""$q":${Fmt.sec(run(q))}""")
+      selected.foreach(run) // warm every plan off the clock
+      val timed = selected.map(e => s""""${e.name}":${Fmt.sec(run(e))}""")
       val rows = spark.read.parquet(s"$out/lineitem.parquet").count()
       val docRows = spark.read.parquet(s"$out/documents.parquet").count()
       println(s"""{"factor":$factor,"lineitem_rows":$rows,"document_rows":$docRows,""" +

@@ -8,7 +8,7 @@ import graft.queries._
   * `entries` is every declared [[graft.queries.Entry]]: the operators from
   * SURVEY.md §2, the LLM-pipeline extension operators (graft.llm) and the
   * source/sink/session surface (Io). `queries` maps each name to its
-  * (spark, sfDir) => DataFrame; `oracleSql` maps it to the DuckDB SQL of the
+  * [[graft.queries.Entry.run]]; `oracleSql` maps it to the DuckDB SQL of the
   * driver's differential check.
   */
 object SparkEntry {
@@ -28,8 +28,20 @@ object SparkEntry {
     Tpch.entries ++ Windows.entries ++ Relational.entries ++
       Llm.entries ++ Io.entries ++ Ops.entries)
 
+  private val byName: Map[String, Entry] = entries.map(e => e.name -> e).toMap
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    entries.map(e => e.name -> e.run).toMap
+    byName.map { case (n, e) => n -> (e.run _) }
+
+  /** The entries a main runs: the named ones in the order given, or every
+    * entry when `names` is empty. Fails, naming each unknown name, before
+    * the main starts a session or stages a fixture.
+    */
+  def select(names: Seq[String]): Seq[Entry] = {
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    if (names.isEmpty) entries else names.distinct.map(byName)
+  }
 
   val oracleSql: Map[String, String] = entries.map(e => e.name -> e.oracle).toMap
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Fixture-table catalog: registers every parquet table under a scale-factor
   * directory as a temp view, mirroring the reference's `register_parquet`
   * (reference `src/context.rs:57-67`) and its TPC-H harness table loop
-  * (reference `tpch/tpcbench.py:46-55`).
+  * (reference `tpch/tpcbench.py:46-55`). [[graft.queries.Entry.run]] is
+  * the one caller on the query path: entry bodies only name the views.
   *
   * Scale note: the views are lazy, but registering infers each table's
   * schema, one Spark job per table. Filters/projections in queries reach
@@ -57,10 +58,10 @@ object Tables {
       case _ => df
     }
 
-  // Registration is idempotent per (session, dir): queries call register
-  // defensively, but within one Verify/Bench session only the first call
-  // reads footers / touches the catalog. At 100 TB a directory listing per
-  // query is a real driver cost; this caps it at one per session.
+  // Registration is idempotent per (session, dir): Entry.run calls it
+  // before every body, but within one Verify/Bench session only the first
+  // call reads footers / touches the catalog. At 100 TB a directory listing
+  // per query is a real driver cost; this caps it at one per session.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())

@@ -27,9 +27,9 @@ object TwsProbe {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val queries =
+    val queries = SparkEntry.select(
       if (args.length > 2) args.drop(2).toSeq
-      else Seq("ts_stream_topk", "ts_stream_hll", "ts_stream_bitmap_distinct")
+      else Seq("ts_stream_topk", "ts_stream_hll", "ts_stream_bitmap_distinct"))
     val spark = Session.local("graft-tws-probe")
     val out = Session.scratch(spark, s"twsprobe_x$factor")
     val P = "spark.sql.streaming.stateStore.rocksdb."
@@ -45,9 +45,8 @@ object TwsProbe {
         P + "maxWriteBufferNumber" -> "4")))
     try {
       val tStage = Bench.time(ScaleBench.stage(spark, src, out, factor))
-      def run(q: String): Double = Shared.scope(spark) {
-        Bench.time(SparkEntry.queries(q)(spark, out)
-          .write.mode("overwrite").format("noop").save())
+      def run(q: graft.queries.Entry): Double = Shared.scope(spark) {
+        Bench.time(q.run(spark, out).write.mode("overwrite").format("noop").save())
       }
       queries.foreach(run) // warm codegen/JIT + page cache off the clock
       val items = for ((vn, confs) <- variants; q <- queries) yield {
@@ -55,7 +54,7 @@ object TwsProbe {
         val t =
           try run(q)
           finally confs.keys.foreach(spark.conf.unset)
-        s""""${q}__$vn":${Fmt.sec(t)}"""
+        s""""${q.name}__$vn":${Fmt.sec(t)}"""
       }
       println(s"""{"factor":$factor,"stage_sec":${Fmt.sec(tStage, digits = 1)},""" +
         items.mkString(",") + "}")

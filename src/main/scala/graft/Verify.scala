@@ -20,13 +20,8 @@ object Verify {
     // optional trailing args: run a SUBSET of queries (r16: the full dump
     // is ~35 min at sf0.01 — a per-change correctness loop needs the
     // same subset support Bench has). The driver calls with 2 args and
-    // gets the full dump, unchanged. Unknown names fail loudly.
-    val names = args.drop(2)
-    val missing = names.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
-    val selected =
-      if (names.isEmpty) SparkEntry.entries
-      else SparkEntry.entries.filter(e => names.contains(e.name))
+    // gets the full dump, unchanged.
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = Session.local("graft-verify")
     Tables.register(spark, sfDir)
     new java.io.File(outDir).mkdirs()

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * `binary` columns with typed metadata, and run decode / feature-extract
-  * as a *batched per-partition* operator — the shape a real decoder
+  * as a *per-partition* operator — the shape a real decoder
   * (libjpeg / ffmpeg via JNI, or a Python worker via Arrow batches) plugs
   * into. Extension surface beyond the reference engine (SURVEY.md §7
   * Phase 3).
   *
   * IMAGE decode is REAL: [[decodeImages]]/[[resizeImages]] run actual PNG
   * bytes through `javax.imageio` (the JDK's built-in PNG/JPEG/GIF/BMP
-  * codecs — no external library needed) inside the batched
+  * codecs — no external library needed) inside
   * `mapPartitions`, and the fixture wiring synthesizes deterministic PNGs
   * whose geometry and pixels follow fixed integer formulas of `doc_id`
   * ([[ImageSynth]]), so a SQL oracle can recompute the decoded stats
@@ -39,13 +39,12 @@ import org.apache.spark.sql.functions._
   * order cannot hash-match. COMPRESSED video (H.264 etc.) stays
   * env-bound — no codec in the JDK or this container — which is what
   * [[FakeDecoder]] still stands in for: the generic opaque-payload
-  * featurizer whose batching/schema a JNI/ffmpeg decoder would slot
-  * into unchanged.
+  * featurizer whose schema a JNI/ffmpeg decoder would slot into
+  * unchanged.
   *
   * 100 TB design: decode runs inside `mapPartitions` over whatever
   * partitioning the scan produced — no shuffle, no driver involvement,
-  * batch-at-a-time memory footprint (`batchSize` payloads held at once,
-  * matching how GPU/codec batching works).
+  * one payload decoded at a time per task.
   */
 object Multimodal {
 
@@ -137,24 +136,21 @@ object Multimodal {
   }
 
   /** REAL image decode: each partition's PNG payloads run through
-    * `javax.imageio` in `batchSize` groups (the unit a GPU/codec batch
-    * call would take); geometry and per-channel pixel sums come from the
-    * decoded raster, not from any metadata. Corrupt payloads fail loudly
-    * — silently skipping rows would make a decode error look like a
-    * filter.
+    * `javax.imageio` one at a time; geometry and per-channel pixel sums
+    * come from the decoded raster, not from any metadata. Corrupt
+    * payloads fail loudly — silently skipping rows would make a decode
+    * error look like a filter.
     */
-  def decodeImages(images: Dataset[ImageBlob], batchSize: Int = 64): Dataset[DecodedImage] = {
+  def decodeImages(images: Dataset[ImageBlob]): Dataset[DecodedImage] = {
     val spark = images.sparkSession
     import spark.implicits._
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
-          if (img == null)
-            throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
-          imageStats(b.doc_id, img)
-        }
+      it.map { b =>
+        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
+        if (img == null)
+          throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
+        imageStats(b.doc_id, img)
       }
     }
   }
@@ -165,37 +161,34 @@ object Multimodal {
     * exact in integers, so an oracle can replay it). Resampling reads the
     * REAL decoded raster; stats are of the resized image.
     */
-  def resizeImages(images: Dataset[ImageBlob], maxSide: Int,
-                   batchSize: Int = 64): Dataset[DecodedImage] = {
+  def resizeImages(images: Dataset[ImageBlob], maxSide: Int): Dataset[DecodedImage] = {
     require(maxSide >= 1, "maxSide >= 1")
     val spark = images.sparkSession
     import spark.implicits._
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { blob =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob.png))
-          if (img == null)
-            throw new IllegalArgumentException(s"undecodable image payload for doc_id=${blob.doc_id}")
-          val (w, h) = (img.getWidth, img.getHeight)
-          val longSide = math.max(w, h)
-          if (longSide <= maxSide) imageStats(blob.doc_id, img)
-          else {
-            val w2 = math.max(1, w * maxSide / longSide)
-            val h2 = math.max(1, h * maxSide / longSide)
-            val out = new java.awt.image.BufferedImage(
-              w2, h2, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < h2) {
-              var x = 0
-              while (x < w2) {
-                out.setRGB(x, y, img.getRGB(x * w / w2, y * h / h2))
-                x += 1
-              }
-              y += 1
+      it.map { blob =>
+        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob.png))
+        if (img == null)
+          throw new IllegalArgumentException(s"undecodable image payload for doc_id=${blob.doc_id}")
+        val (w, h) = (img.getWidth, img.getHeight)
+        val longSide = math.max(w, h)
+        if (longSide <= maxSide) imageStats(blob.doc_id, img)
+        else {
+          val w2 = math.max(1, w * maxSide / longSide)
+          val h2 = math.max(1, h * maxSide / longSide)
+          val out = new java.awt.image.BufferedImage(
+            w2, h2, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          var y = 0
+          while (y < h2) {
+            var x = 0
+            while (x < w2) {
+              out.setRGB(x, y, img.getRGB(x * w / w2, y * h / h2))
+              x += 1
             }
-            imageStats(blob.doc_id, out)
+            y += 1
           }
+          imageStats(blob.doc_id, out)
         }
       }
     }
@@ -217,33 +210,31 @@ object Multimodal {
     * perceptual near-dup image join is the same LOSSLESS banded
     * equi-join the text simhash rides, never an all-pairs scan.
     */
-  def dhashImages(images: Dataset[ImageBlob], batchSize: Int = 64): Dataset[ImageHash] = {
+  def dhashImages(images: Dataset[ImageBlob]): Dataset[ImageHash] = {
     val spark = images.sparkSession
     import spark.implicits._
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
-          if (img == null)
-            throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
-          val (w, h) = (img.getWidth, img.getHeight)
-          def luma(x: Int, y: Int): Int = {
-            val v = img.getRGB(x * w / 11, y * h / 6)
-            299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
-          }
-          var hash = 0L
-          var y = 0
-          while (y < 6) {
-            var x = 0
-            while (x < 10) {
-              if (luma(x + 1, y) > luma(x, y)) hash |= 1L << (y * 10 + x)
-              x += 1
-            }
-            y += 1
-          }
-          ImageHash(b.doc_id, hash)
+      it.map { b =>
+        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
+        if (img == null)
+          throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
+        val (w, h) = (img.getWidth, img.getHeight)
+        def luma(x: Int, y: Int): Int = {
+          val v = img.getRGB(x * w / 11, y * h / 6)
+          299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
         }
+        var hash = 0L
+        var y = 0
+        while (y < 6) {
+          var x = 0
+          while (x < 10) {
+            if (luma(x + 1, y) > luma(x, y)) hash |= 1L << (y * 10 + x)
+            x += 1
+          }
+          y += 1
+        }
+        ImageHash(b.doc_id, hash)
       }
     }
   }
@@ -285,7 +276,7 @@ object Multimodal {
     * is the raw integer luma mass. Map-only over the decoded batch —
     * embarrassingly parallel at any corpus size.
     */
-  def phashImages(images: Dataset[ImageBlob], batchSize: Int = 64): Dataset[ImagePhash] = {
+  def phashImages(images: Dataset[ImageBlob]): Dataset[ImagePhash] = {
     val spark = images.sparkSession
     import spark.implicits._
     val n = PhashBasis.N
@@ -293,66 +284,64 @@ object Multimodal {
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       val c = PhashBasis.c
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
-          if (img == null)
-            throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
-          val (w, h) = (img.getWidth, img.getHeight)
-          val lum = Array.ofDim[Int](n, n)
-          var dc = 0L
-          var y = 0
-          while (y < n) {
-            var x = 0
-            while (x < n) {
-              val v = img.getRGB(x * w / n, y * h / n)
-              val l = 299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
-              lum(y)(x) = l
-              dc += l
-              x += 1
-            }
-            y += 1
+      it.map { b =>
+        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b.png))
+        if (img == null)
+          throw new IllegalArgumentException(s"undecodable image payload for doc_id=${b.doc_id}")
+        val (w, h) = (img.getWidth, img.getHeight)
+        val lum = Array.ofDim[Int](n, n)
+        var dc = 0L
+        var y = 0
+        while (y < n) {
+          var x = 0
+          while (x < n) {
+            val v = img.getRGB(x * w / n, y * h / n)
+            val l = 299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
+            lum(y)(x) = l
+            dc += l
+            x += 1
           }
-          // separable DCT-II: row pass x -> u, then column pass y -> v;
-          // each sum folds in ascending pixel order (the oracle's
-          // list_reduce replays the identical sequence)
-          val rp = Array.ofDim[Double](k, n)
-          var u = 0
-          while (u < k) {
-            var yy = 0
-            while (yy < n) {
-              var a = 0.0
-              var x = 0
-              while (x < n) { a += lum(yy)(x) * c(x)(u); x += 1 }
-              rp(u)(yy) = a
-              yy += 1
-            }
-            u += 1
-          }
-          val acs = new Array[Double](k * k - 1)
-          u = 0
-          while (u < k) {
-            var v = 0
-            while (v < k) {
-              if (u != 0 || v != 0) {
-                var a = 0.0
-                var yy = 0
-                while (yy < n) { a += rp(u)(yy) * c(yy)(v); yy += 1 }
-                acs(u * k + v - 1) = a
-              }
-              v += 1
-            }
-            u += 1
-          }
-          val med = acs.sorted.apply((k * k - 1) / 2)
-          var hash = 0L
-          var i = 0
-          while (i < acs.length) {
-            if (acs(i) > med) hash |= 1L << i
-            i += 1
-          }
-          ImagePhash(b.doc_id, hash, dc)
+          y += 1
         }
+        // separable DCT-II: row pass x -> u, then column pass y -> v;
+        // each sum folds in ascending pixel order (the oracle's
+        // list_reduce replays the identical sequence)
+        val rp = Array.ofDim[Double](k, n)
+        var u = 0
+        while (u < k) {
+          var yy = 0
+          while (yy < n) {
+            var a = 0.0
+            var x = 0
+            while (x < n) { a += lum(yy)(x) * c(x)(u); x += 1 }
+            rp(u)(yy) = a
+            yy += 1
+          }
+          u += 1
+        }
+        val acs = new Array[Double](k * k - 1)
+        u = 0
+        while (u < k) {
+          var v = 0
+          while (v < k) {
+            if (u != 0 || v != 0) {
+              var a = 0.0
+              var yy = 0
+              while (yy < n) { a += rp(u)(yy) * c(yy)(v); yy += 1 }
+              acs(u * k + v - 1) = a
+            }
+            v += 1
+          }
+          u += 1
+        }
+        val med = acs.sorted.apply((k * k - 1) / 2)
+        var hash = 0L
+        var i = 0
+        while (i < acs.length) {
+          if (acs(i) > med) hash |= 1L << i
+          i += 1
+        }
+        ImagePhash(b.doc_id, hash, dc)
       }
     }
   }
@@ -416,7 +405,7 @@ object Multimodal {
     * argmax/max compare identical doubles. Map-only over the decoded
     * batch — embarrassingly parallel.
     */
-  def spectrogram(audio: Dataset[AudioBlob], batchSize: Int = 64): Dataset[SpectroStats] = {
+  def spectrogram(audio: Dataset[AudioBlob]): Dataset[SpectroStats] = {
     val spark = audio.sparkSession
     import spark.implicits._
     val frame = DftBasis.Frame
@@ -424,46 +413,44 @@ object Multimodal {
     audio.mapPartitions { it =>
       val cb = DftBasis.cos
       val sb = DftBasis.sin
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val bytes = WavCodec.decode(b.wav, b.doc_id)._2
-          val n = bytes.length / 2
-          val nFrames = (n + frame - 1) / frame
-          val dom = new Array[Long](bins)
-          var maxP = 0.0
-          var f = 0
-          while (f < nFrames) {
-            val re = new Array[Double](bins)
-            val im = new Array[Double](bins)
-            val start = f * frame
-            val end = math.min(n, start + frame)
-            var i = start
-            while (i < end) {
-              val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
-              val idx = i - start
-              var k = 0
-              while (k < bins) {
-                re(k) += s * cb(k)(idx)
-                im(k) += s * sb(k)(idx)
-                k += 1
-              }
-              i += 1
-            }
-            var best = -1.0
-            var bestK = 0
+      it.map { b =>
+        val bytes = WavCodec.decode(b.wav, b.doc_id)._2
+        val n = bytes.length / 2
+        val nFrames = (n + frame - 1) / frame
+        val dom = new Array[Long](bins)
+        var maxP = 0.0
+        var f = 0
+        while (f < nFrames) {
+          val re = new Array[Double](bins)
+          val im = new Array[Double](bins)
+          val start = f * frame
+          val end = math.min(n, start + frame)
+          var i = start
+          while (i < end) {
+            val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
+            val idx = i - start
             var k = 0
             while (k < bins) {
-              val p = re(k) * re(k) + im(k) * im(k)
-              if (p > best) { best = p; bestK = k }
-              if (p > maxP) maxP = p
+              re(k) += s * cb(k)(idx)
+              im(k) += s * sb(k)(idx)
               k += 1
             }
-            dom(bestK) += 1
-            f += 1
+            i += 1
           }
-          SpectroStats(b.doc_id, nFrames.toLong,
-            dom(0), dom(1), dom(2), dom(3), maxP)
+          var best = -1.0
+          var bestK = 0
+          var k = 0
+          while (k < bins) {
+            val p = re(k) * re(k) + im(k) * im(k)
+            if (p > best) { best = p; bestK = k }
+            if (p > maxP) maxP = p
+            k += 1
+          }
+          dom(bestK) += 1
+          f += 1
         }
+        SpectroStats(b.doc_id, nFrames.toLong,
+          dom(0), dom(1), dom(2), dom(3), maxP)
       }
     }
   }
@@ -593,36 +580,33 @@ object Multimodal {
   }
 
   /** REAL audio decode: each partition's WAV payloads parse through the
-    * spec-driven [[WavCodec]] RIFF walker in `batchSize` groups (output
+    * spec-driven [[WavCodec]] RIFF walker one at a time (output
     * test-pinned equal to the JDK `AudioSystem` decoder, which the
     * 32-way hot path avoids — see [[WavCodec]]); sample rate comes from
     * the parsed header, amplitude stats from the decoded PCM frames.
     * Non-PCM / non-mono / non-16-bit payloads and unparseable bytes fail
     * loudly — a decode error must never look like a filter.
     */
-  def decodeAudio(audio: Dataset[AudioBlob],
-                  batchSize: Int = 64): Dataset[DecodedAudio] = {
+  def decodeAudio(audio: Dataset[AudioBlob]): Dataset[DecodedAudio] = {
     val spark = audio.sparkSession
     import spark.implicits._
     audio.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val (rate, bytes) = WavCodec.decode(b.wav, b.doc_id)
-          val n = bytes.length / 2
-          var sum = 0L; var sabs = 0L; var energy = 0L; var peak = 0
-          var i = 0
-          while (i < n) {
-            val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
-            sum += s
-            val a = math.abs(s)
-            sabs += a
-            if (a > peak) peak = a
-            energy += s.toLong * s
-            i += 1
-          }
-          DecodedAudio(b.doc_id, rate, n.toLong,
-            sum, sabs, peak, energy)
+      it.map { b =>
+        val (rate, bytes) = WavCodec.decode(b.wav, b.doc_id)
+        val n = bytes.length / 2
+        var sum = 0L; var sabs = 0L; var energy = 0L; var peak = 0
+        var i = 0
+        while (i < n) {
+          val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
+          sum += s
+          val a = math.abs(s)
+          sabs += a
+          if (a > peak) peak = a
+          energy += s.toLong * s
+          i += 1
         }
+        DecodedAudio(b.doc_id, rate, n.toLong,
+          sum, sabs, peak, energy)
       }
     }
   }
@@ -640,32 +624,29 @@ object Multimodal {
     * through identical binning, so a wrong decode or bin boundary
     * cannot hash-match.
     */
-  def histogramImages(images: Dataset[ImageBlob],
-                      batchSize: Int = 64): Dataset[ImageHistBin] = {
+  def histogramImages(images: Dataset[ImageBlob]): Dataset[ImageHistBin] = {
     val spark = images.sparkSession
     import spark.implicits._
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { b =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(b.png))
-          if (img == null)
-            throw new IllegalArgumentException(
-              s"undecodable image payload for doc_id=${b.doc_id}")
-          val bins = new Array[Long](16)
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              bins(((img.getRGB(x, y) >> 16) & 0xff) / 16) += 1L
-              x += 1
-            }
-            y += 1
+      it.flatMap { b =>
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(b.png))
+        if (img == null)
+          throw new IllegalArgumentException(
+            s"undecodable image payload for doc_id=${b.doc_id}")
+        val bins = new Array[Long](16)
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) {
+            bins(((img.getRGB(x, y) >> 16) & 0xff) / 16) += 1L
+            x += 1
           }
-          bins.iterator.zipWithIndex.collect {
-            case (n, i) if n > 0 => ImageHistBin(b.doc_id, i, n)
-          }
+          y += 1
+        }
+        bins.iterator.zipWithIndex.collect {
+          case (n, i) if n > 0 => ImageHistBin(b.doc_id, i, n)
         }
       }
     }
@@ -689,39 +670,36 @@ object Multimodal {
     * decode path; run-length state is per-doc local.
     */
   def vadSegments(audio: Dataset[AudioBlob], frameLen: Int = 32,
-                  threshold: Int = 24576,
-                  batchSize: Int = 64): Dataset[VadStats] = {
+                  threshold: Int = 24576): Dataset[VadStats] = {
     require(frameLen >= 1 && threshold >= 0, "frameLen >= 1, threshold >= 0")
     val spark = audio.sparkSession
     import spark.implicits._
     audio.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val bytes = WavCodec.decode(b.wav, b.doc_id)._2
-          val n = bytes.length / 2
-          val nFrames = (n + frameLen - 1) / frameLen
-          var nActive = 0L; var nSeg = 0L; var maxRun = 0L; var run = 0L
-          var f = 0
-          while (f < nFrames) {
-            var peak = 0
-            var i = f * frameLen
-            val end = math.min(n, i + frameLen)
-            while (i < end) {
-              val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              i += 1
-            }
-            if (peak > threshold) {
-              nActive += 1
-              if (run == 0L) nSeg += 1
-              run += 1
-              if (run > maxRun) maxRun = run
-            } else run = 0L
-            f += 1
+      it.map { b =>
+        val bytes = WavCodec.decode(b.wav, b.doc_id)._2
+        val n = bytes.length / 2
+        val nFrames = (n + frameLen - 1) / frameLen
+        var nActive = 0L; var nSeg = 0L; var maxRun = 0L; var run = 0L
+        var f = 0
+        while (f < nFrames) {
+          var peak = 0
+          var i = f * frameLen
+          val end = math.min(n, i + frameLen)
+          while (i < end) {
+            val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
+            val a = math.abs(s)
+            if (a > peak) peak = a
+            i += 1
           }
-          VadStats(b.doc_id, nFrames.toLong, nActive, nSeg, maxRun)
+          if (peak > threshold) {
+            nActive += 1
+            if (run == 0L) nSeg += 1
+            run += 1
+            if (run > maxRun) maxRun = run
+          } else run = 0L
+          f += 1
         }
+        VadStats(b.doc_id, nFrames.toLong, nActive, nSeg, maxRun)
       }
     }
   }
@@ -836,15 +814,10 @@ object Multimodal {
     * loudly — a decode error must never look like a filter. Features:
     * exact per-channel sums + blue-plane inter-frame motion.
     */
-  def decodeVideo(video: Dataset[VideoBlob],
-                  batchSize: Int = 64): Dataset[DecodedVideo] = {
+  def decodeVideo(video: Dataset[VideoBlob]): Dataset[DecodedVideo] = {
     val spark = video.sparkSession
     import spark.implicits._
-    video.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { vb => decodeOneAvi(vb.doc_id, vb.avi) }
-      }
-    }
+    video.map(vb => decodeOneAvi(vb.doc_id, vb.avi))
   }
 
   /** The spec-driven RIFF walk shared by [[decodeVideo]] and
@@ -929,11 +902,11 @@ object Multimodal {
     * pipeline: map-only over the payload scan like every decode path
     * here, one row per boundary, no shuffle until the caller aggregates.
     */
-  def sceneCuts(video: Dataset[VideoBlob], cutMilliLumaPerPx: Long = 32000L,
-                batchSize: Int = 64): Dataset[SceneCut] = {
+  def sceneCuts(video: Dataset[VideoBlob],
+                cutMilliLumaPerPx: Long = 32000L): Dataset[SceneCut] = {
     val spark = video.sparkSession
     import spark.implicits._
-    video.mapPartitions(_.grouped(batchSize).flatMap(_.flatMap { vb =>
+    video.flatMap { vb =>
       val bytes = vb.avi
       val (width, height, stride, frames) = parseAvi(vb.doc_id, bytes)
       def lumas(base: Int): Array[Long] = {
@@ -963,7 +936,7 @@ object Multimodal {
         SceneCut(vb.doc_id, i + 1, sad,
           sad >= cutMilliLumaPerPx * width * height)
       }
-    }))
+    }
   }
 
   /** A typed multimodal record: opaque payload + metadata. */
@@ -996,7 +969,7 @@ object Multimodal {
     * only: the JDK has no video codecs and this container has no ffmpeg —
     * whereas IMAGE decode ([[decodeImages]]) and AUDIO decode
     * ([[decodeAudio]]) are real. Real deployment swaps `decodeOne` for
-    * the actual library call; everything around it (batching, schema,
+    * the actual library call; everything around it (schema,
     * partitioning) is unchanged.
     */
   object FakeDecoder {
@@ -1020,21 +993,14 @@ object Multimodal {
     }
   }
 
-  /** Batched partition-parallel pseudo-decode — the video stand-in path
-    * ([[FakeDecoder]]): groups each partition's rows into `batchSize`
-    * chunks (the unit a real codec/GPU call would take) and maps them
-    * through the decoder. Image and audio use the real codec paths,
-    * [[decodeImages]] / [[decodeAudio]].
+  /** Partition-parallel pseudo-decode — the video stand-in path
+    * ([[FakeDecoder]]): maps each row through the decoder. Image and
+    * audio use the real codec paths, [[decodeImages]] / [[decodeAudio]].
     */
-  def decode(blobs: Dataset[Blob], batchSize: Int = 64): Dataset[Decoded] = {
+  def decode(blobs: Dataset[Blob]): Dataset[Decoded] = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // a real decoder would process `batch` as one call here
-        batch.map(FakeDecoder.decodeOne)
-      }
-    }
+    blobs.map(FakeDecoder.decodeOne)
   }
 
   /** Deterministic "resize": rescale the decoded geometry to fit a
@@ -1080,55 +1046,52 @@ object Multimodal {
     * — a wrong decode, kernel sign, or boundary rule cannot hash-match.
     * Map-only over the decoded batch, embarrassingly parallel.
     */
-  def convolveImages(images: Dataset[ImageBlob], threshold: Long,
-                     batchSize: Int = 64): Dataset[ImageConv] = {
+  def convolveImages(images: Dataset[ImageBlob], threshold: Long): Dataset[ImageConv] = {
     val spark = images.sparkSession
     import spark.implicits._
     images.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(b.png))
-          if (img == null)
-            throw new IllegalArgumentException(
-              s"undecodable image payload for doc_id=${b.doc_id}")
-          val (w, h) = (img.getWidth, img.getHeight)
-          val lum = Array.ofDim[Int](h, w)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = img.getRGB(x, y)
-              lum(y)(x) =
-                299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
-              x += 1
-            }
-            y += 1
+      it.map { b =>
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(b.png))
+        if (img == null)
+          throw new IllegalArgumentException(
+            s"undecodable image payload for doc_id=${b.doc_id}")
+        val (w, h) = (img.getWidth, img.getHeight)
+        val lum = Array.ofDim[Int](h, w)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val v = img.getRGB(x, y)
+            lum(y)(x) =
+              299 * ((v >> 16) & 0xff) + 587 * ((v >> 8) & 0xff) + 114 * (v & 0xff)
+            x += 1
           }
-          var (nInt, nEdge, sGabs, sLap, sLap2) = (0L, 0L, 0L, 0L, 0L)
-          y = 1
-          while (y < h - 1) {
-            var x = 1
-            while (x < w - 1) {
-              val gx = (lum(y - 1)(x + 1) + 2 * lum(y)(x + 1) + lum(y + 1)(x + 1)) -
-                (lum(y - 1)(x - 1) + 2 * lum(y)(x - 1) + lum(y + 1)(x - 1))
-              val gy = (lum(y + 1)(x - 1) + 2 * lum(y + 1)(x) + lum(y + 1)(x + 1)) -
-                (lum(y - 1)(x - 1) + 2 * lum(y - 1)(x) + lum(y - 1)(x + 1))
-              val gabs = math.abs(gx).toLong + math.abs(gy).toLong
-              val lap = 4L * lum(y)(x) - lum(y)(x - 1) - lum(y)(x + 1) -
-                lum(y - 1)(x) - lum(y + 1)(x)
-              nInt += 1
-              if (gabs >= threshold) nEdge += 1
-              sGabs += gabs
-              sLap += lap
-              sLap2 += lap * lap
-              x += 1
-            }
-            y += 1
-          }
-          ImageConv(b.doc_id, w, h, nInt, nEdge, sGabs, sLap, sLap2)
+          y += 1
         }
+        var (nInt, nEdge, sGabs, sLap, sLap2) = (0L, 0L, 0L, 0L, 0L)
+        y = 1
+        while (y < h - 1) {
+          var x = 1
+          while (x < w - 1) {
+            val gx = (lum(y - 1)(x + 1) + 2 * lum(y)(x + 1) + lum(y + 1)(x + 1)) -
+              (lum(y - 1)(x - 1) + 2 * lum(y)(x - 1) + lum(y + 1)(x - 1))
+            val gy = (lum(y + 1)(x - 1) + 2 * lum(y + 1)(x) + lum(y + 1)(x + 1)) -
+              (lum(y - 1)(x - 1) + 2 * lum(y - 1)(x) + lum(y - 1)(x + 1))
+            val gabs = math.abs(gx).toLong + math.abs(gy).toLong
+            val lap = 4L * lum(y)(x) - lum(y)(x - 1) - lum(y)(x + 1) -
+              lum(y - 1)(x) - lum(y + 1)(x)
+            nInt += 1
+            if (gabs >= threshold) nEdge += 1
+            sGabs += gabs
+            sLap += lap
+            sLap2 += lap * lap
+            x += 1
+          }
+          y += 1
+        }
+        ImageConv(b.doc_id, w, h, nInt, nEdge, sGabs, sLap, sLap2)
       }
     }
   }
@@ -1151,36 +1114,33 @@ object Multimodal {
     * samples; the oracle replays the synth formula through the same
     * run/crossing rules (gaps-and-islands on the sample index).
     */
-  def audioQc(audio: Dataset[AudioBlob], clipAt: Int = 32000,
-              batchSize: Int = 64): Dataset[AudioQc] = {
+  def audioQc(audio: Dataset[AudioBlob], clipAt: Int = 32000): Dataset[AudioQc] = {
     val spark = audio.sparkSession
     import spark.implicits._
     audio.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { b =>
-          val (_, bytes) = WavCodec.decode(b.wav, b.doc_id)
-          val n = bytes.length / 2
-          var (nClip, nRuns, maxRun, nCross) = (0L, 0L, 0L, 0L)
-          var run = 0L
-          var prev = 0
-          var i = 0
-          while (i < n) {
-            val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
-            if (math.abs(s) >= clipAt) {
-              if (run == 0) nRuns += 1
-              run += 1
-              if (run > maxRun) maxRun = run
-              nClip += 1
-            } else run = 0
-            // crossing = strict sign change between consecutive samples
-            // (zero itself is non-negative — one fixed, replayable rule)
-            if (i > 0 && ((prev >= 0 && s < 0) || (prev < 0 && s >= 0)))
-              nCross += 1
-            prev = s
-            i += 1
-          }
-          AudioQc(b.doc_id, n.toLong, nClip, nRuns, maxRun, nCross)
+      it.map { b =>
+        val (_, bytes) = WavCodec.decode(b.wav, b.doc_id)
+        val n = bytes.length / 2
+        var (nClip, nRuns, maxRun, nCross) = (0L, 0L, 0L, 0L)
+        var run = 0L
+        var prev = 0
+        var i = 0
+        while (i < n) {
+          val s = ((bytes(i * 2) & 0xff) | (bytes(i * 2 + 1) << 8)).toShort.toInt
+          if (math.abs(s) >= clipAt) {
+            if (run == 0) nRuns += 1
+            run += 1
+            if (run > maxRun) maxRun = run
+            nClip += 1
+          } else run = 0
+          // crossing = strict sign change between consecutive samples
+          // (zero itself is non-negative — one fixed, replayable rule)
+          if (i > 0 && ((prev >= 0 && s < 0) || (prev < 0 && s >= 0)))
+            nCross += 1
+          prev = s
+          i += 1
         }
+        AudioQc(b.doc_id, n.toLong, nClip, nRuns, maxRun, nCross)
       }
     }
   }

@@ -8,9 +8,15 @@ import graft.Tables
   * plays, reference `src/util.rs:413-484`). Alias output columns
   * identically on both sides and end both with a total ORDER BY.
   *
-  * @param mutatesSession set when `run` reaches state shared by every query
-  *   of the session or its context, directly or through a helper: a SQL
-  *   conf (the `Streams.run*` helpers set `spark.sql.shuffle.partitions`,
+  * The body reads fixture tables by name only (`spark.table` or SQL):
+  * [[run]] registers the dir first, as the reference registers each table
+  * once on its `SessionContext` (reference `src/context.rs:57-67`). It
+  * uses the dir itself only for what it does not read as a table, such as
+  * [[graft.Tables.stream]].
+  *
+  * @param mutatesSession set when the body reaches state shared by every
+  *   query of the session or its context, directly or through a helper: a
+  *   SQL conf (the `Streams.run*` helpers set `spark.sql.shuffle.partitions`,
   *   `Io.withRocksDbProvider` the state store, `Compact` the scan-split
   *   confs), or a catalog table or function. `graft.Verify` runs such
   *   entries one at a time after the concurrent pool. Temp views with
@@ -19,18 +25,27 @@ import graft.Tables
   */
 final case class Entry(
     name: String,
-    run: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: String,
-    mutatesSession: Boolean = false)
+    mutatesSession: Boolean = false) {
+
+  /** The body over `dir`'s fixture tables: registers them first, a no-op
+    * when the session's views already point at `dir`.
+    */
+  def run(spark: SparkSession, dir: String): DataFrame = {
+    Tables.register(spark, dir); body(spark, dir)
+  }
+}
 
 object Entry {
 
   /** An entry that runs `text` in Spark and the same text in DuckDB. */
   def sql(name: String, text: String): Entry = sql(name, text, text)
 
-  /** An entry whose Spark and DuckDB spellings differ. */
+  /** An entry whose Spark and DuckDB spellings differ. `text` is built
+    * when the declaring object initializes, so every `val` it interpolates
+    * must be declared above that object's `entries`.
+    */
   def sql(name: String, text: String, oracle: String): Entry =
-    Entry(name, (spark, dir) => {
-      Tables.register(spark, dir); spark.sql(text)
-    }, oracle)
+    Entry(name, (spark, _) => spark.sql(text), oracle)
 }

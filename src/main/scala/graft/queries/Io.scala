@@ -118,10 +118,9 @@ object Io {
     * mtime order (60 s apart) fixes the replay order. Returns the landing
     * dir (caller deletes once the stream drains) and the staged schema.
     */
-  private def stageLateLanding(s: SparkSession, d: String)
+  private def stageLateLanding(s: SparkSession)
       : (String, org.apache.spark.sql.types.StructType) = {
     import org.apache.spark.sql.functions.{col, expr, lit}
-    Tables.register(s, d)
     val evs = s.table("events").select("ts", "event_id", "event_type", "value")
     val Array(h6, h12) = s.sql(
       """SELECT date_trunc('HOUR', max(ts)) - INTERVAL 6 HOUR,
@@ -237,10 +236,6 @@ object Io {
        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 7),
        |pc AS (SELECT cid FROM asg WHERE vec_id = 7)""".stripMargin
 
-  private def t(s: SparkSession, d: String, name: String): DataFrame = {
-    Tables.register(s, d); s.table(name)
-  }
-
   val entries: Seq[Entry] = Seq(
     // ---- sources / sinks -------------------------------------------------
     // dirty-ingest semantics: every c_custkey % 50 == 0 row lands with a
@@ -250,7 +245,7 @@ object Io {
     // before it can quarantine bad shards. The oracle recomputes both
     // populations from the fixture
     Entry("src_csv_malformed", (s, d) => {
-      val cust = t(s, d, "customer")
+      val cust = s.table("customer")
       val lines = cust.select(expr(
         "concat(CASE WHEN c_custkey % 50 = 0 THEN 'garbage' " +
           "ELSE CAST(c_custkey AS STRING) END, '|', c_mktsegment, '|', " +
@@ -285,7 +280,7 @@ object Io {
         |FROM customer GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
     Entry("src_csv_roundtrip", (s, d) => {
-      val orders = t(s, d, "orders")
+      val orders = s.table("orders")
       val p = s"${base(s, d)}/orders_csv"
       orders.repartition(4).write.mode("overwrite").option("header", "true").csv(p)
       s.read.schema(orders.schema).option("header", "true").csv(p)
@@ -334,7 +329,7 @@ object Io {
       FROM documents WHERE doc_id < 100 ORDER BY doc_id"""),
 
     Entry("src_ndjson_roundtrip", (s, d) => {
-      val customer = t(s, d, "customer")
+      val customer = s.table("customer")
       val p = s"${base(s, d)}/customer_json"
       customer.repartition(3).write.mode("overwrite").json(p)
       s.read.schema(customer.schema).json(p)
@@ -353,7 +348,7 @@ object Io {
     // two-phase-commit distributed write, multi-file scan, pruned read —
     // oracle over the original parquet proves value fidelity end to end
     Entry("src_arrow_roundtrip", (s, d) => {
-      val sup = t(s, d, "supplier").selectExpr(
+      val sup = s.table("supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey", "s_name",
         "CAST(s_nationkey AS BIGINT) AS s_nationkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
@@ -381,7 +376,7 @@ object Io {
     // whole corpus and ranks within the probe's cluster
     Entry("sink_ivf_partitioned", (s, d) => {
       import graft.llm.Ivf
-      val e = Tables.load(s, d, "embeddings")
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -441,7 +436,7 @@ object Io {
     // the probe, no NLJ anywhere — plan-gated in PlanShapeSpec
     Entry("llm_ivfpq_serving", (s, d) => {
       import graft.llm.{Ivf, Similarity}
-      val e = t(s, d, "embeddings")
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -500,7 +495,7 @@ object Io {
     // deployment publishes next to its latency
     Entry("llm_ivfpq_recall", (s, d) => {
       import graft.llm.{Ivf, Similarity}
-      val e = t(s, d, "embeddings")
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -563,7 +558,7 @@ object Io {
     // recall@5 against the exact full-corpus top-5 per nprobe
     Entry("llm_ivf_nprobe", (s, d) => {
       import graft.llm.{Ivf, Similarity}
-      val e = t(s, d, "embeddings")
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -633,16 +628,16 @@ object Io {
     Entry("src_federated_join", (s, d) => {
       val pArrow = s"${base(s, d)}/fed_supplier_arrow"
       val pAvro = s"${base(s, d)}/fed_nation_avro"
-      t(s, d, "supplier").selectExpr(
+      s.table("supplier").selectExpr(
           "CAST(s_suppkey AS BIGINT) AS s_suppkey",
           "CAST(s_nationkey AS BIGINT) AS s_nationkey")
         .write.format("graft.sources.ArrowIpcSource")
         .mode("overwrite").save(pArrow)
-      t(s, d, "nation").selectExpr(
+      s.table("nation").selectExpr(
           "CAST(n_nationkey AS BIGINT) AS n_nationkey", "n_name")
         .write.format("graft.sources.AvroSource")
         .mode("overwrite").save(pAvro)
-      t(s, d, "lineitem")
+      s.table("lineitem")
         .join(s.read.format("graft.sources.ArrowIpcSource").load(pArrow),
           expr("l_suppkey = s_suppkey"))
         .join(s.read.format("graft.sources.AvroSource").load(pAvro),
@@ -670,7 +665,7 @@ object Io {
     // pins its inputs with. The oracle recomputes each snapshot's
     // content from the base table: v1 = even keys, v2/latest = all
     Entry("src_arrow_time_travel", (s, d) => {
-      val sup = t(s, d, "supplier").selectExpr(
+      val sup = s.table("supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
       val p = s"${base(s, d)}/supplier_arrow_tt"
@@ -715,7 +710,7 @@ object Io {
     // original — a dropped/reordered/precision-damaged element cannot
     // hash-match
     Entry("src_arrow_vectors", (s, d) => {
-      val e = t(s, d, "embeddings")
+      val e = s.table("embeddings")
       val p = s"${base(s, d)}/embeddings_arrow"
       e.repartition(3).write.format("graft.sources.ArrowIpcSource")
         .mode("overwrite").save(p)
@@ -741,7 +736,7 @@ object Io {
     // library): two-phase-commit distributed write, multi-file scan,
     // field-pruned decode — oracle over the original parquet
     Entry("src_avro_roundtrip", (s, d) => {
-      val ord = t(s, d, "orders").selectExpr(
+      val ord = s.table("orders").selectExpr(
         "CAST(o_orderkey AS BIGINT) AS o_orderkey", "o_orderstatus",
         "CAST(o_totalprice AS DOUBLE) AS o_totalprice")
       val p = s"${base(s, d)}/orders_avro"
@@ -766,7 +761,7 @@ object Io {
     // read parallelism via repartition(n) at write time; splittable
     // codecs or parquet are the right call once shards exceed ~1 GB
     Entry("src_text_gzip", (s, d) => {
-      val lines = t(s, d, "documents")
+      val lines = s.table("documents")
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("n_chars"))
           .as("value"))
       val p = s"${base(s, d)}/docs_txt_gz"
@@ -791,7 +786,7 @@ object Io {
     // read-back must equal the parquet-side oracle, so a lossy write or a
     // mis-read row hash-mismatches
     Entry("src_orc_roundtrip", (s, d) => {
-      val part = t(s, d, "part")
+      val part = s.table("part")
       val p = s"${base(s, d)}/part_orc"
       part.repartition(3).write.mode("overwrite").orc(p)
       s.read.orc(p)
@@ -815,7 +810,7 @@ object Io {
     // whitespace survives. NULL text round-trips as an absent element →
     // both engines read it back through the same coalesce.
     Entry("src_xml_roundtrip", (s, d) => {
-      val docsDf = t(s, d, "documents")
+      val docsDf = s.table("documents")
       val p = s"${base(s, d)}/documents_xml"
       docsDf.repartition(3).write.mode("overwrite")
         .option("rowTag", "doc").format("xml").save(p)
@@ -877,7 +872,7 @@ object Io {
         |FROM lineitem""".stripMargin, mutatesSession = true),
 
     Entry("src_listing_dir", (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = s.table("lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
       val p = s"${base(s, d)}/lineitem_dir"
       li.repartition(6).write.mode("overwrite").parquet(p)
@@ -903,7 +898,7 @@ object Io {
     // either direction cannot hash-match
     Entry("src_nested_struct", (s, d) => {
       val p = s"${base(s, d)}/docs_nested"
-      t(s, d, "documents")
+      s.table("documents")
         .selectExpr("doc_id",
           "named_struct('lang', lang, 'n_chars', n_chars, 'src', source) AS meta",
           "array(source, lang) AS tags")
@@ -920,7 +915,7 @@ object Io {
         |FROM documents ORDER BY doc_id""".stripMargin),
 
     Entry("sink_parquet_partitioned", (s, d) => {
-      val orders = t(s, d, "orders")
+      val orders = s.table("orders")
       val p = s"${base(s, d)}/orders_by_status"
       orders.where("o_orderstatus = 'F'")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
@@ -943,13 +938,13 @@ object Io {
     // reading co-located buckets (BucketedJoinSpec pins the no-Exchange
     // plan; here the differential check proves the bucketed files carry
     // the right rows)
-    Entry("bucketed_join", (s, d) => {
+    Entry("bucketed_join", (s, _) => {
       // project to the join/agg columns before bucketing: a bucketed layout
       // exists to be read many times, and materializing columns no reader
       // needs just multiplies the one-off write cost (at 100 TB, the write
       // IS the expensive step — it must carry only what the joins consume)
-      val orders = t(s, d, "orders").select("o_custkey", "o_totalprice")
-      val cust = t(s, d, "customer").select("c_custkey", "c_mktsegment")
+      val orders = s.table("orders").select("o_custkey", "o_totalprice")
+      val cust = s.table("customer").select("c_custkey", "c_mktsegment")
       Tables.dropManaged(s, "b_orders")
       Tables.dropManaged(s, "b_customer")
       orders.write.mode("overwrite")
@@ -976,7 +971,7 @@ object Io {
     // from the original fixture, so a dropped generation, a misaligned
     // column, or default-filled-instead-of-NULL all hash-mismatch.
     Entry("src_merge_schema", (s, d) => {
-      val orders = t(s, d, "orders")
+      val orders = s.table("orders")
       val dir = s"${base(s, d)}/orders_evolved"
       orders.where("o_orderkey % 2 = 0")
         .select("o_orderkey", "o_totalprice")
@@ -1014,7 +1009,7 @@ object Io {
     // filtered read returns exactly the base table's rows
     Entry("sink_parquet_bloom", (s, d) => {
       val p = s"${base(s, d)}/lineitem_bloom"
-      t(s, d, "lineitem")
+      s.table("lineitem")
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
         .write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#l_orderkey", "true")
@@ -1039,7 +1034,7 @@ object Io {
     Entry("sink_compact_small_files", (s, d) => {
       val staged = s"${base(s, d)}/compact_in"
       val compacted = s"${base(s, d)}/compact_out"
-      t(s, d, "events").repartition(64)
+      s.table("events").repartition(64)
         .write.mode("overwrite").parquet(staged)
       graft.operators.Compact.parquetDir(s, staged, compacted,
         targetBytes = 64L * 1024 * 1024)
@@ -1063,9 +1058,9 @@ object Io {
     // interleave feeds some bucket's min/max, so one wrong bit anywhere
     // hash-mismatches; the per-file locality the layout buys is asserted
     // in LayoutOperatorSpec.
-    Entry("layout_zorder", (s, d) => {
+    Entry("layout_zorder", (s, _) => {
       import graft.operators.ZOrder
-      val li = t(s, d, "lineitem").select("l_partkey", "l_suppkey")
+      val li = s.table("lineitem").select("l_partkey", "l_suppkey")
         .withColumn("z", ZOrder.zvalue(col("l_partkey"), col("l_suppkey")))
       val zmax = li.agg(max("z").as("zmax"))
       li.crossJoin(broadcast(zmax))
@@ -1096,8 +1091,8 @@ object Io {
     // never an NLJ), per-touch credit is ONE division rounded to 6 and
     // summed on DECIMAL (order-free). The fractional-credit sibling of
     // ts_attribution's last-touch rule
-    Entry("ts_attribution_linear", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_attribution_linear", (s, _) => {
+      val ev = s.table("events")
       val touches = ev.where("event_type <> 'purchase'")
         .select(col("user_id").as("t_user"), col("ts").as("t_ts"),
           col("event_type").as("touch_type"))
@@ -1144,8 +1139,7 @@ object Io {
     // pair meets EXACTLY once (at the plain side's cell — no dedup
     // pass); residual = the exact integer centi-degree box. Never an
     // all-pairs NLJ: work ∝ points × 9 + per-cell density²
-    Entry("join_geo_box", (s, d) => {
-      Tables.register(s, d)
+    Entry("join_geo_box", (s, _) => {
       val pts = s.table("customer").selectExpr("c_custkey AS id",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000 AS lat_c",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10) AS BIGINT) % 36000 - 18000 AS lon_c")
@@ -1187,12 +1181,9 @@ object Io {
     // crossings odd. Candidates prefilter on the polygon bbox, then the
     // per-(point, polygon) crossing count is one grouped SUM over ≤
     // |edges| rows; the corpus never shuffles — both joins broadcast
-    Entry("join_geo_polygon", (s, d) => {
-      Tables.register(s, d)
-      s.sql(geoPolygonSql(
+    Entry.sql("join_geo_polygon", geoPolygonSql(
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10) AS BIGINT) % 36000 - 18000",
-        "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000"))
-    },
+        "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000"),
       // the flat box inequality join — a blocking bug (pair met twice or
       // missed at a cell edge) changes the multiset
       // identical ray-cast SQL, DuckDB md5→int idiom
@@ -1209,8 +1200,7 @@ object Io {
     // window partitions per point over ≤ per-cell-density² candidates.
     // The standard geo serving shape: candidates from blocking, exact
     // top-k inside
-    Entry("join_geo_knn", (s, d) => {
-      Tables.register(s, d)
+    Entry("join_geo_knn", (s, _) => {
       val pts = s.table("customer").selectExpr("c_custkey AS id",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000 AS lat_c",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10) AS BIGINT) % 36000 - 18000 AS lon_c")
@@ -1262,8 +1252,7 @@ object Io {
     // the ZOrder mask-table interleave, lon bit leading): synthesized
     // centi-degree points, 6-char cells, prefix-blocked aggregate (equal
     // prefixes = nearby cells — the spatial candidate generator)
-    Entry("fn_geohash", (s, d) => {
-      Tables.register(s, d)
+    Entry("fn_geohash", (s, _) => {
       val pts = s.table("customer").selectExpr("c_custkey",
         "(c_custkey * 7919) % 18000 - 9000 AS lat_c",
         "(c_custkey * 104729) % 36000 - 18000 AS lon_c")
@@ -1294,8 +1283,7 @@ object Io {
     // FUNCTION ... RETURN expr) and a TABLE function, both consumed by
     // one aggregate — the catalog-function surface; the optimizer
     // INLINES the bodies, so the oracle replays the inlined SQL
-    Entry("sql_udf", (s, d) => {
-      Tables.register(s, d)
+    Entry("sql_udf", (s, _) => {
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc(p DOUBLE, disc DOUBLE)
                RETURNS DECIMAL(26,4)
                RETURN CAST(p AS DECIMAL(12,2))
@@ -1327,9 +1315,9 @@ object Io {
     // seams, consecutive indexes always grid neighbors): the unrolled
     // state-machine walk as 10 chained codegen projections; bucket
     // min/max spans of BOTH keys mirror layout_zorder's pruning audit
-    Entry("layout_hilbert", (s, d) => {
+    Entry("layout_hilbert", (s, _) => {
       import graft.operators.Hilbert
-      val li = t(s, d, "lineitem")
+      val li = s.table("lineitem")
         .selectExpr("l_partkey % 1024 AS px", "l_orderkey % 1024 AS sy")
       val h = Hilbert.hilbertIndex(li, "px", "sy", bits = 10)
       val hmax = h.agg(max("h").as("hmax"))
@@ -1362,8 +1350,8 @@ object Io {
     }),
 
     // ---- partitioning surface -------------------------------------------
-    Entry("repartition_agg", (s, d) =>
-      t(s, d, "lineitem")
+    Entry("repartition_agg", (s, _) =>
+      s.table("lineitem")
         .repartition(16, col("l_orderkey"))
         .groupBy("l_linestatus")
         .agg(count("*").as("n_items"),
@@ -1378,9 +1366,9 @@ object Io {
     // unsalted join/agg — the oracle below computes the plain versions, so
     // a salt that loses or duplicates rows shows up as a hash mismatch
     // (round-3 ADVICE: Skew had only unit tests, no differential entry)
-    Entry("skew_salted_join", (s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_quantity"))
-      val ord = t(s, d, "orders")
+    Entry("skew_salted_join", (s, _) => {
+      val li = s.table("lineitem").select(col("l_orderkey"), col("l_quantity"))
+      val ord = s.table("orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
       graft.operators.Skew.saltedJoin(li, ord, "l_orderkey", salts = 8)
         .groupBy("o_orderstatus")
@@ -1393,10 +1381,10 @@ object Io {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
 
-    Entry("skew_salted_agg", (s, d) => {
+    Entry("skew_salted_agg", (s, _) => {
       // DECIMAL before the two-phase sum: double partials would re-add in
       // salt order and drift from the oracle's single exact sum
-      val li = t(s, d, "lineitem")
+      val li = s.table("lineitem")
         .select(col("l_returnflag"),
           col("l_quantity").cast("decimal(12,2)").as("qty"))
       graft.operators.Skew.saltedCountSum(li, "l_returnflag", "qty", salts = 8)
@@ -1409,8 +1397,7 @@ object Io {
         |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
 
     // ---- parameterized SQL ----------------------------------------------
-    Entry("param_sql", (s, d) => {
-      Tables.register(s, d)
+    Entry("param_sql", (s, _) => {
       s.sql(
         """SELECT o_orderpriority, COUNT(*) AS n
           |FROM orders
@@ -1426,8 +1413,7 @@ object Io {
     // Spark 4 session variables + dynamic SQL: DECLARE / SET VAR state
     // resolves both by name inside the statement and positionally through
     // EXECUTE IMMEDIATE ... USING; the oracle is the classic literal form
-    Entry("sql_session_vars", (s, d) => {
-      Tables.register(s, d)
+    Entry("sql_session_vars", (s, _) => {
       s.sql("DECLARE OR REPLACE VARIABLE qty_floor INT DEFAULT 0")
       s.sql("SET VAR qty_floor = 45")
       s.sql(
@@ -1446,9 +1432,7 @@ object Io {
     // from a subquery, WHILE loop, IF/ELSE branch): the script's control
     // flow runs on the driver, every statement inside is a full Catalyst
     // plan; the oracle recomputes the loop algebra in closed form
-    Entry("sql_scripting", (s, d) => {
-      Tables.register(s, d)
-      s.sql(
+    Entry.sql("sql_scripting",
         """BEGIN
           |  DECLARE n BIGINT DEFAULT 0;
           |  DECLARE acc BIGINT DEFAULT 0;
@@ -1467,8 +1451,7 @@ object Io {
           |           CAST(0 AS BIGINT) AS n_nations, CAST(-1 AS BIGINT) AS acc
           |    FROM region ORDER BY r_regionkey;
           |  END IF;
-          |END""".stripMargin)
-    },
+          |END""".stripMargin,
       // the loop algebra in closed form: acc = (0+1+2+3)·n = 6n
       """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name,
         |       CAST((SELECT count(*) FROM nation) AS BIGINT) AS n_nations,
@@ -1476,17 +1459,14 @@ object Io {
         |FROM region ORDER BY r_regionkey""".stripMargin),
 
     // ---- events time series ----------------------------------------------
-    Entry("ts_window_agg", (s, d) => {
-      Tables.register(s, d)
-      s.sql(
+    Entry.sql("ts_window_agg",
         """SELECT date_trunc('hour', ts) AS hour_ts, event_type,
           |       COUNT(*) AS n_events,
           |       COUNT(DISTINCT user_id) AS n_users,
           |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
           |FROM events
           |GROUP BY 1, 2
-          |ORDER BY hour_ts, event_type""".stripMargin)
-    },
+          |ORDER BY hour_ts, event_type""".stripMargin,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
         |       count(*) AS n_events,
         |       count(DISTINCT user_id) AS n_users,
@@ -1609,7 +1589,7 @@ object Io {
     // must equal the plain batch join, which is the DuckDB oracle.
     Entry("ts_stream_enrich", (s, d) => {
       import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
-      val userStats = Tables.load(s, d, "events").groupBy("user_id")
+      val userStats = s.table("events").groupBy("user_id")
         .agg(count(lit(1)).as("u_events"),
           expr("SUM(CAST(value AS DECIMAL(18,2)))").as("u_value"))
       val enriched = Tables.stream(s, d, "events")
@@ -1674,7 +1654,6 @@ object Io {
     // recovery semantics are pinned by the late-drop/timers entries).
     Entry("ts_stream_resume", (s, d) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -1725,7 +1704,7 @@ object Io {
     // md5-compares: one mangled quote or swallowed newline anywhere
     // hash-mismatches
     Entry("src_csv_quoted", (s, d) => {
-      val tricky = t(s, d, "part").where("p_partkey < 200")
+      val tricky = s.table("part").where("p_partkey < 200")
         .selectExpr("CAST(p_partkey AS BIGINT) AS k",
           "concat(p_name, ',', p_type) AS f_comma",
           "concat('\"', p_brand, '\"', ' quoted') AS f_quote",
@@ -1756,8 +1735,8 @@ object Io {
     // for each other's calendar), observed hours carrying real
     // aggregates and missing hours explicit zeros with a filled flag.
     // Integer hour ids, never raw timestamps, cross the output edge
-    Entry("ts_gap_fill_perkey", (s, d) => {
-      val ev = Tables.load(s, d, "events").where("user_id < 20")
+    Entry("ts_gap_fill_perkey", (s, _) => {
+      val ev = s.table("events").where("user_id < 20")
         .withColumn("hour", expr("unix_micros(ts) div 3600000000"))
       val slots = ev.groupBy("user_id")
         .agg(min("hour").as("mn"), max("hour").as("mx"))
@@ -1801,7 +1780,7 @@ object Io {
     // are invisible. The oracle recomputes each generation's membership
     // from the base table: green pins the offset-range file planning
     Entry("ts_stream_commit_log", (s, d) => {
-      val sup = t(s, d, "supplier").selectExpr(
+      val sup = s.table("supplier").selectExpr(
         "CAST(s_suppkey AS BIGINT) AS s_suppkey",
         "CAST(s_acctbal AS DOUBLE) AS s_acctbal")
       val p = s"${base(s, d)}/supplier_arrow_log"
@@ -1836,7 +1815,7 @@ object Io {
 
     Entry("ts_stream_upsert", (s, d) => {
       import org.apache.spark.sql.functions.expr
-      val events = Tables.load(s, d, "events")
+      val events = s.table("events")
         .select("event_id", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_upsert"
       Tables.deleteRecursively(new java.io.File(root))
@@ -1893,8 +1872,7 @@ object Io {
     // the CLAUDE.md trap), rows re-sort by (ts, event_id) inside each
     // batch. The drained count per user must equal the batch
     // regexp_count over the full sequence — the differential oracle.
-    Entry("ts_stream_pattern", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_pattern", (s, _) => {
       val evs = s.table("events")
         .select("ts", "event_id", "user_id", "event_type")
       val landing = graft.Session.scratch(s, "pattern_in")
@@ -1950,8 +1928,7 @@ object Io {
     // snapshots is the drained answer and the BATCH windows are the
     // differential oracle. Order-dependent state → TIME-sliced replay
     // quartiles (the CLAUDE.md trap), in-batch re-sort by (ts, event_id)
-    Entry("ts_stream_cusum", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_cusum", (s, _) => {
       val evs = s.table("events")
         .select("ts", "event_id", "event_type", "value")
       val landing = graft.Session.scratch(s, "cusum_in")
@@ -1996,7 +1973,7 @@ object Io {
       Relational.cusumDriftSql, mutatesSession = true),
 
     Entry("ts_stream_scd2", (s, d) => {
-      val events = Tables.load(s, d, "events")
+      val events = s.table("events")
         .select("event_id", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_scd2"
       Tables.deleteRecursively(new java.io.File(root))
@@ -2072,9 +2049,9 @@ object Io {
     // fixture's microsecond-random timestamps guarantee no window
     // boundary ever falls exactly ON a watermark, so strict-vs-inclusive
     // comparisons cannot diverge silently.
-    Entry("ts_stream_late_drop", (s, d) => {
+    Entry("ts_stream_late_drop", (s, _) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
-      val (landing, schema) = stageLateLanding(s, d)
+      val (landing, schema) = stageLateLanding(s)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
       val agg = stream.withWatermark("ts", "2 hours")
@@ -2134,9 +2111,9 @@ object Io {
     // each kept row with its batch number and replays the emission
     // history as a windowed cumulative sum — Update mode's entire
     // emission contract, value-checked.
-    Entry("ts_stream_update_emit", (s, d) => {
+    Entry("ts_stream_update_emit", (s, _) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
-      val (landing, schema) = stageLateLanding(s, d)
+      val (landing, schema) = stageLateLanding(s)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
       val agg = stream.withWatermark("ts", "2 hours")
@@ -2212,9 +2189,8 @@ object Io {
     // every row, batch 2's verbatim re-delivery is dropped via keyed
     // state. A broken dedup doubles every row and cannot hash-match the
     // oracle (the plain distinct selection of the fixture).
-    Entry("ts_stream_dedup", (s, d) => {
+    Entry("ts_stream_dedup", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events").select("ts", "event_id", "event_type", "value")
       val landing = graft.Session.scratch(s, "stream_dd")
       val t0 = System.currentTimeMillis() - 600000
@@ -2248,9 +2224,8 @@ object Io {
     // max — quiet users stay silent. The oracle recomputes both halves'
     // per-user count/max and the strict-improvement rule in SQL, so the
     // emitted multiset (including the silent users) is value-checked.
-    Entry("ts_stream_alerts", (s, d) => {
+    Entry("ts_stream_alerts", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2326,9 +2301,8 @@ object Io {
     // restored after), multi-trigger replay via maxFilesPerTrigger(1).
     // The LAST emission per user must equal the plain batch aggregate —
     // integer micro-unit sums, so state arithmetic crosses engines exactly
-    Entry("ts_stream_tws_totals", (s, d) => {
+    Entry("ts_stream_tws_totals", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2362,9 +2336,8 @@ object Io {
     // (user, trigger) = that batch's max value in micro-units; the
     // drained digest per user (n_batches / sum / max of per-batch maxes)
     // is recomputed by the oracle from the same % 3 split
-    Entry("ts_stream_tws_batchmax", (s, d) => {
+    Entry("ts_stream_tws_batchmax", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), expr("CAST(value AS DOUBLE)").as("value"))
@@ -2409,9 +2382,8 @@ object Io {
     // streaming user's totals must equal the aggregate over
     // history ∪ stream (users with history but no stream rows never
     // re-emit, so the oracle restricts to streaming users)
-    Entry("ts_stream_tws_initial", (s, d) => {
+    Entry("ts_stream_tws_initial", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2458,9 +2430,8 @@ object Io {
     // through the same RocksDB-backed v2 state layer; only touched types
     // re-emit per trigger, and the last emission per (user, type) must
     // equal the batch GROUP BY
-    Entry("ts_stream_tws_typecounts", (s, d) => {
+    Entry("ts_stream_tws_typecounts", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2491,8 +2462,7 @@ object Io {
     // the unordered repartition(3) replay converges to the batch
     // register pipeline (the differential oracle); estimate = the same
     // alpha*m^2 / harmonic division as llm_distinct_sketch
-    Entry("ts_stream_hll", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_hll", (s, _) => {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2554,8 +2524,7 @@ object Io {
     // unordered replay (and any duplicate delivery) converges and the
     // batch bit_or pipeline is the oracle. Both snapshot fields are
     // monotone → max picks the drained state
-    Entry("ts_stream_bitmap_distinct", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_bitmap_distinct", (s, _) => {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2596,8 +2565,7 @@ object Io {
     // groupBy + rank window is the oracle verbatim; ties break on
     // user_id so the ranking itself is deterministic. n_total is
     // strictly monotone per key → max_by picks the drained snapshot
-    Entry("ts_stream_topk", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_topk", (s, _) => {
       val evs = s.table("events")
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2641,8 +2609,7 @@ object Io {
     // the BATCH sketch SQL is the oracle verbatim; estimate arithmetic
     // is the identical all-integer interpolation. n_total is strictly
     // monotone per key → max_by picks the drained snapshot
-    Entry("ts_stream_quantile", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_stream_quantile", (s, _) => {
       val rows = s.table("orders").selectExpr("o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents")
       val dir = graft.Session.scratch(s, "stream_qsk")
@@ -2687,9 +2654,8 @@ object Io {
     // watermark (ms-floored global max ts - 2h delay) — 86 of 150
     // fixture users at sf0.01; the rest stay in state and emit
     // nothing. The oracle recomputes the expiry arithmetic per user
-    Entry("ts_stream_tws_timers", (s, d) => {
+    Entry("ts_stream_tws_timers", (s, _) => {
       import org.apache.spark.sql.functions.col
-      Tables.register(s, d)
       val evs = s.table("events")
         .select(col("user_id"), col("ts"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
@@ -2817,9 +2783,7 @@ object Io {
         |SELECT * FROM m UNION ALL SELECT * FROM o UNION ALL SELECT * FROM ro
         |ORDER BY user_id, left_ts, right_ts""".stripMargin, mutatesSession = true),
 
-    Entry("ts_sessionize", (s, d) => {
-      Tables.register(s, d)
-      s.sql(
+    Entry.sql("ts_sessionize",
         """SELECT user_id,
           |       CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
           |       COUNT(*) AS n_events
@@ -2830,8 +2794,7 @@ object Io {
           |                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
           |            FROM events))
           |GROUP BY user_id
-          |ORDER BY user_id""".stripMargin)
-    },
+          |ORDER BY user_id""".stripMargin,
       """SELECT user_id,
         |       CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
         |       count(*) AS n_events
@@ -2851,19 +2814,16 @@ object Io {
     // pins them): an event EXACTLY 30 min after the previous one MERGES —
     // the merge rule is touch-inclusive even though each raw window is
     // half-open — so the oracle's break condition is STRICTLY `>`.
-    Entry("ts_session_window", (s, d) => {
-      Tables.register(s, d)
-      // session_window must appear IN the GROUP BY — as a plain projection
-      // it never merges, every event keeps its raw [ts, ts+gap) window
-      s.sql(
+    // session_window must appear IN the GROUP BY — as a plain projection
+    // it never merges, every event keeps its raw [ts, ts+gap) window
+    Entry.sql("ts_session_window",
         """SELECT user_id,
           |       session_window.start AS session_start,
           |       session_window.end AS session_end,
           |       COUNT(*) AS n_events
           |FROM events
           |GROUP BY user_id, session_window(ts, '30 minutes')
-          |ORDER BY user_id, session_start""".stripMargin)
-    },
+          |ORDER BY user_id, session_start""".stripMargin,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |x AS (SELECT user_id, ts,
         |             CASE WHEN lag(ts) OVER w IS NULL
@@ -2883,8 +2843,8 @@ object Io {
 
     // as-of join: every purchase attributed to the user's latest preceding
     // view (backward inclusive), DuckDB's native ASOF JOIN as the oracle
-    Entry("ts_asof_join", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_asof_join", (s, _) => {
+      val ev = s.table("events")
       val purchases = ev.where("event_type = 'purchase'")
         .select("event_id", "user_id", "ts")
       val views = ev.where("event_type = 'view'")
@@ -2906,8 +2866,8 @@ object Io {
     // the skew-safe as-of (time-bucketed pre-carry, hourly buckets): must
     // produce EXACTLY the rows of ts_asof_join — same DuckDB ASOF oracle,
     // so the boundary stitch is differentially checked on real data
-    Entry("ts_asof_bucketed", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_asof_bucketed", (s, _) => {
+      val ev = s.table("events")
       val purchases = ev.where("event_type = 'purchase'")
         .select("event_id", "user_id", "ts")
       val views = ev.where("event_type = 'view'")
@@ -2929,8 +2889,8 @@ object Io {
     // forward as-of: every view attributed to the user's next purchase
     // (at-or-after, inclusive) — the mirror of ts_asof_join, oracled by
     // DuckDB's ASOF JOIN with the inequality flipped
-    Entry("ts_asof_forward", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_asof_forward", (s, _) => {
+      val ev = s.table("events")
       val views = ev.where("event_type = 'view'")
         .select("event_id", "user_id", "ts")
       val purchases = ev.where("event_type = 'purchase'")
@@ -2955,8 +2915,8 @@ object Io {
     // side; composed from the two one-shuffle carry passes stitched on
     // the unique left id — the oracle composes DuckDB's two ASOF JOINs
     // with the same pick rule
-    Entry("ts_asof_nearest", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_asof_nearest", (s, _) => {
+      val ev = s.table("events")
       val purchases = ev.where("event_type = 'purchase'")
         .select("event_id", "user_id", "ts")
       val views = ev.where("event_type = 'view'")
@@ -2998,8 +2958,8 @@ object Io {
     // one, and purchases with no view within ±10 min drop out entirely.
     // Same two carry passes; the bound is a post-stitch integer-micros
     // predicate, not a new plan
-    Entry("ts_asof_nearest_tol", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_asof_nearest_tol", (s, _) => {
+      val ev = s.table("events")
       val purchases = ev.where("event_type = 'purchase'")
         .select("event_id", "user_id", "ts")
       val views = ev.where("event_type = 'view'")
@@ -3049,8 +3009,8 @@ object Io {
     // multiset. Micros-exact: both engines work in the micro-truncated
     // domain (CAST(ts AS TIMESTAMP) in DuckDB) and epoch_us/unix_micros
     // are integer, so no rounding anywhere.
-    Entry("ts_funnel", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_funnel", (s, _) => {
+      val ev = s.table("events")
       val steps = Seq(
         "view" -> (col("event_type") === "view"),
         "click" -> (col("event_type") === "click"),
@@ -3087,8 +3047,8 @@ object Io {
     // carries the last observed daily sum forward. The oracle rebuilds the
     // spine with generate_series and the carry with IGNORE NULLS window
     // SQL; sums ride DECIMAL until the output edge.
-    Entry("ts_gap_fill", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("ts_gap_fill", (s, _) => {
+      val ev = s.table("events")
       graft.operators.Resample.locfDaily(ev, "user_id", "ts", "value")
         .orderBy("user_id", "day")
     },
@@ -3116,8 +3076,8 @@ object Io {
     // (plan-gated in RangeJoinSpec). The oracle is the plain interval
     // predicate in DuckDB, so a bin off-by-one at either edge, a dropped
     // multi-bin interval, or a double-counted pair all hash-mismatch.
-    Entry("join_range_binned", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("join_range_binned", (s, _) => {
+      val ev = s.table("events")
       val incidents = ev.where("event_type = 'error'")
         .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
           expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
@@ -3143,8 +3103,8 @@ object Io {
     // interval × interval overlap through the same binning (attributed
     // to the shared max-start bin — exactly-once, no dedup): error
     // windows overlapping purchase windows, counted per incident
-    Entry("join_interval_overlap", (s, d) => {
-      val ev = t(s, d, "events")
+    Entry("join_interval_overlap", (s, _) => {
+      val ev = s.table("events")
       val inc = ev.where("event_type = 'error'")
         .select(col("event_id").as("incident_id"), col("ts").as("inc_s"),
           expr("ts + INTERVAL 10 MINUTES").as("inc_e"))
@@ -3173,8 +3133,8 @@ object Io {
     // within 5 minutes of each other across ALL users — no equi key, the
     // classic coincidence-correlation query. Micros-exact output, each
     // unordered pair exactly once (a_id < b_id)
-    Entry("join_proximity_pairs", (s, d) => {
-      val errs = t(s, d, "events").where("event_type = 'error'")
+    Entry("join_proximity_pairs", (s, _) => {
+      val errs = s.table("events").where("event_type = 'error'")
         .select("event_id", "ts")
       graft.operators.RangeJoin.proximityPairs(errs, "event_id", "ts",
           toleranceSeconds = 300L)
@@ -3198,11 +3158,11 @@ object Io {
     // CASE over exact endpoint micros. Variable durations (value-derived,
     // floor() to dodge the CAST-rounding divergence) populate every
     // branch; pairs attribute once via the shared-bin rule + a_id < b_id
-    Entry("join_allen_relations", (s, d) => {
+    Entry("join_allen_relations", (s, _) => {
       // minute-floored starts + minute-multiple durations: endpoint
       // coincidences (equals/starts/finishes/meets-free census) actually
       // occur, so every CASE branch carries pairs
-      val ev = t(s, d, "events").where("event_type IN ('error', 'signup')")
+      val ev = s.table("events").where("event_type IN ('error', 'signup')")
         .select(col("event_id"),
           expr("(unix_micros(ts) div 60000000) * 60000000").as("su"))
         .withColumn("eu",
@@ -3266,7 +3226,7 @@ object Io {
     Entry("sink_zorder_clustered", (s, d) => {
       val out = s"${base(s, d)}/zorder_out"
       graft.operators.ZOrder.writeClustered(
-        t(s, d, "lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
+        s.table("lineitem").select("l_partkey", "l_suppkey", "l_quantity"),
         "l_partkey", "l_suppkey", out, numFiles = 8)
       s.read.parquet(out)
         .groupBy(expr("l_partkey % 10").as("pk_mod"))
@@ -3285,8 +3245,7 @@ object Io {
     // back (reference DmlNode INSERT/CTAS, datafusion.proto:269-283) —
     // the oracle aggregates the original rows, so a lost or duplicated
     // insert shows up as a hash mismatch
-    Entry("ddl_ctas_insert", (s, d) => {
-      Tables.register(s, d)
+    Entry("ddl_ctas_insert", (s, _) => {
       Tables.dropManaged(s, "ctas_orders")
       s.sql(
         """CREATE TABLE ctas_orders USING PARQUET AS
@@ -3307,15 +3266,12 @@ object Io {
         |FROM orders WHERE o_orderstatus IN ('F', 'O')
         |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin, mutatesSession = true),
 
-    Entry("json_props_agg", (s, d) => {
-      Tables.register(s, d)
-      s.sql(
+    Entry.sql("json_props_agg",
         """SELECT event_type,
           |       CAST(SUM(CAST(get_json_object(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
           |       COUNT(*) AS n_events
           |FROM events
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    },
+          |GROUP BY event_type ORDER BY event_type""".stripMargin,
       """SELECT event_type,
         |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |       count(*) AS n_events
@@ -3326,17 +3282,14 @@ object Io {
     // parse once, typed variant_get extraction, try_variant_get on a
     // missing path must be NULL-silent (counted, expected zero hits);
     // the oracle extracts through DuckDB's JSON functions instead
-    Entry("fn_variant_json", (s, d) => {
-      Tables.register(s, d)
-      s.sql(
+    Entry.sql("fn_variant_json",
         """SELECT event_type,
           |       CAST(SUM(variant_get(parse_json(props), '$.k', 'bigint')) AS BIGINT) AS sum_k,
           |       CAST(SUM(CASE WHEN variant_get(parse_json(props), '$.k', 'bigint') > 50
           |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
           |       COUNT(try_variant_get(parse_json(props), '$.missing', 'bigint')) AS n_missing_hits
           |FROM events
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    },
+          |GROUP BY event_type ORDER BY event_type""".stripMargin,
       """SELECT event_type,
         |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |       CAST(SUM(CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) > 50

@@ -343,13 +343,6 @@ object Llm {
        |                   CAST((doc_id * 7) % 256 AS $t))
        |       ELSE '' END)""".stripMargin
 
-  private def docs(spark: SparkSession, dir: String): DataFrame = {
-    Tables.register(spark, dir); spark.table("documents")
-  }
-  private def emb(spark: SparkSession, dir: String): DataFrame = {
-    Tables.register(spark, dir); spark.table("embeddings")
-  }
-
   /** Channel mean from the exact integer sum — one IEEE division + round
     * at the output edge, identical in both engines.
     */
@@ -359,8 +352,8 @@ object Llm {
   /** The fixture's documents are single-line; the line-dedup entries
     * re-chunk each into 8-token lines so line-level recurrence exists.
     */
-  private def lineified(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"), expr(
+  private def lineified(spark: SparkSession): DataFrame =
+    spark.table("documents").select(col("doc_id"), expr(
       """concat_ws(chr(10), transform(
         |  sequence(0, CAST((size(split(text, ' ')) - 1) div 8 AS INT)),
         |  i -> concat_ws(' ', slice(split(text, ' '), i * 8 + 1, 8))))""".stripMargin)
@@ -447,17 +440,17 @@ object Llm {
   }
 
   val entries: Seq[Entry] = Seq(
-    Entry("llm_dedup_exact", (s, d) => Dedup.exact(docs(s, d)).orderBy("fp"),
+    Entry("llm_dedup_exact", (s, _) => Dedup.exact(s.table("documents")).orderBy("fp"),
       s"""SELECT md5($NORM) AS fp, min(doc_id) AS keep_id, count(*) AS n_docs
          |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin),
 
-    Entry("llm_minhash_bands", (s, d) =>
-      Dedup.lshCandidates(docs(s, d)).orderBy("doc_a", "doc_b"),
+    Entry("llm_minhash_bands", (s, _) =>
+      Dedup.lshCandidates(s.table("documents")).orderBy("doc_a", "doc_b"),
       s"""WITH ${minhashCtes()}
          |SELECT doc_a, doc_b, n_bands FROM cands ORDER BY doc_a, doc_b""".stripMargin),
 
-    Entry("llm_jaccard_verify", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_jaccard_verify", (s, _) => {
+      val dd = s.table("documents")
       Dedup.jaccard(dd, Dedup.lshCandidates(dd)).orderBy("doc_a", "doc_b")
     },
       s"""WITH ${minhashCtes()},
@@ -474,7 +467,7 @@ object Llm {
          |JOIN sizes sb ON sb.doc_id = i.doc_b
          |ORDER BY doc_a, doc_b""".stripMargin),
 
-    Entry("llm_simhash", (s, d) => Dedup.simhash(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_simhash", (s, _) => Dedup.simhash(s.table("documents")).orderBy("doc_id"),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -493,7 +486,7 @@ object Llm {
     // at SF~10 vs simhash_groups 17.1 s / simhash_pipeline 4.96 s) —
     // benchmark and deploy those two for dedup at scale; this entry
     // exists to hand auditors the explicit pairs.
-    Entry("llm_simhash_near", (s, d) => Dedup.simhashCandidates(docs(s, d)),
+    Entry("llm_simhash_near", (s, _) => Dedup.simhashCandidates(s.table("documents")),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -514,8 +507,8 @@ object Llm {
     // the wide-radius configuration (6-bit bands, Hamming <= 8): higher
     // recall radius, ~1300x higher random band-collision rate — kept
     // differentially checked for dup-heavy corpora that can afford it
-    Entry("llm_simhash_radius8", (s, d) =>
-      Dedup.simhashCandidates(docs(s, d), bandBits = 6, maxHamming = 8),
+    Entry("llm_simhash_radius8", (s, _) =>
+      Dedup.simhashCandidates(s.table("documents"), bandBits = 6, maxHamming = 8),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -538,8 +531,8 @@ object Llm {
     // materializable when dup mass makes the expanded pair set explode
     // (measured at SF~10 100x replication: 342.9 s expanded vs 22.2 s
     // grouped, same banding)
-    Entry("llm_simhash_groups", (s, d) =>
-      Dedup.simhashNearGroups(docs(s, d)).orderBy("sim_a", "sim_b"),
+    Entry("llm_simhash_groups", (s, _) =>
+      Dedup.simhashNearGroups(s.table("documents")).orderBy("sim_a", "sim_b"),
       s"""WITH $tokCtes,
          |votes AS (SELECT doc_id, b,
          |                 SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -572,8 +565,8 @@ object Llm {
     // with collapsed copy counts — total pair_count mass equals the
     // expanded simhashCandidates answer, but output stays O(survivor
     // pairs) under replication-heavy corpora (the SF~10 blow-up class)
-    Entry("llm_simhash_pipeline", (s, d) =>
-      Dedup.simhashPipeline(docs(s, d)).orderBy("doc_a", "doc_b", "hamming"),
+    Entry("llm_simhash_pipeline", (s, _) =>
+      Dedup.simhashPipeline(s.table("documents")).orderBy("doc_a", "doc_b", "hamming"),
       s"""WITH ex AS (SELECT md5($NORM) AS fp, min(doc_id) AS keep_id,
          |                   count(*) AS n_docs
          |            FROM documents GROUP BY 1),
@@ -608,7 +601,7 @@ object Llm {
          |SELECT * FROM cross_p UNION ALL SELECT * FROM intra
          |ORDER BY doc_a, doc_b, hamming""".stripMargin),
 
-    Entry("llm_text_stats", (s, d) => TextAnalysis.stats(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_text_stats", (s, _) => TextAnalysis.stats(s.table("documents")).orderBy("doc_id"),
       raw"""SELECT doc_id,
          |  CAST(length(text) AS BIGINT) AS n_chars,
          |  CAST(length(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
@@ -620,8 +613,8 @@ object Llm {
          |       / NULLIF(length(string_split_regex(trim(text), '\s+')), 0), 6) AS DOUBLE) AS avg_token_len
          |FROM documents ORDER BY doc_id""".stripMargin),
 
-    Entry("llm_quality_filter", (s, d) =>
-      TextAnalysis.qualityFilter(docs(s, d))
+    Entry("llm_quality_filter", (s, _) =>
+      TextAnalysis.qualityFilter(s.table("documents"))
         .select("doc_id", "n_tokens").orderBy("doc_id"),
       raw"""WITH st AS (
          |  SELECT doc_id,
@@ -636,8 +629,8 @@ object Llm {
          |  AND alnum_ratio >= 0.7 AND space_ratio <= 0.4
          |ORDER BY doc_id""".stripMargin),
 
-    Entry("llm_dedup_pipeline", (s, d) =>
-      Dedup.dedupe(docs(s, d)).select("doc_id").orderBy("doc_id"),
+    Entry("llm_dedup_pipeline", (s, _) =>
+      Dedup.dedupe(s.table("documents")).select("doc_id").orderBy("doc_id"),
       s"""WITH fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -651,8 +644,8 @@ object Llm {
     // connected components over verified near-dup pairs (min-label
     // propagation + pointer jumping): every doc in at least one >=0.6
     // Jaccard pair, labeled with its component's minimum doc_id
-    Entry("llm_dup_clusters", (s, d) =>
-      Dedup.dupClusters(Dedup.nearDupPairs(docs(s, d))).orderBy("doc_id"),
+    Entry("llm_dup_clusters", (s, _) =>
+      Dedup.dupClusters(Dedup.nearDupPairs(s.table("documents"))).orderBy("doc_id"),
       // reachability closure: every label a doc can reach through >=0.6
       // pairs; min over them == the component representative (the Spark
       // side converges to the same fixed point by label propagation)
@@ -671,8 +664,8 @@ object Llm {
     // the most distinct trigram shingles (submodular curation pick,
     // (1−1/e)-approximate; TextAnalysis.coverageSelect — the mmrSelect
     // driver-greedy shape with integer gains)
-    Entry("llm_coverage_select", (s, d) =>
-      TextAnalysis.coverageSelect(docs(s, d), k = 4)
+    Entry("llm_coverage_select", (s, _) =>
+      TextAnalysis.coverageSelect(s.table("documents"), k = 4)
         .selectExpr("CAST(step AS INT) AS step", "doc_id",
           "CAST(gain AS BIGINT) AS gain",
           "CAST(covered_total AS BIGINT) AS covered_total")
@@ -723,8 +716,8 @@ object Llm {
     // so the histogram still counts every underlying document, at
     // O(survivor-pair) cost. n_docs = size × count makes the dup-mass
     // per size class readable directly
-    Entry("llm_cluster_size_hist", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_cluster_size_hist", (s, _) => {
+      val dd = s.table("documents")
       // localCheckpoint (r16 opt): the copy-count table feeds the
       // survivor join, the cluster re-expansion AND the alone-class
       // anti-join; survivors feed the candidate and verify chains
@@ -781,11 +774,11 @@ object Llm {
     // factor-100 on the raw form), so the 3 rounds of degree>=2
     // filtering leave the genuinely dense near-dup cores (template
     // farms); incidental one-off matches dissolve in round 1
-    Entry("llm_kcore", (s, d) => {
+    Entry("llm_kcore", (s, _) => {
       // localCheckpoint (r16 opt): survivors feed the candidate AND the
       // verify chain — the lazy form re-derived the exact collapse per
       // consumer (same shape as llm_dedup_venn)
-      val survivors = Shared.cut(Dedup.exactSurvivors(docs(s, d)))
+      val survivors = Shared.cut(Dedup.exactSurvivors(s.table("documents")))
       Dedup.kCore(Dedup.nearDupPairs(survivors), k = 2, rounds = 3).orderBy("doc_id")
     },
       // the three peel rounds replayed as chained CTEs over the exact-
@@ -821,8 +814,8 @@ object Llm {
     // purpose. The co-purchase graph, not the near-dup one: duplicate
     // clusters are complete cliques (every 2-hop pair already adjacent),
     // so an open wedge cannot exist there by construction
-    Entry("llm_link_predict", (s, d) => {
-      val items = Tables.load(s, d, "lineitem")
+    Entry("llm_link_predict", (s, _) => {
+      val items = s.table("lineitem")
         .selectExpr("l_orderkey AS ok", "l_partkey AS pk").distinct()
       val edges = items.as("x")
         .join(items.as("y"), expr("x.ok = y.ok AND x.pk < y.pk"))
@@ -852,8 +845,8 @@ object Llm {
     // the full pipeline with transitive-closure semantics: only each
     // duplicate component's minimum doc_id survives (vs dedupe()'s
     // documented one-pass greedy rule)
-    Entry("llm_dedup_cc", (s, d) =>
-      Dedup.dedupeClustered(docs(s, d)).select("doc_id").orderBy("doc_id"),
+    Entry("llm_dedup_cc", (s, _) =>
+      Dedup.dedupeClustered(s.table("documents")).select("doc_id").orderBy("doc_id"),
       s"""WITH RECURSIVE fps AS (SELECT doc_id, md5($NORM) AS fp FROM documents),
          |keep AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
          |docs2 AS (SELECT d.doc_id, d.text FROM documents d JOIN keep USING (doc_id)),
@@ -874,8 +867,8 @@ object Llm {
     // quality-ranked survivor selection: per duplicate component keep the
     // cleanest/longest member (alnum ratio, then token count, then min
     // doc_id) instead of dedupeClustered's arbitrary min-id rule
-    Entry("llm_dedup_quality", (s, d) =>
-      Dedup.dedupeByQuality(docs(s, d)).select("doc_id").orderBy("doc_id"),
+    Entry("llm_dedup_quality", (s, _) =>
+      Dedup.dedupeByQuality(s.table("documents")).select("doc_id").orderBy("doc_id"),
       // same reachability closure, but the survivor per component is the
       // quality argmax (alnum ratio, token count, min doc_id) — the oracle
       // recomputes the scoring and the window rule independently
@@ -905,14 +898,14 @@ object Llm {
          |SELECT doc_id FROM docs2 WHERE doc_id NOT IN (SELECT doc_id FROM drops)
          |ORDER BY doc_id""".stripMargin),
 
-    Entry("llm_token_counts", (s, d) =>
-      TextAnalysis.tokenCounts(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_token_counts", (s, _) =>
+      TextAnalysis.tokenCounts(s.table("documents")).orderBy("doc_id"),
       raw"""SELECT doc_id,
          |  CAST(length(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]', 0)) AS BIGINT) AS n_bpeish,
          |  CAST(length(list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+', 0))) AS BIGINT) AS n_unique_words
          |FROM documents ORDER BY doc_id""".stripMargin),
 
-    Entry("llm_lang_id", (s, d) => TextAnalysis.langId(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_lang_id", (s, _) => TextAnalysis.langId(s.table("documents")).orderBy("doc_id"),
       s"""WITH markers(lang_cand, marker) AS (VALUES $markerValues),
          |toks AS (SELECT DISTINCT doc_id, tok
          |         FROM (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok FROM documents)),
@@ -931,8 +924,8 @@ object Llm {
     // confusion matrix that decides whether the n-gram heuristic is good
     // enough to route documents — per (true, predicted) cell counts; the
     // eval loop every classifier in the curation stack needs
-    Entry("llm_langid_eval", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_langid_eval", (s, _) => {
+      val dd = s.table("documents")
       TextAnalysis.langId(dd)
         .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang").as("true_lang"), col("pred_lang"))
@@ -956,8 +949,8 @@ object Llm {
          |SELECT true_lang, pred_lang, count(*) AS n
          |FROM pred GROUP BY 1, 2 ORDER BY true_lang, pred_lang""".stripMargin),
 
-    Entry("llm_fingerprint", (s, d) =>
-      TextAnalysis.fingerprint(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_fingerprint", (s, _) =>
+      TextAnalysis.fingerprint(s.table("documents")).orderBy("doc_id"),
       s"""WITH n AS (SELECT doc_id, $NORM AS norm FROM documents),
          |g AS (SELECT doc_id, md5(substr(norm, i, 8)) AS h
          |      FROM n, unnest(generate_series(1, length(norm) - 7, 2)) AS u(i)
@@ -972,8 +965,8 @@ object Llm {
     // — the back-off normalizer). Pure integer aggregates over the
     // bigram stream, vocabulary-bounded shuffles, >=50-count floor keeps
     // the output head-of-vocab sized
-    Entry("llm_kn_counts", (s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
+    Entry("llm_kn_counts", (s, _) => {
+      val toks = s.table("documents").select(col("doc_id"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(size(col("w")) >= 2)
       val bg = toks.select(explode(expr(
@@ -1013,8 +1006,8 @@ object Llm {
     // occur exactly 1..4 times (Good–Turing's n_k) and the standard
     // absolute discount D = n1/(n1 + 2·n2) — integer bins, ONE final
     // IEEE division at the edge
-    Entry("llm_kn_discounts", (s, d) => {
-      val toks = docs(s, d).select(
+    Entry("llm_kn_discounts", (s, _) => {
+      val toks = s.table("documents").select(
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(size(col("w")) >= 2)
       toks.select(explode(expr(
@@ -1053,8 +1046,8 @@ object Llm {
     // green-list watermark detection (Kirchenbauer-style): keyed-hash
     // parity per adjacent token pair, one-proportion z against 1/2, the
     // flag decided in pure integers ((2g-n)² > 16n) — no float decides
-    Entry("llm_watermark_detect", (s, d) =>
-      TextAnalysis.watermarkDetect(docs(s, d), "wm1")
+    Entry("llm_watermark_detect", (s, _) =>
+      TextAnalysis.watermarkDetect(s.table("documents"), "wm1")
         .selectExpr("doc_id", "CAST(n_scored AS BIGINT) AS n_scored",
           "CAST(n_green AS BIGINT) AS n_green", "z_green", "flagged")
         .orderBy("doc_id"),
@@ -1085,8 +1078,8 @@ object Llm {
     // D=3/4 discount, trained on the hash-split train side, scoring the
     // held-out side — P_KN as ONE IEEE division of exact int64 products
     // per bigram, log-free per-doc outputs (see knScoreHeldOut scaladoc)
-    Entry("llm_kn_perplexity", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_kn_perplexity", (s, _) => {
+      val dd = s.table("documents")
       val split = TextAnalysis.hashSplit(dd)
       def part(cond: String) = dd.join(
         split.where(cond).select("doc_id"), Seq("doc_id"))
@@ -1144,8 +1137,8 @@ object Llm {
     // model tables; top-order products pass int64 so numerator and
     // denominator are exact DECIMAL(38,0) (oracle: HUGEINT) and every
     // P_KN3 is still ONE IEEE division (see kn3ScoreHeldOut scaladoc)
-    Entry("llm_kn3_perplexity", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_kn3_perplexity", (s, _) => {
+      val dd = s.table("documents")
       val split = TextAnalysis.hashSplit(dd)
       def part(cond: String) = dd.join(
         split.where(cond).select("doc_id"), Seq("doc_id"))
@@ -1225,8 +1218,8 @@ object Llm {
     // kappa = (N·agree − Σ_l row_l·col_l) / (N² − Σ_l row_l·col_l),
     // every term an exact integer, ONE IEEE division at the edge. The
     // margins are label-cardinality rows; the 1-row sides broadcast
-    Entry("llm_langid_kappa", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_langid_kappa", (s, _) => {
+      val dd = s.table("documents")
       val cells = TextAnalysis.langId(dd)
         .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang"), col("pred_lang"))
@@ -1281,8 +1274,8 @@ object Llm {
     // (k! cancels): a fixed left-to-right IEEE tree shared verbatim
     // with the oracle, overflow-free at ANY n (the raw integer products
     // overflowed int64 at the 10× staging's ~400 trials/task)
-    Entry("llm_pass_at_k", (s, d) => {
-      val tasks = Tables.load(s, d, "orders")
+    Entry("llm_pass_at_k", (s, _) => {
+      val tasks = s.table("orders")
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"),
           sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("c"))
@@ -1325,8 +1318,8 @@ object Llm {
     // distinct chunk md5s over the same 32/24 windows llm_passage_chunks
     // emits — the number that says HOW MUCH of a source is recycled
     // passages even when no two whole documents match
-    Entry("llm_chunk_dedup", (s, d) =>
-      docs(s, d).select(col("source"),
+    Entry("llm_chunk_dedup", (s, _) =>
+      s.table("documents").select(col("source"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(expr("size(w) >= 1 AND w[0] <> ''"))
         .select(col("source"), explode(expr(
@@ -1358,8 +1351,8 @@ object Llm {
     // boundary (<0.1) marks a topic shift — the split points a
     // context-window packer should prefer. Exact integer overlaps via
     // the exploded (chunk, token) join, one ROUND division per boundary
-    Entry("llm_topic_shifts", (s, d) => {
-      val ch = docs(s, d).select(col("doc_id"),
+    Entry("llm_topic_shifts", (s, _) => {
+      val ch = s.table("documents").select(col("doc_id"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(expr("size(w) > 32 AND w[0] <> ''"))
         .select(col("doc_id"), posexplode(expr(
@@ -1419,8 +1412,8 @@ object Llm {
     // llm_pmi_collocations discipline applied source-vs-rest — top-5 per
     // source via a rank window (WindowGroupLimit prunes below the sort).
     // The corpus-profiling step before choosing mixture weights
-    Entry("llm_source_signature", (s, d) => {
-      val toks = docs(s, d).select(col("source"),
+    Entry("llm_source_signature", (s, _) => {
+      val toks = s.table("documents").select(col("source"),
           explode(expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')")).as("term"))
         .where(col("term") =!= "")
       val bySrc = toks.groupBy("source", "term").agg(count(lit(1)).as("tf_s"))
@@ -1468,8 +1461,8 @@ object Llm {
     // runs inflate gradient correlation). Observed count from ONE
     // pos→pos+1 equi self-join of the two-phase permutation; both rates
     // published as exact integer ppm
-    Entry("llm_shuffle_quality", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_shuffle_quality", (s, _) => {
+      val dd = s.table("documents")
       val ord = TrainOrder.shuffleOrder(dd.select("doc_id"), "sq1")
         .join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
       val adj = ord.select(col("pos"), col("source").as("src_a"))
@@ -1511,8 +1504,8 @@ object Llm {
     // within Hamming<=3 (each method's own standard survivor rule).
     // One integer row — the dashboard number that justifies running
     // both lexical fronts
-    Entry("llm_dedup_venn", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_dedup_venn", (s, _) => {
+      val dd = s.table("documents")
       // localCheckpoint (r16 opt): the exact-survivor corpus feeds THREE
       // chains (MinHash pairs, simhash banding, the flag frame) — the
       // lazy form re-derived the scan+md5+collapse per consumer (17
@@ -1598,13 +1591,13 @@ object Llm {
     // shingle verify at 0 (LEFT join, COALESCE — the inner jaccard join
     // would silently overstate precision). Radii expand via a broadcast
     // 4-row theta join — never a per-radius rescan
-    Entry("llm_simhash_pr_curve", (s, d) => {
+    Entry("llm_simhash_pr_curve", (s, _) => {
       // localCheckpoint (r16 opt): the exact-survivor corpus feeds BOTH
       // the simhash fingerprint chain and the jaccard verify chain, and
       // the candidate-pair set feeds BOTH the radius census and the
       // verify join — the lazy form re-derived each per consumer (31
       // parquet scans / 119 Exchanges in the executed plan)
-      val dd = Shared.cut(Dedup.exactSurvivors(docs(s, d)))
+      val dd = Shared.cut(Dedup.exactSurvivors(s.table("documents")))
       val sp = Shared.cut(Dedup.simhashCandidates(dd))
       val jac = Dedup.jaccard(dd, sp.select("doc_a", "doc_b"))
       val pairs = sp.join(jac, Seq("doc_a", "doc_b"), "left")
@@ -1672,14 +1665,14 @@ object Llm {
     // every minhash — raw candidates go quadratic per exact class,
     // measured 6× super-linear at the 10× staging), so the entry IS the
     // estimator-vs-truth audit; integer bit matches, one ROUND division
-    Entry("llm_bbit_minhash", (s, d) => {
+    Entry("llm_bbit_minhash", (s, _) => {
       // localCheckpoint (r16 opt): candidates feed the estimator join and
       // the exact verify, the bit table joins twice (a/b sides) — both
       // are pair/signature-sized. The survivor corpus itself stays lazy:
       // checkpointing it was A/B'd and lost (2.29 → 2.58 s) — this entry
       // derives the corpus only thrice and the text materialization costs
       // more than the re-derives.
-      val dd = Dedup.exactSurvivors(docs(s, d))
+      val dd = Dedup.exactSurvivors(s.table("documents"))
       val cand = Shared.cut(Dedup.lshCandidates(dd).select("doc_a", "doc_b"))
       val bits = Shared.cut(Dedup.minhash(dd).select(
         col("doc_id") +: (0 until 8).map(i => expr(s"h$i % 2").as(s"b$i")): _*))
@@ -1724,8 +1717,8 @@ object Llm {
     // per-row positional expression work (one Generate per doc), no
     // corpus state; the trailing partial window is kept, the chunk
     // count is the closed form 1 + ceil((n−32)/24)
-    Entry("llm_passage_chunks", (s, d) =>
-      docs(s, d).select(col("doc_id"),
+    Entry("llm_passage_chunks", (s, _) =>
+      s.table("documents").select(col("doc_id"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
         .where(expr("size(w) >= 1 AND w[0] <> ''"))
         .select(col("doc_id"), expr("size(w)").as("n_toks"),
@@ -1760,8 +1753,8 @@ object Llm {
     // (this probe range includes genuine plants: probes 31/44 sit verbatim
     // inside other fixture docs — containment 1.0 — so the entry is
     // non-empty and exercises the exact case the operator exists for)
-    Entry("llm_decontaminate", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_decontaminate", (s, _) => {
+      val dd = s.table("documents")
       Dedup.containment(dd, dd.where("doc_id < 50"), minContainment = 0.3)
         .orderBy("doc_id", "probe_id")
     },
@@ -1784,8 +1777,8 @@ object Llm {
     // semantics with no bloom at all, so a prefilter that dropped a true
     // hit could never hash-match); wider probe slice than
     // llm_decontaminate so the two entries' outputs differ
-    Entry("llm_bloom_decontaminate", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_bloom_decontaminate", (s, _) => {
+      val dd = s.table("documents")
       Dedup.containmentBloom(dd, dd.where("doc_id < 80"), minContainment = 0.3)
         .orderBy("doc_id", "probe_id")
     },
@@ -1811,9 +1804,9 @@ object Llm {
     // post-count on broadcast dimension tables, so the corpus side is
     // scanned once no matter how many suites ride along (PlanShapeSpec
     // gates the scan count against the suite count)
-    Entry("llm_decontam_suite", (s, d) => {
+    Entry("llm_decontam_suite", (s, _) => {
       import s.implicits._
-      val dd = docs(s, d)
+      val dd = s.table("documents")
       val probes = dd.where("doc_id < 110").withColumn("suite", expr(
         "CASE WHEN doc_id < 40 THEN 'qa' WHEN doc_id < 80 THEN 'math' ELSE 'code' END"))
       val thr = Seq(("qa", 0.3), ("math", 0.5), ("code", 0.2))
@@ -1850,8 +1843,8 @@ object Llm {
 
     // per-domain quota: at most 8 docs per source, best alnum_ratio first
     // (doc_id tie-break) — the FineWeb "no domain dominates" cap
-    Entry("llm_domain_cap", (s, d) =>
-      TextAnalysis.domainCap(docs(s, d), maxPerKey = 8)
+    Entry("llm_domain_cap", (s, _) =>
+      TextAnalysis.domainCap(s.table("documents"), maxPerKey = 8)
         .select("doc_id", "source").orderBy("source", "doc_id"),
       raw"""WITH q AS (
          |  SELECT doc_id, source,
@@ -1866,8 +1859,8 @@ object Llm {
          |ORDER BY source, doc_id""".stripMargin),
 
     // context-window packing: 64-token chunks advancing by 56 (8 overlap)
-    Entry("llm_chunk", (s, d) =>
-      TextAnalysis.chunk(docs(s, d), chunkTokens = 64, overlap = 8)
+    Entry("llm_chunk", (s, _) =>
+      TextAnalysis.chunk(s.table("documents"), chunkTokens = 64, overlap = 8)
         .orderBy("doc_id", "chunk_idx"),
       s"""WITH n AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
          |g AS (SELECT doc_id, w, i AS chunk_idx,
@@ -1881,8 +1874,8 @@ object Llm {
 
     // 5 docs per language, chosen by content-hash order — deterministic
     // stratified sampling (WindowGroupLimit plan: rank prunes pre-shuffle)
-    Entry("llm_stratified_sample", (s, d) =>
-      TextAnalysis.stratifiedSample(docs(s, d), "lang", 5)
+    Entry("llm_stratified_sample", (s, _) =>
+      TextAnalysis.stratifiedSample(s.table("documents"), "lang", 5)
         .select("doc_id", "lang").orderBy("lang", "doc_id"),
       """SELECT doc_id, lang
         |FROM (SELECT doc_id, lang,
@@ -1893,8 +1886,8 @@ object Llm {
 
     // training-mix rebalance: per-source keep rates by id-hash bucket;
     // sources absent from the rate table drop out entirely
-    Entry("llm_mixture_sample", (s, d) =>
-      TextAnalysis.mixtureSample(docs(s, d),
+    Entry("llm_mixture_sample", (s, _) =>
+      TextAnalysis.mixtureSample(s.table("documents"),
           Map("src0" -> 100, "src1" -> 50, "src2" -> 25, "src3" -> 10))
         .select("doc_id", "source").orderBy("doc_id"),
       """WITH rates(source, keep_pct) AS (VALUES
@@ -1904,8 +1897,8 @@ object Llm {
         |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < r.keep_pct
         |ORDER BY d.doc_id""".stripMargin),
 
-    Entry("llm_hash_split", (s, d) =>
-      TextAnalysis.hashSplit(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_hash_split", (s, _) =>
+      TextAnalysis.hashSplit(s.table("documents")).orderBy("doc_id"),
       s"""WITH b AS (SELECT doc_id,
          |                  CAST(('0x' || substr(md5($NORM), 1, 15))::BIGINT % 100 AS INT) AS bucket
          |           FROM documents)
@@ -1917,8 +1910,8 @@ object Llm {
     // token-budget shard packing (two-phase prefix sum — the global
     // cumsum never runs as a single-task window; plan-asserted). 4096
     // docs per bucket, 2^16 tokens per shard
-    Entry("llm_pack_shards", (s, d) =>
-      TextAnalysis.packShards(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_pack_shards", (s, _) =>
+      TextAnalysis.packShards(s.table("documents")).orderBy("doc_id"),
       // the oracle computes the SAME prefix sum as one flat window — the
       // differential proves the two-phase decomposition stitches exactly
       raw"""WITH t AS (SELECT doc_id,
@@ -1932,8 +1925,8 @@ object Llm {
          |       CAST((cum_tokens - n_tokens) // 65536 AS BIGINT) AS shard
          |FROM c ORDER BY doc_id""".stripMargin),
 
-    Entry("llm_ngram_stats", (s, d) =>
-      TextAnalysis.ngramStats(docs(s, d), n = 2, k = 20),
+    Entry("llm_ngram_stats", (s, _) =>
+      TextAnalysis.ngramStats(s.table("documents"), n = 2, k = 20),
       s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
          |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
          |       FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
@@ -1949,8 +1942,8 @@ object Llm {
     // straddling a boundary overfills its start shard (remainder goes
     // negative) and the next shard reads under-full — exactly what the
     // report is for. One rollup over the two-phase prefix-sum output
-    Entry("llm_pack_efficiency", (s, d) => {
-      TextAnalysis.packShards(docs(s, d), tokensPerShard = 4096L)
+    Entry("llm_pack_efficiency", (s, _) => {
+      TextAnalysis.packShards(s.table("documents"), tokensPerShard = 4096L)
         .createOrReplaceTempView("__pack_eff")
       s.sql("""
         SELECT CAST(shard AS BIGINT) AS shard,
@@ -1985,8 +1978,8 @@ object Llm {
     // permutation as ONE flat row_number, so a mis-stitched bucket
     // offset, an unstable tiebreak, or a biased bucket key all
     // hash-mismatch.
-    Entry("llm_shuffle_order", (s, d) =>
-      TrainOrder.shuffleShards(docs(s, d), seed = "graft-r9",
+    Entry("llm_shuffle_order", (s, _) =>
+      TrainOrder.shuffleShards(s.table("documents"), seed = "graft-r9",
           shardDocs = 1024L)
         .orderBy("doc_id"),
       """WITH k AS (SELECT doc_id,
@@ -2003,8 +1996,8 @@ object Llm {
     // permutation of the corpus — no doc repeats or drops within an
     // epoch, the property a naive per-epoch random() cannot give across
     // restarts); displacement shows the orders really decorrelate
-    Entry("llm_epoch_orders", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_epoch_orders", (s, _) => {
+      val dd = s.table("documents")
       val e1 = TrainOrder.shuffleOrder(dd, "epoch-1")
         .select(col("doc_id"), col("pos").as("pos_e1"))
       val e2 = TrainOrder.shuffleOrder(dd, "epoch-2")
@@ -2039,8 +2032,8 @@ object Llm {
     // arithmetic over the constant-folded source list); the oracle is
     // the flat row_number over the stride keys — green proves the
     // closed-form rank identity.
-    Entry("llm_mixture_interleave", (s, d) =>
-      TrainOrder.interleaveStride(docs(s, d), "source",
+    Entry("llm_mixture_interleave", (s, _) =>
+      TrainOrder.interleaveStride(s.table("documents"), "source",
           expr("1 + CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) % 3"),
           seed = "graft-mix")
         .orderBy("doc_id"),
@@ -2059,8 +2052,8 @@ object Llm {
     // per-doc novelty against the corpus: fraction of a doc's distinct
     // 3-gram shingles with corpus document frequency <= 2 — integer
     // counts until the final rounded ratio
-    Entry("llm_novelty", (s, d) =>
-      TextAnalysis.novelty(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_novelty", (s, _) =>
+      TextAnalysis.novelty(s.table("documents")).orderBy("doc_id"),
       s"""WITH ${shingleCtes("documents")},
          |f AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
          |pd AS (SELECT s.doc_id, count(*) AS n_shingles,
@@ -2075,8 +2068,8 @@ object Llm {
 
     // Gini–Simpson + effective vocabulary (Σcnt² stays exact integer —
     // the log-free perplexity proxy)
-    Entry("llm_token_diversity", (s, d) =>
-      TextAnalysis.tokenDiversity(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_token_diversity", (s, _) =>
+      TextAnalysis.tokenDiversity(s.table("documents")).orderBy("doc_id"),
       s"""WITH toks AS (SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |              FROM documents),
          |tc AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -2095,8 +2088,8 @@ object Llm {
     // threshold heavy hitters through the CMS prefilter — exact result
     // (the oracle is the plain GROUP BY ... HAVING; the sketch pass is
     // invisible to it by the no-underestimate guarantee)
-    Entry("llm_heavy_hitters", (s, d) =>
-      TextAnalysis.heavyHitters(docs(s, d), minDf = 35L, n = 2)
+    Entry("llm_heavy_hitters", (s, _) =>
+      TextAnalysis.heavyHitters(s.table("documents"), minDf = 35L, n = 2)
         .orderBy(col("df").desc, col("shingle")),
       s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
          |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] AS shingle
@@ -2109,8 +2102,8 @@ object Llm {
     // targeted-curation retrieval scoring: BM25 of every doc against a
     // fixed 3-term query; contributions share one expression string
     // with the oracle (bm25Contribution), summed on DECIMAL
-    Entry("llm_bm25", (s, d) =>
-      TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
+    Entry("llm_bm25", (s, _) =>
+      TextAnalysis.bm25(s.table("documents"), Seq("hash", "join", "window"))
         .orderBy("doc_id"),
       // the contribution expression is THE SAME STRING the Spark plan
       // compiles (TextAnalysis.bm25Contribution) — one source of truth
@@ -2130,8 +2123,8 @@ object Llm {
 
     // Gopher-style repetition quality signals: top 2-gram share and
     // duplicate-2-gram ratio per document
-    Entry("llm_repetition", (s, d) =>
-      TextAnalysis.repetition(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_repetition", (s, _) =>
+      TextAnalysis.repetition(s.table("documents")).orderBy("doc_id"),
       s"""WITH norm AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
          |g AS (SELECT doc_id, w[i] || ' ' || w[i+1] AS gram
          |      FROM norm, unnest(generate_series(1, length(w) - 1)) AS u(i)
@@ -2153,8 +2146,8 @@ object Llm {
     // structure first — 8-token lines — exactly as the oracle does;
     // duplicate documents then genuinely share lines, which is the case
     // the operator exists for
-    Entry("llm_line_dedup", (s, d) =>
-      TextAnalysis.lineDedup(lineified(s, d)).orderBy("doc_id"),
+    Entry("llm_line_dedup", (s, _) =>
+      TextAnalysis.lineDedup(lineified(s)).orderBy("doc_id"),
       s"""WITH $lineDedupCtes
          |SELECT doc_id, count(*) AS n_lines,
          |       count(CASE WHEN NOT is_bl THEN 1 END) AS n_kept,
@@ -2165,8 +2158,8 @@ object Llm {
     // incremental ingest: the batch (doc_id % 5 = 0) deduped against the
     // accepted corpus (the rest) — exact cross-fingerprint drop + banded
     // cross-LSH + Jaccard verify, batch survivors out
-    Entry("llm_dedup_incremental", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_dedup_incremental", (s, _) => {
+      val dd = s.table("documents")
       Dedup.dedupeIncremental(
         existing = dd.where(col("doc_id") % 5 =!= 0),
         incoming = dd.where(col("doc_id") % 5 === 0))
@@ -2194,8 +2187,8 @@ object Llm {
     // the CCNet ordering, composed: strip boilerplate lines FIRST
     // (keepText surfaces the reassembled document), exact-dedup what
     // remains — docs that differed only in boilerplate collapse
-    Entry("llm_line_dedup_pipeline", (s, d) => {
-      val cleaned = TextAnalysis.lineDedup(lineified(s, d), keepText = true)
+    Entry("llm_line_dedup_pipeline", (s, _) => {
+      val cleaned = TextAnalysis.lineDedup(lineified(s), keepText = true)
         .select(col("doc_id"), col("kept_text").as("text"))
       Dedup.exact(cleaned).orderBy("fp")
     },
@@ -2209,8 +2202,8 @@ object Llm {
 
     // PII scrubbing over deterministically-injected emails/phones/IPs;
     // scrub_md5 proves the replacements landed at identical offsets
-    Entry("llm_pii_scrub", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_pii_scrub", (s, _) => {
+      val dd = s.table("documents")
         .select(col("doc_id"), expr(piiInject("STRING")).as("text"))
       TextAnalysis.piiScrub(dd).orderBy("doc_id")
     },
@@ -2234,8 +2227,8 @@ object Llm {
 
     // exact duplicate-span detection (Lee et al. 2021 substring dedup
     // signal): maximal 5-token spans shared verbatim with another doc
-    Entry("llm_dup_spans", (s, d) =>
-      Dedup.dupSpans(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_dup_spans", (s, _) =>
+      Dedup.dupSpans(s.table("documents")).orderBy("doc_id"),
       // position-indexed 5-gram hashes -> cross-doc df -> interval union
       // per doc, recomputed with DuckDB windows; 0-based p mirrors posexplode
       raw"""WITH tw AS (SELECT doc_id, string_split($NORMC, ' ') AS w FROM documents),
@@ -2264,8 +2257,8 @@ object Llm {
 
     // the removal counterpart: scrub every duplicated span except the
     // minimum-doc_id copy; one copy of every passage survives corpus-wide
-    Entry("llm_scrub_spans", (s, d) =>
-      Dedup.scrubDupSpans(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_scrub_spans", (s, _) =>
+      Dedup.scrubDupSpans(s.table("documents")).orderBy("doc_id"),
       // removal replay: redundant position = gram with df >= 2 held by a
       // non-minimum doc; islands -> covered ranges -> anti-join tokens ->
       // ordered reassembly hash; fully-scrubbed docs fall back to md5('')
@@ -2303,8 +2296,8 @@ object Llm {
          |FROM tw LEFT JOIN ka ON tw.doc_id = ka.doc_id
          |ORDER BY tw.doc_id""".stripMargin),
 
-    Entry("llm_cosine_topk", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_cosine_topk", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.bruteForceTopK(e.where("vec_id < 5"), e, 3)
         .orderBy("probe_id", "rank")
     },
@@ -2326,8 +2319,8 @@ object Llm {
     // CASE ladder both engines constant-fold), padding waste = bucket −
     // n summed exactly. The report that prices a bucket set before
     // anyone trains with it
-    Entry("llm_length_buckets", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__lb_docs")
+    Entry("llm_length_buckets", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__lb_docs")
       s.sql(raw"""
         WITH t AS (SELECT doc_id,
                           CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_tok
@@ -2374,8 +2367,8 @@ object Llm {
     // histogram): length band, alnum ratio, word-count band, and
     // max-token-share repetition, all integer cross-multiplications.
     // The repetition signal needs one explode+agg per doc, joined back
-    Entry("llm_gopher_gate", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__gg_docs")
+    Entry("llm_gopher_gate", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__gg_docs")
       s.sql(s"""
         WITH base AS (SELECT doc_id, text, n_chars,
                              length(regexp_replace(text, '[^a-zA-Z0-9]', '')) AS alnum
@@ -2436,8 +2429,8 @@ object Llm {
     // SUM); quotas are FLOOR of one fixed tree, so membership is
     // integer-deterministic. Compare llm_token_budget_mix (linear
     // weights): same quota machinery, different allocation curve
-    Entry("llm_mixture_temperature", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__mt_docs")
+    Entry("llm_mixture_temperature", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__mt_docs")
       s.sql(raw"""
         WITH st AS (SELECT source,
                            SUM(CAST(size(split(trim(text), '\\s+')) AS BIGINT)) AS tokens
@@ -2470,8 +2463,8 @@ object Llm {
     // bigram model trains on the hash-split train side ONLY and scores
     // the held-out side (in-corpus counts leak every doc into its own
     // model); unseen bigrams contribute p=0 and surface as n_oov
-    Entry("llm_lm_heldout", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_lm_heldout", (s, _) => {
+      val dd = s.table("documents")
       val split = TextAnalysis.hashSplit(dd)
       def part(cond: String) = dd.join(
         split.where(cond).select("doc_id"), Seq("doc_id"))
@@ -2520,8 +2513,8 @@ object Llm {
     // the acceptance-rate number that decides whether a draft model
     // pays for itself. Pure integer censuses; one broadcast-sized
     // draft-table join onto the eval bigram stream
-    Entry("llm_draft_accept", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_draft_accept", (s, _) => {
+      val dd = s.table("documents")
       val split = TextAnalysis.hashSplit(dd)
       def part(cond: String) = dd.join(
         split.where(cond).select("doc_id"), Seq("doc_id"))
@@ -2578,8 +2571,8 @@ object Llm {
     // DuckDB's multiply-round-divide ROUND(,6) perturbs the last ULP
     // (the llm_weighted_sample 1e14 trap) — floor of identical doubles
     // is exact in both engines
-    Entry("llm_audio_spectrogram", (s, d) =>
-      Multimodal.spectrogram(Multimodal.synthesizeAudio(docs(s, d))).toDF()
+    Entry("llm_audio_spectrogram", (s, _) =>
+      Multimodal.spectrogram(Multimodal.synthesizeAudio(s.table("documents"))).toDF()
         .selectExpr("doc_id", "n_frames", "dom1", "dom2", "dom3", "dom4",
           "CAST(FLOOR(max_power) AS BIGINT) AS max_power")
         .orderBy("doc_id"),
@@ -2628,8 +2621,8 @@ object Llm {
     // run-length segments) — the speech/silence segmentation step; the
     // oracle replays the generator's sample formula through identical
     // frame and island arithmetic
-    Entry("llm_audio_vad", (s, d) =>
-      Multimodal.vadSegments(Multimodal.synthesizeAudio(docs(s, d)))
+    Entry("llm_audio_vad", (s, _) =>
+      Multimodal.vadSegments(Multimodal.synthesizeAudio(s.table("documents")))
         .toDF().orderBy("doc_id"),
       // the generator's sample formula through the identical 32-sample
       // frame peaks and gaps-and-islands run arithmetic
@@ -2670,8 +2663,8 @@ object Llm {
     // engines), the 4-term sum folds in i order, ranking ties on cand.
     // Probes are the bounded slice; at corpus scale the candidate set
     // comes from a first-stage ANN exactly like llm_knn_approx
-    Entry("llm_maxsim", (s, d) => {
-      emb(s, d).createOrReplaceTempView("__ms_emb")
+    Entry("llm_maxsim", (s, _) => {
+      s.table("embeddings").createOrReplaceTempView("__ms_emb")
       s.sql("""
         WITH sub AS (SELECT vec_id, i,
                             slice(embedding, i * 16 + 1, 16) AS sv
@@ -2726,8 +2719,8 @@ object Llm {
     // similar to the label's DECIMAL-exact centroid — the mislabel QC
     // of a vector store (Similarity.embedOutliers; the embeddingDrift
     // decimal-mean discipline, ascending-dim cosine folds, vec_id ties)
-    Entry("llm_embed_outliers", (s, d) =>
-      Similarity.embedOutliers(emb(s, d), k = 3)
+    Entry("llm_embed_outliers", (s, _) =>
+      Similarity.embedOutliers(s.table("embeddings"), k = 3)
         .selectExpr("vec_id", "CAST(label AS INT) AS label", "cos",
           "CAST(rank AS INT) AS rank")
         .orderBy("label", "rank"),
@@ -2775,9 +2768,9 @@ object Llm {
     // source side is the bounded probe set (one language's slice); at
     // corpus scale the candidate join composes over lshTopKBanded like
     // hardNegatives — the margin rule is unchanged
-    Entry("llm_bitext_mine", (s, d) => {
-      val e = emb(s, d)
-      val langs = docs(s, d).select(col("doc_id"), col("lang"))
+    Entry("llm_bitext_mine", (s, _) => {
+      val e = s.table("embeddings")
+      val langs = s.table("documents").select(col("doc_id"), col("lang"))
       def side(l: String) = e.join(langs, e("vec_id") === langs("doc_id"))
         .where(s"lang = '$l'").select("vec_id", "embedding")
       // the probe slice is the bounded side — hint it, or the theta join
@@ -2819,8 +2812,8 @@ object Llm {
          |       cos1 - cos2 > 0.02 AS accepted
          |FROM a ORDER BY probe_id""".stripMargin),
 
-    Entry("llm_ann_bucketed", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ann_bucketed", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.lshTopK(e.where("vec_id < 16"), e, 3, planes = 8)
         .orderBy("probe_id", "rank")
     },
@@ -2840,8 +2833,8 @@ object Llm {
     // multi-band LSH ANN: 4 bands of 8 disjoint hyperplanes, candidate
     // if ANY band agrees (OR-of-ANDs amplification) — the production
     // answer to the one-band index's recall collapse
-    Entry("llm_ann_banded", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ann_banded", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.lshTopKBanded(e.where("vec_id < 16"), e, 3,
         bands = 4, planesPerBand = 8)
         .orderBy("probe_id", "rank")
@@ -2869,8 +2862,8 @@ object Llm {
     // the measurement pair: recall@3 of the banded index against brute
     // force — quantifies how much the OR-of-bands recovers over
     // llm_ann_recall's one-band baseline
-    Entry("llm_ann_recall_banded", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ann_recall_banded", (s, _) => {
+      val e = s.table("embeddings")
       val probes = e.where("vec_id < 16")
       Similarity.annRecall(
         Similarity.bruteForceTopK(probes, e, 3),
@@ -2919,8 +2912,8 @@ object Llm {
     // The unit vector is posexploded to scalar (vec_id, pos, u) rows:
     // the driver's pandas comparator cannot sort array-typed columns
     // (round-4 verdict #1), and EntryContractSpec now bans them.
-    Entry("llm_normalize", (s, d) =>
-      Similarity.l2Normalize(emb(s, d))
+    Entry("llm_normalize", (s, _) =>
+      Similarity.l2Normalize(s.table("embeddings"))
         .select(col("vec_id"), posexplode(col("unit")))
         .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("u"))
@@ -2935,8 +2928,8 @@ object Llm {
 
     // JL-style dimensionality reduction over the shared md5 hyperplanes
     // (sign of projection j == lshBucket bit j); per-row fold, no shuffle
-    Entry("llm_random_project", (s, d) =>
-      Similarity.randomProject(emb(s, d), outDims = 8)
+    Entry("llm_random_project", (s, _) =>
+      Similarity.randomProject(s.table("embeddings"), outDims = 8)
         .select(col("vec_id"), posexplode(col("projected")))
         .select(col("vec_id"), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("v"))
@@ -2966,8 +2959,8 @@ object Llm {
     // path without having to oracle k-means training (round-3 ADVICE; the
     // trained path is covered by IvfSpec's recall test). nprobe=2 of k=8:
     // the candidate join really prunes, it isn't a disguised brute force.
-    Entry("llm_ivf_topk", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ivf_topk", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -3001,8 +2994,8 @@ object Llm {
     // deltas into the standing per-shard counts — the vector-DB ingest
     // step (cdc_incremental_agg's monoid-merge pattern on the IVF
     // layout): the corpus is never re-assigned, only the batch moves
-    Entry("llm_ivf_incremental", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ivf_incremental", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -3045,8 +3038,8 @@ object Llm {
     // UPDATED centroid rows only — the hot-shard surgery the balance
     // audit calls for; only the split cluster's members are rescanned
     // after the one checkpointed assign (plan-gated in PlanShapeSpec)
-    Entry("llm_ivf_split", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ivf_split", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -3098,8 +3091,8 @@ object Llm {
     // ppm share, and an integer hot flag (n·k > 2·total = twice the
     // balanced share). Fixed centroids like llm_ivf_topk so the oracle
     // replays assignment without oracling k-means
-    Entry("llm_ivf_balance", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ivf_balance", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -3138,13 +3131,13 @@ object Llm {
     // pairs are trivially recall 1.0 and would densify candidates
     // quadratically per exact class; never all-pairs; counts exact
     // integers, two ROUND divisions at the edge
-    Entry("llm_rouge_verify", (s, d) => {
+    Entry("llm_rouge_verify", (s, _) => {
       // localCheckpoint (r16 opt): only the pair-sized candidate set is
       // materialized (two consumers). Checkpointing the survivor corpus
       // and the bigram multiset was A/B'd and LOST (1.76 → 2.14 s) —
       // corpus-scale string materialization costs more than the lazy
       // re-derives here.
-      val dd = Dedup.exactSurvivors(docs(s, d))
+      val dd = Dedup.exactSurvivors(s.table("documents"))
       val cand = Shared.cut(Dedup.lshCandidates(dd).select("doc_a", "doc_b"))
       val bg = dd.select(col("doc_id"),
           expr(s"split(${graft.llm.Dedup.normalizeExpr}, ' ')").as("w"))
@@ -3198,8 +3191,8 @@ object Llm {
     // zero-hit paths, not just agreement. Integer hit counts until the
     // final rounded ratio; both rankings tie-break on cand_id, so both
     // result sets (and hence the recall) are deterministic.
-    Entry("llm_ann_recall", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ann_recall", (s, _) => {
+      val e = s.table("embeddings")
       val probes = e.where("vec_id < 16")
       val exact = Similarity.bruteForceTopK(probes, e, 3)
       val approx = Similarity.lshTopK(probes, e, 3, planes = 8)
@@ -3242,8 +3235,8 @@ object Llm {
     // content-defined chunk boundaries (FastCDC-style rolling-hash
     // cuts): every (doc, chunk) with its offset/length/md5 — the
     // storage-dedup keys identical passages share wherever they sit
-    Entry("llm_cdc_chunks", (s, d) =>
-      Dedup.cdcChunks(docs(s, d)).orderBy("doc_id", "chunk_idx"),
+    Entry("llm_cdc_chunks", (s, _) =>
+      Dedup.cdcChunks(s.table("documents")).orderBy("doc_id", "chunk_idx"),
       // exact top-3 (cosine_topk CTEs, probes < 16) vs the LSH-bucketed
       // ANN (ann_bucketed CTEs) -> per-probe hit counts -> rounded recall
       // the same rolling-hash boundary rule over each doc's positions;
@@ -3257,8 +3250,8 @@ object Llm {
     // unique-chunk bytes; the ratio is what a chunked blob store saves.
     // ONE pass over the chunk stream: same-md5 chunks share their
     // length, so logical bytes = Σ ul·copies off the unique table
-    Entry("llm_cdc_dedup", (s, d) =>
-      Dedup.cdcChunks(docs(s, d))
+    Entry("llm_cdc_dedup", (s, _) =>
+      Dedup.cdcChunks(s.table("documents"))
         .groupBy("chunk_md5")
         .agg(first(col("len")).cast("long").as("ul"),
           count(lit(1)).as("copies"))
@@ -3284,8 +3277,8 @@ object Llm {
     // per-group centroid drift between corpus versions: v2 drops every
     // 7th vector (re-land churn) and NEGATES every 3rd (a re-encoded /
     // poisoned slice); cos(mean_v1, mean_v2) per source flags it
-    Entry("llm_embedding_drift", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_embedding_drift", (s, _) => {
+      val e = s.table("embeddings")
       val v1 = e.select(expr("vec_id % 5").as("grp"), col("embedding"))
       val v2 = e.where("vec_id % 7 <> 0")
         .select(expr("vec_id % 5").as("grp"),
@@ -3336,8 +3329,8 @@ object Llm {
     // measurement that decides whether prefix-truncated vectors (4x
     // less shuffle width and index memory) retrieve well enough; pure
     // reuse of the brute-force + recall machinery over sliced arrays
-    Entry("llm_matryoshka_recall", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_matryoshka_recall", (s, _) => {
+      val e = s.table("embeddings")
       val probes = e.where("vec_id < 16")
       def pre(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("embedding", expr("slice(embedding, 1, 16)"))
@@ -3383,8 +3376,8 @@ object Llm {
     // int8-range scalar quantization: per-vector code signature (sum /
     // zeros / min / max) pins every code of every vector — a one-ULP
     // drift in the amp reduction or the rounding step hash-mismatches
-    Entry("llm_quantize_embed", (s, d) =>
-      Similarity.quantizeCodes(emb(s, d)).selectExpr(
+    Entry("llm_quantize_embed", (s, _) =>
+      Similarity.quantizeCodes(s.table("embeddings")).selectExpr(
           "vec_id",
           "aggregate(codes, CAST(0 AS BIGINT), (acc, v) -> acc + v) AS code_sum",
           "CAST(size(filter(codes, v -> v = 0)) AS INT) AS n_zero",
@@ -3409,8 +3402,8 @@ object Llm {
     // recall@3 of integer-code dot-product ranking against exact float
     // cosine — measures what the 4x memory saving costs in ranking
     // quality, the acceptance gate before deploying quantized ANN
-    Entry("llm_quantize_recall", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_quantize_recall", (s, _) => {
+      val e = s.table("embeddings")
       val exact = Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 3)
       val q = Similarity.quantizeCodes(e)
       val approx = Similarity.quantizedTopK(q.where("vec_id < 16"), q, 3)
@@ -3461,8 +3454,8 @@ object Llm {
     // llm_ivf_topk: the query path is oracled without oracling k-means;
     // the trained path is IvfSpec-covered). Threshold 0.4 drops a real
     // slice at every scale (18/19/235 vectors at sf0.001/0.01/0.1)
-    Entry("llm_semantic_dedup", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_semantic_dedup", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -3487,10 +3480,10 @@ object Llm {
          |WHERE d.vec_id IS NULL
          |ORDER BY a.vec_id""".stripMargin),
 
-    Entry("llm_embed_neardup", (s, d) =>
+    Entry("llm_embed_neardup", (s, _) =>
       // 0.4: the synthetic embeddings have no true dups (max pairwise
       // cosine ~0.51 at sf0.01) — the cut keeps the entry non-empty
-      Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
+      Similarity.cosineNearDups(s.table("embeddings"), minCosine = 0.4)
         .orderBy("vec_a", "vec_b"),
       s"""WITH b AS (SELECT vec_id, embedding, ${duckBucket("embedding", 8, 64)} AS bucket
          |           FROM embeddings)
@@ -3506,8 +3499,8 @@ object Llm {
     // containment (verbatim leakage) and llm_bloom_decontaminate's
     // at-scale probe set; 0.2 flags a real slice of the near-orthogonal
     // synthetic embeddings at every scale
-    Entry("llm_semantic_decontaminate", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_semantic_decontaminate", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.semanticDecontaminate(
           e.where("vec_id >= 8"), e.where("vec_id < 8"), minCosine = 0.2)
         .orderBy("vec_id")
@@ -3525,8 +3518,8 @@ object Llm {
     // cross-family composition: embedding near-dup pairs grouped into
     // connected components by the same dupClusters operator the text
     // pipeline uses — one clustering primitive, any pair source
-    Entry("llm_embed_clusters", (s, d) => {
-      val pairs = Similarity.cosineNearDups(emb(s, d), minCosine = 0.4)
+    Entry("llm_embed_clusters", (s, _) => {
+      val pairs = Similarity.cosineNearDups(s.table("embeddings"), minCosine = 0.4)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
       Dedup.dupClusters(pairs)
         .select(col("doc_id").as("vec_id"), col("cluster_rep"))
@@ -3545,10 +3538,10 @@ object Llm {
          |SELECT vec_id, min(lab) AS cluster_rep FROM reach
          |GROUP BY vec_id ORDER BY vec_id""".stripMargin),
 
-    Entry("llm_frame_sample", (s, d) =>
+    Entry("llm_frame_sample", (s, _) =>
       // fixture text is pure ASCII (checked: octet_length == length), so
       // the oracle's char-based slicing matches the byte-based frames
-      Multimodal.frameSample(Multimodal.attach(docs(s, d)), nFrames = 4)
+      Multimodal.frameSample(Multimodal.attach(s.table("documents")), nFrames = 4)
         .toDF().orderBy("doc_id", "frame_idx"),
       """WITH b AS (SELECT doc_id, text, length(text) AS n,
         |                  LEAST(4, length(text)) AS nf
@@ -3567,8 +3560,8 @@ object Llm {
     // geometry + exact per-channel pixel sums come from the decoded
     // raster, and the oracle recomputes the generation formulas over a
     // pixel grid — a wrong decode cannot hash-match.
-    Entry("llm_multimodal_decode", (s, d) => {
-      val dec = Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
+    Entry("llm_multimodal_decode", (s, _) => {
+      val dec = Multimodal.decodeImages(Multimodal.synthesizeImages(s.table("documents")))
       dec.toDF().select(col("doc_id"), col("width"), col("height"),
         col("sum_r"), col("sum_g"), col("sum_b"),
         meanChan("sum_r").as("mean_r"), meanChan("sum_g").as("mean_g"),
@@ -3606,8 +3599,8 @@ object Llm {
     // cost of reading 26 bytes per blob; the oracle recomputes the
     // dimensions from the generator's closed form, so agreement proves
     // the real encoder wrote the header the spec promises
-    Entry("llm_image_meta", (s, d) =>
-      Multimodal.synthesizeImages(docs(s, d)).toDF()
+    Entry("llm_image_meta", (s, _) =>
+      Multimodal.synthesizeImages(s.table("documents")).toDF()
         .selectExpr("doc_id",
           "hex(substring(png, 1, 8)) = '89504E470D0A1A0A' AS sig_ok",
           "CAST(conv(hex(substring(png, 17, 4)), 16, 10) AS INT) AS width",
@@ -3628,9 +3621,9 @@ object Llm {
     // (16 bins, DIV 16) — the colorimetry profile an image-curation
     // filter reads; oracle = the generator's pixel formula binned
     // identically
-    Entry("llm_image_histogram", (s, d) =>
+    Entry("llm_image_histogram", (s, _) =>
       Multimodal.histogramImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")))
+          s.table("documents").where("doc_id < 200")))
         .toDF()
         .selectExpr("doc_id", "CAST(bin AS INT) AS bin",
           "CAST(n_pixels AS BIGINT) AS n_pixels")
@@ -3657,8 +3650,8 @@ object Llm {
     // (n_s1·n_s2 cross-source, C(n,2) same-source, source-ordered) —
     // so verbatim copying across sources stays visible without ever
     // materializing the per-copy candidate clique
-    Entry("llm_dup_source_matrix", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_dup_source_matrix", (s, _) => {
+      val dd = s.table("documents")
       // localCheckpoint (r16 opt): the class table joins four ways (the
       // survivor selection + both pair endpoints), the per-source class
       // counts three ways (both endpoints + the intra-class pairs)
@@ -3726,8 +3719,8 @@ object Llm {
     // the routing is total; the oracle replays the generator's dimension
     // formulas through the identical scoring. Decode is map-only; the
     // rollup is one |buckets|-row agg — embarrassingly parallel at 100 TB
-    Entry("llm_image_buckets", (s, d) => {
-      Multimodal.decodeImages(Multimodal.synthesizeImages(docs(s, d)))
+    Entry("llm_image_buckets", (s, _) => {
+      Multimodal.decodeImages(Multimodal.synthesizeImages(s.table("documents")))
         .toDF().createOrReplaceTempView("__img_bk")
       s.sql("""
         WITH dims AS (SELECT doc_id, width AS w, height AS h FROM __img_bk
@@ -3776,8 +3769,8 @@ object Llm {
     // share ("keep the top 3 deciles → keep 41% of the chars"). One
     // scan + one post-agg global window over |docs| ranks; at 100 TB
     // the rank runs through the two-phase prefix sum like shuffleOrder
-    Entry("llm_quality_survival", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__qs_docs")
+    Entry("llm_quality_survival", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__qs_docs")
       s.sql("""
         WITH sc AS (SELECT doc_id, n_chars,
                            (1000 * length(regexp_replace(text, '[^a-zA-Z0-9]', '')))
@@ -3830,9 +3823,9 @@ object Llm {
     // decode -> nearest-neighbor resize to fit 24px: the resample reads
     // the real decoded raster; the oracle replays the integer source-pixel
     // map over the target grid
-    Entry("llm_resize", (s, d) => {
+    Entry("llm_resize", (s, _) => {
       val dec = Multimodal.resizeImages(
-        Multimodal.synthesizeImages(docs(s, d)), maxSide = 24)
+        Multimodal.synthesizeImages(s.table("documents")), maxSide = 24)
       dec.toDF().select(col("doc_id"), col("width"), col("height"),
         col("sum_r"), col("sum_g"), col("sum_b"))
         .orderBy("doc_id")
@@ -3869,8 +3862,8 @@ object Llm {
     // column-adjacent comparison bits) — the oracle replays the
     // synthesis formulas over the thumbnail grid, so a wrong decode or
     // a wrong resample map cannot hash-match
-    Entry("llm_image_dhash", (s, d) =>
-      Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+    Entry("llm_image_dhash", (s, _) =>
+      Multimodal.dhashImages(Multimodal.synthesizeImages(s.table("documents"))).toDF()
         .orderBy("doc_id"),
       // the ImageSynth formulas replayed over the 11x6 dHash thumbnail
       // grid: luma = 299r+587g+114b on the nearest-neighbor source pixel,
@@ -3885,8 +3878,8 @@ object Llm {
     // basis (fixed fold order), 63 median-thresholded AC bits + the
     // exact integer DC mass — the frequency-domain fingerprint that
     // survives the noise dHash gradient bits flip on
-    Entry("llm_image_phash", (s, d) =>
-      Multimodal.phashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+    Entry("llm_image_phash", (s, _) =>
+      Multimodal.phashImages(Multimodal.synthesizeImages(s.table("documents"))).toDF()
         .orderBy("doc_id"),
       // the synthesis formulas on the 32×32 grid, the IDENTICAL
       // driver-literal DCT basis, ascending-pixel folds, order-statistic
@@ -3903,9 +3896,9 @@ object Llm {
     // reporting, never an all-pairs image comparison; the oracle IS the
     // all-pairs Hamming join over recomputed fingerprints, green proving
     // the banding lossless
-    Entry("llm_image_neardup", (s, d) =>
+    Entry("llm_image_neardup", (s, _) =>
       Dedup.fingerprintNearGroups(
-        Multimodal.dhashImages(Multimodal.synthesizeImages(docs(s, d))).toDF()
+        Multimodal.dhashImages(Multimodal.synthesizeImages(s.table("documents"))).toDF()
           .withColumnRenamed("dhash", "simhash"))
         .select(col("sim_a").as("fp_a"), col("sim_b").as("fp_b"),
           col("hamming"), col("docs_a"), col("docs_b"), col("pair_count"))
@@ -3936,8 +3929,8 @@ object Llm {
     // energy) from the decoded PCM frames as exact integers — the oracle
     // recomputes the generation formulas over an index series, so a
     // wrong decode cannot hash-match
-    Entry("llm_audio_features", (s, d) => {
-      val dec = Multimodal.decodeAudio(Multimodal.synthesizeAudio(docs(s, d)))
+    Entry("llm_audio_features", (s, _) => {
+      val dec = Multimodal.decodeAudio(Multimodal.synthesizeAudio(s.table("documents")))
       dec.toDF().select(col("doc_id"), col("sample_rate"), col("n_samples"),
         col("sum_val"), col("sum_abs"), col("peak_abs"), col("energy"))
         .orderBy("doc_id")
@@ -3965,8 +3958,8 @@ object Llm {
     // census, clipped-RUN shape (flat-lined segment vs transient peaks)
     // and zero-crossing count — all exact integers from one in-order
     // pass; the oracle replays the synth formula through gaps-and-islands
-    Entry("llm_audio_clipping", (s, d) =>
-      Multimodal.audioQc(Multimodal.synthesizeAudio(docs(s, d)))
+    Entry("llm_audio_clipping", (s, _) =>
+      Multimodal.audioQc(Multimodal.synthesizeAudio(s.table("documents")))
         .toDF().orderBy("doc_id"),
       // the synth formula replayed through the identical clip / run /
       // crossing rules — runs via gaps-and-islands on the sample index
@@ -4002,9 +3995,9 @@ object Llm {
     // BT.601 luma, integer kernels, interior pixels only) — the
     // blank/flat-image curation signal; the oracle replays the pixel
     // formula through the identical kernel
-    Entry("llm_image_edges", (s, d) =>
+    Entry("llm_image_edges", (s, _) =>
       Multimodal.convolveImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")), threshold = 200000L)
+          s.table("documents").where("doc_id < 200")), threshold = 200000L)
         .toDF()
         .where("width >= 3 AND height >= 3")
         .selectExpr("doc_id", "CAST(width AS INT) AS width",
@@ -4051,9 +4044,9 @@ object Llm {
     // variance runs ~1e9–1e10, squarely in the pinned DuckDB
     // multiply-ROUND-divide ULP regime (probed here: …798.222222 vs
     // …798.222223), so it leaves FLOOR→BIGINT, not ROUND(,6)
-    Entry("llm_image_blur", (s, d) =>
+    Entry("llm_image_blur", (s, _) =>
       Multimodal.convolveImages(Multimodal.synthesizeImages(
-          docs(s, d).where("doc_id < 200")), threshold = 200000L)
+          s.table("documents").where("doc_id < 200")), threshold = 200000L)
         .toDF()
         .where("width >= 3 AND height >= 3")
         .selectExpr("doc_id",
@@ -4098,8 +4091,8 @@ object Llm {
     // encodings — DuckDB's levenshtein is byte-based, so the alphabet
     // stays printable ASCII); hypothesis = deterministic md5-keyed
     // drops + append-'q' typos over the 40-word reference prefix
-    Entry("llm_wer_eval", (s, d) =>
-      TextAnalysis.werEval(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_wer_eval", (s, _) =>
+      TextAnalysis.werEval(s.table("documents")).orderBy("doc_id"),
       // identical word stream, hash flags, per-doc vocabulary index and
       // ASCII encoding; DuckDB's byte-based levenshtein coincides with
       // Spark's codepoint walk on the pure-ASCII alphabet
@@ -4144,8 +4137,8 @@ object Llm {
     // integer; Q = Σ q_num / 4m²). Same exact-collapse → LSH-banded
     // survivor pairs as llm_dup_source_matrix — never all-pairs; the
     // modularity terms are three bounded per-source rollups
-    Entry("llm_dup_modularity", (s, d) => {
-      val survivors = Dedup.exactSurvivors(docs(s, d))
+    Entry("llm_dup_modularity", (s, _) => {
+      val survivors = Dedup.exactSurvivors(s.table("documents"))
       val pairs = Dedup.nearDupPairs(survivors)
       val src = survivors.select(col("doc_id"), col("source"))
       // localCheckpoint: edges feed THREE rollups (m, degrees, intra) —
@@ -4221,8 +4214,8 @@ object Llm {
     // exact integers, and the oracle recomputes the formulas over a
     // (frame, x, y) grid — a wrong walk, row flip, stride pad or
     // channel order cannot hash-match
-    Entry("llm_video_decode", (s, d) =>
-      Multimodal.decodeVideo(Multimodal.synthesizeVideo(docs(s, d)))
+    Entry("llm_video_decode", (s, _) =>
+      Multimodal.decodeVideo(Multimodal.synthesizeVideo(s.table("documents")))
         .toDF().orderBy("doc_id"),
       // the synthesis formulas replayed over a (frame, x, y) grid — the
       // decoder's container walk must land on exactly these values
@@ -4256,8 +4249,8 @@ object Llm {
     // boundary, the exact integer luma SAD + the mean-threshold cut
     // verdict — the keyframe-selection primitive; map-only over the
     // payload scan, one row per boundary
-    Entry("llm_scene_cuts", (s, d) =>
-      Multimodal.sceneCuts(Multimodal.synthesizeVideo(docs(s, d)))
+    Entry("llm_scene_cuts", (s, _) =>
+      Multimodal.sceneCuts(Multimodal.synthesizeVideo(s.table("documents")))
         .toDF().orderBy("doc_id", "frame"),
       // per-boundary luma SADs recomputed from the synth formulas over a
       // (frame, x, y) grid — a wrong walk, stride pad, channel order or
@@ -4287,8 +4280,8 @@ object Llm {
     // codec in the JDK or this container): md5-derived pseudo-features
     // through the same batched mapPartitions shape a JNI/ffmpeg codec
     // would plug into
-    Entry("llm_av_features", (s, d) => {
-      val dec = Multimodal.decode(Multimodal.attach(docs(s, d)))
+    Entry("llm_av_features", (s, _) => {
+      val dec = Multimodal.decode(Multimodal.attach(s.table("documents")))
       val cols = Seq(col("doc_id"), col("n_bytes"), col("content_md5"),
         col("width"), col("height")) ++
         (0 until 8).map(j => col("feature").getItem(j).as(s"f$j"))
@@ -4308,8 +4301,8 @@ object Llm {
 
     // hard-negative mining: nearest different-label corpus vectors per
     // probe — the ANN-mining step of contrastive training loops
-    Entry("llm_hard_negatives", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_hard_negatives", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.hardNegatives(e.where("vec_id < 16"), e, 3)
         .orderBy("probe_id", "rank")
     },
@@ -4333,8 +4326,8 @@ object Llm {
     // speculative-decoding draft table: per word, the argmax corpus
     // successor (count >= 3) + successor-vocab width — corpus frequency
     // (no per-doc distinct), vocabulary-bounded argmax partitions
-    Entry("llm_ngram_draft", (s, d) =>
-      TextAnalysis.ngramDraft(docs(s, d), minCount = 3).orderBy("w1"),
+    Entry("llm_ngram_draft", (s, _) =>
+      TextAnalysis.ngramDraft(s.table("documents"), minCount = 3).orderBy("w1"),
       // corpus bigram counts (no DISTINCT — draft tables sample corpus
       // frequency), argmax per first word with the same (cnt, w2) tie-break
       s"""WITH norm AS (SELECT string_split($NORM, ' ') AS w FROM documents),
@@ -4354,8 +4347,8 @@ object Llm {
     // Hamming top-5, each hit flagged against the exact cosine top-5 —
     // the 1-bit quantization recall row next to llm_quantize_recall's
     // int8 and llm_pq_recall's PQ points
-    Entry("llm_hamming_topk", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_hamming_topk", (s, _) => {
+      val e = s.table("embeddings")
       val probes = e.where("vec_id < 16")
       val exact = Similarity.bruteForceTopK(probes, e, 5)
         .select(col("probe_id"), col("cand_id"), lit(1).as("__hit"))
@@ -4404,8 +4397,8 @@ object Llm {
     // any ANN index is built). Per-row norm² is a deterministic
     // left-fold; the corpus SUM rides DECIMAL after a per-row ROUND
     // (order-free), never a raw double sum
-    Entry("qc_embedding_profile", (s, d) =>
-      emb(s, d)
+    Entry("qc_embedding_profile", (s, _) =>
+      s.table("embeddings")
         .selectExpr("vec_id", "size(embedding) AS dims",
           """aggregate(embedding, CAST(0.0 AS DOUBLE),
             |  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""
@@ -4448,8 +4441,8 @@ object Llm {
     // union sketch = bucketwise register max, ONE token scan then
     // |sources|x64 integer arithmetic — "which crawls duplicate each
     // other" without any cross-source token comparison
-    Entry("llm_hll_overlap", (s, d) =>
-      TextAnalysis.distinctOverlap(docs(s, d)).orderBy("src_a", "src_b"),
+    Entry("llm_hll_overlap", (s, _) =>
+      TextAnalysis.distinctOverlap(s.table("documents")).orderBy("src_a", "src_b"),
       // the llm_sketch_merge register pipeline extended to DENSE per-source
       // registers, pairwise bucket-max unions and the same single-division
       // estimates — a register or densification drift breaks every pair
@@ -4503,13 +4496,13 @@ object Llm {
     // vec 0 via reciprocal-rank fusion — scores never mix, only ranks,
     // the reason RRF survives incomparable scales; fixed-order addition
     // chain keeps the doubles cross-engine deterministic
-    Entry("llm_rrf_fusion", (s, d) => {
-      val lex = TextAnalysis.bm25(docs(s, d), Seq("hash", "join", "window"))
+    Entry("llm_rrf_fusion", (s, _) => {
+      val lex = TextAnalysis.bm25(s.table("documents"), Seq("hash", "join", "window"))
         .orderBy(col("bm25").desc, col("doc_id")).limit(50)
         .withColumn("rank",
           expr("row_number() OVER (ORDER BY bm25 DESC, doc_id)"))
         .select("doc_id", "rank")
-      val e = emb(s, d)
+      val e = s.table("embeddings")
       val sem = Similarity.bruteForceTopK(e.where("vec_id = 0"), e, 50)
         .select(col("cand_id").as("doc_id"), col("rank"))
       Similarity.rrfFuse(Seq("lex" -> lex, "sem" -> sem))
@@ -4555,8 +4548,8 @@ object Llm {
     // plurality label of its 5 nearest neighbors, scored against its own
     // label — the standard embedding-quality probe; deterministic vote
     // tie-break (votes, then closest supporter, then min label)
-    Entry("llm_knn_classify", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_knn_classify", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.knnClassify(e.where("vec_id < 100"), e, 5)
         .orderBy("probe_id")
     },
@@ -4591,8 +4584,8 @@ object Llm {
     // the candidate set vs exact published in the SAME row — the
     // deploy-or-not evidence (vote agreement is bounded by candidate
     // recall). llm_knn_classify stays as the exact eval baseline
-    Entry("llm_knn_approx", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_knn_approx", (s, _) => {
+      val e = s.table("embeddings")
       val probes = e.where("vec_id < 100")
       val approx = Similarity.hammingTopK(probes, e, 5)
       val exact = Similarity.bruteForceTopK(probes, e, 5)
@@ -4657,8 +4650,8 @@ object Llm {
     // per-source dataset card + the ALL rollup row in the same single
     // scan: docs, chars, word tokens, language spread, short-doc ratio —
     // the corpus datasheet a curation run publishes next to its output
-    Entry("llm_dataset_card", (s, d) =>
-      docs(s, d)
+    Entry("llm_dataset_card", (s, _) =>
+      s.table("documents")
         .rollup("source")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -4691,8 +4684,8 @@ object Llm {
     // and norms exact integers, cos² = one fixed IEEE tree at the edge
     // (squared on purpose: no sqrt cross-engine). Work ∝ per-block
     // density² + shared-token join — never all-pairs
-    Entry("llm_lexical_cosine", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__lc_docs")
+    Entry("llm_lexical_cosine", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__lc_docs")
       s.sql(s"""
         WITH nrm AS (SELECT doc_id, ${graft.llm.Dedup.normalizeExpr} AS t
                      FROM __lc_docs),
@@ -4750,8 +4743,8 @@ object Llm {
     // (log never runs in-plan, the house rule); two corpus-token aggs +
     // one broadcast-sized df join, top-3 per doc through a rank window
     // the WindowGroupLimit prunes before the shuffle
-    Entry("llm_keywords", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__kw_docs")
+    Entry("llm_keywords", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__kw_docs")
       s.sql(s"""
         WITH toks AS (SELECT doc_id, tok
                       FROM __kw_docs
@@ -4797,8 +4790,8 @@ object Llm {
     // query terms excluded — the first-stage retrieval loop a search
     // system runs before the expensive reranker. Every score integer,
     // both rankings tie-broken (doc_id / term), top-k via rank windows
-    Entry("llm_query_expansion", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__qe_docs")
+    Entry("llm_query_expansion", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__qe_docs")
       s.sql(s"""
         WITH toks AS (SELECT doc_id, tok
                       FROM __qe_docs
@@ -4869,8 +4862,8 @@ object Llm {
     // membership. Two token aggs (map-side combinable) + a
     // vocabulary-sized unigram join + a 1-row totals broadcast — at
     // 100 TB every shuffle key is a token, never a doc
-    Entry("llm_pmi_collocations", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__pmi_docs")
+    Entry("llm_pmi_collocations", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__pmi_docs")
       s.sql(s"""
         WITH norm AS (SELECT split(${graft.llm.Dedup.normalizeExpr}, ' ') AS w
                       FROM __pmi_docs),
@@ -4926,8 +4919,8 @@ object Llm {
     // synthesized onto a deterministic doc subset (the fixture corpus is
     // clean prose) so both verdict paths carry rows. Map-only + one
     // rollup — embarrassingly parallel
-    Entry("llm_code_detect", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__code_docs")
+    Entry("llm_code_detect", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__code_docs")
       s.sql("""
         WITH t AS (SELECT doc_id, source,
                           CASE WHEN doc_id % 6 = 0 THEN concat(text,
@@ -4973,8 +4966,8 @@ object Llm {
     // until it has more copies than batches — max_label_dup reports
     // exactly ceil(|label|/16)). One window over the label partition +
     // one rollup; the permutation is the shuffleOrder hash discipline
-    Entry("llm_contrastive_batches", (s, d) => {
-      emb(s, d).createOrReplaceTempView("__cb_emb")
+    Entry("llm_contrastive_batches", (s, _) => {
+      s.table("embeddings").createOrReplaceTempView("__cb_emb")
       s.sql("""
         WITH r AS (SELECT vec_id, label,
                           row_number() OVER (PARTITION BY label
@@ -5012,8 +5005,8 @@ object Llm {
     // projection + one hash agg — embarrassingly parallel at 100 TB.
     // URLs are synthesized deterministically from doc_id/source (the
     // fixture has no url column); min(doc_id) is the canonical keeper
-    Entry("llm_url_dedup", (s, d) => {
-      docs(s, d).createOrReplaceTempView("__url_docs")
+    Entry("llm_url_dedup", (s, _) => {
+      s.table("documents").createOrReplaceTempView("__url_docs")
       s.sql("""
         WITH u0 AS (SELECT doc_id,
                CASE WHEN doc_id % 5 = 0 THEN
@@ -5092,8 +5085,8 @@ object Llm {
     // FIXED IEEE tree over the integer counts (the qc_benford
     // discipline), banding on the ROUNDED grade so both engines compare
     // the identical double
-    Entry("llm_readability", (s, d) =>
-      docs(s, d)
+    Entry("llm_readability", (s, _) =>
+      s.table("documents")
         .selectExpr("doc_id",
           "CAST(size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS BIGINT) AS n_words",
           "CAST(GREATEST(1, size(regexp_extract_all(text, '[.!?]+', 0))) AS BIGINT) AS n_sents",
@@ -5130,8 +5123,8 @@ object Llm {
     // winnowing fingerprints (MOSS): per-doc window-minima digest over
     // 8-char gram hashes — shared substrings of >= 11 chars must share
     // a fingerprint
-    Entry("llm_winnow", (s, d) =>
-      TextAnalysis.winnow(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_winnow", (s, _) =>
+      TextAnalysis.winnow(s.table("documents")).orderBy("doc_id"),
       // the window-minima selection replayed over 1-based gram positions
       // (Spark's posexplode is 0-based: its pos >= 3 == i >= 4 here)
       s"""WITH nrm AS (SELECT doc_id, $NORM AS t FROM documents),
@@ -5151,8 +5144,8 @@ object Llm {
 
     // vocabulary encode: corpus-derived top-100 dictionary broadcast over
     // the token stream; ids_fp digests the exact id sequence per doc
-    Entry("llm_vocab_map", (s, d) =>
-      TextAnalysis.vocabEncode(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_vocab_map", (s, _) =>
+      TextAnalysis.vocabEncode(s.table("documents")).orderBy("doc_id"),
       // same derivation via string_split/window rank; the per-doc id
       // sequence digest uses ORDER BY pos inside string_agg where Spark
       // sorts the collected (pos, id) structs
@@ -5179,8 +5172,8 @@ object Llm {
     // MRR — rank discounts 1/log2(i+1) and the ideal prefix sums enter
     // as DRIVER literals (libm log never runs in plan — the qc_benford
     // discipline); the DCG fold adds hit discounts in rank order
-    Entry("llm_ndcg_eval", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_ndcg_eval", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
         .join(e.select(col("vec_id").as("probe_id"),
           col("label").as("probe_label")), "probe_id")
@@ -5229,13 +5222,13 @@ object Llm {
     // zero-overlap pairs counted at 0 via the LEFT join) — the pair
     // source for contrastive/paraphrase training that pure dedup
     // discards; composition of cosineNearDups + jaccardWithZeros
-    Entry("llm_paraphrase_mine", (s, d) => {
+    Entry("llm_paraphrase_mine", (s, _) => {
       // exact-collapse FRONT on identical vectors (the bbit_minhash
       // lesson applied to the embedding side): verbatim copies explode
       // the bucketed cosine self-join quadratically — factor-100 sweep
       // 177.6 s raw vs 4.57 s with min-id survivors; dup-free corpora
       // pass through unchanged
-      val surv = emb(s, d).groupBy("embedding")
+      val surv = s.table("embeddings").groupBy("embedding")
         .agg(min("vec_id").as("vec_id"))
       val cands = Similarity.cosineNearDups(surv, minCosine = 0.4)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
@@ -5248,7 +5241,7 @@ object Llm {
       val ids = cands.select(col("doc_a").as("doc_id"))
         .union(cands.select(col("doc_b").as("doc_id"))).distinct()
       Dedup.jaccardWithZeros(
-          docs(s, d).join(ids, Seq("doc_id"), "left_semi"), cands)
+          s.table("documents").join(ids, Seq("doc_id"), "left_semi"), cands)
         .where(col("jaccard") < 0.5)
         .select("doc_a", "doc_b", "cos", "jaccard")
         .orderBy("doc_a", "doc_b")
@@ -5290,8 +5283,8 @@ object Llm {
     // cumulative mass is an exact integer running sum over that bounded
     // head, totals come from
     // one separate agg
-    Entry("llm_vocab_coverage", (s, d) => {
-      val toks = docs(s, d)
+    Entry("llm_vocab_coverage", (s, _) => {
+      val toks = s.table("documents")
         .select(explode(expr(
           s"filter(split(${Dedup.normalizeExpr}, ' '), w -> length(w) > 0)"))
           .as("tok"))
@@ -5342,8 +5335,8 @@ object Llm {
     // per-bucket census with a doc-id-ordered mean fold. The per-source
     // rank window is the real CCNet shape (it sorts each language shard
     // by perplexity); buckets then gate which shard enters training
-    Entry("llm_ccnet_buckets", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_ccnet_buckets", (s, _) => {
+      val dd = s.table("documents")
       TextAnalysis.bigramScore(dd, minCount = 2)
         .join(dd.select("doc_id", "source"), "doc_id")
         .selectExpr("source", "doc_id", "avg_p",
@@ -5406,8 +5399,8 @@ object Llm {
     // retrieval evaluation: first same-label hit rank in the exact top-10
     // per probe, with its reciprocal — the MRR ingredient; probes whose
     // top-10 holds no relevant result emit no row (both engines)
-    Entry("llm_retrieval_mrr", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_retrieval_mrr", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.bruteForceTopK(e.where("vec_id < 32"), e, 10)
         .join(e.select(col("vec_id").as("probe_id"),
           col("label").as("probe_label")), "probe_id")
@@ -5442,8 +5435,8 @@ object Llm {
     // and the recomputed centroid means are DECIMAL-exact sums over one
     // correctly-rounded double division — the training step spark.ml
     // hides, pinned value-by-value against DuckDB
-    Entry("llm_kmeans_iter", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_kmeans_iter", (s, _) => {
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
       Ivf.lloydIterate(e, cents).orderBy("centroid_id", "dim")
@@ -5475,8 +5468,8 @@ object Llm {
     // each iteration's rounded means feed the next through a FLOAT
     // round-trip, so one drifting component anywhere in the chain
     // hash-mismatches the final state
-    Entry("llm_kmeans_converged", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_kmeans_converged", (s, _) => {
+      val e = s.table("embeddings")
       val seed = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -5520,8 +5513,8 @@ object Llm {
     // matching): Ed-Join prefix filtering on rarest q-grams, threshold
     // levenshtein verify — the oracle brute-forces every pair, so a
     // missed candidate (unsound prefix filter) hash-mismatches
-    Entry("llm_edit_distance_join", (s, d) => {
-      val keyed = Tables.load(s, d, "documents")
+    Entry("llm_edit_distance_join", (s, _) => {
+      val keyed = s.table("documents")
         .selectExpr("doc_id", "substr(text, 1, 30) AS st")
       Fuzzy.editDistanceJoin(keyed, "doc_id", "st", k = 3)
         .selectExpr("a_id", "b_id", "CAST(dist AS INT) AS dist")
@@ -5544,8 +5537,8 @@ object Llm {
     // associative, so re-keying docs by source before the minhash groupBy
     // yields the signature of each source's union shingle set; pairwise
     // agreement over 8 permutations estimates cross-source Jaccard
-    Entry("llm_source_similarity", (s, d) =>
-      Dedup.groupSimilarity(docs(s, d), "source").orderBy("src_a", "src_b"),
+    Entry("llm_source_similarity", (s, _) =>
+      Dedup.groupSimilarity(s.table("documents"), "source").orderBy("src_a", "src_b"),
       // re-keys docs by source and replays the identical minhash pipeline:
       // the per-source signature must equal the union-set signature, and
       // the agreement count is the MinHash Jaccard estimator
@@ -5568,8 +5561,8 @@ object Llm {
     // one BPE merge-training step: pre/post pair counts around the
     // argmax merge — the corpus collapses to the word-frequency dict
     // before any pair work (the classic BPE scale property)
-    Entry("llm_bpe_merge_step", (s, d) =>
-      TextAnalysis.bpeMergeStep(docs(s, d)),
+    Entry("llm_bpe_merge_step", (s, _) =>
+      TextAnalysis.bpeMergeStep(s.table("documents")),
       // identical argmax + the same literal space-delimited replace pass
       // (both engines: non-overlapping leftmost), recounted from scratch
       s"""WITH toksb AS (SELECT unnest(string_split($NORM, ' ')) AS w FROM documents),
@@ -5600,8 +5593,8 @@ object Llm {
     // merges by freq(ab)/(freq(a)·freq(b)) — rare-but-cohesive pairs
     // beat frequent collisions; score is a raw IEEE division (no ROUND
     // edge), ties lexicographic
-    Entry("llm_wordpiece_step", (s, d) =>
-      TextAnalysis.wordpieceStep(docs(s, d)).orderBy("rank"),
+    Entry("llm_wordpiece_step", (s, _) =>
+      TextAnalysis.wordpieceStep(s.table("documents")).orderBy("rank"),
       // the same dictionary, symbol frequencies and likelihood ratio —
       // double(n) / (double(lf) · double(rf)) is the identical IEEE op
       // sequence, so raw scores hash-match with no rounding edge
@@ -5634,8 +5627,8 @@ object Llm {
     // train split — exact fingerprint or cross-band near-dup — i.e. the
     // complement of dedupeIncremental's survivors; the check that runs
     // before trusting any benchmark number
-    Entry("llm_split_leakage", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_split_leakage", (s, _) => {
+      val dd = s.table("documents")
       // localCheckpoint (r17 opt): the split table is METADATA-scale
       // (doc_id, split) but its derivation is a corpus-wide
       // normalize+md5 pass, and it feeds the train selection (consumed
@@ -5687,8 +5680,8 @@ object Llm {
     // corpus size, exact-dup mass, candidate/verified pair counts,
     // cluster census — every number an aggregate of operators that are
     // themselves oracled row-by-row elsewhere
-    Entry("llm_dedup_report", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_dedup_report", (s, _) => {
+      val dd = s.table("documents")
       // localCheckpoint (r16 opt): the exact table feeds the mass stats
       // AND the survivor join; survivors feed candidate generation AND
       // the jaccard verify — 12 parquet scans executed in the lazy form
@@ -5754,8 +5747,8 @@ object Llm {
     // no cluster ever serializes into one task, no global sort). The
     // oracle replays assignment + ONE flat per-cluster window, proving
     // the stitch
-    Entry("llm_cluster_quota", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_cluster_quota", (s, _) => {
+      val e = s.table("embeddings")
       val centroids = e.where("vec_id < 8")
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -5763,7 +5756,7 @@ object Llm {
         .select(col("vec_id").as("doc_id"),
           concat(lit("c"), col("centroid_id")).as("cluster"))
       TextAnalysis.tokenBudgetMix(
-          docs(s, d).join(clusters, Seq("doc_id")),
+          s.table("documents").join(clusters, Seq("doc_id")),
           (0 to 7).map(i => s"c$i" -> 1L).toMap,
           budgetTokens = 16000L, seed = "quota1", sourceCol = "cluster")
         .orderBy("doc_id")
@@ -5806,8 +5799,8 @@ object Llm {
     // training-mix construction under a 20k-token budget with 1:2:3:4
     // source weights — quota fill in seeded order via the two-phase
     // prefix sum (no flat per-source window task)
-    Entry("llm_token_budget_mix", (s, d) =>
-      TextAnalysis.tokenBudgetMix(docs(s, d),
+    Entry("llm_token_budget_mix", (s, _) =>
+      TextAnalysis.tokenBudgetMix(s.table("documents"),
           Map("src0" -> 1L, "src1" -> 2L, "src2" -> 3L, "src5" -> 4L),
           budgetTokens = 20000L, seed = "mix1")
         .orderBy("doc_id"),
@@ -5834,8 +5827,8 @@ object Llm {
 
     // license/provenance propagation through exact dedup: the survivor
     // carries the full source attribution of every collapsed copy
-    Entry("llm_dedup_attribution", (s, d) =>
-      docs(s, d)
+    Entry("llm_dedup_attribution", (s, _) =>
+      s.table("documents")
         .select(expr(s"md5(${Dedup.normalizeExpr})").as("fp"),
           col("doc_id"), col("source"))
         .groupBy("fp")
@@ -5853,8 +5846,8 @@ object Llm {
     // triangle census of the LSH candidate graph over DISTINCT content
     // (copy cliques would contribute n-choose-3 degenerate triangles):
     // near-clique duplicate communities vs chains of borderline pairs
-    Entry("llm_dup_triangles", (s, d) =>
-      Dedup.dupTriangles(Dedup.lshCandidates(Dedup.exactSurvivors(docs(s, d))))
+    Entry("llm_dup_triangles", (s, _) =>
+      Dedup.dupTriangles(Dedup.lshCandidates(Dedup.exactSurvivors(s.table("documents"))))
         .orderBy("a", "b", "c"),
       // the same wedge-close joins over the oracle's own candidate CTE,
       // candidates drawn from the min-id exact-dedup survivors
@@ -5870,8 +5863,8 @@ object Llm {
 
     // content-policy blocklist: per-category term-occurrence counts with
     // the block verdict at >2 hits; the policy table broadcasts
-    Entry("llm_blocklist_filter", (s, d) =>
-      TextAnalysis.blocklistFilter(docs(s, d),
+    Entry("llm_blocklist_filter", (s, _) =>
+      TextAnalysis.blocklistFilter(s.table("documents"),
           Map("latency" -> Seq("slow"), "volume" -> Seq("big", "small")),
           maxHits = 2)
         .orderBy("doc_id", "category"),
@@ -5887,8 +5880,8 @@ object Llm {
 
     // feature-hashed linear quality-classifier inference: 64-bucket token
     // hashing, broadcast weight table, integer-exact logits
-    Entry("llm_quality_classifier", (s, d) =>
-      TextAnalysis.classifierScore(docs(s, d),
+    Entry("llm_quality_classifier", (s, _) =>
+      TextAnalysis.classifierScore(s.table("documents"),
         TextAnalysis.hashedWeights(s, 64), 64).orderBy("doc_id"),
       // identical 60-bit token hash, bucket fold and closed-form weight
       // table — the logit is an integer sum, so any hashing/join/weight
@@ -5911,8 +5904,8 @@ object Llm {
     // sentinels, input/target sequences leave as md5 fingerprints with
     // order pinned by doubled positions — the oracle rebuilds both
     // strings with string_agg ORDER BY pos
-    Entry("llm_span_corrupt", (s, d) =>
-      TextAnalysis.spanCorrupt(docs(s, d)).orderBy("doc_id"),
+    Entry("llm_span_corrupt", (s, _) =>
+      TextAnalysis.spanCorrupt(s.table("documents")).orderBy("doc_id"),
       // the same block draw, sentinel numbering and doubled-position
       // ordering replayed over the split index stream (original indexes
       // preserved through the length filter, like the Spark posexplode)
@@ -5952,8 +5945,8 @@ object Llm {
     // corpus itself, per-doc importance = exact-BIGINT mass ratio with
     // add-one smoothing, one IEEE division at the edge; selection is a
     // per-row predicate (tgt_mass > raw_mass), never a global rank
-    Entry("llm_dsir_select", (s, d) =>
-      TextAnalysis.importanceScore(docs(s, d), expr("lang = 'en'"))
+    Entry("llm_dsir_select", (s, _) =>
+      TextAnalysis.importanceScore(s.table("documents"), expr("lang = 'en'"))
         .orderBy("doc_id"),
       // the same bigram-bucket histograms and mass ratio replayed in SQL;
       // sums CAST from HUGEINT, the one division HUGEINT -> DOUBLE exact
@@ -5985,8 +5978,8 @@ object Llm {
     // TakeOrderedAndProject — no global sort (plan-gated)
     // priority is raw (no ROUND-6 edge): one conversion + one division is
     // bit-identical by IEEE, while DuckDB's ROUND perturbs ULPs at 1e14
-    Entry("llm_weighted_sample", (s, d) =>
-      TrainOrder.weightedSample(docs(s, d), "doc_id", "n_chars", "s42", 120)
+    Entry("llm_weighted_sample", (s, _) =>
+      TrainOrder.weightedSample(s.table("documents"), "doc_id", "n_chars", "s42", 120)
         .selectExpr("doc_id", "n_chars", "priority")
         .orderBy("doc_id"),
       // the flat recomputation: every doc's priority, one global ORDER BY +
@@ -6006,8 +5999,8 @@ object Llm {
     // of the int8-quantized corpus — exact BIGINT cells, integer first
     // matvec (v0 = 1), ordered double folds for the second; the
     // dominant-direction estimate embedding whitening removes
-    Entry("llm_pca_power", (s, d) =>
-      Similarity.pcaPower(emb(s, d)).orderBy("dim"),
+    Entry("llm_pca_power", (s, _) =>
+      Similarity.pcaPower(s.table("embeddings")).orderBy("dim"),
       // the same quantize -> covariance -> two matvecs chain: integer
       // covariance (order-free), v0=1 integer first step, list(term ORDER
       // BY j) sequential folds for the double second step
@@ -6026,8 +6019,8 @@ object Llm {
 
     // whitening: project out the PCA dominant direction per vector —
     // projection + residual norm, the all-but-the-top post-process
-    Entry("llm_whiten", (s, d) =>
-      Similarity.dominantRemove(emb(s, d)).orderBy("vec_id"),
+    Entry("llm_whiten", (s, _) =>
+      Similarity.dominantRemove(s.table("embeddings")).orderBy("vec_id"),
       // the pca chain + the driver-side arithmetic replayed: ROUND(6)
       // loadings -> sequential-fold L2 norm -> unit direction -> per-vec
       // ordered projection / residual folds
@@ -6057,8 +6050,8 @@ object Llm {
     // best pair depending on the previous merges — the chained oracle
     // replays all eight stages in CTEs (the dict is cut with Shared.cut
     // between steps, so the Spark plan stays linear)
-    Entry("llm_bpe_train", (s, d) =>
-      TextAnalysis.bpeTrain(docs(s, d), iters = 8).orderBy("iter"),
+    Entry("llm_bpe_train", (s, _) =>
+      TextAnalysis.bpeTrain(s.table("documents"), iters = 8).orderBy("iter"),
       // the same dictionary evolved through eight replace steps, each
       // step's argmax pair feeding the next stage's CTE. DuckDB inlines
       // every CTE reference, and each w$i reads b$i twice and feeds both
@@ -6095,8 +6088,8 @@ object Llm {
     // the unique-word dictionary is tokenized once (vocab-sized merge
     // work), docs' words equi-join the (word -> token count) map; the
     // corpus never flows through the replace passes
-    Entry("llm_bpe_encode", (s, d) =>
-      TextAnalysis.bpeEncode(docs(s, d), iters = 4).orderBy("doc_id"),
+    Entry("llm_bpe_encode", (s, _) =>
+      TextAnalysis.bpeEncode(s.table("documents"), iters = 4).orderBy("doc_id"),
       // the same 4-step dictionary evolution, KEEPING word identity so the
       // final per-word tokenization joins back to each doc's word stream
       s"""WITH $bpeEncodeCtes
@@ -6109,8 +6102,8 @@ object Llm {
     // tokenizer-fit report: fertility (tokens/word) and compression
     // (chars/token) per source — the eval table a tokenizer change ships
     // with; ratios are single IEEE divisions of exact BIGINT sums
-    Entry("llm_bpe_fertility", (s, d) =>
-      TextAnalysis.tokenizerFertility(docs(s, d), iters = 4)
+    Entry("llm_bpe_fertility", (s, _) =>
+      TextAnalysis.tokenizerFertility(s.table("documents"), iters = 4)
         .orderBy("source"),
       // the encode chain rolled up by source: exact BIGINT sums, the two
       // ratios as single IEEE divisions at the edge
@@ -6137,8 +6130,8 @@ object Llm {
     // MMR diversified retrieval: 3 greedy picks for query vec 7 at
     // lambda=0.7 — relevance computed once, each step broadcasts the
     // <=k selected vectors; ranks on raw cosine doubles, vec_id ties
-    Entry("llm_mmr_topk", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_mmr_topk", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.mmrSelect(e.where(col("vec_id") === 7),
           e.where(col("vec_id") =!= 7), k = 3, lambda = 0.7)
         .orderBy("rank")
@@ -6184,8 +6177,8 @@ object Llm {
     // corpus-self bigram LM quality signal (CCNet stand-in, log-free):
     // mean transition probability + rare-bigram rate per doc; each p is
     // one IEEE division of exact integers, folded in position order
-    Entry("llm_bigram_lm", (s, d) =>
-      TextAnalysis.bigramScore(docs(s, d), minCount = 2).orderBy("doc_id"),
+    Entry("llm_bigram_lm", (s, _) =>
+      TextAnalysis.bigramScore(s.table("documents"), minCount = 2).orderBy("doc_id"),
       // same bigram/unigram MLE counts, positions via generate_series
       // where the plan transforms the token array; per-doc fold replayed
       // as list(p ORDER BY pos)
@@ -6215,8 +6208,8 @@ object Llm {
     // per-cluster k-means objective: Σ(x-μ)² via the Σx²−(Σx)²/n
     // expansion — corpus sums DECIMAL-exact and order-free, IEEE math
     // confined to the k×dims cells folded in fixed dim order
-    Entry("llm_kmeans_inertia", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_kmeans_inertia", (s, _) => {
+      val e = s.table("embeddings")
       val cents = e.where(col("vec_id").isin(3, 17, 31, 59))
         .select(col("vec_id").cast("int").as("centroid_id"),
           col("embedding").as("centroid"))
@@ -6256,8 +6249,8 @@ object Llm {
     // PageRank (2 damped power steps) over the jaccard>=0.6 candidate
     // graph — which docs sit at the CORE of a near-dup neighborhood;
     // per-node incoming sums fold in fixed neighbor order
-    Entry("llm_pagerank", (s, d) =>
-      Dedup.pageRank(Dedup.nearDupPairs(docs(s, d)), iters = 2).orderBy("doc_id"),
+    Entry("llm_pagerank", (s, _) =>
+      Dedup.pageRank(Dedup.nearDupPairs(s.table("documents")), iters = 2).orderBy("doc_id"),
       // two damped power steps over the symmetrized jaccard>=0.6 edge
       // list; incoming contributions fold in neighbor order, the damping
       // residual interpolated from the SAME Scala double literal the
@@ -6295,8 +6288,8 @@ object Llm {
     // every 5th doc seeds its language, two synchronous plurality rounds
     // (min-label ties, seeds clamped) — the oracle replays both rounds
     // as chained CTEs with row_number argmax
-    Entry("llm_label_propagation", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_label_propagation", (s, _) => {
+      val dd = s.table("documents")
       val pairs = Dedup.nearDupPairs(dd)
       val seeds = dd.where("doc_id % 5 = 0")
         .select(col("doc_id"), col("lang").as("label"))
@@ -6343,8 +6336,8 @@ object Llm {
     // register-level HLL MERGE: per-source sketches union by per-bucket
     // max — 64 ints per shard cross the wire, never tokens; the
     // sum-vs-union gap exposes cross-source vocabulary overlap
-    Entry("llm_sketch_merge", (s, d) =>
-      TextAnalysis.distinctSketchMerged(docs(s, d)),
+    Entry("llm_sketch_merge", (s, _) =>
+      TextAnalysis.distinctSketchMerged(s.table("documents")),
       // same register chain, then per-bucket MAX across sources; harmonic
       // pinned to BIGINT before the one division
       {
@@ -6386,8 +6379,8 @@ object Llm {
          |FROM hs, exu, pss""".stripMargin
     }),
 
-    Entry("llm_distinct_sketch", (s, d) =>
-      TextAnalysis.distinctSketch(docs(s, d)).orderBy("source"),
+    Entry("llm_distinct_sketch", (s, _) =>
+      TextAnalysis.distinctSketch(s.table("documents")).orderBy("source"),
       // identical md5 bucket/rho arithmetic, HUGEINT sums cast to BIGINT,
       // the alpha·m²·2^53 numerator interpolated from the SAME Scala
       // double literal the Spark plan embeds (shortest-roundtrip repr —
@@ -6430,8 +6423,8 @@ object Llm {
 
     // per-doc TF-IDF top-5 keywords (log-free idf: tf·N/df — exact
     // BIGINT product, one IEEE division, no rounding edge in the rank)
-    Entry("llm_tfidf_keywords", (s, d) =>
-      TextAnalysis.tfidfKeywords(docs(s, d)).orderBy("doc_id", "rank"),
+    Entry("llm_tfidf_keywords", (s, _) =>
+      TextAnalysis.tfidfKeywords(s.table("documents")).orderBy("doc_id", "rank"),
       s"""WITH toks AS (SELECT doc_id, tok FROM (
          |       SELECT doc_id, unnest(string_split($NORM, ' ')) AS tok
          |       FROM documents) WHERE length(tok) > 0),
@@ -6453,8 +6446,8 @@ object Llm {
     // curriculum schedule: fixed n_chars difficulty tiers lead the
     // order, seeded md5 shuffle within each tier — two-phase prefix sum
     // partitioned by (tier, bucket), no global window
-    Entry("llm_curriculum_order", (s, d) =>
-      TrainOrder.curriculumOrder(docs(s, d),
+    Entry("llm_curriculum_order", (s, _) =>
+      TrainOrder.curriculumOrder(s.table("documents"),
           expr("CASE WHEN n_chars < 250 THEN 0 WHEN n_chars < 450 THEN 1 ELSE 2 END"),
           seed = "curr")
         .orderBy("doc_id"),
@@ -6473,8 +6466,8 @@ object Llm {
     // LSH banding-point tuning: candidates/verified/precision for the
     // (2x4, 4x2, 8x1) splits of the 8-hash signature — the sample
     // measurement run before committing a banding point corpus-wide
-    Entry("llm_lsh_tuning", (s, d) =>
-      Dedup.lshTuning(docs(s, d)).orderBy("bands"),
+    Entry("llm_lsh_tuning", (s, _) =>
+      Dedup.lshTuning(s.table("documents")).orderBy("bands"),
       {
       val cfgs = Seq((2, 4), (4, 2), (8, 1))
       val per = cfgs.map { case (b, r) =>
@@ -6523,8 +6516,8 @@ object Llm {
     // subspaces x 16 codes over 64 dims — 64x smaller than float32);
     // the oracle recomputes the md5-derived codebook and the argmin
     // (first-minimum tie-break) per (vector, subspace)
-    Entry("llm_pq_codes", (s, d) =>
-      Similarity.pqCodes(emb(s, d))
+    Entry("llm_pq_codes", (s, _) =>
+      Similarity.pqCodes(s.table("embeddings"))
         .select(col("vec_id"), posexplode(col("pq_codes")).as(Seq("m", "code")))
         .orderBy("vec_id", "m"),
       s"""WITH $pqCtes
@@ -6533,8 +6526,8 @@ object Llm {
 
     // ADC top-k over the code table: probe builds one 8x16 exact lookup
     // table, every candidate costs 8 lookups + a fixed-order fold
-    Entry("llm_pq_topk", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_pq_topk", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5)
         .orderBy("probe_id", "rank")
     },
@@ -6552,8 +6545,8 @@ object Llm {
 
     // PQ quality vs exact cosine top-5 — the recall evaluation an ANN
     // compression choice ships with
-    Entry("llm_pq_recall", (s, d) => {
-      val e = emb(s, d)
+    Entry("llm_pq_recall", (s, _) => {
+      val e = s.table("embeddings")
       Similarity.annRecall(
           Similarity.bruteForceTopK(e.where("vec_id < 16"), e, 5),
           Similarity.pqTopK(e.where("vec_id < 16"), Similarity.pqCodes(e), 5))
@@ -6598,8 +6591,8 @@ object Llm {
     // Scale shape: the stages compose without materialization barriers
     // — each is the same banded/bucketed/broadcast plan its unit entry
     // gates, and the only driver-side state is the quota table.
-    Entry("llm_pipeline_e2e", (s, d) => {
-      val dd = docs(s, d)
+    Entry("llm_pipeline_e2e", (s, _) => {
+      val dd = s.table("documents")
       // 1. quality envelope gate (token band, alnum, whitespace)
       val gated = dd.join(
         TextAnalysis.qualityFilter(dd).select("doc_id"), Seq("doc_id"))

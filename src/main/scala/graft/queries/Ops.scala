@@ -559,10 +559,7 @@ object Ops {
       ORDER BY o_orderstatus, pct"""
 
   val entries: Seq[Entry] = Seq(
-    Entry("agg_hll_error_sweep", (s, d) => {
-      Tables.register(s, d)
-      s.sql(hllSweepSql(spark = true))
-    },
+    Entry.sql("agg_hll_error_sweep", hllSweepSql(spark = true),
       // the identical sweep through DuckDB's hash/shift idioms — the
       // generator emits both dialects from one block structure
       hllSweepSql(spark = false)),
@@ -570,9 +567,7 @@ object Ops {
     // data-freshness audit: per-stream lag behind the newest event in
     // the table (never wall-clock "now" — nondeterministic); the ops
     // check a late-landing upstream trips. One scan, two aggs
-    Entry("qc_freshness", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("qc_freshness", """
         WITH m AS (SELECT event_type, MAX(ts) AS mx, COUNT(*) AS n
                    FROM events GROUP BY event_type),
         g AS (SELECT MAX(mx) AS gmx FROM m)
@@ -580,8 +575,7 @@ object Ops {
                CAST(unix_micros(mx) AS BIGINT) AS max_ts_us,
                CAST((unix_micros(gmx) - unix_micros(mx)) DIV 3600000000 AS BIGINT) AS lag_hours,
                (unix_micros(gmx) - unix_micros(mx)) > 86400000000 AS stale_24h
-        FROM m CROSS JOIN g ORDER BY event_type""")
-    },
+        FROM m CROSS JOIN g ORDER BY event_type""",
       // micros arithmetic on ns-truncated timestamps (the Tables.load
       // normalization: DuckDB reads raw TIMESTAMP_NS, truncate to micros)
       """
@@ -597,46 +591,34 @@ object Ops {
       FROM m CROSS JOIN g ORDER BY event_type"""),
 
     // Mann-Kendall trend monitor (see mannKendallSql)
-    Entry("ts_mann_kendall", (s, d) => {
-      Tables.register(s, d)
-      s.sql(mannKendallSql(
-        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"))
-    },
+    Entry.sql("ts_mann_kendall", mannKendallSql(
+        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"),
       // identical integer S / tie-corrected variance, DuckDB day idiom
       mannKendallSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)")),
 
     // interrupted-time-series segmented regression (see interventionSql)
-    Entry("ts_intervention", (s, d) => {
-      Tables.register(s, d)
-      s.sql(interventionSql(
+    Entry.sql("ts_intervention", interventionSql(
         "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)",
-        "DIV"))
-    },
+        "DIV"),
       // identical segmented regression, DuckDB day/idiv idioms
       interventionSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)",
       "//")),
 
     // Western Electric SPC run rules on the daily series (see spcRulesSql)
-    Entry("ts_spc_rules", (s, d) => {
-      Tables.register(s, d)
-      s.sql(spcRulesSql(
-        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"))
-    },
+    Entry.sql("ts_spc_rules", spcRulesSql(
+        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"),
       // identical integer run-rule arithmetic, DuckDB day idiom
       spcRulesSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)")),
 
     // Moran's I spatial autocorrelation on the occupied centi-degree
     // cells (see moransISql)
-    Entry("agg_morans_i", (s, d) => {
-      Tables.register(s, d)
-      s.sql(moransISql(
+    Entry.sql("agg_morans_i", moransISql(
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 18000 - 9000",
         "CAST(conv(substr(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10) AS BIGINT) % 36000 - 18000",
-        "DIV"))
-    },
+        "DIV"),
       // identical grid/deviation/adjacency arithmetic, DuckDB idioms
       moransISql(
       "('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 18000 - 9000",
@@ -644,22 +626,16 @@ object Ops {
       "//")),
 
     // quantized periodogram / dominant-cycle audit (see periodogramSql)
-    Entry("ts_periodogram", (s, d) => {
-      Tables.register(s, d)
-      s.sql(periodogramSql(
-        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"))
-    },
+    Entry.sql("ts_periodogram", periodogramSql(
+        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"),
       // identical quantized-basis correlations, DuckDB day idiom
       periodogramSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)")),
 
     // split-conformal interval + held-out coverage (see conformalSql)
-    Entry("agg_conformal", (s, d) => {
-      Tables.register(s, d)
-      s.sql(conformalSql(
+    Entry.sql("agg_conformal", conformalSql(
         "CAST(conv(substr(md5(concat('conf:', CAST(o_orderkey AS STRING))), 1, 15), 16, 10) AS BIGINT) % 100",
-        "DIV"))
-    },
+        "DIV"),
       // same closed-form rank, DuckDB md5/int and // idioms
       conformalSql(
       "CAST(('0x' || substr(md5('conf:' || o_orderkey), 1, 15))::BIGINT % 100 AS BIGINT)",
@@ -669,8 +645,7 @@ object Ops {
     // reward-modeling fit over pairwise "A beat B" counts — matches are
     // consecutive same-user events (one window pass), winner = larger
     // value; 3 MM rounds on the metadata-scale type×type count matrix
-    Entry("agg_bradley_terry", (s, d) => {
-      Tables.register(s, d)
+    Entry("agg_bradley_terry", (s, _) => {
       val m = s.sql("""
         WITH e AS (SELECT event_type, value,
                           lag(event_type) OVER w AS pt,
@@ -746,8 +721,7 @@ object Ops {
     // row/column scalings toward uniform integer-DIV margin targets;
     // one corpus scan builds the cell table, the iterations run
     // checkpoint-linear on metadata-scale cells (operators/Causal.rake)
-    Entry("agg_raking", (s, d) => {
-      Tables.register(s, d)
+    Entry("agg_raking", (s, _) => {
       val cells = s.sql("""
         SELECT o_orderpriority AS pri, o_orderstatus AS st,
                COUNT(*) AS n, CAST(COUNT(*) AS DOUBLE) AS w
@@ -761,8 +735,7 @@ object Ops {
     },
       // the identical chained scaling rounds, DuckDB fold idioms
       rakingOracleSql),
-    Entry("cdc_apply", (s, d) => {
-      Tables.register(s, d)
+    Entry("cdc_apply", (s, _) => {
       val changes = s.sql(ChangelogSql)
       Cdc.applyChangelog(changes, "k", "seq", "op")
         .selectExpr("k", "seq", "op", "CAST(total AS DOUBLE) AS total")
@@ -781,8 +754,7 @@ object Ops {
 
     // SCD Type-2 history: every surviving change with its validity
     // interval; tombstones emit nothing but close the prior version
-    Entry("cdc_scd2", (s, d) => {
-      Tables.register(s, d)
+    Entry("cdc_scd2", (s, _) => {
       Cdc.scd2History(s.sql(ChangelogSql), "k", "seq", "op")
         .selectExpr("k", "valid_from", "valid_to", "op",
           "CAST(total AS DOUBLE) AS total", "is_current")
@@ -806,9 +778,8 @@ object Ops {
     // each probe time (NULL = key not yet inserted or deleted then).
     // Equi-join on the key with the interval residual: per-key version
     // lists are changelog-depth-bounded, so no range blow-up
-    Entry("cdc_scd2_pit", (s, d) => {
+    Entry("cdc_scd2_pit", (s, _) => {
       import s.implicits._
-      Tables.register(s, d)
       val ch = s.sql(ChangelogSql)
       val hist = Cdc.scd2History(ch, "k", "seq", "op")
       val probes = ch.select("k").distinct()
@@ -848,8 +819,7 @@ object Ops {
     // recomputes the history from the FULL changelog, so green IS the
     // any-batch-split convergence identity (OpsSpec pins it for random
     // splits including tombstone-adjacent ones)
-    Entry("cdc_scd2_incremental", (s, d) => {
-      Tables.register(s, d)
+    Entry("cdc_scd2_incremental", (s, _) => {
       val ch = s.sql(ChangelogSql)
       val batches = (0 to 2).map(i => ch.where(col("seq") % 3 === i))
       val init = Cdc.scd2State(batches(0), "k", "seq", "op")
@@ -877,8 +847,7 @@ object Ops {
     // delta batch (inserts/updates/deletes over disjoint key classes)
     // merged WITHOUT rescanning the base; the oracle recomputes the view
     // from the full final table — green is the monoid-merge identity
-    Entry("cdc_incremental_agg", (s, d) => {
-      Tables.register(s, d)
+    Entry("cdc_incremental_agg", (s, _) => {
       val orders = s.table("orders")
       val base = orders.where("o_orderkey % 5 <> 0")
       val state = base.groupBy(col("o_custkey").as("k"))
@@ -918,8 +887,7 @@ object Ops {
     // carry through two broadcast anti-joins bit-identically, only
     // touched keys re-join; green against the full-recompute oracle IS
     // the delta-maintenance identity
-    Entry("cdc_join_incremental", (s, d) => {
-      Tables.register(s, d)
+    Entry("cdc_join_incremental", (s, _) => {
       val orders = s.table("orders")
       val cust = s.table("customer")
       def view(f: DataFrame, dm: DataFrame): DataFrame =
@@ -969,8 +937,8 @@ object Ops {
     // few columns per pass or swap NDV to the sketch family. Numeric
     // bounds emit as DOUBLE, string bounds as strings — never
     // engine-formatted numerics
-    Entry("qc_column_profile", (s, d) => {
-      val orders = Tables.load(s, d, "orders")
+    Entry("qc_column_profile", (s, _) => {
+      val orders = s.table("orders")
       val wide = orders.agg(
         count(lit(1)).as("n_rows"),
         sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("nn_ck"),
@@ -1025,8 +993,8 @@ object Ops {
 
     // privacy admission: every (nation, segment) equivalence class sized
     // against the k floor
-    Entry("qc_k_anonymity", (s, d) =>
-      Constraints.kAnonymity(Tables.load(s, d, "customer"),
+    Entry("qc_k_anonymity", (s, _) =>
+      Constraints.kAnonymity(s.table("customer"),
           Seq("c_nationkey", "c_mktsegment"), k = 40)
         .selectExpr("CAST(c_nationkey AS BIGINT) AS c_nationkey",
           "c_mktsegment", "class_size", "k_ok")
@@ -1039,9 +1007,9 @@ object Ops {
 
     // l-diversity: the homogeneity-attack gate — every (status, year)
     // class must carry >= 3 distinct order priorities
-    Entry("qc_l_diversity", (s, d) =>
+    Entry("qc_l_diversity", (s, _) =>
       Constraints.lDiversity(
-          Tables.load(s, d, "orders").withColumn("o_year",
+          s.table("orders").withColumn("o_year",
             expr("CAST(year(CAST(o_orderdate AS DATE)) AS INT)")),
           Seq("o_orderstatus", "o_year"), "o_orderpriority", l = 3)
         .orderBy("o_orderstatus", "o_year"),
@@ -1059,8 +1027,8 @@ object Ops {
     // threshold literals — exp/pow never run in-plan, so the oracle
     // replays the draw bit-identically); true counts never leave the
     // plan, clamp-at-0 is DP-safe post-processing
-    Entry("qc_dp_histogram", (s, d) =>
-      Constraints.dpNoisyCounts(Tables.load(s, d, "documents"),
+    Entry("qc_dp_histogram", (s, _) =>
+      Constraints.dpNoisyCounts(s.table("documents"),
           Seq("source", "lang"), eps = 0.5, seed = "dp42")
         .select(col("source"), col("lang"), col("noisy_count"), col("noise"))
         .orderBy("source", "lang"),
@@ -1094,9 +1062,9 @@ object Ops {
     // statistics -> a 75% CI of mean order value per status. Classic
     // resampling is unshardable; this is how uncertainty is estimated
     // over data that cannot be collected
-    Entry("agg_poisson_bootstrap", (s, d) =>
+    Entry("agg_poisson_bootstrap", (s, _) =>
       Bootstrap.poissonMeanCI(
-          Tables.load(s, d, "orders").selectExpr("o_orderstatus",
+          s.table("orders").selectExpr("o_orderstatus",
             "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents",
             "o_orderkey"),
           Seq("o_orderstatus"), "cents", "o_orderkey", seed = "boot7")
@@ -1143,8 +1111,8 @@ object Ops {
     // from the same integer closed form as agg_regression_exact, the
     // lag join is an equi join on shifted hour INDEX (pure int64
     // arithmetic, no interval math) with the 4-row lag table broadcast
-    Entry("ts_lag_correlation", (s, d) => {
-      val ev = Tables.load(s, d, "events")
+    Entry("ts_lag_correlation", (s, _) => {
+      val ev = s.table("events")
       val hourly = ev.groupBy(
           expr("CAST(unix_micros(date_trunc('HOUR', ts)) div 3600000000 AS BIGINT)")
             .as("h"),
@@ -1199,8 +1167,7 @@ object Ops {
     // (levenshtein<=1 worth 2, segment/balance 1 each), match at >= 3.
     // Near-identical ids in one block produce honest false positives —
     // the oracle replays them identically
-    Entry("er_blocked_link", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_blocked_link", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -1262,8 +1229,7 @@ object Ops {
     // cdc_scd2_incremental. Output is the ingest artifact: each arrival's
     // entity assignment (best-scoring corpus match, ties to min lid) +
     // its candidate/match census
-    Entry("er_incremental_link", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_incremental_link", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -1333,8 +1299,7 @@ object Ops {
     // model-sized state (the lloydLoop discipline); every parameter is
     // a fixed IEEE tree the oracle replays as chained per-iteration
     // CTE folds
-    Entry("er_em_weights", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_em_weights", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -1464,8 +1429,7 @@ object Ops {
     // ScaleProbe's er probe measures the max-task win). threshold 4 =
     // all three agreements, so the hot block's n² candidates stay a
     // selective match set — exactly the dirty-feed reconciliation shape
-    Entry("er_blocked_link_hot", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_blocked_link_hot", (s, _) => {
       val cust = s.table("customer")
       val smith = "CASE WHEN c_custkey % 5 = 0 " +
         "THEN concat('Customer#SMITH-SMITH-', c_custkey) ELSE c_name END"
@@ -1534,9 +1498,9 @@ object Ops {
     // the log-uniform law (expected fractions are DRIVER-computed log10
     // literals — log never runs in-plan), per-digit χ² contributions as
     // fixed two-operand IEEE trees. One scan, 9-row output
-    Entry("qc_benford", (s, d) =>
+    Entry("qc_benford", (s, _) =>
       Constraints.benford(
-          Tables.load(s, d, "orders").selectExpr(
+          s.table("orders").selectExpr(
             "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents"),
           "cents")
         .orderBy("digit"),
@@ -1571,9 +1535,7 @@ object Ops {
     // doubles) and the 3·MAD comparison never meets a rounded number.
     // Two |types|-cardinality aggs + one broadcast-back join — no
     // per-event window, no sort
-    Entry("ts_anomaly_mad", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_anomaly_mad", """
         WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
                           COUNT(*) AS cnt
                    FROM events GROUP BY event_type, date_trunc('hour', ts)),
@@ -1587,8 +1549,7 @@ object Ops {
         SELECT d.event_type, d.hr, d.cnt,
                CAST(d.dev2 > 3 * m.mad2 AS BOOLEAN) AS is_anomaly
         FROM dev d JOIN mad m ON d.event_type = m.event_type
-        ORDER BY d.event_type, d.hr""")
-    },
+        ORDER BY d.event_type, d.hr""",
       // quantile_cont == Spark's percentile (both linearly interpolate the
       // sorted multiset; doubled integers make the result exact either way)
       """
@@ -1617,9 +1578,7 @@ object Ops {
     // DuckDB's flooring // agree by construction. Partitions = series
     // (per-series sequential, the cusum caveat); spine rows ∝ days, not
     // events
-    Entry("ts_gap_fill_interp", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_gap_fill_interp", """
         WITH daily AS (SELECT event_type,
                               CAST(date_trunc('day', ts) AS DATE) AS day,
                               CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT))
@@ -1653,8 +1612,7 @@ object Ops {
                                + nv * datediff(day, pd)) DIV datediff(nd, pd)
                     END AS BIGINT) AS v_filled,
                CAST(v IS NULL AS BOOLEAN) AS filled
-        FROM f ORDER BY event_type, day""")
-    },
+        FROM f ORDER BY event_type, day""",
       // the same weighted-average integer interpolation (nonnegative
       // numerator, so // == DIV); DuckDB date subtraction is already int
       // days, generate_series spans the same inclusive spine
@@ -1705,9 +1663,7 @@ object Ops {
     // and the sketch merges by bin-count addition (associative), so the
     // same state serves partial aggregation, cross-shard union, and
     // incremental refresh
-    Entry("agg_quantile_sketch", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_quantile_sketch", """
         WITH c AS (SELECT o_orderstatus AS g,
                           CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v
                    FROM orders),
@@ -1727,8 +1683,7 @@ object Ops {
                CAST(t.bin * 1000000
                     + ((t.k - (t.cum - t.n)) * 1000000) DIV t.n AS BIGINT) AS est_cents
         FROM tgt t JOIN hit h ON t.g = h.g AND t.pct = h.pct AND t.bin = h.hbin
-        ORDER BY o_orderstatus, pct""")
-    },
+        ORDER BY o_orderstatus, pct""",
       quantileSketchOracle),
 
     // order-free dataset content fingerprint — the "did ANY row change"
@@ -1739,9 +1694,7 @@ object Ops {
     // independent of row order/partitioning. One scan; output is
     // |sources| rows. The sum rides DECIMAL(38,0) (2^48·10^12 rows fits)
     // and leaves as its decimal STRING — never through int128/double
-    Entry("qc_dataset_fingerprint", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("qc_dataset_fingerprint", """
         WITH r AS (SELECT source,
                           md5(concat_ws('|', doc_id, coalesce(lang, ''),
                                         n_chars, md5(text))) AS h
@@ -1753,8 +1706,7 @@ object Ops {
         SELECT source, COUNT(*) AS n_rows,
                bit_xor(h60) AS xor60,
                CAST(SUM(h48) AS STRING) AS sum48
-        FROM f GROUP BY source ORDER BY source""")
-    },
+        FROM f GROUP BY source ORDER BY source""",
       // the same commutative folds over the same per-row md5; the 48-bit
       // sum compared as its DECIMAL string (int128 never reaches a column)
       """
@@ -1777,9 +1729,9 @@ object Ops {
     // exact integer arithmetic end-to-end (the absent-value mass folds
     // in closed form, no class x value cross join), one IEEE division
     // at the output edge
-    Entry("qc_t_closeness", (s, d) =>
+    Entry("qc_t_closeness", (s, _) =>
       Constraints.tCloseness(
-          Tables.load(s, d, "orders").withColumn("o_year",
+          s.table("orders").withColumn("o_year",
             expr("CAST(year(CAST(o_orderdate AS DATE)) AS INT)")),
           Seq("o_orderstatus", "o_year"), "o_orderpriority",
           tNum = 1, tDen = 30)
@@ -1815,8 +1767,8 @@ object Ops {
     // one user's events, bounded by activity; chunk a celebrity key
     // upstream); the regex is a codegen'd per-row projection. Both
     // engines count non-overlapping leftmost matches.
-    Entry("ts_event_pattern", (s, d) =>
-      Tables.load(s, d, "events")
+    Entry("ts_event_pattern", (s, _) =>
+      s.table("events")
         .selectExpr("user_id", "ts", "event_id",
           "substring(event_type, 1, 1) AS i")
         .groupBy("user_id")
@@ -1843,8 +1795,8 @@ object Ops {
     // triangles (not LTTB's bucket averages) on purpose: every operand
     // is a fixed three-row window expression, bit-identical across
     // engines; a float average would be aggregation-order-dependent
-    Entry("ts_downsample_ltob", (s, d) =>
-      Resample.ltob(Tables.load(s, d, "events"), "user_id", "ts",
+    Entry("ts_downsample_ltob", (s, _) =>
+      Resample.ltob(s.table("events"), "user_id", "ts",
           "event_id", "value", buckets = 6)
         .selectExpr("user_id", "CAST(bucket AS BIGINT) AS bucket",
           "event_id", "unix_micros(ts) AS ts_us", "value", "area")
@@ -1870,8 +1822,8 @@ object Ops {
       FROM p WHERE pick = 1 OR rn = 1 OR rn = n
       ORDER BY user_id, bucket, event_id"""),
 
-    Entry("cdc_snapshot_diff", (s, d) => {
-      val docs = Tables.load(s, d, "documents")
+    Entry("cdc_snapshot_diff", (s, _) => {
+      val docs = s.table("documents")
       val before = docs.select(col("doc_id"), col("text"))
       // the rebuilt snapshot: %97 keys dropped, %31 docs edited, %53
       // re-landed under a shifted id — same derivation in the oracle
@@ -1904,8 +1856,8 @@ object Ops {
       WHERE a.doc_id IS NULL OR b.doc_id IS NULL OR a.text <> b.text
       ORDER BY doc_id"""),
 
-    Entry("agg_order_stat", (s, d) => {
-      OrderStats.exactQuantiles(Tables.load(s, d, "lineitem"),
+    Entry("agg_order_stat", (s, _) => {
+      OrderStats.exactQuantiles(s.table("lineitem"),
           "l_extendedprice", Seq(0.5, 0.9, 0.99), bins = 4096)
         .orderBy("p")
     },
@@ -1925,8 +1877,8 @@ object Ops {
     // per-group exact quantiles via the same histogram narrowing —
     // per-group aggregation state is `bins` counters regardless of group
     // size, where percentile() would buffer the whole group
-    Entry("agg_order_stat_grouped", (s, d) => {
-      OrderStats.exactQuantilesByGroup(Tables.load(s, d, "lineitem"),
+    Entry("agg_order_stat_grouped", (s, _) => {
+      OrderStats.exactQuantilesByGroup(s.table("lineitem"),
           "l_returnflag", "l_extendedprice", Seq(0.5, 0.95), bins = 1024)
         .orderBy("l_returnflag", "p")
     },
@@ -1949,8 +1901,8 @@ object Ops {
     // robust outlier detection per group: median/MAD (|v - med| > 3*MAD)
     // — two passes of the grouped histogram-narrowed quantiles, no
     // per-group sort anywhere; med/MAD broadcast back over counting scans
-    Entry("agg_robust_outliers", (s, d) => {
-      val li = Tables.load(s, d, "lineitem")
+    Entry("agg_robust_outliers", (s, _) => {
+      val li = s.table("lineitem")
       // localCheckpoint the 3-row med/mad tables (r16 opt): every pass of
       // the second quantile call and the final aggregate re-derived the
       // full median computation under the broadcast join — 43 lineitem
@@ -2005,8 +1957,8 @@ object Ops {
     // robust-stats composition over exactQuantiles (histogram-narrowed
     // thresholds, never a global sort), thresholds broadcast back over
     // one clipping scan
-    Entry("agg_winsorize", (s, d) => {
-      val li = Tables.load(s, d, "lineitem")
+    Entry("agg_winsorize", (s, _) => {
+      val li = s.table("lineitem")
       val qs = OrderStats.exactQuantiles(li, "l_extendedprice",
         Seq(0.01, 0.99), bins = 1024)
       val lims = qs.agg(
@@ -2040,8 +1992,8 @@ object Ops {
              AS DOUBLE) AS sum_winsorized
       FROM lineitem, lims"""),
 
-    Entry("llm_negative_sample", (s, d) => {
-      val docs = Tables.load(s, d, "documents")
+    Entry("llm_negative_sample", (s, _) => {
+      val docs = s.table("documents")
       TrainOrder.negativeSamples(docs, docs.where(col("doc_id") < 200),
           k = 5, seed = "negs9")
         .selectExpr("anchor_id", "CAST(j AS INT) AS j", "neg_id", "neg_fp")
@@ -2068,8 +2020,7 @@ object Ops {
     // columns fill with NULL, matching is by NAME not position). Map-side
     // only: the union itself adds no shuffle, the NULL fill is a
     // projection.
-    Entry("set_union_by_name", (s, d) => {
-      Tables.register(s, d)
+    Entry("set_union_by_name", (s, _) => {
       val a = s.sql("""SELECT o_custkey AS k, COUNT(*) AS n_orders,
                               'orders' AS src
                        FROM orders WHERE o_orderstatus = 'P'
@@ -2095,10 +2046,10 @@ object Ops {
     // uniqueness checks, two referential checks (one deliberately failing
     // against a restricted parent) — mixed pass/fail so both verdict paths
     // are under test
-    Entry("qc_constraints", (s, d) => {
-      val li = Tables.load(s, d, "lineitem")
-      val ord = Tables.load(s, d, "orders")
-      val cust = Tables.load(s, d, "customer")
+    Entry("qc_constraints", (s, _) => {
+      val li = s.table("lineitem")
+      val ord = s.table("orders")
+      val cust = s.table("customer")
       Constraints.report(Seq(
         Constraints.checkPredicates(li, Seq(
           "li_qty_range" -> expr("l_quantity BETWEEN 1 AND 50"),
@@ -2162,9 +2113,7 @@ object Ops {
     // reported beside it so the error is visible. Membership = "user
     // had a value>0.9 event of that type" (full sets are degenerate-
     // identical in the fixture). Everything integer until two ROUNDs
-    Entry("agg_kmv_jaccard", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_kmv_jaccard", """
         WITH r AS (SELECT DISTINCT event_type AS g,
                           CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT) AS h,
                           user_id AS u
@@ -2202,8 +2151,7 @@ object Ops {
         LEFT JOIN inter i ON i.ga = p.ga AND i.gb = p.gb
         LEFT JOIN xi x ON x.ga = p.ga AND x.gb = p.gb
         JOIN cnt ca ON ca.g = p.ga JOIN cnt cb ON cb.g = p.gb
-        ORDER BY p.ga, p.gb""")
-    },
+        ORDER BY p.ga, p.gb""",
       // the same sketch set algebra with DuckDB's hash idiom
       """
       WITH r AS (SELECT DISTINCT event_type AS g,
@@ -2255,9 +2203,7 @@ object Ops {
     // combine bounded state. 48-bit hash keeps (k-1)·2^48 ≈ 1.8e16
     // inside int64 — every quantity integer, zero float anywhere.
     // Groups with fewer than k distinct values ARE the sketch (exact)
-    Entry("agg_kmv_distinct", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_kmv_distinct", """
         WITH r AS (SELECT event_type AS g, user_id % 8 AS shard,
                           CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT) AS h
                    FROM events),
@@ -2278,8 +2224,7 @@ object Ops {
                          ELSE (63 * 281474976710656) DIV k.h64 END AS BIGINT) AS kmv_est,
                CAST(e.n_exact AS BIGINT) AS n_exact
         FROM kth k JOIN ex e ON e.g = k.g
-        ORDER BY event_type""")
-    },
+        ORDER BY event_type""",
       // the same two-phase bottom-64 stitch (the merge identity makes it
       // equal one global bottom-64); DuckDB hash idiom + // division
       """
@@ -2311,8 +2256,7 @@ object Ops {
     // record by the ordered policy "never a MOVED segment if avoidable,
     // then highest balance, then lowest id". Unmatched records stay as
     // singleton entities — the full MDM table, not just the collisions
-    Entry("er_golden_record", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_golden_record", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -2402,8 +2346,7 @@ object Ops {
     // golden table. Same linkage + components (entityLabels is the
     // shared engine), one rollup with integer spreads; singletons can't
     // conflict and are excluded
-    Entry("er_merge_conflicts", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_merge_conflicts", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -2501,9 +2444,7 @@ object Ops {
     // version. Both profiles are single map-side-combinable aggregates;
     // the drifted v1 is synthesized from v0 by the cdc_snapshot_diff
     // recipe (drops, edits, a nulled column) so every metric moves
-    Entry("qc_profile_drift", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("qc_profile_drift", """
         WITH v1 AS (SELECT doc_id,
                            CASE WHEN doc_id % 31 = 0 THEN concat(text, ' drifted') ELSE text END AS text,
                            CASE WHEN doc_id % 13 = 0 THEN NULL ELSE lang END AS lang,
@@ -2531,8 +2472,7 @@ object Ops {
           UNION ALL SELECT 'min_chars', p0.min_chars, p1.min_chars FROM p0 CROSS JOIN p1
           UNION ALL SELECT 'max_chars', p0.max_chars, p1.max_chars FROM p0 CROSS JOIN p1
           UNION ALL SELECT 'sum_chars', p0.sum_chars, p1.sum_chars FROM p0 CROSS JOIN p1
-        ) u ORDER BY metric""")
-    },
+        ) u ORDER BY metric""",
       // the same two single-scan profiles and metric pivot
       """
       WITH v1 AS (SELECT doc_id,
@@ -2571,8 +2511,8 @@ object Ops {
     // integers, the lag join is an equi join on shifted hour INDEX with
     // the 7-row lag table broadcast, Pearson r comes from the integer
     // closed form with one sqrt+division at the edge
-    Entry("ts_acf", (s, d) => {
-      val hourly = Tables.load(s, d, "events").groupBy(
+    Entry("ts_acf", (s, _) => {
+      val hourly = s.table("events").groupBy(
           expr("CAST(unix_micros(date_trunc('HOUR', ts)) div 3600000000 AS BIGINT)")
             .as("h"),
           col("event_type"))
@@ -2621,9 +2561,7 @@ object Ops {
     // joined against observed hours; the spine is generated from two
     // integers per stream (never materialized from data), so the report
     // costs one agg + |streams|×|hours| tiny rows
-    Entry("ts_missing_hours", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_missing_hours", """
         WITH h AS (SELECT event_type,
                           CAST(unix_micros(date_trunc('HOUR', ts)) DIV 3600000000 AS BIGINT) AS hr
                    FROM events WHERE user_id < 5 GROUP BY 1, 2),
@@ -2641,8 +2579,7 @@ object Ops {
                CAST(COALESCE(m.n_missing, 0) AS BIGINT) AS n_hours_missing,
                CAST(m.first_missing AS BIGINT) AS first_missing
         FROM b LEFT JOIN miss m ON m.event_type = b.event_type
-        ORDER BY b.event_type""")
-    },
+        ORDER BY b.event_type""",
       // the spine rebuilt from the same two integers per stream; DuckDB's
       // generate_series + anti join
       """
@@ -2670,9 +2607,7 @@ object Ops {
     // stream, LAG delta and one ROUND ratio (prev comes from an existing
     // group, so it is never 0 — no NULLIF needed; the first week's NULLs
     // pass through both engines identically). Integer week = day DIV 7
-    Entry("ts_wow_growth", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_wow_growth", """
         WITH w AS (SELECT event_type,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) DIV 7 AS wk,
                           COUNT(*) AS c
@@ -2685,8 +2620,7 @@ object Ops {
                CAST(c - p AS BIGINT) AS delta,
                CAST(ROUND(CAST(c - p AS DOUBLE) / CAST(p AS DOUBLE), 6)
                     AS DOUBLE) AS growth
-        FROM l ORDER BY event_type, wk""")
-    },
+        FROM l ORDER BY event_type, wk""",
       // the same weekly LAG arithmetic
       """
       WITH w AS (SELECT event_type,
@@ -2708,9 +2642,7 @@ object Ops {
     // (n+1)/(n+2) DIV 2 middle, summed ×2 — a half-second median stays
     // an exact integer; the ts_anomaly_mad doubling trick). The global
     // rank runs over the post-agg |users| table
-    Entry("ts_time_to_convert", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_time_to_convert", """
         WITH fv AS (SELECT user_id, MIN(unix_micros(ts)) AS v
                     FROM events WHERE event_type = 'view' GROUP BY user_id),
         fp AS (SELECT user_id, MIN(unix_micros(ts)) AS p
@@ -2728,8 +2660,7 @@ object Ops {
                CAST(a.min_sec AS BIGINT) AS min_sec,
                CAST(a.max_sec AS BIGINT) AS max_sec,
                CAST(m.median_x2 AS BIGINT) AS median_x2_sec
-        FROM a CROSS JOIN m""")
-    },
+        FROM a CROSS JOIN m""",
       // the same first-view/first-purchase join and doubled rank-median
       """
       WITH fv AS (SELECT user_id, MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS v
@@ -2757,9 +2688,7 @@ object Ops {
     // Σc² stays an exact integer): a user with 100 events in one hour
     // scores 1.0, spread evenly over 50 hours scores 50. One agg per
     // (user, hour) + one per user
-    Entry("ts_activity_diversity", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_activity_diversity", """
         WITH h AS (SELECT user_id,
                           CAST(unix_micros(date_trunc('HOUR', ts)) DIV 3600000000 AS BIGINT) AS hr,
                           COUNT(*) AS c
@@ -2771,8 +2700,7 @@ object Ops {
                CAST(n_hours AS BIGINT) AS n_active_hours,
                CAST(ROUND(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                           / CAST(s2 AS DOUBLE), 6) AS DOUBLE) AS effective_hours
-        FROM a ORDER BY user_id""")
-    },
+        FROM a ORDER BY user_id""",
       // the same hourly distribution and inverse-Simpson tree
       """
       WITH h AS (SELECT user_id,
@@ -2795,9 +2723,7 @@ object Ops {
     // per-(stream, dow) counts, and the χ² term against the uniform
     // expectation in cross-multiplied integer form ((o·7 − t)² exact)
     // with one closing division per cell
-    Entry("ts_dow_profile", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_dow_profile", """
         WITH e AS (SELECT event_type,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) % 7 AS dow
                    FROM events),
@@ -2810,8 +2736,7 @@ object Ops {
                           / CAST(t.total * 7 AS DOUBLE), 6)
                     AS DOUBLE) AS chi2_term
         FROM c JOIN t ON t.event_type = c.event_type
-        ORDER BY c.event_type, dow""")
-    },
+        ORDER BY c.event_type, dow""",
       // the same integer dow and cross-multiplied χ² cells
       """
       WITH e AS (SELECT event_type,
@@ -2834,9 +2759,7 @@ object Ops {
     // LEAD window over the DISTINCT (user, week) grid, rolled up per
     // week; churn attributes to the week the user went silent, clamped
     // at the corpus horizon. Integer week = day DIV 7 as everywhere
-    Entry("ts_growth_accounting", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_growth_accounting", """
         WITH a AS (SELECT DISTINCT user_id,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) DIV 7 AS wk
                    FROM events),
@@ -2860,8 +2783,7 @@ object Ops {
                CAST(st.n_resurrected AS BIGINT) AS n_resurrected,
                CAST(COALESCE(ch.n_churned, 0) AS BIGINT) AS n_churned
         FROM st LEFT JOIN ch ON ch.wk = st.wk
-        ORDER BY st.wk""")
-    },
+        ORDER BY st.wk""",
       // the same activity grid, flags and churn attribution
       """
       WITH a AS (SELECT DISTINCT user_id,
@@ -2896,9 +2818,7 @@ object Ops {
     // arithmetic can't disagree). Money enters as ROUND(value·100)
     // cents and stays integer; the cumulative sum is a per-cohort
     // ordered window over the post-agg (cohort × age) table
-    Entry("ts_cohort_ltv", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_cohort_ltv", """
         WITH e AS (SELECT user_id, event_type,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) DIV 7 AS wk,
                           CAST(ROUND(value * 100) AS BIGINT) AS cents
@@ -2914,8 +2834,7 @@ object Ops {
                CAST(cents AS BIGINT) AS cents,
                CAST(SUM(cents) OVER (PARTITION BY cohort_wk ORDER BY age_wk
                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents
-        FROM g ORDER BY cohort_wk, age_wk""")
-    },
+        FROM g ORDER BY cohort_wk, age_wk""",
       // the same integer week index and cumulative window
       """
       WITH e AS (SELECT user_id, event_type,
@@ -2942,9 +2861,7 @@ object Ops {
     // no threshold can recover a pair the blocking never generates).
     // Counting joins only, no string scoring; ground truth from the id
     // offset as in the sweep
-    Entry("er_blocking_eval", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("er_blocking_eval", """
         WITH l AS (SELECT c_custkey AS lid, c_nationkey, c_name AS name
                    FROM customer),
         r AS (SELECT c_custkey + 1000000 AS rid, c_nationkey,
@@ -2970,8 +2887,7 @@ object Ops {
               UNION ALL SELECT 'prefix16', cand, cov FROM s2
               UNION ALL SELECT 'nation_only', cand, cov FROM s3) u
         CROSS JOIN nt
-        ORDER BY scheme""")
-    },
+        ORDER BY scheme""",
       // the same three counting joins (DuckDB needs no dialect change —
       // replayed verbatim but kept separate for the engines' substr/concat
       // parity)
@@ -3011,8 +2927,7 @@ object Ops {
     // count. ONE block join scored at threshold 0 feeds all four sweep
     // points via a broadcast threshold table — the sweep costs one
     // linkage, not four
-    Entry("er_threshold_sweep", (s, d) => {
-      Tables.register(s, d)
+    Entry("er_threshold_sweep", (s, _) => {
       val cust = s.table("customer")
       val leftDf = cust.selectExpr("c_custkey AS lid", "c_nationkey",
         "substr(c_name, 1, 17) AS blk", "c_name AS name",
@@ -3094,9 +3009,7 @@ object Ops {
     // interpolation) turns billions of gaps into a |types|×|bins|
     // mergeable state — the same sketch discipline, applied to a
     // DERIVED series instead of a stored column
-    Entry("ts_interarrival", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_interarrival", """
         WITH e AS (SELECT event_type, user_id, unix_micros(ts) AS us, event_id
                    FROM events),
         g AS (SELECT event_type,
@@ -3120,8 +3033,7 @@ object Ops {
                CAST(t.bin * 60 + ((t.k - (t.cum - t.n)) * 60) DIV t.n AS BIGINT) AS est_gap_s
         FROM tgt t JOIN hit h ON t.event_type = h.event_type
                AND t.pct = h.pct AND t.bin = h.hbin
-        ORDER BY t.event_type, pct""")
-    },
+        ORDER BY t.event_type, pct""",
       // the same LAG-derived gaps through the same all-integer sketch
       """
       WITH e AS (SELECT event_type, user_id,
@@ -3156,9 +3068,7 @@ object Ops {
     // (customer² terms overflow int64 at scale), ONE closing division.
     // The agg_gini sibling on the squared-share axis; ×10000 matches the
     // antitrust convention
-    Entry("agg_hhi", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_hhi", """
         WITH c AS (SELECT c_mktsegment AS seg, o_custkey,
                           SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS cents
                    FROM orders JOIN customer ON c_custkey = o_custkey
@@ -3171,8 +3081,7 @@ object Ops {
                CAST(ROUND(CAST(s2 AS DOUBLE) * 10000.0
                  / (CAST(total AS DOUBLE) * CAST(total AS DOUBLE)), 6)
                  AS DOUBLE) AS hhi_x10000
-        FROM a ORDER BY seg""")
-    },
+        FROM a ORDER BY seg""",
       // the same squared-share arithmetic (HUGEINT cross products)
       """
       WITH c AS (SELECT c_mktsegment AS seg, o_custkey,
@@ -3197,9 +3106,7 @@ object Ops {
     // adjusted means are fixed IEEE trees on those exact sums. Pre =
     // first 15 days; users missing a pre-period impute x = 0 in both
     // engines; variant = user_id parity
-    Entry("agg_cuped", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_cuped", """
         WITH e AS (SELECT user_id,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) AS day,
                           CAST(ROUND(value * 100) AS BIGINT) AS cents
@@ -3232,8 +3139,7 @@ object Ops {
                  / 100.0, 6) AS DOUBLE) AS mean_adjusted,
                CAST(ROUND(th.theta, 6) AS DOUBLE) AS theta
         FROM v CROSS JOIN th
-        ORDER BY variant""")
-    },
+        ORDER BY variant""",
       // the same exact sufficient statistics (HUGEINT carries the cross
       // products) and fixed adjustment trees
       """
@@ -3278,9 +3184,7 @@ object Ops {
     // cross-multiplied integer form before ONE double conversion per
     // term at the edge. The k-sample extension of agg_ab_welch —
     // map-side-combinable stats, |groups|-row driver arithmetic
-    Entry("agg_anova_f", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_anova_f", """
         WITH v AS (SELECT o_orderstatus AS g,
                           CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
                    FROM orders),
@@ -3307,8 +3211,7 @@ object Ops {
                           / NULLIF((CAST(ss2 AS DOUBLE) - sbd)
                                    / CAST(nn - k AS DOUBLE), 0.0), 6)
                     AS DOUBLE) AS f_stat
-        FROM tot""")
-    },
+        FROM tot""",
       // the same sufficient statistics; the per-group S²/n doubles fold in
       // group order (list_reduce), the Σx² stays exact DECIMAL/HUGEINT
       """
@@ -3346,9 +3249,7 @@ object Ops {
     // integers (shrunk_ppm = (k·D + 5·K)·10⁶ DIV ((n+5)·D) where K/D is
     // the global rate as an integer fraction) — no float ever decides a
     // rank. One scan + a 1-row global broadcast
-    Entry("agg_shrunk_rates", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_shrunk_rates", """
         WITH u AS (SELECT user_id, COUNT(*) AS n,
                           SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS k
                    FROM events GROUP BY user_id),
@@ -3359,8 +3260,7 @@ object Ops {
                CAST(((u.k * g.gn + 5 * g.gk) * 1000000) DIV ((u.n + 5) * g.gn)
                     AS BIGINT) AS shrunk_ppm
         FROM u CROSS JOIN g
-        ORDER BY u.user_id""")
-    },
+        ORDER BY u.user_id""",
       // the same integer fraction arithmetic
       """
       WITH u AS (SELECT user_id, COUNT(*) AS n,
@@ -3382,9 +3282,7 @@ object Ops {
     // power-of-two scale — bit-exact in IEEE. The decayed-score shape
     // every feed/recommendation freshness term uses, with none of the
     // usual exp() nondeterminism
-    Entry("agg_decayed_engagement", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_decayed_engagement", """
         WITH e AS (SELECT user_id,
                           CAST(unix_micros(ts) DIV 86400000000 AS BIGINT) AS day,
                           CAST(ROUND(value * 100) AS BIGINT) AS cents
@@ -3399,8 +3297,7 @@ object Ops {
                CAST(ROUND(CAST(SUM(wc) AS DOUBLE) / 1073741824.0, 6)
                     AS DOUBLE) AS score
         FROM w GROUP BY user_id
-        ORDER BY user_id""")
-    },
+        ORDER BY user_id""",
       // the same clamped dyadic weights and power-of-two closing scale
       """
       WITH e AS (SELECT user_id,
@@ -3424,9 +3321,7 @@ object Ops {
     // RANGE frame on the day index (calendar gaps shrink n honestly);
     // every operand exact until the one closing division. The windowed
     // sibling of agg_regression_exact
-    Entry("ts_rolling_slope", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_rolling_slope", """
         WITH dd AS (SELECT event_type,
                            CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT) AS day,
                            COUNT(*) AS c
@@ -3445,8 +3340,7 @@ object Ops {
                CAST(ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
                  / NULLIF(CAST(n * sxx - sx * sx AS DOUBLE), 0.0), 6)
                  AS DOUBLE) AS slope7
-        FROM w ORDER BY event_type, day""")
-    },
+        FROM w ORDER BY event_type, day""",
       // the same five windowed sums and closed form
       """
       WITH dd AS (SELECT event_type,
@@ -3478,9 +3372,7 @@ object Ops {
     // the integer hour INDEX, so calendar gaps shrink the baseline
     // honestly instead of silently stretching it. One agg + one
     // bounded window per stream
-    Entry("ts_burst_flags", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_burst_flags", """
         WITH h AS (SELECT event_type,
                           CAST(unix_micros(date_trunc('HOUR', ts)) DIV 3600000000 AS BIGINT) AS hr,
                           COUNT(*) AS cnt
@@ -3495,8 +3387,7 @@ object Ops {
                CAST(sum_prev AS BIGINT) AS sum_prev,
                CAST(n_prev AS BIGINT) AS n_prev,
                CAST(n_prev >= 6 AND cnt * n_prev > 3 * sum_prev AS BOOLEAN) AS is_burst
-        FROM w ORDER BY event_type, hr""")
-    },
+        FROM w ORDER BY event_type, hr""",
       // the same trailing RANGE frame on the hour index and the same
       // integer burst comparison
       """
@@ -3521,12 +3412,9 @@ object Ops {
     // feed change" alarm a pipeline runs before retraining on a new
     // slice: exact integer TVD between consecutive weekly event_type
     // distributions (the qc_t_closeness arithmetic on the time axis)
-    Entry("ts_mix_shift", (s, d) => {
-      Tables.register(s, d)
-      s.sql(mixShiftSql(
+    Entry.sql("ts_mix_shift", mixShiftSql(
         "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)",
-        "DIV", "/*+ BROADCAST(ty) */"))
-    },
+        "DIV", "/*+ BROADCAST(ty) */"),
       // identical TVD text; day-index + division dialects, hint elided
       mixShiftSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)",
@@ -3541,8 +3429,7 @@ object Ops {
     // cutoff (censored). Corpus-scale work is the per-duration agg;
     // risk sets and the survival prefix product run on the bounded
     // day-granular table (operators/Survival.scala)
-    Entry("ts_kaplan_meier", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_kaplan_meier", (s, _) => {
       val spells = s.sql("""
         WITH ranked AS (SELECT o_custkey, o_orderkey, o_orderdate,
                                row_number() OVER (PARTITION BY o_custkey
@@ -3603,8 +3490,7 @@ object Ops {
     // (operators/Survival.scala): BUILDING-segment customers vs rest —
     // O1 exact integer, E1/V day-ordered folds of per-day IEEE terms on
     // exact risk sets, χ² from the unrounded sums at the edge
-    Entry("ts_logrank", (s, d) => {
-      Tables.register(s, d)
+    Entry("ts_logrank", (s, _) => {
       val spells = s.sql("""
         WITH ranked AS (SELECT o_custkey, o_orderkey, o_orderdate,
                                row_number() OVER (PARTITION BY o_custkey
@@ -3682,8 +3568,7 @@ object Ops {
     // 2×2 difference-in-differences (operators/Causal.scala): BUILDING
     // segment vs rest, pre/post 1996 — one scan, four DECIMAL-exact cell
     // means, the DiD contrast a fixed IEEE tree
-    Entry("agg_diff_in_diff", (s, d) => {
-      Tables.register(s, d)
+    Entry("agg_diff_in_diff", (s, _) => {
       graft.operators.Causal.diffInDiff(
         s.sql("""
           SELECT c_mktsegment = 'BUILDING' AS treat,
@@ -3727,8 +3612,7 @@ object Ops {
     // strata = order priority, "treatment" = fulfilled status, outcome =
     // order cents; per-stratum DECIMAL-exact sufficient stats, the
     // stratum-ordered fold is metadata-scale
-    Entry("agg_stratified_ate", (s, d) => {
-      Tables.register(s, d)
+    Entry("agg_stratified_ate", (s, _) => {
       graft.operators.Causal.stratifiedAte(s.sql("""
         SELECT o_orderpriority AS strat, o_orderstatus = 'F' AS treated,
                CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS y
@@ -3776,11 +3660,8 @@ object Ops {
 
     // separately, forecast = size/interval — is the standard answer.
     // Same driver-unrolled dyadic machinery as ts_holt_forecast
-    Entry("ts_croston", (s, d) => {
-      Tables.register(s, d)
-      s.sql(crostonSql(
-        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"))
-    },
+    Entry.sql("ts_croston", crostonSql(
+        "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)"),
       // identical filter text; only the day-index dialect differs
       crostonSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)")),
@@ -3789,12 +3670,9 @@ object Ops {
     // lets an experiment STOP EARLY without inflating false positives:
     // four calendar looks, cumulative Welch z per look, Pocock boundary
     // literal. Driver-literal boundaries, DECIMAL-exact cumulative stats
-    Entry("agg_group_sequential", (s, d) => {
-      Tables.register(s, d)
-      s.sql(groupSeqSql(
+    Entry.sql("agg_group_sequential", groupSeqSql(
         "CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT)",
-        "DIV"))
-    },
+        "DIV"),
       // identical statistic text; only day-index + integer-division differ
       groupSeqSql(
       "CAST(epoch_us(date_trunc('day', CAST(ts AS TIMESTAMP))) // 86400000000 AS BIGINT)",
@@ -3806,9 +3684,7 @@ object Ops {
     // is the integer comparison cum·5 ≥ total·4 — no float decides
     // membership). Revenue stays integer cents end-to-end; the window
     // runs over the POST-AGG customer table like agg_rfm_segments
-    Entry("agg_pareto_coverage", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_pareto_coverage", """
         WITH c AS (SELECT c_mktsegment AS seg, o_custkey AS cust,
                           SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS cents
                    FROM orders JOIN customer ON c_custkey = o_custkey
@@ -3826,8 +3702,7 @@ object Ops {
                CAST(ROUND(CAST(MIN(rk) AS DOUBLE) / CAST(MIN(n) AS DOUBLE), 6)
                     AS DOUBLE) AS frac_top80
         FROM r WHERE cum * 5 >= total * 4
-        GROUP BY seg ORDER BY seg""")
-    },
+        GROUP BY seg ORDER BY seg""",
       // the identical integer crossing rule over the same ranked prefix
       """
       WITH c AS (SELECT c_mktsegment AS seg, o_custkey AS cust,
@@ -3855,9 +3730,7 @@ object Ops {
     // the per-chunk union bitmaps come out of the same Expand, and both
     // popcount to EXACT distinct counts. The reason sketch state beats
     // materialized counts in a cube: counts don't merge, bitmaps do
-    Entry("agg_bitmap_rollup", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_bitmap_rollup", """
         WITH b AS (SELECT event_type, user_id DIV 62 AS chunk,
                           bit_or(shiftleft(CAST(1 AS BIGINT),
                                  CAST(user_id % 62 AS INT))) AS bm
@@ -3868,8 +3741,7 @@ object Ops {
                CAST(COUNT(*) AS BIGINT) AS n_chunks,
                CAST(SUM(bit_count(bm)) AS BIGINT) AS n_distinct
         FROM b GROUP BY event_type
-        ORDER BY event_type""")
-    },
+        ORDER BY event_type""",
       // the same grouping sets through DuckDB's GROUPING SETS + bit_or
       """
       WITH b AS (SELECT event_type, user_id // 62 AS chunk,
@@ -3888,9 +3760,7 @@ object Ops {
     // running peak (windowed MAX), drawdown = peak − cum, answer = MAX —
     // four exact windowed integers, the classic sequential metric with
     // zero sequential execution
-    Entry("ts_max_drawdown", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_max_drawdown", """
         WITH dd AS (SELECT event_type,
                            CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT) AS day,
                            SUM(CAST(ROUND(value * 100) AS BIGINT)
@@ -3908,8 +3778,7 @@ object Ops {
                CAST(MAX(peak - cum) AS BIGINT) AS max_drawdown_cents,
                CAST(MAX(peak) AS BIGINT) AS peak_cents
         FROM p GROUP BY event_type
-        ORDER BY event_type""")
-    },
+        ORDER BY event_type""",
       // the same cumulative / peak windows
       """
       WITH dd AS (SELECT event_type,
@@ -3940,9 +3809,7 @@ object Ops {
     // longs instead of every id — the exact-answer middle ground
     // between COUNT(DISTINCT)'s full shuffle and the HLL/KMV sketches'
     // approximation, and the state unions across shards/versions by OR
-    Entry("agg_bitmap_distinct", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_bitmap_distinct", """
         WITH b AS (SELECT event_type, user_id DIV 62 AS chunk,
                           bit_or(shiftleft(CAST(1 AS BIGINT),
                                  CAST(user_id % 62 AS INT))) AS bm
@@ -3956,8 +3823,7 @@ object Ops {
                CAST(a.n_distinct_bitmap AS BIGINT) AS n_distinct_bitmap,
                CAST(ex.n_exact AS BIGINT) AS n_exact
         FROM a JOIN ex ON ex.event_type = a.event_type
-        ORDER BY event_type""")
-    },
+        ORDER BY event_type""",
       // the same 62-bit packing; DuckDB's `<<` + // division
       """
       WITH b AS (SELECT event_type, user_id // 62 AS chunk,
@@ -3983,9 +3849,7 @@ object Ops {
     // what keeps the pairwise form viable: pairs are (window days)² —
     // ≤ 7,140 per key forever — where an unbounded multi-year calendar
     // went quadratic (110 s at the factor-100 time-replicated staging)
-    Entry("ts_theilsen", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("ts_theilsen", """
         WITH dc0 AS (SELECT event_type,
                            CAST(unix_micros(date_trunc('DAY', ts)) DIV 86400000000 AS BIGINT) AS day,
                            COUNT(*) AS c
@@ -4005,8 +3869,7 @@ object Ops {
         SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_pairs,
                CAST(ROUND(SUM(slope) / COUNT(*), 6) AS DOUBLE) AS theil_slope
         FROM r WHERE rk IN ((n + 1) DIV 2, (n + 2) DIV 2)
-        GROUP BY event_type ORDER BY event_type""")
-    },
+        GROUP BY event_type ORDER BY event_type""",
       // the identical pairwise-slope median (ranks, never percentile)
       """
       WITH dc0 AS (SELECT event_type,
@@ -4040,9 +3903,7 @@ object Ops {
     // windows run over the POST-AGG customer table (|customers| ≪
     // |orders| — the realistic segment-table shape); a pre-agg input at
     // 100 TB would use the two-phase prefix-sum rank instead
-    Entry("agg_rfm_segments", (s, d) => {
-      Tables.register(s, d)
-      s.sql("""
+    Entry.sql("agg_rfm_segments", """
         WITH maxd AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS mx FROM orders),
         c AS (SELECT o_custkey AS cust,
                      MIN(datediff(mx, CAST(o_orderdate AS DATE))) AS recency_days,
@@ -4059,8 +3920,7 @@ object Ops {
                       CAST(m_score AS STRING)) AS segment,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
                CAST(SUM(cents) AS BIGINT) AS sum_cents
-        FROM sc GROUP BY 1 ORDER BY segment""")
-    },
+        FROM sc GROUP BY 1 ORDER BY segment""",
       // the same closed-form quartile rank ((rank-1)*4 // n + 1) —
       // deliberately NOT ntile on either side
       """

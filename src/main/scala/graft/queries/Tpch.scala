@@ -69,7 +69,7 @@ object Tpch {
     */
   val entries: Seq[Entry] = Seq(
     // q1: pricing summary — scan + filter + 8-agg group-by (reference tpch/queries/q1.sql)
-    Entry("tpch_q1", q1, q1Sql),
+    Entry("tpch_q1", (s, _) => q1(s), q1Sql),
 
     // q2: min-cost supplier — correlated scalar subquery (reference tpch/queries/q2.sql;
     // lineitem stands in for the missing partsupp table)
@@ -228,7 +228,7 @@ object Tpch {
 
     // q15: top supplier — the reference's view lifecycle (reference tpch/queries/q15.sql);
     // the oracle inlines the view as a CTE
-    Entry("tpch_q15", q15, s"WITH revenue0 AS ($q15View) $q15Select"),
+    Entry("tpch_q15", (s, _) => q15(s), s"WITH revenue0 AS ($q15View) $q15Select"),
 
     // q16: parts/supplier relationship — NOT IN subquery + count distinct (reference tpch/queries/q16.sql)
     Entry.sql("tpch_q16", s"""
@@ -328,8 +328,7 @@ object Tpch {
     * `tpch/tpcbench.py:110-114`; the reference's own Spark harness rewrites
     * `create view` → `create temp view`, `k8s/spark_tpcbench.py:91`).
     */
-  private def q15(spark: SparkSession, dir: String): DataFrame = {
-    Tables.register(spark, dir)
+  private def q15(spark: SparkSession): DataFrame = {
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW revenue0 AS $q15View")
     // Materialize before dropping the view so the shared session is left
     // clean (a later table named revenue0 must not resolve to this view).
@@ -352,8 +351,7 @@ object Tpch {
     * exists. Results are unchanged: every q1 aggregate is DECIMAL /
     * COUNT (order-independent); the DuckDB oracle text stays identical.
     */
-  private def q1(spark: SparkSession, dir: String): DataFrame = {
-    Tables.register(spark, dir)
+  private def q1(spark: SparkSession): DataFrame = {
     val li = spark.table("lineitem")
     val target = spark.sparkContext.defaultParallelism
     val spread =

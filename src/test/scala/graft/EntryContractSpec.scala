@@ -16,6 +16,31 @@ class EntryContractSpec extends SparkSpec {
     assert(!err.getMessage.contains("other"), err.getMessage)
   }
 
+  test("selecting entries by name fails on unknown names, naming each") {
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("tpch_q1", "no_such_a", "no_such_b")))
+    assert(err.getMessage.contains("no_such_a"), err.getMessage)
+    assert(err.getMessage.contains("no_such_b"), err.getMessage)
+    assert(!err.getMessage.contains("tpch_q1"), err.getMessage)
+    assert(SparkEntry.select(Seq("tpch_q6", "tpch_q1")).map(_.name) ==
+      Seq("tpch_q6", "tpch_q1"))
+    assert(SparkEntry.select(Nil) == SparkEntry.entries)
+  }
+
+  // Entry.run registers the dir it is given, so a body that names its
+  // tables reads that dir even when the session's views point elsewhere
+  test("an entry reads the dir it is given, not the dir the views point at") {
+    val names = Seq("qc_column_profile", "ts_window_agg")
+    def rows(n: String): Seq[String] =
+      SparkEntry.queries(n)(spark, sfSmoke).collect().map(_.toString).toSeq.sorted
+    Tables.register(spark, sfSmoke)
+    val expected = names.map(rows)
+    Tables.register(spark, sfBench)
+    assert(names.map(rows) == expected)
+    val files = spark.table("orders").inputFiles
+    assert(files.nonEmpty && files.forall(_.contains(sfSmoke + "/")), files.mkString(", "))
+  }
+
   test("Verify runs the session-mutating entries serially, the rest pooled") {
     val (pooled, serial) = Verify.phases(SparkEntry.entries)
     val names = SparkEntry.queries.keySet

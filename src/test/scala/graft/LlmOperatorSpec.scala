@@ -812,7 +812,7 @@ class LlmOperatorSpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq(0L, 1L, 46L, 123L, 4999L)
     val dec = Multimodal.decodeImages(
-      Multimodal.synthesizeImages(ids.toDF("doc_id")), batchSize = 2)
+      Multimodal.synthesizeImages(ids.toDF("doc_id")))
       .collect().map(d => d.doc_id -> d).toMap
     for (id <- ids) {
       val (w, h) = (Multimodal.ImageSynth.width(id), Multimodal.ImageSynth.height(id))
@@ -831,7 +831,7 @@ class LlmOperatorSpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq(0L, 1L, 46L, 123L, 4999L, 1739L)
     val hashed = Multimodal.dhashImages(
-      Multimodal.synthesizeImages(ids.toDF("doc_id")), batchSize = 2)
+      Multimodal.synthesizeImages(ids.toDF("doc_id")))
       .collect().map(d => d.doc_id -> d.dhash).toMap
     // independent recompute straight from the synthesis formulas
     def expected(id: Long): Long = {
@@ -923,7 +923,7 @@ class LlmOperatorSpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq(0L, 1L, 63L, 511L, 4999L)
     val dec = Multimodal.decodeAudio(
-      Multimodal.synthesizeAudio(ids.toDF("doc_id")), batchSize = 2)
+      Multimodal.synthesizeAudio(ids.toDF("doc_id")))
       .collect().map(d => d.doc_id -> d).toMap
     for (id <- ids) {
       val n = Multimodal.AudioSynth.nSamples(id)
@@ -945,7 +945,7 @@ class LlmOperatorSpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq(0L, 1L, 8L, 62L, 4999L)
     val dec = Multimodal.decodeVideo(
-      Multimodal.synthesizeVideo(ids.toDF("doc_id")), batchSize = 2)
+      Multimodal.synthesizeVideo(ids.toDF("doc_id")))
       .collect().map(d => d.doc_id -> d).toMap
     for (id <- ids) {
       val (n, w, h) = (Multimodal.VideoSynth.nFrames(id),
