@@ -23,6 +23,18 @@ object Bench {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
 
+  /** Seconds of one pass of `body` over `dir` through the `noop` sink,
+    * inside its own [[Shared.scope]] so the release of its checkpoints
+    * stays off the clock: the timed entry run of Bench, ScaleBench and
+    * TwsProbe.
+    */
+  def timeEntry(spark: org.apache.spark.sql.SparkSession, dir: String)
+               (body: (org.apache.spark.sql.SparkSession, String) =>
+                 org.apache.spark.sql.DataFrame): Double =
+    Shared.scope(spark) {
+      time(body(spark, dir).write.mode("overwrite").format("noop").save())
+    }
+
   /** Churn guard (r13 verdict #2): the driver's end-of-round bench has
     * twice now run on a staging-churned box and recorded ~10× one-off
     * outliers on trivial entries (r13: agg_rollup 15.7 s vs 0.97 s on a
@@ -135,7 +147,7 @@ object Bench {
           |UNION ALL
           |SELECT timestamp'2026-01-01 00:10:00', CAST(2 AS BIGINT)""".stripMargin)
       two.write.mode("overwrite").parquet(wdir)
-      val agg = spark.readStream.schema(two.schema).parquet(wdir)
+      val agg = graft.streaming.Streams.fromParquet(spark, wdir, two.schema)
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count("*"))
@@ -163,13 +175,10 @@ object Bench {
         loadBands(sys.env.getOrElse("SPARK_GRAFT_BENCH_BANDS", "bench_bands.tsv"))
       else Map.empty[String, Double]
     var outliers = List.empty[(String, Double, Double)]
-    // one timed noop-sink pass for (name, fn); shared by the scored loop
-    // and the canary probes, its checkpoints released off the clock
-    def onePass(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double =
-      Shared.scope(spark) {
-        time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      }
+    type QueryFn = (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame
+    // one timed pass; shared by the scored loop and the canary probes
+    def onePass(fn: QueryFn): Double = timeEntry(spark, sfDir)(fn)
     // Whole-run churn canary (r14 verdict #1): three fixed cheap entries
     // timed off-the-clock at session START and END. Broad 1.5-2.5× box
     // churn sails under the per-entry guard; the canary makes the scored
@@ -194,8 +203,6 @@ object Bench {
     // passes must measure the steady state for the ratio to center on 1.0.
     canaryPass()
     val canaryStart = canaryPass()
-    type QueryFn = (org.apache.spark.sql.SparkSession, String) =>
-      org.apache.spark.sql.DataFrame
     // recordError=false on guard-triggered re-measures (ADVICE r14): a
     // flaky retry must not convert a clean first reading into a reported
     // bench failure — churnGuard's -1 handling already keeps the first

@@ -139,9 +139,7 @@ object ScaleBench {
       // clock: blocks left by PRIOR queries are suite pressure, not this
       // query's cost — the r13 factor-100 run timed tpch_q18 at 77.9 s
       // under 32 queries' accumulated state vs 10.4 s clean
-      def run(e: graft.queries.Entry): Double = Shared.scope(spark) {
-        time(e.run(spark, out).write.mode("overwrite").format("noop").save())
-      }
+      def run(e: graft.queries.Entry): Double = Bench.timeEntry(spark, out)(e.run)
       selected.foreach(run) // warm every plan off the clock
       val timed = selected.map(e => s""""${e.name}":${Fmt.sec(run(e))}""")
       val rows = spark.read.parquet(s"$out/lineitem.parquet").count()

@@ -183,21 +183,16 @@ object ScaleProbe {
     val l = spark.read.parquet(s"$dir/left")
     val r = spark.read.parquet(s"$dir/right")
     val agreements = Seq(("l_lv = r_rv", 2), ("l_lname = r_rname", 1))
-    def measure(skewJoin: Boolean)(f: => DataFrame): (Double, Double) = {
-      val lis = new MaxTaskListener
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewJoin.toString)
-      try {
+    def measure(skewJoin: Boolean)(f: => DataFrame): (Double, Double) =
+      Session.withConf(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.skewJoin.enabled" -> skewJoin.toString)) {
+        val lis = new MaxTaskListener
         spark.sparkContext.addSparkListener(lis)
         val t = time(f.write.mode("overwrite").format("noop").save())
         Thread.sleep(500) // async listener bus
         spark.sparkContext.removeSparkListener(lis)
         (t, lis.maxMs / 1000.0)
-      } finally {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.skewJoin.enabled")
       }
-    }
     def plain() = operators.Entity.blockedLink(l, r, Seq("blk"), agreements, 2)
     def salted() = operators.Entity.blockedLinkSalted(
       l, r, Seq("blk"), agreements, 2, salts = 16)

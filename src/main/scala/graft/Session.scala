@@ -79,4 +79,19 @@ object Session {
   /** A fresh directory `<root>/<name><random>` under the run root. */
   def scratch(spark: SparkSession, name: String): String =
     Files.createTempDirectory(root(spark).toPath, name).toString
+
+  /** Run `body` with `confs` set on `spark`'s session, then put each key
+    * back as it was: its previous value, or unset if it had none. Restores
+    * also when `body` throws. The one way graft changes a session conf
+    * for a scope.
+    */
+  def withConf[T](spark: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

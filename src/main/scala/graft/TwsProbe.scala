@@ -7,15 +7,15 @@ package graft
   * time-replicated events fixture once, then times the streaming sketch
   * entries under RocksDB conf variants — each variant set on the session
   * BEFORE the query starts (state-store confs snapshot at stream start),
-  * unset after:
+  * restored after. `baseline` is the provider confs the entries adopt
+  * (`Streams.rocksDb`, from r14's run of this probe: 256 MB block cache,
+  * 256 MB × 4 write buffers); each variant adds one conf on top:
   *
   *   - `no_track_rows`: trackTotalNumberOfRows=false drops the
   *     get-before-put RocksDB does per write just to maintain the row
   *     count metric — the documented first lever for update-heavy state;
   *   - `changelog_ckpt`: changelog checkpointing uploads deltas instead
-  *     of full snapshots per batch;
-  *   - `block_cache_256` / `write_buffer_256`: memory headroom for the
-  *     read path / memtable flush cadence.
+  *     of full snapshots per batch.
   *
   * `runMain graft.TwsProbe [factor] [srcDir] [query...]` — defaults:
   * factor 100, the three MapState sketch entries. One JSON line of
@@ -36,24 +36,13 @@ object TwsProbe {
     val variants: Seq[(String, Map[String, String])] = Seq(
       ("baseline", Map.empty),
       ("no_track_rows", Map(P + "trackTotalNumberOfRows" -> "false")),
-      ("changelog_ckpt", Map(P + "changelogCheckpointing.enabled" -> "true")),
-      ("block_cache_256", Map(P + "blockCacheSizeMB" -> "256")),
-      ("write_buffer_256", Map(P + "writeBufferSizeMB" -> "256",
-        P + "maxWriteBufferNumber" -> "4")),
-      ("combined", Map(P + "blockCacheSizeMB" -> "256",
-        P + "writeBufferSizeMB" -> "256",
-        P + "maxWriteBufferNumber" -> "4")))
+      ("changelog_ckpt", Map(P + "changelogCheckpointing.enabled" -> "true")))
     try {
       val tStage = Bench.time(ScaleBench.stage(spark, src, out, factor))
-      def run(q: graft.queries.Entry): Double = Shared.scope(spark) {
-        Bench.time(q.run(spark, out).write.mode("overwrite").format("noop").save())
-      }
+      def run(q: graft.queries.Entry): Double = Bench.timeEntry(spark, out)(q.run)
       queries.foreach(run) // warm codegen/JIT + page cache off the clock
       val items = for ((vn, confs) <- variants; q <- queries) yield {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val t =
-          try run(q)
-          finally confs.keys.foreach(spark.conf.unset)
+        val t = Session.withConf(spark, confs)(run(q))
         s""""${q.name}__$vn":${Fmt.sec(t)}"""
       }
       println(s"""{"factor":$factor,"stage_sec":${Fmt.sec(tStage, digits = 1)},""" +

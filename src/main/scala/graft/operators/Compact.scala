@@ -28,27 +28,16 @@ object Compact {
   def parquetDir(spark: SparkSession, inDir: String, outDir: String,
                  targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val conf = spark.conf
-    val prevMax = conf.get("spark.sql.files.maxPartitionBytes")
-    val prevCost = conf.get("spark.sql.files.openCostInBytes")
-    val prevMin = conf.getOption("spark.sql.files.minPartitionNum")
-    try {
-      conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
-      conf.set("spark.sql.files.openCostInBytes", "0")
-      // without this, bytes/defaultParallelism caps the split size and
-      // the packer re-fragments to one split per core — the opposite of
-      // compaction
-      conf.set("spark.sql.files.minPartitionNum", "1")
+    graft.Session.withConf(spark, Map(
+        "spark.sql.files.maxPartitionBytes" -> targetBytes.toString,
+        "spark.sql.files.openCostInBytes" -> "0",
+        // without this, bytes/defaultParallelism caps the split size and
+        // the packer re-fragments to one split per core — the opposite of
+        // compaction
+        "spark.sql.files.minPartitionNum" -> "1")) {
       // scan partitions == the bin-packed file groups; plain write keeps
       // the mapping one task → one output file, so no shuffle anywhere
       spark.read.parquet(inDir).write.mode("overwrite").parquet(outDir)
-    } finally {
-      conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      conf.set("spark.sql.files.openCostInBytes", prevCost)
-      prevMin match {
-        case Some(v) => conf.set("spark.sql.files.minPartitionNum", v)
-        case None => conf.unset("spark.sql.files.minPartitionNum")
-      }
     }
     val out = new Path(outDir)
     val fs = out.getFileSystem(spark.sessionState.newHadoopConf())

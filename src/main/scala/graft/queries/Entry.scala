@@ -16,9 +16,10 @@ import graft.Tables
   *
   * @param mutatesSession set when the body reaches state shared by every
   *   query of the session or its context, directly or through a helper: a
-  *   SQL conf (the `Streams.run*` helpers set `spark.sql.shuffle.partitions`,
-  *   `Io.withRocksDbProvider` the state store, `Compact` the scan-split
-  *   confs), or a catalog table or function. `graft.Verify` runs such
+  *   SQL conf set for a scope by `graft.Session.withConf` (the
+  *   `Streams.run*` and `Streams.replay` helpers set
+  *   `spark.sql.shuffle.partitions`, an entry's `Streams.rocksDb` the state
+  *   store, `Compact` the scan-split confs), or a catalog table or function. `graft.Verify` runs such
   *   entries one at a time after the concurrent pool. Temp views with
   *   entry-unique names and files under the entry's own directory do not
   *   count.

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.Streams
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Source/sink and session-surface coverage (round-2 verdict items #3, #4,
   * #6, #7, #9, #10):
@@ -36,90 +38,14 @@ import graft.Tables
   */
 object Io {
 
-  /** Run `body` with the RocksDB state store provider set (the only
-    * provider implementing the transformWithState v2 state layer),
-    * restoring the previous session setting afterwards.
-    */
-  private[graft] def withRocksDbProvider[T](s: SparkSession)(body: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // Memory headroom adopted from the r14 TwsProbe factor-100 sweep
-    // (graft.TwsProbe): 256 MB block cache + 256 MB × 4 write buffers
-    // read best-or-equal for all three MapState sketch entries in both
-    // probe runs (topk −34% in the clean run); defaults are 8 MB / 64 MB
-    // — far below what a 128 GiB box should give an update-heavy store.
-    // No conf moves the floor more than ~30%: per-row work is the
-    // streaming sketch ceiling (hll ≈ 7 µs/row), as pinned in SURVEY.
-    val tuned = Map(
-      provKey ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "256",
-      "spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB" -> "256",
-      "spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber" -> "4")
-    val prev = tuned.keys.map(k => k -> s.conf.getOption(k)).toMap
-    tuned.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Land `df` as ONE parquet file under `landing` with a pinned mtime —
-    * the file source admits one file per trigger (maxFilesPerTrigger=1)
-    * in mtime order, so a sequence of these IS a deterministic replay
-    * schedule.
-    */
-  private[graft] def stageOrderedFile(landing: String,
-                               df: org.apache.spark.sql.DataFrame,
-                               name: String, mtimeMs: Long): Unit = {
-    val tmp = new java.io.File(graft.Session.scratch(df.sparkSession, "stage_one"))
-    df.repartition(1).write.mode("overwrite").parquet(tmp.getPath)
-    val part = tmp.listFiles()
-      .find(f => f.getName.startsWith("part-")
-        && f.getName.endsWith(".parquet")).get
-    val dest = java.nio.file.Paths.get(landing, name)
-    java.nio.file.Files.move(part.toPath, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    Tables.deleteRecursively(tmp)
-  }
-
-  /** Stage several independent landing files CONCURRENTLY (r16 opt,
-    * guide §2.6 "overlap independent jobs"): each slice is its own
-    * scan+repartition(1)+write job whose final write stage is one task,
-    * so sequential staging serialized N mostly-idle jobs; a small thread
-    * pool lets the next job's scan tasks backfill the previous one's
-    * single-task tail. File contents and pinned mtimes are independent
-    * of completion order, and the landing dir is only read after all
-    * futures complete, so the replay schedule is byte-identical.
-    */
-  private[graft] def stageOrderedFiles(landing: String,
-      files: Seq[(org.apache.spark.sql.DataFrame, String, Long)]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    if (files.isEmpty) return
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(files.size, 4))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(files.map { case (df, name, mtime) =>
-        Future(stageOrderedFile(landing, df, name, mtime))
-      }), Duration.Inf): Unit
-    finally pool.shutdown()
-  }
-
-  /** Stage the events fixture as the FOUR mtime-ordered landing files the
-    * late-data streaming entries replay one micro-batch each (see the
+  /** The events fixture as the FOUR time-and-hash slices the late-data
+    * streaming entries replay one micro-batch each (see the
     * ts_stream_late_drop scaladoc for the watermark design): f1a = the
     * on-time history up to H12 minus a held-back 10% md5 slice, f1b = the
     * rest of the on-time history (H12, H6], f2 = the held-back slice
-    * arriving two batches late, f3 = the fresh tail (> H6). One parquet
-    * FILE per batch — the file source's unit of admission is a file, and
-    * mtime order (60 s apart) fixes the replay order. Returns the landing
-    * dir (caller deletes once the stream drains) and the staged schema.
+    * arriving two batches late, f3 = the fresh tail (> H6).
     */
-  private def stageLateLanding(s: SparkSession)
-      : (String, org.apache.spark.sql.types.StructType) = {
+  private def lateSlices(s: SparkSession): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val evs = s.table("events").select("ts", "event_id", "event_type", "value")
     val Array(h6, h12) = s.sql(
@@ -129,20 +55,23 @@ object Io {
       .head.toSeq.map(_.asInstanceOf[java.sql.Timestamp]).toArray
     val held =
       expr("conv(substr(md5(cast(event_id AS STRING)),1,15),16,10) % 10 = 0")
-    val landing = graft.Session.scratch(s, "stream_late")
-    val t0 = System.currentTimeMillis() - 600000
-    stageOrderedFiles(landing, Seq(
-      (evs.where(col("ts") <= lit(h12) && !held), "f1a_ontime.parquet", t0),
-      (evs.where(col("ts") > lit(h12) && col("ts") <= lit(h6) && !held),
-        "f1b_ontime.parquet", t0 + 60000),
-      (evs.where(col("ts") <= lit(h6) && held), "f2_late.parquet", t0 + 120000),
-      (evs.where(col("ts") > lit(h6)), "f3_tail.parquet", t0 + 180000)))
-    (landing, evs.schema)
+    Seq(evs.where(col("ts") <= lit(h12) && !held),
+      evs.where(col("ts") > lit(h12) && col("ts") <= lit(h6) && !held),
+      evs.where(col("ts") <= lit(h6) && held),
+      evs.where(col("ts") > lit(h6)))
   }
+
+  /** The events fixture as three event_id slices with the columns of
+    * [[Streams.Event]]: the replay of an entry whose state does not
+    * depend on how its input is split.
+    */
+  private def eventSlices(s: SparkSession): Seq[DataFrame] =
+    Streams.idSlices(s.table("events"), "event_id").map(_.select(col("ts"),
+      col("user_id"), col("event_type"), expr("CAST(value AS DOUBLE)").as("value")))
 
   /** Shared body of the stream-stream join entries: the purchase and
     * view slices of events as two file-source streams over the fixture
-    * file, driven through [[graft.streaming.Streams.intervalJoin]] by a
+    * file, driven through [[Streams.intervalJoin]] by a
     * real StreamingQuery to a fixed-name memory sink.
     * On bounded, fully-drained input the INNER join emits exactly the
     * batch answer; LEFT-OUTER additionally emits null-padded unmatched
@@ -155,21 +84,23 @@ object Io {
     import org.apache.spark.sql.functions.col
     def side(t: String): DataFrame = Tables.stream(s, d, "events")
       .where(col("event_type") === t).select("ts", "user_id", "event_type")
-    val joined = graft.streaming.Streams.intervalJoin(
+    val joined = Streams.intervalJoin(
       side("purchase"), side("view"), joinType = joinType)
-    graft.streaming.Streams.runToMemory(joined, sink,
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToMemory(joined, sink,
+      OutputMode.Append())
     s.table(sink).orderBy("user_id", "left_ts", "right_ts")
   }
+
+  /** The keyed changelog the upsert and SCD2 streams fold, from events. */
+  private val changelogCols = Seq("user_id AS k", "event_id AS seq",
+    """CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
+            WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op""",
+    "CAST(value AS DECIMAL(18,2)) AS total")
 
   /** The Io entries' file area for fixture dir `dir`: `<run root>/io/<sf>`. */
   private def base(s: SparkSession, dir: String): String =
     s"${graft.Session.root(s)}/io/${new java.io.File(dir).getName}"
 
-  /** Shared IVF oracle CTEs: the 4-centroid table, corpus-wide raw-cosine
-    * argmax assignment (min-cid ties — the Ivf.assign contract), the
-    * probe vector (vec 7) and its own cluster.
-    */
   /** Fixed test polygons for the point-in-polygon join, centi-degree
     * integer vertices (x = lon, y = lat); polygon 2 and 3 are concave,
     * so a bbox test alone cannot fake the answer.
@@ -841,13 +772,10 @@ object Io {
     // returned as the 1-row result.
     Entry("src_agg_pushdown", (s, d) => {
       import org.apache.spark.sql.functions.col
-      val prevV1 = s.conf.get("spark.sql.sources.useV1SourceList")
-      val prevAgg = s.conf.get("spark.sql.parquet.aggregatePushdown", "false")
-      s.conf.set("spark.sql.sources.useV1SourceList",
-        prevV1.split(",").map(_.trim)
-          .filterNot(v => v == "parquet" || v.isEmpty).mkString(","))
-      s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      try {
+      val v1 = s.conf.get("spark.sql.sources.useV1SourceList").split(",")
+        .map(_.trim).filterNot(v => v == "parquet" || v.isEmpty).mkString(",")
+      graft.Session.withConf(s, Map("spark.sql.sources.useV1SourceList" -> v1,
+          "spark.sql.parquet.aggregatePushdown" -> "true")) {
         // BIGINT columns only: footer min/max stats for them are always
         // present and pushdown-eligible (timestamp stats are not)
         val row = s.read.parquet(s"$d/lineitem.parquet")
@@ -861,9 +789,6 @@ object Io {
         Seq((row.getLong(0), row.getLong(1), row.getLong(2),
           row.getLong(3), row.getLong(4)))
           .toDF("n_rows", "min_okey", "max_okey", "min_pkey", "max_pkey")
-      } finally {
-        s.conf.set("spark.sql.sources.useV1SourceList", prevV1)
-        s.conf.set("spark.sql.parquet.aggregatePushdown", prevAgg)
       }
     },
       """SELECT count(*) AS n_rows,
@@ -1499,8 +1424,8 @@ object Io {
       // fixed sink name: runToMemory drops any previous run's table, so
       // the entry stays re-runnable without accumulating result tables
       val sink = "ts_stream_sink"
-      graft.streaming.Streams.runToMemory(agg, sink,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(agg, sink,
+        OutputMode.Complete())
       s.table(sink).orderBy("hour_ts", "event_type")
     },
       // bounded replay makes streaming deterministic: the oracle is the
@@ -1527,8 +1452,8 @@ object Io {
         .select(col("w.start").as("win_start"), col("event_type"),
           col("n_events"))
       val sink = "ts_stream_sliding_sink"
-      graft.streaming.Streams.runToMemory(agg, sink,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(agg, sink,
+        OutputMode.Complete())
       s.table(sink).orderBy("win_start", "event_type")
     },
       // epoch-aligned sliding membership, expanded flat: an event at t sits
@@ -1558,8 +1483,8 @@ object Io {
         .select(col("user_id"), col("sw.start").as("session_start"),
           col("sw.end").as("session_end"), col("n_events"))
       val sink = "ts_stream_sess_sink"
-      graft.streaming.Streams.runToMemory(agg, sink,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(agg, sink,
+        OutputMode.Complete())
       s.table(sink).orderBy("user_id", "session_start")
     },
       // identical semantics to ts_session_window (the streaming path must
@@ -1599,8 +1524,8 @@ object Io {
           sum("u_events").as("sum_user_events"),
           expr("CAST(SUM(u_value) AS DOUBLE)").as("sum_user_value"))
       val sink = "ts_stream_enrich_sink"
-      graft.streaming.Streams.runToMemory(enriched, sink,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(enriched, sink,
+        OutputMode.Complete())
       s.table(sink).orderBy("event_type")
     },
       """WITH u AS (SELECT user_id, count(*) AS u_events,
@@ -1624,7 +1549,7 @@ object Io {
       val purchases = Tables.stream(s, d, "events")
         .where("event_type = 'purchase'")
         .select("ts", "user_id", "value")
-      graft.streaming.Streams.runToParquet(purchases,
+      Streams.runToParquet(purchases,
         s"$root/out", s"$root/ck")
       // out/ lives until the NEXT invocation's cleanup: the returned
       // frame reads it lazily at the caller's action
@@ -1661,20 +1586,17 @@ object Io {
       Tables.deleteRecursively(new java.io.File(root))
       val landing = s"$root/landing"
       new java.io.File(landing).mkdirs()
-      val t0 = System.currentTimeMillis() - 600000
-      stageOrderedFiles(landing, (0 until 2).map(i =>
-        (evs.where(s"event_id % 4 = $i"), s"f$i.parquet", t0 + i * 60000)))
-      def run(): Unit = graft.streaming.Streams.runToParquet(
-        s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
+      val slices = Streams.idSlices(evs, "event_id", 4)
+      Streams.stage(landing, slices.take(2))
+      def run(): Unit = Streams.runToParquet(
+        Streams.replaySource(s, landing, evs.schema)
           .where("value > 100.0")
           .selectExpr("event_id", "event_type",
             "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS value_cents",
             "CAST(date_trunc('DAY', ts) AS DATE) AS day"),
         s"$root/out", s"$root/ck")
       run() // phase 1: drains f0, f1, stops
-      stageOrderedFiles(landing, (2 until 4).map(i =>
-        (evs.where(s"event_id % 4 = $i"), s"f$i.parquet", t0 + i * 60000)))
+      Streams.stage(landing, slices.drop(2), first = 2)
       run() // phase 2: resumes from the checkpoint, drains f2, f3
       s.read.parquet(s"$root/out").orderBy("event_id")
     },
@@ -1685,17 +1607,6 @@ object Io {
         |FROM events WHERE CAST(value AS DOUBLE) > 100.0
         |ORDER BY event_id""".stripMargin, mutatesSession = true),
 
-    // STREAMING MERGE/upsert materialization: a keyed changelog arrives
-    // in micro-batches (3 landing files, maxFilesPerTrigger=1) and
-    // foreachBatch folds each batch into a serving snapshot with
-    // latest-seq-wins INCLUDING delete tombstones (dropping a winning
-    // delete early would let an out-of-order older change resurrect the
-    // key in a later batch — Cdc.latestChanges scaladoc). Dirs alternate
-    // per batch (read state N, write state N+1) — the no-transactional-
-    // table MERGE; with Delta/Iceberg the rewrite becomes a keyed MERGE
-    // INTO, the fold logic unchanged. The oracle applies the WHOLE
-    // changelog at once: green proves batch-split-invariant convergence
-    // of the incremental fold, tombstones and all.
     // CSV QUOTING TORTURE round-trip: fields carrying embedded
     // delimiters, double quotes AND raw newlines written through the
     // csv sink (RFC-4180 '"' escape) and read back with multiLine —
@@ -1718,9 +1629,6 @@ object Io {
           "md5(f_quote) AS h_quote", "md5(f_newline) AS h_newline")
         .orderBy("k")
     },
-      // the WHOLE changelog applied in one shot (window rank, no
-      // incremental fold, no tombstone carrying) — green proves the
-      // 3-batch foreachBatch merge converged to the same snapshot
       // the tricky strings recomputed straight from the base table — the
       // CSV files never enter the oracle's path
       """SELECT CAST(p_partkey AS BIGINT) AS k,
@@ -1795,7 +1703,7 @@ object Io {
       val stream = s.readStream.format("graft.sources.ArrowIpcSource")
         .option("maxVersionsPerTrigger", 1).load(p)
       val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      graft.streaming.Streams.runForeachBatch(stream, s"$root/ck") {
+      Streams.runForeachBatch(stream, s"$root/ck") {
         (batch, id) =>
           val r = batch.agg(
             count(lit(1)).as("n"),
@@ -1813,37 +1721,43 @@ object Io {
         |         AS sum_bal
         |FROM supplier GROUP BY 1 ORDER BY batch_id""".stripMargin, mutatesSession = true),
 
+    // STREAMING MERGE/upsert materialization: a keyed changelog arrives
+    // in micro-batches (3 event_id slices, one per batch) and
+    // foreachBatch folds each batch into a serving snapshot with
+    // latest-seq-wins INCLUDING delete tombstones (dropping a winning
+    // delete early would let an out-of-order older change resurrect the
+    // key in a later batch — Cdc.latestChanges scaladoc). Dirs alternate
+    // per batch (read state N, write state N+1) — the no-transactional-
+    // table MERGE; with Delta/Iceberg the rewrite becomes a keyed MERGE
+    // INTO, the fold logic unchanged. The oracle applies the WHOLE
+    // changelog at once: green proves batch-split-invariant convergence
+    // of the incremental fold, tombstones and all.
     Entry("ts_stream_upsert", (s, d) => {
-      import org.apache.spark.sql.functions.expr
       val events = s.table("events")
         .select("event_id", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_upsert"
       Tables.deleteRecursively(new java.io.File(root))
-      val inDir = graft.Session.scratch(s, "upsert_in")
-      events.repartition(3).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .selectExpr("user_id AS k", "event_id AS seq",
-          """CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
-                  WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op""",
-          "CAST(value AS DECIMAL(18,2)) AS total")
       var last: Option[String] = None
-      graft.streaming.Streams.runForeachBatch(stream, s"$root/ck") {
-        (batch, id) =>
+      Streams.staged(Streams.idSlices(events, "event_id")) { src =>
+        val stream = src.selectExpr(changelogCols: _*)
+        Streams.runForeachBatch(stream, s"$root/ck") { (batch, id) =>
           val merged = graft.operators.Cdc.latestChanges(
             last.map(p => s.read.parquet(p).unionByName(batch))
               .getOrElse(batch), "k", "seq")
           val next = s"$root/state_${id % 2}"
           merged.write.mode("overwrite").parquet(next)
           last = Some(next)
+        }
       }
-      Tables.deleteRecursively(new java.io.File(inDir))
       s.read.parquet(last.getOrElse(
           sys.error("upsert stream produced no batches")))
         .where("op <> 'D'")
         .selectExpr("k", "seq", "op", "CAST(total AS DOUBLE) AS total")
         .orderBy("k")
     },
+      // the WHOLE changelog applied in one shot (window rank, no
+      // incremental fold, no tombstone carrying) — green proves the
+      // 3-batch foreachBatch merge converged to the same snapshot
       """WITH ch AS (SELECT user_id AS k, event_id AS seq,
         |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
         |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
@@ -1856,14 +1770,6 @@ object Io {
         |FROM last WHERE rn = 1 AND op <> 'D'
         |ORDER BY k""".stripMargin, mutatesSession = true),
 
-    // STREAMING SCD2 maintenance: each micro-batch of changelog rows
-    // merges into the dimension's version history via scd2Incremental —
-    // only batch keys' interval chains rebuild per trigger (the only
-    // affordable continuous refresh of a 100 TB dimension); the
-    // arbitrary repartition(3) file split interleaves sequence numbers
-    // across batches, so green against the full-recompute oracle IS the
-    // out-of-order convergence property, exercised through a real
-    // checkpointed stream
     // STREAMING pattern matching (the ts_event_pattern regex as a live
     // state machine): v[ce]*p conversions counted per user across
     // micro-batches via transformWithState — two scalars of state per
@@ -1875,42 +1781,15 @@ object Io {
     Entry("ts_stream_pattern", (s, _) => {
       val evs = s.table("events")
         .select("ts", "event_id", "user_id", "event_type")
-      val landing = graft.Session.scratch(s, "pattern_in")
-      val mm = evs
-        .selectExpr("unix_micros(min(ts)) AS mn", "unix_micros(max(ts)) AS mx")
-        .head
-      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-      val cuts = Seq(mn + (mx - mn) / 4, mn + (mx - mn) / 2,
-        mn + 3 * (mx - mn) / 4)
-      val t0 = System.currentTimeMillis() - 600000
-      val slices = Seq(
-        evs.where(expr(s"unix_micros(ts) <= ${cuts(0)}")),
-        evs.where(expr(
-          s"unix_micros(ts) > ${cuts(0)} AND unix_micros(ts) <= ${cuts(1)}")),
-        evs.where(expr(
-          s"unix_micros(ts) > ${cuts(1)} AND unix_micros(ts) <= ${cuts(2)}")),
-        evs.where(expr(s"unix_micros(ts) > ${cuts(2)}")))
-      stageOrderedFiles(landing, slices.zipWithIndex.map { case (df, i) =>
-        (df, s"f$i.parquet", t0 + i * 60000)
-      })
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
-        import s.implicits._
-        val out = graft.streaming.Streams.conversionTws(
-          stream.as[graft.streaming.Streams.ConvEvent])
-        graft.streaming.Streams.runToMemory(out.toDF(),
-          "ts_stream_pattern_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(Streams.timeQuartiles(evs), "ts_stream_pattern_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.conversionTws(src.as[Streams.ConvEvent]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table("ts_stream_pattern_sink")
         .groupBy("user_id")
         .agg(max("n_conversion").as("n_conversion"))
         .orderBy("user_id")
     },
-      // the FULL-changelog SCD2 recompute — whatever micro-batch split the
-      // stream fed through scd2Incremental must converge to exactly this
       // the streaming state machine's drained counts == batch regexp_count
       // over each user's full ordered sequence
       """WITH seqs AS (SELECT user_id,
@@ -1931,37 +1810,12 @@ object Io {
     Entry("ts_stream_cusum", (s, _) => {
       val evs = s.table("events")
         .select("ts", "event_id", "event_type", "value")
-      val landing = graft.Session.scratch(s, "cusum_in")
-      val mm = evs
-        .selectExpr("unix_micros(min(ts)) AS mn", "unix_micros(max(ts)) AS mx")
-        .head
-      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-      val cuts = Seq(mn + (mx - mn) / 4, mn + (mx - mn) / 2,
-        mn + 3 * (mx - mn) / 4)
-      val t0 = System.currentTimeMillis() - 600000
-      val slices = Seq(
-        evs.where(expr(s"unix_micros(ts) <= ${cuts(0)}")),
-        evs.where(expr(
-          s"unix_micros(ts) > ${cuts(0)} AND unix_micros(ts) <= ${cuts(1)}")),
-        evs.where(expr(
-          s"unix_micros(ts) > ${cuts(1)} AND unix_micros(ts) <= ${cuts(2)}")),
-        evs.where(expr(s"unix_micros(ts) > ${cuts(2)}")))
-      stageOrderedFiles(landing, slices.zipWithIndex.map { case (df, i) =>
-        (df, s"f$i.parquet", t0 + i * 60000)
-      })
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
-        import s.implicits._
-        val out = graft.streaming.Streams.cusumTws(
-          stream.as[graft.streaming.Streams.MetricEvent],
-          targetMicro = 500000L, alarmMicro = 5000000L)
-        graft.streaming.Streams.runToMemory(out.toDF(),
-          "ts_stream_cusum_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(Streams.timeQuartiles(evs), "ts_stream_cusum_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.cusumTws(src.as[Streams.MetricEvent],
+          targetMicro = 500000L, alarmMicro = 5000000L).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table("ts_stream_cusum_sink")
         .groupBy("event_type")
         .agg(max("n_points").as("n_points"),
           max("n_alarms").as("n_alarms"),
@@ -1972,22 +1826,23 @@ object Io {
       // oracle IS the batch twin's windows, verbatim
       Relational.cusumDriftSql, mutatesSession = true),
 
+    // STREAMING SCD2 maintenance: each micro-batch of changelog rows
+    // merges into the dimension's version history via scd2Incremental —
+    // only batch keys' interval chains rebuild per trigger (the only
+    // affordable continuous refresh of a 100 TB dimension); the
+    // event_id-sliced replay interleaves sequence numbers across
+    // batches, so green against the full-recompute oracle IS the
+    // out-of-order convergence property, exercised through a real
+    // checkpointed stream
     Entry("ts_stream_scd2", (s, d) => {
       val events = s.table("events")
         .select("event_id", "user_id", "event_type", "value")
       val root = s"${base(s, d)}/stream_scd2"
       Tables.deleteRecursively(new java.io.File(root))
-      val inDir = graft.Session.scratch(s, "scd2_in")
-      events.repartition(3).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .selectExpr("user_id AS k", "event_id AS seq",
-          """CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
-                  WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op""",
-          "CAST(value AS DECIMAL(18,2)) AS total")
       var last: Option[String] = None
-      graft.streaming.Streams.runForeachBatch(stream, s"$root/ck") {
-        (batch, id) =>
+      Streams.staged(Streams.idSlices(events, "event_id")) { src =>
+        val stream = src.selectExpr(changelogCols: _*)
+        Streams.runForeachBatch(stream, s"$root/ck") { (batch, id) =>
           val merged = last match {
             case None => graft.operators.Cdc.scd2State(batch, "k", "seq", "op")
             case Some(p) => graft.operators.Cdc.scd2Incremental(
@@ -1996,8 +1851,8 @@ object Io {
           val next = s"$root/state_${id % 2}"
           merged.write.mode("overwrite").parquet(next)
           last = Some(next)
+        }
       }
-      Tables.deleteRecursively(new java.io.File(inDir))
       s.read.parquet(last.getOrElse(
           sys.error("scd2 stream produced no batches")))
         .where("op <> 'D'")
@@ -2005,6 +1860,8 @@ object Io {
           "CAST(total AS DOUBLE) AS total", "is_current")
         .orderBy("k", "valid_from")
     },
+      // the FULL-changelog SCD2 recompute — whatever micro-batch split the
+      // stream fed through scd2Incremental must converge to exactly this
       """WITH ch AS (SELECT user_id AS k, event_id AS seq,
         |    CASE WHEN event_type = 'purchase' AND user_id % 7 = 0 THEN 'D'
         |         WHEN event_type = 'click' THEN 'U' ELSE 'I' END AS op,
@@ -2028,7 +1885,7 @@ object Io {
     // filtering lags eviction by one batch; eviction/emission uses the
     // current batch's watermark; both are floor-to-ms(max event ts) -
     // delay). So the fixture replays as FOUR landing files, one per
-    // micro-batch (maxFilesPerTrigger=1, mtime-ordered), with the on-time
+    // micro-batch (Streams.replay, mtime-ordered), with the on-time
     // history split so the filter watermark is already established one
     // batch before the late slice arrives:
     //   f1a on-time history up to H12 = trunc-hour(max ts) - 12 h (minus
@@ -2051,20 +1908,14 @@ object Io {
     // comparisons cannot diverge silently.
     Entry("ts_stream_late_drop", (s, _) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
-      val (landing, schema) = stageLateLanding(s)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val agg = stream.withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count("*").as("n_events"),
-          sum(expr("CAST(value AS DECIMAL(18,6))")).as("sv"))
-        .select(col("w.start").as("hour_ts"), col("event_type"),
-          col("n_events"), expr("CAST(sv AS DOUBLE)").as("sum_value"))
-      val sink = "ts_stream_late_sink"
-      graft.streaming.Streams.runToMemory(agg, sink,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table(sink).orderBy("hour_ts", "event_type")
+      Streams.replay(lateSlices(s), "ts_stream_late_sink", OutputMode.Append()) {
+        _.withWatermark("ts", "2 hours")
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count("*").as("n_events"),
+            sum(expr("CAST(value AS DECIMAL(18,6))")).as("sv"))
+          .select(col("w.start").as("hour_ts"), col("event_type"),
+            col("n_events"), expr("CAST(sv AS DOUBLE)").as("sum_value"))
+      }.orderBy("hour_ts", "event_type")
     },
       // replays the entry's watermark arithmetic in SQL: f1a/f1b/f2/f3 are
       // the same hash/boundary split the entry stages, wmf1a is the
@@ -2113,20 +1964,14 @@ object Io {
     // emission contract, value-checked.
     Entry("ts_stream_update_emit", (s, _) => {
       import org.apache.spark.sql.functions.{col, count, expr, window}
-      val (landing, schema) = stageLateLanding(s)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val agg = stream.withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count("*").as("n_events"),
-          sum(expr("CAST(value AS DECIMAL(18,6))")).as("sv"))
-        .select(col("w.start").as("hour_ts"), col("event_type"),
-          col("n_events"), expr("CAST(sv AS DOUBLE)").as("sum_value"))
-      val sink = "ts_stream_update_sink"
-      graft.streaming.Streams.runToMemory(agg, sink,
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table(sink).orderBy("hour_ts", "event_type", "n_events")
+      Streams.replay(lateSlices(s), "ts_stream_update_sink", OutputMode.Update()) {
+        _.withWatermark("ts", "2 hours")
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count("*").as("n_events"),
+            sum(expr("CAST(value AS DECIMAL(18,6))")).as("sv"))
+          .select(col("w.start").as("hour_ts"), col("event_type"),
+            col("n_events"), expr("CAST(sv AS DOUBLE)").as("sum_value"))
+      }.orderBy("hour_ts", "event_type", "n_events")
     },
       // Update mode's emission history: tag each kept row with its batch
       // (the same 4-file split), then every (batch, group) with >= 1 kept
@@ -2192,23 +2037,9 @@ object Io {
     Entry("ts_stream_dedup", (s, _) => {
       import org.apache.spark.sql.functions.col
       val evs = s.table("events").select("ts", "event_id", "event_type", "value")
-      val landing = graft.Session.scratch(s, "stream_dd")
-      val t0 = System.currentTimeMillis() - 600000
-      stageOrderedFile(landing, evs, "f1_first.parquet", t0)
-      val redelivery = java.nio.file.Files.copy(
-        java.nio.file.Paths.get(landing, "f1_first.parquet"),
-        java.nio.file.Paths.get(landing, "f2_redelivery.parquet"))
-      java.nio.file.Files.setLastModifiedTime(redelivery,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + 60000))
-      val stream = s.readStream.schema(evs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val deduped = graft.streaming.Streams.dedupStream(
-        stream, Seq("event_id"))
-      val sink = "ts_stream_dd_sink"
-      graft.streaming.Streams.runToMemory(deduped, sink,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table(sink).orderBy("event_id").select(
+      Streams.replay(Seq(evs, evs), "ts_stream_dd_sink", OutputMode.Append()) {
+        Streams.dedupStream(_, Seq("event_id"))
+      }.orderBy("event_id").select(
         col("event_id"), col("event_type"), col("value"))
     },
       // exactly-once output from a doubled delivery == the plain fixture
@@ -2233,21 +2064,11 @@ object Io {
         """SELECT date_trunc('HOUR', max(ts)) - INTERVAL 12 HOUR
           |FROM events""".stripMargin)
         .head.toSeq.map(_.asInstanceOf[java.sql.Timestamp]).toArray
-      val landing = graft.Session.scratch(s, "stream_al")
-      val t0 = System.currentTimeMillis() - 600000
-      stageOrderedFiles(landing, Seq(
-        (evs.where(col("ts") <= lit(h12)), "f1_history.parquet", t0),
-        (evs.where(col("ts") > lit(h12)), "f2_tail.parquet", t0 + 60000)))
-      val stream = s.readStream.schema(evs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
       import s.implicits._
-      val alerts = graft.streaming.Streams.maxValueAlerts(
-        stream.as[graft.streaming.Streams.Event])
-      val sink = "ts_stream_al_sink"
-      graft.streaming.Streams.runToMemory(alerts.toDF(), sink,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table(sink).orderBy("user_id", "n_events")
+      val slices = Seq(evs.where(col("ts") <= lit(h12)), evs.where(col("ts") > lit(h12)))
+      Streams.replay(slices, "ts_stream_al_sink", OutputMode.Append()) {
+        src => Streams.maxValueAlerts(src.as[Streams.Event]).toDF()
+      }.orderBy("user_id", "n_events")
     },
       // batch 1 emits every user with history; batch 2 emits only strict
       // max improvements (cumulative count, overall max)
@@ -2283,11 +2104,11 @@ object Io {
         .select(col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
       import s.implicits._
-      val updates = graft.streaming.Streams.runningUserStats(
-        stream.as[graft.streaming.Streams.Event])
+      val updates = Streams.runningUserStats(
+        stream.as[Streams.Event])
       val sink = "ts_stream_mgs_sink"
-      graft.streaming.Streams.runToMemory(updates.toDF(), sink,
-        org.apache.spark.sql.streaming.OutputMode.Update())
+      Streams.runToMemory(updates.toDF(), sink,
+        OutputMode.Update())
       s.table(sink).orderBy("user_id")
     },
       // one drained micro-batch => one cumulative update per user; count
@@ -2298,28 +2119,15 @@ object Io {
     // the Spark 4 transformWithState successor API to the entry above:
     // typed ValueState per user through the RocksDB state store (the only
     // provider implementing the v2 state layer — set around the query,
-    // restored after), multi-trigger replay via maxFilesPerTrigger(1).
+    // restored after), one micro-batch per event_id slice.
     // The LAST emission per user must equal the plain batch aggregate —
     // integer micro-unit sums, so state arithmetic crosses engines exactly
     Entry("ts_stream_tws_totals", (s, _) => {
-      import org.apache.spark.sql.functions.col
-      val evs = s.table("events")
-        .select(col("ts"), col("user_id"), col("event_type"),
-          expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_tws")
-      evs.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val updates = graft.streaming.Streams.userTotalsTws(
-          stream.as[graft.streaming.Streams.Event])
-        graft.streaming.Streams.runToMemory(updates.toDF(),
-          "ts_stream_tws_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(eventSlices(s), "ts_stream_tws_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.userTotalsTws(src.as[Streams.Event]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_tws_sink")
         .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
           expr("max_by(sum_micros, n_events)").as("sum_micros"))
@@ -2337,28 +2145,11 @@ object Io {
     // drained digest per user (n_batches / sum / max of per-batch maxes)
     // is recomputed by the oracle from the same % 3 split
     Entry("ts_stream_tws_batchmax", (s, _) => {
-      import org.apache.spark.sql.functions.col
-      val evs = s.table("events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), expr("CAST(value AS DOUBLE)").as("value"))
-      val landing = graft.Session.scratch(s, "stream_twsl")
-      val t0 = System.currentTimeMillis() - 600000
-      stageOrderedFiles(landing, (0 until 3).map(i =>
-        (evs.where(s"event_id % 3 = $i").drop("event_id"),
-          s"f$i.parquet", t0 + i * 60000)))
-      val schema = evs.drop("event_id").schema
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
-        import s.implicits._
-        val updates = graft.streaming.Streams.userBatchMaxTws(
-          stream.as[graft.streaming.Streams.Event])
-        graft.streaming.Streams.runToMemory(updates.toDF(),
-          "ts_stream_twsl_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(eventSlices(s), "ts_stream_twsl_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.userBatchMaxTws(src.as[Streams.Event]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table("ts_stream_twsl_sink")
         .groupBy("user_id")
         .agg(max("n_batches").as("n_batches"),
           expr("max_by(sum_maxes, n_batches)").as("sum_maxes"),
@@ -2387,29 +2178,19 @@ object Io {
       val evs = s.table("events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val history = evs.where("event_id % 3 = 0")
-      val live = evs.where("event_id % 3 <> 0").drop("event_id")
-      val initial = history
+      val initial = evs.where("event_id % 3 = 0")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),
           expr("CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)")
             .as("sum_micros"))
-      val dir = graft.Session.scratch(s, "stream_twsi")
-      live.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(live.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val updates = graft.streaming.Streams.userTotalsTwsWithInit(
-          stream.as[graft.streaming.Streams.Event],
-          initial.selectExpr("user_id", "n_events", "sum_micros")
-            .as[graft.streaming.Streams.UserTotals])
-        graft.streaming.Streams.runToMemory(updates.toDF(),
-          "ts_stream_twsi_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      // the live events' ids are 1 or 2 mod 3, so slice by the next digit
+      val live = Streams.idSlices(evs.where("event_id % 3 <> 0"), "event_id div 3")
+        .map(_.drop("event_id"))
+      import s.implicits._
+      Streams.replay(live, "ts_stream_twsi_sink", OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.userTotalsTwsWithInit(src.as[Streams.Event],
+          initial.as[Streams.UserTotals]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_twsi_sink")
         .groupBy("user_id")
         .agg(max("n_events").as("n_events"),
           expr("max_by(sum_micros, n_events)").as("sum_micros"))
@@ -2431,24 +2212,11 @@ object Io {
     // re-emit per trigger, and the last emission per (user, type) must
     // equal the batch GROUP BY
     Entry("ts_stream_tws_typecounts", (s, _) => {
-      import org.apache.spark.sql.functions.col
-      val evs = s.table("events")
-        .select(col("ts"), col("user_id"), col("event_type"),
-          expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_twsm")
-      evs.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val updates = graft.streaming.Streams.userTypeCountsTws(
-          stream.as[graft.streaming.Streams.Event])
-        graft.streaming.Streams.runToMemory(updates.toDF(),
-          "ts_stream_twsm_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(eventSlices(s), "ts_stream_twsm_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.userTypeCountsTws(src.as[Streams.Event]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_twsm_sink")
         .groupBy("user_id", "event_type")
         .agg(max("n").as("n_events"))
         .orderBy("user_id", "event_type")
@@ -2459,28 +2227,16 @@ object Io {
     // STREAMING HLL: per event type, the 64-register distinct-user
     // sketch as TWS MapState — cardinality state stays 64 ints per key
     // at any user volume. Register max-merge is order-independent, so
-    // the unordered repartition(3) replay converges to the batch
+    // the event_id-sliced replay converges to the batch
     // register pipeline (the differential oracle); estimate = the same
     // alpha*m^2 / harmonic division as llm_distinct_sketch
     Entry("ts_stream_hll", (s, _) => {
-      val evs = s.table("events")
-        .select(col("ts"), col("user_id"), col("event_type"),
-          expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_hll")
-      evs.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val snaps = graft.streaming.Streams.hllDistinctTws(
-          stream.as[graft.streaming.Streams.Event])
-        graft.streaming.Streams.runToMemory(snaps.toDF(),
-          "ts_stream_hll_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      }
-      Tables.deleteRecursively(new java.io.File(dir))
+      import s.implicits._
       val alphaNum = 0.7213 / (1 + 1.079 / 64) * 64 * 64 * math.pow(2, 53)
-      s.table("ts_stream_hll_sink")
+      Streams.replay(eventSlices(s), "ts_stream_hll_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.hllDistinctTws(src.as[Streams.Event]).toDF()
+      }
         .groupBy("event_type")
         .agg(max("n_buckets_hit").as("n_buckets_hit"),
           min("harmonic_s").as("harmonic_s"))
@@ -2521,27 +2277,15 @@ object Io {
 
     // STREAMING exact distinct via bitmap chunks — agg_bitmap_distinct's
     // state held live as TWS MapState; OR-merge is idempotent, so the
-    // unordered replay (and any duplicate delivery) converges and the
+    // event_id-sliced replay (and any duplicate delivery) converges and the
     // batch bit_or pipeline is the oracle. Both snapshot fields are
     // monotone → max picks the drained state
     Entry("ts_stream_bitmap_distinct", (s, _) => {
-      val evs = s.table("events")
-        .select(col("ts"), col("user_id"), col("event_type"),
-          expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_bmd")
-      evs.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val snaps = graft.streaming.Streams.bitmapDistinctTws(
-          stream.as[graft.streaming.Streams.Event])
-        graft.streaming.Streams.runToMemory(snaps.toDF(),
-          "ts_stream_bmd_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(eventSlices(s), "ts_stream_bmd_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.bitmapDistinctTws(src.as[Streams.Event]).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_bmd_sink")
         .groupBy("event_type")
         .agg(max("n_chunks").as("n_chunks"),
           max("n_distinct").as("n_distinct"))
@@ -2561,28 +2305,16 @@ object Io {
 
     // STREAMING top-k heavy hitters: the exact per-type (user → count)
     // map as TWS MapState, re-ranked each batch — counts are commutative
-    // so the unordered repartition(3) replay converges and the batch
+    // so the event_id-sliced replay converges and the batch
     // groupBy + rank window is the oracle verbatim; ties break on
     // user_id so the ranking itself is deterministic. n_total is
     // strictly monotone per key → max_by picks the drained snapshot
     Entry("ts_stream_topk", (s, _) => {
-      val evs = s.table("events")
-        .select(col("ts"), col("user_id"), col("event_type"),
-          expr("CAST(value AS DOUBLE)").as("value"))
-      val dir = graft.Session.scratch(s, "stream_topk")
-      evs.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val snaps = graft.streaming.Streams.topKTws(
-          stream.as[graft.streaming.Streams.Event], k = 5)
-        graft.streaming.Streams.runToMemory(snaps.toDF(),
-          "ts_stream_topk_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      import s.implicits._
+      Streams.replay(eventSlices(s), "ts_stream_topk_sink",
+          OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.topKTws(src.as[Streams.Event], k = 5).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_topk_sink")
         .groupBy("event_type", "rank")
         .agg(expr("max_by(struct(user_id, cnt), n_total)").as("m"))
         .selectExpr("event_type", "CAST(rank AS INT) AS rank",
@@ -2605,27 +2337,19 @@ object Io {
 
     // STREAMING histogram-sketch quantiles: agg_quantile_sketch's
     // (bin → count) state held live as TWS MapState — the sketch is
-    // commutative, so the unordered repartition(3) replay converges and
+    // commutative, so the o_orderkey-sliced replay converges and
     // the BATCH sketch SQL is the oracle verbatim; estimate arithmetic
     // is the identical all-integer interpolation. n_total is strictly
     // monotone per key → max_by picks the drained snapshot
     Entry("ts_stream_quantile", (s, _) => {
-      val rows = s.table("orders").selectExpr("o_orderstatus",
-        "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents")
-      val dir = graft.Session.scratch(s, "stream_qsk")
-      rows.repartition(3).write.mode("overwrite").parquet(dir)
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(rows.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        import s.implicits._
-        val ests = graft.streaming.Streams.quantileSketchTws(
-          stream.as[graft.streaming.Streams.OrderCents], Seq(50, 90, 99))
-        graft.streaming.Streams.runToMemory(ests.toDF(),
-          "ts_stream_qsk_sink",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+      val rows = Streams.idSlices(s.table("orders"), "o_orderkey")
+        .map(_.selectExpr("o_orderstatus",
+          "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents"))
+      import s.implicits._
+      Streams.replay(rows, "ts_stream_qsk_sink", OutputMode.Update(), Streams.rocksDb) {
+        src => Streams.quantileSketchTws(src.as[Streams.OrderCents], Seq(50, 90, 99))
+          .toDF()
       }
-      Tables.deleteRecursively(new java.io.File(dir))
-      s.table("ts_stream_qsk_sink")
         .groupBy("o_orderstatus", "pct")
         .agg(expr("max_by(est_cents, n_total)").as("est_cents"))
         .selectExpr("o_orderstatus", "CAST(pct AS INT) AS pct",
@@ -2659,26 +2383,15 @@ object Io {
       val evs = s.table("events")
         .select(col("user_id"), col("ts"), col("event_type"),
           expr("CAST(value AS DOUBLE)").as("value"))
-      val landing = graft.Session.scratch(s, "stream_twst")
-      val t0 = System.currentTimeMillis() - 600000
       val cut = evs.agg(expr("max(ts) - INTERVAL 12 HOURS").as("c"))
         .collect()(0).getTimestamp(0)
-      stageOrderedFiles(landing, Seq(
-        (evs.where(col("ts") <= lit(cut)), "f0.parquet", t0),
-        (evs.where(col("ts") > lit(cut)), "f1.parquet", t0 + 60000)))
-      withRocksDbProvider(s) {
-        val stream = s.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
-          .withWatermark("ts", "2 hours")
-        import s.implicits._
-        val fired = graft.streaming.Streams.sessionExpiryTws(
-          stream.as[graft.streaming.Streams.Event], gapMs = 4L * 3600 * 1000)
-        graft.streaming.Streams.runToMemory(fired.toDF(),
-          "ts_stream_twst_sink",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      import s.implicits._
+      val slices = Seq(evs.where(col("ts") <= lit(cut)), evs.where(col("ts") > lit(cut)))
+      Streams.replay(slices, "ts_stream_twst_sink", OutputMode.Append(),
+          Streams.rocksDb) { src =>
+        Streams.sessionExpiryTws(src.withWatermark("ts", "2 hours").as[Streams.Event],
+          gapMs = 4L * 3600 * 1000).toDF()
       }
-      Tables.deleteRecursively(new java.io.File(landing))
-      s.table("ts_stream_twst_sink")
         .select(col("user_id"), col("n_events"),
           expr("timestamp_millis(expired_at_ms)").as("expired_at"))
         .orderBy("user_id")

@@ -238,9 +238,6 @@ object Llm {
        |        FROM lum GROUP BY doc_id)""".stripMargin
   }
 
-  /** shingles → minhash → banded signatures (no candidate join — callers
-    * add their own pairing rule over `bands`).
-    */
   /** shingles → per-doc MinHash signature columns h0..h7 (CTE `mh`) —
     * mirrors Dedup.minhash: one md5 per shingle -> 28-bit x, then the
     * (a_i * x + b_i) mod p universal-hash permutations with the SAME
@@ -257,6 +254,9 @@ object Llm {
        |mh AS (SELECT doc_id, $mins FROM shx GROUP BY doc_id)""".stripMargin
   }
 
+  /** shingles → minhash → banded signatures (no candidate join — callers
+    * add their own pairing rule over `bands`).
+    */
   private def bandCtes(src: String): String = {
     val bandSelects = (0 until 4).map(b =>
       s"SELECT doc_id, $b AS band, h${2 * b}::VARCHAR || '_' || h${2 * b + 1}::VARCHAR AS sig FROM mh").mkString("\n UNION ALL ")

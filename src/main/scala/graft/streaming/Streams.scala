@@ -188,8 +188,7 @@ object Streams {
     * (`transformWithState`): typed `ValueState` per key, explicit
     * init/handleInputRows lifecycle — the successor API to
     * mapGroupsWithState, backed exclusively by the RocksDB state store
-    * (the caller must set the provider; [[graft.queries.Io]]'s entry
-    * does, restoring after). Emits the post-batch totals per (user,
+    * (the caller sets it for the query: [[replay]] with [[rocksDb]]). Emits the post-batch totals per (user,
     * trigger); on a drained bounded source the LAST emission per user
     * must equal the plain batch aggregate — which is the differential
     * oracle. BigDecimal HALF_UP micro-rounding matches both engines'
@@ -789,11 +788,9 @@ object Streams {
     * one keeps the count of its first run.
     */
   private def drain(df: DataFrame)
-                   (start: DataStreamWriter[Row] => StreamingQuery): Unit = {
-    val conf = df.sparkSession.conf
-    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
+                   (start: DataStreamWriter[Row] => StreamingQuery): Unit =
+    graft.Session.withConf(df.sparkSession,
+        Map("spark.sql.shuffle.partitions" -> streamShufflePartitions)) {
       val q = start(df.writeStream)
       try {
         q.processAllAvailable()
@@ -808,8 +805,7 @@ object Streams {
           }
       }
       finally q.stop()
-    } finally conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+    }
 
   /** Drive any of the above to an in-memory table and block until the
     * source drains — the test/demo harness path.
@@ -851,4 +847,115 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .start())
+
+  /** The RocksDB state store: the only provider implementing the
+    * transformWithState v2 state layer. An entry that needs it passes
+    * these confs to [[replay]]; they are never a session default.
+    */
+  val rocksDb: Map[String, String] = {
+    val p = "spark.sql.streaming.stateStore."
+    // Memory headroom adopted from the r14 TwsProbe factor-100 sweep
+    // (graft.TwsProbe): 256 MB block cache + 256 MB × 4 write buffers
+    // read best-or-equal for all three MapState sketch entries in both
+    // probe runs (topk −34% in the clean run); defaults are 8 MB / 64 MB
+    // — far below what a 128 GiB box should give an update-heavy store.
+    // No conf moves the floor more than ~30%: per-row work is the
+    // streaming sketch ceiling (hll ≈ 7 µs/row), as pinned in SURVEY.
+    Map(p + "providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      p + "rocksdb.blockCacheSizeMB" -> "256",
+      p + "rocksdb.writeBufferSizeMB" -> "256",
+      p + "rocksdb.maxWriteBufferNumber" -> "4")
+  }
+
+  /** Land each of `slices` as ONE parquet file `f<first + i>.parquet` in
+    * `landing`, with mtimes 60 s apart in slice order. The file source
+    * admits files oldest mtime first, so through [[replaySource]] slice i
+    * is micro-batch `first + i`: a deterministic replay schedule. The
+    * slices stage concurrently (r16 opt, guide §2.6 "overlap independent
+    * jobs"): each is a scan+repartition(1)+write job whose write stage is
+    * one task, and a small pool lets the next job's scan tasks backfill
+    * the previous one's single-task tail. Contents and mtimes do not
+    * depend on completion order.
+    */
+  def stage(landing: String, slices: Seq[DataFrame], first: Int = 0): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val t0 = System.currentTimeMillis() - 600000
+    val pool = java.util.concurrent.Executors
+      .newFixedThreadPool(math.min(slices.size, 4).max(1))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(
+      Future.sequence(slices.zipWithIndex.map { case (df, i) =>
+        Future(stageFile(landing, df, s"f${first + i}.parquet",
+          t0 + (first + i) * 60000L))
+      }), Duration.Inf): Unit
+    finally pool.shutdown()
+  }
+
+  private def stageFile(landing: String, df: DataFrame, name: String,
+                        mtimeMs: Long): Unit = {
+    val tmp = new java.io.File(graft.Session.scratch(df.sparkSession, "stage_one"))
+    df.repartition(1).write.mode("overwrite").parquet(tmp.getPath)
+    val part = tmp.listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val dest = java.nio.file.Paths.get(landing, name)
+    java.nio.file.Files.move(part.toPath, dest)
+    java.nio.file.Files.setLastModifiedTime(dest,
+      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+    graft.Tables.deleteRecursively(tmp)
+  }
+
+  /** The files [[stage]] landed in `landing`, as a stream that admits one
+    * file per trigger.
+    */
+  def replaySource(spark: SparkSession, landing: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(landing)
+
+  /** Stage `slices` in a fresh landing dir under the run root, run `f` on
+    * the one-file-per-trigger stream over it, and delete the dir.
+    */
+  def staged[T](slices: Seq[DataFrame])(f: DataFrame => T): T = {
+    val spark = slices.head.sparkSession
+    val landing = graft.Session.scratch(spark, "replay")
+    try {
+      stage(landing, slices)
+      f(replaySource(spark, landing, slices.head.schema))
+    } finally graft.Tables.deleteRecursively(new java.io.File(landing))
+  }
+
+  /** The bounded replay: `slices` in order, one micro-batch each, through
+    * `query`, drained to the memory sink `sink` with `confs` set around
+    * the query (e.g. [[rocksDb]]). Returns the sink's table.
+    */
+  def replay(slices: Seq[DataFrame], sink: String, mode: OutputMode,
+             confs: Map[String, String] = Map.empty)
+            (query: DataFrame => DataFrame): DataFrame = {
+    staged(slices) { src =>
+      graft.Session.withConf(src.sparkSession, confs)(runToMemory(query(src), sink, mode))
+    }
+    slices.head.sparkSession.table(sink)
+  }
+
+  /** `df` cut into `n` slices by the row id `id` (`id % n`). Slice by a
+    * row id, never by the state key, so each key's rows span batches.
+    */
+  def idSlices(df: DataFrame, id: String, n: Int = 3): Seq[DataFrame] =
+    (0 until n).map(i => df.where(s"($id) % $n = $i"))
+
+  /** `events` cut into four slices by event time at the quartiles of its
+    * `ts` span, oldest first. An order-dependent state machine's replay
+    * slices by TIME, never by key: the late-events filter drops key-split
+    * history before the operator (TimerProbeSpec).
+    */
+  def timeQuartiles(events: DataFrame): Seq[DataFrame] = {
+    val mm = events
+      .selectExpr("unix_micros(min(ts)) AS mn", "unix_micros(max(ts)) AS mx").head
+    val (mn, mx) = (mm.getLong(0), mm.getLong(1))
+    val cuts = (1 to 3).map(q => mn + q * (mx - mn) / 4)
+    val us = expr("unix_micros(ts)")
+    (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue).map { case (lo, hi) =>
+      events.where(us > lo && us <= hi)
+    }
+  }
 }

@@ -307,4 +307,25 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/out").count() == 100,
       "batch read leaked uncommitted orphan rows")
   }
+
+  test("replay runs one micro-batch per slice, in order, and deletes its landing dir") {
+    import spark.implicits._
+    // three slices of one key with 1, 2 and 3 rows: one batch each gives
+    // the running counts 1, 3, 6; one batch would give only 6, and any
+    // other order a different sequence
+    val slices = Seq(1, 2, 3).map(n => Seq.fill(n)("k").toDF("k"))
+    def landings(): Seq[String] =
+      Session.root(spark).list().toSeq.filter(_.startsWith("replay"))
+    val before = landings()
+    val counts = Streams.replay(slices, "replay_counts", OutputMode.Update())(
+      _.groupBy("k").count()).collect().map(_.getLong(1)).toSeq
+    assert(counts == Seq(1L, 3L, 6L))
+    assert(landings() == before)
+    // the third batch fails the query: the landing dir still goes
+    intercept[Exception] {
+      Streams.replay(slices, "replay_fails", OutputMode.Update())(
+        _.groupBy("k").count().where("assert_true(count < 6) IS NULL"))
+    }
+    assert(landings() == before)
+  }
 }

@@ -28,24 +28,15 @@ class TimerProbeSpec extends SparkSpec {
       "t", 1.0)).toDF("ts", "user_id", "event_type", "value")
 
   test("watermark chain: arm at wm+1 fires every key, incl. the no-data batch") {
-    val dir = Session.scratch(spark, "timer_probe_wm")
-    val t0 = System.currentTimeMillis() - 600000
-    graft.queries.Io.stageOrderedFile(dir, ev(1, 0), "f0.parquet", t0)
-    graft.queries.Io.stageOrderedFile(dir, ev(2, 6), "f1.parquet", t0 + 1000)
-    graft.queries.Io.stageOrderedFile(dir, ev(3, 12), "f2.parquet", t0 + 2000)
-    val schema = ev(1, 0).schema
-    graft.queries.Io.withRocksDbProvider(spark) {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark("ts", "0 seconds")
+    Streams.replay(Seq(ev(1, 0), ev(2, 6), ev(3, 12)), "timer_probe_sink",
+        OutputMode.Append(), Streams.rocksDb) { src =>
       // gap 1h: expiries 01:00 / 07:00 / 13:00. Keys 1 and 2 expire below
       // the final watermark 12:00 and fire; key 3's expiry 13:00 exceeds
       // it, so its timer stays armed in state and must NOT fire — the
       // assertion below pins exactly that (SessionTimerProcessor registers
       // last_ms+gap verbatim; there is no wm+1 re-arm clamp).
-      val fired = Streams.sessionExpiryTws(
-        stream.as[Streams.Event], gapMs = 3600L * 1000)
-      Streams.runToMemory(fired.toDF(), "timer_probe_sink", OutputMode.Append())
+      Streams.sessionExpiryTws(src.withWatermark("ts", "0 seconds").as[Streams.Event],
+        gapMs = 3600L * 1000).toDF()
     }
     val rows = spark.table("timer_probe_sink")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -56,23 +47,14 @@ class TimerProbeSpec extends SparkSpec {
   }
 
   test("an already-expired arm fires at the end of its own batch") {
-    val dir = Session.scratch(spark, "timer_probe_sf")
-    val t0 = System.currentTimeMillis() - 600000
     // f0 moves the watermark to 18:00; f1's key 2 (ts 06:00, expiry
     // 07:00 << wm 18:00) arms an ALREADY-EXPIRED timer during b1 — and
     // b1's own end-of-batch sweep (ceiling 18:00) fires it. There is no
     // "scan floor": the sweep covers everything at-or-below the ceiling.
-    graft.queries.Io.stageOrderedFile(dir, ev(1, 0).union(ev(9, 18)),
-      "f0.parquet", t0)
-    graft.queries.Io.stageOrderedFile(dir, ev(2, 6), "f1.parquet", t0 + 1000)
-    val schema = ev(1, 0).schema
-    graft.queries.Io.withRocksDbProvider(spark) {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark("ts", "0 seconds")
-      val out = Streams.sessionExpiryTws(
-        stream.as[Streams.Event], gapMs = 3600L * 1000)
-      Streams.runToMemory(out.toDF(), "timer_probe_sf_sink", OutputMode.Append())
+    Streams.replay(Seq(ev(1, 0).union(ev(9, 18)), ev(2, 6)), "timer_probe_sf_sink",
+        OutputMode.Append(), Streams.rocksDb) { src =>
+      Streams.sessionExpiryTws(src.withWatermark("ts", "0 seconds").as[Streams.Event],
+        gapMs = 3600L * 1000).toDF()
     }
     val fired = spark.table("timer_probe_sf_sink")
       .collect().map(_.getLong(0)).toSet
@@ -83,24 +65,14 @@ class TimerProbeSpec extends SparkSpec {
   }
 
   test("late filter: key-split deep history is dropped before the processor") {
-    val dir = Session.scratch(spark, "timer_probe_lf")
-    val t0 = System.currentTimeMillis() - 600000
     // f0 moves the watermark to 18:00 (0s delay); f1 carries key 2's
     // whole history at 00:00/01:00 — older than the late-events
     // watermark by b2... which is DOUBLE-lagged (b1's displayed value,
     // here 18:00), so the rows are dropped and key 2 never arms
-    graft.queries.Io.stageOrderedFile(dir, ev(9, 18), "f0.parquet", t0)
-    graft.queries.Io.stageOrderedFile(dir, ev(9, 19), "f1.parquet", t0 + 1000)
-    graft.queries.Io.stageOrderedFile(dir, ev(2, 0).union(ev(2, 1)),
-      "f2.parquet", t0 + 2000)
-    val schema = ev(1, 0).schema
-    graft.queries.Io.withRocksDbProvider(spark) {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark("ts", "0 seconds")
-      val fired = Streams.sessionExpiryTws(
-        stream.as[Streams.Event], gapMs = 3600L * 1000)
-      Streams.runToMemory(fired.toDF(), "timer_probe_lf_sink", OutputMode.Append())
+    Streams.replay(Seq(ev(9, 18), ev(9, 19), ev(2, 0).union(ev(2, 1))),
+        "timer_probe_lf_sink", OutputMode.Append(), Streams.rocksDb) { src =>
+      Streams.sessionExpiryTws(src.withWatermark("ts", "0 seconds").as[Streams.Event],
+        gapMs = 3600L * 1000).toDF()
     }
     val fired = spark.table("timer_probe_lf_sink")
       .collect().map(_.getLong(0)).toSet
